@@ -3,7 +3,13 @@
 
 Prints ONE JSON line:
   {"metric": "total_headline_sec", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
+   "queries": {name: sec, ...}, "sf": 0.1, "reps": 3,
+   "query_minmax": {name: [min, max], ...},
+   "cpus": N, "master": "local[N]", "default_parallelism": N}
+
+``cpus``, ``master`` and ``default_parallelism`` record what the session
+actually ran with, so runs on different core counts can be told apart
+from the line alone.
 
 Each query is forced end-to-end with a noop sink (full compute, no
 driver collect).  The set covers every execution strategy in the engine:
@@ -15,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -55,6 +62,17 @@ HEADLINE = [
     "markov_transitions",   # user-partitioned lead + transition matrix
     "kcenter_coreset",      # iterative exact-int greedy selection (4 rounds)
 ]
+
+
+def _local_cores(master: str) -> int | None:
+    """Cores of a ``local`` / ``local[N]`` / ``local[*]`` master; None
+    off local mode."""
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", master)
+    if m is None:
+        return None
+    if m.group(1) is None:
+        return 1
+    return os.cpu_count() if m.group(1) == "*" else int(m.group(1))
 
 
 def main() -> None:
@@ -103,6 +121,7 @@ def main() -> None:
             df.write.mode("overwrite").format("noop").save()
             samples[name].append(round(time.time() - t0, 3))
 
+    sc = spark.sparkContext
     times = {name: sorted(s)[len(s) // 2] for name, s in samples.items()}
     minmax = {
         name: [min(s), max(s)] for name, s in samples.items()
@@ -118,6 +137,9 @@ def main() -> None:
                 "sf": sf,
                 "reps": REPS,
                 "query_minmax": minmax,
+                "cpus": _local_cores(sc.master),
+                "master": sc.master,
+                "default_parallelism": sc.defaultParallelism,
             }
         )
     )

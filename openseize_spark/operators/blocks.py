@@ -4,8 +4,8 @@ The reference's producer yields ndarray chunks; cross-chunk correctness is
 handled by FIFO carries and staggered prev/cur/next iterators
 (reference: core/numerical.py:589-632).  The Spark-native equivalent:
 
-1. ``to_blocks`` — one shuffle groups samples into fixed-size dense blocks
-   per (recording_id, channel): ``(recording_id, channel, block_id,
+1. ``to_blocks`` — groups samples into fixed-size dense blocks per
+   (recording_id, channel): ``(recording_id, channel, block_id,
    vs ARRAY<DOUBLE>)``.  Block size is the `chunksize` analog.
 2. ``with_halos`` — ``lag``/``lead`` over block_id attach each block's
    left/right neighbor overlap — the distributed halo-exchange idiom,
@@ -14,8 +14,12 @@ handled by FIFO carries and staggered prev/cur/next iterators
 3. kernels run per-block inside ``mapInPandas`` (Arrow-batched), trim the
    halo, and ``from_blocks`` explodes back to long format.
 
-At 100 TB this costs exactly one shuffle keyed by (recording, channel,
-block) and all kernel compute stays embarrassingly parallel.
+``halo_blocks`` composes 1 and 2 for the halo kernels (FIR, resample,
+Welch, STFT): the long signal is hashed by (recording_id, channel) once,
+and both the block aggregate and the lag/lead window run inside that one
+exchange.  It also adds the channel length from a window over the same
+block rows, so the input is evaluated once and shuffled once.  Kernel
+compute stays embarrassingly parallel over the blocks of each partition.
 """
 
 from __future__ import annotations
@@ -117,11 +121,37 @@ def from_blocks(
     )
 
 
-def channel_lengths(
-    df: DataFrame, keys: tuple[str, ...] = ("recording_id", "channel"), t_col: str = "t"
+def halo_blocks(
+    df: DataFrame,
+    block_size: int,
+    halo_left: int,
+    halo_right: int,
+    keys: tuple[str, ...] = ("recording_id", "channel"),
 ) -> DataFrame:
-    """Per-channel logical length (max t + 1) — the `shape` analog
-    (reference: core/producer.py:186-189)."""
-    return df.groupBy(*[F.col(k) for k in keys]).agg(
-        (F.max(t_col) + 1).cast("bigint").alias("n")
+    """``to_blocks`` + ``with_halos`` over a single exchange, plus the
+    channel length ``n``.
+
+    Hashing the long signal by ``keys`` first satisfies both the block
+    aggregate (keys + block_id) and the halo window (keys), so neither
+    adds a shuffle of its own.
+
+    ``n`` is max(t0 + size(vs)) over the channel's blocks.  Under
+    SignalFrame's dense-``t`` invariant (no gaps in t per channel) this
+    equals max(t) + 1, the `shape` analog (reference:
+    core/producer.py:186-189).  It is read off the block rows already in
+    hand, so the input is not evaluated a second time.
+    """
+    kcols = [F.col(k) for k in keys]
+    out = with_halos(
+        to_blocks(df.repartition(*kcols), block_size, keys),
+        halo_left,
+        halo_right,
+        keys,
+        block_size=block_size,
     )
+    w = (
+        Window.partitionBy(*kcols)
+        .orderBy("block_id")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    return out.withColumn("n", F.max(F.col("t0") + F.size("vs")).over(w).cast("bigint"))

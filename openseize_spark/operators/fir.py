@@ -71,9 +71,7 @@ def apply_fir_blocks(
     halo_left = L - 1 - c
     halo_right = c
 
-    bdf = B.with_halos(
-        B.to_blocks(sf.df, block_size), halo_left, halo_right, block_size=block_size
-    )
+    bdf = B.halo_blocks(sf.df, block_size, halo_left, halo_right)
     schema = "recording_id string, channel int, t0 long, vs array<double>"
 
     def _conv(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

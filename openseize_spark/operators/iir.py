@@ -13,10 +13,10 @@ shuffle-parallel DataFrame op without changing semantics.  Strategy
   whole channel (zero-phase filtfilt *requires* whole-series access for
   the reverse pass, which is why the reference needs its one-chunk-
   lookahead machinery, core/numerical.py:384-411);
-- for channels longer than executor memory, ``sosfilt_chunked`` documents
-  the carried-zi sequential algorithm (exact, reference's own approach) —
-  state carry is exact, so an external driver loop over block boundaries
-  yields identical results (tested in tests/test_iir.py).
+- for channels longer than executor memory, ``sosfilt_blocks`` runs the
+  reference's carried-zi recurrence as a parallel-in-time state scan over
+  blocks; state carry is exact, so block boundaries do not change the
+  result (tested in tests/test_partition_invariance.py).
 """
 
 from __future__ import annotations
@@ -58,12 +58,6 @@ def sosfiltfilt(sf: SignalFrame, spec: SosSpec | np.ndarray) -> SignalFrame:
         return pdf.assign(v=y)
 
     return sf.with_df(sf.df.groupBy("recording_id", "channel").applyInPandas(_f, _SCHEMA))
-
-
-def apply_iir(sf: SignalFrame, spec: SosSpec) -> SignalFrame:
-    """Reference IIR.__call__: dephase -> filtfilt else filt
-    (reference: filtering/bases.py:185-213)."""
-    return sosfiltfilt(sf, spec) if spec.dephase else sosfilt(sf, spec)
 
 
 def lfilter(sf: SignalFrame, b: np.ndarray, a: np.ndarray) -> SignalFrame:
@@ -165,13 +159,13 @@ def _blocks_state_scan(
     linear in (state, input); ``d`` is the flat state dimension.
 
     The block table feeds TWO consumers — the state pass and the seeded
-    re-filter join — as structurally identical subtrees, so exchange
-    reuse covers the to_blocks shuffle as long as the join does not
-    wrap one copy in a BroadcastExchange; see the join-side note below.
-    (A localCheckpoint here measures WORSE: its materialization runs
-    outside the exchange-reuse machinery and the join then re-shuffles
-    the ExistingRDD side — 6.3 s vs 3.1 s on sosfilt_blocks_full at
-    sf0.1.)"""
+    re-filter join — and each evaluates it: the executed plan holds no
+    ReusedExchange for the to_blocks shuffle.  A Python DataSource scan
+    (the edf source) is never exchange-reused, and over a parquet scan
+    the join's inferred isnotnull filter makes the two subtrees differ,
+    so the input is read twice.  (A localCheckpoint of the block table
+    measures worse on the registry: the join then re-shuffles the
+    ExistingRDD side — 6.3 s vs 3.1 s on sosfilt_blocks_full at sf0.1.)"""
     bdf = B.to_blocks(sf.df, block_size)
 
     st_schema = (
@@ -369,13 +363,3 @@ def _reverse_time(df, span=None):
         )
     )
 
-
-def sosfilt_chunked_scan(x_chunks, sos):
-    """Reference-exact chunked sosfilt: a generator consuming ndarray
-    chunks and carrying zi (reference: core/numerical.py:301-335) — the
-    longer-than-memory fallback documented in SURVEY §7; used by the
-    streaming stateful variant (streaming/stateful.py)."""
-    z = None
-    for chunk in x_chunks:
-        y, z = kernels.sosfilt(sos, chunk, z)
-        yield y

@@ -6,8 +6,10 @@ core/numerical.py:523-632 (halo'd polyphase kernel).
 Spark-native design: the reference re-reads every chunk three times to
 build halos (prior/current/next iterators — 3× read amplification, noted
 in BASELINE.md).  Here blocks get their halos from one lag + one lead
-window function over already-shuffled block rows: **1× read, one
-shuffle**, strictly better than the reference's access pattern.
+window function, and the channel length from one more window aggregate,
+all over block rows that share one (recording_id, channel) exchange
+(``blocks.halo_blocks``): **1× read, one shuffle**, strictly better than
+the reference's access pattern.
 
 Alignment invariants that make block-local outputs globally exact:
 - block_size % M == 0 (reference's chunksize÷M rounding,
@@ -29,7 +31,6 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from openseize_spark.dsp import kernels
 from openseize_spark.operators import blocks as B
@@ -65,9 +66,7 @@ def resample(
     # halo must also cover the filter group delay in upsampled coords
     halo = max(halo, int(np.ceil((half / L + 1) / M)) * M)
 
-    lens = B.channel_lengths(sf.df)
-    bdf = B.with_halos(B.to_blocks(sf.df, block), halo, halo, block_size=block)
-    bdf = bdf.join(F.broadcast(lens), on=["recording_id", "channel"])
+    bdf = B.halo_blocks(sf.df, block, halo, halo)
 
     schema = "recording_id string, channel int, t0 long, vs array<double>"
     hL = h * L

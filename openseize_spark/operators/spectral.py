@@ -95,8 +95,7 @@ def welch_psd_blocks(
     block = segs_per_block * stride
     halo = max(nfft - stride, 0)
 
-    bdf = B.to_blocks(sf.df, block)
-    bdf = B.with_halos(bdf, 0, halo, block_size=block)
+    bdf = B.halo_blocks(sf.df, block, 0, halo)
 
     out_schema = (
         "recording_id string, channel int, freq double, psum double, nsegs long"
@@ -131,7 +130,11 @@ def welch_psd_blocks(
                 {"recording_id": [], "channel": [], "freq": [], "psum": [], "nsegs": []}
             )
 
-    partials = bdf.mapInPandas(_block_psd, out_schema)
+    # hashed by channel, not (channel, freq): a per-channel aggregate
+    # downstream (band_power) then reuses this exchange instead of adding one
+    partials = bdf.mapInPandas(_block_psd, out_schema).repartition(
+        "recording_id", "channel"
+    )
     return (
         partials.groupBy("recording_id", "channel", "freq")
         .agg(
@@ -211,8 +214,8 @@ def stft_blocks(
     tail starts beyond the data, which read pure pad zeros), and a right
     halo of nfft samples covers every owned segment's span, so each
     segment is computed exactly once with no aggregation.  Per-task memory
-    is O(block), one shuffle (to_blocks) + one broadcast (channel
-    lengths).
+    is O(block); one shuffle (``blocks.halo_blocks``), which also yields
+    the channel length.
     """
     fs = float(sf.fs)
     stride = int(nfft - overlap * nfft)
@@ -221,9 +224,7 @@ def stft_blocks(
     if block < nfft:
         raise ValueError("segs_per_block * stride must be >= nfft")
 
-    bdf = B.to_blocks(sf.df, block)
-    bdf = B.with_halos(bdf, 0, min(nfft, block), block_size=block)
-    bdf = bdf.join(F.broadcast(B.channel_lengths(sf.df)), on=["recording_id", "channel"])
+    bdf = B.halo_blocks(sf.df, block, 0, min(nfft, block))
 
     win = kernels.get_window(window, nfft)
     denom = float(np.sqrt(fs * np.sum(win**2))) if scaling == "density" else float(np.sum(win))

@@ -136,8 +136,9 @@ class TestPlans:
     def test_sosfilt_blocks_state_join_builds_from_zin(self, signal):
         """The seed join must hash-build from the tiny per-block state
         side (zin, BuildRight) so the block arrays are never broadcast
-        or sorted — and the two block-table consumers stay structurally
-        identical for exchange reuse (operators/iir _blocks_state_scan)."""
+        or sorted (operators/iir _blocks_state_scan).  The two
+        block-table consumers each evaluate the input; their exchanges
+        are not reused."""
         from openseize_spark.dsp import design
         from openseize_spark.operators import iir as op_iir
 
@@ -152,6 +153,52 @@ class TestPlans:
         assert "BuildRight" in plan
         # the block payload must not ride a broadcast
         assert "BroadcastHashJoin" not in plan
+
+    def test_resample_after_sosfilt_blocks_runs_input_once(self, signal):
+        """resample reads the channel length off its own block window:
+        no broadcast join against an aggregate that would replay the
+        whole upstream sosfilt_blocks plan a second time."""
+        from openseize_spark.dsp import design
+        from openseize_spark.operators import iir as op_iir
+        from openseize_spark.operators import resample as op_rs
+
+        spec = design.butter(fpass=10, fstop=20, fs=100.0)
+        sf = op_iir.sosfilt_blocks(signal, spec, block_size=512)
+        plan = _executed_plan(op_rs.resample(sf, 1, 2, block_size=512).df)
+        assert plan.count("MapInPandas _seeded") == 1
+        assert "BroadcastExchange" not in plan
+
+    def test_halo_operators_shuffle_input_once(self, signal):
+        """Each halo operator hashes its input by (recording_id, channel)
+        once: the block aggregate, the halo window and the channel-length
+        window all run inside that one exchange (blocks.halo_blocks)."""
+        from openseize_spark.operators import fir as op_fir
+        from openseize_spark.operators import resample as op_rs
+        from openseize_spark.operators import spectral as op_sp
+
+        cases = {
+            "_resample": op_rs.resample(signal, 1, 2, block_size=512).df,
+            "_block_psd": op_sp.welch_psd_blocks(signal, nfft=64, segs_per_block=8),
+            "_block_stft": op_sp.stft_blocks(signal, nfft=64, segs_per_block=8),
+            "_conv": op_fir.apply_fir_blocks(signal, np.ones(9) / 9, block_size=512).df,
+        }
+        exchanges = {
+            kernel: "\n".join(
+                _subtree(_executed_plan(df), f"MapInPandas {kernel}(")
+            ).count("Exchange hashpartitioning")
+            for kernel, df in cases.items()
+        }
+        assert exchanges == dict.fromkeys(cases, 1)
+
+    def test_band_power_reuses_welch_combine_exchange(self, signal):
+        """welch_psd_blocks hashes its partials by (recording_id,
+        channel), so the (..., freq) average and band_power's per-channel
+        sum share one exchange: two in the whole plan, one per stage."""
+        from openseize_spark.operators import spectral as op_sp
+
+        psd = op_sp.welch_psd_blocks(signal, nfft=64, segs_per_block=8)
+        plan = _executed_plan(op_sp.band_power(psd, 5.0, 20.0, 100.0 / 64))
+        assert plan.count("Exchange hashpartitioning") == 2
 
     def test_sliding_prefix_plan_has_no_explode(self, signal):
         """sliding_agg_prefix must be a pure window plan — no generator
@@ -414,3 +461,24 @@ class TestPartitionPruning:
         # only the matching directory's rows come back
         got = sorted(r.id for r in q.collect())
         assert got == sorted(i for i in range(100) if i % 10 == 2)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _subtree(plan: str, marker: str) -> list[str]:
+    """Lines of the plan subtree rooted at the first node whose line
+    contains ``marker`` (children are indented deeper than their node)."""
+    lines = plan.splitlines()
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    i = next(k for k, line in enumerate(lines) if marker in line)
+    out = [lines[i]]
+    for line in lines[i + 1 :]:
+        if depth(line) <= depth(lines[i]):
+            break
+        out.append(line)
+    return out
