@@ -5,6 +5,14 @@ partition coalescing + skew-join handling), shuffle partitions sized to
 cores rather than the 200 default, Arrow enabled for the Pandas-UDF kernel
 path, UTC session timezone so results compare bit-for-bit against the
 DuckDB oracle.
+
+Local masters also start Python workers from ``openseize_spark.worker_daemon``,
+which stops every Python task re-reading ``pyspark.zip`` and the other zips
+on the worker path (a fixed ~0.2 s per task on CPython < 3.13; see
+ARCHITECTURE.md "Python task fixed cost").  Only local masters: there the
+daemon inherits the driver's cwd and PYTHONPATH, so it can import this
+package; on a cluster the package may arrive only through ``--py-files``,
+after the daemon has started.
 """
 
 from __future__ import annotations
@@ -23,11 +31,11 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    Respects ``SPARK_GRAFT_CPUS`` for local core count.  On a real cluster
-    the master/resource settings come from spark-submit; everything set here
-    is safe cluster-side too.
+    Respects ``SPARK_GRAFT_CPUS`` for local core count, else the cores this
+    process may run on.  On a real cluster the master/resource settings come
+    from spark-submit; everything set here is safe cluster-side too.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     nshuffle = shuffle_partitions or int(cpus)
 
@@ -49,11 +57,19 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**worker_daemon_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def worker_daemon_conf(master: str) -> dict[str, str]:
+    """Python worker daemon setting for ``master``: the lazy zip-cache
+    daemon on a local master, Spark's own daemon elsewhere."""
+    if master == "local" or master.startswith("local["):
+        return {"spark.python.daemon.module": "openseize_spark.worker_daemon"}
+    return {}
 
 
 @contextmanager
