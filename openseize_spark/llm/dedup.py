@@ -1361,9 +1361,12 @@ def source_overlap_oracle_sql(n: int = 8) -> str:
         JOIN tot tb ON shared.source_b = tb.source"""
 
 
-def _fanout_by_id(df: DataFrame, id_col: str) -> DataFrame:
+def _fanout_by_id(
+    df: DataFrame, id_col: str, scan: DataFrame | None = None
+) -> DataFrame:
     """Hash-repartition ``df`` on its id ONLY when the incoming plan is
-    under-parallel (fewer partitions than defaultParallelism).
+    under-parallel (fewer partitions than defaultParallelism), judged on
+    ``scan`` (default ``df``).
 
     The shingle/verify builders need their row-amplified explode spread
     across the cluster, and a COMPACT local scan (one file, few row
@@ -1374,9 +1377,15 @@ def _fanout_by_id(df: DataFrame, id_col: str) -> DataFrame:
     scale-dependent partitioning adaptive, not tuned for local").
     Values are partitioning-invariant downstream (exact-integer min
     aggs / set ops — the 32/7 invariance probes pin this), so the
-    branch is plan-only."""
+    branch changes only the plan.
+
+    ``getNumPartitions()`` must see a plan without exchanges: on one
+    with an exchange (a join, a distinct) AQE runs the stages below it
+    as real jobs just to answer, and the final action runs them again.
+    Callers that filter ``df`` through a join pass the scan-side input
+    as ``scan``."""
     n_part = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= n_part:
+    if (df if scan is None else scan).rdd.getNumPartitions() >= n_part:
         return df
     return df.repartition(n_part, F.col(id_col))
 
@@ -1426,7 +1435,10 @@ def minhash_signatures(
     permutations h_j(x) = (a_j*x + b_j) mod (2^31-1) as plain min
     aggregations — fully codegen'd with map-side partial min, one shuffle
     keyed by doc id.  (The naive per-permutation re-hash builds a huge
-    interpreted expression tree and is ~50x slower.)
+    interpreted expression tree and is ~50x slower.)  The aggregates and
+    the ``sig`` array are written as SQL text: the same plans as the
+    ``F.min(...).cast().alias()`` form, built in ~0.02 s instead of
+    ~0.8 s on the driver (ARCHITECTURE.md "Driver-side build cost").
     """
     a, b = _perm_params(num_hashes)
     norm = normalize_text(F.col(text_col))
@@ -1464,16 +1476,16 @@ def minhash_signatures(
         )
         .select(id_col, base_hash.alias("_x"))
     )
+    # SQL text, not Column-API calls: each F.*/Column call costs 3-13
+    # py4j round trips (PySpark 4 records its call site), ~6900 and
+    # ~0.8 s for these 64 aggregates + the array; the plans are the same
     aggs = [
-        F.min((F.col("_x") * int(a[j]) + int(b[j])) % _MERSENNE)
-        .cast("int")
-        .alias(f"_h{j}")
+        F.expr(f"CAST(min((_x * {int(a[j])} + {int(b[j])}) % {_MERSENNE}) AS INT) AS _h{j}")
         for j in range(num_hashes)
     ]
     agg = sh.groupBy(id_col).agg(*aggs)
-    return agg.select(
-        F.col(id_col), F.array(*[F.col(f"_h{j}") for j in range(num_hashes)]).alias("sig")
-    )
+    hs = ", ".join(f"_h{j}" for j in range(num_hashes))
+    return agg.select(F.col(id_col), F.expr(f"array({hs}) AS sig"))
 
 
 def minhash_lsh_pairs(
@@ -1581,10 +1593,12 @@ def jaccard_verify(
         .union(pairs.select(F.col("b").alias(id_col)))
         .distinct()
     )
-    docs = docs.join(cand_ids, on=id_col, how="left_semi")
     # fan the per-doc shingle-set build out of the compact scan's few
-    # input partitions when under-parallel (see _fanout_by_id)
-    docs = _fanout_by_id(docs, id_col)
+    # input partitions when under-parallel (see _fanout_by_id; judged
+    # on the scan, not the semi-join)
+    docs = _fanout_by_id(
+        docs.join(cand_ids, on=id_col, how="left_semi"), id_col, scan=docs
+    )
     sh = docs.select(F.col(id_col), norm.alias("_txt")).withColumn(
         "sh", _shingle_expr(F.col("_txt"), k)
     ).select(id_col, "sh")
@@ -1632,8 +1646,9 @@ def containment_verify(
         .union(pairs.select(F.col("b").alias(id_col)))
         .distinct()
     )
-    docs = docs.join(cand_ids, on=id_col, how="left_semi")
-    docs = _fanout_by_id(docs, id_col)
+    docs = _fanout_by_id(
+        docs.join(cand_ids, on=id_col, how="left_semi"), id_col, scan=docs
+    )
     sh = docs.select(F.col(id_col), norm.alias("_txt")).withColumn(
         "sh", _shingle_expr(F.col("_txt"), k)
     ).select(id_col, "sh")

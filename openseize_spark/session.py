@@ -13,6 +13,11 @@ ARCHITECTURE.md "Python task fixed cost").  Only local masters: there the
 daemon inherits the driver's cwd and PYTHONPATH, so it can import this
 package; on a cluster the package may arrive only through ``--py-files``,
 after the daemon has started.
+
+The codegen class cache holds 1000 generated classes instead of Spark's
+100: the dedup queries alone need ~150, so at the default every run of
+them recompiled most of their classes (see ARCHITECTURE.md "Driver-side
+build cost").
 """
 
 from __future__ import annotations
@@ -53,6 +58,10 @@ def get_spark(
         # one pass; default maxFields=100 silently drops that stage out of
         # whole-stage codegen (interpreted row-at-a-time aggregation)
         .config("spark.sql.codegen.maxFields", "256")
+        # generated-class cache (static conf): the default 100 entries
+        # is below dedup_clusters + minhash_dedup_prod's ~150-class
+        # working set, so each of their runs recompiled 60-90 classes
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")
