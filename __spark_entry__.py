@@ -1033,16 +1033,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .alias("est_matches"),
             )
         )
-        # NOTE (round-9 measurement): anchoring `exact` on the result
-        # (tie_lifetime, keeping verify's internal candidate cache live
-        # at execution) was tried and is ~15% SLOWER at sf0.01 here —
-        # all four cand reads are IDENTICAL subtrees of one plan over
-        # the checkpointed sigs, so ReusedExchange already shares the
-        # banding shuffle and the cache write is pure overhead.  The
-        # build-time release (the finalizer firing when `exact`'s
-        # pre-join handle drops) is the measured-faster shape for this
-        # query; blocking_yield, whose candidate reads are NOT
-        # identical subtrees, measures 24% faster WITH the anchor.
         return est.join(exact, on=["a", "b"]).select(
             "a",
             "b",
@@ -2576,23 +2566,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         hspec = design.hilbert_fir(width=5.0, fs=FS)
         sf = _signal(spark, sf_dir)
         analytic = op_fir.hilbert_analytic(sf, hspec)
-        # persist the shared analytic subtree: events and amplitudes both
-        # derive from it and would otherwise recompute the FIR window.
-        # The cache releases with the returned DataFrame (refcounted
-        # finalizer) — plan-neutral, no CacheManager entry outlives the
-        # result in a long-lived session.
-        ph = op_fir.envelope_phase(analytic).persist()
+        # checkpoint the shared analytic subtree: events and amplitudes
+        # both derive from it and would otherwise recompute the FIR
+        # window; its blocks die with the returned plan
+        ph = op_fir.envelope_phase(analytic).localCheckpoint(eager=False)
         events = coupling.phase_events(
             ph.select("recording_id", "channel", "t", "phase"), target=0.5, tol=0.05
         )
         amp = ph.select("recording_id", "channel", "t", F.col("amplitude").alias("v"))
-        out = coupling.pac_estimate(amp, events, window=32).select(
+        return coupling.pac_estimate(amp, events, window=32).select(
             "channel",
             "offset",
             F.round("mean_sq_amp", 9).alias("mean_sq_amp"),
             "n_events",
         )
-        return dedup.release_cache_with(out, ph)
 
     q["pac"] = q_pac
 
@@ -2949,7 +2936,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         hspec = design.hilbert_fir(width=5.0, fs=FS)
         sf = _signal(spark, sf_dir)
         analytic = op_fir.hilbert_analytic(sf, hspec)
-        ph = op_fir.envelope_phase(analytic).persist()
+        ph = op_fir.envelope_phase(analytic).localCheckpoint(eager=False)
         events = coupling.phase_events(
             ph.select("recording_id", "channel", "t", "phase"), target=0.5, tol=0.05
         )
@@ -2968,14 +2955,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             [(i, (n * a) // b) for i, (a, b) in enumerate(_SURROGATE_FRACS)],
             "surrogate_id int, shift bigint",
         )
-        out = coupling.pac_surrogates(amp, events, 32, shifts, n_samples=n).select(
+        return coupling.pac_surrogates(amp, events, 32, shifts, n_samples=n).select(
             "channel",
             "surrogate_id",
             "offset",
             F.round("mean_sq_amp", 9).alias("mean_sq_amp"),
         )
-        # cache releases with the returned DataFrame (refcounted)
-        return dedup.release_cache_with(out, ph)
 
     q["pac_surrogates"] = q_pac_surrogates
 
@@ -4915,14 +4900,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         metric is order-independent — a per-pair float mean would
         depend on summation order.  Distinguishes tight duplicate
         cliques from chains glued by borderline pairs."""
-        from pyspark import StorageLevel
-
         docs = _t(spark, sf_dir, "documents")
         sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
         cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
+        # two consumers: connected_components' in-call rounds fill the
+        # checkpoint and pair_m reads it inside the returned plan
         dup = dedup.jaccard_verify(
             docs, cand, k=5, threshold=0.8, with_counts=True
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).localCheckpoint(eager=False)
         cc = dedup.connected_components(
             dup.select("a", "b"), include_self_pairs=False
         )
@@ -4939,19 +4924,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         node_m = cc.groupBy("component").agg(
             F.count("*").cast("bigint").alias("n_nodes")
         )
-        out = (
-            node_m.join(pair_m, on="component")
-            .withColumn(
-                "cohesion",
-                F.round(
-                    F.col("sum_inter").cast("double") / F.col("sum_union"), 9
-                ),
-            )
+        return node_m.join(pair_m, on="component").withColumn(
+            "cohesion",
+            F.round(F.col("sum_inter").cast("double") / F.col("sum_union"), 9),
         )
-        # dup's cache materializes during connected_components' in-call
-        # rounds and pair_m reads it inside the returned plan; release
-        # it with the returned DataFrame (refcounted, plan-neutral)
-        return dedup.release_cache_with(out, dup)
 
     q["cluster_cohesion"] = q_cluster_cohesion
 
@@ -5094,12 +5070,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # edge build inside connected_components, which materializes via
         # its own lazy localCheckpoint on the first in-call action (the
         # returned component plan reads the final round's checkpoint,
-        # never the verify output, with include_self_pairs=False).  The
-        # old .persist() therefore paid a cache write that was never
-        # read back — and leaked its CacheManager entry.  The verify
-        # call's INTERNAL candidate cache serves its three in-plan
-        # consumers during that single materialization and releases when
-        # `dup` goes out of scope at return.
+        # never the verify output, with include_self_pairs=False), so
+        # the verify output needs no materialization of its own.  The
+        # verify call checkpoints its candidates eagerly, once.
         dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
         cc = dedup.connected_components(
             dup.select("a", "b"), include_self_pairs=False
@@ -5171,8 +5144,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         expensive verify runs ONCE over the union; per-family counts
         are semi-joins of each (bounded) candidate set against the
         verified pairs."""
-        from pyspark import StorageLevel
-
         docs = _t(spark, sf_dir, "documents")
         sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
         fams = {
@@ -5190,17 +5161,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         for name, df in fams.items():
             t = df.withColumn("family", F.lit(name))
             tagged = t if tagged is None else tagged.union(t)
-        tagged = tagged.persist(StorageLevel.MEMORY_AND_DISK)
-        # keep a handle on the verify RESULT itself: its internal
-        # candidate cache is finalizer-scoped to THIS object — a
-        # .select() derivative would not carry the finalizer, and
-        # dropping the result at build time releases the cache before
-        # any action runs
-        vr = dedup.jaccard_verify(
+        # two consumers: the verify's eager candidate checkpoint fills
+        # this one and the per-family join reads it in the returned plan
+        tagged = tagged.localCheckpoint(eager=False)
+        vp = dedup.jaccard_verify(
             docs, tagged.select("a", "b").distinct(), k=5, threshold=0.8
-        )
-        vp = vr.select("a", "b", F.lit(1).alias("_v"))
-        out = (
+        ).select("a", "b", F.lit(1).alias("_v"))
+        return (
             tagged.join(vp, on=["a", "b"], how="left")
             .groupBy("family")
             .agg(
@@ -5216,15 +5183,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ),
             )
         )
-        # tagged feeds two consumers inside the returned plan (the
-        # verify's candidate build and the per-family join); release its
-        # cache with the returned DataFrame.  vr's internal candidate
-        # cache is scoped to vr's lifetime — anchor it on the result so
-        # the cache is still live when the outer plan executes (it was
-        # previously dropped at build time, releasing the cache before
-        # any action ran).
-        out = dedup.tie_lifetime(out, vr)
-        return dedup.release_cache_with(out, tagged)
 
     q["blocking_yield"] = q_blocking_yield
 
@@ -15127,292 +15085,11 @@ _GATE_CANONICAL_ORDER = {
     "sp_counting": ["dist", "id"],
 }
 
+# The gate window: these queries head queries() in this order (the
+# external correctness gate checked the first fifty keys;
+# tests/test_registry.py pins the order).  Earlier windows (rounds 1-13)
+# are in git history.
 _GATE_PRIORITY = [
-    # R10-BATCH STAGING NOTE: this branch pre-stages the round-10
-    # plan-change batch.  When it merges in round 10 (after
-    # CORRECTNESS_r09 lands), rotate this list: drop the 50 r9-checked
-    # conversions below and promote the boundary tail — the two IIR
-    # re-gates, the 9 spilled conversions, then the round-10 re-gates
-    # staged on this branch: "er_pipeline", "blocking_yield" (plan
-    # changed: persist removed / verify result anchored),
-    # "theilsen_slope" (guarded dual-arm), and the plan-neutral
-    # insurance re-gates "pac", "pac_surrogates", "cluster_cohesion"
-    # (refcounted release; executed plans verified hash-identical,
-    # see COVERAGE.md).  minhash_estimate got a comment only — no
-    # re-gate.  This branch also registers SEVENTEEN new queries (326
-    # total): "k_core", "c4_clean", "label_propagation",
-    # "cuped_stratified", "packing_efficiency", "priority_sample",
-    # "hits_scores", "rouge_pairs", "nb_calibration", "gram_novelty",
-    # "kappa_classifiers", "ndcg_eval", "roc_auc_binned",
-    # "bfs_distances", "target_encode", "streaming_hll" (the fourth
-    # applyInPandasWithState surface), "rouge_verify" (ROUGE over the
-    # LSH candidate stack) — each fully oracled, audited
-    # (type/diff/plan/shuffle-invariance/float-order/vanilla), and
-    # pytest-covered; include them in the r10 head so they gate in
-    # their first round.
-    # round-9 window: the storage-layer tail plus the remaining
-    # never-checked backlog, ordered: graph/retrieval shapes,
-    # join-strategy + layout gates, event analytics, privacy head
-    "storage_audit", "dq_audit",
-    "triangle_count", "link_prediction", "tfidf_cosine_pairs",
-    "source_overlap", "markov_transitions", "path_trigrams",
-    "degree_distribution", "negsample_table", "salted_enrich",
-    "bucketed_revenue", "rendezvous_shards", "cube_revenue",
-    "cube_nation_year", "range_frame_sum", "unpivot_metrics",
-    "cdc_apply", "scd2_ranges", "doc_chunks", "mixture_pipeline",
-    "hashed_features", "language_margin", "readability",
-    "sentence_stats", "winsorized_stats", "value_hour_corr",
-    "brand_cooccurrence", "brand_top_parts", "position_attribution",
-    "quota_apportion", "rfm_features", "user_value_ranks",
-    "type_streaks", "yoy_revenue", "cumulative_users",
-    "conversion_lag", "event_debounce", "event_transitions",
-    "churned_users", "engaged_users", "wow_retention",
-    "churn_labels", "session_gap_sweep", "ecdf_probes",
-    "ship_delay_quantiles", "forecast_eval", "pareto_parts",
-    "k_anonymity", "l_diversity",
-    # ---- window boundary (50) ----
-    # ROUND-10 RE-GATE HEAD (committed now per the r8 verdict order #2).
-    # First the two flagship IIR queries whose LATEST driver rows are
-    # still the r04 `err: no_oracle` entries — their full-length
-    # recursive-CTE oracles landed in round 7 and pass locally
-    # (LOCALCHECK_r08: ok), but no driver row has ever seen them:
-    "sosfilt_full", "sosfilt_blocks_full",
-    # then the 9 conversions that spill past the round-9 boundary:
-    "dp_noised_counts", "user_erasure",
-    "bitmap_setops", "join_fanout_audit", "dedup_rate_by_source",
-    "null_profile", "top_values_csv", "dataset_card", "sql_entry",
-    # The rest of the round-10 window is the committed plan-change
-    # re-gate batch (COVERAGE.md "Round-10 batch plan"): the five
-    # unreleased persist() sites (pac, pac_surrogates, the dup-cluster
-    # metrics, er_pipeline, blocking_yield), the single-scan
-    # chunk_dedup restructure (prototyped bit-equal, 18% faster,
-    # commit ba24887), and any query whose plan those edits touch.
-    # Their names enter this list in round 10, in the same commit as
-    # the code + plan-shape-test changes.
-]
-
-# READY-TO-SWAP round-10 window (execute AFTER CORRECTNESS_r09 lands
-# and this branch merges): replace _GATE_PRIORITY's head with this
-# list.  Composition: the two stale-`no_oracle` IIR re-gates, the 9
-# spilled conversions (backlog reaches ZERO), the seventeen new
-# registrations staged on this branch, the six staged re-gates (plan
-# changed: er_pipeline / blocking_yield / theilsen_slope; plan-neutral
-# insurance: pac / pac_surrogates / cluster_cohesion), then 16
-# freshness re-gates — the oldest ever-checked driver evidence (all
-# latest-checked in round 1; zero code change, they re-confirm the
-# flagship signal/relational layers on current code).  The 22
-# remaining r01-latest rows (detrend_linear, pad, extend_edge,
-# expand_upsample,
-# mult_along_channel, squeeze_expand,
-# set_ops, pivot_status, rollup_revenue, priority_exists,
-# top_customers_by_orders, text_stats — displaced by the twelve newest
-# registrations — plus extend_even, extend_odd, mult_along_time,
-# scalar_mult, distinct_pairs, rank_parts, moving_average,
-# filtered_revenue, fingerprint, stopword_score_by_lang) head the
-# round-11 freshness queue with the r03 cohort.
-_GATE_PRIORITY_R10 = [
-    "sosfilt_full", "sosfilt_blocks_full",
-    "dp_noised_counts", "user_erasure",
-    "bitmap_setops", "join_fanout_audit", "dedup_rate_by_source",
-    "null_profile", "top_values_csv", "dataset_card", "sql_entry",
-    "k_core", "c4_clean", "label_propagation",
-    "cuped_stratified", "packing_efficiency",
-    "priority_sample", "hits_scores", "rouge_pairs", "nb_calibration",
-    "gram_novelty", "kappa_classifiers", "ndcg_eval", "roc_auc_binned",
-    "bfs_distances", "target_encode", "streaming_hll", "rouge_verify",
-    "er_pipeline", "blocking_yield", "theilsen_slope",
-    "pac", "pac_surrogates", "cluster_cohesion",
-    # 16 freshness re-gates (latest driver row: round 1)
-    "pricing_summary", "running_total", "time_slice", "channel_select",
-    "mask_compact", "interval_mask", "signal_add", "signal_stats",
-    "standardize", "band_power", "power_norm", "nearest_bin",
-    "segment_mean", "event_window_avg", "synth_signal", "decimate",
-]
-
-
-# ROTATION PRE-APPLIED ON THIS BRANCH: r10-batch merges into main only
-# at round-10 start, AFTER CORRECTNESS_r09 lands (staging/README.md),
-# so the round-10 window above becomes the active gate head at exactly
-# the moment it should — the round-10 runbook collapses to
-# merge + local replica, with no manual list edit to get wrong.  The
-# round-9 window names stay registered; they simply drop below the
-# 50-slot boundary as freshly-driver-checked rows.
-# (Round-10 history: `_GATE_PRIORITY = _GATE_PRIORITY_R10`; rebound to
-# the R11 window below at round-11 start after CORRECTNESS_r10 landed
-# 50/50 — r10 verdict order #1.)
-
-
-# ACTIVE round-11 window (activated at round-11 start per the r10
-# verdict order #1, after CORRECTNESS_r10 landed 50/50).  Composition
-# as committed in round 10 — the 22 r01-latest freshness re-gates, the
-# 21 round-10-session registrations (never driver-checked), and the
-# r03 freshness cohort head — with ONE r10-verdict-ordered amendment:
-# order #2 flips the registered `tfidf_cosine_pairs` to the
-# max_df_abs=256 default (the one measured superlinear path, sf1
-# e=1.58), and the no-silent-edit rule requires the plan-change
-# re-gate slot in the same commit.  The window was full at 50, so the
-# re-gate takes slot 1 and the LAST r03 freshness entry
-# (`path_pairing`, zero code change, pure freshness) spills to the
-# head of the round-12 queue.  22 + 21 + 1 + 6 = 50.
-_GATE_PRIORITY_R11 = [
-    # named plan-change re-gate (r10 verdict order #2): capped default
-    "tfidf_cosine_pairs",
-    # 22 r01 freshness re-gates (committed round-11 head since round 9)
-    "top_customers_by_orders", "priority_exists", "filtered_revenue",
-    "rank_parts", "rollup_revenue", "pivot_status", "set_ops",
-    "distinct_pairs", "detrend_linear", "scalar_mult",
-    "mult_along_channel", "mult_along_time", "pad", "moving_average",
-    "extend_even", "extend_edge", "extend_odd", "squeeze_expand",
-    "expand_upsample", "text_stats", "stopword_score_by_lang",
-    "fingerprint",
-    # 21 new registrations from the round-10 session (conversions)
-    "modularity", "assortativity", "clustering_buckets", "mrr_eval",
-    "tfidf_cosine_capped", "mannwhitney_binned", "spearman_binned",
-    "corr_matrix", "bleu_verify", "dedup_threshold_sweep",
-    "cluster_size_dist", "t_closeness", "reset_running_sum",
-    "grouping_sets_revenue", "merge_partials", "zero_crossing_rate",
-    "pr_auc_binned", "map_eval", "stationary_markov", "ppr_seeded",
-    "conductance",
-    # 6 r03 freshness re-gates (freshness_queue head after the r01s;
-    # `path_pairing` displaced to the round-12 queue head by the
-    # tfidf_cosine_pairs plan-change re-gate above)
-    "revenue_by_nation", "sliding_energy", "sosfiltfilt_ellip",
-    "token_count_by_source", "repetition_stats", "pii_scan",
-]
-
-# (Round-11 history: `_GATE_PRIORITY = _GATE_PRIORITY_R11`; rebound to
-# the pre-committed R12 window at round-12 start per the r11 verdict
-# order #1, after CORRECTNESS_r11 landed 50/50 green.)
-
-
-# Round-12 window, ACTIVE (pre-committed in round 11, activated at
-# round-12 start by rebinding `_GATE_PRIORITY = _GATE_PRIORITY_R12` —
-# one line, no list edit).  Composition (r10 verdict order #3): the 17
-# round-10-continuation registrations (each battery-verified at
-# registration AND independently re-run by the r10 judge — 17/17
-# match; never driver-checked), then `path_pairing` (displaced from
-# the r11 window by the tfidf_cosine_pairs plan-change re-gate), then
-# the remaining r03 freshness cohort (14) and the head of the r04
-# cohort (18), in tools/freshness_queue.py order.  17 + 1 + 14 + 18
-# = 50.  Queries registered in the round-11 session are round-13
-# window material and sit BELOW this list in the freshness queue.
-_GATE_PRIORITY_R12 = [
-    # 17 continuation conversions (registered round 10, never checked)
-    "setsim_pairs", "winnow_pairs", "heavy_ngrams", "incident_windows",
-    "woe_encode", "isotonic_calibration", "sprt_ab",
-    "pca_power_iteration", "peak_concurrency", "consistent_hash_ring",
-    "spatial_eps_pairs", "dag_layers", "hilbert_layout",
-    "streaming_asof", "greedy_set_cover", "fs_linkage", "bom_rollup",
-    # displaced r03 freshness re-gate (see the r11 window note)
-    "path_pairing",
-    # 14 remaining r03 freshness re-gates (freshness_queue order)
-    "path_mismatched", "embedding_norms", "ngram_jaccard",
-    "embedding_dedup", "sosfiltfilt_blocks", "lfilter_blocks",
-    "filtfilt_blocks", "sosfilt_cheby1", "sosfilt_cheby2", "notch",
-    "supplier_topbal", "lsh_topk", "quality_score", "language_id",
-    # 18 r04 freshness re-gates (freshness_queue head of the r04 cohort)
-    "event_deltas", "sessionize", "tumbling_hour", "fir_kaiser",
-    "fir_remez", "fir_hamming", "envelope", "psd_ci", "dedup_exact",
-    "knn_cosine", "ivf_topk", "kmeans_assign", "welch_psd",
-    "welch_psd_blocks", "stft", "stft_blocks", "sosfilt",
-    "sosfilt_blocks",
-]
-
-# (Round-12 history: `_GATE_PRIORITY = _GATE_PRIORITY_R12`; rebound to
-# the pre-committed R13 window at round-13 start per the r12 verdict
-# order #1, after CORRECTNESS_r12 landed 50/50 green.)
-
-
-# Round-13 window, ACTIVE (pre-committed in round 12, activated at
-# round-13 start by rebinding `_GATE_PRIORITY = _GATE_PRIORITY_R13` —
-# one line, no list edit).  Composition (r11 verdict order #2): the 12
-# round-11-session registrations (each battery-verified at
-# registration AND independently re-run by the r11 judge — 12/12
-# match, 13/13 shuffle-invariant; never driver-checked), then the
-# remaining r04 freshness cohort (25) and the head of the r06 cohort
-# (13), in tools/freshness_queue.py order.  12 + 25 + 13 = 50.  After
-# this window lands, no driver evidence is older than r06.  The 21
-# round-12-session registrations (betweenness_contrib through
-# dup_substring_spans — see the ROUND-14 COMPOSITION NOTE below) are
-# round-14 window material and sit below this list in the queue.
-_GATE_PRIORITY_R13 = [
-    # 12 round-11-session conversions (registered round 11, never
-    # checked; judge-verified independently in the r11 session)
-    "ancestor_chain", "fastss_pairs", "apriori_triples", "sssp_delta",
-    "heaps_law_fit", "stratified_ate", "pivot_scc", "term_burstiness",
-    "ols_by_type", "temporal_reach", "sp_counting", "bpe_learn",
-    # 25 remaining r04 freshness re-gates (freshness_queue order;
-    # minhash_dedup_prod is the by-design rows-only row — its re-gate
-    # records the weaker rows check, as every round since r04)
-    "sosfiltfilt", "resample_poly", "downsample", "upsample",
-    "fir_blocks", "lfilter", "filtfilt", "minhash_dedup",
-    "dedup_clusters", "minhash_sigs", "simhash", "simhash_pairs",
-    "hilbert_envelope", "top_ngrams", "quality_filter", "hash_sample",
-    "stratified_sample", "click_attribution", "audio_features",
-    "frame_sample", "resize_images", "image_features",
-    "minhash_dedup_prod", "edf_decode", "streaming_hour",
-    # 13 r06 freshness re-gates (freshness_queue head of the r06 cohort)
-    "cohort_retention", "funnel_steps", "value_trend", "json_props",
-    "rolling_median", "skew_distinct_users", "big_orders",
-    "brand_suppliers", "canonical_docs", "snapshot_diff",
-    "split_assign", "corpus_shuffle", "multires_rollup",
-]
-
-# (Round-13 history: `_GATE_PRIORITY = _GATE_PRIORITY_R13`; rebound
-# to the R14 list at round-14 start after CORRECTNESS_r13 landed,
-# exactly as the ready-to-swap note below prescribes — plus the
-# single named sp_counting amendment documented at the R14 list
-# head.  The binding assignment sits directly below the R14 list,
-# which is defined further down this file.)
-
-# ROUND-14 COMPOSITION NOTE (EXECUTED in the round-13 session — the
-# binding `_GATE_PRIORITY_R14` list below follows this note and was
-# replica-proven 50/50 green at composition): 21 conversion
-# slots for the round-12-session registrations in registration order
-# (betweenness_contrib, bpe_apply, kn_perplexity, random_walks,
-# als_user_step, cusum_by_type, did_by_type, ipw_ate, logrank_test,
-# assoc_rules, anova_f, nelson_aalen, kruskal_binned, mcnemar_pairs,
-# xcorr_lags, bartlett_test, durbin_watson, scene_cuts,
-# decision_stump, cochran_armitage, dup_substring_spans — every one
-# battery-verified and LOCALCHECK_r12-green at registration, and
-# independently re-run by the r12 judge: 21/21 match), then 29
-# freshness re-gates from the tools/freshness_queue.py head (the
-# r06-cohort remainder — 31 rows after the r13 window converts its 13
-# — then the r07 head).  21 + 29 = 50.  The 21 round-13-session
-# registrations sit below this list in the queue (round-15 material;
-# see the ROUND-15 COMPOSITION NOTE above the R14 list).
-
-
-# READY-TO-SWAP round-14 window (execute at round-14 start, AFTER
-# CORRECTNESS_r13 lands: rebind `_GATE_PRIORITY = _GATE_PRIORITY_R14` —
-# one line, no list edit).  Composition per the note above (r12
-# verdict order #2): the 21 round-12-session registrations in
-# registration order (battery-verified, LOCALCHECK_r12-green, and
-# independently re-run by the r12 judge — 21/21 match, 9/9
-# shuffle-invariant; never driver-checked), then the first 29 of the
-# 31-row r06-cohort remainder in tools/freshness_queue.py order (the
-# last two, corpus_pipeline and pq_refine_topk, spill to round 15
-# with the r07 cohort).  21 + 29 = 50.  After this window lands, no
-# driver evidence is older than r06 except those two spill rows.
-#
-# ROUND-15 COMPOSITION NOTE (draft — compose and commit the binding
-# list in the round-14 session): 25 conversion slots for the
-# round-13-session registrations in registration order
-# (als_item_step — registered next to its als_user_step sibling —
-# then skipgram_cooc, binseg_changepoints, seq_rules, rake_keywords,
-# mantel_haenszel, page_hinkley, friedman_test, audio_vad,
-# theil_sen, gini_by_type, trimmed_mean, kendall_tau_binned,
-# brier_score, pinball_quantile, mad_by_type, bootstrap_ci,
-# term_drift, forecast_mae, dedup_eval, ranking_inversions, plus
-# the close-amendment four: snippet_extract, streaming_page_hinkley,
-# mmr_diversify, graph_assortativity — every one battery-verified at
-# registration: oracle green at sf0.01+sf0.001, type/plan/diff/
-# pushdown/float-order audits, 32/7 shuffle invariance, vanilla
-# probe, and a brute-force python-replay pytest; all in
-# LOCALCHECK_r13.json), then the 2 r06 spill rows (corpus_pipeline,
-# pq_refine_topk) and 23 freshness re-gates from the r07-cohort head
-# in tools/freshness_queue.py order.  25 + 2 + 23 = 50.
-_GATE_PRIORITY_R14 = [
     # ROUND-14 AMENDMENT (one named slot, per the r13 verdict's
     # explicit What's-wrong-#1 order): "sp_counting" — the round's
     # only red driver row (hash-only mismatch, rows/schema green,
@@ -15448,15 +15125,13 @@ _GATE_PRIORITY_R14 = [
     # slot)
 ]
 
-_GATE_PRIORITY = _GATE_PRIORITY_R14
 
 # READY-TO-SWAP round-15 window (execute at round-15 start, AFTER
 # CORRECTNESS_r14 lands: rebind `_GATE_PRIORITY = _GATE_PRIORITY_R15`
-# — one line, no list edit).  Composition per the ROUND-15 COMPOSITION
-# NOTE above the R14 list, adjusted for the round-14 amendment: the
-# 25 round-13-session registrations in registration order (each
-# battery-verified at registration and LOCALCHECK_r13-green; the r13
-# judge independently re-ran 12 of them — 12/12 match, 6/6
+# — one line, no list edit).  Composition, adjusted for the round-14
+# amendment: the 25 round-13-session registrations in registration
+# order (each battery-verified at registration and LOCALCHECK_r13-green;
+# the r13 judge independently re-ran 12 of them — 12/12 match, 6/6
 # shuffle-invariant), then the THREE r06 spill rows
 # ("source_divergence" — displaced from the R14 window by the
 # sp_counting re-gate amendment — plus the two long-planned spills

@@ -33,96 +33,6 @@ def normalize_text(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-# Refcounts for caches whose lifetime is tied to result DataFrames:
-# semanticHash(analyzed plan) -> [live-result count, Java DataFrame].
-# Keyed on the canonicalized-plan hash because that is CacheManager's
-# own equality unit — two persists of semantically equal plans share
-# ONE cache entry, so they must share one refcount.
-_CACHE_REFS: dict[int, list] = {}
-
-
-def release_cache_with(result: DataFrame, cached: DataFrame) -> DataFrame:
-    """Tie ``cached``'s cache lifetime to the returned ``result``,
-    refcounted across results that share the same cache entry.
-
-    The candidate-verify operators persist their ``pairs`` input because
-    it feeds several consumers INSIDE the lazily-returned plan, so a
-    try/finally unpersist before return would release the cache before
-    it ever materializes.  The cache therefore has to outlive the call —
-    but it must not outlive its USE: a long-lived driver session running
-    many verify calls would otherwise accumulate candidate tables in the
-    CacheManager forever (the leak class fixed in sampling.py /
-    similarity.py, where in-function actions allow eager unpersist).
-
-    Mechanism: at call time the cache's refcount — keyed by the
-    ANALYZED PLAN's ``semanticHash``, CacheManager's own equality unit —
-    is incremented; a ``weakref.finalize`` on the result decrements it,
-    and the unpersist fires only at zero.  Two verify results built
-    over the same pairs input (or over semantically equal plans, which
-    Spark backs with one cache entry) therefore keep the cache alive
-    until the LAST of them is dropped — dropping the first no longer
-    starves the survivor, the failure mode of the round-8
-    finalizer-per-result version.  The callback captures only the hash
-    key (never the Python DataFrames, which would keep ``result``
-    alive) and guards against the JVM being gone at interpreter
-    shutdown.
-
-    Composition nuance: a consumer that folds the result into a larger
-    LAZY plan and drops the intermediate at return would release the
-    cache before that outer plan executes, recomputing the candidate
-    subtree per in-plan consumer (bounded, value-identical — but the
-    cost the persist exists to avoid).  Consumers either MATERIALIZE
-    in-call while the intermediate is alive (connected_components /
-    pagerank run actions per round; triangle_count eagerly
-    localCheckpoints its edge list) or keep the intermediate alive for
-    the outer result's lifetime with ``tie_lifetime``.  A caller that
-    re-executes a verify result many times keeps the cache by simply
-    holding the reference — the lifetime IS the reference's.
-    """
-    import weakref
-
-    key = cached._jdf.queryExecution().analyzed().semanticHash()
-    ent = _CACHE_REFS.setdefault(key, [0, cached._jdf])
-    ent[0] += 1
-
-    def _release(key=key):
-        ent = _CACHE_REFS.get(key)
-        if ent is None:
-            return
-        ent[0] -= 1
-        if ent[0] > 0:
-            return
-        _CACHE_REFS.pop(key, None)
-        try:
-            ent[1].unpersist(False)
-        except Exception:
-            pass  # gateway already shut down
-
-    weakref.finalize(result, _release)
-    return result
-
-
-# internal callers predate the public name
-_release_cache_with = release_cache_with
-
-
-def tie_lifetime(outer: DataFrame, *inner: DataFrame) -> DataFrame:
-    """Keep ``inner`` DataFrames referenced for as long as ``outer``
-    lives.
-
-    For builders that compose a verify result (whose internal candidate
-    cache is scoped to that result's lifetime) into a larger LAZY plan
-    and would otherwise drop the intermediate at return: anchoring the
-    intermediates on the returned DataFrame keeps their caches alive
-    until the composed result itself is dropped, so the outer execution
-    still hits them.  Pure driver-side bookkeeping — no plan change.
-    """
-    outer._os_lifetime_refs = getattr(outer, "_os_lifetime_refs", ()) + tuple(
-        inner
-    )
-    return outer
-
-
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -742,13 +652,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     """
     # Three consumers of the edge list; checkpoint so a possibly
     # expensive upstream pair-generation plan executes once.  The
-    # checkpoint is EAGER (matching connected_components / pagerank):
-    # when the edges come from a verify operator whose candidate cache
-    # is tied to the verify result's lifetime (_release_cache_with),
-    # building the checkpoint in-call — while the caller still holds
-    # that result — is what lets the edge materialization hit the
-    # cache; a lazy checkpoint would first run after the intermediate
-    # is dropped and recompute the candidate pipeline per consumer.
+    # checkpoint is EAGER, matching connected_components / pagerank.
     edges = edges.localCheckpoint(eager=True)
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -1087,18 +991,17 @@ def personalized_pagerank(
 
     Returns (id, degree, ppr) for nodes with nonzero rank mass.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     S = int(scale)
     und = edges.select(
         F.col(a_col).alias("x"), F.col(b_col).alias("y")
     ).union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(edges.sparkSession):
-        # persist, NOT localCheckpoint (round-14, cf. pagerank): keeps
-        # the repartition visible so the per-round contribution join
-        # leaves the edge list stationary.  Released in-call below.
-        und = und.repartition(n_part, "x").persist()
+    with (
+        small_intermediate_coalesce(edges.sparkSession),
+        persisted(und.repartition(n_part, "x")) as und,
+    ):
         deg = und.groupBy("x").agg(
             F.count("*").alias("deg")
         ).localCheckpoint(eager=True)
@@ -1156,7 +1059,6 @@ def personalized_pagerank(
                 .filter(F.col("u") > 0)
                 .localCheckpoint(eager=True)
             )
-        und.unpersist(blocking=False)
     return ranks.select(
         F.col("x").alias("id"),
         F.col("deg").cast("bigint").alias("degree"),
@@ -1852,7 +1754,7 @@ def connected_components(
     # canonical edge set; label them as their own singleton components so
     # the contract above holds for every node appearing in a pair.  This
     # branch re-reads ``pairs`` lazily — callers passing an expensive
-    # un-persisted pair plan should persist it (jaccard_verify does)
+    # pair plan should localCheckpoint it first
     lone = (
         pairs.filter(F.col(a_col) == F.col(b_col))
         .select(F.col(a_col).alias("id"))
@@ -2416,7 +2318,7 @@ def label_propagation(
 
     Returns (id, label) after ``rounds`` rounds.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     und = (
         edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
@@ -2425,13 +2327,11 @@ def label_propagation(
         .distinct()
     )
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(edges.sparkSession):
-        # persist keyed on the JOIN key y — the old checkpoint both
-        # erased the partitioning from the planner AND keyed it on x
-        # while every round joins on y, so each of the `rounds` vote
-        # joins re-shuffled the full edge list (round-14).  Released
-        # in-call below.
-        und = und.repartition(n_part, "y").persist()
+    # keyed on y, the key every round's vote join uses
+    with (
+        small_intermediate_coalesce(edges.sparkSession),
+        persisted(und.repartition(n_part, "y")) as und,
+    ):
         labels = (
             und.select(F.col("x").alias("id"))
             .distinct()
@@ -2461,7 +2361,6 @@ def label_propagation(
                 .select("id", (-F.col("_m._nl")).alias("label"))
                 .localCheckpoint(eager=True)
             )
-        und.unpersist(blocking=False)
     return labels
 
 
@@ -2690,7 +2589,7 @@ def pagerank(
     Spark's ``div`` — so no broadcast join rides any round.
     Returns (id, degree, pagerank) with pagerank = units / scale.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     S = int(scale)
     und = edges.select(
@@ -2702,21 +2601,14 @@ def pagerank(
     # eager action that materializes every round inside this scope
     # (AQE reads the conf at action time)
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(edges.sparkSession):
-        # cut the lineage once: every iteration re-references the edge
-        # list and degree table, and without this the (possibly
-        # expensive) upstream pair-generation plan is re-executed per
-        # reference and the composed plan grows superlinearly — same
-        # discipline as connected_components.  persist, NOT
-        # localCheckpoint (round-14 fix): a checkpoint ERASES the hash
-        # partitioning from the planner (the random_walks gotcha), so
-        # every iteration's contribution join would re-shuffle the full
-        # edge list; the persisted repartition node stays visible and
-        # only the |V|-row rank table moves per round — one |E| shuffle
-        # total.  The cache is released in-call after the final
-        # checkpoint materializes every round, so no CacheManager entry
-        # outlives the call and bench reps can never reuse it.
-        und = und.repartition(n_part, "x").persist()
+    # cut the lineage once: every iteration re-references the edge list
+    # and degree table, and without this the (possibly expensive)
+    # upstream pair-generation plan is re-executed per reference and
+    # the composed plan grows superlinearly
+    with (
+        small_intermediate_coalesce(edges.sparkSession),
+        persisted(und.repartition(n_part, "x")) as und,
+    ):
         deg = und.groupBy("x").agg(F.count("*").alias("deg")).localCheckpoint(
             eager=True
         )
@@ -2747,7 +2639,6 @@ def pagerank(
                 ),
             )
         ranks = ranks.localCheckpoint(eager=True)
-        und.unpersist(blocking=False)
     return ranks.select(
         F.col("x").alias("id"),
         F.col("deg").cast("bigint").alias("degree"),
@@ -2841,22 +2732,20 @@ def hits(
     Returns (node_type 'hub'|'auth', id, score) with score =
     units / scale.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     S = int(scale)
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        # store the edge list hash-partitioned on each round's join key
-        # (src for the auth step, dst for the hub step) so only |V|-row
-        # score tables move per round.  persist, NOT localCheckpoint
-        # (round-14, cf. pagerank): the checkpoint erased the
-        # partitioning and every half-round re-shuffled the edges.
-        # Released in-call below.
-        e_src = edges.select(src_col, dst_col).repartition(
-            n_part, src_col
-        ).persist()
-        e_dst = e_src.repartition(n_part, dst_col).persist()
+    # the edge list stored hash-partitioned on each round's join key
+    # (src for the auth step, dst for the hub step)
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(
+            edges.select(src_col, dst_col).repartition(n_part, src_col)
+        ) as e_src,
+        persisted(e_src.repartition(n_part, dst_col)) as e_dst,
+    ):
         hubs = e_src.select(F.col(src_col).alias("id")).distinct().select(
             "id", F.lit(S).cast("bigint").alias("u")
         ).localCheckpoint(eager=True)
@@ -2898,8 +2787,6 @@ def hits(
                 )
                 .localCheckpoint(eager=True)
             )
-        e_src.unpersist(blocking=False)
-        e_dst.unpersist(blocking=False)
     out = hubs.select(
         F.lit("hub").alias("node_type"),
         F.col("id").cast("bigint").alias("id"),
@@ -2994,24 +2881,17 @@ def bfs_distances(
     Returns (id, dist) for every node within ``max_hops`` of a seed
     (seeds at dist 0); unreached nodes are absent.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            # persist, NOT localCheckpoint (round-14, cf. pagerank):
-            # keeps the repartition visible so each hop's frontier join
-            # leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "x")
-            .persist()
-        )
+    und = edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y")).union(
+        edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y"))
+    )
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(und.repartition(n_part, "x")) as und,
+    ):
         dist = (
             seeds.select(F.col(seed_col).alias("id"))
             .distinct()
@@ -3034,7 +2914,6 @@ def bfs_distances(
             )
             dist = dist.unionByName(nxt).localCheckpoint(eager=True)
             frontier = dist.filter(F.col("dist") == hop)
-        und.unpersist(blocking=False)
     return dist
 
 
@@ -3109,23 +2988,19 @@ def sssp_bounded(
     a silent divergence (r11 ADVICE).  A bounded scalar ``min(w)``
     check rejects such inputs up front.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        e = (
-            edges.select(
-                F.col(u_col).alias("u"),
-                F.col(v_col).alias("v"),
-                F.col(w_col).cast("bigint").alias("w"),
-            )
-            # persist, NOT localCheckpoint (round-14, cf. pagerank):
-            # keeps the repartition visible so each relaxation round's
-            # join leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "u")
-            .persist()
-        )
+    e = edges.select(
+        F.col(u_col).alias("u"),
+        F.col(v_col).alias("v"),
+        F.col(w_col).cast("bigint").alias("w"),
+    )
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(e.repartition(n_part, "u")) as e,
+    ):
         min_w = e.agg(F.min("w").alias("m")).collect()[0]["m"]
         if min_w is not None and min_w < 1:
             raise ValueError(
@@ -3171,7 +3046,6 @@ def sssp_bounded(
             dist = new
             if frontier.count() == 0:
                 break
-        e.unpersist(blocking=False)
         return dist
 
 
@@ -3225,28 +3099,20 @@ def sp_counting(
     Returns (id, dist, sigma) for every node within ``max_hops``
     (source at dist 0 with sigma 1).
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            .distinct()
-            # persist, NOT localCheckpoint (round-14): the checkpoint
-            # erased the repartition from the planner, so every level's
-            # frontier join re-shuffled the full edge list; the cached
-            # repartition node keeps und stationary and only the
-            # frontier moves per level.  Released in-call below.
-            .repartition(n_part, "x")
-            .persist()
-        )
+    und = (
+        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
+        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
+        .distinct()
+    )
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(und.repartition(n_part, "x")) as und,
+    ):
         done = spark.createDataFrame(
             [(int(source), 0, 1)], "id bigint, dist int, sigma bigint"
         ).select(
@@ -3285,7 +3151,6 @@ def sp_counting(
             done = done.unionByName(nxt)
             frontier = nxt
         done = done.localCheckpoint(eager=True)
-        und.unpersist(blocking=False)
         return done
 
 
@@ -3368,26 +3233,20 @@ def betweenness_contrib(
 
     Returns (id, dist, delta_units) for every reached node.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            .distinct()
-            # persist, NOT localCheckpoint (round-14, cf. sp_counting):
-            # keeps the repartition visible so the per-level frontier
-            # join leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "x")
-            .persist()
-        )
+    und = (
+        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
+        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
+        .distinct()
+    )
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(und.repartition(n_part, "x")) as und,
+    ):
         done = spark.createDataFrame(
             [(int(source), 0, 1)], "id bigint, dist int, sigma bigint"
         ).select(
@@ -3444,76 +3303,72 @@ def betweenness_contrib(
                 "sigma_v",
                 "sigma_w",
             )
-            # persist (round-14): the v-hash partitioning stays visible,
-            # so each backward round — a broadcastable per-level join on
-            # w followed by groupBy(v) — aggregates in place with no
-            # exchange of the DAG.  Released in-call below.
-            .repartition(n_part, "v")
-            .persist()
         )
-        delta = (
-            done.filter(F.col("dist") == lmax)
-            .select(
-                "id", "dist", F.lit(0).cast(dec).alias("delta_units")
-            )
-            .localCheckpoint(eager=False)
-        )
-        level_delta = delta
-        # the backward sweep is a FIXED linear chain once lmax is known
-        # (level h depends only on level h+1), so the rounds stay lazy
-        # (each level's checkpoint persists on first compute, serving
-        # both its union arm and the next round) and the single eager
-        # checkpoint after the loop executes the whole sweep in one
-        # job — it must materialize before und/dag unpersist or the
-        # returned plan would recompute them per level (round 15)
-        for h in range(int(lmax) - 1, -1, -1):
-            contrib = (
-                dag.filter(F.col("dist_v") == h)
-                .join(
-                    level_delta.select(
-                        F.col("id").alias("w"),
-                        F.col("delta_units").alias("dw"),
-                    ),
-                    on="w",
-                )
+        # hashed on v: each backward round (a broadcastable per-level
+        # join on w, then groupBy(v)) aggregates in place with no
+        # exchange of the DAG
+        with persisted(dag.repartition(n_part, "v")) as dag:
+            delta = (
+                done.filter(F.col("dist") == lmax)
                 .select(
-                    "v",
-                    F.round(
-                        (
-                            F.col("sigma_v").cast("double")
-                            / F.col("sigma_w").cast("double")
-                        )
-                        * (
-                            F.lit(float(unit))
-                            + F.col("dw").cast("double")
-                        )
-                    ).cast(dec).alias("cu"),
-                )
-                .groupBy("v")
-                .agg(F.sum("cu").cast(dec).alias("delta_units"))
-            )
-            lvl = (
-                done.filter(F.col("dist") == h)
-                .select("id", "dist")
-                .join(
-                    contrib.withColumnRenamed("v", "id"),
-                    on="id",
-                    how="left",
-                )
-                .select(
-                    "id",
-                    "dist",
-                    F.coalesce(
-                        F.col("delta_units"), F.lit(0).cast(dec)
-                    ).alias("delta_units"),
+                    "id", "dist", F.lit(0).cast(dec).alias("delta_units")
                 )
                 .localCheckpoint(eager=False)
             )
-            delta = delta.unionByName(lvl)
-            level_delta = lvl
-        delta = delta.localCheckpoint(eager=True)
-        und.unpersist(blocking=False)
-        dag.unpersist(blocking=False)
+            level_delta = delta
+            # the backward sweep is a FIXED linear chain once lmax is known
+            # (level h depends only on level h+1), so the rounds stay lazy
+            # (each level's checkpoint persists on first compute, serving
+            # both its union arm and the next round) and the single eager
+            # checkpoint after the loop executes the whole sweep in one
+            # job — it must materialize before und/dag unpersist or the
+            # returned plan would recompute them per level (round 15)
+            for h in range(int(lmax) - 1, -1, -1):
+                contrib = (
+                    dag.filter(F.col("dist_v") == h)
+                    .join(
+                        level_delta.select(
+                            F.col("id").alias("w"),
+                            F.col("delta_units").alias("dw"),
+                        ),
+                        on="w",
+                    )
+                    .select(
+                        "v",
+                        F.round(
+                            (
+                                F.col("sigma_v").cast("double")
+                                / F.col("sigma_w").cast("double")
+                            )
+                            * (
+                                F.lit(float(unit))
+                                + F.col("dw").cast("double")
+                            )
+                        ).cast(dec).alias("cu"),
+                    )
+                    .groupBy("v")
+                    .agg(F.sum("cu").cast(dec).alias("delta_units"))
+                )
+                lvl = (
+                    done.filter(F.col("dist") == h)
+                    .select("id", "dist")
+                    .join(
+                        contrib.withColumnRenamed("v", "id"),
+                        on="id",
+                        how="left",
+                    )
+                    .select(
+                        "id",
+                        "dist",
+                        F.coalesce(
+                            F.col("delta_units"), F.lit(0).cast(dec)
+                        ).alias("delta_units"),
+                    )
+                    .localCheckpoint(eager=False)
+                )
+                delta = delta.unionByName(lvl)
+                level_delta = lvl
+            delta = delta.localCheckpoint(eager=True)
         return delta
 
 
@@ -3629,37 +3484,24 @@ def random_walks(
 
     Returns (seed, step, node): step 0 is the seed itself.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     M = 2147483647
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            .distinct()
-        )
-        w_adj = Window.partitionBy("x").orderBy("y")
-        # persist (not checkpoint) so the x-hash partitioning stays
-        # visible to the planner: each step's neighbor join then
-        # shuffles only the walk FRONTIER, never the adjacency —
-        # measured 117s -> much less at sf1 where |E| >> |frontier|.
-        # All steps materialize eagerly below, so the unpersist before
-        # return cannot starve a lazy consumer.
-        adj = (
-            und.select(
-                "x",
-                "y",
-                (F.row_number().over(w_adj) - 1).alias("rank"),
-            )
-            .repartition(n_part, "x")
-            .persist()
-        )
+    und = (
+        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
+        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
+        .distinct()
+    )
+    w_adj = Window.partitionBy("x").orderBy("y")
+    adj = und.select("x", "y", (F.row_number().over(w_adj) - 1).alias("rank"))
+    # each step's neighbor join shuffles only the walk frontier, never
+    # the adjacency; every step materializes eagerly below
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(adj.repartition(n_part, "x")) as adj,
+    ):
         degs = adj.groupBy("x").agg(
             F.count("*").cast("bigint").alias("deg")
         ).localCheckpoint(eager=True)
@@ -3701,7 +3543,6 @@ def random_walks(
                 )
             )
             walk = stepped
-        adj.unpersist(False)
         return out
 
 
@@ -3889,37 +3730,26 @@ def sppmi_embed(
 
     Returns (node, vu) — the embedding in ``unit`` units.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
-    with small_intermediate_coalesce(spark):
-        coo = skipgram_cooc(
-            edges, length=length, window=window, a_col=a_col, b_col=b_col
-        )
-        m = (
-            coo.select(
-                "u",
-                "v",
-                F.round(
-                    F.greatest(F.col("pmi"), F.lit(0.0))
-                    * F.lit(float(unit))
-                )
-                .cast("bigint")
-                .alias("su"),
-            )
-            .filter(F.col("su") > 0)
-            .repartition(n_part, "v")
-            # persist, NOT localCheckpoint: checkpoint erases the hash
-            # partitioning from the planner and the loop would
-            # re-shuffle the whole matrix every round; persist keeps
-            # the repartition node visible so only the N-row iterate
-            # shuffles per round (the random_walks precedent).
-            # Unpersisted before return once every round has
-            # materialized eagerly.
-            .persist()
-        )
+    coo = skipgram_cooc(
+        edges, length=length, window=window, a_col=a_col, b_col=b_col
+    )
+    m = coo.select(
+        "u",
+        "v",
+        F.round(F.greatest(F.col("pmi"), F.lit(0.0)) * F.lit(float(unit)))
+        .cast("bigint")
+        .alias("su"),
+    ).filter(F.col("su") > 0)
+    # only the N-row iterate shuffles per round
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(m.repartition(n_part, "v")) as m,
+    ):
         state = (
             m.select(F.col("u").alias("node"))
             .distinct()
@@ -3967,7 +3797,6 @@ def sppmi_embed(
                     f"END"
                 ).alias("vu"),
             )
-        m.unpersist()
         return state
 
 
@@ -4056,23 +3885,19 @@ def temporal_reach(
     Returns (node, arrival) for reachable nodes; the source reports
     arrival 0.
     """
-    from openseize_spark.session import small_intermediate_coalesce
+    from openseize_spark.session import persisted, small_intermediate_coalesce
 
     spark = edges.sparkSession
     n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        e = (
-            edges.select(
-                F.col(u_col).alias("u"),
-                F.col(v_col).alias("v"),
-                F.col(t_col).cast("bigint").alias("t"),
-            )
-            # persist, NOT localCheckpoint (round-14, cf. pagerank):
-            # keeps the repartition visible so each relaxation round's
-            # join leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "u")
-            .persist()
-        )
+    e = edges.select(
+        F.col(u_col).alias("u"),
+        F.col(v_col).alias("v"),
+        F.col(t_col).cast("bigint").alias("t"),
+    )
+    with (
+        small_intermediate_coalesce(spark),
+        persisted(e.repartition(n_part, "u")) as e,
+    ):
         arr = spark.createDataFrame(
             [(int(source), 0)], "node bigint, arrival bigint"
         ).localCheckpoint(eager=True)
@@ -4113,7 +3938,6 @@ def temporal_reach(
             ).select("node", "arrival")
             arr = merged.select("node", "arrival")
             if frontier.count() == 0:
-                e.unpersist(blocking=False)
                 break
         else:
             raise RuntimeError(
@@ -4759,16 +4583,6 @@ def _winnow_ctes(k: int, w: int) -> str:
         )"""
 
 
-def winnow_fingerprints_oracle_sql(k: int = 5, w: int = 4) -> str:
-    """DuckDB replay of ``winnow_fingerprints``."""
-    return _winnow_ctes(k, w) + f"""
-        SELECT doc_id,
-               CAST({_POS_BASE} - mk % {_POS_BASE} AS BIGINT) AS pos,
-               CAST(mk // {_POS_BASE} AS BIGINT) AS fp
-        FROM sel
-    """
-
-
 def winnow_pairs_oracle_sql(
     k: int = 5, w: int = 4, max_df: int = 20, min_shared: int = 3
 ) -> str:
@@ -4811,45 +4625,43 @@ def dag_layers(edges: DataFrame, rounds: int = 8) -> DataFrame:
     histogram (lv, n_docs).
 
     The edge list is STATIONARY across all ``rounds`` joins, so it is
-    repartitioned on the join key and persisted (round-14: the
-    pagerank/temporal_reach discipline — a caller's localCheckpoint
-    ERASES partitioning from the planner, so every round was
-    re-shuffling the full edge list; the persisted repartition node
-    stays visible and only the |V|-row level table moves per round).
-    The rounds are lazy (zero in-call jobs), so the cache is released
-    with the returned result, not in-call.  A consumer that folds the
-    result into a larger lazy plan and drops the intermediate at
-    return should anchor it with ``tie_lifetime`` (see
-    release_cache_with's composition nuance), or the edge cache can
-    release before the outer action runs and the rounds recompute the
-    edge plan per join.
+    repartitioned on the join key and persisted: only the |V|-row level
+    table moves per round.  The rounds run in-call: under AQE each
+    round's ``localCheckpoint(eager=False)`` executes its shuffle stages
+    when it is called.  One eager checkpoint of the small histogram
+    finishes the work before the edge cache is released (the
+    :func:`pagerank` shape), so the returned plan reads stored blocks
+    and no cache outlives the call.
     """
+    from openseize_spark.session import persisted
+
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    edges = edges.repartition(n_part, "a").persist()
-    nodes = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .distinct()
-    )
-    lv = nodes.select("v", F.lit(0).cast("bigint").alias("lv"))
-    for _ in range(rounds):
-        # lv feeds BOTH the carry arm and the bump join — checkpoint
-        # each round or the plan doubles per round (2^rounds exchanges;
-        # the pca_power_iteration lesson)
-        lv = lv.localCheckpoint(eager=False)
-        bumped = (
-            edges.join(lv, edges.a == lv.v)
-            .select(F.col("b").alias("v"), (F.col("lv") + 1).alias("lv"))
+    with persisted(edges.repartition(n_part, "a")) as edges:
+        nodes = (
+            edges.select(F.col("a").alias("v"))
+            .unionByName(edges.select(F.col("b").alias("v")))
+            .distinct()
         )
-        lv = (
-            lv.unionByName(bumped)
-            .groupBy("v")
-            .agg(F.max("lv").alias("lv"))
+        lv = nodes.select("v", F.lit(0).cast("bigint").alias("lv"))
+        for _ in range(rounds):
+            # lv feeds BOTH the carry arm and the bump join — checkpoint
+            # each round or the plan doubles per round (2^rounds
+            # exchanges; the pca_power_iteration lesson)
+            lv = lv.localCheckpoint(eager=False)
+            bumped = (
+                edges.join(lv, edges.a == lv.v)
+                .select(F.col("b").alias("v"), (F.col("lv") + 1).alias("lv"))
+            )
+            lv = (
+                lv.unionByName(bumped)
+                .groupBy("v")
+                .agg(F.max("lv").alias("lv"))
+            )
+        return (
+            lv.groupBy("lv")
+            .agg(F.count("*").cast("bigint").alias("n_docs"))
+            .localCheckpoint(eager=True)
         )
-    result = lv.groupBy("lv").agg(
-        F.count("*").cast("bigint").alias("n_docs")
-    )
-    return release_cache_with(result, edges)
 
 
 def dag_layers_oracle_sql(

@@ -792,11 +792,11 @@ def kmeans_fit(
     drops out (standard Lloyd's behavior, mirrored by the oracle's
     inner join).
     """
+    from openseize_spark.session import persisted
+
     e = emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
-    ).persist()
-    seed = e.orderBy("id").limit(k).collect()
-    cents = [(i, list(r.v)) for i, r in enumerate(seed)]
+    )
 
     def _assign(cents):
         cells = np.array([cid for cid, _ in cents], dtype=np.int64)
@@ -816,35 +816,37 @@ def kmeans_fit(
 
         return e.select("id", "v", _cell("v").alias("cell_id"))
 
-    for _ in range(n_iter):
-        a = _assign(cents)
-        # collect the k*dim (cell, pos, avg) rows straight from the
-        # first-level aggregate and assemble vectors driver-side: the
-        # former second groupBy (collect_list + array_sort per cell)
-        # added one exchange per iteration purely to reshape k*dim rows
-        # the driver was about to collect anyway (round 15; the avg
-        # values are the identical partial/final aggregate either way)
-        newc = (
-            a.select("cell_id", F.posexplode("v").alias("pos", "val"))
-            .groupBy("cell_id", "pos")
-            .agg(F.avg("val").alias("val"))
-        )
-        bycell: dict[int, dict[int, float]] = {}
-        for r in newc.collect():
-            bycell.setdefault(r.cell_id, {})[r.pos] = r.val
-        cents = sorted(
-            (cid, [d[p] for p in sorted(d)]) for cid, d in bycell.items()
-        )
+    with persisted(e):
+        seed = e.orderBy("id").limit(k).collect()
+        cents = [(i, list(r.v)) for i, r in enumerate(seed)]
+        for _ in range(n_iter):
+            a = _assign(cents)
+            # collect the k*dim (cell, pos, avg) rows straight from the
+            # first-level aggregate and assemble vectors driver-side: the
+            # former second groupBy (collect_list + array_sort per cell)
+            # added one exchange per iteration purely to reshape k*dim rows
+            # the driver was about to collect anyway (round 15; the avg
+            # values are the identical partial/final aggregate either way)
+            newc = (
+                a.select("cell_id", F.posexplode("v").alias("pos", "val"))
+                .groupBy("cell_id", "pos")
+                .agg(F.avg("val").alias("val"))
+            )
+            bycell: dict[int, dict[int, float]] = {}
+            for r in newc.collect():
+                bycell.setdefault(r.cell_id, {})[r.pos] = r.val
+            cents = sorted(
+                (cid, [d[p] for p in sorted(d)]) for cid, d in bycell.items()
+            )
 
     spark = emb.sparkSession
     cdf = spark.createDataFrame(
         [(cid, vec) for cid, vec in cents], "cell_id int, cvec array<double>"
     )
-    assignments = _assign(cents).select("id", "cell_id")
-    # cache blocks served the n_iter re-averaging jobs; the final lazy
+    # the cache served the n_iter re-averaging jobs; the final lazy
     # assignment recomputes from source (one scan) rather than pinning
     # executor memory for the caller's lifetime
-    e.unpersist(blocking=False)
+    assignments = _assign(cents).select("id", "cell_id")
     return assignments, cdf
 
 

@@ -31,17 +31,6 @@ def token_count(col):
     )
 
 
-def bpe_ish_token_count(col):
-    """BPE-ish upper bound: word-piece regex split (letters / digits /
-    punctuation runs), ~GPT-2 pre-tokenizer shape."""
-    return F.size(
-        F.filter(
-            F.split(col, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda s: F.length(F.trim(s)) > 0,
-        )
-    ).cast("long")
-
-
 def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-doc quality features: n_chars, n_tokens, avg token length,
     punctuation ratio, digit ratio, uppercase ratio, stopword score.

@@ -5,14 +5,11 @@ one segment every `stride = nfft - overlap*nfft` samples, dropping the
 trailing partial segment (reference: core/numerical.py:799-849, count
 formula :940-943).
 
-Spark-native formulation: a sample at index t belongs to segments
-``seg ∈ [max(0, ceil((t-nfft+1)/stride)), floor(t/stride)]`` — generated
-with sequence+explode (pure codegen, duckdb-oracle-checkable).  Tumbling
-(overlap=0) degenerates to ``seg = t div nfft`` with no row amplification.
-
-For large nfft/stride ratios the explode amplifies rows by nfft/stride;
-the spectral kernels therefore also have a block-based path
-(operators/spectral.py) that forms segments inside Arrow batches instead.
+Spark-native formulation: tumbling segments (overlap=0) are
+``seg = t div nfft`` with no row amplification; sliding SUM aggregates
+difference one running sum at stride boundaries (``sliding_agg_prefix``).
+The spectral kernels form overlapping segments inside Arrow batches
+(the block path in operators/spectral.py).
 """
 
 from __future__ import annotations
@@ -37,35 +34,6 @@ def segment_tumbling(sf: SignalFrame, nfft: int) -> DataFrame:
     )
 
 
-def segment_sliding(sf: SignalFrame, nfft: int, stride: int) -> DataFrame:
-    """Overlapping segments via membership explode.
-
-    seg s covers samples [s*stride, s*stride + nfft).  Sample t is in
-    segs ceil((t-nfft+1)/stride) .. t div stride (clamped at 0).
-    Row amplification = nfft/stride.
-    """
-    # ceil((t-nfft+1)/stride) computed on non-negative operands only, so
-    # truncating vs flooring integer division agree across engines
-    lo = F.expr(f"(greatest(t - {nfft} + 1, 0) + {stride} - 1) div {stride}")
-    hi = F.expr(f"t div {stride}")
-    return (
-        sf.df.select(
-            "recording_id",
-            "channel",
-            "t",
-            "v",
-            F.explode(F.sequence(lo, hi)).alias("seg"),
-        )
-        .select(
-            "recording_id",
-            "channel",
-            F.col("seg").cast("bigint").alias("seg"),
-            (F.col("t") - F.col("seg") * stride).cast("bigint").alias("offset"),
-            "v",
-        )
-    )
-
-
 def sliding_agg_prefix(
     sf: SignalFrame, nfft: int, stride: int, value=None, agg_name: str = "energy"
 ) -> DataFrame:
@@ -83,8 +51,8 @@ def sliding_agg_prefix(
     incomplete trailing segments fall out via the NULL lead.  Equals the
     explode+groupBy plan exactly when `value` sums without cancellation
     error (the driver signal's v*v are dyadic rationals, so sums are
-    exact in any order); for general data prefer the explode form, which
-    has no O(n)-magnitude intermediate.
+    exact in any order); for general data prefer a per-segment sum,
+    which has no O(n)-magnitude intermediate.
 
     reference: the welch segment-count/stride semantics
     (core/numerical.py:799-849); this is the sum-aggregate specialization.
@@ -107,18 +75,3 @@ def sliding_agg_prefix(
         )
     )
     return df
-
-
-def complete_segments(segments: DataFrame, nfft: int) -> DataFrame:
-    """Keep only complete segments (drop trailing partial — reference
-    semantics, core/numerical.py:901-904)."""
-    counts = segments.groupBy("recording_id", "channel", "seg").agg(
-        F.count("*").alias("_cnt")
-    )
-    return (
-        segments.join(
-            counts.filter(F.col("_cnt") == nfft).drop("_cnt"),
-            on=["recording_id", "channel", "seg"],
-            how="left_semi",
-        )
-    )

@@ -44,9 +44,3 @@ def standardize(sf: SignalFrame, ignore_nan: bool = True) -> SignalFrame:
     return sf.with_df(
         sf.df.withColumn("v", (F.col("v") - mean) / std)
     )
-
-
-def demean(sf: SignalFrame) -> SignalFrame:
-    """Subtract per-channel mean (constant detrend over the whole stream)."""
-    w = Window.partitionBy("recording_id", "channel")
-    return sf.with_df(sf.df.withColumn("v", F.col("v") - F.avg("v").over(w)))

@@ -82,6 +82,27 @@ def worker_daemon_conf(master: str) -> dict[str, str]:
 
 
 @contextmanager
+def persisted(df):
+    """Persist ``df`` for the body of a ``with`` block; release it on exit,
+    also when the body raises.
+
+    For iterative algorithms that re-join one stationary relation every
+    round: callers repartition it on the join key first.  A persisted
+    repartition node stays visible to the planner, so each round shuffles
+    only the small evolving side; ``localCheckpoint`` would hide the hash
+    partitioning and every round would re-shuffle the whole relation
+    (round 14: random_walks at sf1 117 s -> 40 s).  The body must run the
+    actions that read the cache (eager checkpoints, counts, collects):
+    no cache outlives the call that made it.
+    """
+    df = df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist(blocking=False)
+
+
+@contextmanager
 def small_intermediate_coalesce(spark):
     """Scoped AQE tuning for iterative algorithms whose per-round
     intermediates shrink to hundreds of rows (pagerank, connected

@@ -1,0 +1,31 @@
+"""``tools/plan_neutrality.py`` masks what varies between runs of one
+commit and keeps what describes the plan's shape."""
+
+from __future__ import annotations
+
+import importlib.util
+import pathlib
+
+_PATH = pathlib.Path(__file__).resolve().parent.parent / "tools" / "plan_neutrality.py"
+_spec = importlib.util.spec_from_file_location("plan_neutrality", _PATH)
+plan_neutrality = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(plan_neutrality)
+normalize = plan_neutrality.normalize
+
+
+def test_codegen_ids_are_masked():
+    a = "(3) HashAggregate [codegen id : 2]\nInput [2]: [a#12L, b#13L]"
+    b = "(3) HashAggregate [codegen id : 7]\nInput [2]: [a#40L, b#41L]"
+    assert normalize(a) == normalize(b)
+    assert "[codegen id : N]" in normalize(a)
+
+
+def test_shape_differences_survive():
+    a = "(3) HashAggregate [codegen id : 2]\nKeys [1]: [a#12L]"
+    b = "(3) SortAggregate [codegen id : 2]\nKeys [1]: [a#12L]"
+    assert normalize(a) != normalize(b)
+    # operator numbers are plan shape, not run-to-run noise
+    assert normalize("(3) Project") != normalize("(4) Project")
+    assert normalize("hashpartitioning(a#1, 4)") != normalize(
+        "hashpartitioning(a#1, 8)"
+    )

@@ -1,16 +1,13 @@
 """Print a normalized physical-plan digest for named registry queries.
 
 Purpose: prove a change is PLAN-NEUTRAL — run this tool in two
-checkouts (e.g. pre- and post-merge) and diff the output lines.  The
-round-10 use case is the refcounted cache-release landing: releasing a
-persisted DataFrame after its result is consumed must not change the
-executed plan shape of `pac`, `pac_surrogates`, `er_pipeline`,
-`blocking_yield`, or `cluster_cohesion`.
+checkouts (e.g. pre- and post-merge) and diff the output lines.
 
-Normalization: expression ids (`#123`), `plan_id=N`, `id=#N`, and
-cached-RDD numbers differ run-to-run without changing the plan shape,
-so they are masked before hashing.  Everything else — node order,
-partitioning arguments, pushed filters, ReadSchema — stays verbatim.
+Normalization: expression ids (`#123`), `plan_id=N`, `id=#N`,
+cached-RDD numbers and whole-stage codegen ids (`[codegen id : N]`)
+differ run-to-run without changing the plan shape, so they are masked
+before hashing.  Everything else — node order, partitioning arguments,
+pushed filters, ReadSchema — stays verbatim.
 
 Usage: python tools/plan_neutrality.py [sf_dir] query [query ...]
 """
@@ -30,6 +27,10 @@ def normalize(plan: str) -> str:
     # every RDD the session ever created, so they drift with unrelated
     # session history without changing the plan shape
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    # the formatted plan of an already-executed AQE subtree (a cached
+    # or checkpointed intermediate) numbers its codegen stages in stage
+    # completion order, which varies between runs of one commit
+    plan = re.sub(r"\[codegen id : \d+\]", "[codegen id : N]", plan)
     return plan
 
 
