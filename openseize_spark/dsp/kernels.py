@@ -88,27 +88,6 @@ def sosfilt(sos: np.ndarray, x: np.ndarray, zi: np.ndarray | None = None):
     return y, z
 
 
-def sos_state_transition(sos: np.ndarray) -> np.ndarray:
-    """One-sample zero-input state-transition matrix T of the full SOS
-    cascade: z(t+1) = T @ z(t) + (input terms), z flattened (nsec*2,).
-
-    The DF2T recurrence is linear in (state, input), so T is obtained
-    exactly by propagating each unit basis state through one zero input
-    sample.  Used by the parallel-in-time block IIR (operators/iir.py):
-    over an n-sample block, z_out = T^n @ z_in + c where c is the block's
-    zero-state response."""
-    sos = np.asarray(sos, dtype=np.float64)
-    d = sos.shape[0] * 2
-    T = np.empty((d, d))
-    zero = np.zeros(1)
-    for j in range(d):
-        e = np.zeros(d)
-        e[j] = 1.0
-        _, zf = sosfilt(sos, zero, e.reshape(-1, 2))
-        T[:, j] = zf.ravel()
-    return T
-
-
 def sosfiltfilt(sos: np.ndarray, x: np.ndarray) -> np.ndarray:
     """Zero-phase forward-backward IIR with padtype=None — the only mode
     the reference matches exactly when chunked

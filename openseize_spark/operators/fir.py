@@ -24,10 +24,7 @@ matching the reference's mode trim rules (core/numerical.py:76-155).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -42,19 +39,22 @@ def apply_fir_sql(sf: SignalFrame, spec: FirSpec | np.ndarray, mode: str = "same
     taps = spec.taps if isinstance(spec, FirSpec) else np.asarray(spec, dtype=float)
     L = len(taps)
     c = (L - 1) // 2  # 'same' alignment: y[t] = sum_k h[k] x[t - k + c]
+    df = sf.df.withColumn("v", _window_sum([(k - c, taps[k]) for k in range(L)]))
+    return _trim_mode(sf.with_df(df), L, mode)
+
+
+def _window_sum(pairs):
+    """sum of tap * x[t - shift] over (shift, tap) pairs, in order, as
+    lag/lead terms over a per-channel window (zero past the edges)."""
     w = Window.partitionBy("recording_id", "channel").orderBy("t")
-    terms = []
-    for k in range(L):
-        shift = k - c  # x[t - shift]
+    acc = None
+    for shift, tap in pairs:
         col = F.col("v") if shift == 0 else F.lag("v", shift).over(w) if shift > 0 else F.lead(
             "v", -shift
         ).over(w)
-        terms.append(F.coalesce(col, F.lit(0.0)) * F.lit(float(taps[k])))
-    acc = terms[0]
-    for tm in terms[1:]:
-        acc = acc + tm
-    df = sf.df.withColumn("v", acc)
-    return _trim_mode(sf.with_df(df), L, mode)
+        term = F.coalesce(col, F.lit(0.0)) * F.lit(float(tap))
+        acc = term if acc is None else acc + term
+    return acc
 
 
 def apply_fir_blocks(
@@ -72,42 +72,20 @@ def apply_fir_blocks(
     halo_right = c
 
     bdf = B.halo_blocks(sf.df, block_size, halo_left, halo_right)
-    schema = "recording_id string, channel int, t0 long, vs array<double>"
 
-    def _conv(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                left = np.asarray(row.left, dtype=np.float64)
-                mid = np.asarray(row.vs, dtype=np.float64)
-                right = np.asarray(row.right, dtype=np.float64)
-                # zero-pad missing halo at stream edges => 'same' conv semantics
-                lpad = halo_left - len(left)
-                rpad = halo_right - len(right)
-                x = np.concatenate(
-                    [np.zeros(max(lpad, 0)), left, mid, right, np.zeros(max(rpad, 0))]
-                )
-                y = kernels.convolve_full(x, taps)
-                # y index of output sample t (block local i): full-conv output
-                # for padded input starts at x[0]*h[0]; y[same][i] = yfull[i + L-1 - ?]
-                # With left context exactly L-1-c and 'same' alignment:
-                # y_t = sum_k h[k] x[t-k+c]  => yfull index = (local pos of t) + L-1-c + c = pos + L-1
-                start = halo_left + c  # == L-1
-                rows.append(
-                    {
-                        "recording_id": row.recording_id,
-                        "channel": row.channel,
-                        "t0": row.t0,
-                        "vs": y[start : start + len(mid)],
-                    }
-                )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {"recording_id": [], "channel": [], "t0": [], "vs": []}
-            )
+    def _conv(row):
+        # zero-pad missing halo at stream edges => 'same' conv semantics
+        x = np.concatenate(
+            [np.zeros(halo_left - len(row.left)), row.left, row.vs, row.right,
+             np.zeros(halo_right - len(row.right))]
+        )
+        y = kernels.convolve_full(x, taps)
+        # y_t = sum_k h[k] x[t-k+c] with left context L-1-c: the full-conv
+        # index of block position i is i + (L-1-c) + c = i + L-1
+        return {"t0": [row.t0], "vs": [y[L - 1 : L - 1 + len(row.vs)]]}
 
-    out = bdf.mapInPandas(_conv, schema)
-    df = B.from_blocks(out)
-    return _trim_mode(sf.with_df(df), L, mode)
+    out = B.map_blocks(bdf, _conv, B.SAMPLE_BLOCKS)
+    return _trim_mode(sf.with_df(B.from_blocks(out)), L, mode)
 
 
 def _trim_mode(sf: SignalFrame, L: int, mode: str) -> SignalFrame:
@@ -143,23 +121,8 @@ def hilbert_analytic(sf: SignalFrame, spec: FirSpec) -> DataFrame:
     L = len(taps)
     if L <= 192:
         c = (L - 1) // 2
-        w = Window.partitionBy("recording_id", "channel").orderBy("t")
-        terms = []
-        for k in range(L):
-            if abs(taps[k]) == 0.0:  # type-III Hilbert: half the taps are 0
-                continue
-            shift = k - c
-            col = (
-                F.col("v")
-                if shift == 0
-                else F.lag("v", shift).over(w)
-                if shift > 0
-                else F.lead("v", -shift).over(w)
-            )
-            terms.append(F.coalesce(col, F.lit(0.0)) * F.lit(float(taps[k])))
-        im = terms[0]
-        for tm in terms[1:]:
-            im = im + tm
+        # type-III Hilbert: half the taps are 0
+        im = _window_sum([(k - c, taps[k]) for k in range(L) if abs(taps[k]) != 0.0])
         return sf.df.select(
             "recording_id", "channel", "t", F.col("v").alias("re"), im.alias("im")
         )

@@ -33,55 +33,46 @@ from openseize_spark.signal import SignalFrame
 _SCHEMA = "recording_id string, channel int, t long, v double"
 
 
-def sosfilt(sf: SignalFrame, spec: SosSpec | np.ndarray) -> SignalFrame:
-    """Causal second-order-section filter per channel
-    (reference: core/numerical.py:301-335)."""
-    sos = spec.sos if isinstance(spec, SosSpec) else np.asarray(spec, dtype=float)
+def _sos(spec: SosSpec | np.ndarray) -> np.ndarray:
+    return spec.sos if isinstance(spec, SosSpec) else np.asarray(spec, dtype=float)
+
+
+def _per_channel(sf: SignalFrame, run) -> SignalFrame:
+    """``run(x) -> y`` over each whole channel, sorted by t, as one
+    ``applyInPandas`` group per (recording_id, channel)."""
 
     def _f(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("t")
-        y, _ = kernels.sosfilt(sos, pdf["v"].to_numpy())
-        return pdf.assign(v=y)
+        return pdf.assign(v=run(pdf["v"].to_numpy()))
 
     return sf.with_df(sf.df.groupBy("recording_id", "channel").applyInPandas(_f, _SCHEMA))
+
+
+def sosfilt(sf: SignalFrame, spec: SosSpec | np.ndarray) -> SignalFrame:
+    """Causal second-order-section filter per channel
+    (reference: core/numerical.py:301-335)."""
+    sos = _sos(spec)
+    return _per_channel(sf, lambda x: kernels.sosfilt(sos, x)[0])
 
 
 def sosfiltfilt(sf: SignalFrame, spec: SosSpec | np.ndarray) -> SignalFrame:
     """Zero-phase forward-backward filter, padtype=None semantics — the
     only mode the reference reproduces exactly when chunked
     (reference: core/numerical.py:338-411)."""
-    sos = spec.sos if isinstance(spec, SosSpec) else np.asarray(spec, dtype=float)
-
-    def _f(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        y = kernels.sosfiltfilt(sos, pdf["v"].to_numpy())
-        return pdf.assign(v=y)
-
-    return sf.with_df(sf.df.groupBy("recording_id", "channel").applyInPandas(_f, _SCHEMA))
+    sos = _sos(spec)
+    return _per_channel(sf, lambda x: kernels.sosfiltfilt(sos, x))
 
 
 def lfilter(sf: SignalFrame, b: np.ndarray, a: np.ndarray) -> SignalFrame:
     """Causal transfer-function filter per channel
     (reference: core/numerical.py:414-446)."""
-
-    def _f(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        y, _ = kernels.lfilter(b, a, pdf["v"].to_numpy())
-        return pdf.assign(v=y)
-
-    return sf.with_df(sf.df.groupBy("recording_id", "channel").applyInPandas(_f, _SCHEMA))
+    return _per_channel(sf, lambda x: kernels.lfilter(b, a, x)[0])
 
 
 def filtfilt(sf: SignalFrame, b: np.ndarray, a: np.ndarray) -> SignalFrame:
     """Zero-phase ba-form filter, padtype=None semantics
     (reference: core/numerical.py:449-520)."""
-
-    def _f(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        y = kernels.filtfilt(b, a, pdf["v"].to_numpy())
-        return pdf.assign(v=y)
-
-    return sf.with_df(sf.df.groupBy("recording_id", "channel").applyInPandas(_f, _SCHEMA))
+    return _per_channel(sf, lambda x: kernels.filtfilt(b, a, x))
 
 
 def sosfilt_blocks(
@@ -95,8 +86,8 @@ def sosfilt_blocks(
 
     The DF2T recurrence is linear in (state, input), so over an n-sample
     block z_out = T^n @ z_in + c, where c is the block's zero-state final
-    state and T the one-sample zero-input transition
-    (dsp/kernels.sos_state_transition).  Three stages:
+    state and T the one-sample zero-input transition (``_state_transition``).
+    Three stages:
 
     1. map (parallel over blocks): zero-state filter, keep only the final
        state c per block — tiny (nsec*2 doubles) rows;
@@ -119,7 +110,7 @@ def sosfilt_blocks(
     Gustafsson-style convention kernels.sosfiltfilt uses), enabling the
     zero-phase two-pass variant ``sosfiltfilt_blocks``.
     """
-    sos = spec.sos if isinstance(spec, SosSpec) else np.asarray(spec, dtype=float)
+    sos = _sos(spec)
     ns = sos.shape[0]
 
     def filt(x, zflat):
@@ -127,9 +118,7 @@ def sosfilt_blocks(
         y, zf = kernels.sosfilt(sos, x, z)
         return y, zf.ravel()
 
-    T = kernels.sos_state_transition(sos)
-    zi_flat = None if zi_unit is None else np.asarray(zi_unit, dtype=np.float64).ravel()
-    return _blocks_state_scan(sf, block_size, filt, 2 * ns, T, zi_flat)
+    return _blocks_state_scan(sf, block_size, filt, 2 * ns, zi_unit)
 
 
 def _state_transition(filt, d: int) -> np.ndarray:
@@ -150,8 +139,7 @@ def _blocks_state_scan(
     block_size: int,
     filt,
     d: int,
-    T: np.ndarray,
-    zi_flat: np.ndarray | None,
+    zi_unit: np.ndarray | None,
 ) -> SignalFrame:
     """Shared 3-stage parallel-in-time engine (see sosfilt_blocks):
     zero-state filter per block -> per-channel affine state scan ->
@@ -166,38 +154,27 @@ def _blocks_state_scan(
     so the input is read twice.  (A localCheckpoint of the block table
     measures worse on the registry: the join then re-shuffles the
     ExistingRDD side — 6.3 s vs 3.1 s on sosfilt_blocks_full at sf0.1.)"""
+    T = _state_transition(filt, d)
+    zi_flat = None if zi_unit is None else np.asarray(zi_unit, dtype=np.float64).ravel()
     bdf = B.to_blocks(sf.df, block_size)
 
-    st_schema = (
+    def _zero_state(row):
+        x = row.vs
+        _, zf = filt(x, None)
+        return {
+            "block_id": [row.block_id],
+            "t0": [row.t0],
+            "n": [len(x)],
+            "c": [np.asarray(zf, dtype=np.float64).ravel()],
+            "x0": [float(x[0]) if len(x) else 0.0],
+        }
+
+    states = B.map_blocks(
+        bdf,
+        _zero_state,
         "recording_id string, channel int, block_id long, t0 long, n int, "
-        "c array<double>, x0 double"
+        "c array<double>, x0 double",
     )
-
-    def _zero_state(it):
-        for pdf in it:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                x = np.asarray(row.vs, dtype=np.float64)
-                _, zf = filt(x, None)
-                rows.append(
-                    {
-                        "recording_id": row.recording_id,
-                        "channel": row.channel,
-                        "block_id": row.block_id,
-                        "t0": row.t0,
-                        "n": len(x),
-                        "c": np.asarray(zf, dtype=np.float64).ravel(),
-                        "x0": float(x[0]) if len(x) else 0.0,
-                    }
-                )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {
-                    "recording_id": [], "channel": [], "block_id": [],
-                    "t0": [], "n": [], "c": [], "x0": [],
-                }
-            )
-
-    states = bdf.mapInPandas(_zero_state, st_schema)
 
     scan_schema = "recording_id string, channel int, block_id long, zin array<double>"
 
@@ -226,39 +203,22 @@ def _blocks_state_scan(
 
     zin = states.groupBy("recording_id", "channel").applyInPandas(_scan, scan_schema)
 
-    out_schema = "recording_id string, channel int, t0 long, vs array<double>"
     # zin is one tiny row per block (d+3 values vs block_size samples),
     # so it is ALWAYS the side to build from: the shuffle_hash hint pins
     # the hash build on zin — never a broadcast or sort of the block
     # arrays — and AQE may still upgrade the tiny zin side to a runtime
     # broadcast.  At block counts where zin itself is large (the 100-TB
     # path) the shuffled-hash join moves only the zin rows plus one
-    # pass of the checkpointed block table.
+    # pass of the block table.
     j = bdf.join(
         zin.hint("shuffle_hash"), on=["recording_id", "channel", "block_id"]
     )
 
-    def _seeded(it):
-        for pdf in it:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                y, _ = filt(
-                    np.asarray(row.vs, dtype=np.float64),
-                    np.asarray(row.zin, dtype=np.float64),
-                )
-                rows.append(
-                    {
-                        "recording_id": row.recording_id,
-                        "channel": row.channel,
-                        "t0": row.t0,
-                        "vs": y,
-                    }
-                )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {"recording_id": [], "channel": [], "t0": [], "vs": []}
-            )
+    def _seeded(row):
+        y, _ = filt(row.vs, np.asarray(row.zin, dtype=np.float64))
+        return {"t0": [row.t0], "vs": [y]}
 
-    out = j.mapInPandas(_seeded, out_schema)
+    out = B.map_blocks(j, _seeded, B.SAMPLE_BLOCKS)
     return sf.with_df(B.from_blocks(out))
 
 
@@ -273,14 +233,11 @@ def lfilter_blocks(
     sosfilt_blocks; reference: core/numerical.py:414-446)."""
     b = np.asarray(b, dtype=np.float64)
     a = np.asarray(a, dtype=np.float64)
-    d = max(len(a), len(b)) - 1
 
     def filt(x, zflat):
         return kernels.lfilter(b, a, x, zflat)
 
-    T = _state_transition(filt, d)
-    zi_flat = None if zi_unit is None else np.asarray(zi_unit, dtype=np.float64).ravel()
-    return _blocks_state_scan(sf, block_size, filt, d, T, zi_flat)
+    return _blocks_state_scan(sf, block_size, filt, max(len(a), len(b)) - 1, zi_unit)
 
 
 def filtfilt_blocks(
@@ -290,14 +247,7 @@ def filtfilt_blocks(
     lfilter_blocks passes, lfilter_zi * first-sample seeding — the ba
     analog of sosfiltfilt_blocks)."""
     zi = kernels.lfilter_zi(b, a)
-    span = _channel_span(sf.df)
-    fwd = lfilter_blocks(sf, b, a, block_size, zi_unit=zi)
-    # one boundary between the passes — see sosfiltfilt_blocks
-    fwd_df = fwd.df.localCheckpoint(eager=False)
-    bwd = lfilter_blocks(
-        sf.with_df(_reverse_time(fwd_df, span)), b, a, block_size, zi_unit=zi
-    )
-    return sf.with_df(_reverse_time(bwd.df, span))
+    return _zero_phase(sf, lambda s: lfilter_blocks(s, b, a, block_size, zi_unit=zi))
 
 
 def sosfiltfilt_blocks(
@@ -314,20 +264,24 @@ def sosfiltfilt_blocks(
     the state scan picks it up with no lookahead.  Four parallel passes
     total; per-channel wall-clock O(n/#executors).
     """
-    sos = spec.sos if isinstance(spec, SosSpec) else np.asarray(spec, dtype=float)
+    sos = _sos(spec)
     zi = kernels.sosfilt_zi(sos)
+    return _zero_phase(sf, lambda s: sosfilt_blocks(s, sos, block_size, zi_unit=zi))
+
+
+def _zero_phase(sf: SignalFrame, one_pass) -> SignalFrame:
+    """``one_pass`` forward, then over the time-reversed forward output,
+    reversed back: the zero-phase body of both ``*filtfilt_blocks``."""
     span = _channel_span(sf.df)
-    fwd = sosfilt_blocks(sf, sos, block_size, zi_unit=zi)
     # materialize the forward output once: the backward state-scan
     # consumes its input twice (zero-state pass + seeded-refilter join),
     # and without a boundary each consumer re-inlines the ENTIRE forward
     # pipeline — the round-14 plan sweep counted 14 source scans / 29
     # exchanges for this query vs 4/8 for one pass (multiplicative
-    # re-inlining through composition).  GC-released with the frame.
-    fwd_df = fwd.df.localCheckpoint(eager=False)
-    bwd = sosfilt_blocks(
-        sf.with_df(_reverse_time(fwd_df, span)), sos, block_size, zi_unit=zi
-    )
+    # re-inlining through composition).  Spark's ContextCleaner drops
+    # the checkpoint's blocks once the RDD is unreferenced.
+    fwd_df = one_pass(sf).df.localCheckpoint(eager=False)
+    bwd = one_pass(sf.with_df(_reverse_time(fwd_df, span)))
     return sf.with_df(_reverse_time(bwd.df, span))
 
 

@@ -27,10 +27,8 @@ the whole-array kernel across partition layouts).
 from __future__ import annotations
 
 from math import gcd
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 
 from openseize_spark.dsp import kernels
 from openseize_spark.operators import blocks as B
@@ -67,51 +65,30 @@ def resample(
     halo = max(halo, int(np.ceil((half / L + 1) / M)) * M)
 
     bdf = B.halo_blocks(sf.df, block, halo, halo)
-
-    schema = "recording_id string, channel int, t0 long, vs array<double>"
     hL = h * L
 
-    def _resample(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for row in pdf.itertuples(index=False):
-                a = int(row.t0)  # block start (multiple of `block`, so of M)
-                mid = np.asarray(row.vs, dtype=np.float64)
-                left = np.asarray(row.left, dtype=np.float64)
-                right = np.asarray(row.right, dtype=np.float64)
-                n = int(row.n)
-                b = a + len(mid)  # block end (exclusive)
-                lpad = halo - len(left)
-                rpad = halo - len(right)
-                x = np.concatenate(
-                    [np.zeros(max(lpad, 0)), left, mid, right, np.zeros(max(rpad, 0))]
-                )
-                # global output range for this block
-                n_out = -(-n * L // M)  # ceil
-                j_start = a * L // M
-                j_end = min(-(-b * L // M), n_out)
-                if j_end <= j_start:
-                    continue
-                # strided polyphase (no L*x zero-stuffed array): x covers
-                # global samples [a - halo, ...) after the left pad
-                vals = kernels.polyphase_apply(
-                    hL, x, L, M, j_start, j_end, x_origin=a - halo, half=half
-                )
-                rows.append(
-                    {
-                        "recording_id": row.recording_id,
-                        "channel": row.channel,
-                        "t0": j_start,
-                        "vs": vals,
-                    }
-                )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                {"recording_id": [], "channel": [], "t0": [], "vs": []}
-            )
+    def _resample(row):
+        a = int(row.t0)  # block start (multiple of `block`, so of M)
+        b = a + len(row.vs)  # block end (exclusive)
+        # global output range for this block
+        n_out = -(-int(row.n) * L // M)  # ceil
+        j_start = a * L // M
+        j_end = min(-(-b * L // M), n_out)
+        if j_end <= j_start:
+            return None
+        x = np.concatenate(
+            [np.zeros(halo - len(row.left)), row.left, row.vs, row.right,
+             np.zeros(halo - len(row.right))]
+        )
+        # strided polyphase (no L*x zero-stuffed array): x covers
+        # global samples [a - halo, ...) after the left pad
+        vals = kernels.polyphase_apply(
+            hL, x, L, M, j_start, j_end, x_origin=a - halo, half=half
+        )
+        return {"t0": [j_start], "vs": [vals]}
 
-    out = bdf.mapInPandas(_resample, schema)
-    df = B.from_blocks(out)
-    return sf.with_df(df, fs=sf.fs * L / M)
+    out = B.map_blocks(bdf, _resample, B.SAMPLE_BLOCKS)
+    return sf.with_df(B.from_blocks(out), fs=sf.fs * L / M)
 
 
 def downsample(sf: SignalFrame, M: int, **kw) -> SignalFrame:

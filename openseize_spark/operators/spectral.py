@@ -22,8 +22,6 @@ overlap*nfft, trailing partial segment dropped
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -97,44 +95,22 @@ def welch_psd_blocks(
 
     bdf = B.halo_blocks(sf.df, block, 0, halo)
 
-    out_schema = (
-        "recording_id string, channel int, freq double, psum double, nsegs long"
-    )
-
-    def _block_psd(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                x = np.concatenate(
-                    [np.asarray(row.vs, dtype=np.float64), np.asarray(row.right, dtype=np.float64)]
-                )
-                # segments starting inside this block only
-                nstarts = (len(row.vs) + len(row.right) - nfft) // stride + 1 if len(x) >= nfft else 0
-                nstarts = min(nstarts, (len(row.vs) + stride - 1) // stride)
-                if nstarts <= 0:
-                    continue
-                segs = kernels.sliding_segments(x, nfft, stride)[:nstarts]
-                freqs, p = kernels.periodogram_segments(segs, fs, window, detrend, scaling)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "recording_id": row.recording_id,
-                            "channel": row.channel,
-                            "freq": freqs,
-                            "psum": p.sum(axis=0),
-                            "nsegs": len(segs),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {"recording_id": [], "channel": [], "freq": [], "psum": [], "nsegs": []}
-            )
+    def _block_psd(row):
+        x = np.concatenate([row.vs, row.right])
+        # segments starting inside this block only
+        nstarts = (len(x) - nfft) // stride + 1 if len(x) >= nfft else 0
+        nstarts = min(nstarts, (len(row.vs) + stride - 1) // stride)
+        if nstarts <= 0:
+            return None
+        segs = kernels.sliding_segments(x, nfft, stride)[:nstarts]
+        freqs, p = kernels.periodogram_segments(segs, fs, window, detrend, scaling)
+        return {"freq": freqs, "psum": p.sum(axis=0), "nsegs": np.full(len(freqs), len(segs))}
 
     # hashed by channel, not (channel, freq): a per-channel aggregate
     # downstream (band_power) then reuses this exchange instead of adding one
-    partials = bdf.mapInPandas(_block_psd, out_schema).repartition(
-        "recording_id", "channel"
-    )
+    partials = B.map_blocks(
+        bdf, _block_psd, "recording_id string, channel int, freq double, psum double, nsegs long"
+    ).repartition("recording_id", "channel")
     return (
         partials.groupBy("recording_id", "channel", "freq")
         .agg(
@@ -230,67 +206,40 @@ def stft_blocks(
     denom = float(np.sqrt(fs * np.sum(win**2))) if scaling == "density" else float(np.sum(win))
     freqs = np.fft.rfftfreq(nfft, d=1.0 / fs)
 
-    def _block_stft(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                t0, n = int(row.t0), int(row.n)
-                x_ext = np.concatenate(
-                    [np.asarray(row.vs, dtype=np.float64), np.asarray(row.right, dtype=np.float64)]
-                )
-                nvs = len(row.vs)
-                # global padded length -> last start on the original axis
-                total = n + 2 * P
-                if padded and (total - nfft) % stride != 0:
-                    total += stride - (total - nfft) % stride
-                o_last = total - nfft - P
-                # starts owned by this block
-                lo = -P if t0 == 0 else t0 + ((-P - t0) % stride)
-                hi = o_last if t0 + nvs >= n else t0 + nvs - 1
-                hi = min(hi, o_last)
-                if hi < lo:
-                    continue
-                nstarts = (hi - lo) // stride + 1
-                # local array covering [lo, hi + nfft) with pad zeros
-                left_pad = max(t0 - lo, 0)
-                right_pad = max((hi + nfft) - (t0 + len(x_ext)), 0)
-                xloc = np.concatenate([np.zeros(left_pad), x_ext, np.zeros(right_pad)])
-                segs = kernels.sliding_segments(xloc[lo - t0 + left_pad :], nfft, stride)[
-                    :nstarts
-                ]
-                xs = kernels.detrend(segs, detrend) * win
-                spec = np.fft.rfft(xs, axis=-1) / denom
-                s0 = (lo + P) // stride
-                s_idx = s0 + np.arange(nstarts)
-                nfreq = len(freqs)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "recording_id": row.recording_id,
-                            "channel": row.channel,
-                            "seg": np.repeat(s_idx, nfreq),
-                            "time": np.repeat(
-                                (s_idx * stride + nfft / 2 - P) / fs, nfreq
-                            ),
-                            "freq": np.tile(freqs, nstarts),
-                            "re": spec.real.ravel(),
-                            "im": spec.imag.ravel(),
-                        }
-                    )
-                )
-            yield pd.concat(outs) if outs else pd.DataFrame(
-                {
-                    "recording_id": pd.Series([], dtype=str),
-                    "channel": [],
-                    "seg": [],
-                    "time": [],
-                    "freq": [],
-                    "re": [],
-                    "im": [],
-                }
-            )
+    def _block_stft(row):
+        t0, n = int(row.t0), int(row.n)
+        x_ext = np.concatenate([row.vs, row.right])
+        nvs = len(row.vs)
+        # global padded length -> last start on the original axis
+        total = n + 2 * P
+        if padded and (total - nfft) % stride != 0:
+            total += stride - (total - nfft) % stride
+        o_last = total - nfft - P
+        # starts owned by this block
+        lo = -P if t0 == 0 else t0 + ((-P - t0) % stride)
+        hi = o_last if t0 + nvs >= n else t0 + nvs - 1
+        hi = min(hi, o_last)
+        if hi < lo:
+            return None
+        nstarts = (hi - lo) // stride + 1
+        # local array covering [lo, hi + nfft) with pad zeros
+        left_pad = max(t0 - lo, 0)
+        right_pad = max((hi + nfft) - (t0 + len(x_ext)), 0)
+        xloc = np.concatenate([np.zeros(left_pad), x_ext, np.zeros(right_pad)])
+        segs = kernels.sliding_segments(xloc[lo - t0 + left_pad :], nfft, stride)[:nstarts]
+        xs = kernels.detrend(segs, detrend) * win
+        spec = np.fft.rfft(xs, axis=-1) / denom
+        s_idx = (lo + P) // stride + np.arange(nstarts)
+        nfreq = len(freqs)
+        return {
+            "seg": np.repeat(s_idx, nfreq),
+            "time": np.repeat((s_idx * stride + nfft / 2 - P) / fs, nfreq),
+            "freq": np.tile(freqs, nstarts),
+            "re": spec.real.ravel(),
+            "im": spec.imag.ravel(),
+        }
 
-    return bdf.mapInPandas(_block_stft, _STFT_SCHEMA)
+    return B.map_blocks(bdf, _block_stft, _STFT_SCHEMA)
 
 
 def coherence(

@@ -1,6 +1,6 @@
 """Driver-side build cost of the dedup queries: generated classes stay
-cached across runs, the MinHash builder's SQL-text aggregates plan like
-their Column-API form, and ``jaccard_verify`` / ``containment_verify``
+cached across runs, the MinHash and SimHash builders' SQL-text
+aggregates plan like their Column-API form, and ``jaccard_verify`` / ``containment_verify``
 launch no jobs beyond their eager checkpoint."""
 
 from __future__ import annotations
@@ -66,6 +66,31 @@ def _column_api_signatures(docs, k=5, num_hashes=64, portable=False):
     )
 
 
+def _column_api_simhash(docs, bits=32, portable=False):
+    """``simhash`` as it was written with Column-API calls (one
+    ``F.sum(F.when(...))`` per bit, a ``F.when`` sum for the bits): the
+    reference the SQL-text form must plan exactly like."""
+    norm = normalize_text(F.col("text"))
+    docs = dedup._fanout_by_id(docs, "doc_id")
+    toks = docs.select(F.col("doc_id"), F.explode(F.split(norm, " ")).alias("tok")).filter(
+        F.length("tok") > 0
+    )
+    tok_hash = dedup._portable_hash32(F.col("tok")) if portable else F.hash("tok").cast("bigint")
+    toks = toks.withColumn("h", tok_hash)
+    bit_cols = [
+        F.sum(
+            F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
+        ).alias(f"b{b}")
+        for b in range(bits)
+    ]
+    agg = toks.groupBy("doc_id").agg(*bit_cols)
+    sim = None
+    for b in range(bits):
+        term = F.when(F.col(f"b{b}") > 0, F.lit(2 ** b).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
+        sim = term if sim is None else sim + term
+    return agg.select(F.col("doc_id"), sim.alias("simhash"))
+
+
 def _normalized(plan) -> str:
     """Plan text without expression ids and exchange plan ids."""
     return re.sub(r"#\d+|plan_id=\d+", "#N", plan.toString())
@@ -98,6 +123,20 @@ def test_minhash_signatures_sql_text_matches_column_api(spark):
         assert got.schema == ref.schema
         rows = {r.doc_id: list(r.sig) for r in got.collect()}
         assert rows and rows == {r.doc_id: list(r.sig) for r in ref.collect()}
+
+
+def test_simhash_sql_text_matches_column_api(spark):
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    for portable in (False, True):
+        got = dedup.simhash(docs, portable=portable)
+        ref = _column_api_simhash(docs, portable=portable)
+        got_qe, ref_qe = got._jdf.queryExecution(), ref._jdf.queryExecution()
+        for plan in ("analyzed", "optimizedPlan", "sparkPlan"):
+            got_plan, ref_plan = getattr(got_qe, plan)(), getattr(ref_qe, plan)()
+            assert _normalized(got_plan) == _normalized(ref_plan), plan
+        assert got.schema == ref.schema
+        rows = {r.doc_id: r.simhash for r in got.collect()}
+        assert rows and rows == {r.doc_id: r.simhash for r in ref.collect()}
 
 
 def test_verify_build_runs_only_its_checkpoint(spark):
