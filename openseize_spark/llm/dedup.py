@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from openseize_spark import session
+
 
 def normalize_text(col):
     """Canonical form for fingerprinting: lowercase, collapse whitespace."""
@@ -668,6 +670,14 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
+def _undirected(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Both directions of every ``(a_col, b_col)`` pair, as ``(x, y)``
+    rows: the neighbor relation of the undirected graph."""
+    return edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y")).union(
+        edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y"))
+    )
+
+
 def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Newman modularity of a node partition over an undirected graph
     given as canonical edges (a < b, a != b) — the standard quality
@@ -692,9 +702,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     # three consumers of the edge list (degrees, e_in, m); checkpoint
     # so an expensive upstream pair-generation plan executes once
     edges = edges.filter(F.col("a") != F.col("b")).localCheckpoint(eager=True)
-    und = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).union(
-        edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
+    und = _undirected(edges, "a", "b")
     lab = labels.select(F.col("id"), F.col("label"))
     m_df = edges.agg(F.count("*").cast("bigint").alias("m"))
     deg = und.groupBy(F.col("x").alias("id")).agg(
@@ -759,9 +767,7 @@ def assortativity(edges: DataFrame) -> DataFrame:
     # degrees join back onto); checkpoint so an expensive upstream
     # pair-generation plan executes once (triangle_count discipline)
     edges = edges.filter(F.col("a") != F.col("b")).localCheckpoint(eager=True)
-    und = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).union(
-        edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
+    und = _undirected(edges, "a", "b")
     deg = und.groupBy(F.col("x").alias("id")).agg(
         F.count("*").cast("bigint").alias("d")
     )
@@ -824,9 +830,7 @@ def clustering_buckets(edges: DataFrame) -> DataFrame:
     """
     edges = edges.filter(F.col("a") != F.col("b")).localCheckpoint(eager=True)
     tri = triangle_count(edges)
-    und = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).union(
-        edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
+    und = _undirected(edges, "a", "b")
     deg = und.groupBy(F.col("x").alias("id")).agg(
         F.count("*").cast("bigint").alias("d")
     )
@@ -868,9 +872,7 @@ def conductance(edges: DataFrame, labels: DataFrame) -> DataFrame:
     Returns (label, n_nodes, cut, vol, conductance).
     """
     edges = edges.filter(F.col("a") != F.col("b")).localCheckpoint(eager=True)
-    und = edges.select(F.col("a").alias("x"), F.col("b").alias("y")).union(
-        edges.select(F.col("b").alias("x"), F.col("a").alias("y"))
-    )
+    und = _undirected(edges, "a", "b")
     lab = labels.select(F.col("id"), F.col("label"))
     m_df = edges.agg(F.count("*").cast("bigint").alias("m"))
     deg = und.groupBy(F.col("x").alias("id")).agg(
@@ -959,6 +961,16 @@ def conductance_oracle_sql(
     )
 
 
+def _rank_contrib(und: DataFrame, ranks: DataFrame) -> DataFrame:
+    """One PageRank push: every node's ``u div deg`` share summed per
+    neighbor, as (y, s)."""
+    return (
+        und.join(ranks.select("x", F.expr("u div deg").alias("c")), on="x")
+        .groupBy("y")
+        .agg(F.sum("c").alias("s"))
+    )
+
+
 def personalized_pagerank(
     edges: DataFrame,
     seeds: DataFrame,
@@ -970,8 +982,8 @@ def personalized_pagerank(
     """Personalized PageRank over an undirected pair graph (damping
     0.85, teleport restricted to ``seeds``) in EXACT integer
     arithmetic — proximity to a trusted seed set (TrustRank-style
-    quality propagation, seeded community discovery), the seventh
-    iterative-algorithm shape.
+    quality propagation, seeded community discovery), run as a fixed
+    number of eager rounds.
 
     Identical integer discipline to :func:`pagerank`: ranks in
     ``scale`` units, per-edge contribution ``u div deg``, update
@@ -991,17 +1003,8 @@ def personalized_pagerank(
 
     Returns (id, degree, ppr) for nodes with nonzero rank mass.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
     S = int(scale)
-    und = edges.select(
-        F.col(a_col).alias("x"), F.col(b_col).alias("y")
-    ).union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with (
-        small_intermediate_coalesce(edges.sparkSession),
-        persisted(und.repartition(n_part, "x")) as und,
-    ):
+    with session.stationary(_undirected(edges, a_col, b_col), "x") as und:
         deg = und.groupBy("x").agg(
             F.count("*").alias("deg")
         ).localCheckpoint(eager=True)
@@ -1032,14 +1035,7 @@ def personalized_pagerank(
             F.expr(f"(3 * {S}) div (20 * ns)"),
         ).otherwise(F.lit(0))
         for _ in range(iters):
-            contrib = (
-                und.join(
-                    ranks.select("x", F.expr("u div deg").alias("c")),
-                    on="x",
-                )
-                .groupBy("y")
-                .agg(F.sum("c").alias("s"))
-            )
+            contrib = _rank_contrib(und, ranks)
             ranks = (
                 deg.join(contrib, deg.x == contrib.y, "left")
                 .join(
@@ -1714,14 +1710,12 @@ def connected_components(
         self_e = mins.select("x", F.col("_m").alias("y"))
         return nbr.union(self_e).distinct()
 
-    from openseize_spark.session import small_intermediate_coalesce
-
     sig = _signature(edges)
     converged = False
     # per-round edge tables are |E| two-column rows; coalesce each
     # round's shuffles to advisory size (the _signature action inside
     # the loop materializes every round within this scope)
-    with small_intermediate_coalesce(pairs.sparkSession):
+    with session.small_intermediate_coalesce(pairs.sparkSession):
         for _ in range(max_iter):
             nxt = _small_star(_large_star(edges)).localCheckpoint(eager=False)
             nsig = _signature(nxt)
@@ -2200,8 +2194,6 @@ def k_core(
     Returns (id, core_degree) for k-core members, core_degree = the
     node's degree WITHIN the core.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     e = (
         edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -2210,7 +2202,7 @@ def k_core(
     )
     converged = False
     n_edges = e.count()
-    with small_intermediate_coalesce(edges.sparkSession):
+    with session.small_intermediate_coalesce(edges.sparkSession):
         for _ in range(rounds):
             if n_edges == 0:
                 converged = True
@@ -2319,20 +2311,13 @@ def label_propagation(
 
     Returns (id, label) after ``rounds`` rounds.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
     und = (
-        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
+        _undirected(edges, a_col, b_col)
         .filter(F.col("x") != F.col("y"))
         .distinct()
     )
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
     # keyed on y, the key every round's vote join uses
-    with (
-        small_intermediate_coalesce(edges.sparkSession),
-        persisted(und.repartition(n_part, "y")) as und,
-    ):
+    with session.stationary(und, "y") as und:
         labels = (
             und.select(F.col("x").alias("id"))
             .distinct()
@@ -2569,9 +2554,8 @@ def pagerank(
 ) -> DataFrame:
     """PageRank over an undirected pair graph (damping 0.85) in EXACT
     integer arithmetic — centrality over the near-dup similarity graph
-    (which documents sit at the center of big duplicate families), and
-    the third iterative-algorithm shape alongside connected components
-    and k-means.
+    (which documents sit at the center of big duplicate families), run
+    as fixed lazy rounds with one closing checkpoint.
 
     Every rank lives in integer ``scale`` units; with damping 0.85 =
     17/20 both the per-edge contribution (``u div deg``) and the update
@@ -2590,26 +2574,11 @@ def pagerank(
     Spark's ``div`` — so no broadcast join rides any round.
     Returns (id, degree, pagerank) with pagerank = units / scale.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
     S = int(scale)
-    und = edges.select(
-        F.col(a_col).alias("x"), F.col(b_col).alias("y")
-    ).union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
-    # the per-round intermediates are rank tables of |V| short rows —
-    # coalesce them to advisory size (1-2 tasks) instead of 32-64
-    # near-empty tasks per round; the FINAL checkpoint below is the
-    # eager action that materializes every round inside this scope
-    # (AQE reads the conf at action time)
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    # cut the lineage once: every iteration re-references the edge list
-    # and degree table, and without this the (possibly expensive)
-    # upstream pair-generation plan is re-executed per reference and
-    # the composed plan grows superlinearly
-    with (
-        small_intermediate_coalesce(edges.sparkSession),
-        persisted(und.repartition(n_part, "x")) as und,
-    ):
+    # the rank tables are |V| short rows; the FINAL checkpoint below is
+    # the eager action that materializes every round inside the
+    # stationary scope (AQE reads its conf at action time)
+    with session.stationary(_undirected(edges, a_col, b_col), "x") as und:
         deg = und.groupBy("x").agg(F.count("*").alias("deg")).localCheckpoint(
             eager=True
         )
@@ -2617,21 +2586,14 @@ def pagerank(
         # iters is fixed and the state chain is LINEAR (each round's
         # ranks feeds exactly the next round; und/deg are materialized
         # leaves), so the rounds stay LAZY and ONE eager checkpoint at
-        # the end executes all of them in a single multi-stage job —
-        # round-15 change: the former per-round eager checkpoint +
-        # per-round 1-row broadcast cost ~4 scheduler round-trips per
-        # iteration (43 -> 27 jobs at sf0.1, value-identical).
+        # the end executes all of them in a single multi-stage job; a
+        # per-round eager checkpoint plus 1-row broadcast cost ~4
+        # scheduler round-trips per iteration
         u0 = S // n if n else 0
         base = (3 * S) // (20 * n) if n else 0
         ranks = deg.select("x", "deg", F.lit(u0).cast("bigint").alias("u"))
         for _ in range(iters):
-            contrib = (
-                und.join(
-                    ranks.select("x", F.expr("u div deg").alias("c")), on="x"
-                )
-                .groupBy("y")
-                .agg(F.sum("c").alias("s"))
-            )
+            contrib = _rank_contrib(und, ranks)
             ranks = deg.join(contrib, deg.x == contrib.y).select(
                 "x",
                 "deg",
@@ -2699,9 +2661,8 @@ def hits(
     dst_col: str = "dst",
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) over a directed
-    bipartite edge list in EXACT integer arithmetic — the fifth
-    iterative-algorithm shape beside connected components, PageRank,
-    k-means, and k-core.  On a user→item interaction graph the hub
+    bipartite edge list in EXACT integer arithmetic, run as a fixed
+    number of eager rounds.  On a user→item interaction graph the hub
     score finds broad consumers and the authority score finds
     widely-consumed items; on a citation/link graph it separates
     directories from destinations.
@@ -2723,7 +2684,7 @@ def hits(
     integer-replayable — relative ordering per side is unaffected.
 
     Scale shape per round: two equi-joins of the (pre-partitioned,
-    checkpointed) edge list against score tables of |V| short rows,
+    persisted) edge list against score tables of |V| short rows,
     two short-key sums — the PageRank discipline: the edge list is
     stored TWICE, hash-partitioned on src and on dst, so the per-round
     joins move only the |V|-row score tables (two |E| shuffles total
@@ -2733,73 +2694,52 @@ def hits(
     Returns (node_type 'hub'|'auth', id, score) with score =
     units / scale.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
+    if iters < 1:
+        raise ValueError(
+            f"hits needs iters >= 1 (got {iters}): the authority scores "
+            "exist only after the first round"
+        )
     S = int(scale)
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    # the edge list stored hash-partitioned on each round's join key
+
+    def _half_step(e, scores, src, dst):
+        # sum the ``src``-side units into ``dst`` over the edge list
+        # ``e`` (hash-partitioned on ``src``), max-normalized
+        raw = (
+            e.join(scores.withColumnRenamed("id", src), on=src)
+            .groupBy(dst)
+            .agg(F.sum("u").cast("bigint").alias("s"))
+        )
+        mx = raw.agg(F.max("s").alias("_m"))
+        return (
+            raw.crossJoin(F.broadcast(mx))
+            .select(
+                F.col(dst).alias("id"),
+                F.expr(f"s div greatest(_m div {S}, 1)")
+                .cast("bigint")
+                .alias("u"),
+            )
+            .localCheckpoint(eager=True)
+        )
+
+    # the edge list stored hash-partitioned on each half-step's join key
     # (src for the auth step, dst for the hub step)
     with (
-        small_intermediate_coalesce(spark),
-        persisted(
-            edges.select(src_col, dst_col).repartition(n_part, src_col)
-        ) as e_src,
-        persisted(e_src.repartition(n_part, dst_col)) as e_dst,
+        session.stationary(edges.select(src_col, dst_col), src_col) as e_src,
+        session.stationary(e_src, dst_col) as e_dst,
     ):
         hubs = e_src.select(F.col(src_col).alias("id")).distinct().select(
             "id", F.lit(S).cast("bigint").alias("u")
         ).localCheckpoint(eager=True)
-        auths = None
         for _ in range(iters):
-            a_raw = (
-                e_src.join(
-                    hubs.withColumnRenamed("id", src_col), on=src_col
-                )
-                .groupBy(dst_col)
-                .agg(F.sum("u").cast("bigint").alias("s"))
-            )
-            a_max = a_raw.agg(F.max("s").alias("_m"))
-            auths = (
-                a_raw.crossJoin(F.broadcast(a_max))
-                .select(
-                    F.col(dst_col).alias("id"),
-                    F.expr(f"s div greatest(_m div {S}, 1)")
-                    .cast("bigint")
-                    .alias("u"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            h_raw = (
-                e_dst.join(
-                    auths.withColumnRenamed("id", dst_col), on=dst_col
-                )
-                .groupBy(src_col)
-                .agg(F.sum("u").cast("bigint").alias("s"))
-            )
-            h_max = h_raw.agg(F.max("s").alias("_m"))
-            hubs = (
-                h_raw.crossJoin(F.broadcast(h_max))
-                .select(
-                    F.col(src_col).alias("id"),
-                    F.expr(f"s div greatest(_m div {S}, 1)")
-                    .cast("bigint")
-                    .alias("u"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    out = hubs.select(
-        F.lit("hub").alias("node_type"),
+            auths = _half_step(e_src, hubs, src_col, dst_col)
+            hubs = _half_step(e_dst, auths, dst_col, src_col)
+    scored = (
         F.col("id").cast("bigint").alias("id"),
         (F.col("u").cast("double") / F.lit(float(S))).alias("score"),
-    ).unionByName(
-        auths.select(
-            F.lit("auth").alias("node_type"),
-            F.col("id").cast("bigint").alias("id"),
-            (F.col("u").cast("double") / F.lit(float(S))).alias("score"),
-        )
     )
-    return out
+    return hubs.select(F.lit("hub").alias("node_type"), *scored).unionByName(
+        auths.select(F.lit("auth").alias("node_type"), *scored)
+    )
 
 
 def hits_oracle_sql(
@@ -2859,9 +2799,8 @@ def bfs_distances(
     seed_col: str = "id",
 ) -> DataFrame:
     """Multi-source breadth-first search over an undirected pair graph:
-    the exact hop distance from the nearest seed, up to ``max_hops`` —
-    the sixth iterative-algorithm shape (after connected components,
-    PageRank, k-means, k-core, label propagation, HITS).  On the
+    the exact hop distance from the nearest seed, up to ``max_hops``,
+    in eager rounds that exit on an empty frontier.  On the
     near-dup graph it measures contamination BLAST RADIUS (how far a
     flagged document's duplication neighborhood extends); on an
     interaction graph it is the collaborative-filtering neighborhood
@@ -2874,7 +2813,7 @@ def bfs_distances(
     empties, so no empty rounds are planned.
 
     Scale shape per hop: one equi-join of the (pre-partitioned,
-    checkpointed) undirected edge list against the frontier (only
+    persisted) undirected edge list against the frontier (only
     frontier-adjacent edges flow), one distinct, one anti-join against
     the visited set — the textbook distributed frontier expansion.
     The visited set is re-checkpointed per hop so lineage stays flat.
@@ -2882,17 +2821,7 @@ def bfs_distances(
     Returns (id, dist) for every node within ``max_hops`` of a seed
     (seeds at dist 0); unreached nodes are absent.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    und = edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y")).union(
-        edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y"))
-    )
-    with (
-        small_intermediate_coalesce(spark),
-        persisted(und.repartition(n_part, "x")) as und,
-    ):
+    with session.stationary(_undirected(edges, a_col, b_col), "x") as und:
         dist = (
             seeds.select(F.col(seed_col).alias("id"))
             .distinct()
@@ -2955,6 +2884,53 @@ def bfs_distances_oracle_sql(
         SELECT id, dist FROM d{max_hops}"""
 
 
+def _relax(
+    e: DataFrame, source: int, col: str, candidates, max_rounds: int
+) -> tuple[DataFrame, bool]:
+    """Frontier relaxation from ``source`` over the stationary edge list
+    ``e`` (u, v, ...), keeping per node the minimum ``col`` (int64).
+
+    Each round joins the frontier (node, col) to ``e`` on u;
+    ``candidates`` maps those joined rows to candidate (node, col) rows.
+    One aggregation computes BOTH the merged table and the improvement
+    test: existing rows carry ``_old`` = their value and candidates
+    null, so per node min(col) is the new value and min(_old) the
+    previous one (null for first-seen nodes).  One eager checkpoint per
+    round materializes it; the table and the next frontier (the nodes
+    that improved) are in-memory filters of it.  The loop stops when a
+    round improves nothing.
+
+    Returns (table, converged): converged is False when ``max_rounds``
+    ran out with a non-empty frontier.
+    """
+    table = e.sparkSession.createDataFrame(
+        [(int(source), 0)], f"node bigint, {col} bigint"
+    ).localCheckpoint(eager=True)
+    frontier = table
+    for _ in range(max_rounds):
+        cand = candidates(
+            e.join(frontier.withColumnRenamed("node", "u"), on="u")
+        )
+        merged = (
+            table.select("node", col, F.col(col).alias("_old"))
+            .unionByName(
+                cand.select(
+                    "node", col, F.lit(None).cast("bigint").alias("_old")
+                )
+            )
+            .groupBy("node")
+            .agg(F.min(col).alias(col), F.min("_old").alias("_old"))
+            .localCheckpoint(eager=True)
+        )
+        table = merged.select("node", col)
+        frontier = merged.filter(
+            F.col("_old").isNull() | (F.col(col) < F.col("_old"))
+        ).select("node", col)
+        if frontier.count() == 0:
+            return table, True
+    return table, False
+
+
 def sssp_bounded(
     edges: DataFrame,
     source: int,
@@ -2965,9 +2941,9 @@ def sssp_bounded(
 ) -> DataFrame:
     """Budget-bounded single-source shortest paths over a WEIGHTED
     directed graph — distributed Bellman-Ford with frontier-only
-    relaxation, the seventh iterative-algorithm shape (and the
-    weighted upgrade of :func:`bfs_distances`): per round, only nodes
-    whose tentative distance improved join the (checkpointed,
+    relaxation (:func:`_relax`) in eager rounds that exit on an empty
+    frontier, the weighted upgrade of :func:`bfs_distances`: per round,
+    only nodes whose tentative distance improved join the (persisted,
     pre-partitioned) edge list, candidate distances above ``budget``
     are pruned (the delta-stepping-style horizon that keeps both the
     state and the round count bounded: with integer weights >= 1 the
@@ -2977,7 +2953,7 @@ def sssp_bounded(
     All-integer: weights and distances are exact int64, so the result
     is bit-equal under any partitioning and any relaxation order.
     The per-round early-exit count moves one scalar; the edge list is
-    checkpointed once and re-read every round.
+    persisted once and re-read every round.
 
     Returns (node, dist) for every node reachable within total weight
     ``budget`` (source at 0); unreachable nodes are absent.
@@ -2986,67 +2962,31 @@ def sssp_bounded(
     ``budget`` doubles as the hop bound only under that assumption —
     with w <= 0 edges the engine would hop-truncate at ``budget``
     rounds while the oracle's weight-bounded recursion keeps walking,
-    a silent divergence (r11 ADVICE).  A bounded scalar ``min(w)``
-    check rejects such inputs up front.
+    a silent divergence.  A bounded scalar ``min(w)`` check rejects
+    such inputs up front.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     e = edges.select(
         F.col(u_col).alias("u"),
         F.col(v_col).alias("v"),
         F.col(w_col).cast("bigint").alias("w"),
     )
-    with (
-        small_intermediate_coalesce(spark),
-        persisted(e.repartition(n_part, "u")) as e,
-    ):
+    with session.stationary(e, "u") as e:
         min_w = e.agg(F.min("w").alias("m")).collect()[0]["m"]
         if min_w is not None and min_w < 1:
             raise ValueError(
                 "sssp_bounded requires integer weights >= 1 (budget "
                 f"doubles as the hop bound); got min weight {min_w}"
             )
-        dist = spark.createDataFrame(
-            [(int(source), 0)], "node bigint, dist bigint"
-        ).localCheckpoint(eager=True)
-        frontier = dist
-        for _ in range(int(budget)):
-            cand = (
-                e.join(frontier.withColumnRenamed("node", "u"), on="u")
-                .select(
-                    F.col("v").alias("node"),
-                    (F.col("dist") + F.col("w")).alias("dist"),
-                )
-                .filter(F.col("dist") <= F.lit(int(budget)))
-            )
-            # One aggregation computes BOTH the merged distance table and
-            # the improvement test: candidate rows carry _old = null,
-            # existing rows carry their distance, so per node
-            # min(dist) is the new tentative distance and min(_old) the
-            # previous one (null for first-seen nodes).  A single eager
-            # checkpoint materializes it; `new` and `frontier` are plain
-            # in-memory filters — one shuffle pipeline per round instead
-            # of the two this loop ran before (round-14, guide §1.2).
-            merged = (
-                dist.select("node", "dist", F.col("dist").alias("_old"))
-                .unionByName(
-                    cand.select(
-                        "node", "dist", F.lit(None).cast("bigint").alias("_old")
-                    )
-                )
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"), F.min("_old").alias("_old"))
-                .localCheckpoint(eager=True)
-            )
-            new = merged.select("node", "dist")
-            frontier = merged.filter(
-                F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
-            ).select("node", "dist")
-            dist = new
-            if frontier.count() == 0:
-                break
+        dist, _ = _relax(
+            e,
+            source,
+            "dist",
+            lambda j: j.select(
+                F.col("v").alias("node"),
+                (F.col("dist") + F.col("w")).alias("dist"),
+            ).filter(F.col("dist") <= F.lit(int(budget))),
+            int(budget),
+        )
         return dist
 
 
@@ -3075,6 +3015,42 @@ def sssp_bounded_oracle_sql(
     """
 
 
+def _sigma_levels(und: DataFrame, source: int, max_hops: int) -> DataFrame:
+    """Brandes' forward pass over the stationary undirected edge list
+    ``und`` (x, y): the lazy union of (id, dist, sigma) levels 0 ..
+    ``max_hops`` from ``source``, sigma as DECIMAL(38,0).
+
+    The levels run LAZY: each per-level checkpoint is eager=False (still
+    a persist, so within the caller's one closing job a level computes
+    once and its anti-join/union consumers read the stored blocks), and
+    ALL ``max_hops`` levels are built unconditionally: past the graph's
+    reach a frontier is empty, every later level joins/aggregates empty
+    frames, and the union is row-identical to an early-exited one, so
+    no per-level count() or eager materialization is needed.  The
+    caller's closing action must run BEFORE the edge cache releases,
+    or the returned plan would recompute ``und`` per level.
+    """
+    dec = "decimal(38,0)"
+    done = und.sparkSession.createDataFrame(
+        [(int(source), 0, 1)], "id bigint, dist int, sigma bigint"
+    ).select(
+        "id", "dist", F.col("sigma").cast(dec).alias("sigma")
+    ).localCheckpoint(eager=True)
+    frontier = done
+    for hop in range(1, max_hops + 1):
+        nxt = (
+            und.join(frontier.select(F.col("id").alias("x"), "sigma"), on="x")
+            .groupBy(F.col("y").alias("id"))
+            .agg(F.sum("sigma").cast(dec).alias("sigma"))
+            .join(done.select("id"), on="id", how="left_anti")
+            .select("id", F.lit(hop).cast("int").alias("dist"), "sigma")
+            .localCheckpoint(eager=False)
+        )
+        done = done.unionByName(nxt)
+        frontier = nxt
+    return done
+
+
 def sp_counting(
     edges: DataFrame,
     source: int,
@@ -3094,65 +3070,18 @@ def sp_counting(
     overflows int64 within a few levels, and Spark wraps where DuckDB
     promotes — the term_burstiness overflow discipline).  Everything
     else is the :func:`bfs_distances` frontier shape: one equi-join
-    of the checkpointed undirected edge list per level, one
-    sum-aggregation, one anti-join against the visited set.
+    of the persisted undirected edge list per level, one
+    sum-aggregation, one anti-join against the visited set.  The
+    levels (:func:`_sigma_levels`) are fixed lazy rounds; one closing
+    eager checkpoint executes the whole BFS as a single multi-stage
+    job.
 
     Returns (id, dist, sigma) for every node within ``max_hops``
     (source at dist 0 with sigma 1).
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    dec = "decimal(38,0)"
-    und = (
-        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
-        .distinct()
-    )
-    with (
-        small_intermediate_coalesce(spark),
-        persisted(und.repartition(n_part, "x")) as und,
-    ):
-        done = spark.createDataFrame(
-            [(int(source), 0, 1)], "id bigint, dist int, sigma bigint"
-        ).select(
-            "id", "dist", F.col("sigma").cast(dec).alias("sigma")
-        ).localCheckpoint(eager=True)
-        frontier = done
-        # round 15: the levels run LAZY — each per-level checkpoint is
-        # eager=False (still a persist, so within the one closing job a
-        # level computes once and its anti-join/union consumers read the
-        # stored blocks) and ALL max_hops levels are built
-        # unconditionally: past the graph's reach a frontier is empty,
-        # every later level joins/aggregates empty frames, and the
-        # union is row-identical to the early-exited one — so the
-        # per-level count() action (whose only job was the early exit)
-        # and the per-level eager materialization both disappear.  One
-        # eager checkpoint at the end executes the whole BFS as a
-        # single multi-stage job (2*max_hops+1 -> 1 actions), and must
-        # run BEFORE the edge cache releases or the returned plan would
-        # recompute und from `edges` per level.
-        for hop in range(1, max_hops + 1):
-            nxt = (
-                und.join(
-                    frontier.select(
-                        F.col("id").alias("x"), "sigma"
-                    ),
-                    on="x",
-                )
-                .groupBy(F.col("y").alias("id"))
-                .agg(F.sum("sigma").cast(dec).alias("sigma"))
-                .join(done.select("id"), on="id", how="left_anti")
-                .select(
-                    "id", F.lit(hop).cast("int").alias("dist"), "sigma"
-                )
-                .localCheckpoint(eager=False)
-            )
-            done = done.unionByName(nxt)
-            frontier = nxt
-        done = done.localCheckpoint(eager=True)
-        return done
+    und = _undirected(edges, a_col, b_col).distinct()
+    with session.stationary(und, "x") as und:
+        return _sigma_levels(und, source, max_hops).localCheckpoint(eager=True)
 
 
 def sp_counting_oracle_sql(
@@ -3234,50 +3163,14 @@ def betweenness_contrib(
 
     Returns (id, dist, delta_units) for every reached node.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
-    und = (
-        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
-        .distinct()
-    )
-    with (
-        small_intermediate_coalesce(spark),
-        persisted(und.repartition(n_part, "x")) as und,
-    ):
-        done = spark.createDataFrame(
-            [(int(source), 0, 1)], "id bigint, dist int, sigma bigint"
-        ).select(
-            "id", "dist", F.col("sigma").cast(dec).alias("sigma")
-        ).localCheckpoint(eager=True)
-        frontier = done
-        # round 15 (cf. sp_counting): lazy per-level checkpoints, all
-        # max_hops levels built unconditionally (empty frontiers past
-        # the graph's reach contribute empty frames — row-identical to
-        # the early-exited union), so the forward BFS executes as ONE
-        # job at the lmax aggregate below instead of two actions per
-        # level; the lazy checkpoints persist each level on first
+    und = _undirected(edges, a_col, b_col).distinct()
+    with session.stationary(und, "x") as und:
+        # the lazy forward levels execute as ONE job at the lmax
+        # aggregate; each level's lazy checkpoint persists it on first
         # compute, so the anti-joins and the dag build read stored
         # blocks, never recompute
-        for hop in range(1, max_hops + 1):
-            nxt = (
-                und.join(
-                    frontier.select(F.col("id").alias("x"), "sigma"),
-                    on="x",
-                )
-                .groupBy(F.col("y").alias("id"))
-                .agg(F.sum("sigma").cast(dec).alias("sigma"))
-                .join(done.select("id"), on="id", how="left_anti")
-                .select(
-                    "id", F.lit(hop).cast("int").alias("dist"), "sigma"
-                )
-                .localCheckpoint(eager=False)
-            )
-            done = done.unionByName(nxt)
-            frontier = nxt
+        done = _sigma_levels(und, source, max_hops)
         lmax = done.agg(F.max("dist").alias("m")).collect()[0]["m"]
         dag = (
             und.join(
@@ -3308,7 +3201,7 @@ def betweenness_contrib(
         # hashed on v: each backward round (a broadcastable per-level
         # join on w, then groupBy(v)) aggregates in place with no
         # exchange of the DAG
-        with persisted(dag.repartition(n_part, "v")) as dag:
+        with session.stationary(dag, "v") as dag:
             delta = (
                 done.filter(F.col("dist") == lmax)
                 .select(
@@ -3323,7 +3216,7 @@ def betweenness_contrib(
             # both its union arm and the next round) and the single eager
             # checkpoint after the loop executes the whole sweep in one
             # job — it must materialize before und/dag unpersist or the
-            # returned plan would recompute them per level (round 15)
+            # returned plan would recompute them per level
             for h in range(int(lmax) - 1, -1, -1):
                 contrib = (
                     dag.filter(F.col("dist_v") == h)
@@ -3478,31 +3371,20 @@ def random_walks(
     embedding-training corpus needs for reproducibility.
 
     Scale shape: the ranked adjacency (neighbor rank via one per-node
-    window, degree via one aggregate) is checkpointed once and each
+    window, degree via one aggregate) is persisted once and each
     step is two equi-joins (degree lookup to compute the index, then
     (node, rank) to fetch the neighbor) — no fan-out beyond the walk
     frontier, no collect, rounds = ``length`` by construction.
 
     Returns (seed, step, node): step 0 is the seed itself.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
     M = 2147483647
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    und = (
-        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
-        .distinct()
-    )
+    und = _undirected(edges, a_col, b_col).distinct()
     w_adj = Window.partitionBy("x").orderBy("y")
     adj = und.select("x", "y", (F.row_number().over(w_adj) - 1).alias("rank"))
     # each step's neighbor join shuffles only the walk frontier, never
     # the adjacency; every step materializes eagerly below
-    with (
-        small_intermediate_coalesce(spark),
-        persisted(adj.repartition(n_part, "x")) as adj,
-    ):
+    with session.stationary(adj, "x") as adj:
         degs = adj.groupBy("x").agg(
             F.count("*").cast("bigint").alias("deg")
         ).localCheckpoint(eager=True)
@@ -3731,10 +3613,6 @@ def sppmi_embed(
 
     Returns (node, vu) — the embedding in ``unit`` units.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
     coo = skipgram_cooc(
         edges, length=length, window=window, a_col=a_col, b_col=b_col
@@ -3747,10 +3625,7 @@ def sppmi_embed(
         .alias("su"),
     ).filter(F.col("su") > 0)
     # only the N-row iterate shuffles per round
-    with (
-        small_intermediate_coalesce(spark),
-        persisted(m.repartition(n_part, "v")) as m,
-    ):
+    with session.stationary(m, "v") as m:
         state = (
             m.select(F.col("u").alias("node"))
             .distinct()
@@ -3866,8 +3741,8 @@ def temporal_reach(
     TEMPORAL graph: an edge (u, v, t) is usable only at time t >= the
     arrival time at u, so arrival(v) = min over usable edges of t —
     the contact-tracing / information-diffusion primitive (Holme &
-    Saramäki 2012), and the eighth iterative-algorithm shape: a
-    frontier relaxation like :func:`sssp_bounded` but with the
+    Saramäki 2012), run to convergence or raise: the
+    :func:`sssp_bounded` frontier relaxation (:func:`_relax`) with the
     time-monotonicity constraint in the join predicate instead of an
     additive weight.
 
@@ -3880,70 +3755,32 @@ def temporal_reach(
     per hop.  The early-exit scalar count ends the loop as soon as a
     round improves nothing; the 10,000-round safety bound guards
     against bugs, not data, and RAISES if ever exhausted with a
-    non-empty frontier (r11 ADVICE: a silent cap-exit would return a
+    non-empty frontier (a silent cap-exit would return a
     non-converged result diverging from the oracle's uncapped
     recursion).  All-integer, bit-equal under any relaxation order.
     Returns (node, arrival) for reachable nodes; the source reports
     arrival 0.
     """
-    from openseize_spark.session import persisted, small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     e = edges.select(
         F.col(u_col).alias("u"),
         F.col(v_col).alias("v"),
         F.col(t_col).cast("bigint").alias("t"),
     )
-    with (
-        small_intermediate_coalesce(spark),
-        persisted(e.repartition(n_part, "u")) as e,
-    ):
-        arr = spark.createDataFrame(
-            [(int(source), 0)], "node bigint, arrival bigint"
-        ).localCheckpoint(eager=True)
-        frontier = arr
-        _SAFETY_ROUNDS = 10_000
-        for _ in range(_SAFETY_ROUNDS):  # safety only; fixpoint exits first
-            cand = (
-                e.join(
-                    frontier.withColumnRenamed("node", "u"), on="u"
-                )
-                .filter(F.col("t") >= F.col("arrival"))
-                .select(F.col("v").alias("node"), F.col("t").alias("arrival"))
-            )
-            # one aggregation computes BOTH the merged arrival table and
-            # the improvement test (the sssp_bounded round fusion):
-            # existing rows carry _old = arrival, candidates null, so
-            # min(_old) is the previous arrival (null for first-seen
-            # nodes) — one eager checkpoint per round, `arr` and
-            # `frontier` are in-memory filters of it.
-            merged = (
-                arr.select("node", "arrival", F.col("arrival").alias("_old"))
-                .unionByName(
-                    cand.select(
-                        "node",
-                        "arrival",
-                        F.lit(None).cast("bigint").alias("_old"),
-                    )
-                )
-                .groupBy("node")
-                .agg(
-                    F.min("arrival").alias("arrival"),
-                    F.min("_old").alias("_old"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            frontier = merged.filter(
-                F.col("_old").isNull() | (F.col("arrival") < F.col("_old"))
-            ).select("node", "arrival")
-            arr = merged.select("node", "arrival")
-            if frontier.count() == 0:
-                break
-        else:
+    safety_rounds = 10_000
+    with session.stationary(e, "u") as e:
+        arr, converged = _relax(
+            e,
+            source,
+            "arrival",
+            lambda j: j.filter(F.col("t") >= F.col("arrival")).select(
+                F.col("v").alias("node"), F.col("t").alias("arrival")
+            ),
+            safety_rounds,
+        )
+        if not converged:
             raise RuntimeError(
                 "temporal_reach: safety cap of "
-                f"{_SAFETY_ROUNDS} rounds exhausted with a non-empty "
+                f"{safety_rounds} rounds exhausted with a non-empty "
                 "frontier — result has NOT converged (hop eccentricity "
                 "from the source exceeds the cap)"
             )
@@ -4634,10 +4471,8 @@ def dag_layers(edges: DataFrame, rounds: int = 8) -> DataFrame:
     :func:`pagerank` shape), so the returned plan reads stored blocks
     and no cache outlives the call.
     """
-    from openseize_spark.session import persisted
-
     n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with persisted(edges.repartition(n_part, "a")) as edges:
+    with session.persisted(edges.repartition(n_part, "a")) as edges:
         nodes = (
             edges.select(F.col("a").alias("v"))
             .unionByName(edges.select(F.col("b").alias("v")))

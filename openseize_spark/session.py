@@ -87,13 +87,14 @@ def persisted(df):
     also when the body raises.
 
     For iterative algorithms that re-join one stationary relation every
-    round: callers repartition it on the join key first.  A persisted
-    repartition node stays visible to the planner, so each round shuffles
-    only the small evolving side; ``localCheckpoint`` would hide the hash
-    partitioning and every round would re-shuffle the whole relation
-    (round 14: random_walks at sf1 117 s -> 40 s).  The body must run the
-    actions that read the cache (eager checkpoints, counts, collects):
-    no cache outlives the call that made it.
+    round, repartitioned on the join key first (:func:`stationary`).  A
+    persisted repartition node stays visible to the planner, so each
+    round shuffles only the small evolving side; ``localCheckpoint``
+    would hide the hash partitioning and every round would re-shuffle
+    the whole relation (round 14: random_walks at sf1 117 s -> 40 s).
+    The body must run the actions that read the cache (eager
+    checkpoints, counts, collects): no cache outlives the call that made
+    it.
     """
     df = df.persist()
     try:
@@ -133,3 +134,19 @@ def small_intermediate_coalesce(spark):
         yield
     finally:
         spark.conf.set(key, prev)
+
+
+@contextmanager
+def stationary(df, key):
+    """The stationary relation of an iterative graph algorithm for the
+    body of a ``with`` block: ``df`` hash-partitioned on ``key`` (the
+    join key of every round) and held by :func:`persisted`, inside a
+    :func:`small_intermediate_coalesce` scope for the rounds' small
+    evolving state.  Each round then shuffles only that state; the body
+    must run the actions that materialize the rounds."""
+    n_part = df.sparkSession.sparkContext.defaultParallelism
+    with (
+        small_intermediate_coalesce(df.sparkSession),
+        persisted(df.repartition(n_part, key)) as held,
+    ):
+        yield held

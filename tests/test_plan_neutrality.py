@@ -20,6 +20,26 @@ def test_codegen_ids_are_masked():
     assert "[codegen id : N]" in normalize(a)
 
 
+def test_rdd_call_sites_are_masked():
+    a = (
+        "Arguments: [a#1L], MapPartitionsRDD[31] at localCheckpoint at "
+        "NativeMethodAccessorImpl.java:0, ExistingRDD"
+    )
+    b = (
+        "Arguments: [a#9L], MapPartitionsRDD[87] at localCheckpoint at "
+        "<unknown>:0, ExistingRDD"
+    )
+    assert normalize(a) == normalize(b)
+    assert "RDD[N] at localCheckpoint," in normalize(a)
+    assert normalize(a) != normalize(b.replace("localCheckpoint", "checkpoint"))
+
+
+def test_common_expression_names_are_masked():
+    a = "if ((_common_expr_0#12 = 0.0)) null else _common_expr_0#12"
+    b = "if ((_common_expr_3#40 = 0.0)) null else _common_expr_3#40"
+    assert normalize(a) == normalize(b)
+
+
 def test_shape_differences_survive():
     a = "(3) HashAggregate [codegen id : 2]\nKeys [1]: [a#12L]"
     b = "(3) SortAggregate [codegen id : 2]\nKeys [1]: [a#12L]"

@@ -4,10 +4,11 @@ Purpose: prove a change is PLAN-NEUTRAL — run this tool in two
 checkouts (e.g. pre- and post-merge) and diff the output lines.
 
 Normalization: expression ids (`#123`), `plan_id=N`, `id=#N`,
-cached-RDD numbers and whole-stage codegen ids (`[codegen id : N]`)
-differ run-to-run without changing the plan shape, so they are masked
-before hashing.  Everything else — node order, partitioning arguments,
-pushed filters, ReadSchema — stays verbatim.
+RDD numbers and call sites, `_common_expr_N` names and whole-stage
+codegen ids (`[codegen id : N]`) differ run-to-run without changing the
+plan shape, so they are masked before hashing.  Everything else — node
+order, partitioning arguments, pushed filters, ReadSchema — stays
+verbatim.
 
 Usage: python tools/plan_neutrality.py [sf_dir] query [query ...]
 """
@@ -27,6 +28,13 @@ def normalize(plan: str) -> str:
     # every RDD the session ever created, so they drift with unrelated
     # session history without changing the plan shape
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    # and an RDD's call site (`... at localCheckpoint at
+    # NativeMethodAccessorImpl.java:0`) reads `<unknown>:0` once the JVM
+    # has replaced its reflective accessor, after enough earlier calls
+    plan = re.sub(r"(RDD\[N\] at \S+) at \S+:\d+", r"\1", plan)
+    # names of common subexpressions Spark factors out (nullif, ...)
+    # come from a JVM-wide counter
+    plan = re.sub(r"_common_expr_\d+", "_common_expr_N", plan)
     # the formatted plan of an already-executed AQE subtree (a cached
     # or checkpointed intermediate) numbers its codegen stages in stage
     # completion order, which varies between runs of one commit
