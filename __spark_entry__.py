@@ -32,6 +32,7 @@ from openseize_spark.operators import (
     stats as op_stats,
 )
 from openseize_spark.llm import dedup, sampling, similarity, text as llm_text
+from openseize_spark.streaming.windows import drain_stream
 
 NCH = 4
 FS = 100.0
@@ -131,29 +132,37 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _drain_stream(spark, out, qname: str, available_now: bool = False):
-    """Run a bounded gate stream to completion into a memory sink under
-    fixture-sized state partitioning (streaming/windows.py
-    bounded_state_partitions): stateful operators commit one state
-    store per shuffle partition per micro-batch, so the session/driver
-    default (32/200 partitions) pays 8-50x the fixed commit cost these
-    few-thousand-row fixtures need — measured 9.3 s -> 2.7 s on
-    streaming_join at sf0.01.  Values are partition-count invariant
-    (hash-partitioned state; the invariance probe covers the float
-    aggs).  Trigger semantics are the caller's and unchanged."""
-    from openseize_spark.streaming.windows import bounded_state_partitions
+def _stage_batches(spark, sf_dir: str, prefix: str, e: DataFrame, conds):
+    """Stage ``e`` as one single-file micro-batch per filter condition
+    (``batch_0``, ``batch_1``, ... under a fresh gate directory), stamp
+    their mtimes in that order and return the file stream that reads
+    them one file per trigger (maxFilesPerTrigger=1)."""
+    import os
+    import shutil
 
-    with bounded_state_partitions(spark):
-        w = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
+    d = _gate_tmp(spark, prefix + os.path.basename(os.path.normpath(sf_dir)))
+    shutil.rmtree(d, ignore_errors=True)
+    for i, cond in enumerate(conds):
+        e.filter(cond).coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(d, f"batch_{i}")
         )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        sq = w.start()
-        sq.processAllAvailable()
-        sq.stop()
+    _stamp_batch_mtimes(d, len(conds))
+    return (
+        spark.readStream.schema(e.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(d, "batch_*"))
+    )
+
+
+def _thirds(c, lo, span) -> list:
+    """The three ``_stage_batches`` conditions that cut column ``c`` at
+    ``lo + span`` and ``lo + 2 * span`` (the caller's arithmetic picks
+    ``span``; the oracles replay it exactly)."""
+    return [
+        c < lo + span,
+        (c >= lo + span) & (c < lo + 2 * span),
+        c >= lo + 2 * span,
+    ]
 
 
 def _ring_vnodes(n_shards: int, vnodes_per_shard: int):
@@ -175,25 +184,50 @@ def _ring_vnodes(n_shards: int, vnodes_per_shard: int):
     return sorted(vn)
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _event_ts(e: DataFrame) -> DataFrame:
     """events.parquet stores TIMESTAMP(NANOS). Depending on the Spark
-    build this surfaces as bigint (legacy nanosAsLong) or natively as
-    TIMESTAMP_NTZ; normalize both to a microsecond TimestampType so
-    every downstream query sees one schema. Session tz is pinned to UTC
-    so the NTZ->timestamp cast is epoch-identical to DuckDB's naive
-    interpretation."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    build and ``nanosAsLong`` this surfaces as bigint or natively as
+    TIMESTAMP_NTZ; normalize both to a microsecond TimestampType (batch
+    or stream) so every downstream query sees one schema.  The session
+    tz must be UTC so the NTZ->timestamp cast is epoch-identical to
+    DuckDB's naive interpretation."""
     dt = dict(e.dtypes)["ts"]
     if dt == "bigint":
         # integer division: `/` goes through DOUBLE, and epoch nanos
         # (~1.7e18) exceed 2^53 — float rounding shifts timestamps by
         # +-1 microsecond (positive epochs, so div == floor here)
-        e = e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif dt == "timestamp_ntz":
-        e = e.withColumn("ts", F.col("ts").cast("timestamp"))
+        return e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if dt == "timestamp_ntz":
+        return e.withColumn("ts", F.col("ts").cast("timestamp"))
     return e
+
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet with ``_event_ts`` applied, read under
+    nanosAsLong and a UTC session tz."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    return _event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+
+
+def _events_stream_dir(spark: SparkSession, sf_dir: str, prefix: str):
+    """Stage events.parquet as a file-stream source — file sources read
+    a directory, so a gate directory holds a symlink to this sf_dir's
+    events file — and return (directory, schema).  Pins the session tz
+    to UTC for ``_event_ts``; leaves nanosAsLong as the session has it
+    (the schema comes from the same session's static read)."""
+    import os
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    src = os.path.realpath(f"{sf_dir}/events.parquet")
+    d = _gate_tmp(spark, prefix + os.path.basename(os.path.dirname(src)))
+    os.makedirs(d, exist_ok=True)
+    link = os.path.join(d, "events.parquet")
+    if os.path.islink(link) and os.readlink(link) != src:
+        os.remove(link)
+    if not os.path.exists(link):
+        os.symlink(src, link)
+    return d, spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
 
 def _theilsen_slope(e: DataFrame, max_inrow: int = 1000) -> DataFrame:
@@ -3258,40 +3292,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             streaming_windowed_stats,
         )
 
-        import os
-        import tempfile
-
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = dict(raw.dtypes)["ts"]
-
-        # file streaming sources need a directory; stage a symlink dir
-        # pointing at this sf_dir's events file
-        src = os.path.realpath(f"{sf_dir}/events.parquet")
-        d = _gate_tmp(
-            spark, "stream_" + os.path.basename(os.path.dirname(src))
-        )
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "events.parquet")
-        if os.path.islink(link) and os.readlink(link) != src:
-            os.remove(link)
-        if not os.path.exists(link):
-            os.symlink(src, link)
+        d, schema = _events_stream_dir(spark, sf_dir, "stream_")
 
         def transform(src):
-            e = src
-            if ts_type == "bigint":
-                e = e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif ts_type == "timestamp_ntz":
-                e = e.withColumn("ts", F.col("ts").cast("timestamp"))
             return streaming_windowed_stats(
-                e, window_dur="1 hour", watermark="0 seconds"
+                _event_ts(src), window_dur="1 hour", watermark="0 seconds"
             )
 
         out = run_batch_as_stream(
             spark,
             d,
-            raw.schema,
+            schema,
             transform,
             queryName="gate_streaming_hour",
             output_mode="complete",
@@ -3325,35 +3336,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         per-user 30-minute-gap sessions over the events stream must
         produce the same per-user session counts as the batch lag-based
         sessionize oracle."""
-        import os
-        import tempfile
-
         from openseize_spark.streaming.dedup import streaming_sessionize
         from openseize_spark.streaming.windows import run_batch_as_stream
 
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = dict(raw.dtypes)["ts"]
-
-        src = os.path.realpath(f"{sf_dir}/events.parquet")
-        d = _gate_tmp(
-            spark, "stream_" + os.path.basename(os.path.dirname(src))
-        )
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "events.parquet")
-        if os.path.islink(link) and os.readlink(link) != src:
-            os.remove(link)
-        if not os.path.exists(link):
-            os.symlink(src, link)
+        d, schema = _events_stream_dir(spark, sf_dir, "stream_")
 
         def transform(s_df):
-            e = s_df
-            if ts_type == "bigint":
-                e = e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif ts_type == "timestamp_ntz":
-                e = e.withColumn("ts", F.col("ts").cast("timestamp"))
             return streaming_sessionize(
-                e,
+                _event_ts(s_df),
                 gap="30 minutes",
                 watermark="0 seconds",
                 key_col="user_id",
@@ -3363,7 +3353,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = run_batch_as_stream(
             spark,
             d,
-            raw.schema,
+            schema,
             transform,
             queryName="gate_streaming_sessionize",
             output_mode="complete",
@@ -3391,35 +3381,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         nation dim (user_id % 25 -> nationkey), tumbling-day counts and
         value sums per nation.  The join is stateless per micro-batch;
         the oracle is the plain batch join + GROUP BY."""
-        import os
-
         from openseize_spark.streaming.windows import (
             run_batch_as_stream,
             streaming_enrich,
         )
 
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = dict(raw.dtypes)["ts"]
+        d, schema = _events_stream_dir(spark, sf_dir, "stream_enrich_")
         nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
 
-        src = os.path.realpath(f"{sf_dir}/events.parquet")
-        d = _gate_tmp(
-            spark, "stream_enrich_" + os.path.basename(os.path.dirname(src))
-        )
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "events.parquet")
-        if os.path.islink(link) and os.readlink(link) != src:
-            os.remove(link)
-        if not os.path.exists(link):
-            os.symlink(src, link)
-
         def transform(s):
-            e = s
-            if ts_type == "bigint":
-                e = e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif ts_type == "timestamp_ntz":
-                e = e.withColumn("ts", F.col("ts").cast("timestamp"))
+            e = _event_ts(s)
             return streaming_enrich(
                 e,
                 nation,
@@ -3431,7 +3402,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = run_batch_as_stream(
             spark,
             d,
-            raw.schema,
+            schema,
             transform,
             queryName="gate_streaming_enrich",
             output_mode="complete",
@@ -3454,31 +3425,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         the same events directory; inner-join matches emit in append
         mode with no downstream stateful operator.  The oracle is the
         identical batch self-join."""
-        import os
-
         from openseize_spark.streaming.windows import streaming_interval_join
 
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_type = dict(raw.dtypes)["ts"]
-
-        src = os.path.realpath(f"{sf_dir}/events.parquet")
-        d = _gate_tmp(
-            spark, "stream_join_" + os.path.basename(os.path.dirname(src))
-        )
-        os.makedirs(d, exist_ok=True)
-        link = os.path.join(d, "events.parquet")
-        if os.path.islink(link) and os.readlink(link) != src:
-            os.remove(link)
-        if not os.path.exists(link):
-            os.symlink(src, link)
+        d, schema = _events_stream_dir(spark, sf_dir, "stream_join_")
 
         def side(kind: str, prefix: str):
-            e = spark.readStream.schema(raw.schema).parquet(d)
-            if ts_type == "bigint":
-                e = e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-            elif ts_type == "timestamp_ntz":
-                e = e.withColumn("ts", F.col("ts").cast("timestamp"))
+            e = _event_ts(spark.readStream.schema(schema).parquet(d))
             return e.filter(F.col("event_type") == kind).select(
                 F.col("user_id").alias(f"{prefix}_user"),
                 F.col("event_id").alias(f"{prefix}_id"),
@@ -3501,9 +3453,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("c_id").alias("click_id"),
             (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("gap_us"),
         )
-        qname = "gate_streaming_join"
-        _drain_stream(spark, out, qname, available_now=True)
-        return spark.sql(f"SELECT * FROM {qname}")
+        return drain_stream(
+            spark, out, "gate_streaming_join", available_now=True
+        )
 
     q["streaming_join"] = q_streaming_join
 
@@ -3696,38 +3648,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sink.  State carry across micro-batch boundaries is exact, so
         the stream must equal the batch sosfilt — the oracle is the same
         recursive-CTE replay the batch query uses."""
-        import os
-        import shutil
-        import tempfile
-
         from openseize_spark.streaming.stateful import streaming_sosfilt
 
         sosd = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
         sig = _signal_sliced(spark, sf_dir).df.select(
             "recording_id", "channel", "t", "v"
         )
-        d = _gate_tmp(
-            spark, "sosfilt_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
-        cuts = (0, 700, 1500, IIR_SLICE)
-        for i in range(3):
-            (
-                sig.filter((F.col("t") >= cuts[i]) & (F.col("t") < cuts[i + 1]))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(d, f"batch_{i}"))
-            )
-        _stamp_batch_mtimes(d, 3)
-        stream = (
-            spark.readStream.schema(sig.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(d, "batch_*"))
-        )
+        t, cuts = F.col("t"), (0, 700, 1500, IIR_SLICE)
+        conds = [(t >= cuts[i]) & (t < cuts[i + 1]) for i in range(3)]
+        stream = _stage_batches(spark, sf_dir, "sosfilt_", sig, conds)
         out = streaming_sosfilt(stream, sosd.sos)
-        qname = "gate_streaming_sosfilt"
-        _drain_stream(spark, out, qname)
-        return spark.sql(f"SELECT channel, t, v FROM {qname}")
+        return drain_stream(spark, out, "gate_streaming_sosfilt").select(
+            "channel", "t", "v"
+        )
 
     q["streaming_sosfilt"] = q_streaming_sosfilt
 
@@ -3737,11 +3670,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         state across micro-batches — events staged as three sequential
         ts-range files, maxFilesPerTrigger=1.  All-integer recurrence,
         so the stream equals the batch replay exactly; the oracle is a
-        recursive-CTE replay of the same recurrence.  Registered after
-        the round-5 window; round-6 window material."""
-        import os
-        import shutil
-
+        recursive-CTE replay of the same recurrence."""
         from openseize_spark.streaming.stateful import streaming_cusum
 
         e = (
@@ -3757,53 +3686,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .select("user_id", "event_id", "ts", "value")
         )
-        d = _gate_tmp(
-            spark, "cusum_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
         lo, hi = e.agg(F.min("ts"), F.max("ts")).collect()[0]
-        span = (hi - lo) / 3
-        cuts = [lo, lo + span, lo + 2 * span]
-        conds = [
-            F.col("ts") < cuts[1],
-            (F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2]),
-            F.col("ts") >= cuts[2],
-        ]
-        for i, cond in enumerate(conds):
-            e.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(d, f"batch_{i}")
-            )
-        _stamp_batch_mtimes(d, 3)
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(d, "batch_*"))
-        )
+        conds = _thirds(F.col("ts"), lo, (hi - lo) / 3)
+        stream = _stage_batches(spark, sf_dir, "cusum_", e, conds)
         out = streaming_cusum(
             stream, target_cents=10000, slack_cents=2000, h_cents=100000
         )
-        qname = "gate_streaming_cusum"
-        _drain_stream(spark, out, qname)
-        return spark.sql(f"SELECT user_id, event_id, s, alarm FROM {qname}")
+        return drain_stream(spark, out, "gate_streaming_cusum").select(
+            "user_id", "event_id", "s", "alarm"
+        )
 
     q["streaming_cusum"] = q_streaming_cusum
 
     def q_streaming_hll(spark, sf_dir):
         """Streaming HyperLogLog distinct-user registers per event type
         (streaming/stateful.streaming_hll) — the mergeable-sketch
-        family on the streaming surface, fourth applyInPandasWithState
-        operator: bounded 2^5-register state per key, emitted as an
-        exact-int64 summary after each of three sequential
-        ts-range micro-batch files.  Batch cuts are pure integer
+        family on the streaming surface: bounded 2^5-register state
+        per key, emitted as an exact-int64 summary after each of three
+        sequential ts-range micro-batch files.  Batch cuts are pure integer
         microsecond arithmetic (span = (hi - lo) div 3) so the oracle
         replays them; per-key batch_idx counts the batches THE KEY
         appeared in (the oracle ranks its present prefixes).  The
         float estimate is computed HERE from the streamed integers —
         one multiply + one divide (+ the linear-counting ln branch),
         the hll_estimate expression shape."""
-        import os
-        import shutil
-
         from openseize_spark.llm.sketch import _hll_alpha
         from openseize_spark.streaming.stateful import streaming_hll
 
@@ -3821,33 +3727,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "event_type", "user_id", F.unix_micros("ts").alias("_us")
             )
         )
-        d = _gate_tmp(
-            spark, "shll_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
-        row = e.agg(
-            F.min("_us").alias("lo"), F.max("_us").alias("hi")
-        ).collect()[0]
-        lo, span = row.lo, (row.hi - row.lo) // 3
-        conds = [
-            F.col("_us") < lo + span,
-            (F.col("_us") >= lo + span) & (F.col("_us") < lo + 2 * span),
-            F.col("_us") >= lo + 2 * span,
-        ]
-        for i, cond in enumerate(conds):
-            e.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(d, f"batch_{i}")
-            )
-        _stamp_batch_mtimes(d, 3)
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(d, "batch_*"))
-        )
+        lo, hi = e.agg(F.min("_us"), F.max("_us")).collect()[0]
+        conds = _thirds(F.col("_us"), lo, (hi - lo) // 3)
+        stream = _stage_batches(spark, sf_dir, "shll_", e, conds)
         out = streaming_hll(stream, b=b)
-        qname = "gate_streaming_hll"
-        _drain_stream(spark, out, qname)
-        res = spark.table(qname)
+        res = drain_stream(spark, out, "gate_streaming_hll")
         raw = F.lit(alpha * m * m * float(1 << 32)) / F.col("sum_units")
         est = F.when(
             (F.col("n_empty") > 0) & (raw <= 2.5 * m),
@@ -3984,9 +3868,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         and stream through the dedup; the result projects ONLY the
         fingerprint — which duplicate row survives is batch-order
         dependent, but the distinct fingerprint set is deterministic and
-        equals the batch SELECT DISTINCT.  Registered after the round-5
-        window (local evidence this round); lead the round-6 window with
-        it."""
+        equals the batch SELECT DISTINCT."""
         import os
         import shutil
         import tempfile
@@ -4011,9 +3893,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         stream = spark.readStream.schema(staged.schema).parquet(d)
         out = streaming_exact_dedup(stream, watermark="30 days")
-        qname = "gate_streaming_dedup"
-        _drain_stream(spark, out, qname)
-        return spark.sql(f"SELECT text FROM {qname}").select(
+        return drain_stream(spark, out, "gate_streaming_dedup").select(
             F.md5(dedup.normalize_text(F.col("text"))).alias("fp")
         )
 
@@ -7285,9 +7165,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         maxFilesPerTrigger=1, the streaming_cusum harness.  Refill is a
         floor division on non-negative microsecond gaps, so the stream
         equals the recursive-CTE replay bit-for-bit."""
-        import os
-        import shutil
-
         from openseize_spark.streaming.stateful import streaming_rate_limit
 
         e = (
@@ -7295,35 +7172,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
             .select("user_id", "event_id", "ts")
         )
-        d = _gate_tmp(
-            spark, "ratelim_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
         lo, hi = e.agg(F.min("ts"), F.max("ts")).collect()[0]
-        span = (hi - lo) / 3
-        cuts = [lo, lo + span, lo + 2 * span]
-        conds = [
-            F.col("ts") < cuts[1],
-            (F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2]),
-            F.col("ts") >= cuts[2],
-        ]
-        for i, cond in enumerate(conds):
-            e.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(d, f"batch_{i}")
-            )
-        _stamp_batch_mtimes(d, 3)
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(d, "batch_*"))
-        )
+        conds = _thirds(F.col("ts"), lo, (hi - lo) / 3)
+        stream = _stage_batches(spark, sf_dir, "ratelim_", e, conds)
         out = streaming_rate_limit(
             stream, capacity_tokens=5, us_per_microtoken=60
         )
-        qname = "gate_streaming_rate_limit"
-        _drain_stream(spark, out, qname)
-        return spark.sql(
-            f"SELECT user_id, event_id, tokens_after, accepted FROM {qname}"
+        return drain_stream(spark, out, "gate_streaming_rate_limit").select(
+            "user_id", "event_id", "tokens_after", "accepted"
         )
 
     q["streaming_rate_limit"] = q_streaming_rate_limit
@@ -14229,11 +14085,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         m − min(m) and the λ alarm, where each increment is the
         identical IEEE chain the batch page_hinkley query runs
         JVM-side (half-away rounding in the kernel), so
-        stream == batch == SQL replay bit-for-bit.  Registered after
-        the round-13/14 windows; round-15 window material."""
-        import os
-        import shutil
-
+        stream == batch == SQL replay bit-for-bit."""
         from openseize_spark.streaming.stateful import (
             streaming_page_hinkley,
         )
@@ -14245,34 +14097,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             )
             .select("event_type", "event_id", "ts", "value")
         )
-        d = _gate_tmp(
-            spark, "ph_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
         lo, hi = e.agg(F.min("ts"), F.max("ts")).collect()[0]
-        span = (hi - lo) / 3
-        cuts = [lo, lo + span, lo + 2 * span]
-        conds = [
-            F.col("ts") < cuts[1],
-            (F.col("ts") >= cuts[1]) & (F.col("ts") < cuts[2]),
-            F.col("ts") >= cuts[2],
-        ]
-        for i, cond in enumerate(conds):
-            e.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(d, f"batch_{i}")
-            )
-        _stamp_batch_mtimes(d, 3)
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(d, "batch_*"))
-        )
+        conds = _thirds(F.col("ts"), lo, (hi - lo) / 3)
+        stream = _stage_batches(spark, sf_dir, "ph_", e, conds)
         out = streaming_page_hinkley(stream)
-        qname = "gate_streaming_ph"
-        _drain_stream(spark, out, qname)
-        return spark.sql(
-            f"SELECT event_type, event_id, exc_units, alarm"
-            f" FROM {qname}"
+        return drain_stream(spark, out, "gate_streaming_ph").select(
+            "event_type", "event_id", "exc_units", "alarm"
         )
 
     q["streaming_page_hinkley"] = q_streaming_page_hinkley
@@ -14801,8 +14631,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_streaming_topk(spark, sf_dir):
         """Streaming bottom-k/KMV sampler per event type
-        (streaming/stateful.streaming_topk) — the seventh
-        applyInPandasWithState operator: keep the k=8 smallest
+        (streaming/stateful.streaming_topk): keep the k=8 smallest
         portable salted-md5 priorities per key across micro-batches
         (keeping the k smallest hash priorities IS a deterministic
         uniform-without-replacement sample of the distinct stream —
@@ -14812,11 +14641,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         as streaming_hll; the oracle ranks each present prefix with
         the identical (priority, event_id) order.  All integers; the
         python, Spark, and DuckDB md5 paths produce the same 32-bit
-        priority by construction.  Registered after the round-14/15
-        windows; round-16 window material."""
-        import os
-        import shutil
-
+        priority by construction."""
         from openseize_spark.streaming.stateful import streaming_topk
 
         e = (
@@ -14830,33 +14655,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "event_type", "event_id", F.unix_micros("ts").alias("_us")
             )
         )
-        d = _gate_tmp(
-            spark, "stopk_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
-        row = e.agg(
-            F.min("_us").alias("lo"), F.max("_us").alias("hi")
-        ).collect()[0]
-        lo, span = row.lo, (row.hi - row.lo) // 3
-        conds = [
-            F.col("_us") < lo + span,
-            (F.col("_us") >= lo + span) & (F.col("_us") < lo + 2 * span),
-            F.col("_us") >= lo + 2 * span,
-        ]
-        for i, cond in enumerate(conds):
-            e.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(d, f"batch_{i}")
-            )
-        _stamp_batch_mtimes(d, 3)
-        stream = (
-            spark.readStream.schema(e.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(d, "batch_*"))
-        )
+        lo, hi = e.agg(F.min("_us"), F.max("_us")).collect()[0]
+        conds = _thirds(F.col("_us"), lo, (hi - lo) // 3)
+        stream = _stage_batches(spark, sf_dir, "stopk_", e, conds)
         out = streaming_topk(stream, k=8, seed="tk")
-        qname = "gate_streaming_topk"
-        _drain_stream(spark, out, qname)
-        return spark.table(qname).select(
+        return drain_stream(spark, out, "gate_streaming_topk").select(
             "event_type", "batch_idx", "rank", "event_id", "priority"
         )
 

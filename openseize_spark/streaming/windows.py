@@ -1,16 +1,20 @@
-"""Structured Streaming analogs of the sliding-window estimators.
+"""Structured Streaming analogs of the sliding-window estimators, and
+the one driver that runs a bounded stream to completion.
 
 reference mapping (SURVEY §2.10):
 - welch/stft segmentation (nfft window, stride hop)
   -> ``window(ts, windowDuration, slideDuration)`` sliding windows;
-- carried IIR state `zi` across chunks (core/numerical.py:326-335)
-  -> ``applyInPandasWithState`` keyed by channel;
 - trailing-partial-segment drop -> emit only complete windows
   (watermark + append mode).
+(The carried IIR state ``zi`` -> ``applyInPandasWithState`` mapping
+lives in streaming/stateful.py.)
 
 These run against a streaming source (rate / kafka / file).  The batch
 operators in operators/ are the primary engine; this module proves the
 same semantics stream, using a file/memory source for tests.
+``drain_stream`` is the bounded-stream driver every fixture shares:
+fixture-sized state partitioning -> memory sink -> start ->
+processAllAvailable -> stop.
 """
 
 from __future__ import annotations
@@ -22,8 +26,9 @@ from pyspark.sql import functions as F
 
 
 @contextmanager
-def bounded_state_partitions(spark, n: int | None = None):
-    """Scoped shuffle-partition override for BOUNDED streaming fixtures.
+def bounded_state_partitions(spark):
+    """Scoped 4-shuffle-partition override for BOUNDED streaming
+    fixtures.
 
     Every stateful streaming operator creates one state-store instance
     per shuffle partition per micro-batch, and each instance pays a
@@ -38,20 +43,15 @@ def bounded_state_partitions(spark, n: int | None = None):
     The partition count is a FIXTURE property, not cluster tuning: a
     production stream sizes state partitioning by state volume at
     deploy time, and none of these bounded-fixture harnesses are that
-    path.  Parameterised via ``spark.openseize.streaming.
-    fixturePartitions`` (default 4).  The conf key is session-global —
-    scoped set/restore assumes a serially-used session, same contract
-    as ``small_intermediate_coalesce``; the streaming query must START
-    inside the scope (Spark pins the stream's shuffle partitioning at
-    query start).
+    path, so the count is a constant.  The conf key is
+    session-global — scoped set/restore assumes a serially-used
+    session, same contract as ``small_intermediate_coalesce``; the
+    streaming query must START inside the scope (Spark pins the
+    stream's shuffle partitioning at query start).
     """
-    if n is None:
-        n = int(
-            spark.conf.get("spark.openseize.streaming.fixturePartitions", "4")
-        )
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, "4")
     try:
         yield
     finally:
@@ -163,29 +163,53 @@ def streaming_interval_join(
     return lw.join(rw, cond, "inner")
 
 
+def drain_stream(
+    spark,
+    out: DataFrame,
+    qname: str,
+    output_mode: str = "append",
+    available_now: bool = False,
+) -> DataFrame:
+    """Run the bounded stream ``out`` to completion into the memory
+    sink ``qname`` and return that table.
+
+    Runs under ``bounded_state_partitions`` (the session/driver default
+    of 32/200 partitions pays 8-50x the state-store commit cost these
+    fixtures need; values are partition-count invariant).  The trigger
+    is the caller's: ``available_now``, or the default trigger (the
+    next micro-batch as soon as the previous one ends).  A failed
+    micro-batch terminates the query and raises here; ``finally`` also
+    stops it when the wait itself is interrupted.
+    """
+    with bounded_state_partitions(spark):
+        w = (
+            out.writeStream.outputMode(output_mode)
+            .format("memory")
+            .queryName(qname)
+        )
+        if available_now:
+            w = w.trigger(availableNow=True)
+        sq = w.start()
+        try:
+            sq.processAllAvailable()
+        finally:
+            sq.stop()
+    return spark.table(qname)
+
+
 def run_batch_as_stream(
     spark, parquet_path: str, schema, transform, queryName="stream_out",
     output_mode: str = "complete",
 ):
     """Drive a batch parquet directory through a streaming query
-    synchronously (memory sink) — the test harness for streaming parity.
+    synchronously (memory sink, availableNow trigger) — the test
+    harness for streaming parity.
 
     Default 'complete' mode flushes every window; 'append' emits only
     windows already past the watermark (trailing windows held back —
     the streaming analog of welch's trailing-partial-segment drop).
     """
     src = spark.readStream.schema(schema).parquet(parquet_path)
-    out = transform(src)
-    # bounded fixture by definition (this IS the parity harness): run
-    # the stream with fixture-sized state partitioning
-    with bounded_state_partitions(spark):
-        q = (
-            out.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(queryName)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-    return spark.sql(f"SELECT * FROM {queryName}")
+    return drain_stream(
+        spark, transform(src), queryName, output_mode, available_now=True
+    )
