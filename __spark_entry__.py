@@ -84,6 +84,9 @@ def _signal(spark: SparkSession, sf_dir: str) -> SignalFrame:
 # Full-length variants (*_full, rows-only) exist for bench throughput.
 IIR_SLICE = 2048
 
+# English function-word hits of stopword_score_by_lang
+_EN_MARKERS = (" the ", " and ", " of ", " is ")
+
 
 def _signal_sliced(spark: SparkSession, sf_dir: str) -> SignalFrame:
     sf = _signal(spark, sf_dir)
@@ -91,19 +94,29 @@ def _signal_sliced(spark: SparkSession, sf_dir: str) -> SignalFrame:
 
 
 
+_GATE_ROOTS: dict[str, str] = {}
+
+
 def _gate_tmp(spark, name: str) -> str:
-    """Session-scoped gate staging path.  The applicationId suffix keeps
+    """Session-scoped gate staging path under one per-application parent
+    directory, removed when the process exits.  The applicationId keeps
     concurrent local sessions (a bench run next to an oracle check on
     one box) from clobbering each other's fixture files mid-write; it is
     stable within a session, so repeated invocations of the same query
     stay idempotent."""
+    import atexit
     import os
+    import shutil
     import tempfile
 
-    return os.path.join(
-        tempfile.gettempdir(),
-        f"os_gate_{name}_{spark.sparkContext.applicationId}",
-    )
+    app = spark.sparkContext.applicationId
+    root = _GATE_ROOTS.get(app)
+    if root is None:
+        root = os.path.join(tempfile.gettempdir(), f"os_gate_{app}")
+        os.makedirs(root, exist_ok=True)
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _GATE_ROOTS[app] = root
+    return os.path.join(root, name)
 
 
 def _stamp_batch_mtimes(d: str, n_batches: int) -> None:
@@ -1321,16 +1334,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ships with — document/byte/token totals, language and source
         breadth, exact duplicate rate — from one documents scan plus
         the fingerprint distinct (two-level, skew-safe).  All-integer
-        until the final rate.  Registered after the round-5 window;
-        round-6 window material."""
+        until the final rate."""
         docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        from openseize_spark.llm.dedup import normalize_text
-
-        words = F.filter(
-            F.split(normalize_text(F.col("text")), " "),
-            lambda s: F.length(s) > 0,
-        )
-        fp = F.md5(normalize_text(F.col("text")))
+        words = dedup.tokenize(F.col("text"))
+        fp = F.md5(dedup.normalize_text(F.col("text")))
         per_fp = docs.groupBy(fp.alias("_fp")).agg(F.count("*").alias("_n"))
         dups = per_fp.agg(
             F.sum("_n").alias("_docs"), F.count("*").alias("_distinct")
@@ -2130,10 +2137,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         norm = F.concat(
             F.lit(" "), dedup.normalize_text(F.col("text")), F.lit(" ")
         )
-        hits = sum(
-            llm_text.occurrence_count(norm, f" {w} ")
-            for w in ("the", "and", "of", "is")
-        )
+        hits = llm_text._marker_hits(norm, _EN_MARKERS)
         return (
             docs.select("lang", hits.alias("_h"))
             .groupBy("lang")
@@ -6535,14 +6539,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _t(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull()
         )
-        norm = F.regexp_replace(
-            F.lower(F.trim(F.col("text"))), r"\s+", " "
-        )
-        words = F.filter(
-            F.split(norm, " "), lambda s: F.length(s) > 0
-        )
         toks = docs.select(
-            "doc_id", F.col("lang"), F.explode(words).alias("w")
+            "doc_id", "lang", F.explode(dedup.tokenize(F.col("text"))).alias("w")
         )
         # vocab-x-langs bounded; three consumers (totals, vocab, the
         # model densify join) — checkpoint so the token explode +
@@ -7291,11 +7289,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         products."""
         docs = _t(spark, sf_dir, "documents")
         top = llm_text.vocab_stats(docs, top_k=30).select("word")
-        norm = dedup.normalize_text(F.col("text"))
-        words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
         gs = (
-            docs.filter(F.col("text").isNotNull())
-            .select("doc_id", F.explode(words).alias("word"))
+            llm_text._token_rows(docs, "text", "word", "doc_id")
             .join(F.broadcast(top), on="word")
             .groupBy("doc_id")
             .agg(F.array_sort(F.collect_set("word")).alias("_ws"))
@@ -7676,10 +7671,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _t(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull()
         )
-        norm = dedup.normalize_text(F.col("text"))
-        words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
         toks = docs.select(
-            "doc_id", F.posexplode(words).alias("pos", "w")
+            "doc_id", F.posexplode(dedup.tokenize(F.col("text"))).alias("pos", "w")
         )
         wdoc = W.partitionBy("doc_id").orderBy("pos")
         bi = (
@@ -7739,10 +7732,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _t(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull()
         )
-        norm = dedup.normalize_text(F.col("text"))
-        words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
         toks = docs.select(
-            "doc_id", F.posexplode(words).alias("pos", "w")
+            "doc_id", F.posexplode(dedup.tokenize(F.col("text"))).alias("pos", "w")
         ).select("doc_id", "pos")
         cut = sampling.HASH_SPACE // 15
         h = sampling.salted_hash(
@@ -8197,13 +8188,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         bm = q_bm25_topk(spark, sf_dir).select(
             "query_id", "doc_id", "rank"
         )
-        norm = dedup.normalize_text(F.col("text"))
-        words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-        toks = (
-            docs.filter(F.col("text").isNotNull())
-            .select("doc_id", F.explode(words).alias("word"))
-            .distinct()
-        )
+        toks = llm_text._token_rows(docs, "text", "word", "doc_id").distinct()
         qt = spark.createDataFrame(
             [
                 (qid, w)
@@ -8418,9 +8403,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = _t(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull()
         )
-        norm = dedup.normalize_text(F.col("text"))
-        words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-        toks = docs.select("lang", F.explode(words).alias("w"))
+        toks = docs.select("lang", F.explode(dedup.tokenize(F.col("text"))).alias("w"))
         pieces = F.floor((F.length("w") + 3) / 4).cast("bigint")
         m = toks.groupBy("lang").agg(
             F.count("*").cast("bigint").alias("n_words"),
@@ -11097,22 +11080,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sort.  ONE scan of the text column: explode_outer keeps
         token-less docs as a null-token row, so the doc count N
         derives from the same per-doc aggregate instead of a second
-        full pass over the corpus's widest column (the r11 plan-sweep
-        found the original two-scan shape re-reading text just to
-        count rows).  Registered after the round-11/12 windows;
-        round-13 window material."""
+        full pass over the corpus's widest column (a two-scan shape
+        re-reads text just to count rows)."""
         docs = _t(spark, sf_dir, "documents").filter(
             F.col("text").isNotNull()
         )
-        words = F.filter(
-            F.split(
-                F.regexp_replace(F.lower(F.trim("text")), r"\s+", " "),
-                " ",
-            ),
-            lambda s: F.length(s) > 0,
-        )
         tc0 = (
-            docs.select("doc_id", F.explode_outer(words).alias("_w"))
+            docs.select(
+                "doc_id", F.explode_outer(dedup.tokenize(F.col("text"))).alias("_w")
+            )
             .groupBy("doc_id", "_w")
             .agg(F.count("*").cast("bigint").alias("_c"))
             .localCheckpoint(eager=False)  # N + moments consumers
@@ -13699,11 +13675,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         exact int64, top-20 via orderBy().limit() —
         TakeOrderedAndProject, per-partition top-k, never a global
         sort.  Ties break on the term.  Returns (word, k_first,
-        k_second, drift_units, rank).  Registered after the
-        round-13/14 windows; round-15 window material."""
+        k_second, drift_units, rank)."""
         docs = _t(spark, sf_dir, "documents")
-        norm = dedup.normalize_text(F.col("text"))
-        words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
         mid = docs.filter(F.col("text").isNotNull()).agg(
             F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi")
         )
@@ -13717,7 +13690,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     (F.col("doc_id") - F.col("_lo"))
                     < (F.col("_hi") - F.col("doc_id"))
                 ).alias("_first"),
-                F.explode(words).alias("word"),
+                F.explode(dedup.tokenize(F.col("text"))).alias("word"),
             )
             .groupBy("word")
             .agg(
@@ -14009,21 +13982,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         ≤ 3·|queries| ranked documents (broadcast semi-join before
         the explode — the full corpus is never tokenized here), and
         the per-window count is exact int64 with a struct-min argmax.
-        Returns (query_id, doc_id, rank, best_start, n_in_window).
-        Registered after the round-13/14 windows; round-15 window
-        material."""
+        Returns (query_id, doc_id, rank, best_start, n_in_window)."""
         docs = _t(spark, sf_dir, "documents")
         ranked = llm_text.bm25_topk(
             docs, queries=_BM25_QUERIES, k=3
         ).select("query_id", "doc_id", "rank")
         rdocs = ranked.select("doc_id").distinct()
-        norm = dedup.normalize_text(F.col("text"))
-        words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-        toks = (
-            docs.join(F.broadcast(rdocs), on="doc_id")
-            .select(
-                "doc_id", F.posexplode(words).alias("_pos", "word")
-            )
+        toks = docs.join(F.broadcast(rdocs), on="doc_id").select(
+            "doc_id", F.posexplode(dedup.tokenize(F.col("text"))).alias("_pos", "word")
         )
         qrows = [
             (int(qid), w)
@@ -14923,45 +14889,6 @@ _GATE_PRIORITY = [
     "random_projection", "unigram_logprob", "semantic_dedup",
     "pq_encode", "pq_adc_topk", "mixture_sample", "vocab_stats",
     "dup_span_detect", "bpe_pair_counts",
-    # ("source_divergence" spilled to the round-15 head by the
-    # round-14 amendment above — the sp_counting re-gate took its
-    # slot)
-]
-
-
-# READY-TO-SWAP round-15 window (execute at round-15 start, AFTER
-# CORRECTNESS_r14 lands: rebind `_GATE_PRIORITY = _GATE_PRIORITY_R15`
-# — one line, no list edit).  Composition, adjusted for the round-14
-# amendment: the 25 round-13-session registrations in registration
-# order (each battery-verified at registration and LOCALCHECK_r13-green;
-# the r13 judge independently re-ran 12 of them — 12/12 match, 6/6
-# shuffle-invariant), then the THREE r06 spill rows
-# ("source_divergence" — displaced from the R14 window by the
-# sp_counting re-gate amendment — plus the two long-planned spills
-# "corpus_pipeline" and "pq_refine_topk"), then the first 22 of the
-# r07 cohort in tools/freshness_queue.py order.  25 + 3 + 22 = 50.
-# Replica-proven 50/50 green at composition (round-14 session,
-# post-hardening head).
-_GATE_PRIORITY_R15 = [
-    # 25 round-13-session conversions (registration order)
-    "als_item_step", "skipgram_cooc", "binseg_changepoints",
-    "seq_rules", "rake_keywords", "mantel_haenszel", "page_hinkley",
-    "friedman_test", "audio_vad", "theil_sen", "gini_by_type",
-    "trimmed_mean", "kendall_tau_binned", "brier_score",
-    "pinball_quantile", "mad_by_type", "bootstrap_ci", "term_drift",
-    "forecast_mae", "dedup_eval", "ranking_inversions",
-    "snippet_extract", "streaming_page_hinkley", "mmr_diversify",
-    "graph_assortativity",
-    # 3 r06 spill rows (freshness_queue order)
-    "source_divergence", "corpus_pipeline", "pq_refine_topk",
-    # 22 r07 freshness re-gates (freshness_queue order)
-    "label_centroids", "minhash_estimate", "embedding_quality",
-    "lev_verify", "cluster_purity", "coherence", "promo_revenue",
-    "priority_late_orders", "sole_late_supplier", "important_parts",
-    "top_revenue_supplier", "pagerank_sim", "temperature_sample",
-    "streaming_join", "rrf_fusion", "streaming_cusum", "chunk_dedup",
-    "nation_volume", "market_share", "profit_by_nation",
-    "returned_customers", "order_count_dist",
 ]
 
 
@@ -14975,6 +14902,7 @@ def oracle_sql() -> dict[str, str]:
     from openseize_spark.plans.oracles import dlit
 
     sig = "WITH " + signal_cte(NCH)
+    _lang_best = f"greatest({llm_text._LANG_SCORES_SQL})"
 
     # FIR oracles: identical float64 tap literals, same zero-padded 'same'
     # convolution alignment as operators/fir.apply_fir_sql.
@@ -15419,68 +15347,54 @@ def oracle_sql() -> dict[str, str]:
                    round(40 * v / {chi2_sql(z_lo)}, 9) AS ci_upper
             FROM signal WHERE t <= 200
         """,
-        "dedup_exact": """
+        "dedup_exact": f"""
             WITH fp AS (
               SELECT doc_id,
-                     md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
+                     md5({dedup.normalize_text_sql()}) AS f
               FROM documents
             )
             SELECT min(doc_id) AS doc_id, count(*) AS dup_count
             FROM fp GROUP BY f
         """,
-        "text_stats": """
+        "text_stats": f"""
             WITH norm AS (
               SELECT doc_id, text,
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS nt
+                     {dedup.normalize_text_sql()} AS nt
               FROM documents
             )
             SELECT doc_id,
                    CAST(length(text) AS BIGINT) AS n_chars,
-                   CAST(CASE WHEN length(nt) = 0 THEN 0
-                        ELSE (length(nt) - length(replace(nt, ' ', ''))) + 1
-                        END AS BIGINT) AS n_tokens,
+                   CAST({llm_text._count_tokens_sql("nt")} AS BIGINT) AS n_tokens,
                    CAST(length(replace(nt, ' ', '')) AS DOUBLE) /
-                     greatest(CASE WHEN length(nt) = 0 THEN 0
-                              ELSE (length(nt) - length(replace(nt, ' ', ''))) + 1 END, 1)
+                     greatest({llm_text._count_tokens_sql("nt")}, 1)
                      AS avg_token_len
             FROM norm
         """,
-        "stopword_score_by_lang": """
+        "stopword_score_by_lang": f"""
             WITH norm AS (
               SELECT lang,
-                     ' ' || regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') || ' ' AS nt
+                     ' ' || {dedup.normalize_text_sql()} || ' ' AS nt
               FROM documents
             )
             SELECT lang,
-                   avg( (length(nt) - length(replace(nt, ' the ', ''))) / 5.0
-                      + (length(nt) - length(replace(nt, ' and ', ''))) / 5.0
-                      + (length(nt) - length(replace(nt, ' of ', ''))) / 4.0
-                      + (length(nt) - length(replace(nt, ' is ', ''))) / 4.0
-                   ) AS avg_en_hits,
+                   avg({llm_text._marker_hits_sql("nt", _EN_MARKERS)}) AS avg_en_hits,
                    count(*) AS n_docs
             FROM norm GROUP BY lang
         """,
-        "fingerprint": """
+        "fingerprint": f"""
             SELECT doc_id,
-                   md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
+                   md5({dedup.normalize_text_sql()}) AS fingerprint
             FROM documents
         """,
-        "token_count_by_source": """
-            WITH norm AS (
-              SELECT source,
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS nt
-              FROM documents
-            )
+        "token_count_by_source": f"""
             SELECT source,
-                   CAST(sum(CASE WHEN length(nt) = 0 THEN 0
-                        ELSE (length(nt) - length(replace(nt, ' ', ''))) + 1 END)
-                        AS BIGINT) AS total_tokens,
+                   CAST(sum({llm_text.token_count_sql()}) AS BIGINT) AS total_tokens,
                    count(*) AS n_docs
-            FROM norm GROUP BY source
+            FROM documents GROUP BY source
         """,
-        "repetition_stats": r"""
+        "repetition_stats": fr"""
             WITH norm AS (
-              SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS nt
+              SELECT doc_id, {dedup.normalize_text_sql()} AS nt
               FROM documents
             ), words AS (
               SELECT doc_id,
@@ -15586,12 +15500,12 @@ def oracle_sql() -> dict[str, str]:
             FROM s
             QUALIFY rank <= 5
         """,
-        "lev_verify": """
+        "lev_verify": f"""
             WITH d AS (
               SELECT doc_id, lang, source,
                      substr(
                        regexp_replace(
-                         regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
+                         {dedup.normalize_text_sql()},
                          '[^\\x20-\\x7e]', '', 'g'),
                        1, 500) AS t
               FROM documents WHERE doc_id < 120 AND text IS NOT NULL
@@ -15607,10 +15521,10 @@ def oracle_sql() -> dict[str, str]:
                     / greatest(len(a.t), len(b.t), 1), 9)
                   >= CAST(0.3 AS DOUBLE)
         """,
-        "ngram_jaccard": """
+        "ngram_jaccard": f"""
             WITH norm AS (
               SELECT doc_id, lang,
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS nt
+                     {dedup.normalize_text_sql()} AS nt
               FROM documents WHERE doc_id < 80
             ), sh AS (
               SELECT DISTINCT doc_id, substring(nt, i, 5) AS s
@@ -15678,33 +15592,23 @@ def oracle_sql() -> dict[str, str]:
             FROM a FULL OUTER JOIN b ON a.key = b.key
             WHERE path_a IS NULL OR path_b IS NULL
         """,
-        "quality_score": """
+        "quality_score": f"""
             WITH norm AS (
               SELECT doc_id, text,
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS nt
+                     {dedup.normalize_text_sql()} AS nt
               FROM documents
             ), feats AS (
               SELECT doc_id,
                      CAST(length(text) AS DOUBLE) AS n_chars,
-                     CAST(CASE WHEN length(nt) = 0 THEN 0
-                          ELSE (length(nt) - length(replace(nt, ' ', ''))) + 1
-                          END AS DOUBLE) AS n_tokens,
+                     CAST({llm_text._count_tokens_sql("nt")} AS DOUBLE) AS n_tokens,
                      ( (length(text) - length(replace(text, '.', ''))) * 1.0
                      + (length(text) - length(replace(text, ',', '')))
                      + (length(text) - length(replace(text, '!', '')))
                      + (length(text) - length(replace(text, '?', '')))
                      + (length(text) - length(replace(text, ';', '')))
                      + (length(text) - length(replace(text, ':', ''))) ) AS punct,
-                     ( (length(nt) - length(replace(nt, ' the ', ''))) / 5.0
-                     + (length(nt) - length(replace(nt, ' and ', ''))) / 5.0
-                     + (length(nt) - length(replace(nt, ' of ', ''))) / 4.0
-                     + (length(nt) - length(replace(nt, ' to ', ''))) / 4.0
-                     + (length(nt) - length(replace(nt, ' in ', ''))) / 4.0
-                     + (length(nt) - length(replace(nt, ' is ', ''))) / 4.0
-                     + (length(nt) - length(replace(nt, ' that ', ''))) / 6.0
-                     + (length(nt) - length(replace(nt, ' for ', ''))) / 5.0
-                     + (length(nt) - length(replace(nt, ' with ', ''))) / 6.0
-                     + (length(nt) - length(replace(nt, ' as ', ''))) / 4.0 ) AS stop_hits
+                     {llm_text._marker_hits_sql("nt", llm_text._STOP_MARKERS)}
+                       AS stop_hits
               FROM norm
             )
             SELECT doc_id,
@@ -15714,34 +15618,10 @@ def oracle_sql() -> dict[str, str]:
                       THEN 0.5 ELSE 1.0 END) AS quality
             FROM feats
         """,
-        "language_id": """
-            WITH norm AS (
-              SELECT doc_id,
-                     ' ' || regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') || ' ' AS nt
-              FROM documents
-            ), scored AS (
-              SELECT doc_id,
-                     ( (length(nt) - length(replace(nt, ' the ', ''))) / 5.0
-                     + (length(nt) - length(replace(nt, ' and ', ''))) / 5.0
-                     + (length(nt) - length(replace(nt, ' is ', ''))) / 4.0 ) AS s_en,
-                     ( (length(nt) - length(replace(nt, ' der ', ''))) / 5.0
-                     + (length(nt) - length(replace(nt, ' und ', ''))) / 5.0
-                     + (length(nt) - length(replace(nt, ' ist ', ''))) / 5.0 ) AS s_de,
-                     ( (length(nt) - length(replace(nt, ' le ', ''))) / 4.0
-                     + (length(nt) - length(replace(nt, ' et ', ''))) / 4.0
-                     + (length(nt) - length(replace(nt, ' est ', ''))) / 5.0 ) AS s_fr,
-                     ( (length(nt) - length(replace(nt, ' el ', ''))) / 4.0
-                     + (length(nt) - length(replace(nt, ' y ', ''))) / 3.0
-                     + (length(nt) - length(replace(nt, ' es ', ''))) / 4.0 ) AS s_es
-              FROM norm
-            )
-            SELECT doc_id,
-                   CASE WHEN greatest(s_en, s_de, s_fr, s_es) <= 0 THEN 'unk'
-                        WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-                        WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-                        WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-                        ELSE 'es' END AS lang_pred,
-                   greatest(s_en, s_de, s_fr, s_es) AS score
+        "language_id": f"""
+            WITH {llm_text._lang_scored_sql()}
+            SELECT doc_id, {llm_text._lang_pred_sql(_lang_best)} AS lang_pred,
+                   {_lang_best} AS score
             FROM scored
         """,
         "knn_cosine": """
@@ -16176,10 +16056,10 @@ def oracle_sql() -> dict[str, str]:
         GROUP BY n_name
     """
 
-    o["dataset_card"] = """
+    o["dataset_card"] = f"""
         WITH d AS (
           SELECT text,
-                 regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS nt,
+                 {dedup.normalize_text_sql()} AS nt,
                  lang, source
           FROM documents WHERE text IS NOT NULL
         ), fp AS (
@@ -16189,9 +16069,7 @@ def oracle_sql() -> dict[str, str]:
         ), base AS (
           SELECT CAST(count(*) AS BIGINT) AS n_docs,
                  CAST(sum(strlen(text)) AS BIGINT) AS n_bytes,
-                 CAST(sum(len(list_filter(string_split(nt, ' '),
-                                          w -> len(w) > 0))) AS BIGINT)
-                   AS n_tokens,
+                 CAST(sum(len({dedup.tokenize_sql()})) AS BIGINT) AS n_tokens,
                  CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
                  CAST(count(DISTINCT source) AS BIGINT) AS n_sources
           FROM d
@@ -16330,10 +16208,10 @@ def oracle_sql() -> dict[str, str]:
         WHERE last_us < max_us - 43200000000
     """
 
-    o["dedup_rate_by_source"] = """
+    o["dedup_rate_by_source"] = f"""
         WITH pairs AS (
           SELECT source,
-                 md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+                 md5({dedup.normalize_text_sql()})
                    AS fp,
                  count(*) AS n
           FROM documents WHERE text IS NOT NULL
@@ -16671,7 +16549,7 @@ def oracle_sql() -> dict[str, str]:
                quality AS best_quality, CAST(nm AS BIGINT) AS n_members
         FROM sel WHERE rn = 1"""
 
-    o["snapshot_diff"] = """
+    o["snapshot_diff"] = f"""
         WITH b AS (
           SELECT doc_id,
                  CASE WHEN doc_id % 7 = 0 THEN text || ' revised'
@@ -16682,11 +16560,11 @@ def oracle_sql() -> dict[str, str]:
           FROM documents WHERE doc_id % 13 = 0
         ), fa AS (
           SELECT doc_id,
-                 md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
+                 md5({dedup.normalize_text_sql()}) AS f
           FROM documents
         ), fb AS (
           SELECT doc_id,
-                 md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
+                 md5({dedup.normalize_text_sql()}) AS f
           FROM b
         )
         SELECT COALESCE(fa.doc_id, fb.doc_id) AS doc_id,
@@ -16777,7 +16655,7 @@ def oracle_sql() -> dict[str, str]:
         WITH q AS ({o["quality_score"]}),
         fp AS (
           SELECT doc_id,
-                 md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
+                 md5({dedup.normalize_text_sql()}) AS f
           FROM documents
         ), surv AS (
           SELECT min(doc_id) AS doc_id FROM fp GROUP BY f
@@ -16886,11 +16764,9 @@ def oracle_sql() -> dict[str, str]:
           ON p.user_id = c.user_id AND p.ts >= c.ts"""
 
     o["top_ngrams"] = f"""
-        WITH norm AS (
-          SELECT lang, {_dedup._NORM_SQL} AS txt FROM documents WHERE text IS NOT NULL
-        ), words AS (
-          SELECT lang, list_filter(string_split(txt, ' '), x -> length(x) > 0) AS w
-          FROM norm
+        WITH words AS (
+          SELECT lang, {dedup.tokenize_sql()} AS w
+          FROM documents WHERE text IS NOT NULL
         ), grams AS (
           SELECT lang, concat_ws(' ', w[u.i], w[u.i + 1], w[u.i + 2]) AS ngram
           FROM words, unnest(generate_series(1, len(w) - 2)) AS u(i)
@@ -17042,25 +16918,20 @@ def oracle_sql() -> dict[str, str]:
     o["lfilter_blocks"] = _iir(ba=_BA_SPEC, round_digits=7)
     o["filtfilt_blocks"] = _iir(ba=_BA_SPEC, zero_phase=True, round_digits=7)
 
-    _token_expr_sql = """CASE WHEN length(regexp_replace(lower(trim(text)),
-                 '\\s+', ' ', 'g')) = 0 THEN 0
-            ELSE (length(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-                  - length(replace(regexp_replace(lower(trim(text)),
-                      '\\s+', ' ', 'g'), ' ', ''))) + 1 END"""
     o["pack_sequences"] = sampling.pack_sequences_oracle_sql(
-        capacity=2048, token_expr=_token_expr_sql
+        capacity=2048, token_expr=llm_text.token_count_sql()
     )
     o["token_budget_subset"] = sampling.token_budget_subset_oracle_sql(
-        budget=8000, token_expr=_token_expr_sql
+        budget=8000, token_expr=llm_text.token_count_sql()
     )
     o["temperature_sample"] = sampling.temperature_sample_oracle_sql(
         temperature=2.0, group_col="lang"
     )
 
     # decontaminate: NOT EXISTS over the same md5 fingerprint carve-out
-    o["decontaminate"] = """
+    o["decontaminate"] = f"""
         WITH bench AS (
-          SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+          SELECT DISTINCT md5({dedup.normalize_text_sql()})
             AS bfp
           FROM documents WHERE doc_id % 7 = 0
         )
@@ -17069,7 +16940,7 @@ def oracle_sql() -> dict[str, str]:
         WHERE d.doc_id % 7 <> 0
           AND NOT EXISTS (
             SELECT 1 FROM bench b
-            WHERE b.bfp = md5(regexp_replace(lower(trim(d.text)), '\\s+', ' ', 'g'))
+            WHERE b.bfp = md5({dedup.normalize_text_sql("d.text")})
           )"""
 
     # length_quantiles: Spark's exact percentile and DuckDB's
@@ -17187,19 +17058,17 @@ def oracle_sql() -> dict[str, str]:
     # flags the drop policy
     # streaming_dedup: the surviving-row choice is nondeterministic but
     # the distinct fingerprint set is not
-    o["streaming_dedup"] = r"""
+    o["streaming_dedup"] = fr"""
         SELECT DISTINCT
-               md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
+               md5({dedup.normalize_text_sql()}) AS fp
         FROM documents WHERE text IS NOT NULL"""
 
     # decontaminate_ngram: same normalization/split as the engine; DuckDB
     # list slices are 1-based inclusive so w[i : i+n-1] is the n-gram
-    o["decontaminate_ngram"] = r"""
+    o["decontaminate_ngram"] = fr"""
         WITH norm AS (
           SELECT doc_id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' '
-                 ) AS w
+                 string_split({dedup.normalize_text_sql()}, ' ') AS w
           FROM documents WHERE text IS NOT NULL
         ), bgrams AS (
           SELECT DISTINCT md5(array_to_string(w[u.i : u.i + 7], ' ')) AS g
@@ -17491,41 +17360,16 @@ def oracle_sql() -> dict[str, str]:
                      / CAST(count(*) * sum(x) AS DOUBLE), 9) AS gini
         FROM ranked GROUP BY metric"""
 
-    o["language_margin"] = """
-        WITH norm AS (
-          SELECT doc_id,
-                 ' ' || regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')
-                 || ' ' AS nt
-          FROM documents
-        ), scored AS (
-          SELECT doc_id,
-                 ( (length(nt) - length(replace(nt, ' the ', ''))) / 5.0
-                 + (length(nt) - length(replace(nt, ' and ', ''))) / 5.0
-                 + (length(nt) - length(replace(nt, ' is ', ''))) / 4.0 ) AS s_en,
-                 ( (length(nt) - length(replace(nt, ' der ', ''))) / 5.0
-                 + (length(nt) - length(replace(nt, ' und ', ''))) / 5.0
-                 + (length(nt) - length(replace(nt, ' ist ', ''))) / 5.0 ) AS s_de,
-                 ( (length(nt) - length(replace(nt, ' le ', ''))) / 4.0
-                 + (length(nt) - length(replace(nt, ' et ', ''))) / 4.0
-                 + (length(nt) - length(replace(nt, ' est ', ''))) / 5.0 ) AS s_fr,
-                 ( (length(nt) - length(replace(nt, ' el ', ''))) / 4.0
-                 + (length(nt) - length(replace(nt, ' y ', ''))) / 3.0
-                 + (length(nt) - length(replace(nt, ' es ', ''))) / 4.0 ) AS s_es
-          FROM norm
-        ), arr AS (
-          SELECT doc_id, s_en, s_de, s_fr, s_es,
-                 list_sort([s_en, s_de, s_fr, s_es]) AS a
+    o["language_margin"] = f"""
+        WITH {llm_text._lang_scored_sql()}, arr AS (
+          SELECT doc_id, {llm_text._LANG_SCORES_SQL},
+                 list_sort([{llm_text._LANG_SCORES_SQL}]) AS a
           FROM scored
         )
-        SELECT doc_id,
-               CASE WHEN greatest(s_en, s_de, s_fr, s_es) <= 0 THEN 'unk'
-                    WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-                    WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-                    WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-                    ELSE 'es' END AS lang_pred,
-               round(a[4], 9) AS score,
-               round(a[3], 9) AS second_score,
-               round(a[4] - a[3], 9) AS margin
+        SELECT doc_id, {llm_text._lang_pred_sql(_lang_best)} AS lang_pred,
+               round(a[-1], 9) AS score,
+               round(a[-2], 9) AS second_score,
+               round(a[-1] - a[-2], 9) AS margin
         FROM arr"""
 
     o["yoy_revenue"] = f"""
@@ -18092,16 +17936,7 @@ def oracle_sql() -> dict[str, str]:
         " / (CAST(n AS DOUBLE) * sxx - sx * sx))"
     )
     o["zipf_fit"] = f"""
-        WITH toks AS (
-          SELECT u.w AS word
-          FROM (
-            SELECT string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), vocab AS (
+        WITH toks AS ({llm_text._token_rows_sql("", "word")}), vocab AS (
           SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY word
         ), ranked AS (
           SELECT cnt,
@@ -18184,16 +18019,10 @@ def oracle_sql() -> dict[str, str]:
                round(exp(lnsum), 9) AS survival
         FROM s"""
 
-    o["readability"] = """
+    o["readability"] = f"""
         WITH c AS (
           SELECT doc_id,
-                 CAST(CASE WHEN length(regexp_replace(lower(trim(text)),
-                                       '\\s+', ' ', 'g')) = 0 THEN 0
-                      ELSE length(regexp_replace(lower(trim(text)),
-                                  '\\s+', ' ', 'g'))
-                           - length(replace(regexp_replace(lower(trim(text)),
-                                            '\\s+', ' ', 'g'), ' ', '')) + 1
-                      END AS BIGINT) AS n_words,
+                 CAST({llm_text.token_count_sql()} AS BIGINT) AS n_words,
                  CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
                       AS BIGINT) AS n_sentences,
                  CAST(len(regexp_extract_all(text, '[aeiouy]+')) AS BIGINT)
@@ -18451,18 +18280,8 @@ def oracle_sql() -> dict[str, str]:
                      / CAST(1000000 AS DOUBLE), 6) AS p90_seconds
         FROM conv"""
 
-    o["nb_lang_scores"] = """
-        WITH toks AS (
-          SELECT doc_id, lang, u.w AS w
-          FROM (
-            SELECT doc_id, lang,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), cnt AS (
+    o["nb_lang_scores"] = f"""
+        WITH toks AS ({llm_text._token_rows_sql("doc_id, lang")}), cnt AS (
           SELECT lang, w, CAST(count(*) AS BIGINT) AS cnt FROM toks
           GROUP BY lang, w
         ), tot AS (
@@ -18714,17 +18533,8 @@ def oracle_sql() -> dict[str, str]:
                round(1 + CAST(n AS DOUBLE) / sl, 9) AS powerlaw_alpha
         FROM hist CROSS JOIN st"""
 
-    o["negsample_table"] = """
-        WITH toks AS (
-          SELECT u.w AS word
-          FROM (
-            SELECT string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), vocab AS (
+    o["negsample_table"] = f"""
+        WITH toks AS ({llm_text._token_rows_sql("", "word")}), vocab AS (
           SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY word
         ), ranked AS (
           SELECT word, cnt,
@@ -18907,18 +18717,8 @@ def oracle_sql() -> dict[str, str]:
                      / CAST(x AS DOUBLE), 9) AS ape
         FROM daily CROSS JOIN fit WHERE day >= 24"""
 
-    o["word_pmi"] = """
-        WITH toks AS (
-          SELECT doc_id, u.w AS word
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), vocab AS (
+    o["word_pmi"] = f"""
+        WITH toks AS ({llm_text._token_rows_sql(word="word")}), vocab AS (
           SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM toks
           GROUP BY word
         ), top AS (
@@ -19097,13 +18897,9 @@ def oracle_sql() -> dict[str, str]:
                CAST(6 AS BIGINT) AS n_good,
                CAST(30 AS BIGINT) AS good_qty_sum"""
 
-    _dl_cte = """
+    _dl_cte = f"""
           SELECT doc_id,
-                 list_filter(
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     ' '
-                   ), w -> len(w) > 0) AS wl
+                 {dedup.tokenize_sql()} AS wl
           FROM documents WHERE text IS NOT NULL"""
     o["kneser_ney_bigram"] = f"""
         WITH dl AS ({_dl_cte}
@@ -19166,16 +18962,10 @@ def oracle_sql() -> dict[str, str]:
         LEFT JOIN ns ON ns.doc_id = nt.doc_id
         LEFT JOIN cov ON cov.doc_id = nt.doc_id"""
 
-    o["padding_waste"] = """
+    o["padding_waste"] = f"""
         WITH d AS (
-          SELECT CAST(CASE WHEN length(nt) = 0 THEN 0
-                      ELSE (length(nt) - length(replace(nt, ' ', ''))) + 1
-                      END AS BIGINT) AS len
-          FROM (
-            SELECT regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')
-                     AS nt
-            FROM documents WHERE text IS NOT NULL
-          )
+          SELECT CAST({llm_text.token_count_sql()} AS BIGINT) AS len
+          FROM documents WHERE text IS NOT NULL
         ), b AS (
           SELECT len, CAST(len // 64 AS BIGINT) AS bucket FROM d
           WHERE len > 0
@@ -19202,16 +18992,10 @@ def oracle_sql() -> dict[str, str]:
                END AS saving_ratio
         FROM per CROSS JOIN g"""
 
-    o["packing_efficiency"] = """
+    o["packing_efficiency"] = f"""
         WITH d0 AS (
-          SELECT CAST(CASE WHEN length(nt) = 0 THEN 0
-                      ELSE (length(nt) - length(replace(nt, ' ', ''))) + 1
-                      END AS BIGINT) AS len
-          FROM (
-            SELECT regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')
-                     AS nt
-            FROM documents WHERE text IS NOT NULL
-          )
+          SELECT CAST({llm_text.token_count_sql()} AS BIGINT) AS len
+          FROM documents WHERE text IS NOT NULL
         ), d AS (
           SELECT len,
                  CAST(len // 128 AS BIGINT) AS full_bins,
@@ -19346,17 +19130,8 @@ def oracle_sql() -> dict[str, str]:
     o["ndcg_eval"] = f"""
         WITH bm AS (
           SELECT query_id, doc_id, rank FROM ({o["bm25_topk"]})
-        ), toks AS (
-          SELECT DISTINCT doc_id, u.w AS word
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), qt (query_id, word) AS (VALUES {_ndcg_qt_vals}),
+        ), toks AS ({llm_text._token_rows_sql("DISTINCT doc_id", "word")}),
+        qt (query_id, word) AS (VALUES {_ndcg_qt_vals}),
         rel_tbl AS (
           SELECT qt.query_id, toks.doc_id,
                  CAST(count(*) AS BIGINT) AS rel
@@ -19456,19 +19231,8 @@ def oracle_sql() -> dict[str, str]:
                  / nullif(CAST(g.n - 1 AS DOUBLE), 0.0) AS loo_cents
         FROM base b JOIN g USING (c_nationkey)"""
 
-    o["tokenizer_fertility"] = """
-        WITH toks AS (
-          SELECT lang, u.w AS w
-          FROM (
-            SELECT lang,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), m AS (
+    o["tokenizer_fertility"] = f"""
+        WITH toks AS ({llm_text._token_rows_sql("lang")}), m AS (
           SELECT lang,
                  CAST(count(*) AS BIGINT) AS n_words,
                  CAST(sum((len(w) + 3) // 4) AS BIGINT) AS n_subwords
@@ -19634,15 +19398,15 @@ def oracle_sql() -> dict[str, str]:
                      / CAST(n_users + b1800 AS DOUBLE), 9) AS eps_30m
         FROM m"""
 
-    _bf_norm = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
     o["bloom_fpr"] = f"""
         WITH {dedup.bloom_flags_ctes("doc_id % 7 = 0", "doc_id % 7 <> 0")},
         bset AS (
-          SELECT DISTINCT md5({_bf_norm}) AS fp FROM documents
+          SELECT DISTINCT md5({dedup.normalize_text_sql()}) AS fp FROM documents
           WHERE doc_id % 7 = 0
         ), fl AS (
           SELECT f.doc_id, f.bloom_hit,
-                 (md5({_bf_norm}) IN (SELECT fp FROM bset)) AS is_true
+                 (md5({dedup.normalize_text_sql()}) IN (SELECT fp FROM bset))
+                   AS is_true
           FROM flags f JOIN documents USING (doc_id)
         ), nb AS (
           SELECT CAST(count(*) AS BIGINT) AS nb FROM documents
@@ -20307,8 +20071,8 @@ def oracle_sql() -> dict[str, str]:
         k=5, w=4, max_df=20, min_shared=3
     )
     o["heavy_ngrams"] = _sketch.misra_gries_heavy_oracle_sql(
-        inner=r"""SELECT substring(nt, i, 8) AS item
-          FROM (SELECT regexp_replace(lower(trim(text)), '\s+', ' ', 'g')
+        inner=fr"""SELECT substring(nt, i, 8) AS item
+          FROM (SELECT {dedup.normalize_text_sql()}
                   AS nt FROM documents WHERE text IS NOT NULL) n,
           unnest(generate_series(1, greatest(length(nt) - 7, 0))) AS u(i)""",
         k=200,
@@ -20727,20 +20491,11 @@ def oracle_sql() -> dict[str, str]:
         FROM f JOIN b ON f.node = b.node
     """
 
-    o["term_burstiness"] = """
-        WITH d AS (
-          SELECT doc_id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                   ' ') AS wl
+    o["term_burstiness"] = f"""
+        WITH n AS (
+          SELECT CAST(count(*) AS BIGINT) AS N
           FROM documents WHERE text IS NOT NULL
-        ), n AS (
-          SELECT CAST(count(*) AS BIGINT) AS N FROM d
-        ), tc AS (
-          SELECT doc_id, u.w AS w, CAST(count(*) AS BIGINT) AS c
-          FROM d, unnest(wl) AS u(w) WHERE len(u.w) > 0
-          GROUP BY doc_id, u.w
-        ), mom AS (
+        ), tc AS ({llm_text._doc_terms_sql(cnt="c")}), mom AS (
           SELECT w AS term,
                  CAST(sum(c) AS BIGINT) AS total,
                  CAST(sum(c * c) AS BIGINT) AS s2,
@@ -21777,17 +21532,13 @@ def oracle_sql() -> dict[str, str]:
         WITH bm AS MATERIALIZED (
         """
         + llm_text.bm25_topk_oracle_sql(queries=_BM25_QUERIES, k=3)
-        + """
+        + f"""
         ), toks AS (
           SELECT doc_id, CAST(u.i AS BIGINT) - 1 AS p,
                  list_extract(wl, u.i) AS word
           FROM (
             SELECT doc_id,
-                   list_filter(
-                     string_split(
-                       regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                       ' '),
-                     x -> len(x) > 0) AS wl
+                   {dedup.tokenize_sql()} AS wl
             FROM documents
             WHERE text IS NOT NULL
               AND doc_id IN (SELECT doc_id FROM bm)
@@ -21827,9 +21578,9 @@ def oracle_sql() -> dict[str, str]:
 
     o["dedup_eval"] = (
         _dedup._vpairs_ctes(k=5, num_hashes=64, bands=8, threshold=0.8)
-        + """, fpt AS MATERIALIZED (
+        + f""", fpt AS MATERIALIZED (
           SELECT doc_id,
-                 md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+                 md5({dedup.normalize_text_sql()})
                    AS fp
           FROM documents WHERE text IS NOT NULL
         ), tp AS (
@@ -21891,21 +21642,13 @@ def oracle_sql() -> dict[str, str]:
     """
     )
 
-    o["term_drift"] = """
+    o["term_drift"] = f"""
         WITH mid AS (
           SELECT min(doc_id) AS lo, max(doc_id) AS hi
           FROM documents WHERE text IS NOT NULL
         ), toks AS (
-          SELECT (doc_id - lo) < (hi - doc_id) AS first_half,
-                 u.w AS word
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     ' ') AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), mid, unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
+          SELECT (doc_id - lo) < (hi - doc_id) AS first_half, word
+          FROM ({llm_text._token_rows_sql(word="word")}), mid
         ), t AS MATERIALIZED (
           SELECT word,
                  CAST(sum(CASE WHEN first_half THEN 1 ELSE 0 END)

@@ -35,6 +35,26 @@ def normalize_text(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
+def normalize_text_sql(expr: str = "text") -> str:
+    """DuckDB twin of :func:`normalize_text` for oracle SQL.  Java's
+    ``\\s`` includes the vertical tab and RE2's does not, hence
+    ``[\\s\\v]``."""
+    return f"regexp_replace(lower(trim({expr})), '[\\s\\v]+', ' ', 'g')"
+
+
+def tokenize(col):
+    """Whitespace tokens of the normalized text (no empty tokens)."""
+    return F.filter(F.split(normalize_text(col), " "), lambda s: F.length(s) > 0)
+
+
+def tokenize_sql(expr: str = "text") -> str:
+    """DuckDB twin of :func:`tokenize`."""
+    return (
+        f"list_filter(string_split({normalize_text_sql(expr)}, ' '), "
+        "x -> len(x) > 0)"
+    )
+
+
 def decontaminate(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -262,9 +282,7 @@ def chunk_dedup_oracle_sql(
     return f"""
         WITH w AS (
           SELECT doc_id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                 ) AS wl
+                 string_split({normalize_text_sql()}, ' ') AS wl
           FROM documents WHERE text IS NOT NULL
         ), sized AS (
           SELECT doc_id, wl,
@@ -344,9 +362,7 @@ def dup_span_detect_oracle_sql(n: int = 8) -> str:
     return f"""
         WITH w AS (
           SELECT doc_id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                 ) AS wl
+                 string_split({normalize_text_sql()}, ' ') AS wl
           FROM documents WHERE text IS NOT NULL
         ), grams AS (
           SELECT doc_id,
@@ -459,9 +475,7 @@ def dup_substring_spans_oracle_sql(n: int = 8) -> str:
     return f"""
         WITH w AS (
           SELECT doc_id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                 ) AS wl
+                 string_split({normalize_text_sql()}, ' ') AS wl
           FROM documents WHERE text IS NOT NULL
         ), grams AS (
           SELECT doc_id, CAST(u.i AS BIGINT) AS i,
@@ -549,9 +563,7 @@ def gram_novelty_oracle_sql(n: int = 8) -> str:
     return f"""
         WITH w AS (
           SELECT doc_id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                 ) AS wl
+                 string_split({normalize_text_sql()}, ' ') AS wl
           FROM documents WHERE text IS NOT NULL
         ), grams AS (
           SELECT DISTINCT doc_id,
@@ -1230,9 +1242,7 @@ def source_overlap_oracle_sql(n: int = 8) -> str:
     return f"""
         WITH w AS (
           SELECT source,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                 ) AS wl
+                 string_split({normalize_text_sql()}, ' ') AS wl
           FROM documents WHERE text IS NOT NULL
         ), grams AS (
           SELECT DISTINCT source,
@@ -1867,7 +1877,6 @@ def simhash_pairs(
 # DuckDB oracle-SQL generators (portable-hash replay of the pipelines above)
 # ---------------------------------------------------------------------------
 
-_NORM_SQL = r"regexp_replace(lower(trim(text)), '\s+', ' ', 'g')"
 _HASH32_SQL = "(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
 
 
@@ -1883,7 +1892,8 @@ def _sig_ctes(k: int, num_hashes: int) -> str:
     )
     return f"""
         WITH norm AS (
-          SELECT doc_id, {_NORM_SQL} AS txt FROM documents WHERE text IS NOT NULL
+          SELECT doc_id, {normalize_text_sql()} AS txt
+          FROM documents WHERE text IS NOT NULL
         ), sh AS (
           SELECT doc_id, ({shingle_hash} & {0x7FFFFFFF}) AS x
           FROM norm, unnest(generate_series(1, greatest(length(txt) - {k - 1}, 1))) AS u(i)
@@ -2063,7 +2073,8 @@ def _simhash_ctes(bits: int) -> str:
     tok_hash = _HASH32_SQL.format(expr="u.tok")
     return f"""
         WITH norm AS (
-          SELECT doc_id, {_NORM_SQL} AS txt FROM documents WHERE text IS NOT NULL
+          SELECT doc_id, {normalize_text_sql()} AS txt
+          FROM documents WHERE text IS NOT NULL
         ), toks AS (
           SELECT doc_id, {tok_hash} AS h
           FROM norm, unnest(string_split(txt, ' ')) AS u(tok)
@@ -3912,7 +3923,7 @@ def bloom_flags_ctes(
     filter)."""
     from openseize_spark.llm.sampling import salted_hash_sql
 
-    norm = f"md5({_NORM_SQL})"
+    norm = f"md5({normalize_text_sql()})"
     pos_exprs = ", ".join(
         f"({salted_hash_sql('fp', f'bloom{i}')} % {m}) AS p{i}" for i in range(k)
     )
@@ -4015,9 +4026,9 @@ def sorted_neighborhood_oracle_sql(
     return f"""
         WITH ranked AS (
           SELECT doc_id AS id,
-                 substr({_NORM_SQL}, 1, {key_len}) AS key,
+                 substr({normalize_text_sql()}, 1, {key_len}) AS key,
                  row_number() OVER (
-                   ORDER BY substr({_NORM_SQL}, 1, {key_len}), doc_id
+                   ORDER BY substr({normalize_text_sql()}, 1, {key_len}), doc_id
                  ) - 1 AS r
           FROM documents WHERE text IS NOT NULL
         )
@@ -4260,7 +4271,7 @@ def set_similarity_join_oracle_sql(
     threshold — completeness of the prefix filter is what's on trial."""
     return f"""
         WITH norm AS (
-          SELECT doc_id, {_NORM_SQL} AS nt
+          SELECT doc_id, {normalize_text_sql()} AS nt
           FROM documents WHERE text IS NOT NULL
         ), sh AS (
           SELECT DISTINCT doc_id, substring(nt, i, {k}) AS s
@@ -4401,7 +4412,7 @@ def _winnow_ctes(k: int, w: int) -> str:
     gram_hash = _HASH32_SQL.format(expr=f"substring(nt, i, {k})")
     return f"""
         WITH norm AS (
-          SELECT doc_id, {_NORM_SQL} AS nt
+          SELECT doc_id, {normalize_text_sql()} AS nt
           FROM documents WHERE text IS NOT NULL
         ), g AS (
           SELECT doc_id, CAST(i AS BIGINT) AS pos,

@@ -490,17 +490,16 @@ def dsir_sample(
     Returns (id, n_tokens, score) for the ``n_keep`` sampled documents,
     where score is the mean per-token log importance ratio.
     """
-    from openseize_spark.llm.dedup import normalize_text
+    from openseize_spark.llm.text import _token_rows
 
     scale = float(10**round_digits)
     B = int(num_buckets)
-    words = F.filter(
-        F.split(normalize_text(F.col(text_col)), " "), lambda s: F.length(s) > 0
-    )
-    toks = df.filter(F.col(text_col).isNotNull()).select(
+    toks = _token_rows(
+        df,
+        text_col,
+        "_w",
         F.col(key_col).alias("_id"),
         F.col(target_col).alias("_tgt"),
-        F.explode(words).alias("_w"),
     )
     tb = toks.select(
         "_id",
@@ -585,23 +584,18 @@ def dsir_sample_oracle_sql(
 ) -> str:
     """DuckDB replay of :func:`dsir_sample` (identical quantization,
     float expression shape, and tie-break)."""
+    from openseize_spark.llm.text import _token_rows_sql
+
     scale = float(10**round_digits)
     B = int(num_buckets)
-    hw = salted_hash_sql("u.w", seed + ":feat")
+    hw = salted_hash_sql("w", seed + ":feat")
     hd = salted_hash_sql("_id", seed)
     target_val = target_val.replace("'", "''")
     return f"""
         WITH toks AS (
           SELECT doc_id AS _id, {target_col} AS _tgt,
                  ({hw}) % {B} AS _b
-          FROM (
-            SELECT doc_id, {target_col},
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
+          FROM ({_token_rows_sql(f"doc_id, {target_col}")})
         ), doc_b AS (
           SELECT _id, _b, count(*) AS k FROM toks GROUP BY _id, _b
         ), raw AS (
@@ -1113,12 +1107,12 @@ def greedy_set_cover_oracle_sql(k: int = 8, steps: int = 8) -> str:
     """DuckDB replay of ``greedy_set_cover``: unrolled greedy steps;
     the covered-set CTEs are referenced twice per step (gain anti-join
     + next union) and so are MATERIALIZED."""
-    from openseize_spark.llm.dedup import _NORM_SQL
+    from openseize_spark.llm.dedup import normalize_text_sql
 
     ctes = [f"""
         WITH p AS MATERIALIZED (
           SELECT DISTINCT doc_id AS _id, substring(nt, i, {k}) AS s
-          FROM (SELECT doc_id, {_NORM_SQL} AS nt
+          FROM (SELECT doc_id, {normalize_text_sql()} AS nt
                 FROM documents WHERE text IS NOT NULL) n,
                unnest(generate_series(1, greatest(length(nt) - {k - 1},
                  0))) AS u(i)

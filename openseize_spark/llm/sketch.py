@@ -28,8 +28,8 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from openseize_spark.llm.dedup import normalize_text
 from openseize_spark.llm.sampling import salted_hash, salted_hash_sql
+from openseize_spark.llm.text import _token_rows, _token_rows_sql
 
 
 def _bucket_py(word: str, row: int, width: int, seed: str) -> int:
@@ -58,11 +58,8 @@ def countmin_sketch(
 
 
 def _word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
     return (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.explode(words).alias("_w"))
+        _token_rows(docs, text_col, "_w")
         .groupBy("_w")
         .agg(F.count("*").cast("bigint").alias("_c"))
     )
@@ -159,16 +156,7 @@ def countmin_estimate_oracle_sql(
         for r in range(depth)
     )
     return f"""
-        WITH toks AS MATERIALIZED (
-          SELECT u.w AS w
-          FROM (
-            SELECT string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), cells AS (
+        WITH toks AS MATERIALIZED ({_token_rows_sql("")}), cells AS (
           {arms}
         ), sk AS (
           SELECT row, bucket, CAST(count(*) AS BIGINT) AS cnt

@@ -4,7 +4,8 @@ heuristics, document fingerprinting.
 All pure built-in string functions (JVM codegen) — the hot path over a
 100 TB documents table never enters Python.  DuckDB-oracle-checkable
 versions use only arithmetic on length/replace so both engines agree
-bit-for-bit (see __spark_entry__.py).
+bit-for-bit; each portable column helper has its DuckDB twin (``*_sql``)
+beside it, and the oracles call the twin (ARCHITECTURE.md §15).
 """
 
 from __future__ import annotations
@@ -12,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from openseize_spark.llm.dedup import normalize_text
+from openseize_spark.llm.dedup import (
+    normalize_text,
+    normalize_text_sql,
+    tokenize,
+    tokenize_sql,
+)
 
 # a small, fixed English stopword set for the ratio heuristics
 STOPWORDS = ("the", "and", "of", "to", "in", "is", "that", "for", "with", "as")
@@ -23,12 +29,48 @@ def occurrence_count(col, needle: str):
     return (F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))) / len(needle)
 
 
-def token_count(col):
-    """Whitespace token count = spaces + 1 on the collapsed form."""
-    norm = normalize_text(col)
+def occurrence_count_sql(expr: str, needle: str) -> str:
+    """DuckDB twin of :func:`occurrence_count`."""
+    n = len(needle)
+    return f"(length({expr}) - length(replace({expr}, '{needle}', ''))) / {n}.0"
+
+
+def _marker_hits(col, markers):
+    """Summed occurrence counts of the space-padded ``markers``."""
+    return sum(occurrence_count(col, m) for m in markers)
+
+
+def _marker_hits_sql(expr: str, markers) -> str:
+    """DuckDB twin of :func:`_marker_hits`, summed in the same order."""
+    return "(" + " + ".join(occurrence_count_sql(expr, m) for m in markers) + ")"
+
+
+_STOP_MARKERS = tuple(f" {w} " for w in STOPWORDS)
+
+
+def _count_tokens(norm):
+    """Whitespace token count of already-normalized text: spaces + 1."""
     return F.when(F.length(norm) == 0, F.lit(0)).otherwise(
         (occurrence_count(norm, " ") + 1).cast("long")
     )
+
+
+def _count_tokens_sql(norm: str) -> str:
+    """DuckDB twin of :func:`_count_tokens`."""
+    return (
+        f"CASE WHEN length({norm}) = 0 THEN 0 "
+        f"ELSE (length({norm}) - length(replace({norm}, ' ', ''))) + 1 END"
+    )
+
+
+def token_count(col):
+    """Whitespace token count = spaces + 1 on the collapsed form."""
+    return _count_tokens(normalize_text(col))
+
+
+def token_count_sql(expr: str = "text") -> str:
+    """DuckDB twin of :func:`token_count`."""
+    return _count_tokens_sql(normalize_text_sql(expr))
 
 
 def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -39,7 +81,7 @@ def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     subexpression elimination already evaluates the repeated
     ``normalize_text`` chain once per row, and a higher-order-function
     binding (which never enters codegen) measures ~40% SLOWER here
-    (round-14 A/B at sf0.1: 0.475 s vs 0.677 s min-of-5).  The HOF
+    (A/B at sf0.1: 0.475 s vs 0.677 s min-of-5).  The HOF
     binding pays off only in FILTER predicates — see ``quality_expr``'s
     ``bind_once``."""
     t = F.col(text_col)
@@ -47,7 +89,7 @@ def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     n_chars = F.length(t).cast("long")
     n_tokens = token_count(t)
     punct = sum(occurrence_count(t, p) for p in (".", ",", "!", "?", ";", ":"))
-    stop_hits = sum(occurrence_count(norm, f" {w} ") for w in STOPWORDS)
+    stop_hits = _marker_hits(norm, _STOP_MARKERS)
     return docs.select(
         F.col(id_col),
         n_chars.alias("n_chars"),
@@ -67,8 +109,8 @@ def quality_expr(text_col: str = "text", bind_once: bool = False):
 
     ``bind_once`` selects how the regex-normalized text is evaluated —
     the ARITHMETIC is the same single ``_stop_score`` builder either
-    way, so the score is bit-identical (round-14 A/B: 0 differing rows
-    at sf0.1, and both forms oracle-green):
+    way, so the score is bit-identical (A/B: 0 differing rows at sf0.1,
+    and both forms oracle-green):
 
     - ``False`` (projections): plain expression tree.  Whole-stage
       codegen's subexpression elimination evaluates the repeated
@@ -81,7 +123,7 @@ def quality_expr(text_col: str = "text", bind_once: bool = False):
       codegen's subexpression elimination does NOT cover the repeated
       chain (~22 evaluations per row), so the one-evaluation HOF form
       wins big: 1.928 s -> 0.622 s on the same sf0.1 corpus filtered
-      at 0.5 (guide §1.2/§4.1, round-14)."""
+      at 0.5."""
     t = F.col(text_col)
     n_chars = F.length(t).cast("long")
     punct = sum(occurrence_count(t, p) for p in (".", ",", "!", "?", ";", ":"))
@@ -90,13 +132,9 @@ def quality_expr(text_col: str = "text", bind_once: bool = False):
     punct_pen = F.when(punct_ratio > 0.1, 0.5).otherwise(1.0)
 
     def _stop_score(n):
-        # n is the already-normalized text: token_count(t) ==
-        # when(length(n) == 0, 0).otherwise(occurrences(n, " ") + 1)
-        n_tokens = F.when(F.length(n) == 0, F.lit(0)).otherwise(
-            (occurrence_count(n, " ") + 1).cast("long")
-        )
-        stop_hits = sum(occurrence_count(n, f" {w} ") for w in STOPWORDS)
-        stopword_ratio = stop_hits / F.greatest(n_tokens, F.lit(1))
+        # n is the already-normalized text
+        stop_hits = _marker_hits(n, _STOP_MARKERS)
+        stopword_ratio = stop_hits / F.greatest(_count_tokens(n), F.lit(1))
         return F.least(stopword_ratio * 4.0, F.lit(1.0))
 
     if bind_once:
@@ -208,14 +246,31 @@ _LANG_MARKERS = {
 def _lang_scored(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # plain tree on purpose: in this projection codegen's subexpression
     # elimination already evaluates the normalize chain once per row; a
-    # HOF binding leaves codegen and measured ~50% slower (round-14 A/B
-    # at sf0.1: 0.416 s vs 0.628 s min-of-5)
+    # HOF binding leaves codegen and measured ~50% slower (A/B at sf0.1:
+    # 0.416 s vs 0.628 s min-of-5)
     norm = F.concat(F.lit(" "), normalize_text(F.col(text_col)), F.lit(" "))
     scores = [
-        sum(occurrence_count(norm, m) for m in ms).alias(f"_s_{lang}")
+        _marker_hits(norm, ms).alias(f"_s_{lang}")
         for lang, ms in _LANG_MARKERS.items()
     ]
     return docs.select(F.col(id_col), *scores)
+
+
+def _lang_scored_sql() -> str:
+    """DuckDB twin of :func:`_lang_scored` over ``documents``: the CTEs
+    ``norm`` and ``scored(doc_id, s_<lang>, ...)``."""
+    scores = ",\n                 ".join(
+        f"{_marker_hits_sql('nt', ms)} AS s_{lang}"
+        for lang, ms in _LANG_MARKERS.items()
+    )
+    return f"""norm AS (
+          SELECT doc_id, ' ' || {normalize_text_sql()} || ' ' AS nt
+          FROM documents
+        ), scored AS (
+          SELECT doc_id,
+                 {scores}
+          FROM norm
+        )"""
 
 
 def _lang_pred(best):
@@ -223,6 +278,18 @@ def _lang_pred(best):
     for l in reversed(list(_LANG_MARKERS)):
         pred = F.when((best > 0) & (F.col(f"_s_{l}") == best), l).otherwise(pred)
     return pred
+
+
+# the score columns of _lang_scored_sql, in _LANG_MARKERS order
+_LANG_SCORES_SQL = ", ".join(f"s_{l}" for l in _LANG_MARKERS)
+
+
+def _lang_pred_sql(best: str) -> str:
+    """DuckDB twin of :func:`_lang_pred` over ``scored``'s columns."""
+    whens = " ".join(
+        f"WHEN {best} > 0 AND s_{l} = {best} THEN '{l}'" for l in _LANG_MARKERS
+    )
+    return f"CASE {whens} ELSE 'unk' END"
 
 
 def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -407,6 +474,45 @@ def pii_scan(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") ->
     )
 
 
+def _token_rows(docs: DataFrame, text_col: str, word: str, *keys):
+    """One row per token of each non-null text: the ``keys`` columns and
+    the token as ``word``."""
+    return docs.filter(F.col(text_col).isNotNull()).select(
+        *keys, F.explode(tokenize(F.col(text_col))).alias(word)
+    )
+
+
+def _token_rows_sql(keys: str = "doc_id", word: str = "w") -> str:
+    """DuckDB twin of :func:`_token_rows` over ``documents``."""
+    keys = f"{keys}, " if keys else ""
+    return (
+        f"SELECT {keys}unnest({tokenize_sql()}) AS {word} "
+        "FROM documents WHERE text IS NOT NULL"
+    )
+
+
+def _doc_terms(docs: DataFrame, text_col: str, id_col: str, word: str, cnt: str):
+    """Per-document term counts ``(_id, word, cnt)`` over the non-null
+    texts.  A caller whose table feeds several consumers checkpoints it
+    lazily (``localCheckpoint(eager=False)``): consumers with different
+    pruned schemas defeat ReuseExchange, so the corpus explode would
+    re-run per consumer, and unlike ``persist()`` the checkpoint is
+    released by the ContextCleaner with the DataFrame."""
+    return (
+        _token_rows(docs, text_col, word, F.col(id_col).alias("_id"))
+        .groupBy("_id", word)
+        .agg(F.count("*").alias(cnt))
+    )
+
+
+def _doc_terms_sql(word: str = "w", cnt: str = "k") -> str:
+    """DuckDB twin of :func:`_doc_terms` (``doc_id`` for ``_id``)."""
+    return (
+        f"SELECT doc_id, {word}, count(*) AS {cnt} "
+        f"FROM ({_token_rows_sql(word=word)}) GROUP BY doc_id, {word}"
+    )
+
+
 def unigram_logprob(
     docs: DataFrame,
     text_col: str = "text",
@@ -439,18 +545,9 @@ def unigram_logprob(
     Returns (id, n_tokens, score).
     """
     scale = float(10**round_digits)
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-    doc_words = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("_w"))
-        .groupBy("_id", "_w")
-        .agg(F.count("*").alias("_k"))
-        # two consumers (vocab, score join) with different pruned
-        # schemas defeat ReuseExchange; lazy localCheckpoint materializes
-        # the bounded aggregate once and, unlike persist(), is released
-        # by the ContextCleaner when the DataFrame is garbage-collected
-        .localCheckpoint(eager=False)
+    # two consumers: vocab and the score join
+    doc_words = _doc_terms(docs, text_col, id_col, "_w", "_k").localCheckpoint(
+        eager=False
     )
     vocab = doc_words.groupBy("_w").agg(F.sum("_k").alias("_cnt"))
     total = vocab.agg(F.sum("_cnt").alias("_tot"))
@@ -481,19 +578,7 @@ def unigram_logprob_oracle_sql(round_digits: int = 9) -> str:
     tokenization, integer logprob quantization, and final rounding."""
     scale = float(10**round_digits)
     return f"""
-        WITH toks AS (
-          SELECT doc_id, u.w AS w
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), dw AS (
-          SELECT doc_id, w, count(*) AS k FROM toks GROUP BY doc_id, w
-        ), vocab AS (
+        WITH dw AS ({_doc_terms_sql()}), vocab AS (
           SELECT w, sum(k) AS cnt FROM dw GROUP BY w
         ), tot AS (SELECT sum(cnt) AS t FROM vocab)
         SELECT dw.doc_id,
@@ -538,8 +623,7 @@ def bigram_logprob(
     the output.  Returns (id, n_bigrams, score).
     """
     scale = float(10**round_digits)
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
+    words = tokenize(F.col(text_col))
     n = F.size("_ws")
     pairs = F.arrays_zip(
         F.slice(F.col("_ws"), 1, n - 1).alias("w1"),
@@ -596,11 +680,7 @@ def bigram_logprob_oracle_sql(round_digits: int = 9) -> str:
     scale = float(10**round_digits)
     return f"""
         WITH wl AS (
-          SELECT doc_id,
-                 list_filter(
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ), w -> len(w) > 0) AS ws
+          SELECT doc_id, {tokenize_sql()} AS ws
           FROM documents WHERE text IS NOT NULL
         ), pairs AS (
           SELECT doc_id, ws[g.i] AS w1, ws[g.i + 1] AS w2
@@ -650,16 +730,11 @@ def vocab_stats(
 
     Returns the top_k rows of (word, cnt, rank, coverage).
     """
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
     vocab = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.explode(words).alias("word"))
+        _token_rows(docs, text_col, "word")
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
-        # two consumers (total, top-k) — checkpoint so the explode runs
-        # once (GC-released, see unigram_logprob)
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=False)  # two consumers: total, top-k
     )
     total = vocab.agg(F.sum("cnt").alias("_tot"))
     top = vocab.orderBy(F.desc("cnt"), F.col("word")).limit(top_k)
@@ -690,17 +765,9 @@ def vocab_stats(
 def vocab_stats_oracle_sql(top_k: int = 100) -> str:
     """DuckDB SQL equal to vocab_stats."""
     return f"""
-        WITH toks AS (
-          SELECT u.w AS word
-          FROM (
-            SELECT string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), vocab AS (
-          SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY word
+        WITH vocab AS (
+          SELECT word, CAST(count(*) AS BIGINT) AS cnt
+          FROM ({_token_rows_sql("", "word")}) GROUP BY word
         ), tot AS (SELECT sum(cnt) AS t FROM vocab),
         ranked AS (
           SELECT word, cnt,
@@ -737,11 +804,8 @@ def bpe_pair_counts(
 
     Returns (pair, cnt, rank) for the top_k pairs.
     """
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
     vocab = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.explode(words).alias("word"))
+        _token_rows(docs, text_col, "word")
         .groupBy("word")
         .agg(F.count("*").alias("_wc"))
         .filter(F.length("word") >= 2)
@@ -771,17 +835,8 @@ def bpe_pair_counts(
 def bpe_pair_counts_oracle_sql(top_k: int = 50) -> str:
     """DuckDB SQL equal to bpe_pair_counts."""
     return f"""
-        WITH toks AS (
-          SELECT u.w AS word
-          FROM (
-            SELECT string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), vocab AS (
-          SELECT word, count(*) AS wc FROM toks
+        WITH vocab AS (
+          SELECT word, count(*) AS wc FROM ({_token_rows_sql("", "word")})
           GROUP BY word HAVING length(word) >= 2
         ), pairs AS (
           SELECT substring(word, u.i, 2) AS pair, wc
@@ -824,16 +879,11 @@ def source_divergence(
     Returns (group, n_tokens, kl).
     """
     scale = float(10**round_digits)
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
     sw = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(group_col).alias("_grp"), F.explode(words).alias("_w"))
+        _token_rows(docs, text_col, "_w", F.col(group_col).alias("_grp"))
         .groupBy("_grp", "_w")
         .agg(F.count("*").alias("_k"))
-        # four consumers (wtot, stot, ctot, the KL join) — checkpoint the
-        # bounded (group, word) aggregate so the explode runs once
-        # (GC-released, see unigram_logprob)
+        # four consumers: wtot, stot, ctot and the KL join (see _doc_terms)
         .localCheckpoint(eager=False)
     )
     wtot = sw.groupBy("_w").agg(F.sum("_k").alias("_kw"))
@@ -866,18 +916,9 @@ def source_divergence_oracle_sql(
     """DuckDB SQL equal to source_divergence."""
     scale = float(10**round_digits)
     return f"""
-        WITH toks AS (
-          SELECT {group_col} AS grp, u.w AS w
-          FROM (
-            SELECT {group_col},
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), sw AS (
-          SELECT grp, w, count(*) AS k FROM toks GROUP BY grp, w
+        WITH sw AS (
+          SELECT grp, w, count(*) AS k
+          FROM ({_token_rows_sql(f"{group_col} AS grp")}) GROUP BY grp, w
         ), wtot AS (
           SELECT w, sum(k) AS kw FROM sw GROUP BY w
         ), stot AS (
@@ -922,13 +963,9 @@ def rake_keywords(
 
     Returns (id, phrase, n_words, score_units, rank), rank 1..k.
     """
-    words = F.filter(
-        F.split(normalize_text(F.col(text_col)), " "),
-        lambda s: F.length(s) > 0,
-    )
     toks = docs.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
-        F.posexplode(words).alias("_pos", "_w"),
+        F.posexplode(tokenize(F.col(text_col))).alias("_pos", "_w"),
     )
     w = Window.partitionBy("_id").orderBy("_pos")
     flagged = toks.withColumn(
@@ -1004,11 +1041,7 @@ def rake_keywords_oracle_sql(k: int = 3) -> str:
                  list_extract(wl, u.i) AS w
           FROM (
             SELECT doc_id,
-                   list_filter(
-                     string_split(
-                       regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                       ' '),
-                     x -> len(x) > 0) AS wl
+                   {tokenize_sql()} AS wl
             FROM documents WHERE text IS NOT NULL
           ), unnest(range(1, len(wl) + 1)) AS u(i)
         ), flagged AS (
@@ -1082,10 +1115,8 @@ def top_ngrams(
     partial agg is the load-bearing step and the window only sees the
     aggregated (group, ngram) space.
     """
-    norm = normalize_text(F.col(text_col))
     toks = docs.select(
-        F.col(by_col).alias("grp"),
-        F.filter(F.split(norm, " "), lambda s: F.length(s) > 0).alias("_w"),
+        F.col(by_col).alias("grp"), tokenize(F.col(text_col)).alias("_w")
     )
     # guard: sequence(1, 0) is DESCENDING in Spark, not empty — docs with
     # fewer than n words must emit no grams, not truncated ones
@@ -1135,18 +1166,8 @@ def tfidf_topk(
     word.  Returns (id, word, tf, score, rank).
     """
     scale = float(10**round_digits)
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-    dw = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("word"))
-        .groupBy("_id", "word")
-        .agg(F.count("*").alias("tf"))
-        # three consumers (scores, df, N) with different pruned schemas —
-        # without this the corpus explode re-runs per consumer (column
-        # pruning defeats ReuseExchange); GC-released, see unigram_logprob
-        .localCheckpoint(eager=False)
-    )
+    # three consumers: scores, df and N
+    dw = _doc_terms(docs, text_col, id_col, "word", "tf").localCheckpoint(eager=False)
     df_tbl = dw.groupBy("word").agg(F.count("*").alias("_df"))
     n_docs = dw.select("_id").distinct().agg(F.count("*").alias("_n"))
     idf_units = F.round(
@@ -1176,19 +1197,7 @@ def tfidf_topk_oracle_sql(k: int = 5, round_digits: int = 9) -> str:
     tokenization, integer idf quantization, and tie-break."""
     scale = float(10**round_digits)
     return f"""
-        WITH toks AS (
-          SELECT doc_id, u.w AS word
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), dw AS (
-          SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word
-        ), dfreq AS (
+        WITH dw AS ({_doc_terms_sql("word", "tf")}), dfreq AS (
           SELECT word, count(*) AS df FROM dw GROUP BY word
         ), n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM dw),
         scored AS (
@@ -1238,14 +1247,7 @@ def bpe_apply(
     Returns (id, n_words, n_tokens, tokens_per_word).
     """
     sep = "\x01"
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-    dw = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("word"))
-        .groupBy("_id", "word")
-        .agg(F.count("*").alias("_tf"))
-    )
+    dw = _doc_terms(docs, text_col, id_col, "word", "_tf")
     vocab = dw.select("word").distinct()
     enc = F.regexp_replace(F.col("word"), "(.)", sep + "$1" + sep)
     for a, b in merges:
@@ -1292,18 +1294,8 @@ def bpe_apply_oracle_sql(merges: list[tuple[str, str]]) -> str:
         rep = f"chr(1) || '{q(a)}{q(b)}' || chr(1)"
         enc = f"replace({enc}, {pat}, {rep})"
     return f"""
-        WITH dw AS (
-          SELECT doc_id, u.w AS word, count(*) AS tf
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-          GROUP BY doc_id, u.w
-        ), vocab AS (SELECT DISTINCT word FROM dw),
+        WITH dw AS ({_doc_terms_sql("word", "tf")}),
+        vocab AS (SELECT DISTINCT word FROM dw),
         encoded AS (
           SELECT word,
                  len(list_filter(string_split({enc}, chr(1)),
@@ -1348,8 +1340,7 @@ def doc_chunks(
         # stride > chunk_words leaves inter-chunk gaps, breaking the
         # no-words-dropped contract (found by the coverage property test)
         raise ValueError("doc_chunks requires 1 <= stride <= chunk_words")
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
+    words = tokenize(F.col(text_col))
     n = F.size("_w")
     last = F.greatest(n - chunk_words + 1, F.lit(1))
     grid = F.transform(
@@ -1390,10 +1381,7 @@ def doc_chunks_oracle_sql(chunk_words: int = 64, stride: int = 48) -> str:
     return f"""
         WITH w AS (
           SELECT doc_id,
-                 list_filter(
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ), x -> len(x) > 0) AS wl
+                 {tokenize_sql()} AS wl
           FROM documents WHERE text IS NOT NULL
         ), grid AS (
           SELECT doc_id, wl,
@@ -1480,15 +1468,7 @@ def tfidf_cosine_pairs(
     must state which arm they mean.
     """
     scale = float(10**round_digits)
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-    dw = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("_w"))
-        .groupBy("_id", "_w")
-        .agg(F.count("*").alias("_tf"))
-        .localCheckpoint(eager=False)
-    )
+    dw = _doc_terms(docs, text_col, id_col, "_w", "_tf").localCheckpoint(eager=False)
     df_tbl = dw.groupBy("_w").agg(F.count("*").alias("_df"))
     n_docs = dw.select("_id").distinct().agg(F.count("*").alias("_n"))
     idf_units = F.round(
@@ -1561,19 +1541,7 @@ def tfidf_cosine_pairs_oracle_sql(
         else ""
     )
     return f"""
-        WITH toks AS (
-          SELECT doc_id, u.w AS w
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), dw AS (
-          SELECT doc_id, w, count(*) AS tf FROM toks GROUP BY doc_id, w
-        ), dfreq AS (
+        WITH dw AS ({_doc_terms_sql("w", "tf")}), dfreq AS (
           SELECT w, count(*) AS df FROM dw GROUP BY w
         ), n AS (SELECT count(DISTINCT doc_id) AS nd FROM dw),
         post AS (
@@ -1642,17 +1610,8 @@ def bm25_topk(
     k1p1 = float(k1 + 1.0)
     one_minus_b = float(1.0 - b)
     spark = docs.sparkSession
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-    dw = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("word"))
-        .groupBy("_id", "word")
-        .agg(F.count("*").alias("tf"))
-        # three consumers (postings, dl, df) — checkpoint or the corpus
-        # explode re-runs per consumer (see tfidf_topk; GC-released)
-        .localCheckpoint(eager=False)
-    )
+    # three consumers: postings, dl and df
+    dw = _doc_terms(docs, text_col, id_col, "word", "tf").localCheckpoint(eager=False)
     dl = dw.groupBy("_id").agg(F.sum("tf").alias("_dl"))
     stats = dl.agg(
         F.count("*").alias("_n"), F.sum("_dl").alias("_tot")
@@ -1663,9 +1622,9 @@ def bm25_topk(
         for w in dict.fromkeys(text.lower().split())
     ]
     qt = spark.createDataFrame(qrows, "query_id long, word string")
-    # df only for QUERY-TERM words (round 15, guide "aggregate what you
-    # need"): the scored join consumes df solely through the qt join,
-    # so pre-filtering dw by the query vocabulary — a codegen isin over
+    # df only for QUERY-TERM words ("aggregate what you need"): the
+    # scored join consumes df solely through the qt join, so
+    # pre-filtering dw by the query vocabulary — a codegen isin over
     # the tiny driver-side word list, no extra join or broadcast —
     # before the word-keyed aggregation shrinks it from the full corpus
     # vocabulary to the posting lists actually touched; df values for
@@ -1744,15 +1703,7 @@ def rrf_fusion(
         "query_id", F.col(id_col).alias("_id"), F.col("rank").alias("rank_bm25")
     )
     # second ranker: integer-unit TF-IDF over the same query terms
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-    dw = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("word"))
-        .groupBy("_id", "word")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    dw = _doc_terms(docs, text_col, id_col, "word", "tf").localCheckpoint(eager=False)
     n_docs = dw.select("_id").distinct().agg(F.count("*").alias("_n"))
     qrows = [
         (int(qid), w)
@@ -1760,9 +1711,9 @@ def rrf_fusion(
         for w in dict.fromkeys(qtext.lower().split())
     ]
     qt = spark.createDataFrame(qrows, "query_id long, word string")
-    # df only for query-term words (round 15, same as bm25_topk: the
-    # tf_scored join consumes df solely through the qt join; codegen
-    # isin over the tiny driver-side word list)
+    # df only for query-term words (same as bm25_topk: the tf_scored
+    # join consumes df solely through the qt join; codegen isin over
+    # the tiny driver-side word list)
     qword_list = sorted({w for _, w in qrows})
     df_tbl = (
         dw.filter(F.col("word").isin(qword_list))
@@ -1835,19 +1786,7 @@ def rrf_fusion_oracle_sql(
         WITH bm AS (
           SELECT query_id, doc_id, rank AS rank_bm25
           FROM ({bm_sql})
-        ), toks AS (
-          SELECT doc_id, u.w AS word
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), dw AS (
-          SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word
-        ), dfreq AS (
+        ), dw AS ({_doc_terms_sql("word", "tf")}), dfreq AS (
           SELECT word, count(*) AS df FROM dw GROUP BY word
         ), n AS (SELECT count(DISTINCT doc_id) AS nd FROM dw),
         qt(query_id, word) AS (VALUES {qvals}),
@@ -1908,19 +1847,7 @@ def bm25_topk_oracle_sql(
         for w in dict.fromkeys(text.lower().split())
     )
     return f"""
-        WITH toks AS (
-          SELECT doc_id, u.w AS word
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-        ), dw AS (
-          SELECT doc_id, word, count(*) AS tf FROM toks GROUP BY doc_id, word
-        ), dl AS (
+        WITH dw AS ({_doc_terms_sql("word", "tf")}), dl AS (
           SELECT doc_id, sum(tf) AS dl FROM dw GROUP BY doc_id
         ), dfreq AS (
           SELECT word, count(*) AS df FROM dw GROUP BY word
@@ -2017,11 +1944,8 @@ def hashed_doc_features(
     """
     from openseize_spark.llm.sampling import salted_hash
 
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
     occ = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("_w"))
+        _token_rows(docs, text_col, "_w", F.col(id_col).alias("_id"))
         .select(
             "_id",
             (salted_hash(F.col("_w"), seed) % dim).alias("_b"),
@@ -2053,15 +1977,7 @@ def hashed_doc_features_oracle_sql(dim: int = 64, seed: str = "fh") -> str:
     hs = salted_hash_sql("u.w", seed + "s")
     return f"""
         WITH toks AS (
-          SELECT doc_id, u.w AS w
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
+          {_token_rows_sql()}
         ), occ AS (
           SELECT doc_id,
                  ({hb} % {dim}) AS b,
@@ -2111,10 +2027,8 @@ def rouge_n(
     (ref_id, cand_id, n, overlap, ref_total, cand_total, recall,
     precision, f1) — one row per pair per n in {1, 2}.
     """
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
     base = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), words.alias("_ws")
+        F.col(id_col).alias("_id"), tokenize(F.col(text_col)).alias("_ws")
     )
     uni = base.select(
         "_id", F.lit(1).cast("bigint").alias("n"),
@@ -2132,8 +2046,8 @@ def rouge_n(
     grams = uni.unionByName(bi)
     # three consumers (overlap ref side, overlap cand side, totals) —
     # materialize the per-doc gram counts once or each consumer rebuilds
-    # the full corpus explode+aggregate (round-14 plan sweep: 12 doc
-    # scans in rouge_pairs -> 4); GC-released with the frame
+    # the full corpus explode+aggregate (12 doc scans in rouge_pairs
+    # without it, 4 with it); GC-released with the frame
     gc = (
         grams.groupBy("_id", "n", "gram")
         .agg(F.count("*").cast("bigint").alias("cnt"))
@@ -2146,10 +2060,10 @@ def rouge_n(
     # pair×n skeleton), so without a checkpoint the whole upstream
     # pair pipeline is planned twice — for the LSH-candidate callers
     # (rouge_verify / bleu_verify) that re-executed the full
-    # signature+banding stack per consumer (round-14 plan sweep: the
-    # 64-permutation signature aggregate appeared twice).  The pair
+    # signature+banding stack per consumer (the 64-permutation
+    # signature aggregate appeared twice in the plan).  The pair
     # table is bounded by contract, so the lazy checkpoint is cheap.
-    # Caveat (ADVICE r14): a localCheckpoint pins the pair table
+    # Caveat: a localCheckpoint pins the pair table
     # unreplicated on executors and truncates lineage — executor loss
     # after materialization fails the job instead of recomputing; fine
     # for a bounded control table, part of the documented trade.
@@ -2230,10 +2144,7 @@ def rouge_n_oracle_sql(pairs_sql: str) -> str:
         WITH p AS ({pairs_sql}),
         w AS (
           SELECT doc_id AS id,
-                 list_filter(
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ), x -> len(x) > 0) AS wl
+                 {tokenize_sql()} AS wl
           FROM documents WHERE text IS NOT NULL
         ), grams AS (
           SELECT id, CAST(1 AS BIGINT) AS n, u.g AS gram
@@ -2378,12 +2289,8 @@ def heaps_law_fit(
         F.col(text_col).alias("_t"),
     )
     m = d.agg((F.max("_id") + 1).cast("bigint").alias("_M"))
-    words = F.filter(
-        F.split(normalize_text(F.col("_t")), " "),
-        lambda s: F.length(s) > 0,
-    )
     firsts = (
-        d.select("_id", F.explode(words).alias("_w"))
+        d.select("_id", F.explode(tokenize(F.col("_t"))).alias("_w"))
         .groupBy("_w")
         .agg(F.min("_id").alias("_fid"))
     )
@@ -2470,16 +2377,13 @@ def heaps_law_fit_oracle_sql() -> str:
     )
     return f"""
         WITH d AS MATERIALIZED (
-          SELECT doc_id AS _id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                   ' ') AS wl
+          SELECT doc_id AS _id, {tokenize_sql()} AS wl
           FROM documents WHERE text IS NOT NULL
         ), m AS (
           SELECT max(_id) + 1 AS M FROM d
         ), firsts AS (
           SELECT u.w AS w, min(_id) AS fid
-          FROM d, unnest(wl) AS u(w) WHERE len(u.w) > 0
+          FROM d, unnest(wl) AS u(w)
           GROUP BY u.w
         ), wb AS (
           SELECT (CASE {bins_f} ELSE 10 END) AS bin, count(*) AS c
@@ -2555,13 +2459,8 @@ def _bpe_train(docs: DataFrame, rounds: int, text_col: str):
     training vocabulary by the same position/run-parity scan, so the
     apply phase costs nothing extra on the train corpus."""
     spark = docs.sparkSession
-    words = F.filter(
-        F.split(normalize_text(F.col(text_col)), " "),
-        lambda s: F.length(s) > 0,
-    )
     wf = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.explode(words).alias("_wd"))
+        _token_rows(docs, text_col, "_wd")
         .groupBy("_wd")
         .agg(F.count("*").cast("bigint").alias("_wt"))
     )
@@ -2703,14 +2602,7 @@ def bpe_train_encode(
     :func:`bpe_apply` output contract.
     """
     _out, seq = _bpe_train(docs, rounds, text_col)
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
-    dw = (
-        docs.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.explode(words).alias("word"))
-        .groupBy("_id", "word")
-        .agg(F.count("*").alias("_tf"))
-    )
+    dw = _doc_terms(docs, text_col, id_col, "word", "_tf")
     encoded = seq.select(
         F.col("_wd").alias("word"), F.size("_toks").alias("_ntok")
     )
@@ -2756,18 +2648,8 @@ def bpe_train_encode_oracle_sql(rounds: int = 3) -> str:
     from joining the per-doc term-frequency table to the final
     encoded vocabulary (seq{rounds})."""
     parts = _bpe_train_ctes(rounds)
-    return "".join(parts) + f""", dw AS MATERIALIZED (
-          SELECT doc_id, u.w AS word, count(*) AS tf
-          FROM (
-            SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-          GROUP BY doc_id, u.w
-        ), enc AS MATERIALIZED (
+    return "".join(parts) + f""", dw AS MATERIALIZED ({_doc_terms_sql("word", "tf")}),
+        enc AS MATERIALIZED (
           SELECT wd, len(string_split(sq, ' ')) AS ntok
           FROM seq{int(rounds)}
         )
@@ -2784,17 +2666,10 @@ def _bpe_train_ctes(rounds: int) -> list:
     """The shared bpe_learn/bpe_train_encode oracle CTE chain
     (wf, seq0, then tok{r}/top{r}/kept{r}/seq{r} per round)."""
     parts = [
-        """
+        f"""
         WITH wf AS MATERIALIZED (
-          SELECT u.w AS wd, CAST(count(*) AS BIGINT) AS wt
-          FROM (
-            SELECT string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     ' ') AS wl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(wl) AS u(w)
-          WHERE len(u.w) > 0
-          GROUP BY u.w
+          SELECT wd, CAST(count(*) AS BIGINT) AS wt
+          FROM ({_token_rows_sql("", "wd")}) GROUP BY wd
         ), seq0 AS MATERIALIZED (
           SELECT wd, wt,
                  trim(regexp_replace(wd, '(.)', '\\1 ', 'g')) AS sq
@@ -2880,10 +2755,9 @@ def kn_perplexity(
     than two words have no bigrams and are absent.
     """
     d = float(discount)
-    norm = normalize_text(F.col(text_col))
-    words = F.filter(F.split(norm, " "), lambda s: F.length(s) > 0)
     toks = docs.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), F.posexplode(words).alias("_pos", "_w")
+        F.col(id_col).alias("_id"),
+        F.posexplode(tokenize(F.col(text_col))).alias("_pos", "_w"),
     )
     wdoc = Window.partitionBy("_id").orderBy("_pos")
     occ = (
@@ -2957,11 +2831,7 @@ def kn_perplexity_oracle_sql(discount: float = 0.75) -> str:
                  list_extract(wl, u.i) AS w
           FROM (
             SELECT doc_id,
-                   list_filter(
-                     string_split(
-                       regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                       ' '),
-                     x -> len(x) > 0) AS wl
+                   {tokenize_sql()} AS wl
             FROM documents WHERE text IS NOT NULL
           ), unnest(range(1, len(wl) + 1)) AS u(i)
         ), occ AS MATERIALIZED (
