@@ -7,6 +7,10 @@ implemented operator from SURVEY.md §2 (+ the LLM-pipeline extensions);
 SQL-expressible one.  Column names/aliases are kept in lock-step between
 both sides — the driver's compare hashes values under sorted column names.
 
+The queries themselves live in ``openseize_spark/registry/<domain>.py``:
+each builder sits next to its ``register`` call, which carries the
+oracle and the gate casts and order (``openseize_spark.registry``).
+
 Signal-operator queries derive a deterministic dense signal from
 ``lineitem`` using pure integer arithmetic (openseize_spark.signal), so
 both engines produce bit-identical inputs.
@@ -18,319 +22,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
-from openseize_spark.signal import SignalFrame, signal_cte, signal_from_lineitem
-from openseize_spark.dsp import design
+from openseize_spark import registry
 from openseize_spark.operators import (
-    fir as op_fir,
-    iir as op_iir,
     relational as rel,
-    resample as op_resample,
-    segmentation as seg,
     spectral as spec,
     stats as op_stats,
 )
-from openseize_spark.llm import dedup, sampling, similarity, text as llm_text
-from openseize_spark.streaming.windows import drain_stream
-
-NCH = 4
-FS = 100.0
-
-# ---------------------------------------------------------------- helpers
-
-# Kaiser FIR used by q_fir_kaiser — designed once at import (driver-side
-# numpy, reference: filtering/fir.py:52-137); the same float64 tap
-# literals are embedded in the oracle SQL via repr() so both engines
-# compute the identical dot product.
-_FIR_SPEC = design.kaiser(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-
-from openseize_spark.dsp import design_iir as design2  # noqa: E402
-
-_REMEZ_SPEC = design2.remez_fir(fpass=10, fstop=20, fs=FS, gpass=0.5, gstop=40.0)
-
-_HAMMING_SPEC = design.general_cosine_fir("hamming", fpass=10, fstop=20, fs=FS)
-
-# deterministic circular-shift fractions (a, b) -> shift = (n*a)//b used by
-# q_pac_surrogates and replayed by its DuckDB oracle
-_SURROGATE_FRACS = [(3, 10), (9, 20), (11, 20), (7, 10)]
+from openseize_spark.registry.common import FS, _signal, _t
 
 
-def _compose_ba():
-    """Single-stage (b, a) from the default butter SOS cascade — shared by
-    the lfilter/filtfilt queries and their recursion-replay oracles so both
-    sides consume identical float64 coefficients."""
-    import numpy as np
-
-    spec = design.butter(fpass=10, fstop=20, fs=FS)
-    b, a = np.array([1.0]), np.array([1.0])
-    for s in spec.sos:
-        b = np.convolve(b, s[:3])
-        a = np.convolve(a, s[3:])
-    return b, a
-
-
-_BA_SPEC = _compose_ba()
-
-
-def _signal(spark: SparkSession, sf_dir: str) -> SignalFrame:
-    return signal_from_lineitem(spark, sf_dir, nchannels=NCH, fs=FS)
-
-
-# The IIR gate queries run on the first IIR_SLICE samples per channel so
-# their DuckDB oracles (recursive-CTE replays of the exact DF2T recursion,
-# plans/oracles.iir_oracle_sql) stay cheap: the recursive term re-executes
-# per sample, so oracle cost is O(slice * nch), not O(full signal).
-# Full-length variants (*_full, rows-only) exist for bench throughput.
-IIR_SLICE = 2048
-
-# English function-word hits of stopword_score_by_lang
-_EN_MARKERS = (" the ", " and ", " of ", " is ")
-
-
-def _signal_sliced(spark: SparkSession, sf_dir: str) -> SignalFrame:
-    sf = _signal(spark, sf_dir)
-    return sf.with_df(sf.df.filter(F.col("t") < IIR_SLICE))
-
-
-
-_GATE_ROOTS: dict[str, str] = {}
-
-
-def _gate_tmp(spark, name: str) -> str:
-    """Session-scoped gate staging path under one per-application parent
-    directory, removed when the process exits.  The applicationId keeps
-    concurrent local sessions (a bench run next to an oracle check on
-    one box) from clobbering each other's fixture files mid-write; it is
-    stable within a session, so repeated invocations of the same query
-    stay idempotent."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    app = spark.sparkContext.applicationId
-    root = _GATE_ROOTS.get(app)
-    if root is None:
-        root = os.path.join(tempfile.gettempdir(), f"os_gate_{app}")
-        os.makedirs(root, exist_ok=True)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        _GATE_ROOTS[app] = root
-    return os.path.join(root, name)
-
-
-def _stamp_batch_mtimes(d: str, n_batches: int) -> None:
-    """Force strictly increasing mtimes across the batch_0..batch_{n-1}
-    fixture directories (r14, per ADVICE): Spark's FileStreamSource
-    orders files by modification timestamp, and on a filesystem with
-    coarse mtime granularity three sequentially-written batch files can
-    TIE and be picked up out of ts order — diverging any carried-state
-    stream from its batch/oracle replay.  One second of separation per
-    batch, anchored at each file's own mtime, makes the intended
-    processing order deterministic everywhere."""
-    import os
-
-    base = None
-    for i in range(n_batches):
-        bdir = os.path.join(d, f"batch_{i}")
-        for root, _dirs, files in os.walk(bdir):
-            for fn in files:
-                p = os.path.join(root, fn)
-                if base is None:
-                    base = os.stat(p).st_mtime
-                os.utime(p, (base + i, base + i))
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _stage_batches(spark, sf_dir: str, prefix: str, e: DataFrame, conds):
-    """Stage ``e`` as one single-file micro-batch per filter condition
-    (``batch_0``, ``batch_1``, ... under a fresh gate directory), stamp
-    their mtimes in that order and return the file stream that reads
-    them one file per trigger (maxFilesPerTrigger=1)."""
-    import os
-    import shutil
-
-    d = _gate_tmp(spark, prefix + os.path.basename(os.path.normpath(sf_dir)))
-    shutil.rmtree(d, ignore_errors=True)
-    for i, cond in enumerate(conds):
-        e.filter(cond).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(d, f"batch_{i}")
-        )
-    _stamp_batch_mtimes(d, len(conds))
-    return (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(d, "batch_*"))
-    )
-
-
-def _thirds(c, lo, span) -> list:
-    """The three ``_stage_batches`` conditions that cut column ``c`` at
-    ``lo + span`` and ``lo + 2 * span`` (the caller's arithmetic picks
-    ``span``; the oracles replay it exactly)."""
-    return [
-        c < lo + span,
-        (c >= lo + span) & (c < lo + 2 * span),
-        c >= lo + 2 * span,
-    ]
-
-
-def _ring_vnodes(n_shards: int, vnodes_per_shard: int):
-    """Consistent-hash ring constants for q_consistent_hash_ring:
-    (vnode_hash, shard) sorted by hash, computed driver-side with the
-    same md5-prefix scheme as sampling.salted_hash so both engines
-    embed IDENTICAL literals (the fir-taps pattern).  Collisions would
-    make min-by ties engine-dependent, so they are asserted away."""
-    import hashlib
-
-    vn = []
-    for s in range(n_shards):
-        for v in range(vnodes_per_shard):
-            h = int(
-                hashlib.md5(f"ring:s{s}#v{v}".encode()).hexdigest()[:8], 16
-            )
-            vn.append((h, s))
-    assert len({h for h, _ in vn}) == len(vn), "vnode hash collision"
-    return sorted(vn)
-
-
-def _event_ts(e: DataFrame) -> DataFrame:
-    """events.parquet stores TIMESTAMP(NANOS). Depending on the Spark
-    build and ``nanosAsLong`` this surfaces as bigint or natively as
-    TIMESTAMP_NTZ; normalize both to a microsecond TimestampType (batch
-    or stream) so every downstream query sees one schema.  The session
-    tz must be UTC so the NTZ->timestamp cast is epoch-identical to
-    DuckDB's naive interpretation."""
-    dt = dict(e.dtypes)["ts"]
-    if dt == "bigint":
-        # integer division: `/` goes through DOUBLE, and epoch nanos
-        # (~1.7e18) exceed 2^53 — float rounding shifts timestamps by
-        # +-1 microsecond (positive epochs, so div == floor here)
-        return e.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if dt == "timestamp_ntz":
-        return e.withColumn("ts", F.col("ts").cast("timestamp"))
-    return e
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet with ``_event_ts`` applied, read under
-    nanosAsLong and a UTC session tz."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return _event_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
-
-
-def _events_stream_dir(spark: SparkSession, sf_dir: str, prefix: str):
-    """Stage events.parquet as a file-stream source — file sources read
-    a directory, so a gate directory holds a symlink to this sf_dir's
-    events file — and return (directory, schema).  Pins the session tz
-    to UTC for ``_event_ts``; leaves nanosAsLong as the session has it
-    (the schema comes from the same session's static read)."""
-    import os
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src = os.path.realpath(f"{sf_dir}/events.parquet")
-    d = _gate_tmp(spark, prefix + os.path.basename(os.path.dirname(src)))
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    if os.path.islink(link) and os.readlink(link) != src:
-        os.remove(link)
-    if not os.path.exists(link):
-        os.symlink(src, link)
-    return d, spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-
-def _theilsen_slope(e: DataFrame, max_inrow: int = 1000) -> DataFrame:
-    """Theil-Sen pairwise-slope median per user, guarded for unbounded
-    histories: users with at most ``max_inrow`` events expand their
-    C(n,2) pairs IN-ROW (one collect_list per user, quadratic fan-out
-    inside the row — the market-basket shape, cheapest when histories
-    are bounded); users above the threshold take the rank-self-join arm
-    (row_number window + equi join on (user, rank_a < rank_b)), which
-    spreads the same quadratic work across the partition instead of
-    concentrating ~48 bytes/pair in a single row (n=10k ≈ 2.3 GiB).
-
-    Both arms emit the IDENTICAL slope multiset: a pair's slope is
-    orientation-symmetric bit-exactly ((-a)/(-b) == a/b in IEEE), so
-    neither collect_list order nor rank order affects any value, and
-    the per-user median interpolates the same float multiset either
-    way.  The count that routes a user is a window aggregate over the
-    same user-keyed exchange every arm already needs — the guard costs
-    no extra shuffle, and each event row feeds exactly one arm.
-    """
-    base = e.select(
-        "user_id",
-        F.unix_micros("ts").alias("_t"),
-        F.round(F.col("value") * 100).cast("bigint").alias("_v"),
-    ).withColumn("_n", F.count("*").over(W.partitionBy("user_id")))
-    small = base.filter((F.col("_n") <= max_inrow) & (F.col("_n") >= 2))
-    big = base.filter(F.col("_n") > max_inrow)
-
-    # arm A: bounded histories — in-row pair expansion
-    g = small.select(
-        "user_id",
-        F.struct(F.col("_t").alias("t"), F.col("_v").alias("v")).alias("_pt"),
-    ).groupBy("user_id").agg(F.collect_list("_pt").alias("_pts"))
-    pts = F.col("_pts")
-    pair_arr = F.flatten(
-        F.transform(
-            pts,
-            lambda p1, i: F.transform(
-                F.slice(pts, i + F.lit(2), F.size(pts)),
-                lambda p2: F.struct(
-                    p1["t"].alias("_t1"),
-                    p1["v"].alias("_v1"),
-                    p2["t"].alias("_t2"),
-                    p2["v"].alias("_v2"),
-                ),
-            ),
-        )
-    )
-    slope_a = (
-        ((F.col("_p._v2") - F.col("_p._v1")) * 1000000).cast("double")
-        / (F.col("_p._t2") - F.col("_p._t1")).cast("double")
-    )
-    pairs_small = (
-        g.select("user_id", F.explode(pair_arr).alias("_p"))
-        .filter(F.col("_p._t2") != F.col("_p._t1"))
-        .select("user_id", slope_a.alias("_slope"))
-    )
-
-    # arm B: unbounded histories — rank self-join (any total order
-    # yields the same unordered-pair multiset)
-    wr = W.partitionBy("user_id").orderBy("_t", "_v")
-    ranked = big.withColumn("_r", F.row_number().over(wr))
-    ra, rb = ranked.alias("_A"), ranked.alias("_B")
-    slope_b = (
-        ((F.col("_B._v") - F.col("_A._v")) * 1000000).cast("double")
-        / (F.col("_B._t") - F.col("_A._t")).cast("double")
-    )
-    pairs_big = (
-        ra.join(
-            rb,
-            (F.col("_A.user_id") == F.col("_B.user_id"))
-            & (F.col("_A._r") < F.col("_B._r")),
-        )
-        .filter(F.col("_B._t") != F.col("_A._t"))
-        .select(F.col("_A.user_id").alias("user_id"), slope_b.alias("_slope"))
-    )
-
-    return (
-        pairs_small.unionByName(pairs_big)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_pairs"),
-            F.round(F.expr("percentile(_slope, 0.5)"), 9).alias(
-                "median_slope_cps"
-            ),
-        )
-    )
-
-
-# ------------------------------------------------------------ entry/smoke
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: band power per channel of a masked, standardized signal
     (the reference's flagship pipeline, paper/paper.md:68-72)."""
@@ -353,14542 +54,28 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- queries
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+    return _gate_order(registry.builders())
 
-    # ---- relational / TPC-H-style (scan, filter, agg, join, window) ----
-    def q_pricing_summary(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        return (
-            li.filter(F.col("l_shipdate") <= "1998-09-02")
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.sum("l_quantity").alias("sum_qty"),
-                F.sum("l_extendedprice").alias("sum_base_price"),
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("sum_disc_price"),
-                F.avg("l_quantity").alias("avg_qty"),
-                F.avg("l_extendedprice").alias("avg_price"),
-                F.avg("l_discount").alias("avg_disc"),
-                F.count("*").alias("count_order"),
-            )
-        )
 
-    q["pricing_summary"] = q_pricing_summary
-
-    def q_revenue_by_nation(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        n = _t(spark, sf_dir, "nation")
-        r = _t(spark, sf_dir, "region")
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-            .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-            .groupBy("n_name")
-            .agg(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),
-                F.count("*").alias("n_items"),
-            )
-        )
-
-    q["revenue_by_nation"] = q_revenue_by_nation
-
-    def q_top_customers_by_orders(spark, sf_dir):
-        o = _t(spark, sf_dir, "orders")
-        agg = o.groupBy("o_custkey").agg(F.count("*").alias("n_orders"))
-        w = W.orderBy(F.desc("n_orders"), F.col("o_custkey"))
-        return (
-            agg.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rnk") <= 10)
-        )
-
-    q["top_customers_by_orders"] = q_top_customers_by_orders
-
-    def q_priority_exists(spark, sf_dir):
-        o = _t(spark, sf_dir, "orders")
-        li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 45)
-        return (
-            o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-            .groupBy("o_orderpriority")
-            .agg(F.count("*").alias("n_orders"))
-        )
-
-    q["priority_exists"] = q_priority_exists
-
-    def q_filtered_revenue(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        return (
-            li.filter(
-                (F.col("l_discount") >= 0.05)
-                & (F.col("l_discount") <= 0.07)
-                & (F.col("l_quantity") < 24)
-            )
-            .agg(F.sum(F.col("l_extendedprice") * F.col("l_discount")).alias("revenue"))
-        )
-
-    q["filtered_revenue"] = q_filtered_revenue
-
-    def q_running_total(spark, sf_dir):
-        o = _t(spark, sf_dir, "orders")
-        w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-        # round(4): windowed cumsum associates differently across engines
-        # (sequential vs segment-tree) — ~1e-9 absolute drift on long
-        # prefixes; 4 decimals on money values is engine-invariant
-        return o.select(
-            "o_custkey",
-            "o_orderkey",
-            F.round(F.sum("o_totalprice").over(w), 4).alias("running_total"),
-        )
-
-    q["running_total"] = q_running_total
-
-    def q_rank_parts(spark, sf_dir):
-        p = _t(spark, sf_dir, "part")
-        w = W.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), F.col("p_partkey"))
-        return (
-            p.withColumn("rnk", F.row_number().over(w).cast("bigint"))
-            .filter(F.col("rnk") <= 3)
-            .select("p_brand", "p_partkey", "p_retailprice", "rnk")
-        )
-
-    q["rank_parts"] = q_rank_parts
-
-    def q_event_deltas(spark, sf_dir):
-        e = _events(spark, sf_dir)
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        return e.select(
-            "event_id",
-            "user_id",
-            (F.col("value") - F.lag("value").over(w)).alias("delta"),
-        )
-
-    q["event_deltas"] = q_event_deltas
-
-    def q_sessionize(spark, sf_dir):
-        e = _events(spark, sf_dir)
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        gap = F.col("ts").cast("double") - F.lag(F.col("ts").cast("double")).over(w)
-        flagged = e.select(
-            "user_id", F.when(gap > 1800.0, 1).otherwise(0).alias("new_sess")
-        )
-        return flagged.groupBy("user_id").agg(
-            (F.sum("new_sess") + 1).cast("bigint").alias("n_sessions")
-        )
-
-    q["sessionize"] = q_sessionize
-
-    def q_tumbling_hour(spark, sf_dir):
-        e = _events(spark, sf_dir)
-        return (
-            e.groupBy(
-                F.date_trunc("hour", F.col("ts")).alias("hour"),
-                "event_type",
-            )
-            .agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        )
-
-    q["tumbling_hour"] = q_tumbling_hour
-
-    def q_cohort_retention(spark, sf_dir):
-        """Cohort retention matrix over the events stream: users grouped
-        by first-seen day, distinct-active-user counts per day offset.
-        Two short-key shuffles (per-user min, then per-(cohort, offset)
-        distinct count) — the canonical product-analytics rollup."""
-        e = _events(spark, sf_dir)
-        day = F.to_date("ts")
-        first = e.groupBy("user_id").agg(F.min(day).alias("cohort_day"))
-        act = e.select("user_id", day.alias("day")).distinct()
-        return (
-            act.join(first, on="user_id")
-            .groupBy(
-                "cohort_day",
-                F.datediff("day", "cohort_day").cast("bigint").alias("day_offset"),
-            )
-            .agg(F.countDistinct("user_id").cast("bigint").alias("n_users"))
-        )
-
-    q["cohort_retention"] = q_cohort_retention
-
-    def q_funnel_steps(spark, sf_dir):
-        """Ordered funnel conversion (view -> click after the first view
-        -> purchase after that click): per-step user counts.  Each step
-        is a conditional min-timestamp aggregate joined on the user key;
-        the one-row step counts combine via broadcast cross joins."""
-        e = _events(spark, sf_dir)
-        # v and c each feed TWO consumers (the next funnel stage and
-        # their step count), so without checkpoints the events scan +
-        # per-step aggregation chain re-executed per consumer — 6
-        # events scans in the plan (round 15; lazy, GC-released,
-        # per-user aggregates far smaller than the events table)
-        v = (
-            e.filter(F.col("event_type") == "view")
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("v_ts"))
-            .localCheckpoint(eager=False)
-        )
-        c = (
-            e.filter(F.col("event_type") == "click")
-            .join(v, on="user_id")
-            .filter(F.col("ts") > F.col("v_ts"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("c_ts"))
-            .localCheckpoint(eager=False)
-        )
-        p = (
-            e.filter(F.col("event_type") == "purchase")
-            .join(c, on="user_id")
-            .filter(F.col("ts") > F.col("c_ts"))
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("p_ts"))
-        )
-        n1 = v.agg(F.count("*").cast("bigint").alias("n_viewed"))
-        n2 = c.agg(F.count("*").cast("bigint").alias("n_clicked"))
-        n3 = p.agg(F.count("*").cast("bigint").alias("n_purchased"))
-        return n1.crossJoin(F.broadcast(n2)).crossJoin(F.broadcast(n3))
-
-    q["funnel_steps"] = q_funnel_steps
-
-    def q_value_trend(spark, sf_dir):
-        """Grouped OLS trend (engine-native): slope/intercept of value
-        vs time per event_type from the five closed-form moment sums.  Time
-        is centered on the global minimum BEFORE the moments (otherwise
-        epoch-scale t^2 sums cancel catastrophically and no rounding
-        redeems them); the one-row minimum rides a broadcast cross
-        join."""
-        e = _events(spark, sf_dir)
-        tmin = e.agg(F.min(F.col("ts").cast("double")).alias("_t0"))
-        x = F.col("ts").cast("double") - F.col("_t0")
-        m = (
-            e.crossJoin(F.broadcast(tmin))
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum(x).alias("sx"),
-                F.sum("value").alias("sy"),
-                F.sum(x * F.col("value")).alias("sxy"),
-                F.sum(x * x).alias("sxx"),
-            )
-        )
-        slope = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-            F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-        )
-        return m.select(
-            "event_type",
-            "n",
-            F.round(slope, 9).alias("slope"),
-            F.round((F.col("sy") - slope * F.col("sx")) / F.col("n"), 6).alias(
-                "intercept"
-            ),
-        )
-
-    q["value_trend"] = q_value_trend
-
-    def q_label_centroids(spark, sf_dir):
-        """Per-label embedding centroid and dispersion (engine-native
-        array analytics): posexplode to (label, dim, x), two-level
-        partial aggregation on the short (label, dim) key — the grouped
-        vector-stats shape behind cluster quality checks.
-
-        Determinism: x and x*x are quantized per element to integer
-        1e-9 / 1e-12 units (floor(v*q + 0.5), |x| <= 1 keeps the sums
-        int64-exact past 1e6 rows per group) and summed exactly, then
-        mean/variance divide once — float avg() is reduction-order
-        sensitive, and the avg(x^2) - avg(x)^2 product amplifies a
-        1-ulp reordering across the round-at-9 boundary (the r06
-        coherence failure class; flagged by tools/float_order_audit.py)."""
-        emb = _t(spark, sf_dir, "embeddings")
-        x = emb.select(
-            "label", F.posexplode("embedding").alias("dim", "_x")
-        ).withColumn("_x", F.col("_x").cast("double"))
-        xq = F.floor(F.col("_x") * 1e9 + 0.5).cast("bigint")
-        x2q = F.floor(F.col("_x") * F.col("_x") * 1e12 + 0.5).cast("bigint")
-        g = x.groupBy("label", F.col("dim").cast("bigint").alias("dim")).agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(xq).alias("s1"),
-            F.sum(x2q).alias("s2"),
-        )
-        # no final rounding: the quotients of exact ints are bit-identical
-        # across engines, and round-at-9 would only re-introduce a
-        # half-way tie-break (HALF_UP vs half-away) the engines can
-        # disagree on — quantized inputs make ties common, not rare
-        mean = F.col("s1").cast("double") / 1e9 / F.col("n")
-        return g.select(
-            "label",
-            "dim",
-            "n",
-            mean.alias("mean_x"),
-            (F.col("s2").cast("double") / 1e12 / F.col("n") - mean * mean).alias(
-                "var_x"
-            ),
-        )
-
-    q["label_centroids"] = q_label_centroids
-
-    def q_json_props(spark, sf_dir):
-        """Semi-structured extraction (engine-native): pull the integer
-        k out of the JSON props column with a codegen JSON path (no
-        UDF), aggregate per event_type — min/max/sum are integer-exact.
-        At scale the JSON parse is the scan-side projection; nothing
-        shuffles but the 5-row aggregate."""
-        e = _events(spark, sf_dir)
-        k = F.get_json_object("props", "$.k").cast("bigint")
-        return e.select("event_type", k.alias("_k")).groupBy("event_type").agg(
-            F.count("*").alias("n"),
-            F.min("_k").alias("min_k"),
-            F.max("_k").alias("max_k"),
-            F.sum("_k").cast("bigint").alias("sum_k"),
-        )
-
-    q["json_props"] = q_json_props
-
-    def q_rolling_median(spark, sf_dir):
-        """Exact rolling median (engine-native): interpolated percentile
-        over an ordered 5-row window frame per user — the robust-smoother
-        shape (approx sketches can't be oracled; the exact sort-based
-        frame percentile can).  Ordering key extended with event_id so
-        ties are deterministic."""
-        e = _events(spark, sf_dir)
-        return e.selectExpr(
-            "event_id",
-            "user_id",
-            "round(percentile(value, 0.5) OVER ("
-            "  PARTITION BY user_id ORDER BY ts, event_id"
-            "  ROWS BETWEEN 4 PRECEDING AND CURRENT ROW"
-            "), 9) AS med5",
-        )
-
-    q["rolling_median"] = q_rolling_median
-
-    def q_skew_distinct_users(spark, sf_dir):
-        """Skew-safe distinct count: event_type has only 5 values, so a
-        direct countDistinct funnels each hot key through one reducer at
-        scale.  The two-level form spreads stage 1 across the compound
-        (event_type, user_id) key — hot keys shatter over all partitions,
-        dedup happens there, and stage 2 counts the already-small
-        distinct pairs.  Same result, skew-proof shuffle profile; also
-        per-type value sums riding stage 1's partial aggregation.
-        NULL users are excluded up front on both sides — groupBy would
-        keep a NULL group that count(DISTINCT) excludes."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        pairs = e.groupBy("event_type", "user_id").agg(
-            F.count("*").alias("_n"), F.sum("value").alias("_sv")
-        )
-        return pairs.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("distinct_users"),
-            F.sum("_n").cast("bigint").alias("n_events"),
-            F.round(F.sum("_sv"), 6).alias("sum_value"),
-        )
-
-    q["skew_distinct_users"] = q_skew_distinct_users
-
-    def q_value_histogram(spark, sf_dir):
-        """Fixed-bin numeric histogram per event type — the standard
-        first look at a metric's distribution.  One pass, one short-key
-        shuffle on (event_type, bin); the bin id is floor(value/width),
-        a single IEEE double divide+floor that lands identically on any
-        engine, so no boundary value can change bins.  At 100 TB this is
-        a pure map-side-combine aggregation — the reduce side sees at
-        most n_types x n_bins rows."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        width = 25.0
-        bin_id = F.least(
-            F.floor(F.col("value") / width).cast("bigint"), F.lit(19)
-        )
-        return (
-            e.groupBy("event_type", bin_id.alias("bin"))
-            .agg(
-                F.count("*").cast("bigint").alias("n"),
-                F.round(F.sum("value"), 6).alias("sum_value"),
-            )
-            .withColumn("bin_lo", F.col("bin") * width)
-        )
-
-    q["value_histogram"] = q_value_histogram
-
-    def q_daily_gapfill(spark, sf_dir):
-        """Time-series densification: daily event counts per type with
-        zero rows for missing (type, day) combinations — the gap-fill
-        every dashboard and forecasting pipeline needs before windowed
-        models.  The date spine generates from a one-row min/max
-        aggregate (broadcast), crosses with the distinct type list
-        (broadcast — bounded by the type vocabulary), and left-joins the
-        pre-aggregated daily counts; raw events are touched exactly
-        once — the span and the type list both derive from the
-        CHECKPOINTED daily aggregate (they are its min/max and key
-        projection), not from separate raw scans.  Registered after the
-        round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir)
-        daily = e.groupBy(
-            F.col("event_type"), F.to_date("ts").alias("day")
-        ).agg(F.count("*").alias("_n")).localCheckpoint(eager=False)
-        span = daily.agg(
-            F.min("day").alias("_lo"),
-            F.max("day").alias("_hi"),
-        )
-        spine = span.select(
-            F.explode(F.sequence("_lo", "_hi")).alias("day")
-        )
-        types = daily.select("event_type").distinct()
-        grid = spine.crossJoin(F.broadcast(types))
-        return grid.join(daily, ["event_type", "day"], "left").select(
-            "event_type",
-            "day",
-            F.coalesce(F.col("_n"), F.lit(0)).cast("bigint").alias("n"),
-        )
-
-    q["daily_gapfill"] = q_daily_gapfill
-
-    def q_cumulative_users(spark, sf_dir):
-        """Cumulative distinct users by day (the growth curve): each
-        user counts once, on their first-seen day; the running total
-        accumulates over the tiny per-day aggregate.  The cumulative
-        sum is a broadcast inequality self-join over the bounded
-        day-count relation — NOT a SinglePartition window, so no global
-        funnel exists anywhere in the plan even though the semantics
-        are a running total.  Registered after the round-5 window;
-        round-6 window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        first = e.groupBy("user_id").agg(
-            F.min(F.to_date("ts")).alias("day")
-        )
-        # both self-join sides consume the tiny day relation; without the
-        # checkpoint each rebuilds the events scan + first-seen aggregate
-        per_day = (
-            first.groupBy("day")
-            .agg(F.count("*").alias("new_users"))
-            .localCheckpoint(eager=False)
-        )
-        rhs = per_day.select(
-            F.col("day").alias("_d2"), F.col("new_users").alias("_n2")
-        )
-        return (
-            per_day.join(F.broadcast(rhs), F.col("_d2") <= F.col("day"))
-            .groupBy("day", "new_users")
-            .agg(F.sum("_n2").cast("bigint").alias("total_users"))
-            .select(
-                "day",
-                F.col("new_users").cast("bigint").alias("new_users"),
-                "total_users",
-            )
-        )
-
-    q["cumulative_users"] = q_cumulative_users
-
-    def q_rolling_zscore(spark, sf_dir):
-        """Windowed anomaly detection: each event's z-score against its
-        user's trailing 10-event frame.  The moments come from integer
-        sums (value carries 2 decimals, so round(value*100) is an exact
-        int64 and sum/sum-of-squares are order-invariant); the float
-        z-score then derives through one fixed IEEE expression chain,
-        identical on any engine.  Frames shorter than 10 are skipped
-        (their variance is noise).  The window partitions on user_id —
-        millions of small partitions at scale, no global sort.
-        Registered after the round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        v100 = F.round(F.col("value") * 100).cast("bigint")
-        w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-            -9, 0
-        )
-        base = (
-            e.withColumn("_v", v100)
-            .withColumn("_n", F.count("*").over(w))
-            .withColumn("_s1", F.sum("_v").over(w))
-            .withColumn("_s2", F.sum(F.col("_v") * F.col("_v")).over(w))
-            .filter(F.col("_n") == 10)
-        )
-        mean = F.col("_s1").cast("double") / F.lit(10.0)
-        var = F.col("_s2").cast("double") / F.lit(10.0) - mean * mean
-        z = (F.col("_v").cast("double") - mean) / F.sqrt(var)
-        return base.filter(F.col("_s2") * 10 > F.col("_s1") * F.col("_s1")).select(
-            "event_id",
-            "user_id",
-            F.round(z, 9).alias("z"),
-            (F.round(z, 9) > 2.0).alias("is_spike"),
-        )
-
-    q["rolling_zscore"] = q_rolling_zscore
-
-    def q_cube_revenue(spark, sf_dir):
-        """CUBE aggregation with grouping ids: all four (returnflag,
-        linestatus) grouping combinations in one pass — Spark expands
-        the cube map-side and aggregates once, no four separate scans.
-        Revenue in exact integer 1e-4 units (cf. bucketed_revenue) so
-        every grouping level hashes identically.  Registered after the
-        round-5 window; round-6 window material."""
-        li = _t(spark, sf_dir, "lineitem")
-        units = F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("bigint")
-        return (
-            li.cube("l_returnflag", "l_linestatus")
-            .agg(
-                F.grouping_id().cast("bigint").alias("gid"),
-                F.count("*").cast("bigint").alias("n"),
-                (F.sum(units) / 10000.0).alias("revenue"),
-            )
-            .select(
-                F.coalesce("l_returnflag", F.lit("ALL")).alias("l_returnflag"),
-                F.coalesce("l_linestatus", F.lit("ALL")).alias("l_linestatus"),
-                "gid",
-                "n",
-                "revenue",
-            )
-        )
-
-    q["cube_revenue"] = q_cube_revenue
-
-    def q_locf_fill(spark, sf_dir):
-        """LOCF forward fill (last observation carried forward): each
-        event carries the user's most recent purchase value — the
-        classic sparse-to-dense time-series alignment (sensor readings,
-        price marks).  One window per user ordered by event time,
-        ``last(..., ignorenulls)`` over the unbounded-preceding frame;
-        pure value passthrough, no arithmetic to diverge.  Registered
-        after the round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        pv = F.when(F.col("event_type") == "purchase", F.col("value"))
-        w = (
-            W.partitionBy("user_id")
-            .orderBy("ts", "event_id")
-            .rowsBetween(W.unboundedPreceding, W.currentRow)
-        )
-        return e.select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.last(pv, ignorenulls=True).over(w).alias("last_purchase_value"),
-        )
-
-    q["locf_fill"] = q_locf_fill
-
-    def q_cdc_apply(spark, sf_dir):
-        """CDC apply / MERGE-shape upsert: a deterministic change set
-        (updates for doc_id%7==0, deletes for %13==0, inserts above the
-        id space) applied to the documents snapshot in ONE full-outer
-        join — the batch equivalent of MERGE INTO, and the complement
-        of snapshot_diff (which classifies; this materializes the next
-        snapshot).  At scale the join shuffles both sides once on the
-        key; no per-row driver logic.  Registered after the round-5
-        window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        upd = (
-            docs.filter(F.col("doc_id") % 7 == 0)
-            .select(
-                "doc_id",
-                F.concat(F.lit("updated "), F.col("text")).alias("text"),
-                "lang",
-                "source",
-                (F.col("n_chars") + 8).alias("n_chars"),
-                F.lit("U").alias("op"),
-            )
-        )
-        dele = docs.filter(
-            (F.col("doc_id") % 13 == 0) & (F.col("doc_id") % 7 != 0)
-        ).select(
-            "doc_id",
-            F.lit(None).cast("string").alias("text"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("string").alias("source"),
-            F.lit(None).cast("bigint").alias("n_chars"),
-            F.lit("D").alias("op"),
-        )
-        ins = docs.filter(F.col("doc_id") % 11 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.concat(F.lit("new "), F.col("text")).alias("text"),
-            "lang",
-            "source",
-            (F.col("n_chars") + 4).alias("n_chars"),
-            F.lit("I").alias("op"),
-        )
-        changes = (
-            upd.unionByName(dele)
-            .unionByName(ins)
-            .select(
-                F.col("doc_id").alias("c_id"),
-                F.col("text").alias("c_text"),
-                F.col("lang").alias("c_lang"),
-                F.col("source").alias("c_source"),
-                F.col("n_chars").alias("c_nchars"),
-                "op",
-            )
-        )
-        base = docs.select(
-            F.col("doc_id").alias("b_id"), "text", "lang", "source", "n_chars"
-        )
-        j = base.join(changes, base.b_id == changes.c_id, "full_outer")
-        return (
-            j.filter(F.coalesce(F.col("op") != "D", F.lit(True)))
-            .select(
-                F.coalesce("c_id", "b_id").alias("doc_id"),
-                F.coalesce("c_text", "text").alias("text"),
-                F.coalesce("c_lang", "lang").alias("lang"),
-                F.coalesce("c_source", "source").alias("source"),
-                F.coalesce("c_nchars", "n_chars").alias("n_chars"),
-            )
-        )
-
-    q["cdc_apply"] = q_cdc_apply
-
-    def q_scd2_ranges(spark, sf_dir):
-        """SCD Type-2 validity ranges: each user's purchase events become
-        dimension versions valid [ts, next purchase ts) — the slowly-
-        changing-dimension build every warehouse runs, as one lead()
-        window per user.  Exact integer microsecond bounds; the open
-        current version carries NULL valid_to.  Registered after the
-        round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir).filter(
-            (F.col("event_type") == "purchase") & F.col("user_id").isNotNull()
-        )
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        return e.select(
-            "user_id",
-            "event_id",
-            F.col("value").alias("version_value"),
-            F.unix_micros("ts").alias("valid_from_us"),
-            F.unix_micros(F.lead("ts").over(w)).alias("valid_to_us"),
-        )
-
-    q["scd2_ranges"] = q_scd2_ranges
-
-    def q_winsorized_stats(spark, sf_dir):
-        """Winsorized per-group statistics: document lengths clipped at
-        the per-language [P10, P90] before averaging — the outlier-
-        robust aggregate quality dashboards use.  The percentile pass
-        aggregates per language (bounded rows, broadcast back); the
-        clip is a pure codegen least/greatest; interpolated percentile
-        parity with DuckDB's quantile_cont is already pinned by
-        length_quantiles.  Registered after the round-5 window; round-6
-        window material."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("n_chars").isNotNull()
-        )
-        cuts = docs.groupBy("lang").agg(
-            F.percentile(F.col("n_chars"), F.lit(0.1)).alias("p10"),
-            F.percentile(F.col("n_chars"), F.lit(0.9)).alias("p90"),
-        )
-        j = docs.join(F.broadcast(cuts), on="lang")
-        clipped = F.least(
-            F.greatest(F.col("n_chars").cast("double"), F.col("p10")),
-            F.col("p90"),
-        )
-        return j.groupBy("lang").agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.round(F.avg(clipped), 9).alias("winsorized_mean"),
-            F.round(F.first("p10"), 9).alias("p10"),
-            F.round(F.first("p90"), 9).alias("p90"),
-        )
-
-    q["winsorized_stats"] = q_winsorized_stats
-
-    def q_sentence_stats(spark, sf_dir):
-        """Sentence-level text statistics: sentences split on
-        terminal-punctuation boundaries (an RE2-safe pattern shared
-        verbatim with the oracle — no lookbehind, which DuckDB's RE2
-        lacks), per-doc sentence count and mean words per sentence.
-        Pure codegen array ops, no shuffle beyond the scan.  Registered
-        after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        sents = F.filter(
-            F.split(F.col("text"), "[.!?]+\\s*"),
-            lambda s: F.length(F.trim(s)) > 0,
-        )
-        words_per = F.transform(
-            sents,
-            lambda s: F.size(
-                F.filter(F.split(F.trim(s), "\\s+"), lambda w: F.length(w) > 0)
-            ),
-        )
-        return docs.select(
-            "doc_id",
-            F.size(sents).cast("bigint").alias("n_sentences"),
-            F.aggregate(
-                words_per, F.lit(0).cast("bigint"), lambda a, x: a + x
-            ).alias("n_words"),
-        ).withColumn(
-            "words_per_sentence",
-            F.round(
-                F.col("n_words").cast("double")
-                / F.greatest(F.col("n_sentences"), F.lit(1)).cast("double"),
-                9,
-            ),
-        )
-
-    q["sentence_stats"] = q_sentence_stats
-
-    def q_c4_clean(spark, sf_dir):
-        """C4-style cleaning at sentence grain (llm/text.py c4_clean):
-        doc-level drops for brace/lorem-ipsum/javascript content,
-        sentence-level keeps for terminally-punctuated sentences of
-        >= 3 words.  A deterministic subset (doc_id % 13 == 0) is
-        augmented with offending content so the doc rules actually
-        fire under the gate; both engines replay the identical
-        augmentation.  One codegen scan, no shuffle.  Round-10
-        registration (staged on the r10-batch branch)."""
-        docs = _t(spark, sf_dir, "documents")
-        aug = docs.withColumn(
-            "text",
-            F.when(
-                F.col("doc_id") % 13 == 0,
-                F.concat(F.col("text"), F.lit(" Lorem ipsum {dolor}.")),
-            ).otherwise(F.col("text")),
-        )
-        return llm_text.c4_clean(aug, min_words=3)
-
-    q["c4_clean"] = q_c4_clean
-
-    def q_minhash_estimate(spark, sf_dir):
-        """Estimator-quality audit: for every LSH candidate pair, the
-        MinHash Jaccard ESTIMATE (matching signature slots / 64) next
-        to the EXACT shingle Jaccard — the calibration table that
-        justifies the banding thresholds the dedup pipeline runs with.
-        Signature compare is a zip_with/aggregate over the two 64-slot
-        arrays (codegen); exact Jaccard reuses the verify path with the
-        threshold disabled.  Registered after the round-5 window;
-        round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        # three consumers (LSH candidate build + both signature-join
-        # sides) — checkpoint or the dominant shingle-explode + 64-min
-        # signature pass re-runs per consumer (cf. jaccard_verify)
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        ).localCheckpoint(eager=False)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        exact = dedup.jaccard_verify(docs, cand, k=5, threshold=0.0)
-        sa = sigs.select(F.col("doc_id").alias("a"), F.col("sig").alias("_sa"))
-        sb = sigs.select(F.col("doc_id").alias("b"), F.col("sig").alias("_sb"))
-        est = (
-            cand.join(sa, on="a")
-            .join(sb, on="b")
-            .select(
-                "a",
-                "b",
-                F.aggregate(
-                    F.zip_with(
-                        "_sa",
-                        "_sb",
-                        lambda x, y: F.when(x == y, 1).otherwise(0),
-                    ),
-                    F.lit(0),
-                    lambda acc, v: acc + v,
-                )
-                .cast("bigint")
-                .alias("est_matches"),
-            )
-        )
-        return est.join(exact, on=["a", "b"]).select(
-            "a",
-            "b",
-            "est_matches",
-            F.round(F.col("est_matches") / 64.0, 9).alias("jaccard_est"),
-            F.round("jaccard", 9).alias("jaccard_exact"),
-        )
-
-    q["minhash_estimate"] = q_minhash_estimate
-
-    def q_dedup_rate_by_source(spark, sf_dir):
-        """Per-source duplication dashboard: how many documents each
-        source contributes vs how many distinct normalized texts —
-        the rate that decides which feeds need aggressive dedup.  One
-        scan, two-level aggregation on the (source, fingerprint) key
-        (hot sources shatter in stage 1, cf. skew_distinct_users).
-        Registered after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        from openseize_spark.llm.dedup import normalize_text
-
-        fp = F.md5(normalize_text(F.col("text")))
-        pairs = docs.groupBy("source", fp.alias("_fp")).agg(
-            F.count("*").alias("_n")
-        )
-        return pairs.groupBy("source").agg(
-            F.sum("_n").cast("bigint").alias("n_docs"),
-            F.count("*").cast("bigint").alias("n_distinct"),
-            F.round(
-                F.lit(1.0)
-                - F.count("*").cast("double") / F.sum("_n").cast("double"),
-                9,
-            ).alias("dup_rate"),
-        )
-
-    q["dedup_rate_by_source"] = q_dedup_rate_by_source
-
-    def q_null_profile(spark, sf_dir):
-        """Column null-profile of the events stream: per-column null
-        counts and fractions from ONE conditional-aggregation scan,
-        unpivoted to a row per column — the profiling complement to
-        dq_audit's pass/fail constraints.  Registered after the
-        round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir)
-        cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-        agg = e.agg(
-            F.count("*").alias("_total"),
-            *[
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(
-                    f"_n_{c}"
-                )
-                for c in cols
-            ],
-        )
-        stack = ", ".join(f"'{c}', _n_{c}" for c in cols)
-        return agg.selectExpr(
-            "_total", f"stack({len(cols)}, {stack}) AS (column_name, n_null)"
-        ).select(
-            "column_name",
-            F.col("n_null").cast("bigint").alias("n_null"),
-            F.col("_total").cast("bigint").alias("n_total"),
-            F.round(
-                F.col("n_null").cast("double") / F.col("_total").cast("double"),
-                9,
-            ).alias("null_frac"),
-        )
-
-    q["null_profile"] = q_null_profile
-
-    def q_event_debounce(spark, sf_dir):
-        """Debounce repeated events: drop any event within 60 s of the
-        user's previous SAME-TYPE event — the sensor/click-stream
-        cleaning step before counting anything.  One lag() window per
-        (user, type); the kept-row predicate compares exact integer
-        microseconds.  Registered after the round-5 window; round-6
-        window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-        gap = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
-        return (
-            e.withColumn("_gap", gap)
-            .filter(F.col("_gap").isNull() | (F.col("_gap") >= 60_000_000))
-            .groupBy("user_id", "event_type")
-            .agg(F.count("*").cast("bigint").alias("n_kept"))
-        )
-
-    q["event_debounce"] = q_event_debounce
-
-    def q_event_transitions(spark, sf_dir):
-        """First-order Markov transition counts: per user, consecutive
-        event-type pairs (prev -> next) aggregated corpus-wide, with the
-        row-normalized transition probability — the product-analytics
-        "what do users do next" matrix.  lag() per user plus one
-        short-key aggregation; probabilities divide exact integer
-        counts.  The |types|^2 counts table checkpoints once — the
-        row-total branch would otherwise rebuild the whole
-        scan -> user-shuffle -> window-sort subtree.  Registered after
-        the round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        pairs = (
-            e.withColumn("_prev", F.lag("event_type").over(w))
-            .filter(F.col("_prev").isNotNull())
-            .groupBy(
-                F.col("_prev").alias("from_type"),
-                F.col("event_type").alias("to_type"),
-            )
-            .agg(F.count("*").alias("_n"))
-            .localCheckpoint(eager=False)
-        )
-        tot = pairs.groupBy("from_type").agg(F.sum("_n").alias("_row_n"))
-        return pairs.join(F.broadcast(tot), on="from_type").select(
-            "from_type",
-            "to_type",
-            F.col("_n").cast("bigint").alias("n"),
-            F.round(
-                F.col("_n").cast("double") / F.col("_row_n").cast("double"), 9
-            ).alias("p"),
-        )
-
-    q["event_transitions"] = q_event_transitions
-
-    def q_churned_users(spark, sf_dir):
-        """Churn snapshot: users whose LAST event predates the corpus
-        horizon by more than 12 hours — one per-user max aggregation
-        against a broadcast one-row corpus max, all comparisons in
-        exact integer microseconds.  The horizon is the max of the
-        per-user maxima, so it derives from the checkpointed per-user
-        table instead of a second full events scan.  Registered after
-        the round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        last = e.groupBy("user_id").agg(
-            F.max(F.unix_micros("ts")).alias("last_us"),
-            F.count("*").alias("n_events"),
-        ).localCheckpoint(eager=False)
-        horizon = last.agg(F.max("last_us").alias("max_us"))
-        week_us = 12 * 3600 * 1_000_000
-        return (
-            last.join(F.broadcast(horizon))
-            .filter(F.col("last_us") < F.col("max_us") - F.lit(week_us))
-            .select(
-                "user_id",
-                F.col("n_events").cast("bigint").alias("n_events"),
-                "last_us",
-            )
-        )
-
-    q["churned_users"] = q_churned_users
-
-    def q_engaged_users(spark, sf_dir):
-        """Engagement cohorts: users bucketed by how many distinct days
-        they were active — distinct (user, day) pairs collapse first
-        (map-side on the compound key), then one tiny per-user count
-        and a bucketed rollup.  All-integer.  Registered after the
-        round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        days = e.select(
-            "user_id", F.to_date("ts").alias("day")
-        ).distinct()
-        per_user = days.groupBy("user_id").agg(
-            F.count("*").alias("active_days")
-        )
-        bucket = (
-            F.when(F.col("active_days") >= 25, "daily")
-            .when(F.col("active_days") >= 10, "regular")
-            .when(F.col("active_days") >= 3, "occasional")
-            .otherwise("rare")
-        )
-        return per_user.groupBy(bucket.alias("engagement")).agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum("active_days").cast("bigint").alias("total_active_days"),
-        )
-
-    q["engaged_users"] = q_engaged_users
-
-    def q_wow_retention(spark, sf_dir):
-        """Week-over-week retention: of the users active in week w, how
-        many returned in week w+1 — distinct (user, week) pairs
-        self-joined on the adjacent week.  The distinct collapse
-        happens before the join, so the join touches user-week rows,
-        not events — and it checkpoints once, since three branches
-        (weekly actives, the shifted week, the semi-join probe) consume
-        it and would each re-run the events scan + distinct otherwise.
-        All-integer counts, one final ratio.  Registered after the
-        round-5 window; round-6 window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        uw = (
-            e.select("user_id", F.weekofyear("ts").alias("week"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        cur = uw.groupBy("week").agg(F.count("*").alias("n_active"))
-        nxt = uw.select("user_id", (F.col("week") - 1).alias("week"))
-        ret = (
-            uw.join(nxt, on=["user_id", "week"], how="left_semi")
-            .groupBy("week")
-            .agg(F.count("*").alias("n_retained"))
-        )
-        return (
-            cur.join(ret, on="week", how="left")
-            .select(
-                F.col("week").cast("bigint").alias("week"),
-                F.col("n_active").cast("bigint").alias("n_active"),
-                F.coalesce("n_retained", F.lit(0))
-                .cast("bigint")
-                .alias("n_retained"),
-                F.round(
-                    F.coalesce("n_retained", F.lit(0)).cast("double")
-                    / F.col("n_active").cast("double"),
-                    9,
-                ).alias("retention"),
-            )
-        )
-
-    q["wow_retention"] = q_wow_retention
-
-    def q_perplexity_tiers(spark, sf_dir):
-        """CCNet's head/middle/tail split realized: documents bucketed
-        by corpus-wide terciles of the unigram-LM score (lower = more
-        fluent), reported per (tier, lang).  The tercile cuts are two
-        scalar percentiles over already-exact scores, broadcast back;
-        the bucketing is pure codegen.  This is the query that turns
-        the LM quality score into a mixture decision.  Registered after
-        the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        # the tercile cuts and the bucketing both consume the scored
-        # table; checkpoint so the LM train + score pass runs once
-        scored = llm_text.unigram_logprob(docs).join(
-            docs.select("doc_id", "lang"), on="doc_id"
-        ).localCheckpoint(eager=False)
-        cuts = scored.agg(
-            F.percentile(F.col("score"), F.lit(1.0 / 3.0)).alias("c1"),
-            F.percentile(F.col("score"), F.lit(2.0 / 3.0)).alias("c2"),
-        )
-        tier = (
-            F.when(F.col("score") <= F.col("c1"), "head")
-            .when(F.col("score") <= F.col("c2"), "middle")
-            .otherwise("tail")
-        )
-        return (
-            scored.join(F.broadcast(cuts))
-            .groupBy(tier.alias("tier"), "lang")
-            .agg(
-                F.count("*").cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-            )
-        )
-
-    q["perplexity_tiers"] = q_perplexity_tiers
-
-    def q_dataset_card(spark, sf_dir):
-        """One-row dataset card: the corpus summary a dataset release
-        ships with — document/byte/token totals, language and source
-        breadth, exact duplicate rate — from one documents scan plus
-        the fingerprint distinct (two-level, skew-safe).  All-integer
-        until the final rate."""
-        docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        words = dedup.tokenize(F.col("text"))
-        fp = F.md5(dedup.normalize_text(F.col("text")))
-        per_fp = docs.groupBy(fp.alias("_fp")).agg(F.count("*").alias("_n"))
-        dups = per_fp.agg(
-            F.sum("_n").alias("_docs"), F.count("*").alias("_distinct")
-        )
-        base = docs.agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum(F.octet_length("text")).cast("bigint").alias("n_bytes"),
-            F.sum(F.size(words)).cast("bigint").alias("n_tokens"),
-            F.countDistinct("lang").cast("bigint").alias("n_langs"),
-            F.countDistinct("source").cast("bigint").alias("n_sources"),
-        )
-        return base.join(F.broadcast(dups)).select(
-            "n_docs",
-            "n_bytes",
-            "n_tokens",
-            "n_langs",
-            "n_sources",
-            F.col("_distinct").cast("bigint").alias("n_distinct_texts"),
-            F.round(
-                F.lit(1.0)
-                - F.col("_distinct").cast("double") / F.col("_docs").cast("double"),
-                9,
-            ).alias("dup_rate"),
-        )
-
-    q["dataset_card"] = q_dataset_card
-
-    def q_embedding_quality(spark, sf_dir):
-        """Embeddings-table quality: per-label vector counts, dimension
-        consistency, zero-vector count, and norm extrema — the sanity
-        pass before any ANN index build.  Per-row norms are sequential
-        array folds (deterministic, same order as the knn oracles);
-        min/max of identical doubles are engine-invariant.  Registered
-        after the round-5 window; round-6 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        v = F.col("embedding").cast("array<double>")
-        norm2 = F.aggregate(
-            F.transform(v, lambda x: x * x),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return (
-            emb.withColumn("_n2", norm2)
-            .groupBy("label")
-            .agg(
-                F.count("*").cast("bigint").alias("n_vectors"),
-                F.countDistinct(F.size("embedding"))
-                .cast("bigint")
-                .alias("n_dims_seen"),
-                F.sum(F.when(F.col("_n2") == 0.0, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_zero_vectors"),
-                F.round(F.sqrt(F.min("_n2")), 9).alias("min_norm"),
-                F.round(F.sqrt(F.max("_n2")), 9).alias("max_norm"),
-            )
-        )
-
-    q["embedding_quality"] = q_embedding_quality
-
-    def q_sql_entry(spark, sf_dir):
-        """Pure SQL API entry: the same engine through ``spark.sql`` over
-        temp views — users who live in SQL get the identical Catalyst
-        plans the DataFrame API produces (this query's shape matches
-        revenue_by_nation's join tree).  Session-scoped view names keyed
-        by sf_dir so concurrent gates don't collide.  Registered after
-        the round-5 window; round-6 window material."""
-        import re
-
-        tag = re.sub(r"\W", "_", sf_dir.rstrip("/").split("/")[-1])
-        for t in ("lineitem", "orders", "customer", "nation"):
-            _t(spark, sf_dir, t).createOrReplaceTempView(f"v_{t}_{tag}")
-        return spark.sql(
-            f"""
-            SELECT n.n_name,
-                   CAST(sum(CAST(round(
-                     l.l_extendedprice * (1 - l.l_discount) * 10000
-                   ) AS BIGINT)) AS BIGINT)
-                     / CAST(10000.0 AS DOUBLE) AS revenue,
-                   count(*) AS n_items
-            FROM v_lineitem_{tag} l
-            JOIN v_orders_{tag} o ON l.l_orderkey = o.o_orderkey
-            JOIN v_customer_{tag} c ON o.o_custkey = c.c_custkey
-            JOIN v_nation_{tag} n ON c.c_nationkey = n.n_nationkey
-            GROUP BY n.n_name
-            """
-        )
-
-    q["sql_entry"] = q_sql_entry
-
-    def q_top_values_csv(spark, sf_dir):
-        """Deterministic nested aggregation: each user's top-3 event
-        values collected, sorted, and serialized to a CSV string —
-        collect_list alone is partition-order dependent, so the
-        array_sort makes the nested result layout-invariant (the same
-        discipline nested_roundtrip uses).  Values in integer cents so
-        the sort key is exact.  Registered after the round-5 window;
-        round-6 window material."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        return e.groupBy("user_id").agg(
-            F.concat_ws(
-                ",",
-                F.slice(
-                    F.reverse(F.array_sort(F.collect_list(cents))), 1, 3
-                ),
-            ).alias("top3_cents"),
-            F.count("*").cast("bigint").alias("n_events"),
-        )
-
-    q["top_values_csv"] = q_top_values_csv
-
-    def q_zorder_layout(spark, sf_dir):
-        """Z-order layout keys (functions/scalar.py zorder_key): Morton-
-        interleave (user_id, day-of-month) into one clustering key and
-        report per-z-bucket extents — the multi-dimensional data-skipping
-        layout (sorting by this key lets per-file min/max stats prune on
-        EITHER predicate; the bucket extents below are exactly those
-        stats).  Pure integer shift/mask codegen, one short-key shuffle.
-        Registered after the round-5 window; round-6 window material."""
-        from openseize_spark.functions.scalar import zorder_key
-
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        day = F.dayofmonth("ts").cast("long")
-        z = zorder_key(F.col("user_id"), day, bits=10)
-        return (
-            e.withColumn("_z", z)
-            .groupBy(F.shiftright("_z", 8).alias("z_bucket"))
-            .agg(
-                F.count("*").cast("bigint").alias("n"),
-                F.min("user_id").cast("bigint").alias("min_user"),
-                F.max("user_id").cast("bigint").alias("max_user"),
-                F.min(day).cast("bigint").alias("min_day"),
-                F.max(day).cast("bigint").alias("max_day"),
-            )
-        )
-
-    q["zorder_layout"] = q_zorder_layout
-
-    def q_dq_audit(spark, sf_dir):
-        """Data-quality audit (the Deequ/dbt-tests stage every ingest
-        pipeline runs before publishing): per-constraint violation
-        counts over orders/lineitem/customer/events — null checks,
-        key uniqueness, referential integrity, value ranges, and an
-        accepted-values set.  Each table is scanned once (conditional
-        aggregation); the FK check is a broadcast-able anti join
-        projected to the key column.  One tiny row per check.
-        Registered after the round-5 window; round-6 window material."""
-        o_t = _t(spark, sf_dir, "orders")
-        li = _t(spark, sf_dir, "lineitem")
-        c = _t(spark, sf_dir, "customer")
-        e = _events(spark, sf_dir)
-
-        def one(name, df):
-            return df.select(
-                F.lit(name).alias("check"),
-                F.col("v").cast("bigint").alias("violations"),
-            )
-
-        checks = [
-            one(
-                "orders.custkey_not_null",
-                o_t.agg(
-                    F.sum(
-                        F.when(F.col("o_custkey").isNull(), 1).otherwise(0)
-                    ).alias("v")
-                ),
-            ),
-            one(
-                "orders.orderkey_unique",
-                o_t.groupBy("o_orderkey")
-                .agg(F.count("*").alias("_n"))
-                .agg(
-                    F.sum(F.when(F.col("_n") > 1, F.col("_n") - 1).otherwise(0)).alias(
-                        "v"
-                    )
-                ),
-            ),
-            one(
-                "orders.custkey_fk_customer",
-                # null custkeys are the not_null check's finding, not a
-                # broken reference — and NOT IN's 3-valued logic would
-                # drop them on the SQL side, so exclude them here too
-                o_t.select("o_custkey")
-                .filter(F.col("o_custkey").isNotNull())
-                .join(
-                    c.select(F.col("c_custkey").alias("o_custkey")),
-                    on="o_custkey",
-                    how="left_anti",
-                )
-                .agg(F.count("*").alias("v")),
-            ),
-            one(
-                "lineitem.discount_in_range",
-                li.agg(
-                    F.sum(
-                        F.when(
-                            (F.col("l_discount") < 0.0)
-                            | (F.col("l_discount") > 0.1),
-                            1,
-                        ).otherwise(0)
-                    ).alias("v")
-                ),
-            ),
-            one(
-                "lineitem.quantity_positive",
-                li.agg(
-                    F.sum(
-                        F.when(F.col("l_quantity") <= 0, 1).otherwise(0)
-                    ).alias("v")
-                ),
-            ),
-            one(
-                "events.type_accepted_values",
-                e.agg(
-                    F.sum(
-                        F.when(
-                            ~F.col("event_type").isin(
-                                "view", "click", "purchase", "signup", "error"
-                            ),
-                            1,
-                        ).otherwise(0)
-                    ).alias("v")
-                ),
-            ),
-        ]
-        out = checks[0]
-        for ch in checks[1:]:
-            out = out.unionByName(ch)
-        return out
-
-    q["dq_audit"] = q_dq_audit
-
-    def q_schema_evolution(spark, sf_dir):
-        """Schema-evolution read: two parquet generations of the
-        documents table — the second adds a column — unified by
-        ``mergeSchema`` so the missing column back-fills NULL for old
-        files.  This is the append-only table lifecycle every long-
-        lived 100 TB dataset goes through; reading with an explicit
-        merged schema costs one footer pass, no data rewrite.
-        Registered after the round-5 window; round-6 window material."""
-        import os
-
-        import re
-
-        docs = _t(spark, sf_dir, "documents")
-        tag = re.sub(r"\W", "_", sf_dir.rstrip("/").split("/")[-1])
-        d = _gate_tmp(spark, f"schema_ev_{tag}")
-        p1, p2 = os.path.join(d, "gen1"), os.path.join(d, "gen2")
-        if not (
-            os.path.exists(os.path.join(p1, "_SUCCESS"))
-            and os.path.exists(os.path.join(p2, "_SUCCESS"))
-        ):
-            docs.filter(F.col("doc_id") % 2 == 0).select(
-                "doc_id", "lang", "source"
-            ).write.mode("overwrite").parquet(p1)
-            docs.filter(F.col("doc_id") % 2 == 1).select(
-                "doc_id", "lang", "source", "n_chars"
-            ).write.mode("overwrite").parquet(p2)
-        return spark.read.option("mergeSchema", "true").parquet(p1, p2).select(
-            "doc_id", "lang", "source", "n_chars"
-        )
-
-    q["schema_evolution"] = q_schema_evolution
-
-    def q_partition_pruning(spark, sf_dir):
-        """Hive-partitioned write + partition-pruned read: events land
-        partitioned by day (the universal time-partitioned fact
-        layout); a one-week filter then touches only those directories
-        — at 100 TB the scan reads 7/30ths of the files before a
-        single row is decoded (the pytest asserts PartitionFilters in
-        the scan; this gate asserts the result).  The partition column
-        round-trips as a string directory key and is cast back for the
-        rollup.  Registered after the round-5 window; round-6 window
-        material."""
-        import os
-
-        import re
-
-        e = _events(spark, sf_dir)
-        tag = re.sub(r"\W", "_", sf_dir.rstrip("/").split("/")[-1])
-        d = _gate_tmp(spark, f"part_events_{tag}")
-        if not os.path.exists(os.path.join(d, "_SUCCESS")):
-            e.withColumn("day", F.to_date("ts")).write.mode(
-                "overwrite"
-            ).partitionBy("day").parquet(d)
-        part = spark.read.parquet(d)
-        return (
-            part.filter(
-                (F.col("day") >= F.lit("2024-01-08"))
-                & (F.col("day") <= F.lit("2024-01-14"))
-            )
-            .groupBy(F.col("day").cast("date").alias("day"), "event_type")
-            .agg(
-                F.count("*").cast("bigint").alias("n"),
-                F.round(F.sum("value"), 6).alias("sum_value"),
-            )
-        )
-
-    q["partition_pruning"] = q_partition_pruning
-
-    def q_nested_roundtrip(spark, sf_dir):
-        """Nested-type round-trip: lineitems nest into a sorted
-        array<struct> per order (the document-style layout written to
-        serving stores), then explode back and aggregate — proving the
-        nest/unnest path is lossless.  The nested build is one shuffle
-        on the order key; sort_array makes the collected order
-        deterministic (collect_list alone is partition-order
-        dependent).  Registered after the round-5 window; round-6
-        window material."""
-        li = _t(spark, sf_dir, "lineitem")
-        nested = li.groupBy("l_orderkey").agg(
-            F.sort_array(
-                F.collect_list(
-                    F.struct(
-                        "l_linenumber",
-                        "l_quantity",
-                        "l_extendedprice",
-                        "l_returnflag",
-                    )
-                )
-            ).alias("items")
-        )
-        ex = nested.select(
-            "l_orderkey", F.explode("items").alias("it")
-        )
-        return ex.groupBy("l_orderkey").agg(
-            F.count("*").cast("bigint").alias("n_items"),
-            F.sum("it.l_quantity").alias("sum_qty"),
-            F.min("it.l_returnflag").alias("min_flag"),
-            F.max("it.l_linenumber").cast("bigint").alias("max_line"),
-        )
-
-    q["nested_roundtrip"] = q_nested_roundtrip
-
-    def q_salted_enrich(spark, sf_dir):
-        """Skew-resistant dimension join (operators/relational.py
-        salted_join): events carry only 5 event_type values — the
-        textbook hot-key regime where a plain shuffle join funnels each
-        type through one reducer.  The salted join spreads every hot
-        key over 16 sub-keys and replicates the 5-row dim once per
-        salt; the daily weighted rollup then aggregates normally.
-        Registered after the round-5 window; round-6 window material."""
-        from openseize_spark.operators.relational import salted_join
-
-        e = _events(spark, sf_dir).select("event_type", "ts", "value")
-        dim = spark.createDataFrame(
-            [
-                ("view", 1), ("click", 3), ("purchase", 10),
-                ("signup", 5), ("error", 0),
-            ],
-            "event_type string, weight int",
-        )
-        j = salted_join(e, dim, key="event_type", salt=16)
-        return j.groupBy(
-            "event_type", F.to_date("ts").alias("day")
-        ).agg(
-            F.count("*").cast("bigint").alias("n"),
-            (F.count("*") * F.first("weight")).cast("bigint").alias("weighted"),
-        )
-
-    q["salted_enrich"] = q_salted_enrich
-
-    def q_bucketed_revenue(spark, sf_dir):
-        """Bucketed co-located join: lineitem and orders written once as
-        bucketed tables (8 buckets on the join key, sorted within
-        buckets) and then joined WITHOUT a shuffle — Spark's sort-merge
-        join consumes the bucket layout directly.  This is the
-        pre-shuffle-amortization strategy for the 100 TB fact-fact join
-        a pipeline runs every day: pay the partitioning once at write
-        time, never again at read time (tests assert the exchange-free
-        plan; this gate asserts the result).  Registered after the
-        round-5 window; round-6 window material."""
-        import os
-        import re
-
-        d = _gate_tmp(spark, "buckets")
-        # key the catalog names by sf_dir: one session may gate several
-        # scale factors, and a session-global name would silently serve
-        # the first sf's buckets to the second
-        tag = re.sub(r"\W", "_", sf_dir.rstrip("/").split("/")[-1])
-        li_t, ord_t = f"gate_li_bucketed_{tag}", f"gate_ord_bucketed_{tag}"
-        if not spark.catalog.tableExists(li_t):
-            li = _t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            )
-            li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").option(
-                "path", os.path.join(d, li_t)
-            ).mode("overwrite").saveAsTable(li_t)
-        if not spark.catalog.tableExists(ord_t):
-            o = _t(spark, sf_dir, "orders").select(
-                "o_orderkey", "o_orderdate", "o_orderpriority"
-            )
-            o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").option(
-                "path", os.path.join(d, ord_t)
-            ).mode("overwrite").saveAsTable(ord_t)
-        li_b = spark.table(li_t)
-        o_b = spark.table(ord_t)
-        # exact integer 1e-4 revenue units (cf. top_revenue_supplier) so
-        # the sum is order-invariant across bucket layouts and engines
-        units = F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("bigint")
-        return (
-            li_b.join(o_b, li_b.l_orderkey == o_b.o_orderkey)
-            .groupBy(
-                F.date_trunc("month", "o_orderdate").alias("month"),
-                "o_orderpriority",
-            )
-            .agg(
-                (F.sum(units) / 10000.0).alias("revenue"),
-                F.count("*").cast("bigint").alias("n_items"),
-            )
-        )
-
-    q["bucketed_revenue"] = q_bucketed_revenue
-
-    def q_rollup_revenue(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        return (
-            li.rollup("l_returnflag", "l_linestatus")
-            .agg(F.sum("l_quantity").alias("sum_qty"), F.count("*").alias("n"))
-            .select(
-                F.coalesce("l_returnflag", F.lit("ALL")).alias("l_returnflag"),
-                F.coalesce("l_linestatus", F.lit("ALL")).alias("l_linestatus"),
-                "sum_qty",
-                "n",
-            )
-        )
-
-    q["rollup_revenue"] = q_rollup_revenue
-
-    def q_pivot_status(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        return (
-            li.groupBy("l_returnflag")
-            .pivot("l_linestatus", ["O", "F"])
-            .agg(F.sum("l_quantity"))
-            .select(
-                "l_returnflag",
-                F.col("O").alias("qty_o"),
-                F.col("F").alias("qty_f"),
-            )
-        )
-
-    q["pivot_status"] = q_pivot_status
-
-    def q_set_ops(spark, sf_dir):
-        o = _t(spark, sf_dir, "orders")
-        hi = o.filter(F.col("o_totalprice") > 200000).select("o_custkey")
-        urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
-        # `both` (a shuffle-produced intersect) feeds the exceptAll AND
-        # the output union — checkpoint or the whole intersect re-runs
-        # per consumer (round 15; lazy, GC-released, tiny)
-        both = hi.intersect(urgent).localCheckpoint(eager=False)
-        only_hi = hi.distinct().exceptAll(both)
-        return both.withColumn("kind", F.lit("both")).unionByName(
-            only_hi.withColumn("kind", F.lit("only_hi"))
-        )
-
-    q["set_ops"] = q_set_ops
-
-    def q_distinct_pairs(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        return li.select("l_returnflag", "l_linestatus").distinct()
-
-    q["distinct_pairs"] = q_distinct_pairs
-
-    def q_detrend_linear(spark, sf_dir):
-        """Per-channel linear detrend via explicit moment formulas —
-        identical expression trees in both engines (stats builtins use
-        different streaming algorithms and drift in the last ulp)."""
-        sf = _signal(spark, sf_dir)
-        w = W.partitionBy("recording_id", "channel")
-        td = F.col("t").cast("double")
-        mt = F.avg(td).over(w)
-        mv = F.avg("v").over(w)
-        mtv = F.avg(td * F.col("v")).over(w)
-        mtt = F.avg(td * td).over(w)
-        slope = (mtv - mt * mv) / (mtt - mt * mt)
-        resid = F.col("v") - (mv + slope * (td - mt))
-        return sf.df.select("channel", "t", resid.alias("resid"))
-
-    q["detrend_linear"] = q_detrend_linear
-
-    # --------------------- signal operators (SURVEY §2.2-2.8) ----------
-    def q_channel_select(spark, sf_dir):
-        sf = rel.select_channels(_signal(spark, sf_dir), [1, 3])
-        return sf.df.select("channel", "t", "v")
-
-    q["channel_select"] = q_channel_select
-
-    def q_time_slice(spark, sf_dir):
-        sf = rel.slice_time(_signal(spark, sf_dir), start=100, stop=5000, step=7)
-        return sf.df.select("channel", "t", "v")
-
-    q["time_slice"] = q_time_slice
-
-    def q_mask_compact(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        mask = sf.df.select(
-            "recording_id", "t", "channel", (F.col("v") >= 0.25).alias("keep")
-        )
-        # per-channel masks differ; apply per (recording, channel, t) directly
-        kept = sf.df.filter(F.col("v") >= 0.25)
-        w = W.partitionBy("recording_id", "channel").orderBy("t")
-        return kept.withColumn(
-            "t", (F.row_number().over(w) - 1).cast("bigint")
-        ).select("channel", "t", "v")
-
-    q["mask_compact"] = q_mask_compact
-
-    def q_interval_mask(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        orders = _t(spark, sf_dir, "orders")
-        ival = (
-            orders.filter(F.col("o_orderkey") % 101 == 0)
-            .select(
-                ((F.col("o_orderkey") % 512) * 16).cast("bigint").alias("lo"),
-                (((F.col("o_orderkey") % 512) * 16) + 64).cast("bigint").alias("hi"),
-            )
-            .distinct()
-        )
-        kept = sf.df.join(
-            F.broadcast(ival),
-            (F.col("t") >= F.col("lo")) & (F.col("t") < F.col("hi")),
-            "left_semi",
-        )
-        return kept.select("channel", "t", "v")
-
-    q["interval_mask"] = q_interval_mask
-
-    def q_signal_stats(spark, sf_dir):
-        return op_stats.channel_stats(_signal(spark, sf_dir)).select(
-            "channel", "mean", "std", "n"
-        )
-
-    q["signal_stats"] = q_signal_stats
-
-    def q_standardize(spark, sf_dir):
-        sf = op_stats.standardize(_signal(spark, sf_dir))
-        return sf.df.select("channel", "t", F.col("v").alias("vstd"))
-
-    q["standardize"] = q_standardize
-
-    def q_signal_add(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        sf2 = rel.slice_time(sf, start=10)
-        return rel.add(sf, sf2).df.select("channel", "t", "v")
-
-    q["signal_add"] = q_signal_add
-
-    def q_scalar_mult(spark, sf_dir):
-        sf = rel.multiply(_signal(spark, sf_dir), 2.5)
-        return sf.df.select("channel", "t", "v")
-
-    q["scalar_mult"] = q_scalar_mult
-
-    def q_mult_along_channel(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        coeffs = spark.range(NCH).select(
-            F.col("id").cast("int").alias("channel"),
-            ((F.col("id") + 1) * 0.5).alias("c"),
-        )
-        return rel.multiply_along_axis(sf, coeffs, "channel").df.select("channel", "t", "v")
-
-    q["mult_along_channel"] = q_mult_along_channel
-
-    def q_mult_along_time(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        coeffs = spark.range(2000).select(
-            F.col("id").cast("bigint").alias("t"),
-            ((F.col("id") % 8).cast("double") / 8.0).alias("c"),
-        )
-        return rel.multiply_along_axis(sf, coeffs, "t").df.select("channel", "t", "v")
-
-    q["mult_along_time"] = q_mult_along_time
-
-    def q_pad(spark, sf_dir):
-        sf = rel.pad(_signal(spark, sf_dir), 5, 5, 0.0)
-        return sf.df.select("channel", "t", "v")
-
-    q["pad"] = q_pad
-
-    def q_segment_mean(spark, sf_dir):
-        s = seg.segment_tumbling(_signal(spark, sf_dir), 128)
-        return (
-            s.groupBy("channel", "seg")
-            .agg(F.avg("v").alias("seg_mean"), F.count("*").alias("cnt"))
-            .filter(F.col("cnt") == 128)
-            .select("channel", "seg", "seg_mean")
-        )
-
-    q["segment_mean"] = q_segment_mean
-
-    def q_sliding_energy(spark, sf_dir):
-        # prefix-sum-difference plan: one window shuffle, no explode row
-        # amplification; exact here because v*v are dyadic rationals
-        # (hash-matches the same group-by oracle SQL)
-        return seg.sliding_agg_prefix(
-            _signal(spark, sf_dir), nfft=64, stride=32
-        ).select("channel", "seg", "energy")
-
-    q["sliding_energy"] = q_sliding_energy
-
-    def q_moving_average(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        w = W.partitionBy("recording_id", "channel").orderBy("t")
-        l2 = F.coalesce(F.lag("v", 2).over(w), F.lit(0.0))
-        l1 = F.coalesce(F.lag("v", 1).over(w), F.lit(0.0))
-        d1 = F.coalesce(F.lead("v", 1).over(w), F.lit(0.0))
-        d2 = F.coalesce(F.lead("v", 2).over(w), F.lit(0.0))
-        ma = (l2 + 2 * l1 + 3 * F.col("v") + 2 * d1 + d2) / 9.0
-        return sf.df.select("channel", "t", ma.alias("ma"))
-
-    q["moving_average"] = q_moving_average
-
-    def q_fir_kaiser(spark, sf_dir):
-        sf = op_fir.apply_fir_sql(_signal(spark, sf_dir), _FIR_SPEC, mode="same")
-        return sf.df.select("channel", "t", F.round("v", 9).alias("v"))
-
-    q["fir_kaiser"] = q_fir_kaiser
-
-    def q_fir_remez(spark, sf_dir):
-        sf = op_fir.apply_fir_sql(_signal(spark, sf_dir), _REMEZ_SPEC, mode="same")
-        return sf.df.select("channel", "t", F.round("v", 9).alias("v"))
-
-    q["fir_remez"] = q_fir_remez
-
-    def q_fir_hamming(spark, sf_dir):
-        sf = op_fir.apply_fir_sql(_signal(spark, sf_dir), _HAMMING_SPEC, mode="same")
-        return sf.df.select("channel", "t", F.round("v", 9).alias("v"))
-
-    q["fir_hamming"] = q_fir_hamming
-
-    def q_extend_even(spark, sf_dir):
-        sf = rel.extend(_signal(spark, sf_dir), 4, how="even")
-        return sf.df.select("channel", "t", "v")
-
-    q["extend_even"] = q_extend_even
-
-    def q_extend_edge(spark, sf_dir):
-        sf = rel.extend(_signal(spark, sf_dir), 4, how="edge")
-        return sf.df.select("channel", "t", "v")
-
-    q["extend_edge"] = q_extend_edge
-
-    def q_extend_odd(spark, sf_dir):
-        sf = rel.extend(_signal(spark, sf_dir), 4, how="odd")
-        return sf.df.select("channel", "t", "v")
-
-    q["extend_odd"] = q_extend_odd
-
-    def q_squeeze_expand(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        # expand: add a singleton epoch axis; squeeze: drop the constant
-        # recording axis — pure schema ops, verifiable relationally
-        df = rel.expand_dims(sf.df, epoch=0)
-        return rel.squeeze(df, ["recording_id"]).select("epoch", "channel", "t", "v")
-
-    q["squeeze_expand"] = q_squeeze_expand
-
-    def q_expand_upsample(spark, sf_dir):
-        sf = rel.expand_along_axis(_signal(spark, sf_dir), 3, 0.0)
-        return sf.df.select("channel", "t", "v")
-
-    q["expand_upsample"] = q_expand_upsample
-
-    def q_event_window_avg(spark, sf_dir):
-        from openseize_spark.operators import coupling
-
-        sf = _signal(spark, sf_dir)
-        events = spark.createDataFrame(
-            [("r0", ch, 1000 + 1111 * j) for ch in range(NCH) for j in range(8)],
-            "recording_id string, channel int, event_t bigint",
-        )
-        return coupling.pac_estimate(sf.df, events, window=64).select(
-            "channel", "offset", "mean_sq_amp", "n_events"
-        )
-
-    q["event_window_avg"] = q_event_window_avg
-
-    def q_decimate(spark, sf_dir):
-        sf = rel.slice_time(_signal(spark, sf_dir), start=0, step=4)
-        return sf.df.select("channel", "t", "v")
-
-    q["decimate"] = q_decimate
-
-    def q_nearest_bin(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        bins = sf.df.filter((F.col("channel") == 0) & (F.col("t") <= 100)).select(
-            (F.col("t") * 0.5).alias("freq")
-        )
-        targets = spark.createDataFrame(
-            [(10.3,), (25.7,), (40.2,)], "target double"
-        )
-        return rel.nearest_bin(bins, "freq", targets, "target")
-
-    q["nearest_bin"] = q_nearest_bin
-
-    def q_band_power(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        psd = sf.df.filter(F.col("t") <= 200).select(
-            "recording_id",
-            "channel",
-            (F.col("t") * 0.5).alias("freq"),
-            F.col("v").alias("psd"),
-        )
-        return spec.band_power(psd, lo=5.0, hi=20.0, freq_step=0.5).select(
-            "channel", "power"
-        )
-
-    q["band_power"] = q_band_power
-
-
-    def q_power_norm(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        psd = sf.df.filter(F.col("t") <= 200).select(
-            "recording_id",
-            "channel",
-            (F.col("t") * 0.5).alias("freq"),
-            F.col("v").alias("psd"),
-        )
-        return spec.power_norm(psd).select("channel", "freq", "psd_norm")
-
-    q["power_norm"] = q_power_norm
-
-    def q_envelope(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        im = (
-            (
-                (F.col("t") * 37 + F.col("channel") * 11) % 1024
-            ).cast("double")
-            / 1024.0
-        )
-        return sf.df.select(
-            "channel",
-            "t",
-            F.sqrt(F.col("v") * F.col("v") + im * im).alias("amplitude"),
-        )
-
-    q["envelope"] = q_envelope
-
-    def q_synth_signal(spark, sf_dir):
-        from openseize_spark.sources.generator import dyadic_signal
-
-        sf = dyadic_signal(spark, nchannels=3, nsamples=5000)
-        return sf.df.select("channel", "t", "v")
-
-    q["synth_signal"] = q_synth_signal
-
-    def q_psd_ci(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        psd = sf.df.filter(F.col("t") <= 200).select(
-            "recording_id",
-            "channel",
-            (F.col("t") * 0.5).alias("freq"),
-            F.col("v").alias("psd"),
-            F.lit(20).cast("long").alias("nsegs"),
-        )
-        out = spec.confidence_interval(psd, alpha=0.05)
-        return out.select(
-            "channel",
-            "freq",
-            "psd",
-            F.round("ci_lower", 9).alias("ci_lower"),
-            F.round("ci_upper", 9).alias("ci_upper"),
-        )
-
-    q["psd_ci"] = q_psd_ci
-
-    def q_sosfiltfilt_ellip(spark, sf_dir):
-        spec_e = design2.ellip(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfiltfilt(_signal_sliced(spark, sf_dir), spec_e)
-        return sf.df.select("channel", "t", "v")
-
-    q["sosfiltfilt_ellip"] = q_sosfiltfilt_ellip
-
-    # ------------------------- LLM pipeline ops -------------------------
-    def q_dedup_exact(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        out = dedup.exact_dedup(docs)
-        return out.select("doc_id", "dup_count")
-
-    q["dedup_exact"] = q_dedup_exact
-
-    def q_text_stats(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        s = llm_text.text_stats(docs)
-        return s.select("doc_id", "n_chars", "n_tokens", "avg_token_len")
-
-    q["text_stats"] = q_text_stats
-
-    def q_stopword_score_by_lang(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        norm = F.concat(
-            F.lit(" "), dedup.normalize_text(F.col("text")), F.lit(" ")
-        )
-        hits = llm_text._marker_hits(norm, _EN_MARKERS)
-        return (
-            docs.select("lang", hits.alias("_h"))
-            .groupBy("lang")
-            .agg(F.avg("_h").alias("avg_en_hits"), F.count("*").alias("n_docs"))
-        )
-
-    q["stopword_score_by_lang"] = q_stopword_score_by_lang
-
-    def q_fingerprint(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.fingerprint(docs)
-
-    q["fingerprint"] = q_fingerprint
-
-    def q_token_count_by_source(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return (
-            docs.select("source", llm_text.token_count(F.col("text")).alias("_tc"))
-            .groupBy("source")
-            .agg(F.sum("_tc").cast("bigint").alias("total_tokens"), F.count("*").alias("n_docs"))
-        )
-
-    q["token_count_by_source"] = q_token_count_by_source
-
-    def q_repetition_stats(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.repetition_stats(docs, n=3)
-
-    q["repetition_stats"] = q_repetition_stats
-
-    def _augment_pii(docs):
-        # The synthetic corpus contains no PII-shaped strings, so PII
-        # queries run over text deterministically augmented from doc_id —
-        # the regex match/redact paths are exercised for real and the
-        # DuckDB oracles mirror the same injection (the `aug` CTE).
-        did = F.col("doc_id")
-        aug = F.concat(
-            F.col("text"),
-            F.when(
-                did % 5 == 0,
-                F.concat(F.lit(" contact user"), did.cast("string"), F.lit("@example.com")),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 7 == 0,
-                F.concat(F.lit(" see https://data.example.org/doc/"), did.cast("string")),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 11 == 0,
-                F.concat(F.lit(" host 10.0."), (did % 256).cast("string"), F.lit(".17")),
-            ).otherwise(F.lit("")),
-            F.when(did % 13 == 0, F.lit(" call +1-555-0142")).otherwise(F.lit("")),
-        )
-        return docs.withColumn("text", aug)
-
-    def q_pii_scan(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.pii_scan(_augment_pii(docs))
-
-    q["pii_scan"] = q_pii_scan
-
-    def _doc_paths(spark, sf_dir):
-        from openseize_spark.sources import annotations as ann_src
-
-        docs = _t(spark, sf_dir, "documents")
-        a = docs.select(
-            F.concat(
-                F.lit("data/"), F.col("source"), F.lit("/rec_"),
-                F.col("doc_id"), F.lit(".edf"),
-            ).alias("path_a")
-        )
-        b = docs.filter(F.col("doc_id") % 3 != 0).select(
-            F.concat(
-                F.lit("ann/rec_"), F.col("doc_id"), F.lit("_annotations.txt")
-            ).alias("path_b")
-        )
-        return ann_src, a, b
-
-    def q_path_pairing(spark, sf_dir):
-        ann_src, a, b = _doc_paths(spark, sf_dir)
-        return ann_src.pair_paths(a, b, r"rec_([0-9]+)[_.]")
-
-    q["path_pairing"] = q_path_pairing
-
-    def q_path_mismatched(spark, sf_dir):
-        ann_src, a, b = _doc_paths(spark, sf_dir)
-        return ann_src.mismatched_paths(a, b, r"rec_([0-9]+)[_.]")
-
-    q["path_mismatched"] = q_path_mismatched
-
-    def q_knn_cosine(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        out = similarity.cosine_topk(corpus, queries_df, k=5)
-        return out.select("q_id", "vec_id", "cosine", F.col("rank").cast("bigint").alias("rank"))
-
-    q["knn_cosine"] = q_knn_cosine
-
-    def q_embedding_norms(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings")
-        e = similarity.with_norm(emb)
-        return e.groupBy("label").agg(
-            F.avg("_norm").alias("avg_norm"), F.count("*").alias("n_vecs")
-        )
-
-    q["embedding_norms"] = q_embedding_norms
-
-    def q_ngram_jaccard(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 80)
-        d = docs.select("doc_id", "lang")
-        pairs = (
-            d.withColumnRenamed("doc_id", "a")
-            .join(d.withColumnRenamed("doc_id", "b"), on="lang")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-        )
-        return dedup.jaccard_verify(docs, pairs, k=5, threshold=0.25)
-
-    q["ngram_jaccard"] = q_ngram_jaccard
-
-    def q_lev_verify(spark, sf_dir):
-        """Edit-distance candidate verification (llm/dedup.py
-        levenshtein_verify): normalized Levenshtein similarity over
-        ASCII-projected 500-char prefixes on bounded same-(lang,
-        source) candidate pairs — the character-level alternative to
-        shingle Jaccard that catches in-place edits.  Registered after
-        the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-        d = docs.select("doc_id", "lang", "source")
-        pairs = (
-            d.withColumnRenamed("doc_id", "a")
-            .join(
-                d.withColumnRenamed("doc_id", "b"), on=["lang", "source"]
-            )
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-        )
-        return dedup.levenshtein_verify(
-            docs, pairs, threshold=0.3, prefix_chars=500
-        )
-
-    q["lev_verify"] = q_lev_verify
-
-    def q_triangle_count(spark, sf_dir):
-        """Per-node triangle counts (llm/dedup.py triangle_count) over
-        the verified near-dup graph — ordered-vertex wedge enumeration
-        closed by an equi join, each triangle produced exactly once.
-        Distinguishes duplicate cliques from chains of borderline
-        pairs.  Registered after the round-5 window; round-6 window
-        material."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        return dedup.triangle_count(dup.select("a", "b"))
-
-    q["triangle_count"] = q_triangle_count
-
-    def q_k_core(spark, sf_dir):
-        """k-core of the verified near-dup graph (llm/dedup.py k_core):
-        iterative peeling until every surviving node has >= 2 in-core
-        neighbors — separates dense duplicate families from the
-        borderline chains and stars single-linkage components glue
-        together.  Unrolled-idempotent contract: Spark breaks at the
-        fixed point and raises if 12 rounds did not converge; the
-        oracle unrolls exactly 12 idempotent peels, so both engines
-        reach the identical core.  Round-10 registration (staged on
-        the r10-batch branch)."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        return dedup.k_core(dup.select("a", "b"), k=2).select(
-            F.col("id").alias("doc_id"), "core_degree"
-        )
-
-    q["k_core"] = q_k_core
-
-    def q_label_propagation(spark, sf_dir):
-        """Deterministic synchronous label propagation (llm/dedup.py
-        label_propagation) over the verified near-dup graph: 4 fixed
-        majority rounds with self-inclusion and a total (count DESC,
-        label ASC) tie-break, so the result is a pure function of the
-        graph — no random tie-breaks, no convergence claim, and the
-        oracle unrolls the identical rounds.  Splits thin-bridged
-        duplicate families the single-linkage components merge.
-        Round-10 registration (staged on the r10-batch branch)."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        return dedup.label_propagation(dup.select("a", "b"), rounds=4).select(
-            F.col("id").alias("doc_id"), "label"
-        )
-
-    q["label_propagation"] = q_label_propagation
-
-    def q_embedding_dedup(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings")
-        base = emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v"), "label"
-        )
-        dup = base.filter(F.col("vec_id") < 50).select(
-            (F.col("vec_id") + 10000).alias("vec_id"),
-            F.concat(
-                F.array(F.element_at("v", 1) + F.lit(0.05)), F.slice("v", 2, 63)
-            ).alias("v"),
-            "label",
-        )
-        allv = base.unionByName(dup)
-        return similarity.cosine_near_dup(
-            allv, threshold=0.99, block_col="label", vec_col="v"
-        )
-
-    q["embedding_dedup"] = q_embedding_dedup
-
-    def q_ivf_topk(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        queries_df = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        centroids = emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 11)).select(
-            (F.col("vec_id") - 3).cast("int").alias("cell_id"),
-            F.col("embedding").alias("cvec"),
-        )
-        return similarity.ivf_topk(corpus, queries_df, centroids, k=5, nprobe=2)
-
-    q["ivf_topk"] = q_ivf_topk
-
-    def q_kmeans_assign(spark, sf_dir):
-        # Lloyd's k-means fit (deterministic first-k seeding, 4 fixed
-        # rounds), assignments under the final centroids
-        emb = _t(spark, sf_dir, "embeddings")
-        assign, _cents = similarity.kmeans_fit(emb, k=8, n_iter=4)
-        return assign.select(F.col("id").alias("vec_id"), "cell_id")
-
-    q["kmeans_assign"] = q_kmeans_assign
-
-    def q_cluster_purity(spark, sf_dir):
-        """Cluster-quality evaluation: per-cluster majority-label purity
-        of the k-means assignment against the embeddings' ground-truth
-        labels — the standard external clustering metric (and the eval
-        step after any semantic-dedup/topic-cluster fit).  The label
-        histogram keys on (cell_id, label) — at most k x n_labels rows —
-        so the argmax window and total join run on a relation the size
-        of the label table, not the corpus; ties break to the lowest
-        label deterministically.  Registered after the round-5 window;
-        round-6 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        assign, _cents = similarity.kmeans_fit(emb, k=8, n_iter=4)
-        j = assign.join(
-            emb.select(F.col("vec_id").alias("_vid"), "label"),
-            assign.id == F.col("_vid"),
-        )
-        # hist (<= k x n_labels rows) feeds the argmax window AND the
-        # per-cell total — checkpoint or the assignment+join subtree
-        # re-executes per consumer (round 15; lazy, GC-released)
-        hist = (
-            j.groupBy("cell_id", "label")
-            .agg(F.count("*").alias("_n"))
-            .localCheckpoint(eager=False)
-        )
-        win = W.partitionBy("cell_id").orderBy(
-            F.col("_n").desc(), F.col("label").asc()
-        )
-        top = hist.withColumn("_rk", F.row_number().over(win)).filter(
-            F.col("_rk") == 1
-        )
-        tot = hist.groupBy("cell_id").agg(F.sum("_n").alias("n"))
-        return top.join(tot, on="cell_id").select(
-            "cell_id",
-            F.col("n").cast("bigint").alias("n"),
-            F.col("label").alias("top_label"),
-            F.col("_n").cast("bigint").alias("top_cnt"),
-            F.round(
-                F.col("_n").cast("double") / F.col("n").cast("double"), 9
-            ).alias("purity"),
-        )
-
-    q["cluster_purity"] = q_cluster_purity
-
-    # --------------- non-SQL-expressible (rows-only checks) -------------
-    def q_welch_psd(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        return spec.welch_psd(sf, nfft=128, overlap=0.5).select(
-            "channel", "freq", F.round("psd", 12).alias("psd"), "nsegs"
-        )
-
-    q["welch_psd"] = q_welch_psd
-
-    def q_welch_psd_blocks(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        return spec.welch_psd_blocks(sf, nfft=128, overlap=0.5, segs_per_block=32).select(
-            "channel", "freq", F.round("psd", 12).alias("psd"), "nsegs"
-        )
-
-    q["welch_psd_blocks"] = q_welch_psd_blocks
-
-    def q_coherence(spark, sf_dir):
-        """Magnitude-squared coherence between channels 0 and 1
-        (operators/spectral.py coherence): Welch cross-spectral density
-        over the same segmentation as welch_psd — cross-channel
-        parity-plus; oracle replays both channels' naive DFTs joined on
-        (segment, bin)."""
-        sf = _signal(spark, sf_dir)
-        return spec.coherence(sf, ch_a=0, ch_b=1, nfft=128, overlap=0.5).select(
-            "freq",
-            F.round("csd_re", 12).alias("csd_re"),
-            F.round("csd_im", 12).alias("csd_im"),
-            F.round("coherence", 9).alias("coherence"),
-            "nsegs",
-        )
-
-    q["coherence"] = q_coherence
-
-    def q_stft(spark, sf_dir):
-        sf = _signal(spark, sf_dir)
-        # round(9): FFT-vs-naive-DFT oracle divergence is ~1e-16 absolute,
-        # which straddles a 1e-12 rounding grid on a handful of rows —
-        # 9 decimals puts straddle probability at ~1e-7 per value while
-        # still verifying 7+ significant digits of the transform
-        return spec.stft(sf, nfft=128, overlap=0.5).select(
-            "channel",
-            "seg",
-            "freq",
-            F.round("re", 9).alias("re"),
-            F.round("im", 9).alias("im"),
-        )
-
-    q["stft"] = q_stft
-
-    def q_stft_blocks(spark, sf_dir):
-        # bounded-memory STFT (stride-aligned blocks + right halo); tested
-        # bit-exact vs the whole-channel path, shares its DFT oracle
-        sf = _signal(spark, sf_dir)
-        return spec.stft_blocks(sf, nfft=128, overlap=0.5, segs_per_block=64).select(
-            "channel",
-            "seg",
-            "freq",
-            F.round("re", 9).alias("re"),
-            F.round("im", 9).alias("im"),
-        )
-
-    q["stft_blocks"] = q_stft_blocks
-
-    def q_sosfilt(spark, sf_dir):
-        sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfilt(_signal_sliced(spark, sf_dir), sos)
-        return sf.df.select("channel", "t", "v")
-
-    q["sosfilt"] = q_sosfilt
-
-    def q_sosfilt_blocks(spark, sf_dir):
-        # parallel-in-time state-scan IIR (operators/iir.sosfilt_blocks).
-        # Oracled against the plain-recursion replay: superposition state
-        # error underflows below 1 ulp for SOS cascades (measured 0.0 on
-        # this signal), but round(7) on both sides keeps the compare robust.
-        sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfilt_blocks(_signal_sliced(spark, sf_dir), sos, block_size=512)
-        return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
-
-    q["sosfilt_blocks"] = q_sosfilt_blocks
-
-    def q_sosfiltfilt_blocks(spark, sf_dir):
-        # zero-phase parallel-in-time: forward + time-reversed backward
-        # state-scan passes
-        sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfiltfilt_blocks(_signal_sliced(spark, sf_dir), sos, block_size=512)
-        return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
-
-    q["sosfiltfilt_blocks"] = q_sosfiltfilt_blocks
-
-    def q_lfilter_blocks(spark, sf_dir):
-        # ba-form parallel-in-time state scan (blocks-vs-plain float noise
-        # <=6e-14 on this signal; round(7) both sides)
-        b, a = _BA_SPEC
-        sf = op_iir.lfilter_blocks(_signal_sliced(spark, sf_dir), b, a, block_size=512)
-        return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
-
-    q["lfilter_blocks"] = q_lfilter_blocks
-
-    def q_filtfilt_blocks(spark, sf_dir):
-        # zero-phase ba-form parallel-in-time
-        b, a = _BA_SPEC
-        sf = op_iir.filtfilt_blocks(_signal_sliced(spark, sf_dir), b, a, block_size=512)
-        return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
-
-    q["filtfilt_blocks"] = q_filtfilt_blocks
-
-    def q_sosfiltfilt(spark, sf_dir):
-        sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfiltfilt(_signal_sliced(spark, sf_dir), sos)
-        return sf.df.select("channel", "t", "v")
-
-    q["sosfiltfilt"] = q_sosfiltfilt
-
-    def q_resample_poly(spark, sf_dir):
-        sf = op_resample.resample(_signal(spark, sf_dir), L=2, M=5, block_size=4096)
-        return sf.df.select("channel", "t", "v")
-
-    q["resample_poly"] = q_resample_poly
-
-    def q_downsample(spark, sf_dir):
-        sf = op_resample.downsample(_signal(spark, sf_dir), M=4, block_size=4096)
-        return sf.df.select("channel", "t", "v")
-
-    q["downsample"] = q_downsample
-
-    def q_upsample(spark, sf_dir):
-        sf = op_resample.upsample(_signal(spark, sf_dir), L=3, block_size=4096)
-        return sf.df.select("channel", "t", "v")
-
-    q["upsample"] = q_upsample
-
-    def q_fir_blocks(spark, sf_dir):
-        sf = op_fir.apply_fir_blocks(
-            _signal(spark, sf_dir), _FIR_SPEC, mode="same", block_size=4096
-        )
-        return sf.df.select("channel", "t", F.round("v", 9).alias("v"))
-
-    q["fir_blocks"] = q_fir_blocks
-
-    def q_sosfilt_cheby1(spark, sf_dir):
-        spec = design2.cheby1(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfilt(_signal_sliced(spark, sf_dir), spec)
-        return sf.df.select("channel", "t", "v")
-
-    q["sosfilt_cheby1"] = q_sosfilt_cheby1
-
-    def q_lfilter(spark, sf_dir):
-        b, a = _BA_SPEC
-        sf = op_iir.lfilter(_signal_sliced(spark, sf_dir), b, a)
-        return sf.df.select("channel", "t", "v")
-
-    q["lfilter"] = q_lfilter
-
-    def q_sosfilt_cheby2(spark, sf_dir):
-        spec = design2.cheby2(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfilt(_signal_sliced(spark, sf_dir), spec)
-        return sf.df.select("channel", "t", "v")
-
-    q["sosfilt_cheby2"] = q_sosfilt_cheby2
-
-    def q_filtfilt(spark, sf_dir):
-        b, a = _BA_SPEC
-        sf = op_iir.filtfilt(_signal_sliced(spark, sf_dir), b, a)
-        return sf.df.select("channel", "t", "v")
-
-    q["filtfilt"] = q_filtfilt
-
-    def q_notch(spark, sf_dir):
-        spec = design.notch(fstop=15.0, width=4.0, fs=FS)
-        sf = op_iir.sosfilt(_signal_sliced(spark, sf_dir), spec)
-        return sf.df.select("channel", "t", "v")
-
-    q["notch"] = q_notch
-
-    def q_pac(spark, sf_dir):
-        from openseize_spark.operators import coupling
-
-        hspec = design.hilbert_fir(width=5.0, fs=FS)
-        sf = _signal(spark, sf_dir)
-        analytic = op_fir.hilbert_analytic(sf, hspec)
-        # checkpoint the shared analytic subtree: events and amplitudes
-        # both derive from it and would otherwise recompute the FIR
-        # window; its blocks die with the returned plan
-        ph = op_fir.envelope_phase(analytic).localCheckpoint(eager=False)
-        events = coupling.phase_events(
-            ph.select("recording_id", "channel", "t", "phase"), target=0.5, tol=0.05
-        )
-        amp = ph.select("recording_id", "channel", "t", F.col("amplitude").alias("v"))
-        return coupling.pac_estimate(amp, events, window=32).select(
-            "channel",
-            "offset",
-            F.round("mean_sq_amp", 9).alias("mean_sq_amp"),
-            "n_events",
-        )
-
-    q["pac"] = q_pac
-
-    def q_supplier_topbal(spark, sf_dir):
-        # top-1-per-group via rank window + broadcast dim join, with
-        # analytic aggregates computed in the same window pass
-        from pyspark.sql import Window as W
-
-        s = _t(spark, sf_dir, "supplier")
-        n = _t(spark, sf_dir, "nation")
-        j = s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        w = W.partitionBy("n_name")
-        wo = W.partitionBy("n_name").orderBy(F.desc("s_acctbal"), F.col("s_suppkey"))
-        return (
-            j.withColumn("rn", F.row_number().over(wo))
-            .withColumn("avg_bal", F.avg("s_acctbal").over(w))
-            .withColumn("n_suppliers", F.count("*").over(w))
-            .filter(F.col("rn") == 1)
-            .select(
-                "n_name",
-                F.col("s_name").alias("top_supplier"),
-                F.col("s_acctbal").alias("top_bal"),
-                "avg_bal",
-                "n_suppliers",
-            )
-        )
-
-    q["supplier_topbal"] = q_supplier_topbal
-
-    def q_big_orders(spark, sf_dir):
-        """TPC-H Q18 shape: orders whose total quantity exceeds a
-        threshold, joined back to customer.  The HAVING-filtered
-        aggregate is tiny relative to lineitem, so AQE turns the
-        order-side join into a broadcast at any scale where the
-        predicate is selective; quantity sums are exact integers in
-        doubles (TPC-H quantities are 1..50), so the threshold cannot
-        straddle a float boundary."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        big = (
-            li.groupBy("l_orderkey")
-            .agg(F.sum("l_quantity").alias("sum_qty"))
-            .filter(F.col("sum_qty") > 150)
-        )
-        return (
-            o.join(big, o.o_orderkey == big.l_orderkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .select("c_name", "o_orderkey", "o_orderdate", "o_totalprice", "sum_qty")
-        )
-
-    q["big_orders"] = q_big_orders
-
-    def q_promo_revenue(spark, sf_dir):
-        """TPC-H Q14 shape: share of revenue from one part type in a
-        shipdate month-range — conditional aggregation over a part join,
-        single-row result.  Part side joins on the part key; at 100 TB
-        the dimension stays shuffle-joined unless AQE broadcasts it."""
-        li = _t(spark, sf_dir, "lineitem")
-        p = _t(spark, sf_dir, "part")
-        # revenue in exact integer 1e-4 units (the _rev_units discipline):
-        # the share is a ratio of two float sums otherwise, and float sum
-        # order is not pinned — a 1-ulp reordering could flip the
-        # round-at-9 (coherence failure class, tools/float_order_audit.py)
-        ru = F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("bigint")
-        j = li.filter(
-            (F.col("l_shipdate") >= F.lit("1995-09-01"))
-            & (F.col("l_shipdate") < F.lit("1996-03-01"))
-        ).join(p, li.l_partkey == p.p_partkey)
-        return j.agg(
-            F.round(
-                F.lit(100.0)
-                * F.sum(
-                    F.when(F.col("p_type") == "STANDARD", ru).otherwise(F.lit(0))
-                ).cast("double")
-                / F.sum(ru).cast("double"),
-                9,
-            ).alias("promo_share"),
-            F.count("*").alias("n_items"),
-        )
-
-    q["promo_revenue"] = q_promo_revenue
-
-    def q_brand_suppliers(spark, sf_dir):
-        """TPC-H Q16 shape: distinct-supplier breadth per part brand,
-        excluding a blacklist via anti join.  The blacklist (negative
-        account balance) is tiny -> broadcast anti join; countDistinct
-        runs as Spark's two-phase expand aggregate.  All-integer output."""
-        li = _t(spark, sf_dir, "lineitem")
-        p = _t(spark, sf_dir, "part")
-        s = _t(spark, sf_dir, "supplier")
-        bad = s.filter(F.col("s_acctbal") < 0).select("s_suppkey")
-        return (
-            li.join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
-            .join(p, li.l_partkey == p.p_partkey)
-            .groupBy("p_brand")
-            .agg(
-                F.countDistinct("l_suppkey").cast("bigint").alias("supplier_cnt"),
-                F.count("*").cast("bigint").alias("n_items"),
-            )
-        )
-
-    q["brand_suppliers"] = q_brand_suppliers
-
-    def q_priority_late_orders(spark, sf_dir):
-        """TPC-H Q4 shape: orders with at least one late-shipped item
-        (shipdate > orderdate + 60 days), counted per priority.  The
-        correlated EXISTS becomes a LEFT SEMI join on the order key —
-        Spark never materializes the duplicate-late-items side, and the
-        semi join degenerates to a broadcast when the late set is small
-        under AQE.  All-integer output."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        late = li.join(
-            o.select("o_orderkey", "o_orderdate"),
-            li.l_orderkey == F.col("o_orderkey"),
-        ).filter(F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 60))
-        return (
-            o.join(
-                late.select(F.col("l_orderkey").alias("k")).distinct(),
-                o.o_orderkey == F.col("k"),
-                "left_semi",
-            )
-            .groupBy("o_orderpriority")
-            .agg(F.count("*").cast("bigint").alias("order_count"))
-        )
-
-    q["priority_late_orders"] = q_priority_late_orders
-
-    def q_sole_late_supplier(spark, sf_dir):
-        """TPC-H Q21 shape: suppliers who were the ONLY late shipper in
-        a multi-supplier order (shipdate > orderdate + 90 days).  The
-        exists/not-exists pair is re-expressed as one aggregation over
-        the order key — per-order distinct suppliers and distinct late
-        suppliers — which costs a single shuffle on l_orderkey instead
-        of two correlated probes; the filtered result is tiny, so the
-        supplier-name join broadcasts.  All-integer output."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        s = _t(spark, sf_dir, "supplier")
-        tagged = li.join(
-            o.select("o_orderkey", "o_orderdate"),
-            li.l_orderkey == F.col("o_orderkey"),
-        ).withColumn(
-            "late_supp",
-            F.when(
-                F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 90),
-                F.col("l_suppkey"),
-            ),
-        )
-        per_order = tagged.groupBy("l_orderkey").agg(
-            F.countDistinct("l_suppkey").alias("n_supp"),
-            F.countDistinct("late_supp").alias("n_late_supp"),
-            F.max("late_supp").alias("sole_supp"),
-        )
-        culprit = per_order.filter(
-            (F.col("n_supp") > 1) & (F.col("n_late_supp") == 1)
-        )
-        return (
-            culprit.join(s, culprit.sole_supp == s.s_suppkey)
-            .groupBy("s_name")
-            .agg(F.count("*").cast("bigint").alias("numwait"))
-        )
-
-    q["sole_late_supplier"] = q_sole_late_supplier
-
-    def q_important_parts(spark, sf_dir):
-        """TPC-H Q11 shape: parts whose lineitem value exceeds a fixed
-        fraction (0.05%) of the corpus-wide value.  Both sides sum in
-        exact integer cents (l_extendedprice carries 2 decimals, so
-        round(x*100) is an exact int64 and the sum is order-invariant),
-        and the share predicate is pure integer arithmetic — a float
-        total here would let summation order flip boundary parts.  The
-        global total is one broadcast row."""
-        li = _t(spark, sf_dir, "lineitem")
-        cents = F.round(F.col("l_extendedprice") * 100).cast("bigint")
-        per_part = li.groupBy("l_partkey").agg(
-            F.sum(cents).alias("value_cents")
-        )
-        total = per_part.agg(
-            F.sum("value_cents").alias("total_cents")
-        )
-        return (
-            per_part.join(F.broadcast(total))
-            .filter(F.col("value_cents") * 2000 > F.col("total_cents"))
-            .select(
-                "l_partkey",
-                F.col("value_cents").cast("bigint").alias("value_cents"),
-            )
-        )
-
-    q["important_parts"] = q_important_parts
-
-    def q_top_revenue_supplier(spark, sf_dir):
-        """TPC-H Q15 shape: the supplier(s) achieving maximum revenue in
-        a shipdate quarter.  Revenue accumulates in exact integer 1e-4
-        units (price has 2 decimals, discount 2, so the product is an
-        exact multiple of 1e-4 and round() recovers the same int64 in
-        any engine), making the argmax ties-exact; the one-row max joins
-        back by broadcast instead of a global window."""
-        li = _t(spark, sf_dir, "lineitem")
-        s = _t(spark, sf_dir, "supplier")
-        units = F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("bigint")
-        rev = (
-            li.filter(
-                (F.col("l_shipdate") >= F.lit("1996-01-01"))
-                & (F.col("l_shipdate") < F.lit("1996-04-01"))
-            )
-            .groupBy("l_suppkey")
-            .agg(F.sum(units).alias("rev_units"))
-        )
-        mx = rev.agg(F.max("rev_units").alias("max_units"))
-        return (
-            rev.join(F.broadcast(mx))
-            .filter(F.col("rev_units") == F.col("max_units"))
-            .join(s, rev.l_suppkey == s.s_suppkey)
-            .select(
-                "s_suppkey",
-                "s_name",
-                (F.col("rev_units") / 10000.0).alias("total_revenue"),
-            )
-        )
-
-    q["top_revenue_supplier"] = q_top_revenue_supplier
-
-    def q_minhash_dedup(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.minhash_dedup(
-            docs, k=5, num_hashes=64, bands=8, threshold=0.8, portable=True
-        ).select("doc_id", "lang", "source")
-
-    q["minhash_dedup"] = q_minhash_dedup
-
-    def q_dedup_clusters(spark, sf_dir):
-        # exact single-linkage near-dup clusters: verified LSH pairs ->
-        # iterative connected components (min-label propagation)
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        # LSH pairs are structurally a < b: skip the self-pair pass
-        cc = dedup.connected_components(
-            dup.select("a", "b"), include_self_pairs=False
-        )
-        return cc.select(F.col("id").alias("doc_id"), "component")
-
-    q["dedup_clusters"] = q_dedup_clusters
-
-    def q_canonical_docs(spark, sf_dir):
-        """Canonical-document selection: after near-dup clustering, keep
-        the best-quality member of each cluster (ties to the lowest id) —
-        the step real dedup pipelines run after connected components.
-        Composes the LSH->verify->CC chain with the quality scorer; the
-        argmax is a rank window partitioned on the component key."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        cc = dedup.connected_components(
-            dup.select("a", "b"), include_self_pairs=False
-        ).select(F.col("id").alias("doc_id"), "component")
-        qual = llm_text.quality_score(docs)
-        j = cc.join(qual, on="doc_id")
-        wo = W.partitionBy("component").orderBy(
-            F.desc("quality"), F.asc("doc_id")
-        )
-        wp = W.partitionBy("component")
-        return (
-            j.withColumn("rn", F.row_number().over(wo))
-            .withColumn("n_members", F.count("*").over(wp).cast("bigint"))
-            .filter(F.col("rn") == 1)
-            .select(
-                "component",
-                F.col("doc_id").alias("canonical_id"),
-                F.col("quality").alias("best_quality"),
-                "n_members",
-            )
-        )
-
-    q["canonical_docs"] = q_canonical_docs
-
-    def q_pagerank_sim(spark, sf_dir):
-        """PageRank centrality over the verified near-dup pair graph
-        (llm/dedup.py pagerank): 5 unrolled integer-exact iterations —
-        the third iterative-algorithm shape after CC and k-means."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        return dedup.pagerank(dup.select("a", "b"), iters=5).select(
-            F.col("id").alias("doc_id"), "degree", "pagerank"
-        )
-
-    q["pagerank_sim"] = q_pagerank_sim
-
-    def q_snapshot_diff(spark, sf_dir):
-        """CDC corpus diff (llm/dedup.py snapshot_diff): snapshot B is a
-        deterministic mutation of documents (drop id%10==0, revise
-        id%7==0, add id%13==0 under shifted ids); classify via one full
-        outer fingerprint join."""
-        docs = _t(spark, sf_dir, "documents")
-        revised = F.when(
-            F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" revised"))
-        ).otherwise(F.col("text"))
-        b = (
-            docs.filter(F.col("doc_id") % 10 != 0)
-            .select("doc_id", revised.alias("text"))
-            .unionAll(
-                docs.filter(F.col("doc_id") % 13 == 0).select(
-                    (F.col("doc_id") + 100000).alias("doc_id"), "text"
-                )
-            )
-        )
-        return dedup.snapshot_diff(docs, b)
-
-    q["snapshot_diff"] = q_snapshot_diff
-
-    def q_minhash_sigs(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        return sigs.select("doc_id", F.posexplode("sig").alias("j", "h"))
-
-    q["minhash_sigs"] = q_minhash_sigs
-
-    def q_simhash(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.simhash(docs, portable=True)
-
-    q["simhash"] = q_simhash
-
-    def q_simhash_pairs(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.simhash_pairs(docs, max_hamming=6, portable=True)
-
-    q["simhash_pairs"] = q_simhash_pairs
-
-    def q_lsh_topk(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        return similarity.lsh_topk(corpus, queries_df, k=5, nbits=4, dim=64)
-
-    q["lsh_topk"] = q_lsh_topk
-
-    def q_pac_surrogates(spark, sf_dir):
-        from openseize_spark.operators import coupling
-
-        hspec = design.hilbert_fir(width=5.0, fs=FS)
-        sf = _signal(spark, sf_dir)
-        analytic = op_fir.hilbert_analytic(sf, hspec)
-        ph = op_fir.envelope_phase(analytic).localCheckpoint(eager=False)
-        events = coupling.phase_events(
-            ph.select("recording_id", "channel", "t", "phase"), target=0.5, tol=0.05
-        )
-        amp = ph.select("recording_id", "channel", "t", F.col("amplitude").alias("v"))
-        # circular shift within the shortest channel length (channels are
-        # near-equal; min keeps every shifted t in-range on all channels).
-        # Shifts are deterministic integer fractions of n (not seeded rng)
-        # so the DuckDB oracle can derive the identical shift table in SQL.
-        n = (
-            sf.df.groupBy("channel")
-            .agg(F.count("*").alias("c"))
-            .agg(F.min("c").alias("n"))
-            .collect()[0][0]
-        )
-        shifts = spark.createDataFrame(
-            [(i, (n * a) // b) for i, (a, b) in enumerate(_SURROGATE_FRACS)],
-            "surrogate_id int, shift bigint",
-        )
-        return coupling.pac_surrogates(amp, events, 32, shifts, n_samples=n).select(
-            "channel",
-            "surrogate_id",
-            "offset",
-            F.round("mean_sq_amp", 9).alias("mean_sq_amp"),
-        )
-
-    q["pac_surrogates"] = q_pac_surrogates
-
-    def q_hilbert_envelope(spark, sf_dir):
-        hspec = design.hilbert_fir(width=5.0, fs=FS)
-        analytic = op_fir.hilbert_analytic(_signal(spark, sf_dir), hspec)
-        return op_fir.envelope_phase(analytic).select(
-            "channel",
-            "t",
-            F.round("amplitude", 9).alias("amplitude"),
-            F.round("phase", 9).alias("phase"),
-        )
-
-    q["hilbert_envelope"] = q_hilbert_envelope
-
-
-    def q_quality_score(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.quality_score(docs)
-
-    q["quality_score"] = q_quality_score
-
-    def q_language_id(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.language_id(docs)
-
-    q["language_id"] = q_language_id
-
-    def q_top_ngrams(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.top_ngrams(docs, n=3, k=10, by_col="lang")
-
-    q["top_ngrams"] = q_top_ngrams
-
-    def q_quality_filter(spark, sf_dir):
-        # run on the PII-augmented corpus so the PII leg of the composed
-        # filter actually rejects rows (see _augment_pii)
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.quality_filter(
-            _augment_pii(docs), min_quality=0.5, max_dup_ngram_frac=0.3, max_pii=2
-        )
-
-    q["quality_filter"] = q_quality_filter
-
-    # ---- deterministic sampling / splitting / shuffling (llm/sampling) ----
-    def q_hash_sample(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return sampling.bernoulli_sample(docs, rate=0.25, seed="s0").select(
-            "doc_id", "lang", "source", "n_chars"
-        )
-
-    q["hash_sample"] = q_hash_sample
-
-    def q_split_assign(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        out = sampling.split_assign(
-            docs, {"train": 0.8, "val": 0.1, "test": 0.1}, seed="split"
-        )
-        return out.groupBy("split").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
-
-    q["split_assign"] = q_split_assign
-
-    def q_stratified_sample(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return sampling.stratified_sample(
-            docs, group_col="source", k=10, seed="strat"
-        ).select("doc_id", "lang", "source")
-
-    q["stratified_sample"] = q_stratified_sample
-
-    def q_corpus_shuffle(spark, sf_dir):
-        docs = _t(spark, sf_dir, "documents")
-        return sampling.corpus_shuffle(docs, seed="shuf", num_buckets=64).select(
-            "doc_id", "shuffle_pos"
-        )
-
-    q["corpus_shuffle"] = q_corpus_shuffle
-
-    def q_click_attribution(spark, sf_dir):
-        # as-of join: each purchase attributed to the user's most recent
-        # click at-or-before it (tagged-union + window carry — one
-        # shuffle, no range probe; operators/relational.asof_join)
-        ev = _events(spark, sf_dir)
-        purchases = ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "event_id", "ts", "value"
-        )
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        return rel.asof_join(
-            purchases,
-            clicks,
-            on="user_id",
-            left_t="ts",
-            right_t="ts",
-            payload=["event_id", "value"],
-            suffix="_click",
-        )
-
-    q["click_attribution"] = q_click_attribution
-
-    def q_multires_rollup(spark, sf_dir):
-        # hypertable-style continuous-aggregate cascade: minute partials
-        # feed the hour grain, hour feeds day — coarser resolutions
-        # re-aggregate the finer level's (n, sum) partials and never
-        # rescan raw events (sum/count re-aggregate losslessly).  The
-        # minute exchange is reused across its two consumers by AQE.
-        ev = _events(spark, sf_dir)
-
-        def up(df, grain):
-            return df.groupBy(
-                F.date_trunc(grain, "bucket").alias("bucket"), "event_type"
-            ).agg(F.sum("n").alias("n"), F.sum("sum_value").alias("sum_value"))
-
-        minute = ev.groupBy(
-            F.date_trunc("minute", "ts").alias("bucket"), "event_type"
-        ).agg(F.count("*").alias("n"), F.sum("value").alias("sum_value"))
-        hour = up(minute, "hour")
-        day = up(hour, "day")
-
-        def tag(df, res):
-            return df.select(
-                F.lit(res).alias("resolution"), "bucket", "event_type", "n", "sum_value"
-            )
-
-        out = tag(minute, "minute").unionByName(tag(hour, "hour")).unionByName(
-            tag(day, "day")
-        )
-        # round(9): partial-agg summation order differs across engines
-        # (~1e-12 absolute on day-grain sums); identical rounding on both
-        # sides makes the compare engine-invariant
-        return out.withColumn("sum_value", F.round("sum_value", 9))
-
-    q["multires_rollup"] = q_multires_rollup
-
-    # ---- multimodal queries run on the SQL-replayable media table
-    # ---- (synthetic_media_sqlgen: md5-chain payloads) so the fake-decode
-    # ---- byte math is hash-checkable in DuckDB, not rows-only.
-    def q_audio_features(spark, sf_dir):
-        from openseize_spark.llm import multimodal
-
-        media = multimodal.synthetic_media_sqlgen(spark, n=24)
-
-        # injected decoder: tile the 256 payload bytes 8x -> a 2048-sample
-        # wave, short enough that the DuckDB naive-DFT welch replay stays
-        # cheap; also exercises the decode_fn seam on the gate path.
-        def _short_wave(payload, meta):
-            import numpy as np
-
-            arr = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-            return np.tile(arr / 127.5 - 1.0, 8)
-
-        return multimodal.audio_features(
-            media, fs=2048.0, nfft=64, decode_fn=_short_wave
-        ).select(
-            "media_id",
-            F.round("rms", 6).alias("rms"),
-            F.round("low_band", 6).alias("low_band"),
-            F.round("high_band", 6).alias("high_band"),
-        )
-
-    q["audio_features"] = q_audio_features
-
-    def q_frame_sample(spark, sf_dir):
-        from openseize_spark.llm import multimodal
-
-        media = multimodal.synthetic_media_sqlgen(spark, n=24)
-        return multimodal.frame_sample(
-            media, every_n=2, deterministic_fake=True
-        ).select(
-            "media_id", "frame_idx", F.round("frame_mean", 9).alias("frame_mean")
-        )
-
-    q["frame_sample"] = q_frame_sample
-
-    def q_resize_images(spark, sf_dir):
-        from openseize_spark.llm import multimodal
-
-        media = multimodal.synthetic_media_sqlgen(spark, n=24)
-        small = multimodal.resize_images(media, 32, 24, deterministic_fake=True)
-        return multimodal.image_features(small, deterministic_fake=True).select(
-            "media_id",
-            F.round("mean", 9).alias("mean"),
-            F.round("std", 9).alias("std"),
-            F.round("edge_energy", 9).alias("edge_energy"),
-        )
-
-    q["resize_images"] = q_resize_images
-
-    def q_image_features(spark, sf_dir):
-        from openseize_spark.llm import multimodal
-
-        media = multimodal.synthetic_media_sqlgen(spark, n=24)
-        return multimodal.image_features(media, deterministic_fake=True).select(
-            "media_id",
-            F.round("mean", 9).alias("mean"),
-            F.round("std", 9).alias("std"),
-            F.round("edge_energy", 9).alias("edge_energy"),
-        )
-
-    q["image_features"] = q_image_features
-
-    # ---- full-length IIR bench variants (rows-only; the oracled gate
-    # ---- queries above run on the first IIR_SLICE samples so their
-    # ---- recursive-CTE oracles stay cheap — these keep bench.py honest)
-    def q_sosfilt_full(spark, sf_dir):
-        # full-length bench twin of `sosfilt`; since round 7 it carries
-        # the same recursive-CTE oracle un-sliced (~33 s in DuckDB at
-        # sf0.01 — fine for local verification, kept out of the driver
-        # window where slots go to never-checked queries first)
-        sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfilt(_signal(spark, sf_dir), sos)
-        return sf.df.select("channel", "t", "v")
-
-    q["sosfilt_full"] = q_sosfilt_full
-
-    def q_sosfilt_blocks_full(spark, sf_dir):
-        sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sf = op_iir.sosfilt_blocks(_signal(spark, sf_dir), sos, block_size=8192)
-        # round(7) both sides: parallel-in-time superposition noise vs
-        # the plain recursion replay (same discipline as sosfilt_blocks)
-        return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
-
-    q["sosfilt_blocks_full"] = q_sosfilt_blocks_full
-
-    def q_minhash_dedup_prod(spark, sf_dir):
-        # production configuration: murmur3 shingle hash (JVM codegen)
-        # instead of the md5-based portable hash that exists only so the
-        # DuckDB oracle can replay the pipeline.  Same plan shape as the
-        # oracled `minhash_dedup`; this is the variant bench.py times.
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.minhash_dedup(
-            docs, k=5, num_hashes=64, bands=8, threshold=0.8, portable=False
-        ).select("doc_id", "lang", "source")
-
-    q["minhash_dedup_prod"] = q_minhash_dedup_prod
-
-    def q_edf_decode(spark, sf_dir):
-        """EDF digital->physical decode through the distributed
-        EdfDataSource: a deterministic irregular-rate EDF (4 channels at
-        64/64/32/16 samples per record, distinct physical ranges) is
-        synthesized on the driver, then read back via
-        spark.read.format("edf") — partition-per-record-range scan,
-        int16 decode p = slope*d + offset (sources/edf.py:210-221;
-        reference file_io/edf.py:382-419).  The digital samples are a
-        closed-form integer function of (channel, t), so the oracle
-        replays decode exactly from the same dlit slope/offset literals."""
-        import os
-        import tempfile
-
-        import numpy as np
-
-        from openseize_spark.sources import edf as edfmod
-
-        path = _gate_tmp(spark, "decode") + ".edf"
-        spr, nrec = _EDF_GATE_SPR, _EDF_GATE_NREC
-        pmin, pmax = _EDF_GATE_PMIN, _EDF_GATE_PMAX
-        hdr = edfmod.EdfHeader(
-            num_records=nrec,
-            record_duration=1.0,
-            names=[f"ch{i}" for i in range(len(spr))],
-            transducers=[""] * len(spr),
-            physical_dim=["uV"] * len(spr),
-            physical_min=list(pmin),
-            physical_max=list(pmax),
-            digital_min=[-32768.0] * len(spr),
-            digital_max=[32767.0] * len(spr),
-            prefiltering=[""] * len(spr),
-            samples_per_record=list(spr),
-        )
-        with open(path, "wb") as f:
-            edfmod.write_header(f, hdr)
-            for r in range(nrec):
-                for ch, s in enumerate(spr):
-                    t = np.arange(r * s, (r + 1) * s, dtype=np.int64)
-                    d = _edf_gate_digital(ch, t)
-                    f.write(d.astype("<i2").tobytes())
-        edfmod.register_edf_source(spark)
-        df = spark.read.format("edf").option("path", path).load()
-        return df.select("channel", "t", "v")
-
-    q["edf_decode"] = q_edf_decode
-
-    def q_streaming_hour(spark, sf_dir):
-        """Structured Streaming batch-equivalence (SURVEY §2.10): drive
-        events.parquet through readStream -> watermarked tumbling-hour
-        windowed agg -> memory sink, return the flushed table.  The
-        oracle is the plain batch GROUP BY — a green row proves the
-        streaming grid equals the batch grid."""
-        from openseize_spark.streaming.windows import (
-            run_batch_as_stream,
-            streaming_windowed_stats,
-        )
-
-        d, schema = _events_stream_dir(spark, sf_dir, "stream_")
-
-        def transform(src):
-            return streaming_windowed_stats(
-                _event_ts(src), window_dur="1 hour", watermark="0 seconds"
-            )
-
-        out = run_batch_as_stream(
-            spark,
-            d,
-            schema,
-            transform,
-            queryName="gate_streaming_hour",
-            output_mode="complete",
-        )
-        return out.select(
-            "win_start",
-            "event_type",
-            "n",
-            F.round("mean_v", 9).alias("mean_v"),
-            F.round("sum_v2", 9).alias("sum_v2"),
-        )
-
-    q["streaming_hour"] = q_streaming_hour
-
-    def q_pack_sequences(spark, sf_dir):
-        """Sequence packing for training: concat-and-cut at 2048 tokens
-        over the deterministically shuffled corpus — two-level integer
-        prefix sum, one shuffle + one broadcast (llm/sampling.py)."""
-        docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        toks = docs.select(
-            "doc_id", llm_text.token_count(F.col("text")).alias("n_tokens")
-        )
-        return sampling.pack_sequences(toks, capacity=2048).select(
-            "doc_id", "n_tokens", "tok_offset", "seq_id", "seq_offset"
-        )
-
-    q["pack_sequences"] = q_pack_sequences
-
-    def q_streaming_sessionize(spark, sf_dir):
-        """Native session_window streaming aggregation (SURVEY §2.10):
-        per-user 30-minute-gap sessions over the events stream must
-        produce the same per-user session counts as the batch lag-based
-        sessionize oracle."""
-        from openseize_spark.streaming.dedup import streaming_sessionize
-        from openseize_spark.streaming.windows import run_batch_as_stream
-
-        d, schema = _events_stream_dir(spark, sf_dir, "stream_")
-
-        def transform(s_df):
-            return streaming_sessionize(
-                _event_ts(s_df),
-                gap="30 minutes",
-                watermark="0 seconds",
-                key_col="user_id",
-                value_col="value",
-            )
-
-        out = run_batch_as_stream(
-            spark,
-            d,
-            schema,
-            transform,
-            queryName="gate_streaming_sessionize",
-            output_mode="complete",
-        )
-        return out.groupBy("user_id").agg(
-            F.count("*").cast("bigint").alias("n_sessions")
-        )
-
-    q["streaming_sessionize"] = q_streaming_sessionize
-
-    def q_temperature_sample(spark, sf_dir):
-        """Temperature-based rebalancing over the skewed lang column
-        (T=2): keep rate n_s^(1/T-1) normalized so the smallest group
-        keeps everything, deterministic salted-hash membership."""
-        docs = _t(spark, sf_dir, "documents")
-        return sampling.temperature_sample(
-            docs, temperature=2.0, group_col="lang"
-        ).select("doc_id", "lang", F.round("keep_rate", 9).alias("keep_rate"))
-
-    q["temperature_sample"] = q_temperature_sample
-
-    def q_streaming_enrich(spark, sf_dir):
-        """Stream-static broadcast join + windowed rollup (streaming/
-        windows.py streaming_enrich): events stream enriched with the
-        nation dim (user_id % 25 -> nationkey), tumbling-day counts and
-        value sums per nation.  The join is stateless per micro-batch;
-        the oracle is the plain batch join + GROUP BY."""
-        from openseize_spark.streaming.windows import (
-            run_batch_as_stream,
-            streaming_enrich,
-        )
-
-        d, schema = _events_stream_dir(spark, sf_dir, "stream_enrich_")
-        nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-
-        def transform(s):
-            e = _event_ts(s)
-            return streaming_enrich(
-                e,
-                nation,
-                e.user_id % 25 == nation.n_nationkey,
-                window_dur="1 day",
-                watermark="0 seconds",
-            )
-
-        out = run_batch_as_stream(
-            spark,
-            d,
-            schema,
-            transform,
-            queryName="gate_streaming_enrich",
-            output_mode="complete",
-        )
-        return out.select(
-            "win_start",
-            "n_name",
-            "n",
-            F.round("sum_value", 9).alias("sum_value"),
-        )
-
-    q["streaming_enrich"] = q_streaming_enrich
-
-    def q_streaming_join(spark, sf_dir):
-        """Stream-stream event-time interval join (streaming/windows.py
-        streaming_interval_join): each user's view events matched to the
-        same user's click events landing within the next hour, both
-        streams watermarked so join state is evicted once event time
-        passes the horizon.  Two independent file-stream sources over
-        the same events directory; inner-join matches emit in append
-        mode with no downstream stateful operator.  The oracle is the
-        identical batch self-join."""
-        from openseize_spark.streaming.windows import streaming_interval_join
-
-        d, schema = _events_stream_dir(spark, sf_dir, "stream_join_")
-
-        def side(kind: str, prefix: str):
-            e = _event_ts(spark.readStream.schema(schema).parquet(d))
-            return e.filter(F.col("event_type") == kind).select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-
-        joined = streaming_interval_join(
-            side("view", "v"),
-            side("click", "c"),
-            left_key="v_user",
-            right_key="c_user",
-            left_ts="v_ts",
-            right_ts="c_ts",
-            max_delay="1 HOUR",
-            watermark="1 hour",
-        )
-        out = joined.select(
-            F.col("v_user").alias("user_id"),
-            F.col("v_id").alias("view_id"),
-            F.col("c_id").alias("click_id"),
-            (F.unix_micros("c_ts") - F.unix_micros("v_ts")).alias("gap_us"),
-        )
-        return drain_stream(
-            spark, out, "gate_streaming_join", available_now=True
-        )
-
-    q["streaming_join"] = q_streaming_join
-
-    def q_tfidf_topk(spark, sf_dir):
-        """Per-document top-5 TF-IDF keywords (llm/text.py tfidf_topk):
-        integer-quantized idf so the rank key is exact int64; the rank
-        window partitions on doc_id."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.tfidf_topk(docs, k=5)
-
-    q["tfidf_topk"] = q_tfidf_topk
-
-    def q_bm25_topk(spark, sf_dir):
-        """BM25 sparse retrieval (llm/text.py bm25_topk): three keyword
-        queries against the documents table, integer-unit scores, top-10
-        per query via a per-query rank window."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.bm25_topk(docs, queries=_BM25_QUERIES, k=10)
-
-    q["bm25_topk"] = q_bm25_topk
-
-    def q_rrf_fusion(spark, sf_dir):
-        """Hybrid-retrieval rank fusion (llm/text.py rrf_fusion): BM25
-        and integer-unit TF-IDF rankers merged by reciprocal-rank
-        fusion over the same three keyword queries — calibration-free
-        ranker merging, the standard hybrid-search combiner.
-        Registered after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.rrf_fusion(docs, queries=_BM25_QUERIES, k=10)
-
-    q["rrf_fusion"] = q_rrf_fusion
-
-    def q_storage_audit(spark, sf_dir):
-        """Corpus storage accounting: per (source, lang) document
-        counts, exact byte totals (octet_length of the UTF-8 text), and
-        mean bytes — the "how many TB does each subcorpus cost" audit
-        that precedes any mixture decision.  One map-side-combine
-        aggregation.  Registered after the round-5 window; round-6
-        window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return (
-            docs.filter(F.col("text").isNotNull())
-            .groupBy("source", "lang")
-            .agg(
-                F.count("*").cast("bigint").alias("n_docs"),
-                F.sum(F.octet_length("text")).cast("bigint").alias("total_bytes"),
-                F.max(F.octet_length("text")).cast("bigint").alias("max_bytes"),
-            )
-            .withColumn(
-                "avg_bytes",
-                F.round(
-                    F.col("total_bytes").cast("double")
-                    / F.col("n_docs").cast("double"),
-                    6,
-                ),
-            )
-        )
-
-    q["storage_audit"] = q_storage_audit
-
-    def q_dsir_sample(spark, sf_dir):
-        """DSIR importance resampling toward the zh sub-corpus
-        (llm/sampling.py dsir_sample): hashed-unigram importance ratios,
-        integer-unit scores, Gumbel-top-k selection of 100 docs."""
-        docs = _t(spark, sf_dir, "documents")
-        # score is one IEEE division over integer-exact operands —
-        # bit-identical to the oracle with no rounding needed
-        return sampling.dsir_sample(
-            docs, n_keep=100, target_col="lang", target_val="zh"
-        )
-
-    q["dsir_sample"] = q_dsir_sample
-
-    def q_countmin_words(spark, sf_dir):
-        """Count-Min sketch probe (llm/sketch.py): 4x256 salted-md5 grid
-        over the corpus token stream, point estimates (min over rows)
-        next to exact counts for a fixed probe list — the mergeable
-        approximate-counting primitive, deterministic given the hashes
-        so the grid replays exactly in SQL."""
-        from openseize_spark.llm import sketch
-
-        docs = _t(spark, sf_dir, "documents")
-        return sketch.countmin_estimate(
-            docs, probe_words=_CM_PROBES, depth=4, width=256
-        )
-
-    q["countmin_words"] = q_countmin_words
-
-    def q_decontaminate(spark, sf_dir):
-        """Exact test-set decontamination: a benchmark carved from the
-        corpus (doc_id % 7 == 0) is removed from the rest by a broadcast
-        anti join on the normalized-text md5 fingerprint."""
-        docs = _t(spark, sf_dir, "documents")
-        bench = docs.filter(F.col("doc_id") % 7 == 0)
-        corpus = docs.filter(F.col("doc_id") % 7 != 0)
-        return dedup.decontaminate(corpus, bench).select(
-            "doc_id", "lang", "source"
-        )
-
-    q["decontaminate"] = q_decontaminate
-
-    def q_length_quantiles(spark, sf_dir):
-        """Corpus length distribution per language: exact interpolated
-        quartiles/p90 of n_chars (engine-native sort-based percentile)."""
-        docs = _t(spark, sf_dir, "documents")
-        pct = F.percentile(F.col("n_chars"), F.array(*[F.lit(x) for x in (0.25, 0.5, 0.75, 0.9)]))
-        return docs.groupBy("lang").agg(
-            F.count("*").alias("n_docs"),
-            F.round(pct[0], 6).alias("p25"),
-            F.round(pct[1], 6).alias("p50"),
-            F.round(pct[2], 6).alias("p75"),
-            F.round(pct[3], 6).alias("p90"),
-        )
-
-    q["length_quantiles"] = q_length_quantiles
-
-    def q_edf_roundtrip(spark, sf_dir):
-        """EDF write -> split -> read identity (reference Writer
-        file_io/edf.py:591-777, splitter :780-808): the gate signal —
-        closed-form digital samples decoded at the shared write range —
-        is written to one irregular-rate EDF through the DataFrame sink
-        (sources/edf.py:417, single sequential writer as in the
-        reference, distributed upstream), split into two channel-subset
-        EDFs (sources/edf.py:288), and both splits are read back through
-        the distributed DataSource.  The writer's encode
-        d = rint((v - offset)/slope) recovers the closed-form digital
-        samples exactly (v IS slope*d + offset and the float round-trip
-        error sits orders of magnitude under the 0.5 rint threshold), as
-        does the splitter's decode->re-encode at the same header range,
-        so the union of the split reads must equal the closed form
-        bit-for-bit — the edf_decode oracle shape at the write range."""
-        import os
-        import tempfile
-        from functools import reduce
-
-        from openseize_spark.sources import edf as edfmod
-
-        outdir = _gate_tmp(spark, "rt")
-        os.makedirs(outdir, exist_ok=True)
-        base = os.path.join(outdir, "base.edf")
-        spr, nrec = _EDF_GATE_SPR, _EDF_GATE_NREC
-
-        parts = []
-        for ch, s in enumerate(spr):
-            parts.append(
-                spark.range(s * nrec).select(
-                    F.lit("rt").alias("recording_id"),
-                    F.lit(ch).cast("int").alias("channel"),
-                    F.col("id").alias("t"),
-                    (
-                        F.lit(_EDF_RT_SLOPE)
-                        * (((F.lit(1009) * F.col("id") + F.lit(7919 * ch)) % 65536)
-                           - 32768)
-                        + F.lit(_EDF_RT_OFFSET)
-                    ).alias("v"),
-                )
-            )
-        sig = reduce(DataFrame.unionAll, parts)
-        fs = {ch: float(s) for ch, s in enumerate(spr)}
-        edfmod.write_edf_from_df(
-            sig, base, fs, physical_range=(_EDF_RT_PMIN, _EDF_RT_PMAX)
-        )
-        mapping = {"even": [0, 2], "odd": [1, 3]}
-        edfmod.split_edf(base, mapping, outdir)
-        edfmod.register_edf_source(spark)
-        reads = []
-        for name, chans in mapping.items():
-            pdf = (
-                spark.read.format("edf")
-                .option("path", os.path.join(outdir, f"{name}.edf"))
-                .load()
-            )
-            # split files number their channels positionally; map back to
-            # the original channel ids for the union
-            remap = F.element_at(
-                F.array(*[F.lit(c) for c in chans]), F.col("channel") + 1
-            )
-            reads.append(pdf.select(remap.cast("int").alias("channel"), "t", "v"))
-        return reduce(DataFrame.unionAll, reads)
-
-    q["edf_roundtrip"] = q_edf_roundtrip
-
-    def q_streaming_sosfilt(spark, sf_dir):
-        """Carried-zi streaming IIR (SURVEY §2.10; reference chunked
-        state carry core/numerical.py:326-335): the sliced gate signal is
-        staged as three sequential t-range parquet files, streamed with
-        maxFilesPerTrigger=1 through applyInPandasWithState keyed on
-        (recording_id, channel) with the flattened (nsections, 2) zi as
-        GroupState (streaming/stateful.py:58), and flushed to a memory
-        sink.  State carry across micro-batch boundaries is exact, so
-        the stream must equal the batch sosfilt — the oracle is the same
-        recursive-CTE replay the batch query uses."""
-        from openseize_spark.streaming.stateful import streaming_sosfilt
-
-        sosd = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-        sig = _signal_sliced(spark, sf_dir).df.select(
-            "recording_id", "channel", "t", "v"
-        )
-        t, cuts = F.col("t"), (0, 700, 1500, IIR_SLICE)
-        conds = [(t >= cuts[i]) & (t < cuts[i + 1]) for i in range(3)]
-        stream = _stage_batches(spark, sf_dir, "sosfilt_", sig, conds)
-        out = streaming_sosfilt(stream, sosd.sos)
-        return drain_stream(spark, out, "gate_streaming_sosfilt").select(
-            "channel", "t", "v"
-        )
-
-    q["streaming_sosfilt"] = q_streaming_sosfilt
-
-    def q_streaming_cusum(spark, sf_dir):
-        """Streaming CUSUM drift detection (streaming/stateful.py
-        streaming_cusum): per-user integer-cent CUSUM with carried int64
-        state across micro-batches — events staged as three sequential
-        ts-range files, maxFilesPerTrigger=1.  All-integer recurrence,
-        so the stream equals the batch replay exactly; the oracle is a
-        recursive-CTE replay of the same recurrence."""
-        from openseize_spark.streaming.stateful import streaming_cusum
-
-        e = (
-            _events(spark, sf_dir)
-            .filter(
-                F.col("user_id").isNotNull()
-                & F.col("value").isNotNull()
-                # a NULL ts satisfies none of the range conditions below
-                # and would be staged into no micro-batch — exclude it on
-                # both engines so the oracle can't see rows the stream
-                # never receives
-                & F.col("ts").isNotNull()
-            )
-            .select("user_id", "event_id", "ts", "value")
-        )
-        lo, hi = e.agg(F.min("ts"), F.max("ts")).collect()[0]
-        conds = _thirds(F.col("ts"), lo, (hi - lo) / 3)
-        stream = _stage_batches(spark, sf_dir, "cusum_", e, conds)
-        out = streaming_cusum(
-            stream, target_cents=10000, slack_cents=2000, h_cents=100000
-        )
-        return drain_stream(spark, out, "gate_streaming_cusum").select(
-            "user_id", "event_id", "s", "alarm"
-        )
-
-    q["streaming_cusum"] = q_streaming_cusum
-
-    def q_streaming_hll(spark, sf_dir):
-        """Streaming HyperLogLog distinct-user registers per event type
-        (streaming/stateful.streaming_hll) — the mergeable-sketch
-        family on the streaming surface: bounded 2^5-register state
-        per key, emitted as an exact-int64 summary after each of three
-        sequential ts-range micro-batch files.  Batch cuts are pure integer
-        microsecond arithmetic (span = (hi - lo) div 3) so the oracle
-        replays them; per-key batch_idx counts the batches THE KEY
-        appeared in (the oracle ranks its present prefixes).  The
-        float estimate is computed HERE from the streamed integers —
-        one multiply + one divide (+ the linear-counting ln branch),
-        the hll_estimate expression shape."""
-        from openseize_spark.llm.sketch import _hll_alpha
-        from openseize_spark.streaming.stateful import streaming_hll
-
-        b = 5
-        m = 1 << b
-        alpha = _hll_alpha(m)
-        e = (
-            _events(spark, sf_dir)
-            .filter(
-                F.col("user_id").isNotNull()
-                & F.col("ts").isNotNull()
-                & F.col("event_type").isNotNull()
-            )
-            .select(
-                "event_type", "user_id", F.unix_micros("ts").alias("_us")
-            )
-        )
-        lo, hi = e.agg(F.min("_us"), F.max("_us")).collect()[0]
-        conds = _thirds(F.col("_us"), lo, (hi - lo) // 3)
-        stream = _stage_batches(spark, sf_dir, "shll_", e, conds)
-        out = streaming_hll(stream, b=b)
-        res = drain_stream(spark, out, "gate_streaming_hll")
-        raw = F.lit(alpha * m * m * float(1 << 32)) / F.col("sum_units")
-        est = F.when(
-            (F.col("n_empty") > 0) & (raw <= 2.5 * m),
-            F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("n_empty")),
-        ).otherwise(raw)
-        return res.select(
-            "event_type",
-            "batch_idx",
-            "npresent",
-            "n_empty",
-            "sum_units",
-            F.round(est, 6).alias("est_distinct"),
-        )
-
-    q["streaming_hll"] = q_streaming_hll
-
-    def q_pipeline_chain(spark, sf_dir):
-        """Pipeline.append chaining (reference tools/pipeline.py:16-124):
-        decimate -> standardize -> FIR appended with kwargs bound and
-        exactly one unbound SignalFrame argument each; the composed
-        result is still a single lazy plan (each step a plan extension,
-        nothing executes until the action).  The oracle composes the
-        same three stages as nested CTEs over the signal CTE."""
-        from openseize_spark.plans.pipeline import Pipeline
-
-        pipe = Pipeline()
-        pipe.append(rel.slice_time, start=0, step=4)
-        pipe.append(op_stats.standardize)
-        pipe.append(op_fir.apply_fir_sql, spec=_FIR_SPEC, mode="same")
-        sf = pipe(_signal(spark, sf_dir))
-        return sf.df.select("channel", "t", F.round("v", 9).alias("v"))
-
-    q["pipeline_chain"] = q_pipeline_chain
-
-    def q_annotations_mask(spark, sf_dir):
-        """Annotations ABC end-to-end (reference file_io/annotations.py:
-        42-127 Pinnacle reader, bases.py:364-395 label filter,
-        annotations.py:130-181 as_mask): a deterministic Pinnacle
-        tab-CSV fixture (6 preamble rows + header) is written, read back
-        through read_pinnacle with a label filter, and turned into a
-        sample mask over the gate signal via the broadcast interval join
-        with dense t re-indexing.  The fixture's times/durations are
-        pure integers, so the round(time*fs) interval bounds are exact
-        and the oracle replays them as literal VALUES."""
-        import os
-        import tempfile
-
-        from openseize_spark.sources import annotations as ann
-
-        path = _gate_tmp(spark, "pinnacle") + ".csv"
-        ann.write_pinnacle_fixture(path, _ANN_GATE_FIXTURE)
-        a = ann.read_pinnacle(
-            spark, path, labels=["seizure", "artifact"], recording_id="r0"
-        )
-        sf = rel.mask_from_annotations(_signal(spark, sf_dir), a)
-        return sf.df.select("channel", "t", "v")
-
-    q["annotations_mask"] = q_annotations_mask
-
-    def q_streaming_policies(spark, sf_dir):
-        """Drop-partial vs pad-to-complete (SURVEY §2.10): the reference
-        welch drops a trailing partial segment while stft 'padded'
-        zero-fills it; the streaming analog derives BOTH policies from
-        ONE sliding-window aggregation as count filters — cnt == nfft is
-        the drop policy, cnt > nfft - stride keeps the zero-padded tail
-        (zero padding is a no-op for sums).  The gate signal (dyadic v,
-        so window sums are engine-exact) is timestamped at fs=100
-        (10 ms/sample), streamed through a watermarked 640 ms / 320 ms
-        sliding count+sum, and returned as the padded-policy window set
-        with an is_complete flag; the oracle replays the overlapping
-        segmentation by exploding each sample into its two windows."""
-        import os
-        import shutil
-        import tempfile
-
-        sig = rel.slice_time(_signal(spark, sf_dir), start=0, stop=2000).df.select(
-            "recording_id", "channel", "t", "v"
-        )
-        d = _gate_tmp(
-            spark, "pol_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
-        sig.write.parquet(d)
-
-        from openseize_spark.streaming.windows import run_batch_as_stream
-
-        def transform(src):
-            e = src.withColumn("ts", F.timestamp_micros(F.col("t") * 10_000))
-            return (
-                e.withWatermark("ts", "10 seconds")
-                .groupBy(
-                    F.window("ts", "640 milliseconds", "320 milliseconds").alias(
-                        "win"
-                    ),
-                    "channel",
-                )
-                .agg(
-                    F.count("*").alias("cnt"),
-                    F.sum("v").alias("seg_sum"),
-                )
-            )
-
-        out = run_batch_as_stream(
-            spark,
-            d,
-            sig.schema,
-            transform,
-            queryName="gate_streaming_policies",
-            output_mode="complete",
-        )
-        stride_us = 320_000
-        return (
-            out.withColumn(
-                "seg",
-                (F.unix_micros(F.col("win.start")) / stride_us).cast("bigint"),
-            )
-            .filter(F.col("cnt") > 32)
-            .select(
-                "channel",
-                "seg",
-                "cnt",
-                "seg_sum",
-                (F.col("cnt") == 64).alias("is_complete"),
-            )
-        )
-
-    q["streaming_policies"] = q_streaming_policies
-
-    def q_streaming_dedup(spark, sf_dir):
-        """Streaming exact dedup (streaming/dedup.py:21):
-        dropDuplicatesWithinWatermark over the batch operator's
-        normalized-text md5 fingerprint, state bounded by the watermark
-        horizon.  Documents get a synthetic event time (1 s per doc_id)
-        and stream through the dedup; the result projects ONLY the
-        fingerprint — which duplicate row survives is batch-order
-        dependent, but the distinct fingerprint set is deterministic and
-        equals the batch SELECT DISTINCT."""
-        import os
-        import shutil
-        import tempfile
-
-        from openseize_spark.streaming.dedup import streaming_exact_dedup
-
-        docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        # one day past the epoch: a ts equal to the initial watermark
-        # value (epoch 0) is classified late and silently dropped
-        staged = docs.select(
-            "doc_id",
-            "text",
-            F.timestamp_micros((F.col("doc_id") + 86_400) * 1_000_000).alias(
-                "ts"
-            ),
-        )
-        d = _gate_tmp(
-            spark, "dedup_" + os.path.basename(os.path.normpath(sf_dir))
-        )
-        shutil.rmtree(d, ignore_errors=True)
-        staged.write.parquet(d)
-
-        stream = spark.readStream.schema(staged.schema).parquet(d)
-        out = streaming_exact_dedup(stream, watermark="30 days")
-        return drain_stream(spark, out, "gate_streaming_dedup").select(
-            F.md5(dedup.normalize_text(F.col("text"))).alias("fp")
-        )
-
-    q["streaming_dedup"] = q_streaming_dedup
-
-    def q_decontaminate_ngram(spark, sf_dir):
-        """GPT-3-style n-gram decontamination (llm/dedup.py
-        ngram_decontaminate): the benchmark carve (doc_id % 7 == 0)
-        contributes its distinct normalized word 8-gram fingerprints
-        (broadcast); any remaining document sharing one is dropped.
-        Catches partial containment the exact-fingerprint
-        `decontaminate` misses.  Registered after the round-5 window
-        (local evidence this round); round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        bench = docs.filter(F.col("doc_id") % 7 == 0)
-        corpus = docs.filter(F.col("doc_id") % 7 != 0)
-        return dedup.ngram_decontaminate(corpus, bench, n=8).select(
-            "doc_id", "lang", "source"
-        )
-
-    q["decontaminate_ngram"] = q_decontaminate_ngram
-
-    def q_shard_assign(spark, sf_dir):
-        """Training-shard assignment (llm/sampling.py shard_assign):
-        hash-shuffled corpus cut into 100-row shards, returned as the
-        per-shard summary (all-integer).  Registered after the round-5
-        window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        s = sampling.shard_assign(docs, rows_per_shard=100)
-        return s.groupBy("shard_id").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
-
-    q["shard_assign"] = q_shard_assign
-
-    def q_quality_prune(spark, sf_dir):
-        """FineWeb-style per-language quality pruning (llm/text.py
-        quality_prune): keep the top 1/5 of documents per lang by
-        composite quality, rational keep fraction so the cut is integer
-        arithmetic.  Registered after the round-5 window; round-6
-        window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.quality_prune(docs, keep_num=1, keep_den=5).select(
-            "doc_id", "lang", "quality"
-        )
-
-    q["quality_prune"] = q_quality_prune
-
-    def q_token_budget_subset(spark, sf_dir):
-        """Deterministic 8000-token corpus slice (llm/sampling.py
-        token_budget_subset): documents in hash-shuffled order while the
-        running token total stays under budget.  Registered after the
-        round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        toks = docs.select(
-            "doc_id", llm_text.token_count(F.col("text")).alias("n_tokens")
-        )
-        return sampling.token_budget_subset(toks, budget=8000).select(
-            "doc_id", "n_tokens", "tok_offset"
-        )
-
-    q["token_budget_subset"] = q_token_budget_subset
-
-    def q_random_projection(spark, sf_dir):
-        """Sign-matrix random projection 64 -> 16 (llm/similarity.py
-        random_projection): literal-inlined portable sign matrix, pure
-        per-row codegen fold, serial-order sum replayed by the oracle.
-        Registered after the round-5 window; round-6 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        return similarity.random_projection(emb, out_dim=16, dim=64)
-
-    q["random_projection"] = q_random_projection
-
-    def q_chunk_dedup(spark, sf_dir):
-        """CCNet-style cross-document span dedup (llm/dedup.py
-        chunk_dedup): tumbling 10-word chunks, chunks appearing in >1
-        distinct documents dropped corpus-wide, documents reassembled
-        from survivors in order.  Registered after the round-5 window;
-        round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.chunk_dedup(docs, chunk_words=10, max_docs=1)
-
-    q["chunk_dedup"] = q_chunk_dedup
-
-    def q_unigram_logprob(spark, sf_dir):
-        """CCNet-style perplexity-proxy quality score (llm/text.py
-        unigram_logprob): corpus-derived unigram LM, per-doc mean
-        negative logprob, per-word logprob quantized to integer 1e-9
-        units on both engines so the weighted sum is exact int64.
-        Registered after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.unigram_logprob(docs)
-
-    q["unigram_logprob"] = q_unigram_logprob
-
-    def q_bigram_logprob(spark, sf_dir):
-        """Laplace-smoothed bigram LM quality score (llm/text.py
-        bigram_logprob): adjacent-pair logprobs from the corpus bigram
-        table, quantized to integer 1e-9 units so the weighted sum is
-        exact int64 — the step from CCNet's unigram proxy toward the
-        KenLM perplexity filter.  Registered after the round-5 window;
-        round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.bigram_logprob(docs)
-
-    q["bigram_logprob"] = q_bigram_logprob
-
-    def q_tfidf_cosine_pairs(spark, sf_dir):
-        """Sparse TF-IDF cosine all-pairs similarity (llm/text.py
-        tfidf_cosine_pairs): posting-list self-join over df-pruned rare
-        terms, integer-unit weights, IEEE-exact cosine.  The lexical
-        near-dup complement to MinHash banding.  Registered after the
-        round-5 window; driver-green since round 6.
-
-        Round-11 plan change (r10 verdict order #2): the registered
-        call now passes an absolute df cap — the sf1 scaling bench
-        measured the purely-relative df cut at exponent 1.58 (candidate
-        pairs grow ~N^2 once 5%*N outruns any fixed posting bound), and
-        the absolute cap bounds per-term fan-out at C(cap,2) regardless
-        of corpus size.  The cap VALUE is 512, not the ordered 256,
-        via the order's own escape hatch ("if recall is poor at
-        realistic df distributions, raise the cap"): the Heaps-law
-        recall study (tools/heaps_recall.py, order #4) measured
-        near-dup-pair recall at N=50k of 94.6% under cap 256 but 99.8%
-        under cap 512 at only 1.4x the cost (COVERAGE.md has the full
-        frontier table).  At every gate scale 5%*N <= 250 < 512, so
-        the cap is INERT there: capped and uncapped outputs are
-        bit-identical and the oracle hash cannot move (proved by a
-        capped-vs-uncapped DuckDB diff + tools/plan_neutrality.py at
-        sf0.001/sf0.01/sf0.1; named re-gate slot consumed in the same
-        commit).  The uncapped arm stays available as the explicit
-        opt-in ``llm_text.tfidf_cosine_pairs(docs, ...,
-        max_df_abs=None)``; the registered ``tfidf_cosine_capped``
-        twin keeps the tighter 256 cap as the max-scale arm."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.tfidf_cosine_pairs(
-            docs, threshold=0.3, max_df_pct=5, max_df_abs=512
-        )
-
-    q["tfidf_cosine_pairs"] = q_tfidf_cosine_pairs
-
-    def q_doc_chunks(spark, sf_dir):
-        """RAG/embedding chunking (llm/text.py doc_chunks): overlapping
-        64-word windows on a 48-word stride with the final chunk pinned
-        to the document tail — zero-shuffle, pure codegen explode.
-        Registered after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.doc_chunks(docs, chunk_words=64, stride=48)
-
-    q["doc_chunks"] = q_doc_chunks
-
-    def q_jsonl_roundtrip(spark, sf_dir):
-        """JSONL sink -> source identity: the documents table written as
-        newline-delimited JSON (the interchange format most corpus
-        pipelines ingest) and read back with an explicit schema — no
-        inference pass, which at 100 TB would mean a second full scan.
-        The write shuffles nothing (per-partition files); unicode and
-        embedded newlines survive via JSON string escaping.  The oracle
-        is the original table, so the gate proves a lossless
-        round-trip.  Registered after the round-5 window; round-6
-        window material."""
-        import os
-
-        import re
-
-        docs = _t(spark, sf_dir, "documents")
-        tag = re.sub(r"\W", "_", sf_dir.rstrip("/").split("/")[-1])
-        d = _gate_tmp(spark, f"jsonl_rt_{tag}")
-        marker = os.path.join(d, "_SUCCESS")
-        if not os.path.exists(marker):
-            docs.write.mode("overwrite").json(d)
-        return spark.read.schema(docs.schema).json(d).select(
-            "doc_id", "text", "lang", "source", "n_chars"
-        )
-
-    q["jsonl_roundtrip"] = q_jsonl_roundtrip
-
-    def q_bpe_encode(spark, sf_dir):
-        """BPE tokenizer apply (llm/text.py bpe_apply): a fixed ordered
-        merge table — including cascaded merges that consume earlier
-        outputs ('t'+'h' -> 'th', then 'th'+'e' -> 'the') — encoded on
-        the distinct word table via chained codegen replaces, then
-        joined back for per-doc token counts.  Registered after the
-        round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.bpe_apply(docs, merges=_BPE_MERGES)
-
-    q["bpe_encode"] = q_bpe_encode
-
-    def q_semantic_dedup(spark, sf_dir):
-        """SemDeDup-style semantic dedup (llm/similarity.py
-        semantic_dedup): nearest-centroid cells (centroids = corpus
-        vec_ids 3..10, same fixture as ivf_topk), then inside each cell
-        drop every vector cosine-dominated (>= 0.2) by a lower id.
-        Registered after the round-5 window; round-6 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        centroids = emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 11)).select(
-            (F.col("vec_id") - 3).cast("int").alias("cell_id"),
-            F.col("embedding").alias("cvec"),
-        )
-        return similarity.semantic_dedup(emb, centroids, threshold=0.2)
-
-    q["semantic_dedup"] = q_semantic_dedup
-
-    def _pq_codebooks(emb):
-        # codebooks = subvectors of corpus vec_ids 3..10 (same fixture
-        # family as ivf_topk's centroids): 4 subspaces x 16 dims, 8 codes
-        subs = F.array(*[
-            F.struct(
-                F.lit(m).cast("int").alias("sub_id"),
-                F.slice(
-                    F.col("embedding").cast("array<double>"), m * 16 + 1, 16
-                ).alias("cvec"),
-            )
-            for m in range(4)
-        ])
-        return (
-            emb.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 11))
-            .select(
-                (F.col("vec_id") - 3).cast("int").alias("code"),
-                F.explode(subs).alias("_s"),
-            )
-            .select("_s.sub_id", "code", "_s.cvec")
-        )
-
-    def q_pq_encode(spark, sf_dir):
-        """Product-quantization encoding (llm/similarity.py pq_encode):
-        dim-64 corpus split into 4x16-dim subspaces, each subvector
-        replaced by its nearest of 8 sub-codewords — the compact-code
-        representation that makes a 100 TB ANN index fit in memory.
-        Registered after the round-5 window; round-6 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        return similarity.pq_encode(
-            corpus, _pq_codebooks(emb), n_sub=4, sub_dim=16
-        )
-
-    q["pq_encode"] = q_pq_encode
-
-    def q_pq_adc_topk(spark, sf_dir):
-        """Asymmetric-distance top-k over PQ codes (llm/similarity.py
-        pq_adc_topk): per-query (sub_id, code) lookup table quantized to
-        integer 1e-9 units so the 4-way distance sum is exact int64.
-        Registered after the round-5 window; round-6 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        queries_df = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        return similarity.pq_adc_topk(
-            corpus, queries_df, _pq_codebooks(emb), n_sub=4, sub_dim=16, k=5
-        )
-
-    q["pq_adc_topk"] = q_pq_adc_topk
-
-    def q_mixture_sample(spark, sf_dir):
-        """Training-mixture realization (llm/sampling.py mixture_sample):
-        down-sample the 20 sources to integer target weights 1..4 with
-        the limiting source kept whole; membership is the salted-hash
-        cut in exact DECIMAL/HUGEINT arithmetic.  Registered after the
-        round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        weights = {f"src{i}": 1 + i % 4 for i in range(20)}
-        return sampling.mixture_sample(docs, weights).select(
-            "doc_id", "source", "keep_rate"
-        )
-
-    q["mixture_sample"] = q_mixture_sample
-
-    def q_vocab_stats(spark, sf_dir):
-        """Corpus vocabulary / Zipf table (llm/text.py vocab_stats):
-        top-100 words with exact counts, rank, and cumulative coverage;
-        rank + running sum via the broadcast inequality self-join over
-        the top-k survivors, never a vocabulary-wide window.  Registered
-        after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.vocab_stats(docs, top_k=100)
-
-    q["vocab_stats"] = q_vocab_stats
-
-    def q_dup_span_detect(spark, sf_dir):
-        """Cross-document span-duplication diagnostic (llm/dedup.py
-        dup_span_detect): per-doc fraction of word 8-gram occurrences
-        shared with another document.  Registered after the round-5
-        window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.dup_span_detect(docs, n=8)
-
-    q["dup_span_detect"] = q_dup_span_detect
-
-    def q_source_overlap(spark, sf_dir):
-        """Pairwise cross-source gram-overlap matrix (llm/dedup.py
-        source_overlap): shared distinct word-8-gram fingerprints and
-        Jaccard per source pair — "which subcorpora copy from each
-        other".  Output bounded by C(n_sources, 2).  Registered after
-        the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.source_overlap(docs, n=8)
-
-    q["source_overlap"] = q_source_overlap
-
-    def q_bpe_pair_counts(spark, sf_dir):
-        """First BPE training iteration (llm/text.py bpe_pair_counts):
-        corpus-wide adjacent char-pair counts weighted by word
-        frequency, top-50 with rank via the broadcast self-join.
-        Registered after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.bpe_pair_counts(docs, top_k=50)
-
-    q["bpe_pair_counts"] = q_bpe_pair_counts
-
-    def q_source_divergence(spark, sf_dir):
-        """Per-source KL divergence from the corpus unigram distribution
-        (llm/text.py source_divergence): integer-quantized log ratios so
-        the weighted sums are exact int64.  Registered after the round-5
-        window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.source_divergence(docs)
-
-    q["source_divergence"] = q_source_divergence
-
-    def q_corpus_pipeline(spark, sf_dir):
-        """End-to-end corpus preparation composed from oracled pieces:
-        exact dedup -> quality filter (same quality_expr as the
-        standalone scorer) -> hash split assignment -> per-split stats.
-        Every stage is a driver-gated operator on its own; this query
-        pins the COMPOSITION (the common failure mode being column
-        collisions / re-computed nondeterminism between stages).
-        Registered after the round-5 window; round-6 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        surv = dedup.exact_dedup(docs)
-        # bind_once: in a FILTER predicate codegen's subexpression
-        # elimination does not cover the repeated normalize chain
-        # (round-14: 1.93 s -> 0.62 s on this corpus at sf0.1)
-        filt = surv.filter(llm_text.quality_expr("text", bind_once=True) >= 0.5)
-        split = sampling.split_assign(
-            filt, {"train": 0.8, "val": 0.1, "test": 0.1}, seed="split"
-        )
-        return split.groupBy("split").agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-        )
-
-    q["corpus_pipeline"] = q_corpus_pipeline
-
-    def q_pq_refine_topk(spark, sf_dir):
-        """Two-stage retrieval (llm/similarity.py pq_refine_topk):
-        PQ/ADC shortlist of 20 then exact cosine re-rank to top-5 —
-        the standard recall-recovery pattern over a compressed index.
-        Registered after the round-5 window; round-6 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        queries_df = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        return similarity.pq_refine_topk(
-            corpus, queries_df, _pq_codebooks(emb),
-            n_sub=4, sub_dim=16, k=5, shortlist=20,
-        )
-
-    q["pq_refine_topk"] = q_pq_refine_topk
-
-    # ---- round 6: remaining TPC-H query shapes (Q7/Q8/Q9/Q10/Q13/Q17/
-    # Q19/Q22 adapted to this schema — no partsupp/phone/shipmode
-    # columns in the testdata, substitutions documented per query) and
-    # two further training-pipeline samplers.  All revenue/balance math
-    # accumulates in exact integer units (cf. q_top_revenue_supplier) so
-    # float summation order can never diverge between engines.
-
-    # lazy: building a Column needs an active SparkContext, and the
-    # driver may construct the queries() dict before it starts Spark
-    def _rev_units():
-        return F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("bigint")
-
-    def q_nation_volume(spark, sf_dir):
-        """TPC-H Q7 shape: shipping volume between supplier-nation and
-        customer-nation pairs per ship year (all cross-nation pairs —
-        the classic query's two-nation filter is a special case).  Two
-        broadcast nation joins (25 rows each); the lineitem->orders->
-        customer chain shuffles on its keys once; revenue in exact
-        integer 1e-4 units."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        s = _t(spark, sf_dir, "supplier")
-        n = _t(spark, sf_dir, "nation")
-        n1 = n.select(
-            F.col("n_nationkey").alias("sk"), F.col("n_name").alias("supp_nation")
-        )
-        n2 = n.select(
-            F.col("n_nationkey").alias("ck"), F.col("n_name").alias("cust_nation")
-        )
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .join(s, li.l_suppkey == s.s_suppkey)
-            .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sk"))
-            .join(F.broadcast(n2), F.col("c_nationkey") == F.col("ck"))
-            .filter(F.col("supp_nation") != F.col("cust_nation"))
-            .groupBy(
-                "supp_nation",
-                "cust_nation",
-                F.year("l_shipdate").cast("bigint").alias("l_year"),
-            )
-            .agg(
-                F.sum(_rev_units()).cast("bigint").alias("rev_units"),
-                F.count("*").cast("bigint").alias("n_items"),
-            )
-        )
-
-    q["nation_volume"] = q_nation_volume
-
-    def q_market_share(spark, sf_dir):
-        """TPC-H Q8 shape: the share of one supplier nation (nationkey
-        0) in the revenue delivered to customers of one region
-        (regionkey 0), per order year.  Conditional aggregation over
-        the 5-way join; the share divides two exact int64 unit sums, so
-        the 9-digit round is deterministic."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        s = _t(spark, sf_dir, "supplier")
-        n = _t(spark, sf_dir, "nation")
-        j = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .join(
-                F.broadcast(n.filter(F.col("n_regionkey") == 0)),
-                F.col("c_nationkey") == F.col("n_nationkey"),
-            )
-            .join(s, li.l_suppkey == s.s_suppkey)
-        )
-        return (
-            j.groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
-            .agg(
-                F.sum(F.when(F.col("s_nationkey") == 0, _rev_units()).otherwise(0))
-                .cast("bigint")
-                .alias("nation_units"),
-                F.sum(_rev_units()).cast("bigint").alias("total_units"),
-            )
-            .withColumn(
-                "mkt_share",
-                F.round(
-                    F.col("nation_units").cast("double")
-                    / F.col("total_units").cast("double"),
-                    9,
-                ),
-            )
-        )
-
-    q["market_share"] = q_market_share
-
-    def q_profit_by_nation(spark, sf_dir):
-        """TPC-H Q9 shape: profit per supplier nation and order year.
-        No partsupp table in the testdata, so supply cost is modeled as
-        10% of p_retailprice x quantity — the substitution keeps the
-        join DAG identical (lineitem ⋈ part ⋈ supplier ⋈ nation ⋈
-        orders) and the arithmetic exact: quantity is integer-valued,
-        retailprice has 2 decimals, so cost x 1000 is an exact int64
-        at the same 1e-4 scale as revenue."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        s = _t(spark, sf_dir, "supplier")
-        p = _t(spark, sf_dir, "part")
-        n = _t(spark, sf_dir, "nation")
-        cost_units = F.round(
-            F.col("l_quantity") * F.col("p_retailprice") * 1000
-        ).cast("bigint")
-        return (
-            li.join(p, li.l_partkey == p.p_partkey)
-            .join(s, li.l_suppkey == s.s_suppkey)
-            .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-            .join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy(
-                F.col("n_name").alias("nation"),
-                F.year("o_orderdate").cast("bigint").alias("o_year"),
-            )
-            .agg(F.sum(_rev_units() - cost_units).cast("bigint").alias("profit_units"))
-        )
-
-    q["profit_by_nation"] = q_profit_by_nation
-
-    def q_returned_customers(spark, sf_dir):
-        """TPC-H Q10 shape: top 20 customers by revenue lost to returns
-        (l_returnflag = 'R') in one quarter.  The global top-k is
-        orderBy+limit — Spark's TakeOrdered, a per-partition heap then
-        a driver merge of 20-row heads, never a single-partition window
-        — with the exact integer revenue and the unique custkey as tie
-        break so the cut is deterministic."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        n = _t(spark, sf_dir, "nation")
-        j = (
-            li.filter(F.col("l_returnflag") == "R")
-            .join(
-                o.filter(
-                    (F.col("o_orderdate") >= F.lit("1995-01-01"))
-                    & (F.col("o_orderdate") < F.lit("1995-04-01"))
-                ),
-                li.l_orderkey == o.o_orderkey,
-            )
-            .join(c, o.o_custkey == c.c_custkey)
-            .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-        )
-        return (
-            j.groupBy("c_custkey", "c_name", "n_name")
-            .agg(F.sum(_rev_units()).cast("bigint").alias("rev_units"))
-            .orderBy(F.col("rev_units").desc(), F.col("c_custkey").asc())
-            .limit(20)
-        )
-
-    q["returned_customers"] = q_returned_customers
-
-    def q_order_count_dist(spark, sf_dir):
-        """TPC-H Q13 shape: the distribution of orders-per-customer,
-        including zero-order customers via the left outer join (the
-        part inner joins cannot express).  Two aggregations: per
-        customer (shuffle on custkey), then the tiny count-of-counts."""
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        per_cust = (
-            c.join(o, c.c_custkey == o.o_custkey, "left")
-            .groupBy("c_custkey")
-            .agg(F.count("o_orderkey").cast("bigint").alias("c_count"))
-        )
-        return per_cust.groupBy("c_count").agg(
-            F.count("*").cast("bigint").alias("custdist")
-        )
-
-    q["order_count_dist"] = q_order_count_dist
-
-    def q_small_qty_revenue(spark, sf_dir):
-        """TPC-H Q17 shape: revenue from lineitems whose quantity is
-        below half their part's average quantity.  The correlated
-        scalar subquery becomes a per-part aggregate re-joined to
-        lineitem (AQE broadcasts it when small); the predicate is
-        rewritten integer-exact as qty * 2 * cnt < sum_qty — quantities
-        are integer-valued, so no float-division boundary exists for
-        engines to disagree on."""
-        li = _t(spark, sf_dir, "lineitem")
-        pa = li.groupBy(F.col("l_partkey").alias("pk")).agg(
-            F.sum("l_quantity").cast("bigint").alias("sumq"),
-            F.count("*").cast("bigint").alias("cnt"),
-        )
-        j = li.join(pa, li.l_partkey == F.col("pk")).filter(
-            F.col("l_quantity") * 2 * F.col("cnt") < F.col("sumq")
-        )
-        return j.agg(
-            F.sum(_rev_units()).cast("bigint").alias("rev_units"),
-            F.count("*").cast("bigint").alias("n_items"),
-            F.round(F.sum(_rev_units()) / 70000.0, 9).alias("avg_yearly"),
-        )
-
-    q["small_qty_revenue"] = q_small_qty_revenue
-
-    def q_disjunctive_revenue(spark, sf_dir):
-        """TPC-H Q19 shape: revenue under three OR'd brand/size/
-        quantity conjunctions — the canonical disjunctive-pushdown
-        plan: Catalyst extracts the common l_quantity bounds and the
-        join key predicate below the join, then evaluates the residual
-        disjunction post-join.  Single-row exact-integer output."""
-        li = _t(spark, sf_dir, "lineitem")
-        p = _t(spark, sf_dir, "part")
-        j = li.join(p, li.l_partkey == p.p_partkey)
-        arm1 = (
-            (F.col("p_brand") == "Brand#12")
-            & (F.col("p_size").between(1, 15))
-            & (F.col("l_quantity").between(1, 11))
-        )
-        arm2 = (
-            (F.col("p_brand") == "Brand#23")
-            & (F.col("p_size").between(1, 25))
-            & (F.col("l_quantity").between(10, 20))
-        )
-        arm3 = (
-            (F.col("p_brand") == "Brand#34")
-            & (F.col("p_size").between(1, 35))
-            & (F.col("l_quantity").between(20, 30))
-        )
-        return j.filter(arm1 | arm2 | arm3).agg(
-            F.sum(_rev_units()).cast("bigint").alias("rev_units"),
-            F.count("*").cast("bigint").alias("n_items"),
-        )
-
-    q["disjunctive_revenue"] = q_disjunctive_revenue
-
-    def q_idle_customers(spark, sf_dir):
-        """TPC-H Q22 shape: customers holding above-average positive
-        balances who never placed an order, counted per nation.  The
-        scalar AVG subquery becomes a broadcast one-row join with the
-        comparison rewritten integer-exact (bal_cents * n > sum_cents);
-        the NOT EXISTS is a left-anti join on custkey against the
-        urgent-priority order subset (every synthetic customer has SOME
-        order, so the classic all-orders anti join would be vacuous).
-        No phone column in the testdata, so nationkey stands in for the
-        phone-prefix grouping."""
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
-        cu = c.withColumn("bal_cents", cents)
-        stats = cu.filter(F.col("bal_cents") > 0).agg(
-            F.sum("bal_cents").alias("sum_cents"),
-            F.count("*").alias("n_pos"),
-        )
-        return (
-            cu.join(F.broadcast(stats))
-            .filter(F.col("bal_cents") * F.col("n_pos") > F.col("sum_cents"))
-            .join(
-                o.filter(F.col("o_orderpriority") == "1-URGENT"),
-                cu.c_custkey == o.o_custkey,
-                "left_anti",
-            )
-            .groupBy(F.col("c_nationkey").cast("bigint").alias("nationkey"))
-            .agg(
-                F.count("*").cast("bigint").alias("numcust"),
-                F.sum("bal_cents").cast("bigint").alias("totbal_cents"),
-            )
-        )
-
-    q["idle_customers"] = q_idle_customers
-
-    def q_bloom_decontaminate(spark, sf_dir):
-        """Sketch-based decontamination screen (llm/dedup.py
-        bloom_decontaminate): a 2^16-bit k=3 Bloom filter built from
-        the benchmark fingerprints (doc_id % 7 == 0, the same split as
-        the exact `decontaminate` gate) probed by the corpus — per
-        source, documents total vs flagged-as-possibly-contaminated.
-        False negatives are impossible by construction, so the flagged
-        subset is a safe prefilter for the exact confirmation join."""
-        docs = _t(spark, sf_dir, "documents")
-        bench = docs.filter(F.col("doc_id") % 7 == 0)
-        corpus = docs.filter(F.col("doc_id") % 7 != 0).select(
-            "doc_id", "source", "text"
-        )
-        flagged = dedup.bloom_decontaminate(corpus, bench)
-        return flagged.groupBy("source").agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum(F.col("bloom_hit").cast("bigint")).cast("bigint").alias(
-                "n_flagged"
-            ),
-        )
-
-    q["bloom_decontaminate"] = q_bloom_decontaminate
-
-    def q_group_reservoir(spark, sf_dir):
-        """Deterministic per-stratum reservoir (llm/sampling.py
-        group_reservoir): the 3 smallest-salted-hash docs per (lang,
-        source) cell — the reproducible eval-set carve-out.  One
-        shuffle on the stratum key; WindowGroupLimit caps each
-        partition at k rows before the filter."""
-        docs = _t(spark, sf_dir, "documents")
-        return sampling.group_reservoir(
-            docs, ["lang", "source"], k=3, key_col="doc_id", seed="res6"
-        ).select("doc_id", "lang", "source", "reservoir_rank")
-
-    q["group_reservoir"] = q_group_reservoir
-
-    def q_hard_negatives(spark, sf_dir):
-        """Contrastive hard-negative mining (llm/similarity.py
-        hard_negatives): per query vector, the 5 most-similar corpus
-        vectors with a DIFFERENT label — the broadcast brute-force scan
-        with the label-mismatch predicate below the cosine fold.  Same
-        q/corpus split convention as knn_cosine."""
-        emb = _t(spark, sf_dir, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_vec"),
-            F.col("label").alias("q_label"),
-        )
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        return similarity.hard_negatives(corpus, queries_df, k=5)
-
-    q["hard_negatives"] = q_hard_negatives
-
-    def q_quantize_int8(spark, sf_dir):
-        """Per-vector symmetric int8 quantization audit
-        (llm/similarity.py quantize_int8): scale, exact-integer L1
-        mass, saturated-lane count, and max reconstruction error for
-        every embedding — scalar outputs so the oracle pins each lane
-        without array serialization.  Zero-shuffle codegen scan."""
-        emb = _t(spark, sf_dir, "embeddings")
-        return similarity.quantize_int8(emb, carry_cols=("label",))
-
-    q["quantize_int8"] = q_quantize_int8
-
-    def q_hll_distinct(spark, sf_dir):
-        """HyperLogLog cardinality estimate vs exact distinct
-        (llm/sketch.py hll_estimate): 32 salted-md5 registers over
-        events.user_id — a mergeable 2^b-row partial aggregate standing
-        in for the full distinct shuffle at 100 TB.  Deterministic
-        register placement makes the sketch itself gate-checkable
-        (unlike approx_count_distinct's private hash); the one-row
-        output carries the exact-int64 register sum beside the float
-        estimate and its relative error."""
-        from openseize_spark.llm import sketch
-
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        return sketch.hll_estimate(e, "user_id", b=5, seed="hll6")
-
-    q["hll_distinct"] = q_hll_distinct
-
-    def q_epoch_repeat(spark, sf_dir):
-        """Fractional dataset repetition (llm/sampling.py epoch_repeat):
-        src0 x2.5, src1 x1.25, src2 x0.5 (deterministic subsample),
-        everything else x1.0 — floor(e) full copies plus a salted-hash
-        draw for the fraction, each copy tagged with its epoch index.
-        Broadcast rate table + codegen sequence/explode; the corpus
-        never shuffles."""
-        docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-        return sampling.epoch_repeat(
-            docs, {"src0": 2.5, "src1": 1.25, "src2": 0.5}, seed="ep6"
-        )
-
-    q["epoch_repeat"] = q_epoch_repeat
-
-    def q_mixture_pipeline(spark, sf_dir):
-        """Composed round-6 mixture realization: Bloom decontamination
-        screen (drop every possible benchmark member — sound because the
-        filter has no false negatives) -> fractional epoch repetition ->
-        per-source mixture stats.  Pins the cross-operator composition
-        (column collisions, re-computed nondeterminism between stages)
-        the same way corpus_pipeline does for the round-4 stages."""
-        docs = _t(spark, sf_dir, "documents")
-        bench = docs.filter(F.col("doc_id") % 7 == 0)
-        corpus = docs.filter(F.col("doc_id") % 7 != 0).select(
-            "doc_id", "source", "text"
-        )
-        screened = (
-            dedup.bloom_decontaminate(corpus, bench)
-            .filter(~F.col("bloom_hit"))
-            .select("doc_id", "source")
-        )
-        rep = sampling.epoch_repeat(
-            screened, {"src0": 2.0, "src1": 1.5, "src2": 0.25}, seed="mix6"
-        )
-        return rep.groupBy("source").agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
-            F.max("epoch").cast("bigint").alias("max_epoch"),
-        )
-
-    q["mixture_pipeline"] = q_mixture_pipeline
-
-    def q_ohlc_bars(spark, sf_dir):
-        """Per-type hourly OHLC bars over the event stream — the
-        time-series downsampling shape (financial bars, metrics
-        rollups).  Open/close are min_by/max_by on the (ts, event_id)
-        compound key so duplicate timestamps cannot make first/last
-        nondeterministic; high/low/volume ride the same one-pass
-        map-side-combine aggregation.  One shuffle on the bounded
-        (type, hour) key."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        key = F.struct(F.col("ts"), F.col("event_id"))
-        return (
-            e.groupBy(
-                "event_type",
-                F.date_trunc("hour", "ts").alias("bar_start"),
-            )
-            .agg(
-                F.min_by("value", key).alias("open"),
-                F.max("value").alias("high"),
-                F.min("value").alias("low"),
-                F.max_by("value", key).alias("close"),
-                F.count("*").cast("bigint").alias("n_events"),
-                F.round(F.sum("value"), 9).alias("volume"),
-            )
-        )
-
-    q["ohlc_bars"] = q_ohlc_bars
-
-    def q_streaming_upsert(spark, sf_dir):
-        """foreachBatch MERGE-shape upsert (streaming/sinks.py): the
-        event stream arrives as 4 micro-batches (maxFilesPerTrigger=1
-        over a 4-file staged copy) and each batch's per-user aggregate
-        merges into a parquet target by full-outer join + atomic swap —
-        the streaming complement of the batch cdc_apply.  The merge
-        functions are commutative/associative (max, sum), so the final
-        target must equal the one-shot batch GROUP BY regardless of
-        batch boundaries — which is exactly what the oracle checks."""
-        import os
-
-        from openseize_spark.streaming import sinks
-
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        e = _events(spark, sf_dir)
-        src = _gate_tmp(spark, f"upsert_src_{tag}")
-        if not os.path.exists(os.path.join(src, "_SUCCESS")):
-            e.repartition(4, F.col("user_id")).write.mode("overwrite").parquet(
-                src
-            )
-        tgt = _gate_tmp(spark, f"upsert_tgt_{tag}")
-        out = sinks.upsert_user_state(
-            spark, src, e.schema, tgt, query_name=f"gate_upsert_{tag}"
-        )
-        return out.select(
-            "user_id",
-            "last_seen",
-            F.col("n_events").cast("bigint").alias("n_events"),
-            F.round("sum_value", 9).alias("sum_value"),
-        )
-
-    q["streaming_upsert"] = q_streaming_upsert
-
-    def q_unshipped_orders(spark, sf_dir):
-        """TPC-H Q3 shape: top-10 highest-revenue orders in one market
-        segment that were placed before the cutoff but (partly) shipped
-        after it.  Both date filters push into the scans before the
-        3-way join; the top-k is TakeOrdered on (exact integer revenue
-        desc, orderkey) — deterministic, never a global window.  This
-        completes the expressible TPC-H shape inventory (Q12/Q20 need
-        shipmode/partsupp columns the testdata lacks)."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        cut = "1995-06-01"
-        j = (
-            c.filter(F.col("c_mktsegment") == "BUILDING")
-            .join(
-                o.filter(F.col("o_orderdate") < F.lit(cut)),
-                c.c_custkey == o.o_custkey,
-            )
-            .join(
-                li.filter(F.col("l_shipdate") > F.lit(cut)),
-                o.o_orderkey == li.l_orderkey,
-            )
-        )
-        return (
-            j.groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-            .agg(F.sum(_rev_units()).cast("bigint").alias("rev_units"))
-            .orderBy(F.col("rev_units").desc(), F.col("l_orderkey").asc())
-            .limit(10)
-        )
-
-    q["unshipped_orders"] = q_unshipped_orders
-
-    def q_sorted_neighborhood(spark, sf_dir):
-        """Sorted-neighborhood candidate pairs (llm/dedup.py
-        sorted_neighborhood_pairs): rows within rank distance 3 of each
-        other in normalized-prefix sort order — the third blocking
-        family beside MinHash-LSH banding and SimHash bit sampling.
-        Global rank via ordered prefix buckets + broadcast offsets (no
-        SinglePartition window); neighbors via rank-offset equi-joins."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.sorted_neighborhood_pairs(docs, window=4, key_len=12)
-
-    q["sorted_neighborhood"] = q_sorted_neighborhood
-
-    def q_ann_recall(spark, sf_dir):
-        """ANN index evaluation: recall@5 of the IVF index against the
-        exact brute-force cosine truth, per query and with both result
-        sets produced by the same operators the standalone gates check
-        (cell-probed ivf_topk vs cosine_topk).  The standard
-        accuracy-vs-cost harness every ANN deployment needs; a left
-        join on the (query, neighbor) key + one bounded aggregation."""
-        truth = q_knn_cosine(spark, sf_dir).select("q_id", "vec_id")
-        cand = q_ivf_topk(spark, sf_dir).select(
-            F.col("q_id").alias("_q2"), F.col("vec_id").alias("_v2")
-        )
-        j = truth.join(
-            cand,
-            (truth.q_id == F.col("_q2")) & (truth.vec_id == F.col("_v2")),
-            "left",
-        )
-        return j.groupBy("q_id").agg(
-            F.sum(F.col("_v2").isNotNull().cast("bigint"))
-            .cast("bigint")
-            .alias("hits"),
-            F.round(
-                F.sum(F.col("_v2").isNotNull().cast("bigint")) / 5.0, 9
-            ).alias("recall"),
-        )
-
-    q["ann_recall"] = q_ann_recall
-
-    def q_cluster_cohesion(spark, sf_dir):
-        """Near-dup cluster quality: per connected component, node and
-        verified-pair counts plus POOLED Jaccard cohesion
-        (sum intersections / sum unions over the component's verified
-        pairs).  Pooling aggregates exact int64 shingle counts, so the
-        metric is order-independent — a per-pair float mean would
-        depend on summation order.  Distinguishes tight duplicate
-        cliques from chains glued by borderline pairs."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        # two consumers: connected_components' in-call rounds fill the
-        # checkpoint and pair_m reads it inside the returned plan
-        dup = dedup.jaccard_verify(
-            docs, cand, k=5, threshold=0.8, with_counts=True
-        ).localCheckpoint(eager=False)
-        cc = dedup.connected_components(
-            dup.select("a", "b"), include_self_pairs=False
-        )
-        lbl = cc.select(F.col("id").alias("a"), F.col("component"))
-        pair_m = (
-            dup.join(lbl, on="a")
-            .groupBy("component")
-            .agg(
-                F.count("*").cast("bigint").alias("n_pairs"),
-                F.sum("inter").cast("bigint").alias("sum_inter"),
-                F.sum("union_sz").cast("bigint").alias("sum_union"),
-            )
-        )
-        node_m = cc.groupBy("component").agg(
-            F.count("*").cast("bigint").alias("n_nodes")
-        )
-        return node_m.join(pair_m, on="component").withColumn(
-            "cohesion",
-            F.round(F.col("sum_inter").cast("double") / F.col("sum_union"), 9),
-        )
-
-    q["cluster_cohesion"] = q_cluster_cohesion
-
-    def q_ewma_user_value(spark, sf_dir):
-        """Per-user exponentially-weighted moving average of event
-        values (alpha = 1/4, dyadic so the recursion constants are
-        exact in both engines): the metrics-smoothing recursion, run as
-        an ordered left fold over each user's history — the same
-        deterministic-sequential-fold contract the IIR oracles use,
-        replayed by DuckDB's list_reduce.  Bounded by the largest
-        single-user history (the per-key analog of the signal
-        operators' per-channel bound); one shuffle on user_id."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-        )
-        arr = F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "value"))
-        )
-        vals = F.transform(arr, lambda s: s["value"])
-        n = F.size(vals)
-        ewma = F.when(n == 1, F.element_at(vals, 1)).otherwise(
-            F.aggregate(
-                F.slice(vals, F.lit(2), n - 1),
-                F.element_at(vals, 1),
-                lambda acc, x: F.lit(0.25) * x + F.lit(0.75) * acc,
-            )
-        )
-        return (
-            e.groupBy("user_id")
-            .agg(
-                F.count("*").cast("bigint").alias("n_events"),
-                F.round(ewma, 9).alias("ewma"),
-            )
-        )
-
-    q["ewma_user_value"] = q_ewma_user_value
-
-    def q_hll_by_type(spark, sf_dir):
-        """Per-group HyperLogLog (llm/sketch.py hll_estimate_by):
-        distinct-user estimates for every event_type in ONE pass — the
-        form the sketch earns its keep in at scale: the shuffle carries
-        at most 2^b register rows per (group, partition) instead of the
-        per-group distinct sets.  Exact counts ride alongside."""
-        from openseize_spark.llm import sketch
-
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        return sketch.hll_estimate_by(e, "user_id", ["event_type"], b=5, seed="hb6")
-
-    q["hll_by_type"] = q_hll_by_type
-
-    def q_brand_cooccurrence(spark, sf_dir):
-        """Market-basket co-occurrence with lift: brand pairs appearing
-        in the same order, top-20 by support.  ONE order-keyed shuffle
-        total: the per-order distinct brand set aggregates via
-        collect_set (map-side partials; the set is bounded by the
-        per-order line count, never the corpus), and the quadratic pair
-        expansion happens IN-ROW over that bounded sorted array — no
-        self-join, so the distinct relation is never re-shuffled or
-        re-scanned.  The basket table is checkpointed eagerly (the
-        order-count action materializes it anyway) and feeds the brand
-        totals, the pair counts, and the N in lift.  Lift divides exact
-        integer counts once (n_ab * N / (n_a * n_b)); top-k is
-        TakeOrdered with full-key tiebreak."""
-        li = _t(spark, sf_dir, "lineitem")
-        p = _t(spark, sf_dir, "part")
-        gs = (
-            li.join(p, li.l_partkey == p.p_partkey)
-            .select("l_orderkey", "p_brand")
-            .groupBy("l_orderkey")
-            .agg(F.array_sort(F.collect_set("p_brand")).alias("_bs"))
-            .localCheckpoint(eager=True)
-        )
-        n_orders = gs.count()
-        per_brand = (
-            gs.select(F.explode("_bs").alias("p_brand"))
-            .groupBy("p_brand")
-            .agg(F.count("*").alias("_nb"))
-        )
-        bs = F.col("_bs")
-        pair_arr = F.flatten(
-            F.transform(
-                bs,
-                lambda x, i: F.transform(
-                    F.slice(bs, i + F.lit(2), F.size(bs)),
-                    lambda y: F.struct(x.alias("brand_a"), y.alias("brand_b")),
-                ),
-            )
-        )
-        pairs = (
-            gs.filter(F.size("_bs") >= 2)
-            .select(F.explode(pair_arr).alias("_p"))
-            .select("_p.brand_a", "_p.brand_b")
-            .groupBy("brand_a", "brand_b")
-            .agg(F.count("*").cast("bigint").alias("n_ab"))
-        )
-        na = per_brand.select(
-            F.col("p_brand").alias("brand_a"), F.col("_nb").alias("_na")
-        )
-        nb = per_brand.select(
-            F.col("p_brand").alias("brand_b"), F.col("_nb").alias("_nb2")
-        )
-        return (
-            pairs.join(F.broadcast(na), on="brand_a")
-            .join(F.broadcast(nb), on="brand_b")
-            .select(
-                "brand_a",
-                "brand_b",
-                "n_ab",
-                F.round(
-                    F.col("n_ab").cast("double")
-                    * F.lit(float(n_orders))
-                    / (F.col("_na").cast("double") * F.col("_nb2")),
-                    9,
-                ).alias("lift"),
-            )
-            .orderBy(F.col("n_ab").desc(), "brand_a", "brand_b")
-            .limit(20)
-        )
-
-    q["brand_cooccurrence"] = q_brand_cooccurrence
-
-    def q_er_pipeline(spark, sf_dir):
-        """Multi-blocking entity resolution: candidate pairs from all
-        THREE blocking families (MinHash-LSH banding ∪ SimHash
-        pigeonhole ∪ sorted-neighborhood) verified by exact shingle
-        Jaccard, clustered by connected components — the standard ER
-        recipe where each blocker covers near-dups the others miss
-        (shingle drift vs bit drift vs shared prefixes).  Union-ing
-        candidate GENERATORS is cheap (each is bounded); only the
-        union reaches the expensive verify."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        lsh = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True).select("a", "b")
-        sim = dedup.simhash_pairs(docs, max_hamming=6, portable=True).select("a", "b")
-        snm = dedup.sorted_neighborhood_pairs(docs, window=4, key_len=12).select(
-            "a", "b"
-        )
-        cand = lsh.union(sim).union(snm).distinct()
-        # The verify result has exactly ONE consumer here: the canonical
-        # edge build inside connected_components, which materializes via
-        # its own lazy localCheckpoint on the first in-call action (the
-        # returned component plan reads the final round's checkpoint,
-        # never the verify output, with include_self_pairs=False), so
-        # the verify output needs no materialization of its own.  The
-        # verify call checkpoints its candidates eagerly, once.
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        cc = dedup.connected_components(
-            dup.select("a", "b"), include_self_pairs=False
-        )
-        return cc.groupBy("component").agg(
-            F.count("*").cast("bigint").alias("n_nodes")
-        )
-
-    q["er_pipeline"] = q_er_pipeline
-
-    def q_late_line_priority(spark, sf_dir):
-        """TPC-H Q12 shape (adapted: the testdata has no l_shipmode, so
-        l_linestatus stands in for the mode grouping): for lines shipped
-        more than 30 days after the order date, count high-priority
-        (1-URGENT/2-HIGH) vs lower-priority orders per line status —
-        the join + dual conditional aggregation, one shuffle."""
-        li = _t(spark, sf_dir, "lineitem")
-        o = _t(spark, sf_dir, "orders")
-        hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .filter(F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), 30))
-            .groupBy("l_linestatus")
-            .agg(
-                F.sum(hi.cast("bigint")).cast("bigint").alias("high_line_count"),
-                F.sum((~hi).cast("bigint")).cast("bigint").alias("low_line_count"),
-            )
-        )
-
-    q["late_line_priority"] = q_late_line_priority
-
-    def q_excess_suppliers(spark, sf_dir):
-        """TPC-H Q20 shape (adapted: no partsupp/availqty in the
-        testdata, so the 'more than half the available quantity'
-        predicate becomes 'total 1995 shipped quantity of red-named
-        parts above a fixed threshold'): the nested semi-join chain —
-        parts by name prefix -> per-(supp, part) shipped quantity ->
-        qualifying suppliers -> supplier names.  Exact integer
-        quantities; both filters push below the joins."""
-        li = _t(spark, sf_dir, "lineitem")
-        p = _t(spark, sf_dir, "part")
-        s = _t(spark, sf_dir, "supplier")
-        n = _t(spark, sf_dir, "nation")
-        green = p.filter(F.col("p_name").contains("red")).select("p_partkey")
-        shipped = (
-            li.filter(
-                (F.col("l_shipdate") >= F.lit("1995-01-01"))
-                & (F.col("l_shipdate") < F.lit("1996-01-01"))
-            )
-            .join(green, li.l_partkey == green.p_partkey, "left_semi")
-            .groupBy("l_suppkey", "l_partkey")
-            .agg(F.sum("l_quantity").cast("bigint").alias("qty"))
-        )
-        qual = shipped.filter(F.col("qty") > 50).select("l_suppkey").distinct()
-        return (
-            s.join(qual, s.s_suppkey == qual.l_suppkey, "left_semi")
-            .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-            .select("s_suppkey", "s_name", "n_name")
-        )
-
-    q["excess_suppliers"] = q_excess_suppliers
-
-    def q_blocking_yield(spark, sf_dir):
-        """Blocking-strategy diagnostics: per candidate-generation
-        family (LSH banding / SimHash pigeonhole / sorted
-        neighborhood), the candidate count, how many candidates the
-        exact-Jaccard verify confirms, and the yield — the
-        precision-per-cost table an ER pipeline is tuned with.  The
-        expensive verify runs ONCE over the union; per-family counts
-        are semi-joins of each (bounded) candidate set against the
-        verified pairs."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        fams = {
-            "lsh": dedup.minhash_lsh_pairs(sigs, bands=8, portable=True).select(
-                "a", "b"
-            ),
-            "simhash": dedup.simhash_pairs(
-                docs, max_hamming=6, portable=True
-            ).select("a", "b"),
-            "snm": dedup.sorted_neighborhood_pairs(
-                docs, window=4, key_len=12
-            ).select("a", "b"),
-        }
-        tagged = None
-        for name, df in fams.items():
-            t = df.withColumn("family", F.lit(name))
-            tagged = t if tagged is None else tagged.union(t)
-        # two consumers: the verify's eager candidate checkpoint fills
-        # this one and the per-family join reads it in the returned plan
-        tagged = tagged.localCheckpoint(eager=False)
-        vp = dedup.jaccard_verify(
-            docs, tagged.select("a", "b").distinct(), k=5, threshold=0.8
-        ).select("a", "b", F.lit(1).alias("_v"))
-        return (
-            tagged.join(vp, on=["a", "b"], how="left")
-            .groupBy("family")
-            .agg(
-                F.count("*").cast("bigint").alias("n_candidates"),
-                F.sum(F.coalesce(F.col("_v"), F.lit(0)))
-                .cast("bigint")
-                .alias("n_verified"),
-            )
-            .withColumn(
-                "yield",
-                F.round(
-                    F.col("n_verified").cast("double") / F.col("n_candidates"), 9
-                ),
-            )
-        )
-
-    q["blocking_yield"] = q_blocking_yield
-
-    def q_position_attribution(spark, sf_dir):
-        """Position-based (U-shaped 40/20/40) multi-touch attribution:
-        views preceding a user's FIRST purchase share the conversion
-        credit — first and last touch 0.4 each, the middle splits 0.2
-        evenly (single touch takes 1.0; two touches 0.5/0.5).  The
-        credit is an exact rational of the touch count rounded once;
-        windows partition on user_id (bounded per-user history), and
-        the first-purchase table is a pre-aggregated broadcast."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        first_p = (
-            e.filter(F.col("event_type") == "purchase")
-            .groupBy("user_id")
-            .agg(F.min("ts").alias("_pts"))
-        )
-        views = e.filter(F.col("event_type") == "view").join(
-            F.broadcast(first_p), on="user_id"
-        ).filter(F.col("ts") < F.col("_pts"))
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        ranked = views.select(
-            "user_id",
-            F.col("event_id").alias("view_id"),
-            F.row_number().over(w).alias("pos"),
-            F.count("*").over(W.partitionBy("user_id")).alias("n_views"),
-        )
-        credit = (
-            F.when(F.col("n_views") == 1, F.lit(1.0))
-            .when(F.col("pos") == 1, F.when(F.col("n_views") == 2, 0.5).otherwise(0.4))
-            .when(
-                F.col("pos") == F.col("n_views"),
-                F.when(F.col("n_views") == 2, 0.5).otherwise(0.4),
-            )
-            .otherwise(F.lit(0.2) / (F.col("n_views") - 2))
-        )
-        return ranked.select(
-            "user_id",
-            "view_id",
-            F.col("pos").cast("bigint").alias("pos"),
-            F.col("n_views").cast("bigint").alias("n_views"),
-            F.round(credit, 9).alias("credit"),
-        )
-
-    q["position_attribution"] = q_position_attribution
-
-    def q_quota_apportion(spark, sf_dir):
-        """Hamilton largest-remainder apportionment of a 1000-doc
-        sampling budget across sources proportional to their corpus
-        counts — the exact-integer mixture-planning step (every seat
-        from `(n*B) div N` plus one for the largest remainders, so
-        seats always sum to B and no float can flip an allocation).
-        The remainder ranking runs as a broadcast inequality self-join
-        over the bounded source relation — no SinglePartition window.
-        The per-source counts checkpoint once: every downstream branch
-        (total, both self-join sides, base-seat sum) is a projection of
-        that tiny relation, and without the checkpoint each one re-runs
-        the full corpus scan + aggregate."""
-        B = 1000
-        docs = _t(spark, sf_dir, "documents")
-        counts = (
-            docs.groupBy("source")
-            .agg(F.count("*").alias("n_docs"))
-            .localCheckpoint(eager=False)
-        )
-        tot = counts.agg(F.sum("n_docs").alias("_N"))
-        base = (
-            counts.crossJoin(F.broadcast(tot))
-            .withColumn("base", F.expr(f"(n_docs * {B}) div _N").cast("bigint"))
-            .withColumn("rem", ((F.col("n_docs") * B) % F.col("_N")).cast("bigint"))
-        )
-        other = base.select(
-            F.col("source").alias("_s2"),
-            F.col("rem").alias("_r2"),
-        )
-        ranked = (
-            base.join(
-                F.broadcast(other),
-                (F.col("_r2") > F.col("rem"))
-                | ((F.col("_r2") == F.col("rem")) & (F.col("_s2") < F.col("source"))),
-                "left",
-            )
-            .groupBy("source", "n_docs", "base", "rem", "_N")
-            .agg(F.count("_s2").alias("_ahead"))
-        )
-        base_tot = ranked.agg(F.sum("base").alias("_bsum"))
-        return (
-            ranked.crossJoin(F.broadcast(base_tot))
-            .withColumn("_extra", F.lit(B) - F.col("_bsum"))
-            .withColumn(
-                "seats",
-                (
-                    F.col("base")
-                    + (F.col("_ahead") < F.col("_extra")).cast("bigint")
-                ).cast("bigint"),
-            )
-            .select(
-                "source",
-                F.col("n_docs").cast("bigint").alias("n_docs"),
-                "base",
-                "rem",
-                "seats",
-            )
-        )
-
-    q["quota_apportion"] = q_quota_apportion
-
-    def q_rfm_features(spark, sf_dir):
-        """Per-user RFM feature table (recency / frequency / monetary +
-        breadth) — the standard churn-model feature engineering pass:
-        one map-side-combined aggregation over events plus a broadcast
-        one-row corpus horizon; recency in exact integer microseconds,
-        monetary rounded once.  At 100 TB this is the shape feature
-        stores materialize nightly — no windows, one shuffle on the
-        user key."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        horizon = e.agg(F.max("ts").alias("_hz"))
-        per_user = e.groupBy("user_id").agg(
-            F.max("ts").alias("_last"),
-            F.count("*").cast("bigint").alias("frequency"),
-            F.round(F.sum("value"), 9).alias("monetary"),
-            F.countDistinct("event_type").cast("bigint").alias("n_types"),
-            F.countDistinct(F.to_date("ts")).cast("bigint").alias("active_days"),
-        )
-        return (
-            per_user.crossJoin(F.broadcast(horizon))
-            .withColumn(
-                "recency_us",
-                (
-                    F.unix_micros(F.col("_hz")) - F.unix_micros(F.col("_last"))
-                ).cast("bigint"),
-            )
-            .select(
-                "user_id", "recency_us", "frequency", "monetary",
-                "n_types", "active_days",
-            )
-        )
-
-    q["rfm_features"] = q_rfm_features
-
-    def q_user_value_ranks(spark, sf_dir):
-        """Distribution-position window functions not exercised
-        elsewhere — ntile, percent_rank, cume_dist, nth_value — per
-        user over the (value, event_id) total order.  Partitions are
-        per-user (bounded history), never per-type; percent_rank and
-        cume_dist are exact rationals of integer ranks so both engines
-        agree bit-for-bit."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        w = W.partitionBy("user_id").orderBy("value", "event_id")
-        wf = (
-            W.partitionBy("user_id")
-            .orderBy("value", "event_id")
-            .rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-        )
-        return e.select(
-            "user_id",
-            "event_id",
-            F.ntile(4).over(w).cast("bigint").alias("quartile"),
-            F.round(F.percent_rank().over(w), 9).alias("pct_rank"),
-            F.round(F.cume_dist().over(w), 9).alias("cume"),
-            F.round(F.nth_value("value", 2).over(wf), 9).alias("second_lowest"),
-        )
-
-    q["user_value_ranks"] = q_user_value_ranks
-
-    def q_hashed_features(spark, sf_dir):
-        """Feature-hashing document vectors (llm/text.py
-        hashed_doc_features): fixed 64-dim signed-bucket embeddings
-        with no vocabulary to build or broadcast — all-integer
-        invariants (occurrences, nnz, exact squared norm, parity-probe
-        dot) pin every bucket through the gate."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.hashed_doc_features(docs, dim=64, seed="fh6")
-
-    q["hashed_features"] = q_hashed_features
-
-    def q_value_hour_corr(spark, sf_dir):
-        """Pearson correlation between event value and hour-of-day per
-        event type, computed from EXACT integer moments (value in 1e-2
-        cents, hour 0-23): n, Sx, Sy, Sxy, Sxx, Syy accumulate as
-        int64 — order-invariant — and the closed form divides once
-        through IEEE sqrt.  The built-in corr() aggregates floats in
-        partition order and cannot be oracle-matched; this is the
-        same exact-moment discipline as value_trend's OLS."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-        )
-        x = F.round(F.col("value") * 100).cast("bigint")
-        y = F.hour("ts").cast("bigint")
-        m = e.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(x).cast("bigint").alias("sx"),
-            F.sum(y).cast("bigint").alias("sy"),
-            F.sum(x * y).cast("bigint").alias("sxy"),
-            F.sum(x * x).cast("bigint").alias("sxx"),
-            F.sum(y * y).cast("bigint").alias("syy"),
-        )
-        num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
-            "double"
-        )
-        den = F.sqrt(
-            (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
-        ) * F.sqrt(
-            (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
-        )
-        return m.select(
-            "event_type", "n", F.round(num / den, 9).alias("corr_vh")
-        )
-
-    q["value_hour_corr"] = q_value_hour_corr
-
-    def q_dow_type_chi2(spark, sf_dir):
-        """Chi-square contingency cells for event_type x day-of-week:
-        observed counts, expected = row_total * col_total / N, and the
-        per-cell (o-e)^2/e contribution — emitted PER CELL (35 rows)
-        rather than summed, so no order-dependent float total exists;
-        marginals ride broadcast joins on the bounded key sets."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        # 35-row grid, four consumers (marginals, total, output);
-        # checkpoint so the events scan + aggregate runs once
-        cells = e.groupBy(
-            "event_type", F.dayofweek("ts").cast("bigint").alias("dow")
-        ).agg(F.count("*").cast("bigint").alias("observed")).localCheckpoint(
-            eager=False
-        )
-        rows = cells.groupBy("event_type").agg(
-            F.sum("observed").cast("bigint").alias("_rt")
-        )
-        cols = cells.groupBy("dow").agg(
-            F.sum("observed").cast("bigint").alias("_ct")
-        )
-        tot = cells.agg(F.sum("observed").cast("bigint").alias("_N"))
-        exp = (
-            F.col("_rt").cast("double")
-            * F.col("_ct").cast("double")
-            / F.col("_N").cast("double")
-        )
-        j = (
-            cells.join(F.broadcast(rows), on="event_type")
-            .join(F.broadcast(cols), on="dow")
-            .crossJoin(F.broadcast(tot))
-            .withColumn("expected", F.round(exp, 9))
-        )
-        contrib = (
-            (F.col("observed").cast("double") - exp)
-            * (F.col("observed").cast("double") - exp)
-            / exp
-        )
-        return j.select(
-            "event_type", "dow", "observed", "expected",
-            F.round(contrib, 9).alias("chi2_contrib"),
-        )
-
-    q["dow_type_chi2"] = q_dow_type_chi2
-
-    def q_brand_top_parts(spark, sf_dir):
-        """Top-3 DISTINCT price tiers per brand with ties kept —
-        dense_rank ≤ k, the rank-with-ties semantics row_number top-k
-        queries (returned_customers, group_reservoir) deliberately
-        avoid.  Bounded per-brand partitions; Spark's WindowGroupLimit
-        caps partitions before the filter."""
-        p = _t(spark, sf_dir, "part")
-        dr = W.partitionBy("p_brand").orderBy(F.col("p_retailprice").desc())
-        return (
-            p.withColumn("price_tier", F.dense_rank().over(dr).cast("bigint"))
-            .filter(F.col("price_tier") <= 3)
-            .select("p_brand", "p_partkey", "p_retailprice", "price_tier")
-        )
-
-    q["brand_top_parts"] = q_brand_top_parts
-
-    def q_time_weighted_avg(spark, sf_dir):
-        """Per-user time-weighted average value — the correct mean for
-        irregularly-sampled series (each value holds until the next
-        event): weights are exact integer microsecond gaps from lead(),
-        value in integer cents, so the weighted sum is exact int64 and
-        one division closes it.  The trailing event carries no weight
-        (no holding interval), matching the standard TWA definition."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-        )
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        g = e.select(
-            "user_id",
-            F.round(F.col("value") * 100).cast("bigint").alias("_vc"),
-            (
-                F.unix_micros(F.lead("ts", 1).over(w))
-                - F.unix_micros(F.col("ts"))
-            ).cast("bigint").alias("_gap_us"),
-        ).filter(F.col("_gap_us").isNotNull())
-        return g.groupBy("user_id").agg(
-            F.count("*").cast("bigint").alias("n_intervals"),
-            F.sum("_gap_us").cast("bigint").alias("span_us"),
-            F.round(
-                F.sum(F.col("_vc") * F.col("_gap_us")).cast("double")
-                / F.sum("_gap_us").cast("double")
-                / 100.0,
-                9,
-            ).alias("twa_value"),
-        )
-
-    q["time_weighted_avg"] = q_time_weighted_avg
-
-    def q_holt_forecast(spark, sf_dir):
-        """Holt double-exponential smoothing per user (alpha = 1/4,
-        beta = 1/8, both dyadic): the COUPLED level/trend recursion the
-        single-state EWMA can't express, run as an ordered fold with a
-        struct accumulator — level' = a*x + (1-a)*(level+trend),
-        trend' = b*(level'-level) + (1-b)*trend, initialized level=x2,
-        trend=x2-x1, recursing from the 3rd sample.  The oracle replays the identical recursion as a
-        recursive CTE stepping all users in lockstep; identical IEEE
-        expression trees keep both engines bit-equal.  Emits the final
-        state and the 1-step forecast."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-        )
-        arr = F.array_sort(F.collect_list(F.struct("ts", "event_id", "value")))
-        vals = F.transform(arr, lambda s: s["value"])
-        x1 = F.element_at(vals, 1)
-        x2 = F.element_at(vals, 2)
-        init = F.struct(
-            x2.alias("level"), (x2 - x1).alias("trend")
-        )
-        def _step(acc, x):
-            level2 = (
-                F.lit(0.25) * x
-                + F.lit(0.75) * (acc["level"] + acc["trend"])
-            )
-            return F.struct(
-                level2.alias("level"),
-                (
-                    F.lit(0.125) * (level2 - acc["level"])
-                    + F.lit(0.875) * acc["trend"]
-                ).alias("trend"),
-            )
-        fin = F.aggregate(F.slice(vals, 3, F.size(vals) - 2), init, _step)
-        return (
-            e.groupBy("user_id")
-            .agg(
-                F.count("*").cast("bigint").alias("n_events"),
-                F.round(fin["level"], 9).alias("level"),
-                F.round(fin["trend"], 9).alias("trend"),
-                F.round(fin["level"] + fin["trend"], 9).alias("forecast1"),
-            )
-            .filter(F.col("n_events") >= 2)
-        )
-
-    q["holt_forecast"] = q_holt_forecast
-
-    def q_type_streaks(spark, sf_dir):
-        """Gaps-and-islands: maximal runs of consecutive same-type
-        events per user (ordered by ts, event_id), via the classic
-        rn - rn_per_type island key — all-integer, no iteration.
-        Emits one row per island with its length and bounds; the
-        per-user window partitions are bounded histories."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        w_all = W.partitionBy("user_id").orderBy("ts", "event_id")
-        w_type = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-        isl = e.select(
-            "user_id",
-            "event_type",
-            "ts",
-            "event_id",
-            (
-                F.row_number().over(w_all) - F.row_number().over(w_type)
-            ).alias("_isl"),
-        )
-        return (
-            isl.groupBy("user_id", "event_type", "_isl")
-            .agg(
-                F.count("*").cast("bigint").alias("streak_len"),
-                F.min("event_id").cast("bigint").alias("first_event"),
-                F.max("event_id").cast("bigint").alias("last_event"),
-            )
-            .filter(F.col("streak_len") >= 3)
-            .select(
-                "user_id", "event_type", "streak_len",
-                "first_event", "last_event",
-            )
-        )
-
-    q["type_streaks"] = q_type_streaks
-
-    def q_benford_digits(spark, sf_dir):
-        """Benford first-significant-digit audit over order totals —
-        the classic fabricated-data screen: observed counts per leading
-        digit vs the Benford expectation n*log10(1+1/d).  Counts are
-        exact integers; the expectation multiplies one exact count by a
-        log10 of a digit-constant literal (identical in both libms for
-        these 9 values, guarded by the 9-digit round)."""
-        o = _t(spark, sf_dir, "orders")
-        d = F.substring(F.col("o_totalprice").cast("string"), 1, 1).cast("bigint")
-        counts = (
-            o.filter(F.col("o_totalprice") > 0)
-            .groupBy(d.alias("digit"))
-            .agg(F.count("*").cast("bigint").alias("observed"))
-        )
-        tot = counts.agg(F.sum("observed").alias("_n"))
-        return (
-            counts.crossJoin(F.broadcast(tot))
-            .withColumn(
-                "expected",
-                F.round(
-                    F.col("_n").cast("double")
-                    * F.log10(1 + 1 / F.col("digit").cast("double")),
-                    9,
-                ),
-            )
-            .select("digit", "observed", "expected")
-        )
-
-    q["benford_digits"] = q_benford_digits
-
-    def q_theilsen_slope(spark, sf_dir):
-        """Theil-Sen robust trend per user: the median of all pairwise
-        slopes — insensitive to the outliers that tilt value_trend's
-        OLS.  Delegates to the guarded ``_theilsen_slope`` helper:
-        bounded histories expand their C(n,2) pairs IN-ROW off one
-        user-keyed shuffle (the market-basket shape), while histories
-        past the 1000-event guard take the rank-self-join arm that
-        spreads the quadratic fan-out across the partition instead of
-        concentrating it in a single row — the power-user protection
-        the in-row shape alone lacks.  Both arms emit the identical
-        slope multiset (pair slopes are orientation-symmetric
-        bit-exactly), each slope divides the exact integer cent delta
-        by the exact microsecond gap once, and the median interpolates
-        the identical float multiset in both engines (the
-        rolling_median percentile contract)."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-        )
-        return _theilsen_slope(e)
-
-    q["theilsen_slope"] = q_theilsen_slope
-
-    def q_yoy_revenue(spark, sf_dir):
-        """Year-over-year monthly revenue growth: the calendar
-        self-join pattern — monthly exact-unit totals joined to the
-        same month one year earlier — instead of a lag(12) window over
-        the global month series (which would plan a SinglePartition
-        sort at any scale).  Growth divides two exact int64 unit sums
-        once."""
-        li = _t(spark, sf_dir, "lineitem")
-        # both calendar self-join sides consume the tiny month relation;
-        # checkpoint so the lineitem scan + aggregate runs once
-        monthly = (
-            li.groupBy(
-                F.year("l_shipdate").cast("bigint").alias("yr"),
-                F.month("l_shipdate").cast("bigint").alias("mo"),
-            )
-            .agg(F.sum(_rev_units()).cast("bigint").alias("rev_units"))
-            .localCheckpoint(eager=False)
-        )
-        prev = monthly.select(
-            (F.col("yr") + 1).alias("yr"),
-            F.col("mo"),
-            F.col("rev_units").alias("prev_units"),
-        )
-        return (
-            monthly.join(prev, on=["yr", "mo"])
-            .withColumn(
-                "yoy_growth",
-                F.round(
-                    (F.col("rev_units") - F.col("prev_units")).cast("double")
-                    / F.col("prev_units").cast("double"),
-                    9,
-                ),
-            )
-            .select("yr", "mo", "rev_units", "prev_units", "yoy_growth")
-        )
-
-    q["yoy_revenue"] = q_yoy_revenue
-
-    def q_language_margin(spark, sf_dir):
-        """Language-ID confidence margins (llm/text.py
-        language_margin): best vs second-best marker score per doc —
-        the routing signal separating confident predictions from
-        ambiguous ones.  Pure codegen scan like language_id."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.language_margin(docs)
-
-    q["language_margin"] = q_language_margin
-
-    def q_source_gini(spark, sf_dir):
-        """Gini coefficients of corpus concentration across sources,
-        one row per mass metric (documents and characters) — the
-        diversity numbers a dataset card quotes (0 = balanced mixture,
-        ->1 = one source dominates; the synthetic corpus is doc-
-        balanced, so the docs row pins exact 0 while chars is
-        nonzero).  Sorted-rank weights via a broadcast inequality
-        self-join over the bounded (metric, source) relation — never a
-        global window; exact int64 sums, one closing division."""
-        docs = _t(spark, sf_dir, "documents")
-        per_src = docs.groupBy("source").agg(
-            F.count("*").alias("_docs"),
-            F.sum("n_chars").alias("_chars"),
-        )
-        melted = per_src.select(
-            "source",
-            F.explode(
-                F.map_from_arrays(
-                    F.array(F.lit("docs"), F.lit("chars")),
-                    F.array(F.col("_docs"), F.col("_chars")),
-                )
-            ).alias("metric", "x"),
-        )
-        other = melted.select(
-            F.col("metric").alias("_m2"),
-            F.col("source").alias("_s2"),
-            F.col("x").alias("_x2"),
-        )
-        ranked = (
-            melted.join(
-                F.broadcast(other),
-                (F.col("_m2") == F.col("metric"))
-                & (
-                    (F.col("_x2") < F.col("x"))
-                    | ((F.col("_x2") == F.col("x")) & (F.col("_s2") < F.col("source")))
-                ),
-                "left",
-            )
-            .groupBy("metric", "source", "x")
-            .agg((F.count("_s2") + 1).cast("bigint").alias("rank"))
-        )
-        agg = ranked.groupBy("metric").agg(
-            F.count("*").cast("bigint").alias("n_sources"),
-            F.sum("x").cast("bigint").alias("total_mass"),
-            F.sum(F.col("rank") * F.col("x")).cast("bigint").alias("_srx"),
-        )
-        # G = (2*sum(rank*x) - (n+1)*sum(x)) / (n*sum(x)), ranks ascending
-        return agg.select(
-            "metric",
-            "n_sources",
-            "total_mass",
-            F.round(
-                (
-                    2 * F.col("_srx")
-                    - (F.col("n_sources") + 1) * F.col("total_mass")
-                ).cast("double")
-                / (F.col("n_sources") * F.col("total_mass")).cast("double"),
-                9,
-            ).alias("gini"),
-        )
-
-    q["source_gini"] = q_source_gini
-
-    def q_ab_test_zscore(spark, sf_dir):
-        """Two-proportion A/B z-test over a deterministic hash-split
-        experiment: users land in arm A/B by salted md5 hash (the same
-        portable split primitive as split_assign), conversion = at least
-        14 'purchase' events (the per-user median is ~13, so both
-        converted and unconverted users exist in every arm — an
-        any-purchase definition saturates at 100% and zeroes the pooled
-        variance).  All counts are exact int64; the z statistic
-        is one mirrored chain of IEEE-exact ops (divides, sqrt) on those
-        counts, so both engines emit the identical double.  One row."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        half = sampling.HASH_SPACE // 2
-        arm = F.when(
-            sampling.salted_hash(F.col("user_id"), "ab6") < half, "A"
-        ).otherwise("B")
-        per_user = e.groupBy("user_id").agg(
-            (
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                )
-                >= 14
-            ).cast("bigint").alias("_conv")
-        ).withColumn("_arm", arm)
-        s = per_user.agg(
-            F.sum(F.when(F.col("_arm") == "A", 1).otherwise(0))
-            .cast("bigint").alias("n_a"),
-            F.sum(F.when(F.col("_arm") == "A", F.col("_conv")).otherwise(0))
-            .cast("bigint").alias("conv_a"),
-            F.sum(F.when(F.col("_arm") == "B", 1).otherwise(0))
-            .cast("bigint").alias("n_b"),
-            F.sum(F.when(F.col("_arm") == "B", F.col("_conv")).otherwise(0))
-            .cast("bigint").alias("conv_b"),
-        )
-        na = F.col("n_a").cast("double")
-        nb = F.col("n_b").cast("double")
-        pa = F.col("conv_a").cast("double") / na
-        pb = F.col("conv_b").cast("double") / nb
-        pool = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
-            (F.col("n_a") + F.col("n_b")).cast("double")
-        )
-        z = (pa - pb) / F.sqrt(
-            pool * (1 - pool) * (1 / na + 1 / nb)
-        )
-        return s.select(
-            "n_a", "conv_a", "n_b", "conv_b",
-            F.round(pa, 9).alias("rate_a"),
-            F.round(pb, 9).alias("rate_b"),
-            F.round(z, 9).alias("z_score"),
-        )
-
-    q["ab_test_zscore"] = q_ab_test_zscore
-
-    def q_cuped_adjust(spark, sf_dir):
-        """CUPED variance reduction on the same hash-split experiment:
-        pre-period (first half of the month) spend is the covariate for
-        post-period spend.  theta = cov(x,y)/var(x) and the covariate
-        mean come from EXACT int64 cent moments (the value_hour_corr
-        discipline); each arm's adjusted mean y - theta*(x - xbar) is a
-        mirrored float chain on exact arm sums.  Two rows (one per arm).
-        At extreme corpus scale the int64 cross-moments would move to
-        DECIMAL(38) — noted, not needed at gate SF."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        half = sampling.HASH_SPACE // 2
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        pre = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        per_user = e.groupBy("user_id").agg(
-            F.sum(F.when(pre, cents).otherwise(0)).cast("bigint").alias("x"),
-            F.sum(F.when(~pre, cents).otherwise(0)).cast("bigint").alias("y"),
-        ).withColumn(
-            "arm",
-            F.when(
-                sampling.salted_hash(F.col("user_id"), "ab6") < half, "A"
-            ).otherwise("B"),
-        )
-        g = per_user.agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum("x").cast("bigint").alias("_sx"),
-            F.sum("y").cast("bigint").alias("_sy"),
-            F.sum(F.col("x") * F.col("y")).cast("bigint").alias("_sxy"),
-            F.sum(F.col("x") * F.col("x")).cast("bigint").alias("_sxx"),
-        )
-        arms = per_user.groupBy("arm").agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum("x").cast("bigint").alias("_ax"),
-            F.sum("y").cast("bigint").alias("_ay"),
-        )
-        theta = (
-            (F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy"))
-            .cast("double")
-            / (F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx"))
-            .cast("double")
-        )
-        xbar = F.col("_sx").cast("double") / F.col("_n").cast("double")
-        nu = F.col("n_users").cast("double")
-        mean_post = F.col("_ay").cast("double") / nu
-        mean_adj = (
-            F.col("_ay").cast("double")
-            - theta * (F.col("_ax").cast("double") - nu * xbar)
-        ) / nu
-        return (
-            arms.crossJoin(F.broadcast(g))
-            .select(
-                "arm",
-                "n_users",
-                F.round(mean_post, 9).alias("mean_post_cents"),
-                F.round(mean_adj, 9).alias("mean_adj_cents"),
-                F.round(theta, 9).alias("theta"),
-            )
-        )
-
-    q["cuped_adjust"] = q_cuped_adjust
-
-    def q_cuped_stratified(spark, sf_dir):
-        """Group-wise CUPED: the cuped_adjust experiment post-stratified
-        by pre-period engagement tier (per-user pre-period event count,
-        tercile cuts npre <= 30 'low', <= 36 'mid', else 'high').
-        theta and the covariate mean are computed WITHIN each tier from
-        exact int64 cent moments (the value_hour_corr discipline), so
-        stratification absorbs the engagement-mix difference between
-        arms that a single global theta leaves on the table.  A tier
-        whose pre-period covariate is constant has zero variance:
-        theta is nullif-guarded to NULL in both engines and the
-        adjusted mean falls back to the raw post mean
-        (coalesce(theta, 0)).  Tier moments are a bounded 3-row
-        broadcast; the per-user table aggregates once and each side of
-        the join is a short-key combine — no extra corpus shuffle over
-        plain CUPED.  Round-10 registration (staged on the r10-batch
-        branch)."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        half = sampling.HASH_SPACE // 2
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        pre = F.col("ts") < F.lit("2024-01-16").cast("timestamp")
-        per_user = (
-            e.groupBy("user_id")
-            .agg(
-                F.sum(F.when(pre, cents).otherwise(0))
-                .cast("bigint")
-                .alias("x"),
-                F.sum(F.when(~pre, cents).otherwise(0))
-                .cast("bigint")
-                .alias("y"),
-                F.sum(F.when(pre, 1).otherwise(0))
-                .cast("bigint")
-                .alias("_npre"),
-            )
-            .withColumn(
-                "tier",
-                F.when(F.col("_npre") <= 30, "low")
-                .when(F.col("_npre") <= 36, "mid")
-                .otherwise("high"),
-            )
-            .withColumn(
-                "arm",
-                F.when(
-                    sampling.salted_hash(F.col("user_id"), "ab6") < half, "A"
-                ).otherwise("B"),
-            )
-        )
-        g = per_user.groupBy("tier").agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum("x").cast("bigint").alias("_sx"),
-            F.sum("y").cast("bigint").alias("_sy"),
-            F.sum(F.col("x") * F.col("y")).cast("bigint").alias("_sxy"),
-            F.sum(F.col("x") * F.col("x")).cast("bigint").alias("_sxx"),
-        )
-        arms = per_user.groupBy("tier", "arm").agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum("x").cast("bigint").alias("_ax"),
-            F.sum("y").cast("bigint").alias("_ay"),
-        )
-        theta = (
-            F.col("_n") * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-        ).cast("double") / F.nullif(
-            F.col("_n") * F.col("_sxx") - F.col("_sx") * F.col("_sx"),
-            F.lit(0),
-        ).cast("double")
-        xbar = F.col("_sx").cast("double") / F.col("_n").cast("double")
-        nu = F.col("n_users").cast("double")
-        mean_post = F.col("_ay").cast("double") / nu
-        mean_adj = (
-            F.col("_ay").cast("double")
-            - F.coalesce(theta, F.lit(0.0))
-            * (F.col("_ax").cast("double") - nu * xbar)
-        ) / nu
-        return arms.join(F.broadcast(g), "tier").select(
-            "tier",
-            "arm",
-            "n_users",
-            F.round(mean_post, 9).alias("mean_post_cents"),
-            F.round(mean_adj, 9).alias("mean_adj_cents"),
-            F.round(theta, 9).alias("theta"),
-        )
-
-    q["cuped_stratified"] = q_cuped_stratified
-
-    def q_link_prediction(spark, sf_dir):
-        """Bipartite link prediction over the part-order graph: for part
-        pairs co-purchased in >= 2 orders, the common-neighbor count plus
-        resource-allocation (sum 1/deg) and Adamic-Adar (sum 1/ln deg)
-        scores, where deg is the shared order's part-degree.  ONE
-        order-keyed shuffle total (the brand_cooccurrence shape): the
-        per-order distinct part set aggregates via collect_set — bounded
-        by the order's line count, never the corpus — the degree IS the
-        set size, and the quadratic pair expansion happens in-row over
-        the sorted array, so no distinct relation, degree join, or
-        self-join ever materializes.  Counts/degrees are exact ints;
-        each score term is one divide (RA exact; AA's ln + the tiny
-        per-pair float sum ride the 9-digit round)."""
-        li = _t(spark, sf_dir, "lineitem")
-        baskets = (
-            li.select("l_orderkey", "l_partkey")
-            .groupBy("l_orderkey")
-            .agg(F.array_sort(F.collect_set("l_partkey")).alias("_ps"))
-        )
-        ps = F.col("_ps")
-        pair_arr = F.flatten(
-            F.transform(
-                ps,
-                lambda a, i: F.transform(
-                    F.slice(ps, i + F.lit(2), F.size(ps)),
-                    lambda b: F.struct(a.alias("part_a"), b.alias("part_b")),
-                ),
-            )
-        )
-        pairs = (
-            baskets.filter(F.size("_ps") >= 2)
-            .select(
-                F.size("_ps").cast("bigint").alias("_deg"),
-                F.explode(pair_arr).alias("_p"),
-            )
-            .select(F.col("_p.part_a"), F.col("_p.part_b"), "_deg")
-        )
-        d = F.col("_deg").cast("double")
-        return (
-            pairs.groupBy("part_a", "part_b")
-            .agg(
-                F.count("*").cast("bigint").alias("cn_orders"),
-                F.sum(F.lit(1.0) / d).alias("_ra"),
-                F.sum(F.lit(1.0) / F.log(d)).alias("_aa"),
-            )
-            .filter(F.col("cn_orders") >= 2)
-            .select(
-                "part_a",
-                "part_b",
-                "cn_orders",
-                F.round("_ra", 9).alias("ra_score"),
-                F.round("_aa", 9).alias("aa_score"),
-            )
-        )
-
-    q["link_prediction"] = q_link_prediction
-
-    def q_markov_transitions(spark, sf_dir):
-        """First-order Markov model of user behavior: event-type
-        transition counts and conditional probabilities from each user's
-        (ts, event_id)-ordered event sequence.  lead() runs in windows
-        partitioned by user (hash-distributes at scale, never a global
-        sort); the |types|^2 transition matrix aggregates with map-side
-        combine; each probability is one exact-int64 divide.  The counts
-        table is checkpointed because both the output and the row-total
-        branch consume it — without that, Spark rebuilds the whole
-        scan -> user-shuffle -> window-sort subtree a second time just to
-        re-derive the tiny matrix it already computed."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        t = (
-            e.select(
-                F.col("event_type").alias("from_type"),
-                F.lead("event_type").over(w).alias("to_type"),
-            )
-            .filter(F.col("to_type").isNotNull())
-            .groupBy("from_type", "to_type")
-            .agg(F.count("*").cast("bigint").alias("n"))
-            .localCheckpoint(eager=False)
-        )
-        tot = t.groupBy("from_type").agg(
-            F.sum("n").cast("bigint").alias("_rt")
-        )
-        return (
-            t.join(F.broadcast(tot), on="from_type")
-            .select(
-                "from_type",
-                "to_type",
-                "n",
-                F.round(
-                    F.col("n").cast("double") / F.col("_rt").cast("double"), 9
-                ).alias("prob"),
-            )
-        )
-
-    q["markov_transitions"] = q_markov_transitions
-
-    def q_zipf_fit(spark, sf_dir):
-        """Zipf law fit over the corpus vocabulary: OLS of ln(freq) on
-        ln(rank) for the top-200 words — the standard tokenizer/corpus
-        sanity diagnostic (natural text slopes near -1).  Ranks and
-        counts come exact from vocab_stats (broadcast inequality rank,
-        no vocabulary-wide single-partition window); the 200-term float
-        moment sums sit ~7 orders above their cross-engine summation-
-        order noise, guarded by the 9-digit round."""
-        docs = _t(spark, sf_dir, "documents")
-        v = llm_text.vocab_stats(docs, top_k=200).select("rank", "cnt")
-        lx = F.log(F.col("rank").cast("double"))
-        ly = F.log(F.col("cnt").cast("double"))
-        m = v.agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(lx).alias("_sx"),
-            F.sum(ly).alias("_sy"),
-            F.sum(lx * ly).alias("_sxy"),
-            F.sum(lx * lx).alias("_sxx"),
-        )
-        nd = F.col("n").cast("double")
-        slope = (nd * F.col("_sxy") - F.col("_sx") * F.col("_sy")) / (
-            nd * F.col("_sxx") - F.col("_sx") * F.col("_sx")
-        )
-        return m.select(
-            "n",
-            F.round(slope, 9).alias("zipf_slope"),
-            F.round((F.col("_sy") - slope * F.col("_sx")) / nd, 9).alias(
-                "ln_intercept"
-            ),
-        )
-
-    q["zipf_fit"] = q_zipf_fit
-
-    def q_char_entropy(spark, sf_dir):
-        """Per-source Shannon entropy of the character distribution —
-        the cheap encoding/junk screen (mojibake, binary spill, and
-        boilerplate all shift it).  Char counts are exact int64 via
-        explode + two-level aggregate (shuffle bounded at |sources| x
-        |alphabet|); entropy -sum(p*log2 p) spans ~25 terms per source,
-        9-digit-rounded."""
-        docs = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-        c = (
-            docs.select(
-                "source", F.explode(F.split(F.col("text"), "")).alias("ch")
-            )
-            .groupBy("source", "ch")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-        )
-        tot = c.groupBy("source").agg(F.sum("cnt").cast("bigint").alias("_n"))
-        p = F.col("cnt").cast("double") / F.col("_n").cast("double")
-        return (
-            c.join(F.broadcast(tot), on="source")
-            .groupBy("source")
-            .agg(
-                F.max("_n").alias("n_chars"),
-                F.count("*").cast("bigint").alias("alphabet"),
-                F.round(-F.sum(p * F.log2(p)), 9).alias("entropy_bits"),
-            )
-        )
-
-    q["char_entropy"] = q_char_entropy
-
-    def q_minhash_containment(spark, sf_dir):
-        """Directed containment over LSH candidates (llm/dedup.py
-        containment_verify): exact shingle-set sizes and |A∩B|/|A|,
-        |A∩B|/|B| per candidate pair — the asymmetric quote/subset
-        signal Jaccard misses.  Candidates come from the portable-hash
-        MinHash banding (same chain the minhash_dedup oracle replays);
-        ratios are single exact-int64 divides."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        return dedup.containment_verify(docs, cand, k=5)
-
-    q["minhash_containment"] = q_minhash_containment
-
-    def q_kaplan_meier(spark, sf_dir):
-        """Kaplan-Meier survival curve for time-to-first-big-purchase
-        (first 'purchase' with value > 200; ~4/5 of users are censored
-        at the window end, so every risk set strictly exceeds its death
-        count and no ln(0) arises).  Day-level death counts and risk
-        sets are exact int64 via two broadcast inequality self-joins
-        over the <= 31 distinct event days (the vocab_stats cumulative
-        pattern — no single-partition window); the product-limit
-        estimator runs as exp(cumulative sum of ln(1 - d/n)), each term
-        a mirrored IEEE chain, 9-digit-rounded."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        fe = (
-            e.filter(
-                (F.col("event_type") == "purchase") & (F.col("value") > 200)
-            )
-            .groupBy("user_id")
-            .agg(F.min(day).alias("day"))
-        )
-        # <= 31 day rows, two consumers per level (both sides of each
-        # inequality self-join); checkpoints keep the events passes to
-        # two (first-event build + the all-user risk denominator)
-        d = (
-            fe.groupBy("day")
-            .agg(F.count("*").cast("bigint").alias("deaths"))
-            .localCheckpoint(eager=False)
-        )
-        ntot = e.agg(
-            F.countDistinct("user_id").cast("bigint").alias("_N")
-        )
-        b = d.select(
-            F.col("day").alias("_bday"), F.col("deaths").alias("_bdeaths")
-        )
-        w = (
-            d.join(F.broadcast(b), F.col("_bday") < F.col("day"), "left")
-            .groupBy("day", "deaths")
-            .agg(
-                F.coalesce(F.sum("_bdeaths"), F.lit(0))
-                .cast("bigint")
-                .alias("_prior")
-            )
-            .crossJoin(F.broadcast(ntot))
-            .withColumn("at_risk", (F.col("_N") - F.col("_prior")))
-            .localCheckpoint(eager=False)
-        )
-        term = F.log(
-            1
-            - F.col("_bd2").cast("double") / F.col("_br2").cast("double")
-        )
-        t2 = w.select(
-            F.col("day").alias("_bday2"),
-            F.col("deaths").alias("_bd2"),
-            F.col("at_risk").alias("_br2"),
-        )
-        return (
-            w.join(F.broadcast(t2), F.col("_bday2") <= F.col("day"))
-            .groupBy("day", "at_risk", "deaths")
-            .agg(F.sum(term).alias("_lnsum"))
-            .select(
-                "day",
-                "at_risk",
-                "deaths",
-                F.round(F.exp("_lnsum"), 9).alias("survival"),
-            )
-        )
-
-    q["kaplan_meier"] = q_kaplan_meier
-
-    def q_readability(spark, sf_dir):
-        """Flesch reading-ease per document from engine-portable exact
-        counts: whitespace tokens (token_count), sentence marks
-        ([.!?]+ runs, floored at 1 — the synthetic corpus has none, so
-        the words-per-sentence term degenerates to the word count,
-        exercised all the same), and syllable proxies ([aeiouy]+ vowel
-        groups).  The score is one mirrored float chain on three exact
-        int64 counts — the classic cheap quality feature for corpus
-        filtering.  Pure codegen string functions, no UDFs."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        words = llm_text.token_count(F.col("text")).cast("bigint")
-        syll = F.size(
-            F.regexp_extract_all(F.col("text"), F.lit("[aeiouy]+"), F.lit(0))
-        ).cast("bigint")
-        sent = F.greatest(
-            F.size(
-                F.regexp_extract_all(F.col("text"), F.lit("[.!?]+"), F.lit(0))
-            ).cast("bigint"),
-            F.lit(1).cast("bigint"),
-        )
-        out = docs.select(
-            "doc_id",
-            words.alias("n_words"),
-            sent.alias("n_sentences"),
-            syll.alias("n_syllables"),
-        ).filter(F.col("n_words") > 0)
-        flesch = (
-            F.lit(206.835)
-            - 1.015
-            * (
-                F.col("n_words").cast("double")
-                / F.col("n_sentences").cast("double")
-            )
-            - 84.6
-            * (
-                F.col("n_syllables").cast("double")
-                / F.col("n_words").cast("double")
-            )
-        )
-        return out.withColumn("flesch", F.round(flesch, 9))
-
-    q["readability"] = q_readability
-
-    def q_moments_by_type(spark, sf_dir):
-        """Skewness and excess kurtosis per event type from EXACT
-        integer power sums of the dollar-quantized value (S1..S4 as
-        int64 — order-invariant where float central-moment streaming is
-        not; x<=490 keeps S4 ~1e14, far inside int64; a 100-TB corpus
-        would promote the sums to DECIMAL(38)).  The closed forms
-        divide once through a mirrored IEEE chain; var^1.5 is written
-        var*sqrt(var) so no libm pow enters."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        x = F.round(F.col("value")).cast("bigint")
-        m = e.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(x).cast("bigint").alias("_s1"),
-            F.sum(x * x).cast("bigint").alias("_s2"),
-            F.sum(x * x * x).cast("bigint").alias("_s3"),
-            F.sum(x * x * x * x).cast("bigint").alias("_s4"),
-        )
-        nd = F.col("n").cast("double")
-        mean = F.col("_s1").cast("double") / nd
-        m2 = F.col("_s2").cast("double") / nd - mean * mean
-        m3 = (
-            F.col("_s3").cast("double") / nd
-            - 3 * mean * (F.col("_s2").cast("double") / nd)
-            + 2 * mean * mean * mean
-        )
-        m4 = (
-            F.col("_s4").cast("double") / nd
-            - 4 * mean * (F.col("_s3").cast("double") / nd)
-            + 6 * mean * mean * (F.col("_s2").cast("double") / nd)
-            - 3 * mean * mean * mean * mean
-        )
-        return m.select(
-            "event_type",
-            "n",
-            F.round(mean, 9).alias("mean_usd"),
-            F.round(m3 / (m2 * F.sqrt(m2)), 9).alias("skewness"),
-            F.round(m4 / (m2 * m2) - 3, 9).alias("excess_kurtosis"),
-        )
-
-    q["moments_by_type"] = q_moments_by_type
-
-    def q_mutual_information(spark, sf_dir):
-        """Mutual information between event type and day-of-week,
-        emitted PER CELL in bits (the dow_type_chi2 discipline: no
-        order-dependent float total exists — consumers sum the bounded
-        35-row grid).  Every count is exact int64; each contribution is
-        (n_ij/N) * log2(n_ij*N / (n_i*n_j)) with the log argument
-        formed from exact integer products."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        # 35-row grid, four consumers (marginals, total, output);
-        # checkpoint so the events scan + aggregate runs once
-        cells = e.groupBy(
-            "event_type", F.dayofweek("ts").cast("bigint").alias("dow")
-        ).agg(F.count("*").cast("bigint").alias("n_ij")).localCheckpoint(
-            eager=False
-        )
-        rows = cells.groupBy("event_type").agg(
-            F.sum("n_ij").cast("bigint").alias("_ri")
-        )
-        cols = cells.groupBy("dow").agg(
-            F.sum("n_ij").cast("bigint").alias("_cj")
-        )
-        tot = cells.agg(F.sum("n_ij").cast("bigint").alias("_N"))
-        contrib = (
-            F.col("n_ij").cast("double") / F.col("_N").cast("double")
-        ) * F.log2(
-            (F.col("n_ij") * F.col("_N")).cast("double")
-            / (F.col("_ri") * F.col("_cj")).cast("double")
-        )
-        return (
-            cells.join(F.broadcast(rows), on="event_type")
-            .join(F.broadcast(cols), on="dow")
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "event_type",
-                "dow",
-                "n_ij",
-                F.round(contrib, 9).alias("mi_bits"),
-            )
-        )
-
-    q["mutual_information"] = q_mutual_information
-
-    def q_lognormal_fit(spark, sf_dir):
-        """Log-normal MLE per event type: mu/sigma of ln(cents) — the
-        distributional prior check before modeling heavy-tailed spend.
-        Cents are exact int64 (zero-filtered so ln is total); the ln
-        sums span ~2000 terms whose cross-engine summation-order noise
-        (~1e-12 absolute) sits 3+ digits under the 9-digit round after
-        the /n normalization."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & (F.col("value") > 0)
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        lx = F.log(cents.cast("double"))
-        m = e.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(lx).alias("_sl"),
-            F.sum(lx * lx).alias("_sll"),
-        )
-        nd = F.col("n").cast("double")
-        mu = F.col("_sl") / nd
-        sigma = F.sqrt(F.col("_sll") / nd - mu * mu)
-        return m.select(
-            "event_type",
-            "n",
-            F.round(mu, 9).alias("mu_ln_cents"),
-            F.round(sigma, 9).alias("sigma_ln_cents"),
-        )
-
-    q["lognormal_fit"] = q_lognormal_fit
-
-    def q_histogram_quantiles(spark, sf_dir):
-        """Fixed-bin histogram quantile sketch with its accuracy
-        harness: per event type, a 64-bin equi-width histogram over
-        cents (the mergeable one-pass structure that replaces per-group
-        sorts at scale — the shuffle carries at most 64 rows per
-        (type, partition)), the bin-floor p50/p90/p99 estimates, and
-        the exact interpolated percentiles alongside (the ann_recall
-        pattern for sketches).  Bin ids and cumulative counts are exact
-        int64 via a broadcast inequality join over <= 64 bins."""
-        hi = 49003  # cents range upper bound (exclusive): max value 490.02
-        nb = 64
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        binc = F.floor(
-            (cents * nb).cast("double") / F.lit(float(hi))
-        ).cast("bigint")
-        # three consumers (cum's probe side, the broadcast b2 copy, tot)
-        # — materialize the <= types*64-row aggregate once or each
-        # consumer rebuilds it from a full events scan (round-14 plan
-        # audit: 4 parquet scans -> 2; GC-released with the frame)
-        bins = (
-            e.groupBy(F.col("event_type"), binc.alias("bin"))
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-            .localCheckpoint(eager=False)
-        )
-        tot = bins.groupBy("event_type").agg(
-            F.sum("cnt").cast("bigint").alias("n")
-        )
-        b2 = bins.select(
-            F.col("event_type").alias("_et"),
-            F.col("bin").alias("_bbin"),
-            F.col("cnt").alias("_bcnt"),
-        )
-        cum = (
-            bins.join(
-                F.broadcast(b2),
-                (F.col("_et") == F.col("event_type"))
-                & (F.col("_bbin") <= F.col("bin")),
-            )
-            .groupBy("event_type", "bin")
-            .agg(F.sum("_bcnt").cast("bigint").alias("cum"))
-            .join(F.broadcast(tot), on="event_type")
-        )
-        est = cum.groupBy("event_type").agg(
-            F.min(
-                F.when(F.col("cum") * 100 >= 50 * F.col("n"), F.col("bin"))
-            ).alias("bin_p50"),
-            F.min(
-                F.when(F.col("cum") * 100 >= 90 * F.col("n"), F.col("bin"))
-            ).alias("bin_p90"),
-            F.min(
-                F.when(F.col("cum") * 100 >= 99 * F.col("n"), F.col("bin"))
-            ).alias("bin_p99"),
-        )
-        pct = F.percentile(
-            cents, F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))
-        )
-        exact = e.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(pct[0], 6).alias("exact_p50"),
-            F.round(pct[1], 6).alias("exact_p90"),
-            F.round(pct[2], 6).alias("exact_p99"),
-        )
-        edge = float(hi) / nb
-        return exact.join(F.broadcast(est), on="event_type").select(
-            "event_type",
-            "n",
-            "bin_p50",
-            F.round(F.col("bin_p50").cast("double") * edge, 6).alias(
-                "est_p50"
-            ),
-            "exact_p50",
-            "bin_p90",
-            F.round(F.col("bin_p90").cast("double") * edge, 6).alias(
-                "est_p90"
-            ),
-            "exact_p90",
-            "bin_p99",
-            F.round(F.col("bin_p99").cast("double") * edge, 6).alias(
-                "est_p99"
-            ),
-            "exact_p99",
-        )
-
-    q["histogram_quantiles"] = q_histogram_quantiles
-
-    def q_daily_acf(spark, sf_dir):
-        """Autocorrelation of the daily revenue series at lags 1..7 —
-        the pre-forecasting seasonality diagnostic.  The 30-row daily
-        series aggregates to exact cent sums; each lag's aligned pairs
-        come from a broadcast self-join on day+lag; Pearson r per lag
-        uses the exact-int64 moment discipline of value_hour_corr."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        daily = e.groupBy(day.alias("day")).agg(
-            F.sum(cents).cast("bigint").alias("x")
-        )
-        lags = spark.range(1, 8).select(F.col("id").alias("lag"))
-        b = daily.select(
-            F.col("day").alias("_bday"), F.col("x").alias("_y")
-        )
-        pairs = (
-            daily.crossJoin(F.broadcast(lags))
-            .join(
-                F.broadcast(b),
-                F.col("_bday") == F.col("day") + F.col("lag"),
-            )
-        )
-        m = pairs.groupBy("lag").agg(
-            F.count("*").cast("bigint").alias("n_pairs"),
-            F.sum("x").cast("bigint").alias("_sx"),
-            F.sum("_y").cast("bigint").alias("_sy"),
-            F.sum(F.col("x") * F.col("_y")).cast("bigint").alias("_sxy"),
-            F.sum(F.col("x") * F.col("x")).cast("bigint").alias("_sxx"),
-            F.sum(F.col("_y") * F.col("_y")).cast("bigint").alias("_syy"),
-        )
-        num = (
-            F.col("n_pairs") * F.col("_sxy") - F.col("_sx") * F.col("_sy")
-        ).cast("double")
-        den = F.sqrt(
-            (F.col("n_pairs") * F.col("_sxx") - F.col("_sx") * F.col("_sx"))
-            .cast("double")
-        ) * F.sqrt(
-            (F.col("n_pairs") * F.col("_syy") - F.col("_sy") * F.col("_sy"))
-            .cast("double")
-        )
-        return m.select(
-            "lag", "n_pairs", F.round(num / den, 9).alias("acf")
-        )
-
-    q["daily_acf"] = q_daily_acf
-
-    def q_seasonal_decompose(spark, sf_dir):
-        """Classical additive decomposition of daily revenue: trend =
-        centered 7-day mean (full windows only, via a broadcast range
-        self-join over the bounded day grid — no single-partition
-        window), seasonal = per-day-of-week mean deviation, residual =
-        the rest.  Trend divides an exact int64 window sum once; the
-        seasonal means average <= 4 IEEE-exact deviations."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        # <= 31-row day series feeding both range-join sides, and the
-        # trend table feeding both the seasonal means and the output —
-        # checkpoints keep the events pass and the range join to one each
-        daily = e.groupBy(
-            day.alias("day"),
-            F.dayofweek("ts").cast("bigint").alias("dow"),
-        ).agg(F.sum(cents).cast("bigint").alias("x")).localCheckpoint(
-            eager=False
-        )
-        b = daily.select(
-            F.col("day").alias("_bday"), F.col("x").alias("_bx")
-        )
-        tr = (
-            daily.join(
-                F.broadcast(b),
-                (F.col("_bday") >= F.col("day") - 3)
-                & (F.col("_bday") <= F.col("day") + 3),
-            )
-            .groupBy("day", "dow", "x")
-            .agg(
-                F.count("*").alias("_w"),
-                F.sum("_bx").cast("bigint").alias("_ws"),
-            )
-            .filter(F.col("_w") == 7)
-            .withColumn(
-                "trend", F.col("_ws").cast("double") / F.lit(7.0)
-            )
-            .withColumn(
-                "dev", F.col("x").cast("double") - F.col("trend")
-            )
-            .localCheckpoint(eager=False)
-        )
-        seas = tr.groupBy("dow").agg(
-            (F.sum("dev") / F.count("*").cast("double")).alias("seasonal")
-        )
-        return (
-            tr.join(F.broadcast(seas), on="dow")
-            .select(
-                "day",
-                "dow",
-                F.col("x").alias("revenue_cents"),
-                F.round("trend", 9).alias("trend"),
-                F.round("seasonal", 9).alias("seasonal"),
-                F.round(F.col("dev") - F.col("seasonal"), 9).alias(
-                    "residual"
-                ),
-            )
-        )
-
-    q["seasonal_decompose"] = q_seasonal_decompose
-
-    def q_changepoint(spark, sf_dir):
-        """Offline CUSUM changepoint over the daily revenue series: the
-        day maximizing |n*S_k - k*S_n| — the scaled deviation of the
-        cumulative sum from the uniform ramp — ENTIRELY in exact int64
-        (no float enters until the reported normalized statistic).
-        Cumulatives ride the broadcast inequality join; the argmax is
-        TakeOrdered with a full-key tiebreak."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        # day series feeds both inequality-join sides; the cumulative
-        # table feeds the total and the output — checkpoint each once
-        daily = e.groupBy(day.alias("day")).agg(
-            F.sum(cents).cast("bigint").alias("x")
-        ).localCheckpoint(eager=False)
-        b = daily.select(
-            F.col("day").alias("_bday"), F.col("x").alias("_bx")
-        )
-        cum = (
-            daily.join(F.broadcast(b), F.col("_bday") <= F.col("day"))
-            .groupBy("day")
-            .agg(
-                F.count("*").cast("bigint").alias("k"),
-                F.sum("_bx").cast("bigint").alias("s_k"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        tot = cum.agg(
-            F.max("k").cast("bigint").alias("_n"),
-            F.max("s_k").cast("bigint").alias("_s_n"),
-        )
-        stat = F.abs(
-            F.col("_n") * F.col("s_k") - F.col("k") * F.col("_s_n")
-        ).cast("bigint")
-        return (
-            cum.crossJoin(F.broadcast(tot))
-            .select(
-                "day",
-                "k",
-                stat.alias("stat"),
-                F.round(
-                    stat.cast("double")
-                    / (F.col("_n").cast("double") * F.col("_s_n").cast("double")),
-                    9,
-                ).alias("norm_stat"),
-            )
-            .orderBy(F.desc("stat"), F.asc("day"))
-            .limit(1)
-        )
-
-    q["changepoint"] = q_changepoint
-
-    def q_conversion_lag(spark, sf_dir):
-        """Funnel timing: exact interpolated quantiles of the
-        signup-to-first-purchase delay over users who converted after
-        signing up.  Per-user firsts are one hash-partitioned min-agg;
-        delays are exact int64 microseconds; the final one-row quantile
-        runs over the bounded converted-user set."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        fu = e.groupBy("user_id").agg(
-            F.min(
-                F.when(
-                    F.col("event_type") == "signup", F.unix_micros("ts")
-                )
-            ).alias("_s"),
-            F.min(
-                F.when(
-                    F.col("event_type") == "purchase", F.unix_micros("ts")
-                )
-            ).alias("_p"),
-        )
-        lag_us = (F.col("_p") - F.col("_s")).cast("bigint")
-        conv = fu.filter(
-            F.col("_s").isNotNull()
-            & F.col("_p").isNotNull()
-            & (F.col("_p") > F.col("_s"))
-        ).select(lag_us.alias("lag_us"))
-        pct = F.percentile(
-            F.col("lag_us"), F.array(F.lit(0.5), F.lit(0.9))
-        )
-        return conv.agg(
-            F.count("*").cast("bigint").alias("n_converted"),
-            F.round(pct[0] / 1000000.0, 6).alias("p50_seconds"),
-            F.round(pct[1] / 1000000.0, 6).alias("p90_seconds"),
-        )
-
-    q["conversion_lag"] = q_conversion_lag
-
-    def q_nb_lang_scores(spark, sf_dir):
-        """Multinomial naive-Bayes language scores — the
-        classifier-based quality/routing pass of a corpus pipeline,
-        trained and applied in one plan: Laplace-smoothed ln P(w|lang)
-        from exact token counts, densified over vocab x langs (both
-        bounded far below corpus size at any SF), then one
-        tokens-to-model equi-join sums each document's score against
-        every language.  Emitted per (doc, lang) — argmax belongs to
-        the consumer, so no cross-engine float comparison decides a
-        row's content."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        toks = docs.select(
-            "doc_id", "lang", F.explode(dedup.tokenize(F.col("text"))).alias("w")
-        )
-        # vocab-x-langs bounded; three consumers (totals, vocab, the
-        # model densify join) — checkpoint so the token explode +
-        # count aggregate runs once for training (scoring re-explodes
-        # at doc grain by necessity)
-        cnt = toks.groupBy("lang", "w").agg(
-            F.count("*").cast("bigint").alias("cnt")
-        ).localCheckpoint(eager=False)
-        tot = cnt.groupBy("lang").agg(
-            F.sum("cnt").cast("bigint").alias("tot")
-        )
-        vocab = cnt.select("w").distinct()
-        vsize = vocab.agg(F.count("*").cast("bigint").alias("v"))
-        model = (
-            vocab.crossJoin(tot)
-            .join(cnt, on=["lang", "w"], how="left")
-            .crossJoin(F.broadcast(vsize))
-            .select(
-                "lang",
-                "w",
-                F.log(
-                    (F.coalesce(F.col("cnt"), F.lit(0)) + 1).cast("double")
-                    / (F.col("tot") + F.col("v")).cast("double")
-                ).alias("_lp"),
-            )
-        )
-        return (
-            toks.select("doc_id", "w")
-            .join(model.withColumnRenamed("lang", "score_lang"), on="w")
-            .groupBy("doc_id", "score_lang")
-            .agg(
-                F.count("*").cast("bigint").alias("n_tokens"),
-                F.round(F.sum("_lp"), 9).alias("log_score"),
-            )
-        )
-
-    q["nb_lang_scores"] = q_nb_lang_scores
-
-    def q_k_anonymity(spark, sf_dir):
-        """k-anonymity audit over the (nation, market-segment)
-        quasi-identifier pair: the re-identification risk summary a
-        privacy review runs before releasing a customer extract.  One
-        hash-partitioned group-count plus a bounded summary aggregate —
-        all exact int64."""
-        c = _t(spark, sf_dir, "customer")
-        g = c.groupBy("c_nationkey", "c_mktsegment").agg(
-            F.count("*").cast("bigint").alias("sz")
-        )
-        return g.agg(
-            F.count("*").cast("bigint").alias("n_groups"),
-            F.min("sz").cast("bigint").alias("k_anonymity"),
-            F.sum(F.when(F.col("sz") < 10, 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_below_10"),
-            F.sum(F.when(F.col("sz") < 10, F.col("sz")).otherwise(0))
-            .cast("bigint")
-            .alias("records_at_risk"),
-        )
-
-    q["k_anonymity"] = q_k_anonymity
-
-    def q_l_diversity(spark, sf_dir):
-        """l-diversity per quasi-identifier group: distinct
-        account-balance bands (the sensitive attribute, 1000-unit
-        floor) within each (nation, segment) group.  A group that is
-        k-anonymous but 1-diverse still leaks the sensitive value —
-        this emits every group with its size and l so the release
-        policy can threshold both.  floor division runs on shifted
-        non-negative operands (Spark div truncates toward zero, DuckDB
-        // floors — they agree only above zero)."""
-        c = _t(spark, sf_dir, "customer")
-        # acctbal can be negative: shift by +10000 before the 1000-band
-        # floor so truncating and flooring division agree
-        band = F.floor(
-            (F.col("c_acctbal") + 10000.0) / F.lit(1000.0)
-        ).cast("bigint")
-        return (
-            c.groupBy("c_nationkey", "c_mktsegment")
-            .agg(
-                F.count("*").cast("bigint").alias("group_size"),
-                F.countDistinct(band).cast("bigint").alias("l_diversity"),
-            )
-            .select(
-                F.col("c_nationkey").cast("bigint").alias("nationkey"),
-                F.col("c_mktsegment").alias("mktsegment"),
-                "group_size",
-                "l_diversity",
-            )
-        )
-
-    q["l_diversity"] = q_l_diversity
-
-    def q_dp_noised_counts(spark, sf_dir):
-        """Differentially-private-style noised release of per-type
-        event counts: Laplace(b=2) noise via inverse-CDF transform of a
-        salted-hash uniform — DETERMINISTIC here so the oracle can
-        replay the release bit-for-bit (a production release draws real
-        randomness; the plan shape — exact count, one noise term, no
-        extra pass — is identical).  The uniform is (h+0.5)/2^32 from
-        the portable md5 hash, so sign and magnitude mirror exactly."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        cnt = e.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n")
-        )
-        u = (
-            sampling.salted_hash(F.col("event_type"), "dp6").cast("double")
-            + 0.5
-        ) / F.lit(float(sampling.HASH_SPACE))
-        half = u - 0.5
-        noise = (
-            -2.0
-            * F.when(half < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-            * F.log(1 - 2 * F.abs(half))
-        )
-        return cnt.select(
-            "event_type",
-            "n",
-            F.round(noise, 9).alias("noise"),
-            F.round(F.col("n").cast("double") + noise, 9).alias("noised_n"),
-        )
-
-    q["dp_noised_counts"] = q_dp_noised_counts
-
-    def q_outlier_mad(spark, sf_dir):
-        """Robust outlier census per event type via median absolute
-        deviation: med and MAD are exact interpolated percentiles over
-        exact cents (both engines interpolate identically on identical
-        multisets, so the 3 * 1.4826 * MAD fence is the same double and
-        the outlier count is deterministic) — the heavy-tail-safe
-        alternative to the mean/std z-score."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        rows = e.select("event_type", cents.alias("c"))
-        med = rows.groupBy("event_type").agg(
-            F.percentile(F.col("c"), F.lit(0.5)).alias("med")
-        )
-        j = rows.join(F.broadcast(med), on="event_type")
-        dev = F.abs(F.col("c").cast("double") - F.col("med"))
-        mad = j.groupBy("event_type").agg(
-            F.percentile(dev, F.lit(0.5)).alias("mad")
-        )
-        j2 = j.join(F.broadcast(mad), on="event_type")
-        return j2.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.round(F.max("med"), 6).alias("med_cents"),
-            F.round(F.max("mad"), 6).alias("mad_cents"),
-            F.sum(
-                (dev > 3 * F.lit(1.4826) * F.col("mad")).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("n_outliers"),
-        )
-
-    q["outlier_mad"] = q_outlier_mad
-
-    def q_lsh_recall(spark, sf_dir):
-        """LSH banding evaluation: recall and precision of the MinHash
-        candidate pipeline against the EXACT near-dup truth (all pairs
-        with shingle Jaccard >= 0.8).  Truth pairs come from the
-        shingle equi-join (pairs sharing zero shingles cannot pass the
-        threshold, so no all-pairs product exists); candidates are the
-        usual banding pairs.  One summary row — the tuning harness that
-        justifies a band/row configuration before a corpus-wide run;
-        at production scale the truth side runs on a sampled stratum.
-        Counts are exact int64; the two ratios divide once."""
-        docs = _t(spark, sf_dir, "documents")
-        norm = dedup.normalize_text(F.col("text"))
-        sh = (
-            docs.filter(F.col("text").isNotNull())
-            .select(F.col("doc_id"), norm.alias("_txt"))
-            .withColumn("s", F.explode(dedup._shingle_expr(F.col("_txt"), 5)))
-            .select("doc_id", "s")
-        )
-        sz = sh.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("nsz"))
-        a = sh.select(F.col("doc_id").alias("a"), "s")
-        b = sh.select(F.col("doc_id").alias("b"), "s")
-        inter = (
-            a.join(b, on="s")
-            .filter(F.col("a") < F.col("b"))
-            .groupBy("a", "b")
-            .agg(F.count("*").cast("bigint").alias("i"))
-        )
-        truth = (
-            inter.join(sz.withColumnRenamed("doc_id", "a").withColumnRenamed("nsz", "na"), on="a")
-            .join(sz.withColumnRenamed("doc_id", "b").withColumnRenamed("nsz", "nb"), on="b")
-            .filter(
-                F.col("i").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("i")).cast("double")
-                >= 0.8
-            )
-            .select("a", "b")
-        )
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        # single-pass tagged union (round-14): the previous
-        # truth-LEFT-JOIN-candidates + separate n_cand aggregate
-        # consumed the candidate frame twice with incompatible
-        # exchanges, so the WHOLE sigs+banding pipeline executed twice
-        # (the executed plan held two identical 64-permutation
-        # signature aggregates).  Both truth and cand are distinct
-        # (a, b) sets by construction (truth via its groupBy, cand via
-        # minhash_lsh_pairs' trailing .distinct()), so tagging each
-        # side and max-merging on (a, b) yields n_true = Σ_t,
-        # n_cand = Σ_c and n_found = Σ_t·_c in ONE aggregation pass —
-        # candidates computed once, no pair join at all.  Exact int64
-        # counts; identical values for every input.
-        truth_t = truth.select(
-            "a", "b", F.lit(1).alias("_t"), F.lit(0).alias("_c")
-        )
-        cand_t = cand.select(
-            "a", "b", F.lit(0).alias("_t"), F.lit(1).alias("_c")
-        )
-        tagged = (
-            truth_t.unionByName(cand_t)
-            .groupBy("a", "b")
-            .agg(F.max("_t").alias("_t"), F.max("_c").alias("_c"))
-        )
-        return tagged.agg(
-            F.sum("_t").cast("bigint").alias("n_true"),
-            F.sum(F.col("_t") * F.col("_c")).cast("bigint").alias("n_found"),
-            F.sum("_c").cast("bigint").alias("n_cand"),
-        ).select(
-            "n_true",
-            "n_found",
-            "n_cand",
-            F.round(
-                F.col("n_found").cast("double")
-                / F.col("n_true").cast("double"),
-                9,
-            ).alias("recall"),
-            F.round(
-                F.col("n_found").cast("double")
-                / F.col("n_cand").cast("double"),
-                9,
-            ).alias("candidate_precision"),
-        )
-
-    q["lsh_recall"] = q_lsh_recall
-
-    def q_dim_truncation_recall(spark, sf_dir):
-        """Matryoshka-style dimension-truncation evaluation: top-5
-        cosine neighbors computed on the first 32 of 64 dims, scored
-        for recall against the full-dimension truth per query — the
-        harness behind serving half-width embeddings for 2x memory/
-        bandwidth savings.  Both sides run the same broadcast
-        brute-force operator the knn gate checks."""
-        emb = _t(spark, sf_dir, "embeddings")
-        queries_df = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        full = similarity.cosine_topk(corpus, queries_df, k=5).select(
-            "q_id", "vec_id"
-        )
-        tq = queries_df.select(
-            "q_id", F.slice(F.col("q_vec"), 1, 32).alias("q_vec")
-        )
-        tc = corpus.select(
-            "vec_id", F.slice(F.col("embedding"), 1, 32).alias("embedding")
-        )
-        trunc = similarity.cosine_topk(tc, tq, k=5).select(
-            F.col("q_id").alias("_q2"), F.col("vec_id").alias("_v2")
-        )
-        j = full.join(
-            trunc,
-            (full.q_id == F.col("_q2")) & (full.vec_id == F.col("_v2")),
-            "left",
-        )
-        return j.groupBy("q_id").agg(
-            F.sum(F.col("_v2").isNotNull().cast("bigint"))
-            .cast("bigint")
-            .alias("hits"),
-            F.round(
-                F.sum(F.col("_v2").isNotNull().cast("bigint")) / 5.0, 9
-            ).alias("recall_at_5"),
-        )
-
-    q["dim_truncation_recall"] = q_dim_truncation_recall
-
-    def q_kcenter_coreset(spark, sf_dir):
-        """Greedy k-center coreset over the embedding table — the
-        diversity-based data-selection pass (pick the 5 mutually
-        farthest vectors as exemplars).  Distances are EXACT int64
-        squared L2 over 1e6-quantized lanes (|q| <= ~5.3e5 keeps the
-        64-dim sum near 7e13, inside int64), so the per-round argmax
-        is a deterministic integer comparison — no cross-engine float
-        tie can flip a selection.  Each round is one distributed
-        TakeOrdered over the corpus with the selected centers embedded
-        as literal arrays (the kmeans literal-centroid pattern); only
-        k rows ever reach the driver, as control flow
-        (llm/similarity.py kcenter_greedy)."""
-        emb = _t(spark, sf_dir, "embeddings")
-        sel = similarity.kcenter_greedy(emb, k=5, scale=1_000_000)
-        return spark.createDataFrame(
-            sel, "round long, vec_id long, d2_to_set long"
-        )
-
-    q["kcenter_coreset"] = q_kcenter_coreset
-
-    def q_path_trigrams(spark, sf_dir):
-        """Top-10 three-step behavior paths (A>B>C event-type
-        trigrams) from each user's ordered sequence — the order-2
-        companion to markov_transitions.  Two leads in one
-        user-partitioned window, map-side-combined counts, TakeOrdered
-        top-k with the full (count, path) tiebreak."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        t = (
-            e.select(
-                F.col("event_type").alias("_t1"),
-                F.lead("event_type", 1).over(w).alias("_t2"),
-                F.lead("event_type", 2).over(w).alias("_t3"),
-            )
-            .filter(F.col("_t2").isNotNull() & F.col("_t3").isNotNull())
-            .select(
-                F.concat_ws(">", "_t1", "_t2", "_t3").alias("path")
-            )
-            .groupBy("path")
-            .agg(F.count("*").cast("bigint").alias("n"))
-        )
-        return t.orderBy(F.desc("n"), F.asc("path")).limit(10)
-
-    q["path_trigrams"] = q_path_trigrams
-
-    def q_degree_distribution(spark, sf_dir):
-        """Degree histogram of the part-order graph plus the discrete
-        power-law MLE alpha = 1 + n / sum(ln d) (dmin = 1) — the
-        skew diagnostic run before choosing a partitioning for any
-        graph workload (a heavy-tailed degree histogram means salting
-        / skew-join handling, a flat one means plain hash keys).
-        Degrees and histogram counts are exact int64; alpha's ln sum
-        rides the 9-digit round."""
-        li = _t(spark, sf_dir, "lineitem")
-        # histogram and MLE stats both consume the degree table; the
-        # checkpoint keeps the distinct + degree aggregate to one build
-        deg = (
-            li.select("l_orderkey", "l_partkey")
-            .distinct()
-            .groupBy("l_partkey")
-            .agg(F.count("*").cast("bigint").alias("degree"))
-            .localCheckpoint(eager=False)
-        )
-        hist = deg.groupBy("degree").agg(
-            F.count("*").cast("bigint").alias("n_parts")
-        )
-        stats = deg.agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum(F.log(F.col("degree").cast("double"))).alias("_sl"),
-        )
-        alpha = 1 + F.col("_n").cast("double") / F.col("_sl")
-        return (
-            hist.crossJoin(F.broadcast(stats))
-            .select(
-                "degree",
-                "n_parts",
-                F.round(alpha, 9).alias("powerlaw_alpha"),
-            )
-        )
-
-    q["degree_distribution"] = q_degree_distribution
-
-    def q_negsample_table(spark, sf_dir):
-        """Word2vec-style negative-sampling table: the top-100 vocab
-        with unigram^0.75 weights and normalized sampling shares — the
-        smoothed-unigram draw distribution contrastive training uses.
-        Ranks/counts come exact from vocab_stats; pow(c, 0.75) is the
-        one libm call (1-2 ulp cross-engine, 6+ digits under the
-        9-digit round); the 100-term weight total is a bounded final
-        aggregate."""
-        docs = _t(spark, sf_dir, "documents")
-        v = llm_text.vocab_stats(docs, top_k=100).select(
-            "word", "cnt", "rank"
-        )
-        w = F.pow(F.col("cnt").cast("double"), F.lit(0.75))
-        v2 = v.withColumn("_w", w)
-        tot = v2.agg(F.sum("_w").alias("_tw"))
-        return (
-            v2.crossJoin(F.broadcast(tot))
-            .select(
-                "word",
-                "cnt",
-                "rank",
-                F.round("_w", 9).alias("weight"),
-                F.round(F.col("_w") / F.col("_tw"), 9).alias("share"),
-            )
-        )
-
-    q["negsample_table"] = q_negsample_table
-
-    def q_cube_nation_year(spark, sf_dir):
-        """CUBE aggregation with grouping_id — all four (nation, year)
-        rollup combinations of exact revenue cents in one pass (the
-        engine expands the grouping sets map-side; Spark's grouping_id
-        bitmask equals DuckDB's grouping()).  The dimensional (join-fed)
-        CUBE next to cube_revenue's single-table (returnflag,
-        linestatus) cube and rollup_revenue's ROLLUP."""
-        li = _t(spark, sf_dir, "lineitem")
-        o2 = _t(spark, sf_dir, "orders")
-        c = _t(spark, sf_dir, "customer")
-        n = _t(spark, sf_dir, "nation")
-        rev = F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100
-        ).cast("bigint")
-        j = (
-            li.join(o2, li.l_orderkey == o2.o_orderkey)
-            .join(c, o2.o_custkey == c.c_custkey)
-            .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-            .select(
-                "n_name",
-                F.year("o_orderdate").cast("bigint").alias("o_year"),
-                rev.alias("_rc"),
-            )
-        )
-        return j.cube("n_name", "o_year").agg(
-            F.grouping_id().cast("bigint").alias("gid"),
-            F.sum("_rc").cast("bigint").alias("revenue_cents"),
-            F.count("*").cast("bigint").alias("n_lines"),
-        )
-
-    q["cube_nation_year"] = q_cube_nation_year
-
-    def q_range_frame_sum(spark, sf_dir):
-        """Time-RANGE window frame: each event's trailing 30-minute
-        spend per user via RANGE BETWEEN on the microsecond epoch —
-        the frame follows event TIME, not row count (peers with equal
-        timestamps aggregate together in both engines).  User-
-        partitioned windows hash-distribute; sums are exact cents."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        us = F.unix_micros("ts")
-        w = (
-            W.partitionBy("user_id")
-            .orderBy(us)
-            .rangeBetween(-1800 * 1000000, 0)
-        )
-        return e.select(
-            "event_id",
-            "user_id",
-            F.sum(cents).over(w).cast("bigint").alias("trailing_30m_cents"),
-        )
-
-    q["range_frame_sum"] = q_range_frame_sum
-
-    def q_unpivot_metrics(spark, sf_dir):
-        """Wide-to-long melt of a per-user feature table via the native
-        unpivot operator (one projection + explode, no join): three
-        exact int64 metrics become (user_id, metric, value) rows — the
-        shape feature stores and metric sinks ingest."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        wide = e.groupBy("user_id").agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).cast("bigint").alias("n_purchases"),
-            F.sum(F.when(F.col("value").isNotNull(), cents).otherwise(0))
-            .cast("bigint")
-            .alias("total_cents"),
-        )
-        return wide.unpivot(
-            ["user_id"],
-            ["n_events", "n_purchases", "total_cents"],
-            "metric",
-            "value",
-        )
-
-    q["unpivot_metrics"] = q_unpivot_metrics
-
-    def q_orc_roundtrip(spark, sf_dir):
-        """ORC sink -> source identity: the orders table written as ORC
-        (the second columnar interchange format next to parquet; zlib
-        striped, predicate-pushdown-capable) and read back with the
-        original schema — the oracle is the source table, so the gate
-        proves a lossless round-trip including timestamps.  Same
-        session-scoped staging discipline as jsonl_roundtrip."""
-        import os
-        import re
-
-        o2 = _t(spark, sf_dir, "orders")
-        tag = re.sub(r"\W", "_", sf_dir.rstrip("/").split("/")[-1])
-        d = _gate_tmp(spark, f"orc_rt_{tag}")
-        marker = os.path.join(d, "_SUCCESS")
-        if not os.path.exists(marker):
-            o2.write.mode("overwrite").orc(d)
-        return spark.read.schema(o2.schema).orc(d).select(
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-            "o_orderpriority",
-        )
-
-    q["orc_roundtrip"] = q_orc_roundtrip
-
-    def q_csv_roundtrip(spark, sf_dir):
-        """CSV sink -> source identity for the supplier table: written
-        with header + explicit quoting and read back with an explicit
-        schema (no inference pass — at scale that is a second full
-        scan).  Doubles survive via Spark's round-trippable default
-        formatting; the oracle is the source table, proving the
-        lossless round-trip."""
-        import os
-        import re
-
-        s = _t(spark, sf_dir, "supplier")
-        tag = re.sub(r"\W", "_", sf_dir.rstrip("/").split("/")[-1])
-        d = _gate_tmp(spark, f"csv_rt_{tag}")
-        marker = os.path.join(d, "_SUCCESS")
-        if not os.path.exists(marker):
-            s.write.mode("overwrite").option("header", True).csv(d)
-        return spark.read.schema(s.schema).option("header", True).csv(d).select(
-            "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
-        )
-
-    q["csv_roundtrip"] = q_csv_roundtrip
-
-    def q_rendezvous_shards(spark, sf_dir):
-        """Rendezvous (highest-random-weight) routing of documents onto
-        8 shards: each doc goes to the shard whose salted hash of
-        (doc, shard) is highest — the stable-assignment scheme that
-        moves only 1/n of keys when a shard joins or leaves (vs ~all
-        keys under mod-n).  Pure integer argmax over 8 portable hashes
-        per row, no shuffle until the per-shard count; emits the shard
-        histogram so balance is auditable."""
-        docs = _t(spark, sf_dir, "documents")
-        hs = [
-            sampling.salted_hash(
-                F.concat(F.col("doc_id").cast("string"), F.lit(f"#s{s}")),
-                "rv6",
-            )
-            for s in range(8)
-        ]
-        best = hs[0]
-        shard = F.lit(0)
-        for s in range(1, 8):
-            shard = F.when(hs[s] > best, F.lit(s)).otherwise(shard)
-            best = F.greatest(best, hs[s])
-        return (
-            docs.select(shard.cast("bigint").alias("shard"))
-            .groupBy("shard")
-            .agg(F.count("*").cast("bigint").alias("n_docs"))
-        )
-
-    q["rendezvous_shards"] = q_rendezvous_shards
-
-    def q_pareto_parts(spark, sf_dir):
-        """Pareto frontier (skyline) over parts — the multi-objective
-        shortlist on (cheaper retail price, larger size).  A part is
-        dominated iff a strictly-cheaper part is at least as large
-        (M1 >= size) or a same-price part is strictly larger
-        (M2 > size).  M1 is a cumulative max over price order computed
-        WITHOUT a single-partition window: 1024 price-range buckets,
-        per-bucket RANGE windows for the in-bucket prefix, and a
-        broadcast inequality join over the bounded bucket maxima for
-        the cross-bucket prefix (the corpus_shuffle two-level scan).
-        All comparisons are exact ints, so membership is
-        deterministic."""
-        p = _t(spark, sf_dir, "part")
-        cents = F.round(F.col("p_retailprice") * 100).cast("bigint")
-        base = p.select(
-            "p_partkey",
-            cents.alias("price_c"),
-            F.col("p_size").cast("bigint").alias("size"),
-        )
-        mx = base.agg(F.max("price_c").alias("_mp"))
-        # bucketed relation checkpoints once: the window branch, the
-        # bucket maxima, and the distinct-bucket prefix all consume it,
-        # and without the checkpoint each rebuilds the scan + bucketing
-        # (and re-runs the window sorts) independently
-        b0 = (
-            base.crossJoin(F.broadcast(mx))
-            .withColumn(
-                "bkt",
-                F.floor(
-                    (F.col("price_c") * 1024).cast("double")
-                    / (F.col("_mp") + 1).cast("double")
-                ).cast("bigint"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        w_in = (
-            W.partitionBy("bkt")
-            .orderBy("price_c")
-            .rangeBetween(W.unboundedPreceding, -1)
-        )
-        w_eq = W.partitionBy("price_c")
-        b = b0.withColumn("_m1_in", F.max("size").over(w_in)).withColumn(
-            "_m2", F.max("size").over(w_eq)
-        )
-        bmax = b0.groupBy(F.col("bkt").alias("_bb")).agg(
-            F.max("size").alias("_bm")
-        )
-        pre = (
-            b0.select("bkt").distinct()
-            .join(F.broadcast(bmax), F.col("_bb") < F.col("bkt"), "left")
-            .groupBy("bkt")
-            .agg(F.max("_bm").alias("_m1_pre"))
-        )
-        j = b.join(F.broadcast(pre), on="bkt")
-        m1 = F.greatest(
-            F.coalesce(F.col("_m1_in"), F.lit(-1)),
-            F.coalesce(F.col("_m1_pre"), F.lit(-1)),
-        )
-        return j.filter(
-            ~((m1 >= F.col("size")) | (F.col("_m2") > F.col("size")))
-        ).select("p_partkey", "price_c", "size")
-
-    q["pareto_parts"] = q_pareto_parts
-
-    def q_streaming_rate_limit(spark, sf_dir):
-        """Streaming token-bucket rate limiter (streaming/stateful.py
-        streaming_rate_limit): per-user quota enforcement with carried
-        int64 (tokens, last_seen) state across micro-batches — events
-        staged as three sequential ts-range files,
-        maxFilesPerTrigger=1, the streaming_cusum harness.  Refill is a
-        floor division on non-negative microsecond gaps, so the stream
-        equals the recursive-CTE replay bit-for-bit."""
-        from openseize_spark.streaming.stateful import streaming_rate_limit
-
-        e = (
-            _events(spark, sf_dir)
-            .filter(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
-            .select("user_id", "event_id", "ts")
-        )
-        lo, hi = e.agg(F.min("ts"), F.max("ts")).collect()[0]
-        conds = _thirds(F.col("ts"), lo, (hi - lo) / 3)
-        stream = _stage_batches(spark, sf_dir, "ratelim_", e, conds)
-        out = streaming_rate_limit(
-            stream, capacity_tokens=5, us_per_microtoken=60
-        )
-        return drain_stream(spark, out, "gate_streaming_rate_limit").select(
-            "user_id", "event_id", "tokens_after", "accepted"
-        )
-
-    q["streaming_rate_limit"] = q_streaming_rate_limit
-
-    def q_nb_confusion(spark, sf_dir):
-        """Confusion matrix for the naive-Bayes language classifier:
-        per-doc argmax over the nb_lang_scores table (9-digit-rounded
-        scores with a lexicographic tiebreak, so both engines pick the
-        same label) joined against the true lang — the evaluation
-        closing the train/score/evaluate classifier loop.  At most
-        |langs|^2 cells."""
-        nb = q_nb_lang_scores(spark, sf_dir)
-        w = W.partitionBy("doc_id").orderBy(
-            F.desc("log_score"), F.asc("score_lang")
-        )
-        pred = (
-            nb.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id", F.col("score_lang").alias("pred_lang"))
-        )
-        truth = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-        return (
-            truth.join(pred, on="doc_id")
-            .groupBy(F.col("lang").alias("true_lang"), "pred_lang")
-            .agg(F.count("*").cast("bigint").alias("n"))
-        )
-
-    q["nb_confusion"] = q_nb_confusion
-
-    def q_forecast_eval(spark, sf_dir):
-        """Forecast backtest: Holt double-exponential smoothing (the
-        holt_forecast recursion, dyadic alpha=1/4 beta=1/8) fit on the
-        first 23 days of daily revenue, h-step forecasts level + h *
-        trend scored against the 7 held-out days — per-day absolute
-        error and APE, the columns MAE/MAPE summarize.  The fold runs
-        over one bounded 23-element day array; the oracle replays it
-        as a recursive CTE with the identical IEEE expression tree."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        # train and test both consume the <=31-row daily series;
-        # checkpoint so the events scan + aggregate runs once
-        daily = e.groupBy(day.alias("day")).agg(
-            F.sum(cents).cast("bigint").alias("x")
-        ).localCheckpoint(eager=False)
-        train = daily.filter(F.col("day") <= 23)
-        arr = F.array_sort(F.collect_list(F.struct("day", "x")))
-        vals = F.transform(arr, lambda s: s["x"].cast("double"))
-        x1 = F.element_at(vals, 1)
-        x2 = F.element_at(vals, 2)
-        init = F.struct(x2.alias("level"), (x2 - x1).alias("trend"))
-
-        def _step(acc, x):
-            level2 = F.lit(0.25) * x + F.lit(0.75) * (
-                acc["level"] + acc["trend"]
-            )
-            return F.struct(
-                level2.alias("level"),
-                (
-                    F.lit(0.125) * (level2 - acc["level"])
-                    + F.lit(0.875) * acc["trend"]
-                ).alias("trend"),
-            )
-
-        fin = F.aggregate(F.slice(vals, 3, F.size(vals) - 2), init, _step)
-        fit = train.agg(
-            fin["level"].alias("_level"), fin["trend"].alias("_trend")
-        )
-        test = daily.filter(F.col("day") >= 24)
-        fcst = F.col("_level") + (F.col("day") - 23).cast("double") * F.col(
-            "_trend"
-        )
-        ad = F.col("x").cast("double")
-        return (
-            test.crossJoin(F.broadcast(fit))
-            .select(
-                "day",
-                F.col("x").alias("actual_cents"),
-                # round(x, 9) at ~1e6-cent magnitude straddles the two
-                # engines' rounding implementations (exact-decimal
-                # HALF_UP vs scaled-float); 3 decimals of a cent keeps
-                # the scaled value well inside double exactness
-                F.round(fcst, 3).alias("forecast_cents"),
-                F.round(F.abs(ad - fcst), 3).alias("abs_err"),
-                F.round(F.abs(ad - fcst) / ad, 9).alias("ape"),
-            )
-        )
-
-    q["forecast_eval"] = q_forecast_eval
-
-    def q_word_pmi(spark, sf_dir):
-        """Pointwise mutual information for co-occurring top-30 words
-        (document-level co-occurrence): which vocabulary pairs appear
-        together more than independence predicts — the collocation /
-        topic-structure signal.  Presence sets are restricted to the
-        top-30 vocabulary BEFORE pairing, so the per-doc set is bounded
-        at 30 and the quadratic pairing happens IN-ROW over one
-        collect_set aggregate (the market-basket shape): one doc-keyed
-        shuffle total, no presence self-join, and the doc frequencies
-        derive from the same checkpointed set table.  Counts are exact
-        int64 and the PMI log argument is a ratio of exact integer
-        products."""
-        docs = _t(spark, sf_dir, "documents")
-        top = llm_text.vocab_stats(docs, top_k=30).select("word")
-        gs = (
-            llm_text._token_rows(docs, "text", "word", "doc_id")
-            .join(F.broadcast(top), on="word")
-            .groupBy("doc_id")
-            .agg(F.array_sort(F.collect_set("word")).alias("_ws"))
-            .localCheckpoint(eager=False)
-        )
-        n_docs = docs.filter(F.col("text").isNotNull()).agg(
-            F.count("*").cast("bigint").alias("_N")
-        )
-        df_w = (
-            gs.select(F.explode("_ws").alias("word"))
-            .groupBy("word")
-            .agg(F.count("*").cast("bigint").alias("_df"))
-        )
-        ws = F.col("_ws")
-        pair_arr = F.flatten(
-            F.transform(
-                ws,
-                lambda x, i: F.transform(
-                    F.slice(ws, i + F.lit(2), F.size(ws)),
-                    lambda y: F.struct(x.alias("word_a"), y.alias("word_b")),
-                ),
-            )
-        )
-        pairs = (
-            gs.filter(F.size("_ws") >= 2)
-            .select(F.explode(pair_arr).alias("_p"))
-            .select("_p.word_a", "_p.word_b")
-            .groupBy("word_a", "word_b")
-            .agg(F.count("*").cast("bigint").alias("n_ab"))
-            .filter(F.col("n_ab") >= 5)
-        )
-        return (
-            pairs.join(
-                F.broadcast(df_w.withColumnRenamed("word", "word_a")
-                            .withColumnRenamed("_df", "_dfa")),
-                on="word_a",
-            )
-            .join(
-                F.broadcast(df_w.withColumnRenamed("word", "word_b")
-                            .withColumnRenamed("_df", "_dfb")),
-                on="word_b",
-            )
-            .crossJoin(F.broadcast(n_docs))
-            .select(
-                "word_a",
-                "word_b",
-                "n_ab",
-                F.round(
-                    F.log2(
-                        (F.col("n_ab") * F.col("_N")).cast("double")
-                        / (F.col("_dfa") * F.col("_dfb")).cast("double")
-                    ),
-                    9,
-                ).alias("pmi"),
-            )
-        )
-
-    q["word_pmi"] = q_word_pmi
-
-    def q_ts_features(spark, sf_dir):
-        """Per-user time-series feature table (the tsfresh-style
-        feature-extraction pass a behavioral model trains on): count,
-        mean/std, range, OLS slope over event index, and lag-1
-        autocorrelation — every moment an exact int64 sum over the
-        user's (ts, event_id)-ordered cent series, divided once at the
-        end (the value_hour_corr discipline applied five ways in one
-        pass)."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        r = e.select(
-            "user_id",
-            cents.alias("c"),
-            F.row_number().over(w).cast("bigint").alias("i"),
-            F.lead(cents).over(w).alias("c_next"),
-        )
-        m = r.groupBy("user_id").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("c").cast("bigint").alias("_s1"),
-            F.sum(F.col("c") * F.col("c")).cast("bigint").alias("_s2"),
-            F.max("c").cast("bigint").alias("_mx"),
-            F.min("c").cast("bigint").alias("_mn"),
-            F.sum(F.col("i")).cast("bigint").alias("_si"),
-            F.sum(F.col("i") * F.col("i")).cast("bigint").alias("_sii"),
-            F.sum(F.col("i") * F.col("c")).cast("bigint").alias("_sic"),
-            F.sum(F.when(F.col("c_next").isNotNull(), 1).otherwise(0))
-            .cast("bigint")
-            .alias("_np"),
-            F.sum(F.when(F.col("c_next").isNotNull(), F.col("c")).otherwise(0))
-            .cast("bigint")
-            .alias("_px"),
-            F.sum(
-                F.when(F.col("c_next").isNotNull(), F.col("c_next")).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("_py"),
-            F.sum(
-                F.when(
-                    F.col("c_next").isNotNull(), F.col("c") * F.col("c_next")
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("_pxy"),
-            F.sum(
-                F.when(
-                    F.col("c_next").isNotNull(), F.col("c") * F.col("c")
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("_pxx"),
-            F.sum(
-                F.when(
-                    F.col("c_next").isNotNull(),
-                    F.col("c_next") * F.col("c_next"),
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("_pyy"),
-        )
-        nd = F.col("n").cast("double")
-        mean = F.col("_s1").cast("double") / nd
-        var = F.col("_s2").cast("double") / nd - mean * mean
-        slope = (
-            (F.col("n") * F.col("_sic") - F.col("_si") * F.col("_s1"))
-            .cast("double")
-            / (F.col("n") * F.col("_sii") - F.col("_si") * F.col("_si"))
-            .cast("double")
-        )
-        acnum = (
-            F.col("_np") * F.col("_pxy") - F.col("_px") * F.col("_py")
-        ).cast("double")
-        acden = F.sqrt(
-            (F.col("_np") * F.col("_pxx") - F.col("_px") * F.col("_px"))
-            .cast("double")
-        ) * F.sqrt(
-            (F.col("_np") * F.col("_pyy") - F.col("_py") * F.col("_py"))
-            .cast("double")
-        )
-        return m.select(
-            "user_id",
-            "n",
-            F.round(mean, 9).alias("mean_cents"),
-            F.round(F.sqrt(var), 9).alias("std_cents"),
-            (F.col("_mx") - F.col("_mn")).alias("range_cents"),
-            F.round(slope, 9).alias("index_slope"),
-            F.round(acnum / acden, 9).alias("autocorr1"),
-        )
-
-    q["ts_features"] = q_ts_features
-
-    def q_above_brand_avg(spark, sf_dir):
-        """Correlated-scalar-subquery shape: parts priced strictly
-        above their brand's average retail price — the oracle keeps
-        the textbook correlated form (DuckDB decorrelates it), while
-        the engine side expresses the decorrelated plan directly (one
-        broadcast aggregate join).  The comparison is EXACT integer
-        cross-multiplication (price * n > sum), so no float average
-        can flip a boundary row."""
-        p = _t(spark, sf_dir, "part")
-        cents = F.round(F.col("p_retailprice") * 100).cast("bigint")
-        base = p.select("p_partkey", "p_brand", cents.alias("price_c"))
-        ag = base.groupBy(F.col("p_brand").alias("_b")).agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum("price_c").cast("bigint").alias("_s"),
-        )
-        return (
-            base.join(F.broadcast(ag), F.col("_b") == F.col("p_brand"))
-            .filter(F.col("price_c") * F.col("_n") > F.col("_s"))
-            .select("p_partkey", "p_brand", "price_c")
-        )
-
-    q["above_brand_avg"] = q_above_brand_avg
-
-    def q_kmv_distinct(spark, sf_dir):
-        """KMV (k-minimum-values / theta) distinct sketch per event
-        type with its accuracy harness: the 32 smallest salted user
-        hashes per type give estimate (k-1) * H / h_k, emitted next to
-        the exact distinct count (the histogram_quantiles pattern for
-        cardinality).  The sketch is mergeable (k smallest of a union
-        of k-smallest sets) — at scale the shuffle carries 32 hashes
-        per (type, partition) instead of the distinct user sets.
-        h_k is an exact integer; one float division at the end."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        du = e.select("event_type", "user_id").distinct()
-        h = sampling.salted_hash(F.col("user_id"), "kmv6")
-        r = du.select("event_type", h.alias("_h")).withColumn(
-            "_b", F.pmod(F.col("_h"), F.lit(256))
-        )
-        # two-level k-smallest merge: per (type, hash-bucket) partial
-        # k-min (bounded arrays), then a bounded 256-array merge per
-        # type — never a per-type rank window over the full distinct set
-        lvl1 = r.groupBy("event_type", "_b").agg(
-            F.slice(F.array_sort(F.collect_set("_h")), 1, 32).alias("_ks")
-        )
-        lvl2 = lvl1.groupBy("event_type").agg(
-            # F.get is 0-based and NULL out-of-bounds (ANSI-safe when a
-            # type has fewer than 32 distinct users: the sketch is exact
-            # there and the estimate column goes NULL by design)
-            F.get(
-                F.slice(
-                    F.array_sort(F.flatten(F.collect_list("_ks"))), 1, 32
-                ),
-                31,
-            )
-            .cast("bigint")
-            .alias("kth_hash")
-        )
-        exact = du.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("exact_distinct")
-        )
-        return exact.join(F.broadcast(lvl2), on="event_type").select(
-            "event_type",
-            "exact_distinct",
-            "kth_hash",
-            F.round(
-                F.lit(31.0)
-                * F.lit(float(sampling.HASH_SPACE))
-                / F.col("kth_hash").cast("double"),
-                6,
-            ).alias("kmv_estimate"),
-        )
-
-    q["kmv_distinct"] = q_kmv_distinct
-
-    def q_kmv_set_ops(spark, sf_dir):
-        """Theta-sketch set operations: union and intersection distinct
-        estimates for (purchase, view) user sets from their merged
-        32-minimum-value sketches — union = (k-1)*H/theta over the
-        merged k-smallest, intersection = (matching fraction below
-        theta) * union (the inclusion rule theta sketches use) — next
-        to the exact counts.  Everything through the final divides is
-        exact integers over 32-row broadcast sets."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        h = sampling.salted_hash(F.col("user_id"), "kmv6")
-
-        # one events scan per type: the distinct user sets feed BOTH the
-        # sketch legs and the exact legs (round-14 plan sweep: ~10
-        # events scans -> 2; every derived frame below is <= 32 rows or
-        # an aggregate, so the lazy checkpoints are bounded and
-        # GC-released with the result)
-        pa = (
-            e.filter(F.col("event_type") == "purchase")
-            .select("user_id")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        pv = (
-            e.filter(F.col("event_type") == "view")
-            .select("user_id")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-
-        def kset(src):
-            # distinct hashes -> TakeOrdered top-32 (per-partition
-            # partial top-k + merge; no global window)
-            return (
-                src.select(h.alias("_h"))
-                .distinct()
-                .orderBy("_h")
-                .limit(32)
-                .localCheckpoint(eager=False)
-            )
-
-        sa = kset(pa).withColumnRenamed("_h", "_ha")
-        sb = kset(pv).withColumnRenamed("_h", "_hb")
-        merged = (
-            sa.select(F.col("_ha").alias("_h"))
-            .union(sb.select(F.col("_hb").alias("_h")))
-            .distinct()
-            .orderBy("_h")
-            .limit(32)
-            .localCheckpoint(eager=False)
-        )
-        theta = merged.agg(F.max("_h").cast("bigint").alias("_theta"))
-        both = (
-            merged.join(
-                F.broadcast(sa.select(F.col("_ha").alias("_h"))), on="_h"
-            )
-            .join(
-                F.broadcast(sb.select(F.col("_hb").alias("_h"))), on="_h"
-            )
-            .agg(F.count("*").cast("bigint").alias("_m"))
-        )
-        exact_u = pa.union(pv).distinct().agg(
-            F.count("*").cast("bigint").alias("u_exact")
-        )
-        exact_i = pa.join(pv, on="user_id").agg(
-            F.count("*").cast("bigint").alias("i_exact")
-        )
-        u_est = (
-            F.lit(31.0)
-            * F.lit(float(sampling.HASH_SPACE))
-            / F.col("_theta").cast("double")
-        )
-        return (
-            exact_u.crossJoin(F.broadcast(exact_i))
-            .crossJoin(F.broadcast(theta))
-            .crossJoin(F.broadcast(both))
-            .select(
-                "u_exact",
-                F.round(u_est, 6).alias("u_est"),
-                "i_exact",
-                F.round(
-                    (F.col("_m").cast("double") / F.lit(32.0)) * u_est, 6
-                ).alias("i_est"),
-            )
-        )
-
-    q["kmv_set_ops"] = q_kmv_set_ops
-
-    def q_csv_corrupt_records(spark, sf_dir):
-        """Malformed-CSV ingestion policy: a fixed 7-row fixture with a
-        type-mismatched cell, a short row, an over-long row, and empty
-        cells, read in PERMISSIVE mode with a _corrupt_record column —
-        pinning the quarantine semantics a 100-TB ingest relies on:
-        only the type-mismatched cell quarantines its row (raw text in
-        the corrupt column, job never dies); short rows pad with
-        nulls, over-long rows DROP the extra tokens, and empty cells
-        are nulls -- all ingested as good.  The oracle is the literal
-        summary of those observed-and-pinned rules (7 rows, 1 corrupt,
-        good qty 2+4+7+8+9 = 30)."""
-        import os
-
-        d = _gate_tmp(spark, "csvbad")
-        os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, "rows.csv")
-        if not os.path.exists(path):
-            with open(path, "w") as f:
-                f.write(
-                    "id,qty,price\n"
-                    "1,2,3.5\n"
-                    "2,4,1.25\n"
-                    "3,,2.0\n"
-                    "4,notanint,9.0\n"
-                    "5,7\n"
-                    "6,8,1.0,extra\n"
-                    "7,9,0.5\n"
-                )
-        df = (
-            spark.read.schema(
-                "id int, qty int, price double, _corrupt_record string"
-            )
-            .option("header", True)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .csv(path)
-        )
-        good_qty = F.when(
-            F.col("_corrupt_record").isNull(), F.col("qty")
-        ).otherwise(0)
-        return df.agg(
-            F.count("*").cast("bigint").alias("n_rows"),
-            F.sum(F.col("_corrupt_record").isNotNull().cast("bigint"))
-            .cast("bigint")
-            .alias("n_corrupt"),
-            F.sum(F.col("_corrupt_record").isNull().cast("bigint"))
-            .cast("bigint")
-            .alias("n_good"),
-            F.sum(F.coalesce(good_qty, F.lit(0)))
-            .cast("bigint")
-            .alias("good_qty_sum"),
-        )
-
-    q["csv_corrupt_records"] = q_csv_corrupt_records
-
-    def q_kneser_ney_bigram(spark, sf_dir):
-        """Interpolated Kneser-Ney bigram probabilities (discount
-        0.75) — the canonical LM smoothing, next to the Laplace
-        unigram/bigram scores: P(w2|w1) = (c12 - d)/c1 + (d * N1+left
-        / c1) * (N1+right / bigram_types), every count exact int64
-        from doc-windowed adjacent pairs and every continuation count
-        a distinct-count aggregate; one mirrored float chain per row.
-        Emitted for bigrams with c12 >= 3 (bounded output), the model
-        table a perplexity filter would consume."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        toks = docs.select(
-            "doc_id", F.posexplode(dedup.tokenize(F.col("text"))).alias("pos", "w")
-        )
-        wdoc = W.partitionBy("doc_id").orderBy("pos")
-        bi = (
-            toks.select(
-                F.col("w").alias("w1"),
-                F.lead("w").over(wdoc).alias("w2"),
-            )
-            .filter(F.col("w2").isNotNull())
-            .groupBy("w1", "w2")
-            .agg(F.count("*").cast("bigint").alias("c12"))
-            # four consumers (left/right continuation counts, type total,
-            # output rows); the checkpoint keeps the token explode +
-            # per-doc window to ONE pass instead of four
-            .localCheckpoint(eager=False)
-        )
-        c1 = bi.groupBy("w1").agg(
-            F.sum("c12").cast("bigint").alias("_c1"),
-            F.count("*").cast("bigint").alias("_nl"),
-        )
-        nr = bi.groupBy("w2").agg(
-            F.count("*").cast("bigint").alias("_nr")
-        )
-        tt = bi.agg(F.count("*").cast("bigint").alias("_T"))
-        p = (
-            (F.col("c12").cast("double") - 0.75)
-            / F.col("_c1").cast("double")
-            + (
-                0.75
-                * F.col("_nl").cast("double")
-                / F.col("_c1").cast("double")
-            )
-            * (F.col("_nr").cast("double") / F.col("_T").cast("double"))
-        )
-        return (
-            bi.filter(F.col("c12") >= 3)
-            .join(F.broadcast(c1), on="w1")
-            .join(F.broadcast(nr), on="w2")
-            .crossJoin(F.broadcast(tt))
-            .select(
-                "w1",
-                "w2",
-                "c12",
-                F.round(p, 9).alias("p_kn"),
-            )
-        )
-
-    q["kneser_ney_bigram"] = q_kneser_ney_bigram
-
-    def q_span_corruption(spark, sf_dir):
-        """T5-style span-corruption plan: deterministic mask-span
-        starts (salted hash of (doc, position) under a 1/15 cut),
-        fixed span length 3, and the per-doc masked-position census —
-        the denoising-pretraining data-prep pass.  Coverage counts
-        come from a bounded range join (each start covers 3
-        positions); overlapping spans merge through the DISTINCT.  All
-        integer except the final ratio."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        toks = docs.select(
-            "doc_id", F.posexplode(dedup.tokenize(F.col("text"))).alias("pos", "w")
-        ).select("doc_id", "pos")
-        cut = sampling.HASH_SPACE // 15
-        h = sampling.salted_hash(
-            F.concat(
-                F.col("doc_id").cast("string"),
-                F.lit(":"),
-                F.col("pos").cast("string"),
-            ),
-            "sc6",
-        )
-        starts = toks.filter(h < cut).select(
-            F.col("doc_id").alias("_d"), F.col("pos").alias("_s")
-        )
-        nt = toks.groupBy("doc_id").agg(
-            F.count("*").cast("bigint").alias("n_tokens")
-        )
-        ns = starts.groupBy(F.col("_d").alias("doc_id")).agg(
-            F.count("*").cast("bigint").alias("n_spans")
-        )
-        covered = (
-            toks.join(
-                starts,
-                (F.col("_d") == F.col("doc_id"))
-                & (F.col("pos") >= F.col("_s"))
-                & (F.col("pos") <= F.col("_s") + 2),
-            )
-            .select("doc_id", "pos")
-            .distinct()
-            .groupBy("doc_id")
-            .agg(F.count("*").cast("bigint").alias("n_masked"))
-        )
-        return (
-            nt.join(ns, on="doc_id", how="left")
-            .join(covered, on="doc_id", how="left")
-            .select(
-                "doc_id",
-                "n_tokens",
-                F.coalesce(F.col("n_spans"), F.lit(0))
-                .cast("bigint")
-                .alias("n_spans"),
-                F.coalesce(F.col("n_masked"), F.lit(0))
-                .cast("bigint")
-                .alias("n_masked"),
-                F.round(
-                    F.coalesce(F.col("n_masked"), F.lit(0)).cast("double")
-                    / F.col("n_tokens").cast("double"),
-                    9,
-                ).alias("mask_ratio"),
-            )
-        )
-
-    q["span_corruption"] = q_span_corruption
-
-    def q_padding_waste(spark, sf_dir):
-        """Length-bucket batching efficiency: docs bucketed by
-        token-length // 64, per-bucket padded-token waste
-        (sum of bucket_max - len) next to what padding to the GLOBAL
-        max would cost — the measurement behind length-bucketed batch
-        construction (why you bucket before padding).  All exact
-        int64; the saving ratio divides once."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        n = llm_text.token_count(F.col("text")).cast("bigint")
-        d = docs.select(n.alias("len")).filter(F.col("len") > 0)
-        b = d.withColumn("bucket", F.floor(F.col("len") / 64).cast("bigint"))
-        per = b.groupBy("bucket").agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.max("len").cast("bigint").alias("bucket_max"),
-            F.sum("len").cast("bigint").alias("_sum_len"),
-        ).withColumn(
-            "bucket_waste",
-            (F.col("n_docs") * F.col("bucket_max") - F.col("_sum_len"))
-            .cast("bigint"),
-        )
-        g = d.agg(
-            F.max("len").cast("bigint").alias("_gmax"),
-            F.count("*").cast("bigint").alias("_gn"),
-            F.sum("len").cast("bigint").alias("_gsum"),
-        )
-        return (
-            per.crossJoin(F.broadcast(g))
-            .select(
-                "bucket",
-                "n_docs",
-                "bucket_max",
-                "bucket_waste",
-                (F.col("n_docs") * F.col("_gmax") - F.col("_sum_len"))
-                .cast("bigint")
-                .alias("global_pad_waste"),
-                # a bucket whose docs all sit at the global max has
-                # zero waste either way: define the saving as 0 there
-                # (ANSI division guard)
-                F.when(
-                    (F.col("n_docs") * F.col("_gmax") - F.col("_sum_len"))
-                    == 0,
-                    F.lit(0.0),
-                )
-                .otherwise(
-                    F.round(
-                        F.lit(1.0)
-                        - F.col("bucket_waste").cast("double")
-                        / (
-                            F.col("n_docs") * F.col("_gmax")
-                            - F.col("_sum_len")
-                        ).cast("double"),
-                        9,
-                    )
-                )
-                .alias("saving_ratio"),
-            )
-        )
-
-    q["padding_waste"] = q_padding_waste
-
-    def q_packing_efficiency(spark, sf_dir):
-        """Sequence-packing efficiency: bucketed shelf packing — the
-        distributed closed form of first-fit-decreasing — vs the
-        fractional lower bound.  Docs longer than the context C=128 are
-        pre-chunked greedily (len div C full bins at zero waste; the
-        remainder joins its length bucket), so the semantics are total
-        over any length distribution.  Each width-16 length bucket
-        packs into shelves holding slots = C div upper docs (upper =
-        the bucket's inclusive ceiling), needing
-        (n + slots - 1) div slots bins — FFD run shelf-wise, where a
-        doc shares a shelf only with docs of its own bucket (the
-        classic shelf/harmonic bound, within one bucket-width of true
-        FFD).  All counts and wastes are exact int64; the two
-        efficiency ratios divide once at the end.  One corpus scan,
-        one <=8-row bucket aggregation, the global comparison row a
-        1-row broadcast — nothing here grows with the corpus except
-        the scan.  Round-10 registration (staged on the r10-batch
-        branch)."""
-        C, W = 128, 16
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        d = (
-            docs.select(
-                llm_text.token_count(F.col("text"))
-                .cast("bigint")
-                .alias("len")
-            )
-            .filter(F.col("len") > 0)
-            .select(
-                "len",
-                F.expr(f"len div {C}").cast("bigint").alias("full_bins"),
-                (F.col("len") % C).cast("bigint").alias("rem"),
-            )
-        )
-        per = (
-            d.filter(F.col("rem") > 0)
-            .withColumn("bucket", F.expr(f"(rem - 1) div {W}").cast("bigint"))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").cast("bigint").alias("n_docs"),
-                F.sum("rem").cast("bigint").alias("sum_len"),
-            )
-            .withColumn("upper_len", ((F.col("bucket") + 1) * W).cast("bigint"))
-            .withColumn(
-                "slots_per_bin",
-                F.expr(f"{C} div upper_len").cast("bigint"),
-            )
-            .withColumn(
-                "bins",
-                F.expr("(n_docs + slots_per_bin - 1) div slots_per_bin")
-                .cast("bigint"),
-            )
-            .withColumn(
-                "waste_tokens",
-                (F.col("bins") * C - F.col("sum_len")).cast("bigint"),
-            )
-        )
-        shelf = per.agg(F.sum("bins").cast("bigint").alias("_shelf_bins"))
-        raw = d.agg(
-            F.sum("full_bins").cast("bigint").alias("_full_bins"),
-            F.sum("len").cast("bigint").alias("_total_len"),
-        )
-        g = raw.crossJoin(shelf).select(
-            (F.col("_full_bins") + F.col("_shelf_bins"))
-            .cast("bigint")
-            .alias("_total_bins"),
-            F.expr(f"(_total_len + {C} - 1) div {C}")
-            .cast("bigint")
-            .alias("_lb_bins"),
-            "_total_len",
-        )
-        return per.crossJoin(F.broadcast(g)).select(
-            "bucket",
-            "upper_len",
-            "slots_per_bin",
-            "n_docs",
-            "sum_len",
-            "bins",
-            "waste_tokens",
-            F.col("_total_bins").alias("total_bins"),
-            F.col("_lb_bins").alias("lb_bins"),
-            F.round(
-                F.col("_total_len").cast("double")
-                / (F.col("_total_bins") * C).cast("double"),
-                9,
-            ).alias("efficiency"),
-            F.round(
-                F.col("_total_len").cast("double")
-                / (F.col("_lb_bins") * C).cast("double"),
-                9,
-            ).alias("lb_efficiency"),
-        )
-
-    q["packing_efficiency"] = q_packing_efficiency
-
-    def q_priority_sample(spark, sf_dir):
-        """Priority sampling (Duffield-Lund-Thorup): the 50 documents
-        with the largest integer priorities w * 2^32 div (h + 1) —
-        weighted sampling without replacement whose tau-adjusted
-        weights make subset sums unbiased (llm/sampling.priority_sample).
-        One codegen projection + one TakeOrdered(k+1); the survivors
-        are control-sized and rank via a broadcast inequality
-        self-join, never a data-bearing single-partition window."""
-        docs = _t(spark, sf_dir, "documents")
-        return sampling.priority_sample(
-            docs, k=50, weight_col="n_chars", key_col="doc_id", seed="pri"
-        )
-
-    q["priority_sample"] = q_priority_sample
-
-    def q_hits_scores(spark, sf_dir):
-        """HITS hubs/authorities over the bipartite customer -> part
-        purchase graph (llm/dedup.hits): 3 max-normalized rounds in
-        exact integer units — broad-basket customers score as hubs,
-        widely-bought parts as authorities.  The fifth iterative-
-        algorithm shape; per round the checkpointed edge list (stored
-        partitioned on each join key) meets two |V|-row score tables."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                F.col("o_custkey").alias("src"),
-                F.col("l_partkey").alias("dst"),
-            )
-            .distinct()
-        )
-        return dedup.hits(edges, iters=3, scale=10**6)
-
-    q["hits_scores"] = q_hits_scores
-
-    def q_rouge_pairs(spark, sf_dir):
-        """ROUGE-1/ROUGE-2 recall/precision/F1 per document pair
-        (llm/text.rouge_n) — the n-gram-overlap generation-eval metric
-        and the fuzzy-containment decontamination signal.  The pair
-        fixture is consecutive doc_ids (a pure equi-join on
-        doc_id + 1 — zero windows, zero ranks); production callers
-        supply eval pairs keyed by prompt id or LSH candidates.  All
-        counts exact int64, one division per ratio."""
-        docs = _t(spark, sf_dir, "documents")
-        pairs = docs.select(F.col("doc_id").alias("ref_id")).join(
-            docs.select(
-                (F.col("doc_id") - 1).alias("ref_id"),
-                F.col("doc_id").alias("cand_id"),
-            ),
-            on="ref_id",
-        )
-        return llm_text.rouge_n(pairs, docs)
-
-    q["rouge_pairs"] = q_rouge_pairs
-
-    def q_rouge_verify(spark, sf_dir):
-        """ROUGE-1/2 verification over the MinHash-LSH candidate pairs
-        — the composed fuzzy-containment decontamination pass the
-        rouge_n docstring advertises: candidates come from the
-        banding stack (never all-pairs), the clipped n-gram overlap
-        then grades HOW MUCH of the reference document the candidate
-        reproduces (recall) vs dilutes (precision) — the graded signal
-        a binary Jaccard threshold flattens.  Composes two
-        independently-gated layers; all counts exact int64, one
-        division per ratio."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        pairs = cand.select(
-            F.col("a").alias("ref_id"), F.col("b").alias("cand_id")
-        )
-        return llm_text.rouge_n(pairs, docs)
-
-    q["rouge_verify"] = q_rouge_verify
-
-    def q_nb_calibration(spark, sf_dir):
-        """Margin-binned calibration of the naive-Bayes language
-        classifier: decision margin (top log-score minus runner-up,
-        both already 9-digit-rounded and bit-identical across engines)
-        bucketed into width-1/4 bands capped at 9, each band's doc
-        count and argmax accuracy — the reliability table that decides
-        a routing threshold (completes train / score / evaluate /
-        CALIBRATE for the classifier loop).  The margin difference,
-        the division by the DYADIC band width (exact in IEEE), and
-        floor are engine-identical ops on identical inputs; accuracy
-        is one division of exact int64 counts."""
-        nb = q_nb_lang_scores(spark, sf_dir)
-        w = W.partitionBy("doc_id").orderBy(
-            F.desc("log_score"), F.asc("score_lang")
-        )
-        per_doc = (
-            nb.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= 2)
-            .groupBy("doc_id")
-            .agg(
-                F.max(
-                    F.when(F.col("_rn") == 1, F.col("score_lang"))
-                ).alias("pred_lang"),
-                F.max(F.when(F.col("_rn") == 1, F.col("log_score"))).alias(
-                    "_s1"
-                ),
-                F.max(F.when(F.col("_rn") == 2, F.col("log_score"))).alias(
-                    "_s2"
-                ),
-            )
-        )
-        truth = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-        band = F.least(
-            F.floor((F.col("_s1") - F.col("_s2")) / F.lit(0.25)),
-            F.lit(9).cast("bigint"),
-        ).cast("bigint")
-        ok = F.when(F.col("pred_lang") == F.col("lang"), 1).otherwise(0)
-        return (
-            per_doc.join(truth, on="doc_id")
-            .select(band.alias("margin_band"), ok.alias("_ok"))
-            .groupBy("margin_band")
-            .agg(
-                F.count("*").cast("bigint").alias("n_docs"),
-                F.sum("_ok").cast("bigint").alias("n_correct"),
-                F.round(
-                    F.sum("_ok").cast("double")
-                    / F.count("*").cast("double"),
-                    9,
-                ).alias("accuracy"),
-            )
-        )
-
-    q["nb_calibration"] = q_nb_calibration
-
-    def q_gram_novelty(spark, sf_dir):
-        """Per-document 8-gram novelty in ingestion order
-        (llm/dedup.gram_novelty): the fraction of a doc's distinct
-        gram fingerprints first seen in THIS doc — the crawl-
-        saturation signal and the incremental-dedup drop score.  One
-        gram explode, two md5-keyed aggregates, one id rollup; exact
-        ints until the final division."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.gram_novelty(docs, n=8)
-
-    q["gram_novelty"] = q_gram_novelty
-
-    def q_kappa_classifiers(spark, sf_dir):
-        """Cohen's kappa agreement between the two language
-        classifiers the repo ships — the trained naive-Bayes argmax
-        (nb_lang_scores) and the marker-heuristic language_id — the
-        inter-rater check that decides whether a cheap heuristic can
-        replace the trained model for routing.  The (pred_nb,
-        pred_marker) contingency is at most |langs|^2 cells; po, pe,
-        and kappa = (N*agree - S) / (N^2 - S) with S = sum of
-        row*column marginal products are each ONE division of exact
-        int64 operands (the textbook float po/pe subtraction is
-        algebraically collapsed so no intermediate float combines)."""
-        docs = _t(spark, sf_dir, "documents")
-        nb = q_nb_lang_scores(spark, sf_dir)
-        w = W.partitionBy("doc_id").orderBy(
-            F.desc("log_score"), F.asc("score_lang")
-        )
-        p1 = (
-            nb.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("doc_id", F.col("score_lang").alias("_p1"))
-        )
-        p2 = llm_text.language_id(docs).select(
-            "doc_id", F.col("lang_pred").alias("_p2")
-        )
-        # the contingency table is bounded (|langs|^2 cells) but has
-        # three consumers (totals, row marginals, column marginals)
-        cells = (
-            p1.join(p2, on="doc_id")
-            .groupBy("_p1", "_p2")
-            .agg(F.count("*").cast("bigint").alias("_n"))
-            .localCheckpoint(eager=False)
-        )
-        tot = cells.agg(
-            F.sum("_n").cast("bigint").alias("_N"),
-            F.sum(
-                F.when(F.col("_p1") == F.col("_p2"), F.col("_n")).otherwise(
-                    0
-                )
-            )
-            .cast("bigint")
-            .alias("_A"),
-        )
-        rows_m = cells.groupBy("_p1").agg(
-            F.sum("_n").cast("bigint").alias("_r")
-        )
-        cols_m = cells.groupBy("_p2").agg(
-            F.sum("_n").cast("bigint").alias("_c")
-        )
-        s = (
-            rows_m.join(cols_m, rows_m._p1 == cols_m._p2)
-            .agg(
-                F.coalesce(F.sum(F.col("_r") * F.col("_c")), F.lit(0))
-                .cast("bigint")
-                .alias("_S")
-            )
-        )
-        return tot.crossJoin(F.broadcast(s)).select(
-            F.col("_N").alias("n_docs"),
-            F.col("_A").alias("n_agree"),
-            F.round(
-                F.col("_A").cast("double") / F.col("_N").cast("double"), 9
-            ).alias("po"),
-            F.round(
-                F.col("_S").cast("double")
-                / (F.col("_N") * F.col("_N")).cast("double"),
-                9,
-            ).alias("pe"),
-            F.round(
-                (F.col("_N") * F.col("_A") - F.col("_S")).cast("double")
-                / F.nullif(
-                    (F.col("_N") * F.col("_N") - F.col("_S")).cast(
-                        "double"
-                    ),
-                    F.lit(0.0),
-                ),
-                9,
-            ).alias("kappa"),
-        )
-
-    q["kappa_classifiers"] = q_kappa_classifiers
-
-    def q_ndcg_eval(spark, sf_dir):
-        """NDCG@10 of the BM25 ranker per query — the graded-relevance
-        ranking metric that completes the retrieval-eval family
-        (recall@k, overlap@10, footrule).  Graded relevance = number
-        of DISTINCT query terms present in the document (deterministic
-        and exact); gains (2^rel - 1) use an integer shift, each
-        positional term (gain / log2(rank + 1)) quantizes to integer
-        1e-9 units (the bm25 discipline) so the per-query DCG and
-        ideal-DCG sums are exact int64 — no float accumulates across
-        rows.  The ideal ordering sorts the retrieved set by rel desc
-        (tie order cannot change the sum: equal rel at swapped
-        positions contribute identical terms), the standard @k
-        normalization over the retrieved list.  NDCG divides two exact
-        int64 unit sums once."""
-        docs = _t(spark, sf_dir, "documents")
-        bm = q_bm25_topk(spark, sf_dir).select(
-            "query_id", "doc_id", "rank"
-        )
-        toks = llm_text._token_rows(docs, "text", "word", "doc_id").distinct()
-        qt = spark.createDataFrame(
-            [
-                (qid, w)
-                for qid, s in _BM25_QUERIES.items()
-                for w in sorted(set(s.split()))
-            ],
-            "query_id int, word string",
-        )
-        rel_tbl = (
-            F.broadcast(qt)
-            .join(toks, on="word")
-            .groupBy("query_id", "doc_id")
-            .agg(F.count("*").cast("bigint").alias("_rel"))
-        )
-        scored = bm.join(rel_tbl, on=["query_id", "doc_id"], how="left").select(
-            "query_id",
-            "doc_id",
-            "rank",
-            F.coalesce(F.col("_rel"), F.lit(0)).cast("bigint").alias("_rel"),
-        )
-        # pyspark's shiftleft() only takes a literal bit count — the
-        # column-valued shift goes through the SQL expression
-        gain = F.expr(
-            "CAST(shiftleft(1, CAST(_rel AS INT)) - 1 AS DOUBLE)"
-        )
-        units = lambda rank_col: F.round(
-            gain / F.log2(rank_col.cast("double") + F.lit(1.0)) * 1e9
-        ).cast("bigint")
-        w_ideal = W.partitionBy("query_id").orderBy(
-            F.desc("_rel"), F.asc("doc_id")
-        )
-        both = scored.withColumn(
-            "_irank", F.row_number().over(w_ideal).cast("bigint")
-        ).select(
-            "query_id",
-            units(F.col("rank")).alias("_du"),
-            units(F.col("_irank")).alias("_iu"),
-        )
-        return both.groupBy("query_id").agg(
-            F.sum("_du").cast("bigint").alias("dcg_units"),
-            F.sum("_iu").cast("bigint").alias("idcg_units"),
-            F.round(
-                F.sum("_du").cast("double")
-                / F.nullif(F.sum("_iu").cast("double"), F.lit(0.0)),
-                9,
-            ).alias("ndcg"),
-        )
-
-    q["ndcg_eval"] = q_ndcg_eval
-
-    def q_roc_auc_binned(spark, sf_dir):
-        """Binned exact ROC-AUC of the NB classifier's en-vs-rest
-        decision value — the per-token margin (en log-score minus the
-        best other language's, over the en token count; the standard
-        one-vs-rest reduction) — the threshold-free discrimination
-        metric completing accuracy / confusion / calibration / kappa.
-        The score is binned onto a FIXED bounded grid (dyadic width
-        1/1024 over [-0.5, 0.5), 1024 bins — the ks_binned discipline:
-        at 100 TB the rank-sum over raw distinct scores is unbounded,
-        the histogram is not), a pure engine-identical IEEE chain on
-        bit-identical inputs (one division per doc).  AUC uses the
-        Mann-Whitney histogram form with midrank tie handling, doubled
-        to stay integer: 2U = sum over bins of pos(b) *
-        (2 * neg_below(b) + neg_at(b)); cumulative neg_below comes
-        from a broadcast inequality self-join over the BOUNDED bin
-        relation (no single-partition window).  One division at the
-        end."""
-        nb = q_nb_lang_scores(spark, sf_dir)
-        truth = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-        per_doc = nb.groupBy("doc_id").agg(
-            F.max(
-                F.when(F.col("score_lang") == "en", F.col("log_score"))
-            ).alias("_sen"),
-            F.max(
-                F.when(F.col("score_lang") != "en", F.col("log_score"))
-            ).alias("_sot"),
-            F.max(
-                F.when(F.col("score_lang") == "en", F.col("n_tokens"))
-            ).alias("_nt"),
-        )
-        en = per_doc.join(truth, on="doc_id")
-        margin = (F.col("_sen") - F.col("_sot")) / F.col("_nt").cast(
-            "double"
-        )
-        bin_ = F.least(
-            F.greatest(
-                F.floor((margin + F.lit(0.5)) * F.lit(1024.0)), F.lit(0)
-            ),
-            F.lit(1023),
-        ).cast("bigint")
-        hist = (
-            en.select(
-                bin_.alias("_b"),
-                F.when(F.col("lang") == "en", 1).otherwise(0).alias("_p"),
-            )
-            .groupBy("_b")
-            .agg(
-                F.sum("_p").cast("bigint").alias("_pos"),
-                F.sum(1 - F.col("_p")).cast("bigint").alias("_neg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        below = (
-            hist.alias("a")
-            .join(
-                F.broadcast(
-                    hist.select(
-                        F.col("_b").alias("_b2"), F.col("_neg").alias("_n2")
-                    )
-                ),
-                F.col("_b2") < F.col("_b"),
-                "left",
-            )
-            .groupBy("_b", "_pos", "_neg")
-            .agg(
-                F.coalesce(F.sum("_n2"), F.lit(0))
-                .cast("bigint")
-                .alias("_nb")
-            )
-        )
-        return below.agg(
-            F.sum("_pos").cast("bigint").alias("n_pos"),
-            F.sum("_neg").cast("bigint").alias("n_neg"),
-            F.sum(F.col("_pos") * (2 * F.col("_nb") + F.col("_neg")))
-            .cast("bigint")
-            .alias("u2"),
-            F.round(
-                F.sum(
-                    F.col("_pos") * (2 * F.col("_nb") + F.col("_neg"))
-                ).cast("double")
-                / F.nullif(
-                    (2 * F.sum("_pos") * F.sum("_neg")).cast("double"),
-                    F.lit(0.0),
-                ),
-                9,
-            ).alias("auc"),
-        )
-
-    q["roc_auc_binned"] = q_roc_auc_binned
-
-    def q_bfs_distances(spark, sf_dir):
-        """Multi-source BFS (llm/dedup.bfs_distances) over the
-        undirected customer-part purchase graph: exact hop distance
-        from the seed customers (custkey % 97 == 0) up to 4 hops —
-        the neighborhood-expansion / blast-radius query, sixth
-        iterative-algorithm shape.  Customer and part keys share an
-        integer space, so node ids disambiguate as 2k / 2k+1.  Per
-        hop one frontier equi-join against the checkpointed edge list
-        + one anti-join; all-integer."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).cast("bigint").alias("a"),
-                (F.col("l_partkey") * 2 + 1).cast("bigint").alias("b"),
-            )
-            .distinct()
-        )
-        seeds = (
-            _t(spark, sf_dir, "customer")
-            .filter(F.col("c_custkey") % 97 == 0)
-            .select((F.col("c_custkey") * 2).cast("bigint").alias("id"))
-        )
-        return dedup.bfs_distances(edges, seeds, max_hops=4)
-
-    q["bfs_distances"] = q_bfs_distances
-
-    def q_target_encode(spark, sf_dir):
-        """Leave-one-out target encoding of the customer nation key by
-        account balance — the standard high-cardinality categorical
-        encoder for tabular ML, with the row's own target excluded so
-        the feature does not leak the label: enc_i =
-        (group_sum - x_i) / (group_count - 1).  Cents are exact
-        int64, the group moments come from ONE aggregation broadcast
-        back (no window), each encode is a single division of
-        identical int64 operands — emitted UNROUNDED because the IEEE
-        quotient is bit-equal across engines while round-at-9 would
-        re-introduce an engine-specific tie-break (the label_centroids
-        lesson); nullif-guarded for singleton groups."""
-        c = _t(spark, sf_dir, "customer")
-        cents = F.round(F.col("c_acctbal") * 100).cast("bigint")
-        base = c.select(
-            "c_custkey", "c_nationkey", cents.alias("_c")
-        )
-        g = base.groupBy("c_nationkey").agg(
-            F.sum("_c").cast("bigint").alias("_s"),
-            F.count("*").cast("bigint").alias("_n"),
-        )
-        return base.join(F.broadcast(g), on="c_nationkey").select(
-            F.col("c_custkey").cast("bigint").alias("custkey"),
-            F.col("c_nationkey").cast("bigint").alias("nationkey"),
-            F.col("_c").alias("acctbal_cents"),
-            (
-                (F.col("_s") - F.col("_c")).cast("double")
-                / F.nullif((F.col("_n") - 1).cast("double"), F.lit(0.0))
-            ).alias("loo_cents"),
-        )
-
-    q["target_encode"] = q_target_encode
-
-    def q_tokenizer_fertility(spark, sf_dir):
-        """Tokenizer fertility per language — subword pieces per
-        whitespace word, the multilingual tokenizer-efficiency metric
-        (high fertility = a language pays more sequence length per
-        word).  The subword model is a deterministic fixed-4-char
-        chunker, ceil(len/4) = (len+3) div 4 pieces per word (the real
-        BPE vocab has its own bpe_encode gate; this stand-in varies
-        with word length and replays exactly in SQL).  Both counts are
-        exact int64 sums over the exploded word stream; one divide per
-        language."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        toks = docs.select("lang", F.explode(dedup.tokenize(F.col("text"))).alias("w"))
-        pieces = F.floor((F.length("w") + 3) / 4).cast("bigint")
-        m = toks.groupBy("lang").agg(
-            F.count("*").cast("bigint").alias("n_words"),
-            F.sum(pieces).cast("bigint").alias("n_subwords"),
-        )
-        return m.select(
-            "lang",
-            "n_words",
-            "n_subwords",
-            F.round(
-                F.col("n_subwords").cast("double")
-                / F.col("n_words").cast("double"),
-                9,
-            ).alias("fertility"),
-        )
-
-    q["tokenizer_fertility"] = q_tokenizer_fertility
-
-    def q_user_erasure(spark, sf_dir):
-        """Right-to-be-forgotten pass: erase every event of a deletion
-        list (users with id % 17 == 0 — the stand-in for a DSAR batch)
-        via a single anti-join rewrite, then AUDIT the erasure in the
-        same result row: rows before/after, users and events removed,
-        and the must-be-zero count of surviving rows for deleted users
-        — the compliance evidence a 100-TB store needs alongside the
-        delete itself.  All exact int64.
-
-        Shape: the deletion list and the erased output are each BUILT
-        ONCE (checkpoints — in production the erased table is a written
-        dataset, which the checkpoint stands in for).  The pre-erasure
-        counts come from one flagged pass over events; the
-        deleted_rows_remaining audit stays a genuine independent
-        semi-join against the erased output, NOT an algebraic
-        simplification — it must be able to catch a broken anti-join."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        dele = (
-            e.select("user_id")
-            .distinct()
-            .filter(F.col("user_id") % 17 == 0)
-            .localCheckpoint(eager=False)
-        )
-        # one pass over events for both pre-erasure counts
-        flagged = e.join(
-            F.broadcast(dele.withColumn("_del", F.lit(1))),
-            on="user_id",
-            how="left",
-        )
-        pre = flagged.agg(
-            F.count("*").cast("bigint").alias("n_before"),
-            F.sum(
-                F.when(F.col("_del").isNotNull(), 1).otherwise(0)
-            ).cast("bigint").alias("n_events_removed"),
-        )
-        nd = dele.agg(F.count("*").cast("bigint").alias("n_deleted_users"))
-        erased = e.join(
-            F.broadcast(dele), on="user_id", how="left_anti"
-        ).localCheckpoint(eager=False)
-        after = erased.agg(F.count("*").cast("bigint").alias("n_after"))
-        rem = (
-            erased.join(F.broadcast(dele), on="user_id", how="left_semi")
-            .agg(F.count("*").cast("bigint").alias("deleted_rows_remaining"))
-        )
-        return (
-            pre.crossJoin(F.broadcast(nd))
-            .crossJoin(F.broadcast(after))
-            .crossJoin(F.broadcast(rem))
-            .select(
-                "n_before",
-                "n_deleted_users",
-                "n_events_removed",
-                "n_after",
-                "deleted_rows_remaining",
-            )
-        )
-
-    q["user_erasure"] = q_user_erasure
-
-    def q_bitmap_setops(spark, sf_dir):
-        """Bitmap-index set operations: the purchase and view user
-        sets packed into 32-bit word bitmaps (word = id div 32, one
-        bigint OR-aggregate per (set, word)), intersected and unioned
-        by bitwise AND/OR + bit_count over a word-aligned full join —
-        the roaring-bitmap pattern that turns distinct-set operations
-        into integer ops, emitted NEXT TO the exact join-based counts
-        so the row proves bitmap == exact.  Bits stay below 2^31 so
-        no signed-overflow shift exists in either engine.
-
-        The two distinct user sets build ONCE from a single events pass
-        (one (type, user) distinct, checkpointed); the bitmap packing
-        and the exact join/union counts are all projections of that
-        checkpoint — previously each branch re-scanned events and
-        re-ran its own distinct, four distincts for two sets."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        sets = (
-            e.filter(F.col("event_type").isin("purchase", "view"))
-            .select("event_type", "user_id")
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        pa = sets.filter(F.col("event_type") == "purchase").select("user_id")
-        pv = sets.filter(F.col("event_type") == "view").select("user_id")
-
-        def bitmap(dset):
-            return (
-                dset.select(
-                    F.floor(F.col("user_id") / 32).cast("bigint").alias("w"),
-                    (F.col("user_id") % 32).cast("int").alias("_b"),
-                )
-                .groupBy("w")
-                .agg(
-                    F.bit_or(
-                        F.expr("shiftleft(CAST(1 AS BIGINT), _b)")
-                    ).alias("word")
-                )
-            )
-
-        ba = bitmap(pa).withColumnRenamed("word", "wa")
-        bb = bitmap(pv).withColumnRenamed("word", "wb")
-        j = ba.join(bb, on="w", how="full").select(
-            F.coalesce(F.col("wa"), F.lit(0)).alias("wa"),
-            F.coalesce(F.col("wb"), F.lit(0)).alias("wb"),
-        )
-        bm = j.agg(
-            F.sum(F.bit_count(F.col("wa").bitwiseAND(F.col("wb"))))
-            .cast("bigint")
-            .alias("i_bitmap"),
-            F.sum(F.bit_count(F.col("wa").bitwiseOR(F.col("wb"))))
-            .cast("bigint")
-            .alias("u_bitmap"),
-        )
-        ex = (
-            pa.join(pv, on="user_id")
-            .agg(F.count("*").cast("bigint").alias("i_exact"))
-            .crossJoin(
-                F.broadcast(
-                    pa.union(pv)
-                    .distinct()
-                    .agg(F.count("*").cast("bigint").alias("u_exact"))
-                )
-            )
-        )
-        return bm.crossJoin(F.broadcast(ex)).select(
-            "i_bitmap", "i_exact", "u_bitmap", "u_exact"
-        )
-
-    q["bitmap_setops"] = q_bitmap_setops
-
-    def q_join_fanout_audit(spark, sf_dir):
-        """Join-cardinality audit: per foreign-key edge of the schema,
-        the key count, max fanout, and average fanout — the pre-join
-        safety check that catches the accidental many-to-many before
-        it explodes a 100-TB shuffle.  One count-aggregate per edge,
-        unioned; all exact ints, one divide per row."""
-        li = _t(spark, sf_dir, "lineitem")
-        o2 = _t(spark, sf_dir, "orders")
-        ev = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-
-        def fan(df, key, name):
-            g = df.groupBy(key).agg(F.count("*").cast("bigint").alias("_f"))
-            return g.agg(
-                F.lit(name).alias("join_edge"),
-                F.count("*").cast("bigint").alias("n_keys"),
-                F.max("_f").cast("bigint").alias("max_fanout"),
-                F.sum("_f").cast("bigint").alias("_rows"),
-            )
-        parts = [
-            fan(li, "l_orderkey", "lineitem_per_order"),
-            fan(li, "l_partkey", "lineitem_per_part"),
-            fan(li, "l_suppkey", "lineitem_per_supplier"),
-            fan(o2, "o_custkey", "orders_per_customer"),
-            fan(ev, "user_id", "events_per_user"),
-        ]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        return u.select(
-            "join_edge",
-            "n_keys",
-            "max_fanout",
-            F.round(
-                F.col("_rows").cast("double") / F.col("n_keys").cast("double"),
-                9,
-            ).alias("avg_fanout"),
-        )
-
-    q["join_fanout_audit"] = q_join_fanout_audit
-
-    def q_weighted_median(spark, sf_dir):
-        """Quantity-weighted median part size per brand: the smallest
-        size whose doubled cumulative weight reaches the total (the
-        exact weighted-median rule) — cumulative weights ride a
-        broadcast inequality join over the bounded per-brand size
-        domain, so membership is a pure int64 comparison (2*cum >=
-        total cross-multiplied, no float CDF)."""
-        li = _t(spark, sf_dir, "lineitem")
-        p = _t(spark, sf_dir, "part")
-        j = li.join(p, li.l_partkey == p.p_partkey).select(
-            "p_brand",
-            F.col("p_size").cast("bigint").alias("size"),
-            F.round(F.col("l_quantity")).cast("bigint").alias("q"),
-        )
-        # three consumers (totals, both inequality-join sides) of the
-        # bounded brand-size weight table; checkpoint so the fact join +
-        # aggregate runs once
-        w = j.groupBy("p_brand", "size").agg(
-            F.sum("q").cast("bigint").alias("wt")
-        ).localCheckpoint(eager=False)
-        tot = w.groupBy("p_brand").agg(
-            F.sum("wt").cast("bigint").alias("_tot")
-        )
-        b = w.select(
-            F.col("p_brand").alias("_b"),
-            F.col("size").alias("_bs"),
-            F.col("wt").alias("_bw"),
-        )
-        cum = (
-            w.join(
-                F.broadcast(b),
-                (F.col("_b") == F.col("p_brand"))
-                & (F.col("_bs") <= F.col("size")),
-            )
-            .groupBy("p_brand", "size")
-            .agg(F.sum("_bw").cast("bigint").alias("_cum"))
-            .join(F.broadcast(tot), on="p_brand")
-        )
-        return (
-            cum.filter(2 * F.col("_cum") >= F.col("_tot"))
-            .groupBy("p_brand")
-            .agg(
-                F.min("size").cast("bigint").alias("wmedian_size"),
-                F.max("_tot").cast("bigint").alias("total_qty"),
-            )
-        )
-
-    q["weighted_median"] = q_weighted_median
-
-    def q_ks_binned(spark, sf_dir):
-        """Binned two-sample Kolmogorov-Smirnov distance between the
-        purchase and view value distributions: 1024 equi-width cent
-        bins, cumulative counts by broadcast inequality join, and the
-        max CDF gap found by EXACT cross-multiplied integers
-        (|cumA*nB - cumB*nA|) — no float CDF ever compared.  The D
-        statistic divides once at the end; binning granularity is the
-        documented approximation (exact KS needs a global sort)."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        binc = F.floor(
-            (cents * 1024).cast("double") / F.lit(49003.0)
-        ).cast("bigint")
-        c = (
-            e.filter(F.col("event_type").isin("purchase", "view"))
-            .groupBy(binc.alias("bin"))
-            .agg(
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).cast("bigint").alias("ca"),
-                F.sum(
-                    F.when(F.col("event_type") == "view", 1).otherwise(0)
-                ).cast("bigint").alias("cb"),
-            )
-            # <=1024 bin rows, three consumers (totals, both cumulative
-            # sides); checkpoint so the events pass runs once
-            .localCheckpoint(eager=False)
-        )
-        tot = c.agg(
-            F.sum("ca").cast("bigint").alias("_na"),
-            F.sum("cb").cast("bigint").alias("_nb"),
-        )
-        b2 = c.select(
-            F.col("bin").alias("_bb"),
-            F.col("ca").alias("_ba"),
-            F.col("cb").alias("_bc"),
-        )
-        cum = (
-            c.join(F.broadcast(b2), F.col("_bb") <= F.col("bin"))
-            .groupBy("bin")
-            .agg(
-                F.sum("_ba").cast("bigint").alias("_cuma"),
-                F.sum("_bc").cast("bigint").alias("_cumb"),
-            )
-            .crossJoin(F.broadcast(tot))
-        )
-        gap = F.abs(
-            F.col("_cuma") * F.col("_nb") - F.col("_cumb") * F.col("_na")
-        ).cast("bigint")
-        return (
-            cum.select(
-                "bin",
-                gap.alias("_gap"),
-                "_na",
-                "_nb",
-            )
-            .orderBy(F.desc("_gap"), F.asc("bin"))
-            .limit(1)
-            .select(
-                F.col("bin").alias("at_bin"),
-                F.col("_na").alias("n_purchase"),
-                F.col("_nb").alias("n_view"),
-                F.round(
-                    F.col("_gap").cast("double")
-                    / (F.col("_na") * F.col("_nb")).cast("double"),
-                    9,
-                ).alias("d_stat"),
-            )
-        )
-
-    q["ks_binned"] = q_ks_binned
-
-    def q_session_gap_sweep(spark, sf_dir):
-        """Session-gap sensitivity sweep: session counts at 5/15/30-
-        minute inactivity thresholds from ONE pass over the per-user
-        ordered deltas (a session count at gap g is users + deltas
-        exceeding g — three conditional sums, no per-threshold
-        re-scan and no data explosion).  All exact int64; the
-        events-per-session ratios divide once.  The parameter-sweep
-        shape tuning jobs use before fixing a sessionization gap."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        d = e.select(
-            "user_id",
-            (F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))).alias(
-                "_delta_us"
-            ),
-        )
-        def sess(g_s):
-            return (
-                F.sum(
-                    (F.col("_delta_us") > g_s * 1000000)
-                    .cast("bigint")
-                )
-            )
-        m = d.agg(
-            F.countDistinct("user_id").cast("bigint").alias("n_users"),
-            F.count("*").cast("bigint").alias("n_events"),
-            sess(300).cast("bigint").alias("_b300"),
-            sess(900).cast("bigint").alias("_b900"),
-            sess(1800).cast("bigint").alias("_b1800"),
-        )
-        out = m.select(
-            "n_users",
-            "n_events",
-            (F.col("n_users") + F.col("_b300")).alias("sessions_5m"),
-            (F.col("n_users") + F.col("_b900")).alias("sessions_15m"),
-            (F.col("n_users") + F.col("_b1800")).alias("sessions_30m"),
-        )
-        return out.select(
-            "*",
-            F.round(
-                F.col("n_events").cast("double")
-                / F.col("sessions_5m").cast("double"),
-                9,
-            ).alias("eps_5m"),
-            F.round(
-                F.col("n_events").cast("double")
-                / F.col("sessions_30m").cast("double"),
-                9,
-            ).alias("eps_30m"),
-        )
-
-    q["session_gap_sweep"] = q_session_gap_sweep
-
-    def q_bloom_fpr(spark, sf_dir):
-        """Measured Bloom false-positive rate — the accuracy harness
-        for the bloom_decontaminate screen: probe the non-benchmark
-        corpus, separate true hits (fingerprint genuinely in the
-        benchmark set, e.g. exact duplicates across the split) from
-        false ones via the exact fingerprint join, and emit measured
-        FPR next to the theoretical (1 - e^(-kn/m))^k.  Counts exact;
-        the two rates are one mirrored float chain each."""
-        docs = _t(spark, sf_dir, "documents")
-        bench = docs.filter(F.col("doc_id") % 7 == 0)
-        corpus = docs.filter(F.col("doc_id") % 7 != 0).select(
-            "doc_id", "source", "text"
-        )
-        flagged = dedup.bloom_decontaminate(corpus, bench)
-        fp_b = F.md5(dedup.normalize_text(F.col("text")))
-        bset = bench.select(fp_b.alias("_fp")).distinct()
-        truly = (
-            corpus.select("doc_id", fp_b.alias("_fp"))
-            .join(F.broadcast(bset), on="_fp", how="left_semi")
-            .select(F.col("doc_id").alias("_td"))
-        )
-        j = flagged.join(
-            F.broadcast(truly), flagged.doc_id == F.col("_td"), "left"
-        )
-        nb = bench.agg(F.count("*").cast("bigint").alias("_nb"))
-        m = j.agg(
-            F.count("*").cast("bigint").alias("n_probes"),
-            F.sum(F.col("bloom_hit").cast("bigint"))
-            .cast("bigint")
-            .alias("n_hits"),
-            F.sum(
-                (F.col("bloom_hit") & F.col("_td").isNotNull()).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("n_true_hits"),
-            F.sum(
-                (F.col("bloom_hit") & F.col("_td").isNull()).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("n_false_hits"),
-        )
-        theo = F.pow(
-            1
-            - F.exp(
-                -(3.0 * F.col("_nb").cast("double")) / F.lit(65536.0)
-            ),
-            F.lit(3.0),
-        )
-        return m.crossJoin(F.broadcast(nb)).select(
-            "n_probes",
-            "n_hits",
-            "n_true_hits",
-            "n_false_hits",
-            F.round(
-                F.col("n_false_hits").cast("double")
-                / F.col("n_probes").cast("double"),
-                9,
-            ).alias("measured_fpr"),
-            F.round(theo, 9).alias("theoretical_fpr"),
-        )
-
-    q["bloom_fpr"] = q_bloom_fpr
-
-    def q_robust_ab_test(spark, sf_dir):
-        """Composed experimentation capstone: per-user spend totals ->
-        MAD outlier exclusion (the outlier_mad fence over user totals)
-        -> hash-split arms -> two-proportion z-test on the cleaned
-        population — the robust readout pipeline an experimentation
-        platform actually runs, pinned as one cross-operator plan.
-        Exact cent totals, deterministic interpolated percentiles,
-        and the mirrored IEEE z chain of ab_test_zscore."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        pu = e.groupBy("user_id").agg(
-            F.sum(F.when(F.col("value").isNotNull(), cents).otherwise(0))
-            .cast("bigint")
-            .alias("x"),
-            (
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                )
-                >= 14
-            ).cast("bigint").alias("conv"),
-        ).localCheckpoint(eager=False)
-        # ^ checkpointed: the median, MAD, fence, and both count branches
-        # all consume the per-user table and would each re-run the full
-        # events scan + aggregate otherwise
-        med = pu.agg(F.percentile(F.col("x"), F.lit(0.5)).alias("_med"))
-        j = pu.crossJoin(F.broadcast(med))
-        dev = F.abs(F.col("x").cast("double") - F.col("_med"))
-        mad = j.agg(F.percentile(dev, F.lit(0.5)).alias("_mad"))
-        j2 = j.crossJoin(F.broadcast(mad))
-        kept = j2.filter(
-            dev <= 3 * F.lit(1.4826) * F.col("_mad")
-        ).withColumn(
-            "arm",
-            F.when(
-                sampling.salted_hash(F.col("user_id"), "ab6")
-                < sampling.HASH_SPACE // 2,
-                "A",
-            ).otherwise("B"),
-        )
-        tot = j2.agg(F.count("*").cast("bigint").alias("n_total"))
-        s = kept.agg(
-            F.count("*").cast("bigint").alias("n_kept"),
-            F.sum(F.when(F.col("arm") == "A", 1).otherwise(0))
-            .cast("bigint").alias("n_a"),
-            F.sum(F.when(F.col("arm") == "A", F.col("conv")).otherwise(0))
-            .cast("bigint").alias("conv_a"),
-            F.sum(F.when(F.col("arm") == "B", 1).otherwise(0))
-            .cast("bigint").alias("n_b"),
-            F.sum(F.when(F.col("arm") == "B", F.col("conv")).otherwise(0))
-            .cast("bigint").alias("conv_b"),
-        )
-        na = F.col("n_a").cast("double")
-        nb = F.col("n_b").cast("double")
-        pa = F.col("conv_a").cast("double") / na
-        pb = F.col("conv_b").cast("double") / nb
-        pool = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
-            (F.col("n_a") + F.col("n_b")).cast("double")
-        )
-        z = (pa - pb) / F.sqrt(pool * (1 - pool) * (1 / na + 1 / nb))
-        return s.crossJoin(F.broadcast(tot)).select(
-            "n_total",
-            "n_kept",
-            (F.col("n_total") - F.col("n_kept")).alias("n_excluded"),
-            "n_a",
-            "conv_a",
-            "n_b",
-            "conv_b",
-            F.round(z, 9).alias("z_score"),
-        )
-
-    q["robust_ab_test"] = q_robust_ab_test
-
-    def q_lorenz_deciles(spark, sf_dir):
-        """Lorenz curve of user spend in deciles: decile membership
-        from nine exact interpolated percentile cuts (a broadcast
-        one-row join + nine comparisons — never a global ntile
-        window), per-decile exact spend sums, and the cumulative
-        share curve via an inequality join over the ten decile rows.
-        The concentration picture behind source_gini's scalar."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        # the cut aggregate and the decile assignment both consume the
-        # per-user table; checkpoint so the events pass runs once
-        pu = e.groupBy("user_id").agg(
-            F.sum(cents).cast("bigint").alias("x")
-        ).localCheckpoint(eager=False)
-        cuts = pu.agg(
-            *[
-                F.percentile(F.col("x"), F.lit(i / 10.0)).alias(f"_c{i}")
-                for i in range(1, 10)
-            ]
-        )
-        dec = F.lit(1)
-        for i in range(1, 10):
-            dec = dec + (F.col("x").cast("double") > F.col(f"_c{i}")).cast(
-                "int"
-            )
-        per = (
-            pu.crossJoin(F.broadcast(cuts))
-            .select(dec.cast("bigint").alias("decile"), "x")
-            .groupBy("decile")
-            .agg(
-                F.count("*").cast("bigint").alias("n_users"),
-                F.sum("x").cast("bigint").alias("spend_cents"),
-            )
-            # ten rows, three consumers (total, both cumulative sides)
-            .localCheckpoint(eager=False)
-        )
-        tot = per.agg(F.sum("spend_cents").cast("bigint").alias("_tot"))
-        b = per.select(
-            F.col("decile").alias("_bd"),
-            F.col("spend_cents").alias("_bs"),
-        )
-        return (
-            per.join(F.broadcast(b), F.col("_bd") <= F.col("decile"))
-            .groupBy("decile", "n_users", "spend_cents")
-            .agg(F.sum("_bs").cast("bigint").alias("_cum"))
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "decile",
-                "n_users",
-                "spend_cents",
-                F.round(
-                    F.col("_cum").cast("double") / F.col("_tot").cast(
-                        "double"
-                    ),
-                    9,
-                ).alias("cum_share"),
-            )
-        )
-
-    q["lorenz_deciles"] = q_lorenz_deciles
-
-    def q_theil_index(spark, sf_dir):
-        """Theil T inequality index of user spend — the decomposable
-        entropy-based companion to the Gini: T = mean((x/mu) *
-        ln(x/mu)).  Totals and counts are exact int64; mu is one
-        divide; the per-user ln terms sum under the 9-digit round."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        pu = e.groupBy("user_id").agg(
-            F.sum(cents).cast("bigint").alias("x")
-        )
-        m = pu.agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("x").cast("bigint").alias("_s"),
-        )
-        mu = F.col("_s").cast("double") / F.col("n").cast("double")
-        r = F.col("x").cast("double") / F.col("_mu")
-        t = (
-            pu.crossJoin(
-                F.broadcast(m.select("n", mu.alias("_mu")))
-            )
-            .agg(
-                F.max("n").alias("n_users"),
-                F.round(F.max("_mu"), 9).alias("mean_cents"),
-                F.round(
-                    F.sum(r * F.log(r)) / F.max("n").cast("double"), 9
-                ).alias("theil_t"),
-            )
-        )
-        return t
-
-    q["theil_index"] = q_theil_index
-
-    def q_ranker_agreement(spark, sf_dir):
-        """Retrieval-ranker agreement: per query, overlap@10 between
-        the BM25 and RRF-fused top-10 lists plus the Spearman footrule
-        (sum |rank difference|) over the shared documents — the
-        ranker-drift monitor run whenever a retrieval component
-        changes.  Composes two already-gated rankers; counts and rank
-        sums are exact int64, one divide for the overlap ratio."""
-        bm = q_bm25_topk(spark, sf_dir).select(
-            "query_id", "doc_id", F.col("rank").alias("_rb")
-        )
-        rf = q_rrf_fusion(spark, sf_dir).select(
-            F.col("query_id").alias("_q2"),
-            F.col("doc_id").alias("_d2"),
-            F.col("rank").alias("_rf"),
-        )
-        j = bm.join(
-            rf,
-            (bm.query_id == F.col("_q2")) & (bm.doc_id == F.col("_d2")),
-            "inner",
-        )
-        return j.groupBy("query_id").agg(
-            F.count("*").cast("bigint").alias("n_shared"),
-            F.round(F.count("*") / 10.0, 9).alias("overlap_at_10"),
-            F.sum(F.abs(F.col("_rb") - F.col("_rf")))
-            .cast("bigint")
-            .alias("footrule"),
-        )
-
-    q["ranker_agreement"] = q_ranker_agreement
-
-    def q_churn_labels(spark, sf_dir):
-        """Label engineering for churn modeling: per user, last active
-        day, activity counts, and the churned flag (no event in the
-        final week of the window) — the supervised-label table a churn
-        model joins against rfm_features / ts_features.  One
-        hash-partitioned aggregate, exact ints, deterministic
-        boolean."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        return e.groupBy("user_id").agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.max(day).cast("bigint").alias("last_day"),
-            (F.max(day) < 24).alias("churned"),
-        )
-
-    q["churn_labels"] = q_churn_labels
-
-    def q_ecdf_probes(spark, sf_dir):
-        """Empirical CDF of event value evaluated at five fixed cent
-        probes per event type — the calibration-table shape monitoring
-        jobs export (is the p-leq-threshold share drifting?).  A
-        broadcast probe list against per-type exact counts; one divide
-        per cell."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        probes = spark.range(0, 5).select(
-            (F.lit(1000) * F.pow(F.lit(2.0), F.col("id").cast("double")))
-            .cast("bigint")
-            .alias("probe")
-        )
-        r = e.select("event_type", cents.alias("c")).crossJoin(
-            F.broadcast(probes)
-        )
-        return r.groupBy("event_type", "probe").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum((F.col("c") <= F.col("probe")).cast("bigint"))
-            .cast("bigint")
-            .alias("n_leq"),
-            F.round(
-                F.sum((F.col("c") <= F.col("probe")).cast("bigint")).cast(
-                    "double"
-                )
-                / F.count("*").cast("double"),
-                9,
-            ).alias("ecdf"),
-        )
-
-    q["ecdf_probes"] = q_ecdf_probes
-
-    def q_ship_delay_quantiles(spark, sf_dir):
-        """Order-to-ship latency distribution per order priority: exact
-        integer day lags through one FK join (the join the fanout
-        audit just certified as clean 1:N), exact interpolated
-        p50/p90/p99 per priority — the operational-SLA readout shape.
-        The lag is a pure date difference; negative lags (data-quality
-        signal) are counted rather than silently dropped."""
-        li = _t(spark, sf_dir, "lineitem")
-        o2 = _t(spark, sf_dir, "orders")
-        lag = F.datediff(
-            F.to_date(F.col("l_shipdate")), F.to_date(F.col("o_orderdate"))
-        ).cast("bigint")
-        j = li.join(o2, li.l_orderkey == o2.o_orderkey).select(
-            "o_orderpriority", lag.alias("lag_days")
-        )
-        pct = F.percentile(
-            F.col("lag_days"),
-            F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)),
-        )
-        return j.groupBy("o_orderpriority").agg(
-            F.count("*").cast("bigint").alias("n_lines"),
-            F.sum((F.col("lag_days") < 0).cast("bigint"))
-            .cast("bigint")
-            .alias("n_negative"),
-            F.round(pct[0], 6).alias("p50_days"),
-            F.round(pct[1], 6).alias("p90_days"),
-            F.round(pct[2], 6).alias("p99_days"),
-        )
-
-    q["ship_delay_quantiles"] = q_ship_delay_quantiles
-
-    # ---- round-11 surface: graph quality + retrieval eval ----------
-
-    def q_modularity(spark, sf_dir):
-        """Newman modularity of the label-propagation communities over
-        the verified near-dup graph (llm/dedup.py modularity) — the
-        standard did-the-communities-mean-anything score, emitted per
-        community so the decomposition itself is oracle-checked.  Every
-        input (e_in, deg_sum, m) is an exact int64 count; each row does
-        two IEEE divisions and one subtraction on identical integers in
-        both engines, so no float accumulates across rows.  The edge
-        list is checkpointed once while the verify result is live (its
-        candidate cache serves the materialization), and labels reuse
-        that checkpoint — the verify pipeline runs exactly once.
-        Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        edges = (
-            dup.select("a", "b")
-            .filter(F.col("a") != F.col("b"))
-            .localCheckpoint(eager=True)
-        )
-        labels = dedup.label_propagation(edges, rounds=4)
-        return dedup.modularity(edges, labels)
-
-    q["modularity"] = q_modularity
-
-    def q_assortativity(spark, sf_dir):
-        """Degree assortativity of the verified near-dup graph
-        (llm/dedup.py assortativity): do hub documents link to other
-        hubs (templated boilerplate families) or to leaves (stars of
-        near-copies around one original)?  Exact-moment Pearson over
-        the symmetrized edge list — all sums int64, one division
-        (the value_hour_corr discipline).  Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        return dedup.assortativity(dup.select("a", "b"))
-
-    q["assortativity"] = q_assortativity
-
-    def q_clustering_buckets(spark, sf_dir):
-        """Local clustering-coefficient distribution of the verified
-        near-dup graph (llm/dedup.py clustering_buckets): per node with
-        degree >= 2, 2*tri/(d*(d-1)) binned onto ten integer buckets by
-        pure integer floor division (non-negative operands, so Spark
-        div == DuckDB //) — clique-like duplicate families land in
-        bucket 9, stars and chains in bucket 0, and the query emits 10
-        rows instead of |V| floats.  Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        return dedup.clustering_buckets(dup.select("a", "b"))
-
-    q["clustering_buckets"] = q_clustering_buckets
-
-    def q_mrr_eval(spark, sf_dir):
-        """Mean-reciprocal-rank harness for the IVF index: per query,
-        where does the TRUE nearest neighbor (brute-force rank 1) land
-        in the IVF top-5?  Reciprocal ranks are exact integers in
-        1/2520 units (2520 = lcm(1..10), so 2520/rank is exact for any
-        retrieval depth up to 10) — the scaled-integer discipline that
-        keeps the metric order-independent; the one division happens
-        per row at the end.  A miss scores 0, kept as its own flag
-        column.  Composes the two already-oracled retrieval replays
-        (knn_cosine truth, ivf_topk candidates) like ann_recall does.
-        Round-11 registration."""
-        truth1 = (
-            q_knn_cosine(spark, sf_dir)
-            .filter(F.col("rank") == 1)
-            .select("q_id", "vec_id")
-        )
-        cand = q_ivf_topk(spark, sf_dir).select(
-            F.col("q_id").alias("_q2"),
-            F.col("vec_id").alias("_v2"),
-            F.col("rank").alias("_rank"),
-        )
-        j = truth1.join(
-            cand,
-            (truth1.q_id == F.col("_q2")) & (truth1.vec_id == F.col("_v2")),
-            "left",
-        )
-        rr_units = F.coalesce(
-            F.expr("CAST(2520 div _rank AS BIGINT)"), F.lit(0).cast("bigint")
-        )
-        return j.select(
-            "q_id",
-            F.col("_rank").cast("bigint").alias("found_rank"),
-            rr_units.alias("rr_units"),
-            F.round(rr_units.cast("double") / F.lit(2520.0), 9).alias("rr"),
-        )
-
-    q["mrr_eval"] = q_mrr_eval
-
-    def q_tfidf_cosine_capped(spark, sf_dir):
-        """The 100-TB arm of tfidf_cosine_pairs: identical sparse
-        posting-list cosine, but the df prune composes the relative cut
-        with an ABSOLUTE cap (df <= min(5% * N, 256)).  The sf1 scaling
-        bench measured the purely-relative cut at exponent 1.58 (38x
-        cost for 10x data: df_cap grows with N, so per-term pair
-        fan-out grows ~N^2); the absolute cap bounds every posting list
-        at 256 regardless of corpus size, making the candidate stream
-        linear in the vocabulary.  At the sf0.01/sf0.001 gate scales
-        5% * N < 256, so this twin is bit-identical to the uncapped
-        reference semantics there — the divergence exists only at the
-        scales the cap is for (the minhash_dedup / minhash_dedup_prod
-        twin pattern).  Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.tfidf_cosine_pairs(
-            docs, threshold=0.3, max_df_pct=5, max_df_abs=256
-        )
-
-    q["tfidf_cosine_capped"] = q_tfidf_cosine_capped
-
-    # ---- round-11 surface: rank statistics + exact-moment matrix ---
-
-    def q_mannwhitney_binned(spark, sf_dir):
-        """Binned Mann-Whitney U between the purchase and view value
-        distributions — the rank-sum complement to ks_binned (same 1024
-        equi-width cent bins), asking "is one distribution
-        stochastically larger" where KS asks "are they different
-        anywhere".  The roc_auc_binned discipline end to end: ranks are
-        unbounded at scale, so values bin onto a FIXED grid first and
-        ties stay integer via doubled midranks (2R = 2*cum_before + t
-        + 1); 2U and the tie-corrected variance pieces are exact int64
-        (K = (n+1)n(n-1) - sum(t^3 - t)), and the AUC-equivalent
-        U/(na*nb) and tie-corrected z each combine those exact integers
-        in one closed-form double expression.  Returns one row
-        (na, nb, two_u, sum_t3_t, auc, z)."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull() & F.col("value").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        binc = F.floor(
-            (cents * 1024).cast("double") / F.lit(49003.0)
-        ).cast("bigint")
-        c = (
-            e.filter(F.col("event_type").isin("purchase", "view"))
-            .groupBy(binc.alias("bin"))
-            .agg(
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).cast("bigint").alias("ca"),
-                F.sum(
-                    F.when(F.col("event_type") == "view", 1).otherwise(0)
-                ).cast("bigint").alias("cb"),
-            )
-            # <=1024 bin rows, consumed by totals + the cumulative side
-            .localCheckpoint(eager=False)
-        )
-        tot = c.agg(
-            F.sum("ca").cast("bigint").alias("_na"),
-            F.sum("cb").cast("bigint").alias("_nb"),
-        )
-        b2 = c.select(
-            F.col("bin").alias("_bb"),
-            (F.col("ca") + F.col("cb")).alias("_bt"),
-        )
-        cum = (
-            c.join(F.broadcast(b2), F.col("_bb") <= F.col("bin"))
-            .groupBy("bin", "ca", "cb")
-            .agg(F.sum("_bt").cast("bigint").alias("_cum_incl"))
-        )
-        t = F.col("ca") + F.col("cb")
-        two_r = (F.col("_cum_incl") - t) * 2 + t + 1  # doubled midrank
-        per_bin = cum.select(
-            (F.col("ca") * two_r).cast("bigint").alias("_ra2"),
-            ((t * t * t - t)).cast("bigint").alias("_t3t"),
-        )
-        s = per_bin.agg(
-            F.sum("_ra2").cast("bigint").alias("_two_ra"),
-            F.sum("_t3t").cast("bigint").alias("_sum_t3t"),
-        ).crossJoin(F.broadcast(tot))
-        na, nb = F.col("_na"), F.col("_nb")
-        n = na + nb
-        two_u = F.col("_two_ra") - na * (na + 1)
-        kk = ((n + 1) * n * (n - 1) - F.col("_sum_t3t")).cast("double")
-        var4 = (
-            na.cast("double")
-            * nb.cast("double")
-            * kk
-            / (F.lit(3.0) * n.cast("double") * (n - 1).cast("double"))
-        )
-        z = (two_u - na * nb).cast("double") / F.sqrt(var4)
-        return s.select(
-            na.alias("na"),
-            nb.alias("nb"),
-            two_u.cast("bigint").alias("two_u"),
-            F.col("_sum_t3t").alias("sum_t3_t"),
-            F.round(
-                two_u.cast("double")
-                / (F.lit(2.0) * na.cast("double") * nb.cast("double")),
-                9,
-            ).alias("auc"),
-            F.round(z, 9).alias("z"),
-        )
-
-    q["mannwhitney_binned"] = q_mannwhitney_binned
-
-    def q_spearman_binned(spark, sf_dir):
-        """Binned Spearman rank correlation between purchase value and
-        hour of day — the monotone-association complement to
-        value_hour_corr's Pearson (which sees only linear structure).
-        Values bin onto the fixed 1024-cent grid, hours are already a
-        24-bin grid; both coordinates become exact integer DOUBLED
-        midranks via the broadcast cumulative trick, so every moment
-        (Sx, Sy, Sxx, Syy, Sxy over 2R values) is an exact int64 sum
-        and rho combines them in one closed-form double expression.
-        Bounded-n contract: Sxy <= n*(2n)^2 caps n around 1.3e6 rows
-        per gate before int64 overflow — per-segment use at 100 TB
-        (the theilsen bounded-history class).  Returns one row."""
-        e = _events(spark, sf_dir).filter(
-            F.col("user_id").isNotNull()
-            & F.col("value").isNotNull()
-            & (F.col("event_type") == "purchase")
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        binc = F.floor(
-            (cents * 1024).cast("double") / F.lit(49003.0)
-        ).cast("bigint")
-        rows = e.select(
-            binc.alias("_bx"), F.hour("ts").cast("bigint").alias("_by")
-        ).localCheckpoint(eager=False)
-
-        def midranks(df, col):
-            cnt = df.groupBy(F.col(col).alias("_b")).agg(
-                F.count("*").cast("bigint").alias("_t")
-            )
-            c2 = cnt.select(
-                F.col("_b").alias("_b2"), F.col("_t").alias("_t2")
-            )
-            return (
-                cnt.join(F.broadcast(c2), F.col("_b2") <= F.col("_b"))
-                .groupBy("_b", "_t")
-                .agg(F.sum("_t2").cast("bigint").alias("_ci"))
-                .select(
-                    F.col("_b"),
-                    ((F.col("_ci") - F.col("_t")) * 2 + F.col("_t") + 1)
-                    .cast("bigint")
-                    .alias("_r2"),
-                )
-            )
-        rx = midranks(rows, "_bx").select(
-            F.col("_b").alias("_bx"), F.col("_r2").alias("_rx")
-        )
-        ry = midranks(rows, "_by").select(
-            F.col("_b").alias("_by"), F.col("_r2").alias("_ry")
-        )
-        j = rows.join(F.broadcast(rx), on="_bx").join(
-            F.broadcast(ry), on="_by"
-        )
-        s = j.agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("_rx").cast("bigint").alias("sum_rx"),
-            F.sum("_ry").cast("bigint").alias("sum_ry"),
-            F.sum(F.col("_rx") * F.col("_rx")).cast("bigint").alias("sum_rx2"),
-            F.sum(F.col("_ry") * F.col("_ry")).cast("bigint").alias("sum_ry2"),
-            F.sum(F.col("_rx") * F.col("_ry")).cast("bigint").alias("sum_rxy"),
-        )
-        nn = F.col("n").cast("double")
-        sx, sy = F.col("sum_rx").cast("double"), F.col("sum_ry").cast("double")
-        rho = (nn * F.col("sum_rxy").cast("double") - sx * sy) / (
-            F.sqrt(nn * F.col("sum_rx2").cast("double") - sx * sx)
-            * F.sqrt(nn * F.col("sum_ry2").cast("double") - sy * sy)
-        )
-        return s.select(
-            "n", "sum_rx", "sum_ry", "sum_rx2", "sum_ry2", "sum_rxy",
-            F.round(rho, 9).alias("rho"),
-        )
-
-    q["spearman_binned"] = q_spearman_binned
-
-    def q_corr_matrix(spark, sf_dir):
-        """Exact-moment Pearson correlation matrix (upper triangle) of
-        the four lineitem numerics in ONE pass — the multi-column
-        feature-screening shape: every raw/product moment accumulates
-        as an exact integer in cent units (DECIMAL(38,0) sums on the
-        Spark side, HUGEINT in DuckDB, because sum(price_cents^2)
-        overflows int64 at bench scale), so the sums are
-        order-invariant where a float corr() matrix is not; each of the
-        six correlations combines its exact moments in one closed-form
-        double expression.  Returns 6 rows (col_a, col_b, n, corr)."""
-        li = _t(spark, sf_dir, "lineitem")
-        cols = {
-            "quantity": F.round(F.col("l_quantity")).cast("bigint"),
-            "price": F.round(F.col("l_extendedprice") * 100).cast("bigint"),
-            "discount": F.round(F.col("l_discount") * 100).cast("bigint"),
-            "tax": F.round(F.col("l_tax") * 100).cast("bigint"),
-        }
-        names = list(cols)
-        dec = "decimal(38,0)"
-        aggs = [F.count("*").cast("bigint").alias("n")]
-        for a in names:
-            aggs.append(F.sum(cols[a].cast(dec)).alias(f"s_{a}"))
-            aggs.append(
-                F.sum((cols[a] * cols[a]).cast(dec)).alias(f"s_{a}_{a}")
-            )
-        for i, a in enumerate(names):
-            for b in names[i + 1:]:
-                aggs.append(
-                    F.sum((cols[a] * cols[b]).cast(dec)).alias(f"s_{a}_{b}")
-                )
-        s = li.agg(*aggs)
-
-        def corr(a, b):
-            nn = F.col("n").cast("double")
-            sa = F.col(f"s_{a}").cast("double")
-            sb = F.col(f"s_{b}").cast("double")
-            return (nn * F.col(f"s_{a}_{b}").cast("double") - sa * sb) / (
-                F.sqrt(nn * F.col(f"s_{a}_{a}").cast("double") - sa * sa)
-                * F.sqrt(nn * F.col(f"s_{b}_{b}").cast("double") - sb * sb)
-            )
-        pairs = [
-            F.struct(
-                F.lit(a).alias("col_a"),
-                F.lit(b).alias("col_b"),
-                F.round(corr(a, b), 9).alias("corr"),
-            )
-            for i, a in enumerate(names)
-            for b in names[i + 1:]
-        ]
-        return s.select(
-            "n", F.explode(F.array(*pairs)).alias("_p")
-        ).select("_p.col_a", "_p.col_b", "n", "_p.corr")
-
-    q["corr_matrix"] = q_corr_matrix
-
-    # ---- round-11 surface: dedup diagnostics + privacy distance ----
-
-    def q_bleu_verify(spark, sf_dir):
-        """BLEU-2 over the MinHash-LSH candidate pairs — the
-        precision-side generation/contamination metric completing
-        ROUGE's recall side, composed from the independently-gated
-        rouge_n layer (clipped n-gram overlaps and totals are its exact
-        int64 outputs, pivoted to one row per pair).  p1/p2 are one
-        division each; the brevity penalty exp(1 - ref/cand) is a
-        single closed-form double (libm exp agrees across engines to
-        1 ulp — same acceptance as the ln-based LM scores); bleu2 =
-        bp * sqrt(p1*p2).  Pairs with no bigram side emit NULL (the
-        rouge nullif contract).  Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        pairs = cand.select(
-            F.col("a").alias("ref_id"), F.col("b").alias("cand_id")
-        )
-        r = llm_text.rouge_n(pairs, docs)
-        piv = r.groupBy("ref_id", "cand_id").agg(
-            F.max(F.when(F.col("n") == 1, F.col("overlap"))).alias("_o1"),
-            F.max(F.when(F.col("n") == 1, F.col("ref_total"))).alias("_r1"),
-            F.max(F.when(F.col("n") == 1, F.col("cand_total"))).alias("_c1"),
-            F.max(F.when(F.col("n") == 2, F.col("overlap"))).alias("_o2"),
-            F.max(F.when(F.col("n") == 2, F.col("cand_total"))).alias("_c2"),
-        )
-        p1 = F.col("_o1").cast("double") / F.nullif(
-            F.col("_c1").cast("double"), F.lit(0.0)
-        )
-        p2 = F.col("_o2").cast("double") / F.nullif(
-            F.col("_c2").cast("double"), F.lit(0.0)
-        )
-        bp = F.when(F.col("_r1") <= F.col("_c1"), F.lit(1.0)).otherwise(
-            F.exp(
-                F.lit(1.0)
-                - F.col("_r1").cast("double") / F.col("_c1").cast("double")
-            )
-        )
-        return piv.select(
-            "ref_id",
-            "cand_id",
-            F.col("_r1").cast("bigint").alias("ref_len"),
-            F.col("_c1").cast("bigint").alias("cand_len"),
-            F.round(p1, 9).alias("p1"),
-            F.round(p2, 9).alias("p2"),
-            F.round(bp, 9).alias("bp"),
-            F.round(bp * F.sqrt(p1 * p2), 9).alias("bleu2"),
-        )
-
-    q["bleu_verify"] = q_bleu_verify
-
-    def q_dedup_threshold_sweep(spark, sf_dir):
-        """Near-dup yield curve: the LSH candidates verified ONCE at
-        jaccard >= 0.5 (exact integer inter/union counts), then counted
-        against the whole threshold grid 50..95% by pure integer
-        cross-multiplication (inter*100 >= pct*union — no float CDF).
-        The session_gap_sweep shape for dedup policy: how many pairs
-        and flagged docs does each candidate threshold cost, from one
-        verify pass instead of ten.  Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        vr = dedup.jaccard_verify(
-            docs, cand, k=5, threshold=0.5, with_counts=True
-        )
-        grid = F.explode(
-            F.array(*[F.lit(50 + 5 * i).cast("bigint") for i in range(10)])
-        )
-        hit = (
-            F.col("inter") * 100 >= F.col("pct") * F.col("union_sz")
-        ).cast("bigint")
-        return (
-            vr.select("a", "b", "inter", "union_sz", grid.alias("pct"))
-            .groupBy("pct")
-            .agg(
-                F.sum(hit).cast("bigint").alias("n_pairs"),
-                F.countDistinct(
-                    F.when(
-                        F.col("inter") * 100
-                        >= F.col("pct") * F.col("union_sz"),
-                        F.col("b"),
-                    )
-                )
-                .cast("bigint")
-                .alias("n_docs_flagged"),
-            )
-        )
-
-    q["dedup_threshold_sweep"] = q_dedup_threshold_sweep
-
-    def q_cluster_size_dist(spark, sf_dir):
-        """Duplicate-family size profile: the connected components of
-        the verified near-dup graph aggregated to a size histogram
-        (how many pairs-families, triples, bigger blobs) — the corpus
-        health metric a dedup rollout reports before deleting anything.
-        Pure integer counts over the independently-gated CC layer.
-        Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        cc = dedup.connected_components(
-            dup.select("a", "b"), include_self_pairs=False
-        )
-        sizes = cc.groupBy("component").agg(
-            F.count("*").cast("bigint").alias("_sz")
-        )
-        return sizes.groupBy(F.col("_sz").alias("cluster_size")).agg(
-            F.count("*").cast("bigint").alias("n_clusters"),
-            (F.count("*") * F.col("_sz")).cast("bigint").alias("n_docs"),
-        )
-
-    q["cluster_size_dist"] = q_cluster_size_dist
-
-    def q_t_closeness(spark, sf_dir):
-        """t-closeness per quasi-identifier group — the distributional
-        privacy audit k-anonymity and l-diversity miss: a group can be
-        large and diverse yet still leak if its sensitive-attribute
-        distribution differs from the table's.  Sensitive attribute =
-        the l_diversity 1000-unit acctbal band (ordered), distance =
-        1-D earth-mover on the ordered bands: t = sum_j |cumP_j -
-        cumQ_j| / (m-1).  Exact integers throughout: the numerator is
-        sum_j |cum_g_j * N - cum_all_j * n_g| (cross-multiplied
-        cumulative counts over the bounded band grid), one division at
-        the end.  All joins are broadcast over <=125 groups x <=21
-        bands.  Returns (nationkey, mktsegment, n_rows, emd_num, t)."""
-        c = _t(spark, sf_dir, "customer")
-        band = F.floor(
-            (F.col("c_acctbal") + 10000.0) / F.lit(1000.0)
-        ).cast("bigint")
-        cell = (
-            c.groupBy(
-                F.col("c_nationkey").cast("bigint").alias("nationkey"),
-                F.col("c_mktsegment").alias("mktsegment"),
-                band.alias("_band"),
-            )
-            .agg(F.count("*").cast("bigint").alias("_cnt"))
-            # bounded (<=125*21 rows), consumed by every layer below
-            .localCheckpoint(eager=False)
-        )
-        gtot = cell.groupBy("_band").agg(
-            F.sum("_cnt").cast("bigint").alias("_nb")
-        )
-        nn = gtot.agg(
-            F.sum("_nb").cast("bigint").alias("_N"),
-            F.count("*").cast("bigint").alias("_m"),
-        )
-        grp = cell.groupBy("nationkey", "mktsegment").agg(
-            F.sum("_cnt").cast("bigint").alias("_ng")
-        )
-        # dense (group x band) grid so cumulative sums carry across
-        # bands the group lacks
-        grid = grp.crossJoin(F.broadcast(gtot.select("_band")))
-        dense = grid.join(cell, on=["nationkey", "mktsegment", "_band"], how="left").select(
-            "nationkey",
-            "mktsegment",
-            "_band",
-            "_ng",
-            F.coalesce(F.col("_cnt"), F.lit(0)).cast("bigint").alias("_c"),
-        )
-        b2 = gtot.select(
-            F.col("_band").alias("_b2"), F.col("_nb").alias("_nb2")
-        )
-        cum = (
-            dense.join(F.broadcast(b2), F.col("_b2") <= F.col("_band"))
-            .groupBy("nationkey", "mktsegment", "_band", "_ng")
-            .agg(F.sum("_nb2").cast("bigint").alias("_cum_all"))
-        )
-        d2 = dense.select(
-            "nationkey",
-            "mktsegment",
-            F.col("_band").alias("_b3"),
-            F.col("_c").alias("_c3"),
-        )
-        cumg = (
-            cum.join(
-                F.broadcast(d2),
-                (F.col("_b3") <= F.col("_band"))
-                & (cum.nationkey == d2.nationkey)
-                & (cum.mktsegment == d2.mktsegment),
-            )
-            .groupBy(cum.nationkey, cum.mktsegment, "_band", "_ng", "_cum_all")
-            .agg(F.sum("_c3").cast("bigint").alias("_cum_g"))
-        )
-        term = F.abs(
-            F.col("_cum_g") * F.col("_N") - F.col("_cum_all") * F.col("_ng")
-        ).cast("bigint")
-        return (
-            cumg.crossJoin(F.broadcast(nn))
-            .groupBy("nationkey", "mktsegment", "_ng", "_N", "_m")
-            .agg(F.sum(term).cast("bigint").alias("emd_num"))
-            .select(
-                "nationkey",
-                "mktsegment",
-                F.col("_ng").alias("n_rows"),
-                "emd_num",
-                F.round(
-                    F.col("emd_num").cast("double")
-                    / (
-                        F.col("_ng").cast("double")
-                        * F.col("_N").cast("double")
-                        * (F.col("_m") - 1).cast("double")
-                    ),
-                    9,
-                ).alias("t"),
-            )
-        )
-
-    q["t_closeness"] = q_t_closeness
-
-    # ---- round-11 surface: window/rollup/DSP-feature shapes ---------
-
-    def q_reset_running_sum(spark, sf_dir):
-        """Running spend since the last purchase, per user — the
-        conditional-reset cumulative window (segmented scan): segment
-        id = cumulative purchase count (each purchase STARTS a new
-        segment), running value = cumulative sum within (user,
-        segment).  Two stacked windows over ONE user-keyed exchange
-        (the second window partitions by a superset key with the same
-        ordering, so no second shuffle).  Value terms quantize to exact
-        cents before summing (no float accumulates across rows).
-        Round-11 registration."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        seg = F.sum(
-            F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        ).over(w)
-        d = e.select(
-            "event_id",
-            "user_id",
-            "ts",
-            F.coalesce(cents, F.lit(0)).alias("_c"),
-            seg.cast("bigint").alias("segment"),
-        )
-        w2 = W.partitionBy("user_id", "segment").orderBy("ts", "event_id")
-        return d.select(
-            "event_id",
-            "user_id",
-            "segment",
-            F.sum("_c").over(w2).cast("bigint").alias("run_cents"),
-        )
-
-    q["reset_running_sum"] = q_reset_running_sum
-
-    def q_grouping_sets_revenue(spark, sf_dir):
-        """Explicit GROUPING SETS — (flag, status), (flag), () — with
-        GROUPING() flags distinguishing subtotal NULLs from data NULLs:
-        the mixed-granularity report shape cube/rollup families don't
-        pin (a cube emits all 4 sets; this emits exactly 3).  Revenue
-        in exact 1e-4 units.  Round-11 registration."""
-        li = _t(spark, sf_dir, "lineitem")
-        rev = F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("bigint")
-        li.select(
-            "l_returnflag", "l_linestatus", rev.alias("_rev")
-        ).createOrReplaceTempView("_gs_lineitem")
-        return spark.sql(
-            """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
-                   CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
-                   CAST(sum(_rev) AS BIGINT) AS rev_units,
-                   count(*) AS n_lines
-            FROM _gs_lineitem
-            GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                    (l_returnflag), ())
-            """
-        )
-
-    q["grouping_sets_revenue"] = q_grouping_sets_revenue
-
-    def q_merge_partials(spark, sf_dir):
-        """Two-level mergeable aggregation: daily partial aggregates
-        (count / exact-unit sum / min / max) merged into monthly totals
-        USING ONLY THE PARTIALS — the incremental-rollup contract every
-        warehouse materialization relies on (merge(sum)=sum of sums,
-        merge(min)=min of mins...).  The oracle aggregates the raw rows
-        straight to months, so the gate proves the merge is lossless.
-        Partial layer is a day-keyed map-side-combined aggregate; the
-        merge shuffles only ~days rows.  Round-11 registration."""
-        li = _t(spark, sf_dir, "lineitem")
-        rev = F.round(
-            F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000
-        ).cast("bigint")
-        daily = li.groupBy(
-            F.date_trunc("day", F.col("l_shipdate")).alias("_day")
-        ).agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum(rev).cast("bigint").alias("_rev"),
-            F.min(rev).cast("bigint").alias("_mn"),
-            F.max(rev).cast("bigint").alias("_mx"),
-        )
-        return daily.groupBy(
-            F.date_trunc("month", F.col("_day")).alias("month")
-        ).agg(
-            F.sum("_n").cast("bigint").alias("n_lines"),
-            F.sum("_rev").cast("bigint").alias("rev_units"),
-            F.min("_mn").cast("bigint").alias("min_units"),
-            F.max("_mx").cast("bigint").alias("max_units"),
-        )
-
-    q["merge_partials"] = q_merge_partials
-
-    def q_zero_crossing_rate(spark, sf_dir):
-        """Zero-crossing count per 256-sample frame per channel — the
-        classic cheap spectral-content feature (audio/EEG activity
-        detection) computed without any FFT.  The signal's dyadic v
-        recenters to v - 0.5 exactly; a crossing is a strictly negative
-        product of consecutive centered samples (exact float compare on
-        dyadics), counted within tumbling frames (frame = t div 256,
-        non-negative so Spark div == DuckDB //).  One channel-keyed
-        window pass + one (channel, frame) aggregate.  Round-11
-        registration."""
-        sig = _signal(spark, sf_dir)
-        w = W.partitionBy("recording_id", "channel").orderBy("t")
-        c = F.col("v") - F.lit(0.5)
-        prev = F.lag(c).over(w)
-        d = sig.df.select(
-            "recording_id",
-            "channel",
-            F.expr("CAST(t div 256 AS BIGINT)").alias("frame"),
-            F.expr("CAST((t - 1) div 256 AS BIGINT)").alias("_pframe"),
-            ((prev * c < 0) & F.col("t").isNotNull()).cast("bigint").alias(
-                "_x"
-            ),
-        )
-        cross = F.when(
-            (F.col("_pframe") == F.col("frame")) & (F.col("_x") == 1), 1
-        ).otherwise(0)
-        return d.groupBy("recording_id", "channel", "frame").agg(
-            F.sum(cross).cast("bigint").alias("n_cross"),
-            F.count("*").cast("bigint").alias("n_samples"),
-        )
-
-    q["zero_crossing_rate"] = q_zero_crossing_rate
-
-    # ---- round-11 surface: PR curve, MAP, stationary distribution --
-
-    def q_pr_auc_binned(spark, sf_dir):
-        """Binned average precision (PR-AUC) of the NB en-vs-rest
-        margin — the class-imbalance-honest complement to
-        roc_auc_binned, sharing its exact decision value and fixed
-        1024-bin dyadic grid.  Sweeping thresholds from the top bin
-        down, each bin's step term is the exact rational
-        pos_b * TP_b / (P * (TP_b + FP_b)) (delta-recall times
-        precision, right-step AP); every term quantizes to integer 1e-9
-        units before summing (the ndcg discipline), so no float
-        accumulates.  Cumulative TP/FP come from a broadcast inequality
-        self-join over the bounded bin relation.  Returns one row
-        (n_pos, n_neg, ap_units, pr_auc).  Round-11 registration."""
-        nb = q_nb_lang_scores(spark, sf_dir)
-        truth = _t(spark, sf_dir, "documents").select("doc_id", "lang")
-        per_doc = nb.groupBy("doc_id").agg(
-            F.max(
-                F.when(F.col("score_lang") == "en", F.col("log_score"))
-            ).alias("_sen"),
-            F.max(
-                F.when(F.col("score_lang") != "en", F.col("log_score"))
-            ).alias("_sot"),
-            F.max(
-                F.when(F.col("score_lang") == "en", F.col("n_tokens"))
-            ).alias("_nt"),
-        )
-        en = per_doc.join(truth, on="doc_id")
-        margin = (F.col("_sen") - F.col("_sot")) / F.col("_nt").cast(
-            "double"
-        )
-        bin_ = F.least(
-            F.greatest(
-                F.floor((margin + F.lit(0.5)) * F.lit(1024.0)), F.lit(0)
-            ),
-            F.lit(1023),
-        ).cast("bigint")
-        hist = (
-            en.select(
-                bin_.alias("_b"),
-                F.when(F.col("lang") == "en", 1).otherwise(0).alias("_p"),
-            )
-            .groupBy("_b")
-            .agg(
-                F.sum("_p").cast("bigint").alias("_pos"),
-                F.sum(1 - F.col("_p")).cast("bigint").alias("_neg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        tot = hist.agg(
-            F.sum("_pos").cast("bigint").alias("_P"),
-            F.sum("_neg").cast("bigint").alias("_N"),
-        )
-        above = (
-            hist.alias("a")
-            .join(
-                F.broadcast(
-                    hist.select(
-                        F.col("_b").alias("_b2"),
-                        F.col("_pos").alias("_p2"),
-                        F.col("_neg").alias("_n2"),
-                    )
-                ),
-                F.col("_b2") >= F.col("_b"),
-            )
-            .groupBy("_b", "_pos")
-            .agg(
-                F.sum("_p2").cast("bigint").alias("_tp"),
-                F.sum("_n2").cast("bigint").alias("_fp"),
-            )
-        )
-        term = F.round(
-            F.lit(1e9)
-            * (F.col("_pos") * F.col("_tp")).cast("double")
-            / (F.col("_P") * (F.col("_tp") + F.col("_fp"))).cast("double")
-        ).cast("bigint")
-        return (
-            above.crossJoin(F.broadcast(tot))
-            .select("_P", "_N", term.alias("_u"))
-            .groupBy("_P", "_N")
-            .agg(F.sum("_u").cast("bigint").alias("ap_units"))
-            .select(
-                F.col("_P").alias("n_pos"),
-                F.col("_N").alias("n_neg"),
-                "ap_units",
-                F.round(F.col("ap_units").cast("double") / F.lit(1e9), 9)
-                .alias("pr_auc"),
-            )
-        )
-
-    q["pr_auc_binned"] = q_pr_auc_binned
-
-    def q_map_eval(spark, sf_dir):
-        """MAP@5 of the IVF index against the brute-force truth —
-        the order-sensitive retrieval metric completing recall@5
-        (ann_recall) and MRR (mrr_eval).  Average precision per query
-        uses exact 1/60 units (60 = lcm(1..5), so rel_i * 60 *
-        hits_i / i is a pure integer for every cutoff i): ap_units =
-        sum_i rel_i * (60 * hits_i div i), AP = units / (60 * R).  The
-        per-query cumulative hit count is a 5-row window per query —
-        hash-partitioned by query id, bounded partitions.  Round-11
-        registration."""
-        truth = q_knn_cosine(spark, sf_dir).select(
-            F.col("q_id").alias("_qt"), F.col("vec_id").alias("_vt")
-        )
-        cand = q_ivf_topk(spark, sf_dir).select("q_id", "vec_id", "rank")
-        j = cand.join(
-            truth,
-            (cand.q_id == F.col("_qt")) & (cand.vec_id == F.col("_vt")),
-            "left",
-        ).select(
-            "q_id",
-            "rank",
-            F.col("_vt").isNotNull().cast("bigint").alias("_rel"),
-        )
-        w = W.partitionBy("q_id").orderBy("rank")
-        d = j.select(
-            "q_id",
-            "rank",
-            "_rel",
-            F.sum("_rel").over(w).cast("bigint").alias("_hits"),
-        )
-        unit = F.col("_rel") * F.expr(
-            "CAST((60 * _hits) div rank AS BIGINT)"
-        )
-        return d.groupBy("q_id").agg(
-            F.max("_hits").cast("bigint").alias("n_rel"),
-            F.sum(unit).cast("bigint").alias("ap_units"),
-            F.round(
-                F.sum(unit).cast("double")
-                / F.nullif(
-                    (F.lit(60) * F.max("_hits")).cast("double"), F.lit(0.0)
-                ),
-                9,
-            ).alias("ap"),
-        )
-
-    q["map_eval"] = q_map_eval
-
-    def q_stationary_markov(spark, sf_dir):
-        """Stationary distribution of the user-behavior Markov chain:
-        8 unrolled power-iteration rounds over the (5x5) event-type
-        transition matrix, ENTIRELY in integer arithmetic — pi lives in
-        1e12 units and every term is (pi_i * c_ij) div r_i on provably
-        non-negative int64 operands (Spark's truncating div == DuckDB's
-        flooring //), so both engines replay every round bit-for-bit
-        with no float anywhere (the pagerank discipline; flooring leaks
-        < 5e-12 mass per round, deterministically).  The transition
-        table is the one full events pass, checkpointed; each round is
-        a 25-row broadcast join.  Returns (event_type, pi_units, pi).
-        Round-11 registration."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        t = (
-            e.select(
-                F.col("event_type").alias("_from"),
-                F.lead("event_type").over(w).alias("_to"),
-            )
-            .filter(F.col("_to").isNotNull())
-            .groupBy("_from", "_to")
-            .agg(F.count("*").cast("bigint").alias("_n"))
-            .localCheckpoint(eager=False)
-        )
-        rt = t.groupBy("_from").agg(F.sum("_n").cast("bigint").alias("_rt"))
-        trans = t.join(F.broadcast(rt), on="_from").localCheckpoint(
-            eager=False
-        )
-        S = 10**12
-        pi = trans.select("_from").distinct().select(
-            F.col("_from").alias("_state"),
-            F.lit(S // 5).cast("bigint").alias("_u"),
-        )
-        for _ in range(8):
-            pi = (
-                trans.join(
-                    F.broadcast(pi),
-                    trans._from == F.col("_state"),
-                )
-                .select(
-                    F.col("_to").alias("_state2"),
-                    F.expr("CAST((_u * _n) div _rt AS BIGINT)").alias("_c"),
-                )
-                .groupBy(F.col("_state2").alias("_state"))
-                .agg(F.sum("_c").cast("bigint").alias("_u"))
-            )
-        return pi.select(
-            F.col("_state").alias("event_type"),
-            F.col("_u").alias("pi_units"),
-            F.round(F.col("_u").cast("double") / F.lit(float(S)), 9).alias(
-                "pi"
-            ),
-        )
-
-    q["stationary_markov"] = q_stationary_markov
-
-    def q_ppr_seeded(spark, sf_dir):
-        """Personalized PageRank from the doc_id % 5 == 0 seed set over
-        the verified near-dup graph (llm/dedup.personalized_pagerank) —
-        TrustRank-style proximity to trusted documents, the seventh
-        iterative-algorithm shape.  Exact integer units throughout
-        (the pagerank discipline: u div deg contributions, 17/20
-        damping, seed-only base term), so the oracle unrolls all 5
-        rounds bit-for-bit.  The sparse rank table covers only the
-        seeds' reachable set — the property that makes PPR cheaper
-        than global PageRank at 100 TB.  Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        seeds = docs.filter(F.col("doc_id") % 5 == 0).select(
-            F.col("doc_id").alias("id")
-        )
-        return dedup.personalized_pagerank(
-            dup.select("a", "b"), seeds, iters=5
-        )
-
-    q["ppr_seeded"] = q_ppr_seeded
-
-    def q_conductance(spark, sf_dir):
-        """Conductance of the label-propagation communities over the
-        verified near-dup graph (llm/dedup.conductance) — the
-        cut-quality complement to modularity: cut_c = vol_c - 2*e_c
-        and phi_c = cut / min(vol, 2m - vol), every input an exact
-        int64 count, one division per community (NULL when the
-        community is the whole graph).  Round-11 registration."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        edges = (
-            dup.select("a", "b")
-            .filter(F.col("a") != F.col("b"))
-            .localCheckpoint(eager=True)
-        )
-        labels = dedup.label_propagation(edges, rounds=4)
-        return dedup.conductance(edges, labels)
-
-    q["conductance"] = q_conductance
-
-    def q_setsim_pairs(spark, sf_dir):
-        """EXACT-threshold set-similarity self-join via AllPairs/PPJoin
-        prefix filtering (llm/dedup.set_similarity_join; Bayardo
-        WWW'07, Xiao WWW'08): every doc pair with 8-shingle Jaccard
-        >= 4/5, no blocking and no MinHash approximation — each doc
-        indexes only its (1-t)s+1 globally-RAREST shingles, and two
-        docs missing a common prefix shingle provably sit under the
-        threshold.  The deterministic-complete counterpart to the
-        minhash_dedup recall bound (reference parity: the same
-        near-dup surface as core/products.py shingle dedup).  All
-        equi-joins + one per-doc window; exact int64 inter/union.
-        Registered after the round-10/11 windows; round-12 window
-        material."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.set_similarity_join(docs, k=8, t_num=4, t_den=5)
-
-    q["setsim_pairs"] = q_setsim_pairs
-
-    def q_winnow_pairs(spark, sf_dir):
-        """Winnowing fingerprint match detection (llm/dedup
-        .winnow_pairs; Schleimer-Wilkerson-Aiken SIGMOD'03 / MOSS):
-        5-gram hashes -> sliding window-of-4 minima with rightmost
-        tie-break (one per-doc window frame over a packed
-        hash*2^20+(2^20-pos) key), fingerprints appearing in > 20 docs
-        dropped as boilerplate (the bound that keeps the fp self-join
-        linear), shared-fingerprint counts per pair.  Unlike MinHash
-        the sketch preserves match POSITIONS; guarantee: any shared
-        substring of length >= w+k-1 = 8 chars yields a shared
-        fingerprint.  Registered after the round-10/11 windows;
-        round-12 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.winnow_pairs(docs, k=5, w=4, max_df=20, min_shared=3)
-
-    q["winnow_pairs"] = q_winnow_pairs
-
-    def q_heavy_ngrams(spark, sf_dir):
-        """Exact corpus heavy hitters — 8-grams with count*(k+1) > N,
-        k=200 — via a mergeable Misra-Gries summary (llm/sketch
-        .misra_gries_heavy; Agarwal et al. PODS'12): one Arrow-batched
-        scan builds k-counter summaries per partition (their union is
-        a pigeonhole-guaranteed superset of the heavy hitters under
-        ANY partitioning), a broadcast semi-join recounts the <=
-        32*k candidates exactly.  O(k) task state, no full-vocabulary
-        shuffle — the cliche/boilerplate-phrase detector a 100 TB
-        text pipeline runs before dedup.  Deterministic exact output;
-        the sketch only prunes.  Registered after the round-10/11
-        windows; round-12 window material."""
-        from openseize_spark.llm import sketch
-
-        docs = _t(spark, sf_dir, "documents")
-        grams = (
-            docs.filter(F.col("text").isNotNull())
-            .select(dedup.normalize_text(F.col("text")).alias("_txt"))
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, greatest(length(_txt) - 7,"
-                        " 0)), i -> substring(_txt, i, 8))"
-                    )
-                ).alias("item")
-            )
-        )
-        return sketch.misra_gries_heavy(grams, "item", k=200)
-
-    q["heavy_ngrams"] = q_heavy_ngrams
-
-    def q_incident_windows(spark, sf_dir):
-        """Big-big interval range join via time bucketing (operators/
-        relational.range_join_buckets): +/-30 min incident windows
-        around high-value error events joined against ALL events with
-        NO equi key — the case Spark's planner can only nested-loop,
-        re-expressed as interval-to-bucket explosion (fan-out <= 3 at
-        a 30-min bucket) + a plain hash equi-join on the bucket, each
-        qualifying pair exactly once because a point owns exactly one
-        bucket.  Blast-radius accounting per incident: exact event
-        count + cents sum.  Registered after the round-10/11 windows;
-        round-12 window material."""
-        ev = _events(spark, sf_dir)
-        half = 30 * 60 * 1_000_000
-        inc = ev.filter(
-            (F.col("event_type") == "error") & (F.col("value") >= 150.0)
-        ).select(
-            F.col("event_id").alias("incident_id"),
-            (F.unix_micros("ts") - half).alias("lo"),
-            (F.unix_micros("ts") + half).alias("hi"),
-        )
-        pts = ev.select(
-            F.unix_micros("ts").alias("t"),
-            F.round(F.col("value") * 100).cast("bigint").alias("_v"),
-        )
-        joined = rel.range_join_buckets(inc, pts, bucket=half)
-        return joined.groupBy("incident_id").agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum("_v").cast("bigint").alias("sum_cents"),
-        )
-
-    q["incident_windows"] = q_incident_windows
-
-    def q_woe_encode(spark, sf_dir):
-        """Weight-of-evidence encoding of (event_type, hour) against
-        the high-value label (value > 50) — the credit-scoring-lineage
-        categorical encoder that complements leave-one-out
-        target_encode: woe = ln(smoothed positive share / smoothed
-        negative share), +0.5 Laplace on each cell against
-        +0.5*n_categories on each total.  Counts are exact int64 from
-        ONE aggregation; the single ln per category is emitted
-        UNROUNDED (identical operand order both engines -> bit-equal
-        IEEE, the target_encode lesson).  Registered after the
-        round-10/11 windows; round-12 window material."""
-        ev = _events(spark, sf_dir)
-        g = (
-            ev.select(
-                "event_type",
-                F.hour("ts").cast("bigint").alias("hr"),
-                F.when(F.col("value") > 50.0, 1).otherwise(0).alias("_y"),
-            )
-            .groupBy("event_type", "hr")
-            .agg(
-                F.sum("_y").cast("bigint").alias("pos"),
-                F.sum(1 - F.col("_y")).cast("bigint").alias("neg"),
-            )
-        )
-        tot = g.agg(
-            F.sum("pos").cast("bigint").alias("_pt"),
-            F.sum("neg").cast("bigint").alias("_nt"),
-            F.count("*").cast("bigint").alias("_c"),
-        )
-        half_c = F.lit(0.5) * F.col("_c").cast("double")
-        return g.crossJoin(F.broadcast(tot)).select(
-            "event_type",
-            "hr",
-            "pos",
-            "neg",
-            F.ln(
-                (
-                    (F.col("pos").cast("double") + F.lit(0.5))
-                    / (F.col("_pt").cast("double") + half_c)
-                )
-                / (
-                    (F.col("neg").cast("double") + F.lit(0.5))
-                    / (F.col("_nt").cast("double") + half_c)
-                )
-            ).alias("woe"),
-        )
-
-    q["woe_encode"] = q_woe_encode
-
-    def q_isotonic_calibration(spark, sf_dir):
-        """Isotonic regression of the high-value rate over hour-of-day
-        via the MINIMAX formulation iso(i) = max_{l<=i} min_{j>=i}
-        mean(l..j) — exactly the pool-adjacent-violators fit
-        (Robertson/Wright/Dykstra 1988, Thm 1.4.4) but expressed as
-        bounded joins instead of the inherently sequential PAVA loop:
-        the 24 hour bins come from ONE events aggregation, segment
-        means over the 24*25/2 = 300 (l, j) ranges and the minimax
-        reduce over them are joins of 24-row broadcast dims, and every
-        value is an exact int64 (segment means quantized to 1e-9
-        units with DIV before the min/max lattice, so both engines
-        compare identical integers).  The monotone-calibration step a
-        reliability pipeline runs after nb_calibration's binning.
-        Registered after the round-10/11 windows; round-12 window
-        material."""
-        ev = _events(spark, sf_dir)
-        # the 24-row bin table feeds FOUR consumers (l/j/m dims + the
-        # final join) — checkpoint it so events is aggregated once,
-        # not five times (the recompute class the plan sweep hunts)
-        bins = (
-            ev.groupBy(F.hour("ts").cast("bigint").alias("hr"))
-            .agg(
-                F.count("*").cast("bigint").alias("n"),
-                F.sum(F.when(F.col("value") > 50.0, 1).otherwise(0))
-                .cast("bigint")
-                .alias("s"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        bl = bins.select(F.col("hr").alias("l"))
-        bj = bins.select(F.col("hr").alias("j"))
-        bm = bins.select(F.col("hr").alias("m"), "n", "s")
-        segs = (
-            bl.join(F.broadcast(bj), F.col("l") <= F.col("j"))
-            .join(
-                F.broadcast(bm),
-                (F.col("m") >= F.col("l")) & (F.col("m") <= F.col("j")),
-            )
-            .groupBy("l", "j")
-            .agg(
-                F.sum("s").cast("bigint").alias("_ss"),
-                F.sum("n").cast("bigint").alias("_sn"),
-            )
-            .select(
-                "l", "j", F.expr("(_ss * 1000000000) DIV _sn").alias("_mu")
-            )
-        )
-        bi = bins.select(F.col("hr").alias("i"))
-        iso = (
-            segs.join(
-                F.broadcast(bi),
-                (F.col("l") <= F.col("i")) & (F.col("j") >= F.col("i")),
-            )
-            .groupBy("i", "l")
-            .agg(F.min("_mu").alias("_mn"))
-            .groupBy("i")
-            .agg(F.max("_mn").cast("bigint").alias("iso_units"))
-        )
-        return bins.join(iso, bins.hr == iso.i).select(
-            "hr",
-            "n",
-            "s",
-            F.expr("(s * 1000000000) DIV n").alias("rate_units"),
-            "iso_units",
-        )
-
-    q["isotonic_calibration"] = q_isotonic_calibration
-
-    def q_sprt_ab(spark, sf_dir):
-        """Wald's sequential probability-ratio test (1945) per day over
-        the time-ordered purchase stream: H1 'high-value share is 0.6'
-        vs H0 '0.5', alpha = beta = 0.05.  Each trial adds ln(1.2) or
-        ln(0.8) to the log-likelihood ratio; the day decides at the
-        first crossing of +/-ln(19).  The increments are the two
-        CONSTANTS quantized driver-side to integer 1e-9 units (the
-        fir-taps pattern: identical literals embedded in both engines),
-        so the running sum is an exact int64 cumulative window and the
-        first-crossing argmin is deterministic (rn is unique on
-        (ts, event_id)).  The early-stopping experiment monitor that
-        complements the fixed-horizon ab_test_zscore.  Registered
-        after the round-10/11 windows; round-12 window material."""
-        A, B, TH = 182321557, -223143551, 2944438979
-        base = (
-            _events(spark, sf_dir)
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.to_date("ts").alias("day"),
-                "ts",
-                "event_id",
-                F.when(F.col("value") > 50.0, F.lit(A))
-                .otherwise(F.lit(B))
-                .alias("_inc"),
-            )
-        )
-        w = W.partitionBy("day").orderBy("ts", "event_id")
-        r = base.select(
-            "day",
-            F.row_number().over(w).alias("rn"),
-            F.sum("_inc")
-            .over(w.rowsBetween(W.unboundedPreceding, 0))
-            .alias("llr"),
-        )
-        crossed = (
-            r.filter((F.col("llr") >= TH) | (F.col("llr") <= -TH))
-            .groupBy("day")
-            .agg(
-                F.min("rn").cast("bigint").alias("n_decide"),
-                F.expr("min_by(llr, rn)").alias("_llr_at"),
-            )
-        )
-        totals = base.groupBy("day").agg(
-            F.count("*").cast("bigint").alias("n_trials")
-        )
-        # chained whens, NOT when/otherwise: a day with no crossing has
-        # NULL _llr_at, and otherwise('accept_h0') would swallow it
-        return totals.join(crossed, "day", "left").select(
-            "day",
-            "n_trials",
-            F.when(F.col("_llr_at") >= TH, F.lit("accept_h1"))
-            .when(F.col("_llr_at") <= -TH, F.lit("accept_h0"))
-            .otherwise(F.lit("inconclusive"))
-            .alias("decision"),
-            "n_decide",
-        )
-
-    q["sprt_ab"] = q_sprt_ab
-
-    def q_pca_power_iteration(spark, sf_dir):
-        """Dominant principal component of the first 8 embedding
-        dimensions via power iteration on an EXACT integer covariance
-        matrix — the registry's first linear-algebra shape: embedding
-        values quantize to 1e-6 units, the raw/product moments
-        accumulate as DECIMAL(38,0) (the corr_matrix discipline, so
-        the scaled covariance n^2*cov = n*M - S1*S2 is order-exact),
-        and each of the 8 unrolled iterations is an 8x8
-        matrix-vector product over integers with a sign*(abs div
-        maxabs) renormalization — truncation spelled identically in
-        both engines because Spark div truncates while DuckDB //
-        floors.  Every intermediate is an integer, so the result is
-        bit-equal under ANY partitioning even before convergence.  At
-        100 TB the covariance build is one pair-exploded aggregation
-        (64 cells); the iteration moves 8-row tables.  Registered
-        after the round-10/11 windows; round-12 window material."""
-        D, VS, ROUNDS = 8, 10**6, 8
-        dec = "decimal(38,0)"
-        emb = _t(spark, sf_dir, "embeddings")
-        x = emb.select(
-            "vec_id",
-            F.posexplode(F.slice("embedding", 1, D)).alias("_p", "_xf"),
-        ).select(
-            "vec_id",
-            (F.col("_p") + 1).cast("bigint").alias("d"),
-            F.round(F.col("_xf").cast("double") * VS)
-            .cast("bigint")
-            .alias("xu"),
-        )
-        s = x.groupBy("d").agg(
-            F.sum(F.col("xu").cast(dec)).alias("S"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-        xa = x.select(
-            "vec_id", F.col("d").alias("d1"), F.col("xu").alias("x1")
-        )
-        xb = x.select(
-            "vec_id", F.col("d").alias("d2"), F.col("xu").alias("x2")
-        )
-        mm = (
-            xa.join(xb, "vec_id")
-            .groupBy("d1", "d2")
-            .agg(F.sum((F.col("x1") * F.col("x2")).cast(dec)).alias("M"))
-        )
-        sa = s.select(F.col("d").alias("d1"), F.col("S").alias("S1"), "n")
-        sb = s.select(F.col("d").alias("d2"), F.col("S").alias("S2"))
-        cmat = (
-            mm.join(F.broadcast(sa), "d1")
-            .join(F.broadcast(sb), "d2")
-            .select(
-                "d1",
-                "d2",
-                F.expr(
-                    "CASE WHEN (n * M - S1 * S2) < 0 THEN "
-                    "-CAST(abs(n * M - S1 * S2) div n AS BIGINT) "
-                    "ELSE CAST(abs(n * M - S1 * S2) div n AS BIGINT) END"
-                ).alias("c"),
-            )
-        )
-        # the distributed part ends at the D*D exact covariance — the
-        # iteration itself moves 64 rows to the driver and runs in
-        # python ints (the kmeans/kcenter bounded-collect precedent;
-        # arbitrary-precision, so it reproduces HUGEINT semantics
-        # exactly), which beats 8 rounds of 8-row Spark jobs
-        cells = {(r.d1, r.d2): int(r.c) for r in cmat.collect()}
-        v = {d: VS for d in range(1, D + 1)}
-        for _ in range(ROUNDS):
-            raw = {
-                i: sum(cells[(i, j)] * v[j] for j in range(1, D + 1))
-                for i in range(1, D + 1)
-            }
-            m = max(abs(x) for x in raw.values())
-            v = {
-                i: (-((-x if x < 0 else x) * VS // m) if x < 0
-                    else (x * VS // m))
-                for i, x in raw.items()
-            }
-        return spark.createDataFrame(
-            sorted(v.items()), "d bigint, v_units bigint"
-        )
-
-    q["pca_power_iteration"] = q_pca_power_iteration
-
-    def q_peak_concurrency(spark, sf_dir):
-        """Sweep-line peak concurrency: treat every event as a 30-min
-        session [ts, ts+30m) and find, per event type, the maximum
-        number of simultaneously-open sessions and the first instant
-        it is reached — the classic +1/-1 boundary sweep (one union,
-        one per-type cumulative window) instead of a quadratic
-        interval self-join.  Ordering ties by (t, delta) puts closes
-        before opens at the same instant (half-open semantics), and
-        although the running sum is order-ambiguous WITHIN a tie
-        group, the multiset of its values there is {base+1..base+g}
-        (or the mirror for closes) under any order, so the (t, cum)
-        row set — and hence the max and its first t — is
-        deterministic.  Registered after the round-10/11 windows;
-        round-12 window material."""
-        dur = 30 * 60 * 1_000_000
-        base = _events(spark, sf_dir).select(
-            "event_type", F.unix_micros("ts").alias("_t0")
-        )
-        sweep = base.select(
-            "event_type", F.col("_t0").alias("t"), F.lit(1).alias("delta")
-        ).unionByName(
-            base.select(
-                "event_type",
-                (F.col("_t0") + dur).alias("t"),
-                F.lit(-1).alias("delta"),
-            )
-        )
-        w = W.partitionBy("event_type").orderBy("t", "delta")
-        cum = sweep.select(
-            "event_type",
-            "t",
-            F.sum("delta")
-            .over(w.rowsBetween(W.unboundedPreceding, 0))
-            .cast("bigint")
-            .alias("cum"),
-        ).withColumn(
-            "_pk",
-            F.max("cum").over(
-                W.partitionBy("event_type").rowsBetween(
-                    W.unboundedPreceding, W.unboundedFollowing
-                )
-            ),
-        )
-        return (
-            cum.filter(F.col("cum") == F.col("_pk"))
-            .groupBy("event_type")
-            .agg(
-                F.max("cum").alias("peak"),
-                F.min("t").alias("first_peak_t"),
-            )
-        )
-
-    q["peak_concurrency"] = q_peak_concurrency
-
-    def q_consistent_hash_ring(spark, sf_dir):
-        """Consistent-hash ring rebalance audit (Karger et al.,
-        STOC'97): documents assigned to the first virtual node
-        clockwise on an 8-shard ring (16 vnodes each), then again
-        after shard 8 joins, emitting the (shard_before, shard_after,
-        n) transition matrix.  THE ring invariant — adding a shard
-        only moves keys TO the new shard, never between old ones — is
-        visible in the output (off-diagonal rows all land on 8) and
-        pinned by a pytest.  The ring complement to
-        q_rendezvous_shards' highest-random-weight scheme.  Vnode
-        hashes are 144 driver-side md5 constants (the fir-taps
-        pattern) embedded as a sorted in-row array, so assignment is
-        an O(vnodes) row-local scan — no join amplification, no
-        shuffle before the final count.  Registered after the
-        round-10/11 windows; round-12 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        kh = sampling.salted_hash(F.col("doc_id"), "ring")
-
-        def assign_expr(n_shards):
-            vn = _ring_vnodes(n_shards, 16)
-            arr = ",".join(
-                f"named_struct('vh', CAST({vh} AS BIGINT), "
-                f"'shard', CAST({s} AS BIGINT))"
-                for vh, s in vn
-            )
-            fallback = vn[0][1]  # wrap-around: smallest vnode hash
-            return (
-                f"coalesce(try_element_at(filter(array({arr}), "
-                f"x -> x.vh >= _kh), 1).shard, CAST({fallback} AS BIGINT))"
-            )
-
-        keyed = docs.select(kh.alias("_kh"))
-        return (
-            keyed.select(
-                F.expr(assign_expr(8)).alias("shard_before"),
-                F.expr(assign_expr(9)).alias("shard_after"),
-            )
-            .groupBy("shard_before", "shard_after")
-            .agg(F.count("*").cast("bigint").alias("n"))
-        )
-
-    q["consistent_hash_ring"] = q_consistent_hash_ring
-
-    def q_spatial_eps_pairs(spark, sf_dir):
-        """2-D spatial self-join (llm/similarity.grid_eps_pairs): all
-        embedding pairs within L2 eps = 0.05 in the first two
-        dimensions via uniform grid bucketing — each point owns ONE
-        eps-sized cell, one side explodes to its 3x3 neighborhood
-        (fan-out 9, the 2-D analog of range_join_buckets' interval
-        explosion), a hash equi-join on the cell key, then an exact
-        integer distance gate.  The DBSCAN region-query / spatial-join
-        pattern; completeness because pairs within eps differ by <= 1
-        cell per axis.  Registered after the round-10/11 windows;
-        round-12 window material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        return similarity.grid_eps_pairs(emb, eps_units=50_000)
-
-    q["spatial_eps_pairs"] = q_spatial_eps_pairs
-
-    def q_dag_layers(spark, sf_dir):
-        """Longest-path layering of the near-dup DAG (llm/dedup
-        .dag_layers): the verified Jaccard >= 0.8 pairs directed
-        a -> b (acyclic by a < b) relax through 8 max-rounds to the
-        dependency-height histogram — the scheduling-depth statistic
-        and the eighth iterative-algorithm shape (fixed-rounds
-        saturation spec, every level an exact int64).  Registered
-        after the round-10/11 windows; round-12 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        dup = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        # no caller-side checkpoint: dag_layers owns edge
-        # materialization (repartition + persist) since round 14; an
-        # eager checkpoint here would both run a redundant in-builder
-        # job and ERASE the partitioning dag_layers establishes
-        edges = dup.select("a", "b").filter(F.col("a") < F.col("b"))
-        return dedup.dag_layers(edges, rounds=8)
-
-    q["dag_layers"] = q_dag_layers
-
-    def q_hilbert_layout(spark, sf_dir):
-        """Hilbert-curve layout key beside the Morton key for every
-        occupied (p_partkey % 64, p_size % 64) cell (functions/scalar
-        .with_hilbert_key) — the space-filling-curve pair behind
-        OPTIMIZE ZORDER-style multi-dimensional clustering, emitted
-        together so the locality advantage is auditable (consecutive
-        Hilbert indices are always 4-adjacent cells, and rectangular
-        range predicates touch ~40% fewer contiguous index runs than
-        Morton — both pinned by pytests against a python
-        reference).  Pure
-        integer CASE/shift algebra per level, one projection per
-        level, no UDF.  Registered after the round-10/11 windows;
-        round-12 window material."""
-        from openseize_spark.functions.scalar import (
-            with_hilbert_key,
-            zorder_key,
-        )
-
-        p = _t(spark, sf_dir, "part")
-        cells = p.select(
-            (F.col("p_partkey") % 64).cast("bigint").alias("x"),
-            (F.col("p_size") % 64).cast("bigint").alias("y"),
-        ).distinct()
-        return with_hilbert_key(cells, "x", "y", bits=6, out="hd").select(
-            "x",
-            "y",
-            "hd",
-            zorder_key(F.col("x"), F.col("y"), bits=6).alias("zd"),
-        )
-
-    q["hilbert_layout"] = q_hilbert_layout
-
-    def q_streaming_asof(spark, sf_dir):
-        """Streaming point-in-time feature enrichment (streaming/sinks
-        .asof_enrich): purchases arrive as 4 micro-batches and each
-        batch as-of joins (backward) against the STATIC click history —
-        the feature-store correctness rule applied on the ingest path,
-        and the 14th streaming surface.  Per-row enrichment carries no
-        cross-row state, so the accumulated output is independent of
-        batch boundaries; the oracle is the one-shot DuckDB ASOF LEFT
-        JOIN rolled up per day.  Registered after the round-10/11
-        windows; round-12 window material."""
-        import os
-
-        from openseize_spark.streaming import sinks
-
-        tag = os.path.basename(os.path.normpath(sf_dir))
-        e = _events(spark, sf_dir)
-        src = _gate_tmp(spark, f"asof_src_{tag}")
-        if not os.path.exists(os.path.join(src, "_SUCCESS")):
-            e.repartition(4, F.col("user_id")).write.mode(
-                "overwrite"
-            ).parquet(src)
-        clicks = e.filter(F.col("event_type") == "click").select(
-            "user_id", "event_id", "ts"
-        )
-        tgt = _gate_tmp(spark, f"asof_tgt_{tag}")
-        out = sinks.asof_enrich(
-            spark, src, e.schema, clicks, tgt,
-            query_name=f"gate_asof_{tag}",
-        )
-        return out.groupBy(F.to_date("ts").alias("day")).agg(
-            F.count("*").cast("bigint").alias("n_purchases"),
-            F.count("lag_us").cast("bigint").alias("n_attributed"),
-            F.sum("lag_us").cast("bigint").alias("sum_lag_us"),
-        )
-
-    q["streaming_asof"] = q_streaming_asof
-
-    def q_greedy_set_cover(spark, sf_dir):
-        """Greedy maximum-coverage subset selection (llm/sampling
-        .greedy_set_cover; Nemhauser-Wolsey-Fisher 1978): up to 8
-        documents, each maximizing newly-covered 8-shingles — the
-        (1-1/e)-approximate submodular greedy that seeds diverse
-        training mixtures, with deterministic smallest-id tie-break.
-        One eagerly-checkpointed postings build, one anti-join + count
-        per step, a single argmax row to the driver per step (the
-        kcenter precedent), and the per-step covered-set checkpoint
-        (the twice-consumed-state idiom).  Registered after the
-        round-10/11 windows; round-12 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return sampling.greedy_set_cover(docs, k=8, steps=8)
-
-    q["greedy_set_cover"] = q_greedy_set_cover
-
-    def q_fs_linkage(spark, sf_dir):
-        """Fellegi-Sunter probabilistic record linkage (llm/dedup
-        .fellegi_sunter_scores; JASA 1969) over the LSH candidate
-        stream: per-pair agreement on (lang, source, length band) maps
-        to an exact-int64 log-likelihood-ratio score via fixed (m, u)
-        weights quantized to 1e-9 units (the fir-taps constant
-        pattern), with the classic match / review / non-match
-        three-way decision at posterior-odds 100:1 thresholds — the
-        statistical-scoring layer on top of the blocking families.
-        Registered after the round-10/11 windows; round-12 window
-        material."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(sigs, bands=8, portable=True)
-        return dedup.fellegi_sunter_scores(docs, cand)
-
-    q["fs_linkage"] = q_fs_linkage
-
-    def q_bom_rollup(spark, sf_dir):
-        """Hierarchical subtree rollup — the bill-of-materials /
-        org-chart shape, i.e. the recursive-CTE capability Spark lacks
-        natively: parts form a 4-ary tree via parent(k) = (k-1) div 4
-        and every node needs its SUBTREE cost and node count.
-        Expressed as the fixed-point iteration total_r(v) = own(v) +
-        sum over children of total_{r-1}(child) — after depth rounds
-        the totals are the exact subtree aggregates.  The round count
-        is DERIVED, not fixed: one bounded scalar collect reads
-        max(p_partkey) and the driver walks parent(k) to the root to
-        get the exact tree depth (r11 advice fix — the old fixed 12
-        rounds claimed 4^12 ~ 16.7M keys covers sf1000, but TPC-H sf1000
-        has ~200M part keys, depth 14, and even make_sfN's stride-10M
-        sf1 copies exceed 16.7M: the totals would have silently stopped
-        short of convergence exactly at the scales the headroom note
-        advertised).  Deriving depth makes convergence unconditional
-        at ANY corpus size — and cheaper at gate scale (6 rounds, not
-        12).  One |V|-row hash join + aggregate per round, exact int64
-        cents; the oracle is DuckDB's NATIVE WITH RECURSIVE ancestor
-        closure — the engine-completeness contrast this query exists
-        to pin.  Returns the top-of-tree rows (k < 64).  Registered
-        after the round-10/11 windows; round-12 window material."""
-        p = _t(spark, sf_dir, "part")
-        own = (
-            p.select(
-                F.col("p_partkey").cast("bigint").alias("k"),
-                F.round(F.col("p_retailprice") * 100)
-                .cast("bigint")
-                .alias("own_cents"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        edges = (
-            own.filter(F.col("k") > 0)
-            .select(
-                F.col("k").alias("c"),
-                F.expr("CAST((k - 1) DIV 4 AS BIGINT)").alias("parent"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        total = own.select(
-            "k",
-            F.col("own_cents").alias("sub_cents"),
-            F.lit(1).cast("bigint").alias("n_nodes"),
-        )
-        # exact tree depth of the deepest key: a single-scalar collect
-        # (bounded control flow, house precedent) then an O(depth)
-        # parent-walk in python ints — never trust a fixed headroom
-        max_k = int(own.agg(F.max("k")).collect()[0][0] or 0)
-        depth = 0
-        while max_k > 0:
-            max_k = (max_k - 1) // 4
-            depth += 1
-        for _ in range(depth):
-            cs = (
-                edges.join(total, edges.c == total.k)
-                .groupBy("parent")
-                .agg(
-                    F.sum("sub_cents").alias("_cs"),
-                    F.sum("n_nodes").alias("_cn"),
-                )
-            )
-            total = (
-                own.join(cs, own.k == cs.parent, "left")
-                .select(
-                    "k",
-                    (
-                        F.col("own_cents") + F.coalesce("_cs", F.lit(0))
-                    ).cast("bigint").alias("sub_cents"),
-                    (F.lit(1) + F.coalesce("_cn", F.lit(0)))
-                    .cast("bigint")
-                    .alias("n_nodes"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        return total.filter(F.col("k") < 64).select(
-            "k", "sub_cents", "n_nodes"
-        )
-
-    q["bom_rollup"] = q_bom_rollup
-
-    # ---- round-11 session registrations (round-13 window material) ----
-
-    def q_ancestor_chain(spark, sf_dir):
-        """Path-to-root ancestor closure — the UPWARD direction of the
-        recursive-CTE capability, pairing `bom_rollup`'s downward
-        subtree rollup (r10 verdict stretch #8): the 5 most expensive
-        parts (price DESC, key ASC tie-break) are seeds, and every
-        ancestor on their chains to the root of the 4-ary tree
-        parent(k) = (k-1) div 4 is returned with how many seed chains
-        pass through it and its minimum distance from a seed.
-
-        Spark shape — IN-list/semi-join, NOT iteration: the seed keys
-        are a bounded 5-row collect, the full ancestor closure is a
-        driver-side python parent-walk (<= 5 * depth keys, exact
-        integer arithmetic), and the single distributed step is one
-        broadcast hash join of the tiny chain table against part — at
-        100 TB the ancestor key IN-list prunes partitions/row-groups
-        at the scan, which is precisely why the ancestor direction
-        does NOT need bom_rollup's per-level relaxation.  The oracle
-        is DuckDB's native WITH RECURSIVE walking the same chains.
-        Registered after the round-11/12 windows; round-13 window
-        material."""
-        p = _t(spark, sf_dir, "part")
-        seeds = [
-            int(r.k)
-            for r in p.select(
-                F.col("p_partkey").cast("bigint").alias("k"),
-                "p_retailprice",
-            )
-            .orderBy(F.col("p_retailprice").desc(), F.col("k"))
-            .limit(5)
-            .collect()
-        ]
-        # exact python closure: (ancestor k) -> [seed coverage, min depth]
-        cover: dict[int, list] = {}
-        for s in seeds:
-            k, d = s, 0
-            while k > 0:
-                ent = cover.setdefault(k, [0, d])
-                ent[0] += 1
-                ent[1] = min(ent[1], d)
-                k, d = (k - 1) // 4, d + 1
-        chain = spark.createDataFrame(
-            sorted((k, v[0], v[1]) for k, v in cover.items()),
-            "k bigint, n_seeds bigint, min_depth bigint",
-        )
-        return p.join(
-            F.broadcast(chain), p.p_partkey == chain.k
-        ).select(
-            "k",
-            "n_seeds",
-            "min_depth",
-            F.round(F.col("p_retailprice") * 100)
-            .cast("bigint")
-            .alias("own_cents"),
-        )
-
-    q["ancestor_chain"] = q_ancestor_chain
-
-    def q_fastss_pairs(spark, sf_dir):
-        """Edit-distance-1 identifier linkage (llm/text
-        .fastss_ed1_pairs; Bocek et al. 2007): all customer-name pairs
-        at Levenshtein distance exactly 1, found by a deletion-
-        neighborhood EQUI-join — each name explodes to length+1
-        deletion variants (bounded in-row fan-out), variant posting
-        lists are bounded by the alphabet, and the exact levenshtein=1
-        gate finishes.  The fuzzy-ID / typo record-linkage primitive;
-        never all-pairs, unlike the brute-force oracle.  Registered
-        after the round-11/12 windows; round-13 window material."""
-        c = _t(spark, sf_dir, "customer")
-        return llm_text.fastss_ed1_pairs(c, col="c_name")
-
-    q["fastss_pairs"] = q_fastss_pairs
-
-    def q_apriori_triples(spark, sf_dir):
-        """Frequent 3-itemset mining with the a-priori prune (Agrawal
-        & Srikant 1994): baskets are orders, items are part brands,
-        and a brand triple is reported when its support clears 20
-        basis points of all orders — after L1 (>= 1000 bp) restricts
-        the basket stream and every 2-subset of a candidate triple is
-        checked against L2 (>= 180 bp), the downward-closure prune
-        that makes Apriori beat counting all C(|items|,3) triples.
-
-        Scale shape: basket expansion is bounded in-row fan-out (an
-        order has <= ~13 distinct brands, so <= C(13,2) pair and
-        C(13,3) triple rows per order at ANY corpus size); supports
-        are map-side-combinable counts; L1/L2 are tiny (<= |brands|^2)
-        broadcast semi-joins; thresholds are exact integer
-        basis-point arithmetic (support * 10000 >= bp * n_orders), no
-        float compare.  Registered after the round-11/12 windows;
-        round-13 window material."""
-        li = _t(spark, sf_dir, "lineitem")
-        pt = _t(spark, sf_dir, "part")
-        ob = (
-            li.join(pt, li.l_partkey == pt.p_partkey)
-            .select(
-                F.col("l_orderkey").alias("o"),
-                F.col("p_brand").alias("b"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        n = ob.select("o").distinct().agg(
-            F.count("*").cast("bigint").alias("_n")
-        )
-        s1 = ob.groupBy("b").agg(F.count("*").cast("bigint").alias("_c"))
-        l1 = (
-            s1.crossJoin(F.broadcast(n))
-            .filter(F.col("_c") * 10000 >= 1000 * F.col("_n"))
-            .select("b")
-        )
-        ob1 = ob.join(F.broadcast(l1), on="b").select("o", "b")
-        ob1 = ob1.localCheckpoint(eager=False)  # 3 join consumers below
-        pa = ob1.select("o", F.col("b").alias("b1"))
-        pb = ob1.select("o", F.col("b").alias("b2"))
-        pc = ob1.select("o", F.col("b").alias("b3"))
-        p2 = pa.join(pb, on="o").filter(F.col("b1") < F.col("b2"))
-        s2 = p2.groupBy("b1", "b2").agg(
-            F.count("*").cast("bigint").alias("_c")
-        )
-        l2 = (
-            s2.crossJoin(F.broadcast(n))
-            .filter(F.col("_c") * 10000 >= 180 * F.col("_n"))
-            .select("b1", "b2")
-            .localCheckpoint(eager=False)  # 3 prune consumers below
-        )
-        t3 = (
-            pa.join(pb, on="o")
-            .filter(F.col("b1") < F.col("b2"))
-            .join(pc, on="o")
-            .filter(F.col("b2") < F.col("b3"))
-        )
-        t3p = (
-            t3.join(F.broadcast(l2), on=["b1", "b2"])
-            .join(
-                F.broadcast(
-                    l2.select(
-                        F.col("b1").alias("b1"),
-                        F.col("b2").alias("b3"),
-                    )
-                ),
-                on=["b1", "b3"],
-            )
-            .join(
-                F.broadcast(
-                    l2.select(
-                        F.col("b1").alias("b2"),
-                        F.col("b2").alias("b3"),
-                    )
-                ),
-                on=["b2", "b3"],
-            )
-        )
-        s3 = t3p.groupBy("b1", "b2", "b3").agg(
-            F.count("*").cast("bigint").alias("support")
-        )
-        return (
-            s3.crossJoin(F.broadcast(n))
-            .filter(F.col("support") * 10000 >= 20 * F.col("_n"))
-            .select("b1", "b2", "b3", "support")
-        )
-
-    q["apriori_triples"] = q_apriori_triples
-
-    def q_sssp_delta(spark, sf_dir):
-        """Budget-bounded weighted shortest paths (llm/dedup
-        .sssp_bounded): Bellman-Ford with frontier-only relaxation
-        over a derived 1024-node directed graph — nodes are part-key
-        buckets, edges (l_partkey % 1024) -> ((l_partkey * 7 +
-        l_orderkey) % 1024) with integer weight (l_partkey +
-        l_suppkey) % 9 + 1 (min over duplicate edges), source node 0,
-        horizon 64.  The weighted upgrade of bfs_distances; the
-        oracle is DuckDB's native recursive state-space walk.  All
-        arithmetic is exact int64, so the result is bit-equal under
-        any relaxation order.  Registered after the round-11/12
-        windows; round-13 window material."""
-        li = _t(spark, sf_dir, "lineitem")
-        edges = (
-            li.select(
-                (F.col("l_partkey") % 1024).cast("bigint").alias("u"),
-                ((F.col("l_partkey") * 7 + F.col("l_orderkey")) % 1024)
-                .cast("bigint")
-                .alias("v"),
-                ((F.col("l_partkey") + F.col("l_suppkey")) % 9 + 1)
-                .cast("bigint")
-                .alias("w"),
-            )
-            .groupBy("u", "v")
-            .agg(F.min("w").alias("w"))
-        )
-        return dedup.sssp_bounded(edges, source=0, budget=64)
-
-    q["sssp_delta"] = q_sssp_delta
-
-    def q_heaps_law_fit(spark, sf_dir):
-        """Heaps'-law vocabulary growth curve + log-log slope
-        (llm/text.heaps_law_fit): distinct-word counts at ten
-        doc-id-decile corpus prefixes and the least-squares beta of
-        ln V ~ alpha + beta ln n — the corpus statistic that justifies
-        the TF-IDF absolute-df-cap default (COVERAGE.md round-11
-        note): discriminative terms keep low df when beta > 0.  No
-        global sort (prefix membership is integer threshold
-        arithmetic), quantized-ln integer regression moments,
-        DECIMAL(38,0)/HUGEINT sums, one final division.  Registered
-        after the round-11/12 windows; round-13 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.heaps_law_fit(docs)
-
-    q["heaps_law_fit"] = q_heaps_law_fit
-
-    def q_stratified_ate(spark, sf_dir):
-        """Stratified average-treatment-effect estimation (coarsened
-        exact matching / propensity stratification, Rosenbaum & Rubin
-        1983 family): units are customers, treatment is the
-        deterministic c_custkey parity, outcome is lifetime order
-        value in exact cents (left join to orders, 0 when none), and
-        strata are the (nationkey, mktsegment) covariate cells —
-        the estimator compares arms only WITHIN a cell, then
-        size-weights cell effects into the overall ATE.
-
-        Exactness: per-cell arm sums/counts are exact int64; each arm
-        mean is one IEEE division (bit-equal, emitted unrounded); the
-        cross-cell ATE uses the quantize-then-aggregate house style —
-        per-cell units round((1e6 * n * (St*nc - Sc*nt)) / (nt*nc))
-        sum as exact integers, ONE final division scales — so no
-        order-dependent float summation.  Cells missing an arm are
-        excluded from both the table and the weight mass (standard
-        common-support trimming).  Scale shape: one join-aggregate to
-        get outcomes, one cell aggregation, a broadcast of ~|cells|
-        rows; nothing quadratic.  Registered after the round-11/12
-        windows; round-13 window material."""
-        c = _t(spark, sf_dir, "customer")
-        od = _t(spark, sf_dir, "orders")
-        spend = od.groupBy("o_custkey").agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("_y")
-        )
-        units = (
-            c.join(spend, c.c_custkey == spend.o_custkey, "left")
-            .select(
-                F.col("c_nationkey").cast("bigint").alias("nationkey"),
-                F.col("c_mktsegment").alias("mktsegment"),
-                (F.col("c_custkey") % 2 == 0).cast("int").alias("_t"),
-                F.coalesce("_y", F.lit(0)).cast("bigint").alias("_y"),
-            )
-        )
-        cells = (
-            units.groupBy("nationkey", "mktsegment")
-            .agg(
-                F.sum(F.when(F.col("_t") == 1, F.col("_y")))
-                .cast("bigint")
-                .alias("_st"),
-                F.count(F.when(F.col("_t") == 1, F.lit(1)))
-                .cast("bigint")
-                .alias("n_treated"),
-                F.sum(F.when(F.col("_t") == 0, F.col("_y")))
-                .cast("bigint")
-                .alias("_sc"),
-                F.count(F.when(F.col("_t") == 0, F.lit(1)))
-                .cast("bigint")
-                .alias("n_control"),
-            )
-            .filter(
-                (F.col("n_treated") > 0) & (F.col("n_control") > 0)
-            )
-            .localCheckpoint(eager=False)  # table + ATE consumers
-        )
-        n_cell = (F.col("n_treated") + F.col("n_control")).cast("bigint")
-        # exact integer per-cell term: sign * (abs div) is spelled out
-        # because Spark div truncates while DuckDB // floors (the
-        # pca_power_iteration precedent); operands are DECIMAL(38,0),
-        # the quotient provably fits int64
-        term_units = cells.select(
-            n_cell.alias("_n"),
-            F.expr(
-                "CAST(1000000 AS DECIMAL(38,0))"
-                " * (n_treated + n_control)"
-                " * (CAST(_st AS DECIMAL(38,0)) * n_control"
-                "    - CAST(_sc AS DECIMAL(38,0)) * n_treated)"
-            ).alias("_x"),
-            F.expr(
-                "CAST(n_treated AS DECIMAL(38,0)) * n_control"
-            ).alias("_d"),
-        ).select(
-            "_n",
-            F.expr(
-                "CASE WHEN _x < 0 THEN"
-                " -CAST((-_x) div _d AS BIGINT)"
-                " ELSE CAST(_x div _d AS BIGINT) END"
-            ).alias("_u"),
-        )
-        ate = term_units.agg(
-            (
-                F.sum("_u").cast("double")
-                / (F.sum("_n").cast("double") * 1e6)
-            ).alias("ate_cents")
-        )
-        return cells.crossJoin(F.broadcast(ate)).select(
-            "nationkey",
-            "mktsegment",
-            "n_treated",
-            "n_control",
-            (F.col("_st").cast("double") / F.col("n_treated").cast("double"))
-            .alias("mean_treated_cents"),
-            (F.col("_sc").cast("double") / F.col("n_control").cast("double"))
-            .alias("mean_control_cents"),
-            "ate_cents",
-        )
-
-    q["stratified_ate"] = q_stratified_ate
-
-    def q_pivot_scc(spark, sf_dir):
-        """Strongly connected component of a pivot node — the
-        forward-backward (FW-BW) SCC step (Fleischer-Hendrickson-
-        Pinar 2000): the pivot's SCC is exactly (forward-reachable
-        set) INTERSECT (backward-reachable set), each computed by the
-        frontier closure llm/dedup.sssp_bounded with unit weights
-        (budget = 64 hops bounds the closure depth; the graph's
-        diameter is far below it).  First DIRECTED-graph component
-        query in the registry (dedup_clusters et al. are undirected).
-        Same derived 1024-node graph as sssp_delta; pivot 0.  Returns
-        the SCC members with their forward and backward hop
-        distances.  Registered after the round-11/12 windows;
-        round-13 window material."""
-        li = _t(spark, sf_dir, "lineitem")
-        edges = (
-            li.select(
-                (F.col("l_partkey") % 1024).cast("bigint").alias("u"),
-                ((F.col("l_partkey") * 7 + F.col("l_orderkey")) % 1024)
-                .cast("bigint")
-                .alias("v"),
-            )
-            .distinct()
-            .withColumn("w", F.lit(1).cast("bigint"))
-        )
-        fwd = dedup.sssp_bounded(edges, source=0, budget=64)
-        bwd = dedup.sssp_bounded(
-            edges.select(
-                F.col("v").alias("u"), F.col("u").alias("v"), "w"
-            ),
-            source=0,
-            budget=64,
-        )
-        return fwd.join(
-            bwd.select("node", F.col("dist").alias("dist_bwd")),
-            on="node",
-        ).select(
-            "node",
-            F.col("dist").alias("dist_fwd"),
-            "dist_bwd",
-        )
-
-    q["pivot_scc"] = q_pivot_scc
-
-    def q_term_burstiness(spark, sf_dir):
-        """Term burstiness (Church & Gale 1995 dispersion): the
-        variance-to-mean ratio of per-document counts for the 20
-        highest-total terms — bursty terms (VMR >> 1) are content
-        words, evenly-sprinkled terms (VMR ~ 1, Poisson-like) are
-        function words; a standard corpus-quality / keyword signal.
-        Exact integer moments over ALL docs including zero-count ones
-        (VMR = (N*S2 - S1^2)/(N*S1), one final double division);
-        top-20 by (total DESC, term ASC) is a deterministic bounded
-        sort.  ONE scan of the text column: explode_outer keeps
-        token-less docs as a null-token row, so the doc count N
-        derives from the same per-doc aggregate instead of a second
-        full pass over the corpus's widest column (a two-scan shape
-        re-reads text just to count rows)."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        tc0 = (
-            docs.select(
-                "doc_id", F.explode_outer(dedup.tokenize(F.col("text"))).alias("_w")
-            )
-            .groupBy("doc_id", "_w")
-            .agg(F.count("*").cast("bigint").alias("_c"))
-            .localCheckpoint(eager=False)  # N + moments consumers
-        )
-        n = tc0.select("doc_id").distinct().agg(
-            F.count("*").cast("bigint").alias("_N")
-        )
-        tc = tc0.filter(F.col("_w").isNotNull())
-        mom = tc.groupBy("_w").agg(
-            F.sum("_c").cast("bigint").alias("total"),
-            F.sum(F.col("_c") * F.col("_c")).cast("bigint").alias("_s2"),
-            F.count("*").cast("bigint").alias("df"),
-        )
-        return (
-            mom.crossJoin(F.broadcast(n))
-            .select(
-                F.col("_w").alias("term"),
-                "total",
-                "df",
-                # DECIMAL(38,0) before multiplying: total^2 outruns
-                # int64 on a big corpus and Spark wraps where DuckDB
-                # promotes to HUGEINT (the corr_matrix discipline)
-                (
-                    (
-                        F.col("_N").cast("decimal(38,0)") * F.col("_s2")
-                        - F.col("total").cast("decimal(38,0)")
-                        * F.col("total")
-                    ).cast("double")
-                    / (
-                        F.col("_N").cast("decimal(38,0)") * F.col("total")
-                    ).cast("double")
-                ).alias("vmr"),
-            )
-            .orderBy(F.col("total").desc(), "term")
-            .limit(20)
-        )
-
-    q["term_burstiness"] = q_term_burstiness
-
-    def q_ols_by_type(spark, sf_dir):
-        """Per-group ordinary-least-squares trend: slope and intercept
-        of value vs time for each event type, from EXACT integer
-        moments — the grouped linear-feature complement of the robust
-        `theilsen_slope`.  Times shift to micros past the global min
-        (one scalar broadcast; keeps t^2 sums ~1e28, far inside
-        DECIMAL(38,0)/HUGEINT), values quantize to 1e-6 units, the
-        five moments (n, St, Sv, Stv, Stt) accumulate as
-        DECIMAL(38,0)/HUGEINT with casts BEFORE every product, and
-        slope/intercept are single IEEE divisions of identical
-        operands — bit-equal under any partitioning.  Registered
-        after the round-11/12 windows; round-13 window material."""
-        e = _events(spark, sf_dir)
-        t0 = e.agg(F.min(F.unix_micros("ts")).alias("_t0"))
-        dec = "decimal(38,0)"
-        base = e.crossJoin(F.broadcast(t0)).select(
-            "event_type",
-            (F.unix_micros("ts") - F.col("_t0"))
-            .cast("bigint")
-            .alias("_t"),
-            F.round(F.col("value") * 1_000_000)
-            .cast("bigint")
-            .alias("_v"),
-        )
-        mom = base.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(F.col("_t").cast(dec)).alias("_st"),
-            F.sum(F.col("_v").cast(dec)).alias("_sv"),
-            F.sum((F.col("_t").cast(dec) * F.col("_v")).cast(dec)).alias(
-                "_stv"
-            ),
-            F.sum((F.col("_t").cast(dec) * F.col("_t")).cast(dec)).alias(
-                "_stt"
-            ),
-        )
-        num = (
-            F.col("n").cast(dec) * F.col("_stv")
-            - F.col("_st") * F.col("_sv")
-        ).cast("double")
-        den = (
-            F.col("n").cast(dec) * F.col("_stt")
-            - F.col("_st") * F.col("_st")
-        ).cast("double")
-        slope = num / den
-        intercept = (
-            F.col("_sv").cast("double")
-            - slope * F.col("_st").cast("double")
-        ) / F.col("n").cast("double")
-        return mom.select(
-            "event_type",
-            "n",
-            slope.alias("slope_units_per_us"),
-            intercept.alias("intercept_units"),
-        )
-
-    q["ols_by_type"] = q_ols_by_type
-
-    def q_temporal_reach(spark, sf_dir):
-        """Time-respecting reachability (llm/dedup.temporal_reach;
-        Holme & Saramäki 2012): earliest arrival from supplier #1 over
-        the bipartite supplier<->customer interaction graph, where an
-        order on day t creates edges both ways usable only at times
-        >= the arrival time — the contact-tracing / diffusion
-        primitive, and the eighth iterative shape (fixpoint frontier
-        relaxation, NO fixed round cap).  Node ids disambiguate as
-        customer 2k / supplier 2k+1; times are exact epoch days.  The
-        oracle is a native recursive state-space walk.  Registered
-        after the round-11/12 windows; round-13 window material."""
-        li = _t(spark, sf_dir, "lineitem")
-        od = _t(spark, sf_dir, "orders")
-        base = li.join(od, li.l_orderkey == od.o_orderkey).select(
-            (F.col("o_custkey") * 2).cast("bigint").alias("c"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("s"),
-            # timezone-free day arithmetic: o_orderdate is
-            # TIMESTAMP_NTZ (no unix_micros) and casting through
-            # TIMESTAMP would make the value depend on the session
-            # timezone — the vanilla-session trap
-            F.datediff(
-                F.col("o_orderdate").cast("date"),
-                F.lit("1970-01-01").cast("date"),
-            )
-            .cast("bigint")
-            .alias("t"),
-        )
-        edges = (
-            base.select(F.col("s").alias("u"), F.col("c").alias("v"), "t")
-            .unionByName(
-                base.select(
-                    F.col("c").alias("u"), F.col("s").alias("v"), "t"
-                )
-            )
-            .distinct()
-        )
-        return dedup.temporal_reach(edges, source=3)
-
-    q["temporal_reach"] = q_temporal_reach
-
-    def q_sp_counting(spark, sf_dir):
-        """Shortest-path counting from customer #0 (llm/dedup
-        .sp_counting; Brandes 2001 forward phase) over the undirected
-        customer-part purchase graph (the bfs_distances graph): each
-        level's sigma is the predecessor-sigma sum, i.e. the number
-        of distinct shortest paths — the betweenness-centrality
-        building block and the ninth iterative shape.  Sigma runs as
-        DECIMAL(38,0)/HUGEINT end to end (hub-dense graphs overflow
-        int64 within a few levels).  4 levels, anti-join visited set.
-        Registered after the round-11/12 windows; round-13 window
-        material."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).cast("bigint").alias("a"),
-                (F.col("l_partkey") * 2 + 1).cast("bigint").alias("b"),
-            )
-            .distinct()
-        )
-        return dedup.sp_counting(edges, source=0, max_hops=4)
-
-    q["sp_counting"] = q_sp_counting
-
-    def q_bpe_learn(spark, sf_dir):
-        """First three byte-pair-encoding merges learned from the
-        corpus (llm/text.bpe_learn; Sennrich et al. 2016) — the REAL
-        iterative BPE trainer: weighted adjacent-pair counts, the
-        (count DESC, pair ASC) winner, and a leftmost-non-overlapping
-        corpus-wide merge per round, expressed position-based (run
-        parity via two per-word windows) so both engines execute the
-        identical greedy scan.  Upgrades the one-shot
-        `bpe_pair_counts` to the actual training loop; all windows
-        partition per word, the winner is a broadcast 1-row table,
-        nothing collects.  Registered after the round-11/12 windows;
-        round-13 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.bpe_learn(docs, rounds=3)
-
-    q["bpe_learn"] = q_bpe_learn
-
-    def q_betweenness_contrib(spark, sf_dir):
-        """Brandes backward phase (llm/dedup.betweenness_contrib;
-        Brandes 2001) completing sp_counting's forward sigma: the
-        per-node dependency delta(v) = sum over DAG successors w of
-        sigma(v)/sigma(w) * (1 + delta(w)), swept level-by-level from
-        the deepest reached level back to customer #0 on the same
-        undirected customer-part purchase graph.  delta carried in
-        integer micro-units (quantize-to-integer exactness: the
-        per-edge double product is bit-identical across engines, the
-        per-node sum is then DECIMAL(38,0)/HUGEINT integer —
-        partition-invariant by construction).  Registered after the
-        round-12/13 windows; round-14 window material."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).cast("bigint").alias("a"),
-                (F.col("l_partkey") * 2 + 1).cast("bigint").alias("b"),
-            )
-            .distinct()
-        )
-        return dedup.betweenness_contrib(edges, source=0, max_hops=4)
-
-    q["betweenness_contrib"] = q_betweenness_contrib
-
-    def q_bpe_apply(spark, sf_dir):
-        """Trained-BPE corpus encode (llm/text.bpe_train_encode):
-        learn 3 merges with bpe_learn's position/run-parity trainer,
-        then encode the SAME corpus with the learned table — the
-        train→apply closure, upgrading the static-merge `bpe_encode`
-        (r05) to trained merges.  The apply phase reuses the
-        trainer's final per-word token state (the learned merge list
-        applied by the identical leftmost-non-overlapping scan), so
-        the encode is one vocab-keyed join + per-doc integer sums —
-        no second scan of the corpus.  Registered after the
-        round-12/13 windows; round-14 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.bpe_train_encode(docs, rounds=3)
-
-    q["bpe_apply"] = q_bpe_apply
-
-    def q_kn_perplexity(spark, sf_dir):
-        """Per-document perplexity under the corpus-trained
-        interpolated Kneser-Ney bigram model (llm/text.kn_perplexity)
-        — the train→apply closure for `kneser_ney_bigram`, i.e. the
-        LM-based quality filter of a pretraining pipeline.  Same
-        model float chain as the sibling; -ln(P) quantized to integer
-        nano-units per bigram TYPE before the per-doc sum, so the
-        aggregation is pure int64 and partition-invariant; one exp()
-        on exact integers per output row (diff_audit notes ~6% of ppl
-        values differ at the exp last-ulp, maxabs 3.6e-15 — the
-        woe_encode JVM-vs-libm class, far below the 12-sig-digit gate
-        normalization; nll_units is bit-exact).  Registered after the
-        round-12/13 windows; round-14 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.kn_perplexity(docs, discount=0.75)
-
-    q["kn_perplexity"] = q_kn_perplexity
-
-    def q_random_walks(spark, sf_dir):
-        """Deterministic hash-seeded random walks (llm/dedup
-        .random_walks; DeepWalk, Perozzi et al. 2014) — one 4-step
-        walk per node of the undirected customer-part purchase graph,
-        neighbor picked by a mixed integer hash of (seed, node, step)
-        mod degree: the graph-embedding corpus-generation step in the
-        replayable-pseudo-randomness style of hash_sample.  All
-        int64, bit-equal on any engine/partitioning.  Registered
-        after the round-12/13 windows; round-14 window material."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).cast("bigint").alias("a"),
-                (F.col("l_partkey") * 2 + 1).cast("bigint").alias("b"),
-            )
-            .distinct()
-        )
-        return dedup.random_walks(edges, length=4)
-
-    q["random_walks"] = q_random_walks
-
-    def q_als_user_step(spark, sf_dir):
-        """One exact ALS user-factor half-step (Hu/Koren/Volinsky
-        2008) over the customer-part rating matrix (rating = total
-        quantity): with rank-2 item factors fixed by a deterministic
-        integer hash (q1 = (i*73) mod 97 - 48, q2 = (i*151) mod 101
-        - 50, in 1/100 units), solve the per-user ridge normal
-        equations (QᵀQ + λI)x = Qᵀr in closed 2x2 form — the
-        matrix-factorization training primitive.  The five per-user
-        moments accumulate as exact DECIMAL(38,0)/HUGEINT (casts
-        before every product), det/x1/x2 are single IEEE ops on
-        identical exact operands — bit-equal under any partitioning.
-        λ = 1000 units².  Registered after the round-12/13 windows;
-        round-14 window material."""
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_quantity"
-        )
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        dec = "decimal(38,0)"
-        r = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy(
-                F.col("o_custkey").alias("u"),
-                F.col("l_partkey").alias("i"),
-            )
-            .agg(
-                F.round(F.sum("l_quantity"))
-                .cast("bigint")
-                .alias("r")
-            )
-        )
-        q1 = (F.col("i") * 73) % 97 - 48
-        q2 = (F.col("i") * 151) % 101 - 50
-        f = r.select(
-            "u",
-            "r",
-            q1.cast("bigint").alias("q1"),
-            q2.cast("bigint").alias("q2"),
-        )
-        mom = f.groupBy("u").agg(
-            F.count("*").cast("bigint").alias("n_items"),
-            F.sum((F.col("q1").cast(dec) * F.col("q1")).cast(dec)).alias("_a11"),
-            F.sum((F.col("q1").cast(dec) * F.col("q2")).cast(dec)).alias("_a12"),
-            F.sum((F.col("q2").cast(dec) * F.col("q2")).cast(dec)).alias("_a22"),
-            F.sum((F.col("q1").cast(dec) * F.col("r")).cast(dec)).alias("_b1"),
-            F.sum((F.col("q2").cast(dec) * F.col("r")).cast(dec)).alias("_b2"),
-        )
-        lam = F.lit(1000).cast(dec)
-        a11l = (F.col("_a11") + lam).cast(dec)
-        a22l = (F.col("_a22") + lam).cast(dec)
-        det = (a11l * a22l - F.col("_a12") * F.col("_a12")).cast("double")
-        x1 = (
-            (a22l * F.col("_b1") - F.col("_a12") * F.col("_b2")).cast(
-                "double"
-            )
-            / det
-        )
-        x2 = (
-            (a11l * F.col("_b2") - F.col("_a12") * F.col("_b1")).cast(
-                "double"
-            )
-            / det
-        )
-        return mom.select(
-            "u", "n_items", x1.alias("x1"), x2.alias("x2")
-        )
-
-    q["als_user_step"] = q_als_user_step
-
-    def q_als_item_step(spark, sf_dir):
-        """The ALTERNATION closure of als_user_step (Hu/Koren/
-        Volinsky 2008): one exact ALS item-factor half-step that
-        consumes the user factors the sibling half-step just solved —
-        the genuine alternating least squares loop, not a hash twin.
-        The user factors x1/x2 are division-derived doubles on exact
-        integer operands (bit-identical both engines), so quantizing
-        them to 1e-6 units (p = round(x·1e6)) is parity-safe by the
-        division-quantization idiom; the per-item ridge normal
-        equations (PᵀP + λ·1e12·I)y' = Pᵀr then accumulate as exact
-        DECIMAL(38,0)/HUGEINT moments (units² ~1e15, det ~1e31,
-        numerators ~1e27 — 7 orders inside the 38-digit budget at
-        100× the gate scale), and y = 1e6·(num/det) is one mirrored
-        float chain.  λ = 1000 as in the user step.  Returns
-        (i, n_users, y1, y2).  Registered after the round-13/14
-        windows; round-15 window material."""
-        li = _t(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey", "l_quantity"
-        )
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        dec = "decimal(38,0)"
-        r = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy(
-                F.col("o_custkey").alias("u"),
-                F.col("l_partkey").alias("i"),
-            )
-            .agg(
-                F.round(F.sum("l_quantity"))
-                .cast("bigint")
-                .alias("r")
-            )
-        )
-        uf = q_als_user_step(spark, sf_dir).select(
-            "u",
-            F.round(F.col("x1") * 1e6).cast("bigint").alias("p1"),
-            F.round(F.col("x2") * 1e6).cast("bigint").alias("p2"),
-        )
-        f = r.join(uf, on="u")
-        mom = f.groupBy("i").agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum((F.col("p1").cast(dec) * F.col("p1")).cast(dec)).alias("_a11"),
-            F.sum((F.col("p1").cast(dec) * F.col("p2")).cast(dec)).alias("_a12"),
-            F.sum((F.col("p2").cast(dec) * F.col("p2")).cast(dec)).alias("_a22"),
-            F.sum((F.col("p1").cast(dec) * F.col("r")).cast(dec)).alias("_b1"),
-            F.sum((F.col("p2").cast(dec) * F.col("r")).cast(dec)).alias("_b2"),
-        )
-        lam = F.lit(10**15).cast(dec)
-        a11l = (F.col("_a11") + lam).cast(dec)
-        a22l = (F.col("_a22") + lam).cast(dec)
-        det = (a11l * a22l - F.col("_a12") * F.col("_a12")).cast("double")
-        y1 = F.lit(1e6) * (
-            (a22l * F.col("_b1") - F.col("_a12") * F.col("_b2")).cast(
-                "double"
-            )
-            / det
-        )
-        y2 = F.lit(1e6) * (
-            (a11l * F.col("_b2") - F.col("_a12") * F.col("_b1")).cast(
-                "double"
-            )
-            / det
-        )
-        return mom.select(
-            "i", "n_users", y1.alias("y1"), y2.alias("y2")
-        )
-
-    q["als_item_step"] = q_als_item_step
-
-    def q_cusum_by_type(spark, sf_dir):
-        """Exact one-sided CUSUM change detection (Page 1954) per
-        event type: S_t = max(0, S_{t-1} + (x_t - mean)), computed in
-        CLOSED FORM as P_t - min(0, running_min(P)) where P is the
-        prefix sum of deviations — the prefix-reset identity, so the
-        sequential recurrence becomes two stacked windows over one
-        type-keyed exchange.  Deviations scale by n (dev = n*x_cents -
-        sum_cents) to stay exact integers with no float mean; sums run
-        as DECIMAL(38,0)/HUGEINT.  Returns per type the peak scaled
-        CUSUM, the first event attaining it (earliest (ts, event_id)),
-        and the count of above-zero rows — the change-point report.
-        Registered after the round-12/13 windows; round-14 window
-        material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        base = e.select(
-            "event_id", "ts", "event_type", cents.alias("_c")
-        ).localCheckpoint(eager=False)  # two consumers: tot + d
-        tot = base.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum(F.col("_c").cast(dec)).alias("_sv"),
-        )
-        w = W.partitionBy("event_type").orderBy("ts", "event_id")
-        d = (
-            base.join(F.broadcast(tot), on="event_type")
-            .select(
-                "event_type",
-                "event_id",
-                "ts",
-                (
-                    (F.col("_c").cast(dec) * F.col("_n")).cast(dec)
-                    - F.col("_sv")
-                ).alias("_dev"),
-            )
-            .withColumn("_p", F.sum("_dev").over(w).cast(dec))
-        )
-        wmin = W.partitionBy("event_type").orderBy("ts", "event_id")
-        s = d.withColumn(
-            "_s",
-            (
-                F.col("_p")
-                - F.least(F.lit(0).cast(dec), F.min("_p").over(wmin))
-            ).cast(dec),
-        ).localCheckpoint(eager=False)  # two consumers: peak + join-back
-        peak = s.groupBy("event_type").agg(
-            F.max("_s").alias("peak_s"),
-            F.sum(
-                F.when(F.col("_s") > 0, 1).otherwise(0)
-            ).cast("bigint").alias("n_above"),
-        )
-        first = (
-            s.join(F.broadcast(peak), on="event_type")
-            .filter(F.col("_s") == F.col("peak_s"))
-            .groupBy("event_type")
-            .agg(
-                F.min(F.struct("ts", "event_id")).alias("_f"),
-            )
-            .select(
-                "event_type", F.col("_f.event_id").alias("peak_event_id")
-            )
-        )
-        return (
-            peak.join(first, on="event_type")
-            .select("event_type", "peak_s", "peak_event_id", "n_above")
-        )
-
-    q["cusum_by_type"] = q_cusum_by_type
-
-    def q_did_by_type(spark, sf_dir):
-        """Difference-in-differences estimator (Card & Krueger 1994
-        design) per event type: treatment = even user_id
-        (deterministic), period split at the exact midpoint of the
-        observed time range via the subtraction form (ts - t0) <
-        (t1 - ts) — no doubling, no overflow, and scale-invariant so
-        the engine's bigint-nanos comparison and the oracle's
-        native-timestamp interval comparison decide identically.
-        Cell moments (n, sum_cents) are exact integers; the four cell
-        means and DiD = (T_post - T_pre) - (C_post - C_pre) are one
-        mirrored float chain per output row, each mean guarded by
-        nullif(n, 0).  The panel-causal complement to stratified_ate
-        (cross-sectional matching) and cuped_adjust (variance
-        reduction).  Registered after the round-12/13 windows;
-        round-14 window material."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-        )
-        dec = "decimal(38,0)"
-        rng = e.agg(
-            F.min("ts").alias("_t0"), F.max("ts").alias("_t1")
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        base = e.crossJoin(F.broadcast(rng)).select(
-            "event_type",
-            (F.col("user_id") % 2 == 0).alias("_treat"),
-            (
-                (F.col("ts") - F.col("_t0"))
-                < (F.col("_t1") - F.col("ts"))
-            ).alias("_pre"),
-            cents.alias("_c"),
-        )
-        cell = lambda t, p: (  # noqa: E731 — paired conditional aggs
-            F.sum(
-                F.when(
-                    (F.col("_treat") == t) & (F.col("_pre") == p),
-                    F.col("_c"),
-                ).otherwise(0).cast(dec)
-            ),
-            F.sum(
-                F.when(
-                    (F.col("_treat") == t) & (F.col("_pre") == p), 1
-                ).otherwise(0).cast("bigint")
-            ),
-        )
-        stp, ntp = cell(True, False)
-        stq, ntq = cell(True, True)
-        scp, ncp = cell(False, False)
-        scq, ncq = cell(False, True)
-        agg = base.groupBy("event_type").agg(
-            stp.alias("_stp"), ntp.alias("n_t_post"),
-            stq.alias("_stq"), ntq.alias("n_t_pre"),
-            scp.alias("_scp"), ncp.alias("n_c_post"),
-            scq.alias("_scq"), ncq.alias("n_c_pre"),
-        )
-        mean = lambda s, n: (  # noqa: E731
-            F.col(s).cast("double")
-            / F.nullif(F.col(n), F.lit(0)).cast("double")
-        )
-        did = (
-            mean("_stp", "n_t_post") - mean("_stq", "n_t_pre")
-        ) - (mean("_scp", "n_c_post") - mean("_scq", "n_c_pre"))
-        return agg.select(
-            "event_type",
-            "n_t_pre", "n_t_post", "n_c_pre", "n_c_post",
-            did.alias("did_cents"),
-        )
-
-    q["did_by_type"] = q_did_by_type
-
-    def q_ipw_ate(spark, sf_dir):
-        """Inverse-propensity-weighted ATE (Horvitz-Thompson form)
-        with the propensity estimated per stratum from the data
-        itself: treatment = even user_id, stratum = event_type,
-        e(s) = n_t(s)/n(s), so the per-stratum IPW contribution
-        collapses to the exact rational S_t(s)*n(s)/n_t(s) -
-        S_c(s)*n(s)/n_c(s).  Each stratum term is two IEEE
-        divisions/products on exact integer moments, quantized to
-        integer micro-cent units (round) so any cross-stratum
-        aggregation downstream is order-invariant — the house
-        quantize-before-sum style.  Strata with a missing arm report
-        NULL (nullif guard), mirroring did_by_type.  Completes the
-        causal family: stratified_ate (matching), did_by_type
-        (panel), ipw_ate (weighting).  Registered after the
-        round-12/13 windows; round-14 window material."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("user_id").isNotNull()
-        )
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        base = e.select(
-            "event_type",
-            (F.col("user_id") % 2 == 0).alias("_treat"),
-            cents.alias("_c"),
-        )
-        agg = base.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(F.when(F.col("_treat"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_t"),
-            F.sum(
-                F.when(F.col("_treat"), F.col("_c")).otherwise(0).cast(dec)
-            ).alias("_st"),
-            F.sum(
-                F.when(~F.col("_treat"), F.col("_c")).otherwise(0).cast(dec)
-            ).alias("_sc"),
-        )
-        n_c = F.col("n") - F.col("n_t")
-        term = (
-            F.col("_st").cast("double")
-            * F.col("n").cast("double")
-            / F.nullif(F.col("n_t"), F.lit(0)).cast("double")
-            - F.col("_sc").cast("double")
-            * F.col("n").cast("double")
-            / F.nullif(n_c, F.lit(0)).cast("double")
-        )
-        per_stratum = agg.select(
-            "n",
-            F.round(term).cast(dec).alias("_u"),  # cents*count units
-        )
-        return per_stratum.agg(
-            F.sum("n").cast("bigint").alias("n_total"),
-            F.sum("_u").cast(dec).alias("ate_num_units"),
-            (
-                F.sum("_u").cast("double")
-                / F.sum("n").cast("double")
-            ).alias("ate_cents"),
-        )
-
-    q["ipw_ate"] = q_ipw_ate
-
-    def q_logrank_test(spark, sf_dir):
-        """Two-sample log-rank test (Mantel-Haenszel) on the
-        kaplan_meier setting — time-to-first-big-purchase, day-level,
-        censoring only at the window end — comparing even- vs
-        odd-user_id cohorts: per death day, observed group-1 deaths
-        O1_t vs the hypergeometric expectation E1_t = d*n1/n and
-        variance V_t = d*(n1/n)*(1-n1/n)*(n-d)/(n-1); the statistic is
-        Z = (O1 - E1)/sqrt(V).  Per-day E and V are one mirrored IEEE
-        chain each, quantized to integer nano-units (round) so the
-        cross-day sums are exact integers; O1 and the risk sets are
-        pure int64 (risk set = cohort size minus prior deaths, via the
-        same <= 31-row broadcast inequality join as kaplan_meier — no
-        single-partition window).  Z is a final float chain on exact
-        integer sums.  n=1 days nullif-guard V (absent at any gate
-        scale).  Registered after the round-12/13 windows; round-14
-        window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        fe = (
-            e.filter(
-                (F.col("event_type") == "purchase") & (F.col("value") > 200)
-            )
-            .groupBy("user_id")
-            .agg(F.min(day).alias("day"))
-            .select(
-                "day", (F.col("user_id") % 2 == 0).alias("_g")
-            )
-        )
-        dg = (
-            fe.groupBy("day", "_g")
-            .agg(F.count("*").cast("bigint").alias("_dd"))
-            .localCheckpoint(eager=False)  # two consumers: dd + prior join
-        )
-        dd = (
-            dg.groupBy("day")
-            .agg(
-                F.sum("_dd").cast("bigint").alias("_d"),
-                F.sum(F.when(F.col("_g"), F.col("_dd")).otherwise(0))
-                .cast("bigint")
-                .alias("_d1"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        ns = (
-            e.select("user_id")
-            .distinct()
-            .agg(
-                F.count("*").cast("bigint").alias("_N"),
-                F.sum(
-                    F.when(F.col("user_id") % 2 == 0, 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("_N1"),
-            )
-        )
-        b = dg.select(
-            F.col("day").alias("_bday"),
-            F.col("_g").alias("_bg"),
-            F.col("_dd").alias("_bdd"),
-        )
-        w = (
-            dd.join(F.broadcast(b), F.col("_bday") < F.col("day"), "left")
-            .groupBy("day", "_d", "_d1")
-            .agg(
-                F.coalesce(F.sum("_bdd"), F.lit(0))
-                .cast("bigint")
-                .alias("_prior"),
-                F.coalesce(
-                    F.sum(F.when(F.col("_bg"), F.col("_bdd")).otherwise(0)),
-                    F.lit(0),
-                )
-                .cast("bigint")
-                .alias("_prior1"),
-            )
-            .crossJoin(F.broadcast(ns))
-            .select(
-                "day",
-                "_d",
-                "_d1",
-                (F.col("_N") - F.col("_prior")).alias("_n"),
-                (F.col("_N1") - F.col("_prior1")).alias("_n1"),
-            )
-        )
-        frac = F.col("_n1").cast("double") / F.col("_n").cast("double")
-        e1u = F.round(
-            F.col("_d").cast("double") * frac * F.lit(1e9)
-        ).cast("bigint")
-        vu = F.round(
-            F.col("_d").cast("double")
-            * frac
-            * (F.lit(1.0) - frac)
-            * (
-                (F.col("_n") - F.col("_d")).cast("double")
-                / F.nullif(F.col("_n") - 1, F.lit(0)).cast("double")
-            )
-            * F.lit(1e9)
-        ).cast("bigint")
-        agg = w.agg(
-            F.sum("_d1").cast("bigint").alias("o1"),
-            F.sum(e1u).cast("bigint").alias("e1_units"),
-            F.sum(vu).cast("bigint").alias("v_units"),
-        )
-        z = (
-            F.col("o1").cast("double")
-            - F.col("e1_units").cast("double") / F.lit(1e9)
-        ) / F.sqrt(F.col("v_units").cast("double") / F.lit(1e9))
-        return agg.select("o1", "e1_units", "v_units", z.alias("z"))
-
-    q["logrank_test"] = q_logrank_test
-
-    def q_assoc_rules(spark, sf_dir):
-        """Association RULES over the apriori basket setting (Agrawal
-        & Srikant 1994, the rule-generation phase apriori_triples
-        stops short of): for every frequent brand pair (L1-pruned,
-        support >= 180 bp of orders), emit both directed rules
-        ante -> cons with confidence = supp(pair)/supp(ante) and
-        lift = confidence * n / supp(cons).  Supports and thresholds
-        are exact integer basis-point arithmetic; confidence and lift
-        are mirrored IEEE chains quantized to integer nano-units —
-        order-invariant and rankable without float compares.
-        Registered after the round-12/13 windows; round-14 window
-        material."""
-        li = _t(spark, sf_dir, "lineitem")
-        pt = _t(spark, sf_dir, "part")
-        ob = (
-            li.join(pt, li.l_partkey == pt.p_partkey)
-            .select(
-                F.col("l_orderkey").alias("o"),
-                F.col("p_brand").alias("b"),
-            )
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        n = ob.select("o").distinct().agg(
-            F.count("*").cast("bigint").alias("_n")
-        )
-        s1 = ob.groupBy("b").agg(
-            F.count("*").cast("bigint").alias("_c")
-        ).localCheckpoint(eager=False)  # L1 + two rule-side joins
-        l1 = (
-            s1.crossJoin(F.broadcast(n))
-            .filter(F.col("_c") * 10000 >= 1000 * F.col("_n"))
-            .select("b")
-        )
-        ob1 = ob.join(F.broadcast(l1), on="b").select("o", "b")
-        ob1 = ob1.localCheckpoint(eager=False)
-        p2 = (
-            ob1.select("o", F.col("b").alias("b1"))
-            .join(ob1.select("o", F.col("b").alias("b2")), on="o")
-            .filter(F.col("b1") < F.col("b2"))
-            .groupBy("b1", "b2")
-            .agg(F.count("*").cast("bigint").alias("_cp"))
-        )
-        f2 = p2.crossJoin(F.broadcast(n)).filter(
-            F.col("_cp") * 10000 >= 180 * F.col("_n")
-        )
-        rules = f2.select(
-            F.col("b1").alias("ante"), F.col("b2").alias("cons"),
-            "_cp", "_n",
-        ).unionByName(
-            f2.select(
-                F.col("b2").alias("ante"), F.col("b1").alias("cons"),
-                "_cp", "_n",
-            )
-        )
-        ca = s1.select(F.col("b").alias("ante"), F.col("_c").alias("_ca"))
-        cc = s1.select(F.col("b").alias("cons"), F.col("_c").alias("_cc"))
-        conf = F.col("_cp").cast("double") / F.col("_ca").cast("double")
-        lift = (
-            conf * F.col("_n").cast("double") / F.col("_cc").cast("double")
-        )
-        return (
-            rules.join(F.broadcast(ca), on="ante")
-            .join(F.broadcast(cc), on="cons")
-            .select(
-                "ante",
-                "cons",
-                F.col("_cp").alias("support"),
-                F.round(conf * F.lit(1e9)).cast("bigint").alias("conf_units"),
-                F.round(lift * F.lit(1e9)).cast("bigint").alias("lift_units"),
-            )
-        )
-
-    q["assoc_rules"] = q_assoc_rules
-
-    def q_anova_f(spark, sf_dir):
-        """One-way ANOVA F statistic for event value by event type:
-        between/within sums of squares from exact integer moments
-        (n, sum-cents, sum-cents² per group as DECIMAL(38,0)/HUGEINT),
-        with each group's S²/n term rounded to integer units before
-        the cross-group sum — the quantize-before-sum discipline, so
-        the only floats are per-group chains on identical exact
-        operands and the final F ratio.  The k-sample mean-comparison
-        test next to ab_test_zscore (2-sample) and dow_type_chi2
-        (categorical).  Registered after the round-12/13 windows;
-        round-14 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        g = e.select("event_type", cents.alias("_c")).groupBy(
-            "event_type"
-        ).agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum(F.col("_c").cast(dec)).alias("_s"),
-            F.sum((F.col("_c").cast(dec) * F.col("_c")).cast(dec)).alias(
-                "_q"
-            ),
-        )
-        ug = F.round(
-            (F.col("_s") * F.col("_s")).cast("double")
-            / F.col("_n").cast("double")
-        ).cast(dec)
-        tot = g.agg(
-            F.count("*").cast("bigint").alias("k"),
-            F.sum("_n").cast("bigint").alias("n_total"),
-            F.sum("_s").cast(dec).alias("_st"),
-            F.sum("_q").cast(dec).alias("_qt"),
-            F.sum(ug).cast(dec).alias("_ut"),
-        )
-        grand = F.round(
-            (F.col("_st") * F.col("_st")).cast("double")
-            / F.col("n_total").cast("double")
-        ).cast(dec)
-        ssb = (F.col("_ut") - grand).cast(dec)
-        ssw = (F.col("_qt") - F.col("_ut")).cast(dec)
-        f_stat = (
-            ssb.cast("double")
-            / (F.col("k") - 1).cast("double")
-        ) / (
-            ssw.cast("double")
-            / (F.col("n_total") - F.col("k")).cast("double")
-        )
-        return tot.select(
-            "k",
-            "n_total",
-            ssb.alias("ssb_units"),
-            ssw.alias("ssw_units"),
-            f_stat.alias("f_stat"),
-        )
-
-    q["anova_f"] = q_anova_f
-
-    def q_nelson_aalen(spark, sf_dir):
-        """Nelson-Aalen cumulative hazard on the kaplan_meier setting
-        — H(t) = sum over death days <= t of d/n, each per-day hazard
-        increment quantized to integer nano-units (round) so the
-        cumulative sum is exact integer arithmetic (the quantized-ln-
-        increments discipline applied to hazards); risk sets are the
-        same exact int64 broadcast-inequality-join construction.  The
-        survival family closes as estimate (kaplan_meier) + hazard
-        (nelson_aalen) + test (logrank_test).  Registered after the
-        round-12/13 windows; round-14 window material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        day = (
-            F.datediff(
-                F.to_date(F.col("ts")), F.lit("2024-01-01").cast("date")
-            )
-            + 1
-        ).cast("bigint")
-        fe = (
-            e.filter(
-                (F.col("event_type") == "purchase") & (F.col("value") > 200)
-            )
-            .groupBy("user_id")
-            .agg(F.min(day).alias("day"))
-        )
-        d = (
-            fe.groupBy("day")
-            .agg(F.count("*").cast("bigint").alias("deaths"))
-            .localCheckpoint(eager=False)
-        )
-        ntot = e.agg(
-            F.countDistinct("user_id").cast("bigint").alias("_N")
-        )
-        b = d.select(
-            F.col("day").alias("_bday"), F.col("deaths").alias("_bdeaths")
-        )
-        w = (
-            d.join(F.broadcast(b), F.col("_bday") < F.col("day"), "left")
-            .groupBy("day", "deaths")
-            .agg(
-                F.coalesce(F.sum("_bdeaths"), F.lit(0))
-                .cast("bigint")
-                .alias("_prior")
-            )
-            .crossJoin(F.broadcast(ntot))
-            .withColumn("at_risk", F.col("_N") - F.col("_prior"))
-            .localCheckpoint(eager=False)  # two consumers of the cumsum join
-        )
-        hu = F.round(
-            F.col("_bd2").cast("double")
-            / F.col("_br2").cast("double")
-            * F.lit(1e9)
-        ).cast("bigint")
-        t2 = w.select(
-            F.col("day").alias("_bday2"),
-            F.col("deaths").alias("_bd2"),
-            F.col("at_risk").alias("_br2"),
-        )
-        return (
-            w.join(F.broadcast(t2), F.col("_bday2") <= F.col("day"))
-            .groupBy("day", "at_risk", "deaths")
-            .agg(F.sum(hu).cast("bigint").alias("h_units"))
-            .select(
-                "day",
-                "at_risk",
-                "deaths",
-                "h_units",
-                (F.col("h_units").cast("double") / F.lit(1e9)).alias(
-                    "cum_hazard"
-                ),
-            )
-        )
-
-    q["nelson_aalen"] = q_nelson_aalen
-
-    def q_kruskal_binned(spark, sf_dir):
-        """Binned Kruskal-Wallis H across ALL event types — the
-        k-sample generalization of mannwhitney_binned, closing the
-        rank-test family (2-sample U, k-sample H) the way anova_f
-        closes the mean-test family.  Same 1024 fixed equi-width cent
-        bins (ranks are unbounded at scale, bins are not), doubled
-        midranks keep ties integer, each group's (2R_g)²/n_g term
-        rounds to integer units before the cross-group sum
-        (quantize-before-sum), and the tie correction
-        1 - Σ(t³-t)/(N³-N) is exact int64.  With U = Σ(2R_g)²/n_g the
-        doubled-rank scaling gives H = 12·(U/4)/(N(N+1)) - 3(N+1)
-        = 3·U/(N(N+1)) - 3(N+1), then H' = H /
-        correction — floats only on exact integer operands.
-        Registered after the round-12/13 windows; round-14 window
-        material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        binc = F.floor(
-            (cents * 1024).cast("double") / F.lit(49003.0)
-        ).cast("bigint")
-        c = (
-            e.groupBy(binc.alias("bin"), F.col("event_type"))
-            .agg(F.count("*").cast("bigint").alias("cg"))
-            .localCheckpoint(eager=False)  # totals + cumulative side
-        )
-        bt = c.groupBy("bin").agg(
-            F.sum("cg").cast("bigint").alias("_t")
-        ).localCheckpoint(eager=False)
-        b2 = bt.select(
-            F.col("bin").alias("_bb"), F.col("_t").alias("_bt")
-        )
-        cum = (
-            bt.join(F.broadcast(b2), F.col("_bb") <= F.col("bin"))
-            .groupBy("bin", "_t")
-            .agg(F.sum("_bt").cast("bigint").alias("_cum_incl"))
-        )
-        two_r = (F.col("_cum_incl") - F.col("_t")) * 2 + F.col("_t") + 1
-        ranked = c.join(
-            cum.select("bin", "_t", two_r.alias("_2r")), on="bin"
-        )
-        grp = ranked.groupBy("event_type").agg(
-            F.sum("cg").cast("bigint").alias("_ng"),
-            F.sum((F.col("cg").cast(dec) * F.col("_2r")).cast(dec)).alias(
-                "_2rg"
-            ),
-        )
-        ug = F.round(
-            (F.col("_2rg") * F.col("_2rg")).cast("double")
-            / F.col("_ng").cast("double")
-        ).cast(dec)
-        ties = bt.agg(
-            F.sum(
-                (
-                    F.col("_t").cast(dec)
-                    * F.col("_t")
-                    * F.col("_t")
-                    - F.col("_t")
-                ).cast(dec)
-            ).alias("_t3t")
-        )
-        tot = grp.agg(
-            F.count("*").cast("bigint").alias("k"),
-            F.sum("_ng").cast("bigint").alias("n_total"),
-            F.sum(ug).cast(dec).alias("_u"),
-        ).crossJoin(F.broadcast(ties))
-        n = F.col("n_total").cast("double")
-        # H = 12/(N(N+1)) * Σ R_g²/n_g − 3(N+1); R_g = 2R_g/2 so
-        # Σ R_g²/n_g = U/4 with U = Σ (2R_g)²/n_g (quantized):
-        h = (
-            F.lit(12.0)
-            * (F.col("_u").cast("double") / F.lit(4.0))
-            / (n * (n + F.lit(1.0)))
-            - F.lit(3.0) * (n + F.lit(1.0))
-        )
-        corr = F.lit(1.0) - F.col("_t3t").cast("double") / (
-            n * n * n - n
-        )
-        return tot.select(
-            "k",
-            "n_total",
-            F.col("_u").alias("u_units"),
-            F.col("_t3t").alias("sum_t3t"),
-            h.alias("h"),
-            (h / corr).alias("h_corrected"),
-        )
-
-    q["kruskal_binned"] = q_kruskal_binned
-
-    def q_mcnemar_pairs(spark, sf_dir):
-        """McNemar paired test on per-user conversion in the first vs
-        second half of the observed window (the same overflow-free
-        subtraction-form midpoint as did_by_type): b = users
-        converting pre only, c = post only; chi2 = (b-c)²/(b+c) — the
-        paired-binary complement to ab_test_zscore's unpaired test.
-        All counts exact int64; one float division (nullif-guarded).
-        Registered after the round-12/13 windows; round-14 window
-        material."""
-        e = _events(spark, sf_dir).filter(F.col("user_id").isNotNull())
-        rng = e.agg(
-            F.min("ts").alias("_t0"), F.max("ts").alias("_t1")
-        )
-        conv = F.when(
-            (F.col("event_type") == "purchase") & (F.col("value") > 200),
-            1,
-        ).otherwise(0)
-        pre = (F.col("ts") - F.col("_t0")) < (F.col("_t1") - F.col("ts"))
-        per_user = (
-            e.crossJoin(F.broadcast(rng))
-            .groupBy("user_id")
-            .agg(
-                F.max(F.when(pre, conv).otherwise(0)).alias("_p"),
-                F.max(F.when(~pre, conv).otherwise(0)).alias("_q"),
-            )
-        )
-        agg = per_user.agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum(
-                F.when((F.col("_p") == 1) & (F.col("_q") == 0), 1)
-                .otherwise(0)
-            ).cast("bigint").alias("b"),
-            F.sum(
-                F.when((F.col("_p") == 0) & (F.col("_q") == 1), 1)
-                .otherwise(0)
-            ).cast("bigint").alias("c"),
-        )
-        chi2 = (
-            (F.col("b") - F.col("c")).cast("double")
-            * (F.col("b") - F.col("c")).cast("double")
-            / F.nullif(F.col("b") + F.col("c"), F.lit(0)).cast("double")
-        )
-        return agg.select("n_users", "b", "c", chi2.alias("chi2"))
-
-    q["mcnemar_pairs"] = q_mcnemar_pairs
-
-    def q_xcorr_lags(spark, sf_dir):
-        """Cross-correlation function between signal channels 0 and 1
-        at integer lags -32..32 — the lag-estimation primitive
-        (alignment, propagation-delay measurement) next to the
-        autocorrelation (daily_acf) and coherence queries: sxy(L) =
-        Σ_t v0(t)·v1(t+L) over the overlapping support (inner join =
-        'valid' boundary).  Each product is one IEEE multiply both
-        engines compute bit-identically, quantized to integer
-        nano-units before the per-lag sum (DECIMAL(38,0)/HUGEINT —
-        order-invariant).  The 65-lag expansion is bounded in-row
-        fan-out; the join is a single t-keyed equi-join.  Registered
-        after the round-12/13 windows; round-14 window material."""
-        sf = _signal(spark, sf_dir).df
-        dec = "decimal(38,0)"
-        # Bucketized band join (the event-window range-join house
-        # shape): shuffling a 65x-exploded probe side is superlinear
-        # at scale (measured 0.98s -> 65s at sf0.1 -> sf1); instead
-        # both sides shuffle ONCE on a 64-sample time bucket (the b
-        # side 3x for the +-1 halo buckets) and the 65-lag expansion
-        # happens AFTER the shuffle inside the join probe, collapsing
-        # immediately into a 65-key map-side-combined aggregate.
-        B = 64
-        a = sf.filter(F.col("channel") == 0).select(
-            "t",
-            F.col("v").alias("_v0"),
-            F.floor(F.col("t") / F.lit(B)).cast("bigint").alias("_bk"),
-        )
-        bk2 = F.floor(F.col("_t2") / F.lit(B)).cast("bigint")
-        b = (
-            sf.filter(F.col("channel") == 1)
-            .select(F.col("t").alias("_t2"), F.col("v").alias("_v1"))
-            .select(
-                "_t2",
-                "_v1",
-                F.explode(
-                    F.array(bk2 - 1, bk2, bk2 + 1)
-                ).alias("_bk"),
-            )
-        )
-        lag = F.col("_t2") - F.col("t")
-        pu = F.round(
-            F.col("_v0") * F.col("_v1") * F.lit(1e9)
-        ).cast(dec)
-        return (
-            a.join(b, on="_bk")
-            .filter((lag >= -32) & (lag <= 32))
-            .select(lag.alias("lag"), pu.alias("_pu"))
-            .groupBy("lag")
-            .agg(
-                F.count("*").cast("bigint").alias("n_overlap"),
-                F.sum("_pu").cast(dec).alias("sxy_units"),
-            )
-        )
-
-    q["xcorr_lags"] = q_xcorr_lags
-
-    def q_bartlett_test(spark, sf_dir):
-        """Bartlett's test of variance homogeneity across event types
-        — the variance complement to anova_f's mean test, from the
-        SAME exact integer moments (n, S, Q per group): each group's
-        biased-corrected variance s² = (nQ - S²)/(n(n-1)) is one
-        mirrored float chain on exact DECIMAL operands, ln(s²) is
-        quantized to integer nano-units per group (the quantized-ln
-        discipline) so the Σ(n_g-1)·ln(s_g²) accumulation is exact
-        integer, and the pooled-variance term is one more mirrored
-        chain.  M = (N-k)·ln(s_p²) - Σ(n_g-1)·ln(s_g²), with the
-        standard correction C = 1 + (Σ1/(n_g-1) - 1/(N-k))/(3(k-1))
-        accumulated as quantized reciprocal units.  Groups with a
-        single observation are excluded identically in both engines
-        (n=1 makes s² a 0/0 NaN and 1/(n-1) an Infinity — the test is
-        undefined for them), so degenerate inputs degrade consistently
-        instead of crashing the ANSI bigint cast.  Registered after
-        the round-12/13 windows; round-14 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        g = e.select("event_type", cents.alias("_c")).groupBy(
-            "event_type"
-        ).agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum(F.col("_c").cast(dec)).alias("_s"),
-            F.sum((F.col("_c").cast(dec) * F.col("_c")).cast(dec)).alias(
-                "_q"
-            ),
-        ).filter(F.col("_n") >= 2)
-        s2 = (
-            (
-                F.col("_n").cast("double") * F.col("_q").cast("double")
-                - F.col("_s").cast("double") * F.col("_s").cast("double")
-            )
-            / (
-                F.col("_n").cast("double")
-                * (F.col("_n") - 1).cast("double")
-            )
-        )
-        lnu = F.round(F.log(s2) * F.lit(1e9)).cast("bigint")
-        rcu = F.round(
-            F.lit(1e9) / (F.col("_n") - 1).cast("double")
-        ).cast("bigint")
-        ug = F.round(
-            (F.col("_s") * F.col("_s")).cast("double")
-            / F.col("_n").cast("double")
-        ).cast(dec)
-        tot = g.agg(
-            F.count("*").cast("bigint").alias("k"),
-            F.sum("_n").cast("bigint").alias("n_total"),
-            F.sum((F.col("_n") - 1).cast(dec) * lnu).cast(dec).alias(
-                "_wln"
-            ),
-            F.sum(rcu).cast("bigint").alias("_rc"),
-            F.sum("_q").cast(dec).alias("_qt"),
-            F.sum(ug).cast(dec).alias("_ut"),
-        )
-        nk = (F.col("n_total") - F.col("k")).cast("double")
-        sp2 = (
-            (F.col("_qt") - F.col("_ut")).cast("double") / nk
-        )
-        m_stat = (
-            nk * F.log(sp2)
-            - F.col("_wln").cast("double") / F.lit(1e9)
-        )
-        c_corr = F.lit(1.0) + (
-            F.col("_rc").cast("double") / F.lit(1e9)
-            - F.lit(1.0) / nk
-        ) / (F.lit(3.0) * (F.col("k") - 1).cast("double"))
-        return tot.select(
-            "k",
-            "n_total",
-            F.col("_wln").alias("wln_units"),
-            m_stat.alias("m_stat"),
-            (m_stat / c_corr).alias("chi2"),
-        )
-
-    q["bartlett_test"] = q_bartlett_test
-
-    def q_durbin_watson(spark, sf_dir):
-        """Durbin-Watson first-order residual autocorrelation per
-        event type, on ols_by_type's exact-moment fit: residuals
-        e_t = v_cents - (intercept + slope·t) are computed with the
-        closed-form slope/intercept (doubles derived from exact
-        DECIMAL moments, identical in both engines), QUANTIZED to
-        integer micro-units per row, and DW = Σ(e_t - e_{t-1})² /
-        Σe_t² runs entirely on those integers via one lag window over
-        the (ts, event_id)-ordered series — order-invariant by
-        construction.  The regression-diagnostics family next to
-        ols_by_type and daily_acf.  Registered after the round-12/13
-        windows; round-14 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        t0 = e.agg(F.min(F.unix_micros("ts")).alias("_t0"))
-        base = e.crossJoin(F.broadcast(t0)).select(
-            "event_type",
-            "event_id",
-            "ts",
-            (F.unix_micros("ts") - F.col("_t0"))
-            .cast("bigint")
-            .alias("_t"),
-            F.round(F.col("value") * 1_000_000)
-            .cast("bigint")
-            .alias("_v"),
-        ).localCheckpoint(eager=False)  # moments + residual consumers
-        mom = base.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum(F.col("_t").cast(dec)).alias("_st"),
-            F.sum(F.col("_v").cast(dec)).alias("_sv"),
-            F.sum((F.col("_t").cast(dec) * F.col("_v")).cast(dec)).alias(
-                "_stv"
-            ),
-            F.sum((F.col("_t").cast(dec) * F.col("_t")).cast(dec)).alias(
-                "_stt"
-            ),
-        )
-        num = (
-            F.col("_n").cast(dec) * F.col("_stv")
-            - F.col("_st") * F.col("_sv")
-        ).cast("double")
-        den = (
-            F.col("_n").cast(dec) * F.col("_stt")
-            - F.col("_st") * F.col("_st")
-        ).cast("double")
-        slope = num / den
-        intercept = (
-            F.col("_sv").cast("double")
-            - slope * F.col("_st").cast("double")
-        ) / F.col("_n").cast("double")
-        fit = mom.select(
-            "event_type",
-            slope.alias("_b"),
-            intercept.alias("_a"),
-        )
-        resid = base.join(F.broadcast(fit), on="event_type").select(
-            "event_type",
-            "ts",
-            "event_id",
-            F.round(
-                F.col("_v").cast("double")
-                - (
-                    F.col("_a")
-                    + F.col("_b") * F.col("_t").cast("double")
-                )
-            ).cast("bigint").alias("_eu"),
-        )
-        wdw = W.partitionBy("event_type").orderBy("ts", "event_id")
-        d = resid.withColumn("_prev", F.lag("_eu").over(wdw))
-        diff = F.col("_eu") - F.col("_prev")
-        return d.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(
-                F.when(
-                    F.col("_prev").isNotNull(),
-                    (diff.cast(dec) * diff).cast(dec),
-                ).otherwise(F.lit(0).cast(dec))
-            ).cast(dec).alias("num_units"),
-            F.sum((F.col("_eu").cast(dec) * F.col("_eu")).cast(dec))
-            .cast(dec)
-            .alias("den_units"),
-        ).select(
-            "event_type",
-            "n",
-            "num_units",
-            "den_units",
-            (
-                F.col("num_units").cast("double")
-                / F.col("den_units").cast("double")
-            ).alias("dw"),
-        )
-
-    q["durbin_watson"] = q_durbin_watson
-
-    def q_scene_cuts(spark, sf_dir):
-        """Video scene-cut detection (llm/multimodal.scene_cuts): per
-        video, a cut fires where consecutive frame-mean luminance
-        changes by more than the threshold — the shot-boundary pass
-        of a video-pretraining pipeline, on the same injectable
-        decode seam and SQL-replayable fake as frame_sample.  Frame
-        means round to 9 digits before the lag/diff (numpy pairwise
-        vs SQL sequential mean last-ulp), so deltas land on the 1e-9
-        grid and quantize identically in both engines.  The first
-        multimodal registration since r4 — the frame-explosion /
-        per-video-window plumbing is real; only decode is stubbed.
-        Registered after the round-12/13 windows; round-14 window
-        material."""
-        from openseize_spark.llm import multimodal
-
-        media = multimodal.synthetic_media_sqlgen(spark, n=24)
-        return multimodal.scene_cuts(
-            media, threshold=0.0002, deterministic_fake=True
-        )
-
-    q["scene_cuts"] = q_scene_cuts
-
-    def q_decision_stump(spark, sf_dir):
-        """Exact decision-stump induction (CART split search, Breiman
-        1984) for label = is-purchase on the binned value feature:
-        for every candidate split over the 1024 fixed cent bins,
-        left/right (count, positive) totals come from integer
-        cumulative sums over the ≤1024-row bin table (broadcast
-        inequality join — no unbounded window), and the weighted Gini
-        impurity N_L·gini_L + N_R·gini_R is compared in EXACT integer
-        arithmetic: impurity_units(side) = 2·pos·(n-pos)·N_other···
-        — specifically cost(split)·N_L·N_R is avoided by comparing
-        cost = 2·[posL·(nL-posL)·nR + posR·(nR-posR)·nL] over the
-        common denominator nL·nR (all DECIMAL(38,0)/HUGEINT), so the
-        argmin split is decided without a single float.  The argmin
-        tie-breaks on the split bin (ascending).  Returns one row
-        (split_bin, n_left, pos_left, n_right, pos_right, cost_units)
-        — the supervised tree-induction primitive.  Registered after
-        the round-12/13 windows; round-14 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        binc = F.floor(
-            (cents * 1024).cast("double") / F.lit(49003.0)
-        ).cast("bigint")
-        c = (
-            e.groupBy(binc.alias("bin"))
-            .agg(
-                F.count("*").cast("bigint").alias("_n"),
-                F.sum(
-                    F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-                ).cast("bigint").alias("_p"),
-            )
-            .localCheckpoint(eager=False)  # totals + cumulative side
-        )
-        tot = c.agg(
-            F.sum("_n").cast("bigint").alias("_N"),
-            F.sum("_p").cast("bigint").alias("_P"),
-        )
-        b2 = c.select(
-            F.col("bin").alias("_bb"),
-            F.col("_n").alias("_bn"),
-            F.col("_p").alias("_bp"),
-        )
-        cum = (
-            c.join(F.broadcast(b2), F.col("_bb") <= F.col("bin"))
-            .groupBy("bin")
-            .agg(
-                F.sum("_bn").cast("bigint").alias("n_left"),
-                F.sum("_bp").cast("bigint").alias("pos_left"),
-            )
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "bin",
-                "n_left",
-                "pos_left",
-                (F.col("_N") - F.col("n_left")).alias("n_right"),
-                (F.col("_P") - F.col("pos_left")).alias("pos_right"),
-            )
-            .filter((F.col("n_left") > 0) & (F.col("n_right") > 0))
-        )
-        cost = (
-            F.lit(2).cast(dec)
-            * (
-                (
-                    F.col("pos_left").cast(dec)
-                    * (F.col("n_left") - F.col("pos_left"))
-                ).cast(dec)
-                * F.col("n_right")
-                + (
-                    F.col("pos_right").cast(dec)
-                    * (F.col("n_right") - F.col("pos_right"))
-                ).cast(dec)
-                * F.col("n_left")
-            ).cast(dec)
-        ).cast(dec)
-        best = cum.agg(
-            F.min(
-                F.struct(
-                    cost.alias("cost_units"),
-                    F.col("bin").alias("split_bin"),
-                    F.col("n_left").alias("n_left"),
-                    F.col("pos_left").alias("pos_left"),
-                    F.col("n_right").alias("n_right"),
-                    F.col("pos_right").alias("pos_right"),
-                )
-            ).alias("_b")
-        )
-        return best.select(
-            F.col("_b.split_bin").alias("split_bin"),
-            F.col("_b.n_left").alias("n_left"),
-            F.col("_b.pos_left").alias("pos_left"),
-            F.col("_b.n_right").alias("n_right"),
-            F.col("_b.pos_right").alias("pos_right"),
-            F.col("_b.cost_units").alias("cost_units"),
-        )
-
-    q["decision_stump"] = q_decision_stump
-
-    def q_cochran_armitage(spark, sf_dir):
-        """Cochran-Armitage trend test: is the purchase proportion
-        trending across ordered value-quartile groups?  Groups are
-        the 4 fixed cent-range quartile bins (scores 0..3), the
-        statistic T = Σ s_i·(p_i - n_i·P/N) with variance
-        V = P/N·(1-P/N)·[Σ s_i²·n_i - (Σ s_i·n_i)²/N]: every
-        accumulation is exact int64/DECIMAL (scores are small
-        integers), T·N = Σ s_i·(p_i·N - n_i·P) stays integer over the
-        common denominator N, and Z = (T·N)/sqrt(V·N²) is one float
-        chain on exact integer operands.  The ordered-groups trend
-        complement to dow_type_chi2's unordered independence test.
-        Registered after the round-12/13 windows; round-14 window
-        material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        score = F.least(
-            F.floor((cents * 4).cast("double") / F.lit(49003.0)).cast(
-                "bigint"
-            ),
-            F.lit(3),
-        )
-        g = e.groupBy(score.alias("s")).agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum(
-                F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-            ).cast("bigint").alias("_p"),
-        )
-        tot = g.agg(
-            F.sum("_n").cast("bigint").alias("n_total"),
-            F.sum("_p").cast("bigint").alias("p_total"),
-            F.sum((F.col("s").cast(dec) * F.col("_n")).cast(dec)).alias(
-                "_sn"
-            ),
-            F.sum(
-                (F.col("s").cast(dec) * F.col("s") * F.col("_n")).cast(dec)
-            ).alias("_ssn"),
-            F.sum((F.col("s").cast(dec) * F.col("_p")).cast(dec)).alias(
-                "_sp"
-            ),
-        )
-        nn = F.col("n_total").cast("double")
-        pp = F.col("p_total").cast("double")
-        tn = (
-            F.col("_sp").cast("double") * nn
-            - F.col("_sn").cast("double") * pp
-        )
-        pbar = pp / nn
-        v = (
-            pbar
-            * (F.lit(1.0) - pbar)
-            * (
-                F.col("_ssn").cast("double")
-                - F.col("_sn").cast("double")
-                * F.col("_sn").cast("double")
-                / nn
-            )
-        )
-        z = tn / (nn * F.sqrt(v))
-        return tot.select(
-            "n_total",
-            "p_total",
-            F.col("_sp").alias("sp_units"),
-            F.col("_sn").alias("sn_units"),
-            z.alias("z"),
-        )
-
-    q["cochran_armitage"] = q_cochran_armitage
-
-    def q_dup_substring_spans(spark, sf_dir):
-        """Maximal cross-document duplicated substring spans (llm/
-        dedup.dup_substring_spans; Lee et al. 2022 exact-substring
-        dedup) — the surgical cut list (doc, span_start, span_words)
-        a span-removal pass deletes, where dup_span_detect only
-        reports the per-doc duplicated fraction.  Word-8-gram md5
-        fingerprints, distinct-doc >= 2 semi-join, interval-union
-        span merge per document (starts within n merge, so spans are
-        disjoint and sum(span_words) is the duplicated-word count).
-        All-integer output.  Registered after the round-12/13
-        windows; round-14 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return dedup.dup_substring_spans(docs, n=8)
-
-    q["dup_substring_spans"] = q_dup_substring_spans
-
-    def q_skipgram_cooc(spark, sf_dir):
-        """Skip-gram co-occurrence + PMI over the DeepWalk corpus
-        (llm/dedup.skipgram_cooc; Levy & Goldberg 2014) — the
-        walk→embedding closure the r12 verdict ordered: window-2
-        ordered pairs over the same 4-step hash-seeded walks as the
-        random_walks registration (same customer-part purchase
-        graph), exact int64 counts/marginals, PMI as one mirrored
-        double chain with UNROUNDED ln (woe_encode precedent).
-        Registered after the round-13/14 windows; round-15 window
-        material."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).cast("bigint").alias("a"),
-                (F.col("l_partkey") * 2 + 1).cast("bigint").alias("b"),
-            )
-            .distinct()
-        )
-        return dedup.skipgram_cooc(edges, length=4, window=2)
-
-    q["skipgram_cooc"] = q_skipgram_cooc
-
-    def q_binseg_changepoints(spark, sf_dir):
-        """Binary-segmentation change-point detection (Scott & Knott
-        1974 / the binseg baseline of the PELT literature) on the
-        per-type event value series — the offline segmentation
-        complement to cusum_by_type's one-sided online detection (r12
-        verdict order #6): depth-2 recursion finds up to 3 change
-        points per event type, each maximizing the SSE reduction
-        gain(s) = n_l·n_r/n_p · (mean_l - mean_r)².
-
-        Exactness: the series is reduced to the fixed ≤1024-bin time
-        grid (integer div on non-negative µs offsets — Spark `div`
-        and DuckDB `//` agree); per-bin (n, Σcents) moments are exact
-        DECIMAL(38,0); per-split D = S_l·n_r - S_r·n_l stays exact
-        DECIMAL, and gain = D²/((n_l·n_r)·n_p) is one mirrored
-        double chain (division-derived — IEEE-identical both
-        engines); the per-segment argmax is a struct-min on
-        (-gain, bin) with ascending-bin tie-break, replayed in the
-        oracle as ORDER BY gain DESC, bin.  No float ever enters an
-        exact-integer gate column.
-
-        Scale shape: one groupBy reduces the raw events to the
-        bounded (type × 1024) bin table (map-side combine); the
-        split search — cumulative sums via broadcast inequality
-        join, segment totals, argmax — runs entirely on that
-        bounded control frame (the decision_stump precedent), so
-        depth-2 recursion costs two bounded passes regardless of
-        data size.  Registered after the round-13/14 windows;
-        round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        rng = e.agg(
-            F.min(F.unix_micros("ts")).alias("_t0"),
-            F.max(F.unix_micros("ts")).alias("_t1"),
-        )
-        b = (
-            e.crossJoin(F.broadcast(rng))
-            .select(
-                "event_type",
-                F.expr(
-                    "((unix_micros(ts) - _t0) * 1024)"
-                    " div (_t1 - _t0 + 1)"
-                ).cast("bigint").alias("bin"),
-                F.round(F.col("value") * 100).cast("bigint").alias("_c"),
-            )
-            .groupBy("event_type", "bin")
-            .agg(
-                F.count("*").cast("bigint").alias("_n"),
-                F.sum(F.col("_c").cast(dec)).alias("_s"),
-            )
-            # consumers: per-level cumulative joins + totals (2 levels)
-            .localCheckpoint(eager=False)
-        )
-        b2 = b.select(
-            F.col("event_type").alias("_et2"),
-            F.col("bin").alias("_b2"),
-            F.col("_n").alias("_n2"),
-            F.col("_s").alias("_s2"),
-        )
-
-        def best_splits(segs, lvl):
-            """One binseg level: per (type, lo, hi) segment, the
-            argmax-gain split over the bounded bin table."""
-            sb = b.join(F.broadcast(segs), on="event_type").filter(
-                (F.col("bin") >= F.col("lo"))
-                & (F.col("bin") <= F.col("hi"))
-            )
-            tot = sb.groupBy("event_type", "lo", "hi").agg(
-                F.sum("_n").cast("bigint").alias("_np"),
-                F.sum("_s").cast(dec).alias("_sp"),
-            )
-            cum = (
-                sb.join(
-                    F.broadcast(b2),
-                    (F.col("_et2") == F.col("event_type"))
-                    & (F.col("_b2") >= F.col("lo"))
-                    & (F.col("_b2") <= F.col("bin")),
-                )
-                .groupBy("event_type", "lo", "hi", "bin")
-                .agg(
-                    F.sum("_n2").cast("bigint").alias("n_left"),
-                    F.sum("_s2").cast(dec).alias("_sl"),
-                )
-            )
-            cand = (
-                cum.join(F.broadcast(tot), on=["event_type", "lo", "hi"])
-                .select(
-                    "event_type",
-                    "lo",
-                    "hi",
-                    "bin",
-                    "n_left",
-                    (F.col("_np") - F.col("n_left"))
-                    .cast("bigint")
-                    .alias("n_right"),
-                    "_sl",
-                    (F.col("_sp") - F.col("_sl")).cast(dec).alias("_sr"),
-                    "_np",
-                )
-                .filter(F.col("n_right") > 0)
-            )
-            d_int = (
-                F.col("_sl") * F.col("n_right").cast(dec)
-                - F.col("_sr") * F.col("n_left").cast(dec)
-            ).cast(dec).cast("double")
-            gain = (d_int * d_int) / (
-                (
-                    F.col("n_left").cast("double")
-                    * F.col("n_right").cast("double")
-                )
-                * F.col("_np").cast("double")
-            )
-            return (
-                cand.groupBy("event_type", "lo", "hi")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-gain).alias("_ng"),
-                            F.col("bin").alias("split_bin"),
-                            F.col("n_left").alias("n_left"),
-                            F.col("n_right").alias("n_right"),
-                        )
-                    ).alias("_b")
-                )
-                .select(
-                    "event_type",
-                    F.lit(lvl).cast("int").alias("level"),
-                    F.col("lo").cast("bigint").alias("lo_bin"),
-                    F.col("hi").cast("bigint").alias("hi_bin"),
-                    F.col("_b.split_bin").alias("split_bin"),
-                    F.col("_b.n_left").alias("n_left"),
-                    F.col("_b.n_right").alias("n_right"),
-                    (-F.col("_b._ng")).alias("gain"),
-                )
-            )
-
-        seg1 = b.select("event_type").distinct().select(
-            "event_type",
-            F.lit(0).cast("bigint").alias("lo"),
-            F.lit(1023).cast("bigint").alias("hi"),
-        )
-        best1 = best_splits(seg1, 1).localCheckpoint(eager=False)
-        seg2 = best1.select(
-            "event_type",
-            F.col("lo_bin").alias("lo"),
-            F.col("split_bin").alias("hi"),
-        ).unionByName(
-            best1.select(
-                "event_type",
-                (F.col("split_bin") + 1).alias("lo"),
-                F.col("hi_bin").alias("hi"),
-            )
-        )
-        best2 = best_splits(seg2, 2)
-        return best1.unionByName(best2)
-
-    q["binseg_changepoints"] = q_binseg_changepoints
-
-    def q_seq_rules(spark, sf_dir):
-        """Sequential-pattern rules a→b over per-user event streams
-        (the length-2 PrefixSpan/GSP case, Srikant & Agrawal 1996) —
-        the SEQUENTIAL complement to assoc_rules' unordered baskets:
-        a user supports a→b iff some occurrence of type a precedes
-        some occurrence of type b in their (ts, event_id)-ordered
-        stream, which reduces to first_pos(a) < last_pos(b) — so the
-        whole search needs only the per-(user, type) min/max position
-        table.  Confidence = supp(a→b)/supp(a) is quantized to
-        integer nano-units (division-derived — IEEE-identical both
-        engines, ties round half-away identically).
-
-        Scale shape: one window ranks each user's stream; the
-        per-(user, type) aggregate is bounded at (#types) rows per
-        user; the within-user type-pair self-join fans out at most
-        #types² per user (≤25 here); supports aggregate with partial
-        combine on the tiny (a, b) key space.  No collect, no UDF.
-        Returns (ante, cons, n_seq, n_ante, conf_units).  Registered
-        after the round-13/14 windows; round-15 window material."""
-        e = _events(spark, sf_dir)
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        pos = e.select(
-            "user_id",
-            "event_type",
-            F.row_number().over(w).alias("_p"),
-        )
-        ut = pos.groupBy("user_id", "event_type").agg(
-            F.min("_p").alias("_first"),
-            F.max("_p").alias("_last"),
-        )
-        a = ut.select(
-            "user_id",
-            F.col("event_type").alias("ante"),
-            F.col("_first").alias("_fa"),
-        )
-        b = ut.select(
-            "user_id",
-            F.col("event_type").alias("cons"),
-            F.col("_last").alias("_lb"),
-        )
-        seq = (
-            a.join(b, on="user_id")
-            .filter(
-                (F.col("ante") != F.col("cons"))
-                & (F.col("_fa") < F.col("_lb"))
-            )
-            .groupBy("ante", "cons")
-            .agg(F.count("*").cast("bigint").alias("n_seq"))
-        )
-        supp = ut.groupBy(F.col("event_type").alias("ante")).agg(
-            F.count("*").cast("bigint").alias("n_ante")
-        )
-        return seq.join(F.broadcast(supp), on="ante").select(
-            "ante",
-            "cons",
-            "n_seq",
-            "n_ante",
-            F.round(
-                F.lit(1e9)
-                * (
-                    F.col("n_seq").cast("double")
-                    / F.col("n_ante").cast("double")
-                )
-            )
-            .cast("bigint")
-            .alias("conf_units"),
-        )
-
-    q["seq_rules"] = q_seq_rules
-
-    def q_rake_keywords(spark, sf_dir):
-        """RAKE keyword extraction (llm/text.rake_keywords; Rose et
-        al. 2010): top-3 stopword-free phrases per document by the
-        summed deg/freq member-word score, quantized to exact
-        integer nano-units so the ranking never compares floats.
-        Per-document independent — embarrassingly partition-
-        parallel.  Registered after the round-13/14 windows;
-        round-15 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        return llm_text.rake_keywords(docs, k=3)
-
-    q["rake_keywords"] = q_rake_keywords
-
-    def q_mantel_haenszel(spark, sf_dir):
-        """Mantel-Haenszel pooled odds ratio (Mantel & Haenszel 1959)
-        for outcome = purchase vs exposure = high value (cents ≥
-        24502, the fixed grid midpoint), stratified by day-of-week —
-        the stratified-confounding complement to the did_by_type/
-        ipw_ate causal family: OR_MH = Σ(a_i·d_i/n_i) / Σ(b_i·c_i/n_i)
-        over the 7 per-stratum 2×2 tables.  Cell counts are exact
-        int64; each a·d/n and b·c/n term is quantized to integer
-        nano-units (division-derived — IEEE-identical both engines),
-        so the cross-stratum sums are exact integers and only the
-        final ratio re-enters floats.  Scale shape: one groupBy on
-        the 7-key dow grid (map-side combine), then a 7-row scalar
-        aggregate.  Returns one row (k_strata, n_total, ad_units,
-        bc_units, or_mh).  Registered after the round-13/14 windows;
-        round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        exp = F.when(cents >= 24502, 1).otherwise(0)
-        out = F.when(F.col("event_type") == "purchase", 1).otherwise(0)
-        g = e.select(
-            F.dayofweek("ts").cast("bigint").alias("dow"),
-            exp.alias("_e"),
-            out.alias("_o"),
-        ).groupBy("dow").agg(
-            F.sum(F.col("_e") * F.col("_o")).cast("bigint").alias("_a"),
-            F.sum(F.col("_e") * (1 - F.col("_o"))).cast("bigint").alias("_b"),
-            F.sum((1 - F.col("_e")) * F.col("_o")).cast("bigint").alias("_c"),
-            F.sum((1 - F.col("_e")) * (1 - F.col("_o")))
-            .cast("bigint")
-            .alias("_d"),
-        )
-        n = (F.col("_a") + F.col("_b") + F.col("_c") + F.col("_d")).cast(
-            "bigint"
-        )
-        ad_u = F.round(
-            F.lit(1e9)
-            * (
-                (F.col("_a") * F.col("_d")).cast("double")
-                / n.cast("double")
-            )
-        ).cast("bigint")
-        bc_u = F.round(
-            F.lit(1e9)
-            * (
-                (F.col("_b") * F.col("_c")).cast("double")
-                / n.cast("double")
-            )
-        ).cast("bigint")
-        per = g.select(n.alias("_n"), ad_u.alias("_adu"), bc_u.alias("_bcu"))
-        return per.agg(
-            F.count("*").cast("bigint").alias("k_strata"),
-            F.sum("_n").cast("bigint").alias("n_total"),
-            F.sum("_adu").cast("bigint").alias("ad_units"),
-            F.sum("_bcu").cast("bigint").alias("bc_units"),
-        ).select(
-            "k_strata",
-            "n_total",
-            "ad_units",
-            "bc_units",
-            (
-                F.col("ad_units").cast("double")
-                / F.col("bc_units").cast("double")
-            ).alias("or_mh"),
-        )
-
-    q["mantel_haenszel"] = q_mantel_haenszel
-
-    def q_page_hinkley(spark, sf_dir):
-        """Page-Hinkley drift detection (Page 1954; the Gama et al.
-        2014 streaming formulation) per event type — the RUNNING-mean
-        complement to cusum_by_type's global-mean CUSUM: m_t =
-        Σ_{i≤t}(x_i − x̄_i − δ) with x̄_i the mean of the first i
-        observations, excursion = m_t − min_{s≤t} m_s, alarm when the
-        excursion exceeds λ.  Each term's running-mean deviation is
-        (i·c_i − S_i)/i — a division on exact integers, quantized to
-        nano-units (division-derived — IEEE-identical both engines) —
-        so the m cumsum, running min, and excursion are exact
-        DECIMAL(38,0)/HUGEINT integers.  δ = 5 cents, λ = 1e6 cents.
-
-        Scale shape: one type-keyed exchange carries all four stacked
-        windows (row_number, prefix sum, m cumsum, running min) —
-        the cusum_by_type shape.  Returns per type (n_obs,
-        peak_exc_units, n_alarms, first_alarm_id — NULL when the
-        excursion never crosses λ).  Registered after the round-13/14
-        windows; round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        delta_u = 5 * 10**9
-        lam_u = 10**6 * 10**9
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        w = (
-            W.partitionBy("event_type")
-            .orderBy("ts", "event_id")
-            .rowsBetween(W.unboundedPreceding, 0)
-        )
-        base = e.select(
-            "event_type", "event_id", "ts", cents.alias("_c")
-        )
-        d = base.withColumn(
-            "_i", F.row_number().over(
-                W.partitionBy("event_type").orderBy("ts", "event_id")
-            ).cast("bigint")
-        ).withColumn("_s", F.sum(F.col("_c").cast(dec)).over(w).cast(dec))
-        u = d.select(
-            "event_type",
-            "event_id",
-            "ts",
-            (
-                F.round(
-                    F.lit(1e9)
-                    * (
-                        (
-                            (F.col("_i").cast(dec) * F.col("_c")).cast(dec)
-                            - F.col("_s")
-                        ).cast("double")
-                        / F.col("_i").cast("double")
-                    )
-                ).cast("bigint")
-                - F.lit(delta_u)
-            ).alias("_u"),
-        )
-        m = u.withColumn(
-            "_m", F.sum(F.col("_u").cast(dec)).over(w).cast(dec)
-        ).withColumn(
-            "_exc", (F.col("_m") - F.min("_m").over(w)).cast(dec)
-        ).localCheckpoint(eager=False)  # two consumers: agg + first-alarm
-        agg = m.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n_obs"),
-            F.max("_exc").alias("peak_exc_units"),
-            F.sum(F.when(F.col("_exc") > lam_u, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_alarms"),
-        )
-        first = (
-            m.filter(F.col("_exc") > lam_u)
-            .groupBy("event_type")
-            .agg(F.min(F.struct("ts", "event_id")).alias("_f"))
-            .select(
-                "event_type",
-                F.col("_f.event_id").alias("first_alarm_id"),
-            )
-        )
-        return agg.join(first, on="event_type", how="left").select(
-            "event_type",
-            "n_obs",
-            "peak_exc_units",
-            "n_alarms",
-            "first_alarm_id",
-        )
-
-    q["page_hinkley"] = q_page_hinkley
-
-    def q_friedman_test(spark, sf_dir):
-        """Friedman blocked rank test (Friedman 1937): do the event
-        types differ in mean value CONSISTENTLY across day-of-week
-        blocks?  Treatments = event types ranked within each complete
-        dow block by mean cents; χ²_F = 3·ΣR2²/(b·k(k+1)) − 3b(k+1)
-        on DOUBLED midranks (R2 = 2R keeps tie midranks integer, the
-        kruskal_binned discipline).  Ranking compares the rational
-        means EXACTLY by cross-multiplication (S_j·n_l vs S_l·n_j on
-        exact DECIMAL operands — no float mean ever exists), so ranks
-        are exact integers; only the final χ² re-enters floats on
-        exact operands.  Blocks missing any treatment are dropped
-        (classic complete-block design).
-
-        Scale shape: one groupBy reduces events to the ≤(7·#types)
-        cell table; the within-block pairwise compare, completeness
-        filter, and rank rollup all run on that bounded control
-        frame via broadcast joins.  Returns one row (k_treat,
-        b_blocks, sum_r2_sq, chi2_f).  Registered after the
-        round-13/14 windows; round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        cells = (
-            e.select(
-                F.dayofweek("ts").cast("bigint").alias("dow"),
-                "event_type",
-                cents.alias("_c"),
-            )
-            .groupBy("dow", "event_type")
-            .agg(
-                F.count("*").cast("bigint").alias("_n"),
-                F.sum(F.col("_c").cast(dec)).alias("_s"),
-            )
-            .localCheckpoint(eager=False)  # k, blocks, both join sides
-        )
-        k = cells.agg(
-            F.count_distinct("event_type").cast("bigint").alias("_k")
-        )
-        blocks = (
-            cells.groupBy("dow")
-            .agg(F.count("*").cast("bigint").alias("_bk"))
-            .crossJoin(F.broadcast(k))
-            .filter(F.col("_bk") == F.col("_k"))
-            .select("dow")
-        )
-        c1 = cells.join(F.broadcast(blocks), on="dow")
-        c2 = cells.select(
-            F.col("dow").alias("_dw2"),
-            F.col("_n").alias("_n2"),
-            F.col("_s").alias("_s2"),
-        )
-        # exact rational compare: mean2 < mean1  <=>  s2*n1 < s1*n2
-        ranked = (
-            c1.join(F.broadcast(c2), F.col("_dw2") == F.col("dow"))
-            .groupBy("dow", "event_type")
-            .agg(
-                (
-                    F.lit(2)
-                    * F.sum(
-                        F.when(
-                            F.col("_s2") * F.col("_n")
-                            < F.col("_s") * F.col("_n2"),
-                            1,
-                        ).otherwise(0)
-                    )
-                    + F.sum(
-                        F.when(
-                            F.col("_s2") * F.col("_n")
-                            == F.col("_s") * F.col("_n2"),
-                            1,
-                        ).otherwise(0)
-                    )
-                    + 1
-                )
-                .cast("bigint")
-                .alias("_r2")
-            )
-        )
-        rj = ranked.groupBy("event_type").agg(
-            F.sum("_r2").cast("bigint").alias("_rj")
-        )
-        return (
-            rj.agg(
-                F.count("*").cast("bigint").alias("k_treat"),
-                F.sum(
-                    (F.col("_rj").cast(dec) * F.col("_rj")).cast(dec)
-                ).cast(dec).alias("sum_r2_sq"),
-            )
-            .crossJoin(
-                F.broadcast(
-                    blocks.agg(
-                        F.count("*").cast("bigint").alias("b_blocks")
-                    )
-                )
-            )
-            .select(
-                "k_treat",
-                "b_blocks",
-                "sum_r2_sq",
-                (
-                    (F.lit(3).cast(dec) * F.col("sum_r2_sq")).cast(
-                        "double"
-                    )
-                    / (
-                        F.col("b_blocks")
-                        * F.col("k_treat")
-                        * (F.col("k_treat") + 1)
-                    ).cast("double")
-                    - (
-                        F.lit(3)
-                        * F.col("b_blocks")
-                        * (F.col("k_treat") + 1)
-                    ).cast("double")
-                ).alias("chi2_f"),
-            )
-        )
-
-    q["friedman_test"] = q_friedman_test
-
-    def q_audio_vad(spark, sf_dir):
-        """Voice-activity segments (llm/multimodal.audio_vad):
-        200-sample frame energies over the fake-decoded waveform as
-        EXACT integer byte-lattice sums Σ(2b-255)², division-derived
-        energy units, per-media integer activity threshold
-        (u·n_frames > Σu), lag-gap island merge into segments — the
-        speech-span pre-filter before ASR.  Same injectable decode
-        seam as audio_features/scene_cuts.  Registered after the
-        round-13/14 windows; round-15 window material."""
-        from openseize_spark.llm import multimodal
-
-        media = multimodal.synthetic_media_sqlgen(spark, n=24)
-        return multimodal.audio_vad(
-            media, frame_len=200, deterministic_fake=True
-        )
-
-    q["audio_vad"] = q_audio_vad
-
-    def q_theil_sen(spark, sf_dir):
-        """Theil-Sen robust trend slope (Theil 1950 / Sen 1968) per
-        event type on the 1024-bin time grid — the outlier-robust
-        complement to ols_by_type's least-squares fit: the estimator
-        is the MEDIAN of all pairwise bin-mean slopes.  Each slope
-        (mean_j − mean_i)/(bin_j − bin_i) is one division of exact
-        integers — numerator (S_j·n_i − S_i·n_j), denominator
-        (bin_j − bin_i)·n_i·n_j, both DECIMAL-exact then cast — so
-        every slope is bit-identical across engines, and the median
-        is the deterministic lower order statistic under the total
-        order (slope, i, j) — never a float interpolation.
-
-        Scale shape: the events reduce to the bounded ≤1024-bin
-        table per type (binseg_changepoints' grid); the pair frame
-        is a broadcast self-join on that control frame (≤ k·1024²/2
-        rows regardless of data size); the median is one per-type
-        rank window on the bounded frame.  Returns (event_type,
-        n_bins, n_pairs, slope — cents per bin).  Registered after
-        the round-13/14 windows; round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        rng = e.agg(
-            F.min(F.unix_micros("ts")).alias("_t0"),
-            F.max(F.unix_micros("ts")).alias("_t1"),
-        )
-        b = (
-            e.crossJoin(F.broadcast(rng))
-            .select(
-                "event_type",
-                F.expr(
-                    "((unix_micros(ts) - _t0) * 1024)"
-                    " div (_t1 - _t0 + 1)"
-                ).cast("bigint").alias("bin"),
-                F.round(F.col("value") * 100).cast("bigint").alias("_c"),
-            )
-            .groupBy("event_type", "bin")
-            .agg(
-                F.count("*").cast("bigint").alias("_n"),
-                F.sum(F.col("_c").cast(dec)).alias("_s"),
-            )
-            .localCheckpoint(eager=False)  # both self-join sides
-        )
-        b2 = b.select(
-            F.col("event_type").alias("_et2"),
-            F.col("bin").alias("_b2"),
-            F.col("_n").alias("_n2"),
-            F.col("_s").alias("_s2"),
-        )
-        pairs = (
-            b.join(
-                F.broadcast(b2),
-                (F.col("_et2") == F.col("event_type"))
-                & (F.col("_b2") > F.col("bin")),
-            )
-            .select(
-                "event_type",
-                "bin",
-                "_b2",
-                (
-                    (F.col("_s2") * F.col("_n") - F.col("_s") * F.col("_n2"))
-                    .cast(dec)
-                    .cast("double")
-                    / (
-                        (F.col("_b2") - F.col("bin")).cast(dec)
-                        * F.col("_n")
-                        * F.col("_n2")
-                    ).cast(dec).cast("double")
-                ).alias("_slope"),
-            )
-        )
-        wr = W.partitionBy("event_type").orderBy(
-            F.col("_slope").asc(), F.col("bin").asc(), F.col("_b2").asc()
-        )
-        ranked = pairs.withColumn(
-            "_rk", F.row_number().over(wr).cast("bigint")
-        ).localCheckpoint(eager=False)  # count + median pick
-        cnt = ranked.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n_pairs")
-        )
-        nb = b.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n_bins")
-        )
-        med = (
-            ranked.join(F.broadcast(cnt), on="event_type")
-            .filter(F.col("_rk") == F.expr("(n_pairs + 1) div 2"))
-            .select("event_type", F.col("_slope").alias("slope"))
-        )
-        return (
-            nb.join(F.broadcast(cnt), on="event_type")
-            .join(med, on="event_type")
-            .select("event_type", "n_bins", "n_pairs", "slope")
-        )
-
-    q["theil_sen"] = q_theil_sen
-
-    def q_gini_by_type(spark, sf_dir):
-        """Gini coefficient of the value distribution per event type
-        (the order-statistics identity G = (2·Σi·x_(i) − (n+1)·Σx) /
-        (n·Σx)) — the inequality/concentration measure a spend or
-        engagement analysis reports next to the mean.  Ranks are a
-        per-type window ordered by (cents, event_id); Σi·x_i is
-        invariant to tie order, so the value is deterministic.  All
-        moments are exact DECIMAL(38,0)/HUGEINT; G is one float
-        division of exact operands.  Returns (event_type, n, gini).
-        Registered after the round-13/14 windows; round-15 window
-        material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        w = W.partitionBy("event_type").orderBy("_c", "event_id")
-        d = e.select(
-            "event_type", "event_id", cents.alias("_c")
-        ).withColumn("_i", F.row_number().over(w).cast("bigint"))
-        g = d.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum(F.col("_c").cast(dec)).alias("_sx"),
-            F.sum((F.col("_i").cast(dec) * F.col("_c")).cast(dec)).alias(
-                "_six"
-            ),
-        )
-        num = (
-            F.lit(2).cast(dec) * F.col("_six")
-            - (F.col("n") + 1).cast(dec) * F.col("_sx")
-        ).cast(dec)
-        den = (F.col("n").cast(dec) * F.col("_sx")).cast(dec)
-        return g.select(
-            "event_type",
-            "n",
-            (num.cast("double") / den.cast("double")).alias("gini"),
-        )
-
-    q["gini_by_type"] = q_gini_by_type
-
-    def q_trimmed_mean(spark, sf_dir):
-        """5%-trimmed mean of value per event type — the robust
-        location estimate next to gini_by_type's dispersion: drop the
-        lowest and highest floor(n/20) observations by the
-        deterministic (cents, event_id) order, average the rest.
-        The trim bounds are pure integer arithmetic (rk > n div 20
-        and rk <= n − n div 20), the kept sum is exact DECIMAL, and
-        the mean is one float division — bit-equal on any
-        partitioning.  Returns (event_type, n, n_kept,
-        trimmed_mean_cents).  Registered after the round-13/14
-        windows; round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        w = W.partitionBy("event_type").orderBy("_c", "event_id")
-        d = e.select(
-            "event_type", "event_id", cents.alias("_c")
-        ).withColumn("_i", F.row_number().over(w).cast("bigint"))
-        tot = d.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n")
-        )
-        kept = (
-            d.join(F.broadcast(tot), on="event_type")
-            .filter(
-                (F.col("_i") > F.expr("n div 20"))
-                & (F.col("_i") <= F.col("n") - F.expr("n div 20"))
-            )
-            .groupBy("event_type", "n")
-            .agg(
-                F.count("*").cast("bigint").alias("n_kept"),
-                F.sum(F.col("_c").cast(dec)).alias("_sk"),
-            )
-        )
-        return kept.select(
-            "event_type",
-            "n",
-            "n_kept",
-            (
-                F.col("_sk").cast("double") / F.col("n_kept").cast("double")
-            ).alias("trimmed_mean_cents"),
-        )
-
-    q["trimmed_mean"] = q_trimmed_mean
-
-    def q_kendall_tau_binned(spark, sf_dir):
-        """Kendall rank correlation τ-b between time and value per
-        event type on the 1024-bin grid (Kendall 1938) — the
-        rank-correlation complement to spearman_binned and the
-        concordance view of theil_sen's slope: over bin pairs i < j,
-        concordant iff mean_j > mean_i, discordant iff <, tied iff =,
-        with the mean comparison done EXACTLY by cross-multiplication
-        (S_j·n_i vs S_i·n_j, DECIMAL operands — no float mean).
-        τ-b = (nc − nd)/sqrt((N0 − T_v)·N0) with N0 = n(n−1)/2 and
-        T_v the value-tie pair count — all exact int64, one sqrt
-        chain at the end (sqrt is IEEE-correctly-rounded, not a
-        transcendental approximation).
-
-        Scale shape: bounded ≤1024-bin control frame per type; the
-        pair count aggregates the broadcast self-join
-        (decision_stump/theil_sen precedent).  Returns (event_type,
-        n_bins, nc, nd, n_tied, tau_b).  Registered after the
-        round-13/14 windows; round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        rng = e.agg(
-            F.min(F.unix_micros("ts")).alias("_t0"),
-            F.max(F.unix_micros("ts")).alias("_t1"),
-        )
-        b = (
-            e.crossJoin(F.broadcast(rng))
-            .select(
-                "event_type",
-                F.expr(
-                    "((unix_micros(ts) - _t0) * 1024)"
-                    " div (_t1 - _t0 + 1)"
-                ).cast("bigint").alias("bin"),
-                F.round(F.col("value") * 100).cast("bigint").alias("_c"),
-            )
-            .groupBy("event_type", "bin")
-            .agg(
-                F.count("*").cast("bigint").alias("_n"),
-                F.sum(F.col("_c").cast(dec)).alias("_s"),
-            )
-            .localCheckpoint(eager=False)  # both self-join sides
-        )
-        b2 = b.select(
-            F.col("event_type").alias("_et2"),
-            F.col("bin").alias("_b2"),
-            F.col("_n").alias("_n2"),
-            F.col("_s").alias("_s2"),
-        )
-        m1 = F.col("_s") * F.col("_n2")
-        m2 = F.col("_s2") * F.col("_n")
-        g = (
-            b.join(
-                F.broadcast(b2),
-                (F.col("_et2") == F.col("event_type"))
-                & (F.col("_b2") > F.col("bin")),
-            )
-            .groupBy("event_type")
-            .agg(
-                F.sum(F.when(m2 > m1, 1).otherwise(0))
-                .cast("bigint")
-                .alias("nc"),
-                F.sum(F.when(m2 < m1, 1).otherwise(0))
-                .cast("bigint")
-                .alias("nd"),
-                F.sum(F.when(m2 == m1, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_tied"),
-            )
-        )
-        nb = b.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n_bins")
-        )
-        n0 = (F.col("nc") + F.col("nd") + F.col("n_tied")).cast("bigint")
-        tau = (F.col("nc") - F.col("nd")).cast("double") / F.sqrt(
-            ((n0 - F.col("n_tied")).cast(dec) * n0).cast("double")
-        )
-        return (
-            nb.join(g, on="event_type")
-            .select(
-                "event_type", "n_bins", "nc", "nd", "n_tied",
-                tau.alias("tau_b"),
-            )
-        )
-
-    q["kendall_tau_binned"] = q_kendall_tau_binned
-
-    def q_brier_score(spark, sf_dir):
-        """Brier score of the day-of-week purchase-rate predictor
-        (Brier 1950) — the calibration-eval closed form: with
-        p̂(dow) = purchases_d/n_d and y ∈ {0,1},
-        Σ(p̂ − y)² = Σ_d (pos_d − pos_d²/n_d), so the whole score
-        reduces to the 7-row dow table: each pos²/n term is
-        quantized to integer nano-units (division-derived), the
-        cross-dow sum is exact int64, and Brier = units/(N·1e9) is
-        one float chain.  Returns one row (n_total, brier_units,
-        brier).  Registered after the round-13/14 windows; round-15
-        window material."""
-        e = _events(spark, sf_dir)
-        g = e.select(
-            F.dayofweek("ts").cast("bigint").alias("dow"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .alias("_y"),
-        ).groupBy("dow").agg(
-            F.count("*").cast("bigint").alias("_n"),
-            F.sum("_y").cast("bigint").alias("_p"),
-        )
-        u = (
-            F.col("_p") * F.lit(10**9).cast("bigint")
-            - F.round(
-                F.lit(1e9)
-                * (
-                    (F.col("_p") * F.col("_p")).cast("double")
-                    / F.col("_n").cast("double")
-                )
-            ).cast("bigint")
-        )
-        return g.agg(
-            F.sum("_n").cast("bigint").alias("n_total"),
-            F.sum(u).cast("bigint").alias("brier_units"),
-        ).select(
-            "n_total",
-            "brier_units",
-            (
-                F.col("brier_units").cast("double")
-                / (F.col("n_total").cast("double") * F.lit(1e9))
-            ).alias("brier"),
-        )
-
-    q["brier_score"] = q_brier_score
-
-    def q_pinball_quantile(spark, sf_dir):
-        """Exact τ=0.9 quantile via pinball-loss minimization
-        (Koenker & Bassett 1978) per event type — quantile estimation
-        as an ARGMIN the decision_stump way, not an order statistic:
-        over the 1024 fixed cent-bin candidates q, 10·loss(q) =
-        1·Σ_{x<q}(q−x) + 9·Σ_{x≥q}(x−q) is exact integer arithmetic
-        from cumulative (n, S) bin moments (τ=0.9 scaled by 10), and
-        the argmin is a struct-min with ascending-bin tie-break — no
-        float ever enters the decision.  Cross-checks the sort-based
-        quantile family (rolling_median / length_quantiles) with an
-        optimization-based estimator.
-
-        Scale shape: one groupBy to the ≤1024-row cent-bin table per
-        type; cumulative moments via the bounded broadcast inequality
-        join; candidate loss and argmin on the control frame.
-        Returns (event_type, q_bin, n_below, loss_units).  Registered
-        after the round-13/14 windows; round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        dec = "decimal(38,0)"
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        binc = F.floor(
-            (cents * 1024).cast("double") / F.lit(49003.0)
-        ).cast("bigint")
-        # bin value representative: the bin's lower cent edge
-        # q(bin) = ceil(bin * 49003 / 1024) — integer, identical both
-        # engines on non-negative operands
-        b = (
-            e.select("event_type", binc.alias("bin"), cents.alias("_c"))
-            .groupBy("event_type", "bin")
-            .agg(
-                F.count("*").cast("bigint").alias("_n"),
-                F.sum(F.col("_c").cast(dec)).alias("_s"),
-            )
-            .localCheckpoint(eager=False)  # cum join both sides + tot
-        )
-        tot = b.groupBy("event_type").agg(
-            F.sum("_n").cast("bigint").alias("_nt"),
-            F.sum("_s").cast(dec).alias("_st"),
-        )
-        b2 = b.select(
-            F.col("event_type").alias("_et2"),
-            F.col("bin").alias("_b2"),
-            F.col("_n").alias("_n2"),
-            F.col("_s").alias("_s2"),
-        )
-        # strictly-below cumulative: bins < candidate bin
-        cum = (
-            b.join(
-                F.broadcast(b2),
-                (F.col("_et2") == F.col("event_type"))
-                & (F.col("_b2") < F.col("bin")),
-                "left",
-            )
-            .groupBy("event_type", "bin")
-            .agg(
-                F.coalesce(F.sum("_n2"), F.lit(0))
-                .cast("bigint")
-                .alias("n_below"),
-                F.coalesce(F.sum("_s2"), F.lit(0).cast(dec))
-                .cast(dec)
-                .alias("_sb"),
-            )
-        )
-        # ceil(bin*49003/1024) on non-negative operands: (a + 1023) div 1024
-        qv = F.expr("(bin * 49003 + 1023) div 1024").cast(dec)
-        loss = (
-            (
-                qv * F.col("n_below").cast(dec) - F.col("_sb")
-            ).cast(dec)
-            + F.lit(9).cast(dec)
-            * (
-                (F.col("_st") - F.col("_sb"))
-                - qv * (F.col("_nt") - F.col("n_below")).cast(dec)
-            ).cast(dec)
-        ).cast(dec)
-        best = (
-            cum.join(F.broadcast(tot), on="event_type")
-            .groupBy("event_type")
-            .agg(
-                F.min(
-                    F.struct(
-                        loss.alias("loss_units"),
-                        F.col("bin").alias("q_bin"),
-                        F.col("n_below").alias("n_below"),
-                    )
-                ).alias("_b")
-            )
-        )
-        return best.select(
-            "event_type",
-            F.col("_b.q_bin").alias("q_bin"),
-            F.col("_b.n_below").alias("n_below"),
-            F.col("_b.loss_units").alias("loss_units"),
-        )
-
-    q["pinball_quantile"] = q_pinball_quantile
-
-    def q_mad_by_type(spark, sf_dir):
-        """Median absolute deviation per event type (the robust scale
-        estimate next to trimmed_mean's location and gini's
-        concentration): med = lower-median cents by the deterministic
-        (cents, event_id) rank, then MAD = lower median of |x − med|
-        under the same rank discipline — two rank windows, all exact
-        int64, zero floats.  Returns (event_type, n, median_cents,
-        mad_cents).  Registered after the round-13/14 windows;
-        round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        w = W.partitionBy("event_type").orderBy("_c", "event_id")
-        d = e.select(
-            "event_type", "event_id", cents.alias("_c")
-        ).withColumn(
-            "_i", F.row_number().over(w).cast("bigint")
-        ).localCheckpoint(eager=False)  # median pick + deviation pass
-        tot = d.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n")
-        )
-        med = (
-            d.join(F.broadcast(tot), on="event_type")
-            .filter(F.col("_i") == F.expr("(n + 1) div 2"))
-            .select("event_type", "n", F.col("_c").alias("median_cents"))
-        )
-        dev = d.join(F.broadcast(med), on="event_type").select(
-            "event_type",
-            "n",
-            "median_cents",
-            "event_id",
-            F.abs(F.col("_c") - F.col("median_cents")).alias("_a"),
-        )
-        w2 = W.partitionBy("event_type").orderBy("_a", "event_id")
-        return (
-            dev.withColumn(
-                "_j", F.row_number().over(w2).cast("bigint")
-            )
-            .filter(F.col("_j") == F.expr("(n + 1) div 2"))
-            .select(
-                "event_type",
-                "n",
-                "median_cents",
-                F.col("_a").alias("mad_cents"),
-            )
-        )
-
-    q["mad_by_type"] = q_mad_by_type
-
-    def q_bootstrap_ci(spark, sf_dir):
-        """Poisson bootstrap 90% CI for the mean value per event type
-        (Efron 1979; the Poisson(1)-weight formulation is THE
-        distributed bootstrap — no per-replicate resample pass, one
-        weight per (row, replicate)): 32 replicates, each row's
-        replicate weight w = inverse-CDF lookup of a salted integer
-        hash against DRIVER-SIDE Poisson(1) cumulative cutoffs scaled
-        to the 2^32 hash space — pure integer compares, no float u
-        ever exists.  Replicate means are division-derived nano-units
-        (exact operands Σw·c / Σw), and the CI is the (2nd, 31st)
-        order statistic of the 32 means — deterministic, no
-        interpolation.
-
-        Scale shape: the 32× replicate explode happens on the scan
-        and feeds straight into a map-side-combined (type, replicate)
-        aggregate — no join ever sees the exploded rows (the
-        xcorr_lags lesson); the 32-row-per-type mean table then takes
-        one bounded rank window.  Returns (event_type, n_reps,
-        mean_lo_units, mean_hi_units).  Registered after the
-        round-13/14 windows; round-15 window material."""
-        import math as _math
-
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        # Poisson(1) CDF cutoffs scaled to the 2^32 hash space —
-        # driver-side constants embedded identically in both engines
-        cuts = []
-        acc = 0.0
-        for k in range(9):
-            acc += _math.exp(-1.0) / _math.factorial(k)
-            cuts.append(int(_math.floor(acc * 4294967296.0)))
-        reps = F.explode(
-            F.array(*[F.lit(r).cast("bigint") for r in range(32)])
-        )
-        d = e.select(
-            "event_type", "event_id", cents.alias("_c")
-        ).withColumn("_r", reps)
-        h = sampling.salted_hash(
-            F.concat(
-                F.col("event_id").cast("string"),
-                F.lit(":"),
-                F.col("_r").cast("string"),
-            ),
-            "boot",
-        )
-        w = F.when(h < cuts[0], 0)
-        for k in range(1, 9):
-            w = w.when(h < cuts[k], k)
-        w = w.otherwise(9)
-        m = (
-            d.withColumn("_w", w.cast("bigint"))
-            .groupBy("event_type", "_r")
-            .agg(
-                F.sum("_w").cast("bigint").alias("_n"),
-                F.sum(F.col("_w") * F.col("_c"))
-                .cast("bigint")
-                .alias("_s"),
-            )
-            .filter(F.col("_n") > 0)
-            .select(
-                "event_type",
-                "_r",
-                F.round(
-                    F.lit(1e9)
-                    * (F.col("_s").cast("double") / F.col("_n").cast("double"))
-                )
-                .cast("bigint")
-                .alias("_mu"),
-            )
-        )
-        wr = W.partitionBy("event_type").orderBy("_mu", "_r")
-        ranked = m.withColumn("_rk", F.row_number().over(wr))
-        return ranked.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n_reps"),
-            F.max(F.when(F.col("_rk") == 2, F.col("_mu"))).alias(
-                "mean_lo_units"
-            ),
-            F.max(F.when(F.col("_rk") == 31, F.col("_mu"))).alias(
-                "mean_hi_units"
-            ),
-        )
-
-    q["bootstrap_ci"] = q_bootstrap_ci
-
-    def q_term_drift(spark, sf_dir):
-        """Top-20 terms by corpus-composition DRIFT between the first
-        and second half of the ingestion order (doc_id midpoint) —
-        the "did the crawl mix change" monitor a continuously-fed
-        training corpus runs next to gram_novelty's saturation
-        signal: per half, term rate = round(1e9·k/N_half) nano-units
-        (division-derived — IEEE-identical), drift = |rate₁ − rate₂|
-        exact int64, top-20 via orderBy().limit() —
-        TakeOrderedAndProject, per-partition top-k, never a global
-        sort.  Ties break on the term.  Returns (word, k_first,
-        k_second, drift_units, rank)."""
-        docs = _t(spark, sf_dir, "documents")
-        mid = docs.filter(F.col("text").isNotNull()).agg(
-            F.min("doc_id").alias("_lo"), F.max("doc_id").alias("_hi")
-        )
-        t = (
-            docs.filter(F.col("text").isNotNull())
-            .crossJoin(F.broadcast(mid))
-            .select(
-                # first half: doc_id - lo < hi - doc_id (subtraction
-                # form, the did_by_type midpoint discipline)
-                (
-                    (F.col("doc_id") - F.col("_lo"))
-                    < (F.col("_hi") - F.col("doc_id"))
-                ).alias("_first"),
-                F.explode(dedup.tokenize(F.col("text"))).alias("word"),
-            )
-            .groupBy("word")
-            .agg(
-                F.sum(F.when(F.col("_first"), 1).otherwise(0))
-                .cast("bigint")
-                .alias("k_first"),
-                F.sum(F.when(F.col("_first"), 0).otherwise(1))
-                .cast("bigint")
-                .alias("k_second"),
-            )
-            .localCheckpoint(eager=False)  # totals + rate consumers
-        )
-        tot = t.agg(
-            F.sum("k_first").cast("bigint").alias("_n1"),
-            F.sum("k_second").cast("bigint").alias("_n2"),
-        )
-        r1 = F.round(
-            F.lit(1e9)
-            * (F.col("k_first").cast("double") / F.col("_n1").cast("double"))
-        ).cast("bigint")
-        r2 = F.round(
-            F.lit(1e9)
-            * (
-                F.col("k_second").cast("double")
-                / F.col("_n2").cast("double")
-            )
-        ).cast("bigint")
-        scored = t.crossJoin(F.broadcast(tot)).select(
-            "word",
-            "k_first",
-            "k_second",
-            F.abs(r1 - r2).alias("drift_units"),
-        )
-        w = W.orderBy(F.col("drift_units").desc(), F.col("word").asc())
-        return (
-            scored.orderBy(
-                F.col("drift_units").desc(), F.col("word").asc()
-            )
-            .limit(20)
-            .withColumn("rank", F.row_number().over(w).cast("int"))
-        )
-
-    q["term_drift"] = q_term_drift
-
-    def q_forecast_mae(spark, sf_dir):
-        """Forecast-baseline evaluation per event type: MAE of the
-        naive (yesterday's value) vs seasonal-naive (same weekday
-        last week) predictors on the DAILY mean value series — the
-        backtest harness that decides whether holt_forecast's
-        smoothing earns its keep (Hyndman & Athanasopoulos'
-        benchmark discipline: a model that cannot beat
-        seasonal-naive is noise).  Daily means quantize to
-        nano-units (division-derived); lag-1 and lag-7 errors are
-        exact integer |diffs| via two per-type lag windows over the
-        bounded daily table; each MAE is one final division.
-        Returns (event_type, n_days, mae_naive_units,
-        mae_seasonal_units).  Registered after the round-13/14
-        windows; round-15 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        dec = "decimal(38,0)"
-        # TZ-free day index: integer div of non-negative epoch micros
-        # (cast-through-date is session-timezone-dependent — the
-        # vanilla-probe trap)
-        day = F.expr("unix_micros(ts) div 86400000000")
-        daily = (
-            e.select(
-                "event_type",
-                day.cast("bigint").alias("_d"),
-                cents.alias("_c"),
-            )
-            .groupBy("event_type", "_d")
-            .agg(
-                F.count("*").cast("bigint").alias("_n"),
-                F.sum(F.col("_c").cast(dec)).alias("_s"),
-            )
-            .select(
-                "event_type",
-                "_d",
-                F.round(
-                    F.lit(1e9)
-                    * (
-                        F.col("_s").cast("double")
-                        / F.col("_n").cast("double")
-                    )
-                ).cast("bigint").alias("_mu"),
-            )
-        )
-        w = W.partitionBy("event_type").orderBy("_d")
-        lagged = daily.select(
-            "event_type",
-            "_d",
-            "_mu",
-            F.lag("_mu", 1).over(w).alias("_p1"),
-            F.lag("_mu", 7).over(w).alias("_p7"),
-            F.lag("_d", 1).over(w).alias("_d1"),
-            F.lag("_d", 7).over(w).alias("_d7"),
-        ).filter(
-            F.col("_p1").isNotNull()
-            & F.col("_p7").isNotNull()
-            # contiguity: the lag-1 row is yesterday, lag-7 a week ago
-            & (F.col("_d") - F.col("_d1") == 1)
-            & (F.col("_d") - F.col("_d7") == 7)
-        )
-        return lagged.groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n_days"),
-            (
-                F.sum(F.abs(F.col("_mu") - F.col("_p1"))).cast("double")
-                / F.count("*").cast("double")
-            ).alias("mae_naive_units"),
-            (
-                F.sum(F.abs(F.col("_mu") - F.col("_p7"))).cast("double")
-                / F.count("*").cast("double")
-            ).alias("mae_seasonal_units"),
-        )
-
-    q["forecast_mae"] = q_forecast_mae
-
-    def q_dedup_eval(spark, sf_dir):
-        """Precision/recall of the MinHash-LSH candidate stage against
-        the EXACT-duplicate ground truth — the dedup family's own
-        quality gate (the eval a pipeline runs before trusting a
-        banding config): ground truth is fingerprint equality (md5 of
-        normalized text); a candidate pair is a true positive iff its
-        two fingerprints match, checked by JOINING the fingerprint
-        table twice — no pair enumeration of the truth set; the truth
-        pair COUNT is Σ m(m−1)/2 over fingerprint group sizes, also
-        enumeration-free.  The headline metric is the BANDING
-        PRECISION — what fraction of candidates survive exact-Jaccard
-        verification at 0.8 (the banding-config selectivity a dedup
-        operator tunes); exact-duplicate recall is reported NULL-safe
-        (exact dups have identical signatures and always band-collide,
-        so when the corpus has any, recall is structurally 1.0; the
-        gate corpora have none and both engines agree on NULL).  All
-        ratios are division-derived nano-units on exact counts.  Same
-        banding config as the registered minhash_dedup (k=5, 64
-        hashes, 8 bands, portable).  Returns one row (n_cand,
-        n_verified, n_true_pairs, tp_exact, band_precision_units,
-        exact_recall_units).  Registered after the round-13/14
-        windows; round-15 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        sigs = dedup.minhash_signatures(
-            docs, k=5, num_hashes=64, portable=True
-        )
-        cand = dedup.minhash_lsh_pairs(
-            sigs, bands=8, portable=True
-        ).localCheckpoint(eager=False)  # verify + fp joins + count
-        ver = dedup.jaccard_verify(docs, cand, k=5, threshold=0.8)
-        nver = ver.agg(
-            F.count("*").cast("bigint").alias("n_verified")
-        )
-        fp = llm_text.fingerprint(
-            docs.filter(F.col("text").isNotNull())
-        ).select(
-            F.col("doc_id").alias("_fid"), F.col("fingerprint").alias("_fp")
-        ).localCheckpoint(eager=False)  # pair join x2 + group sizes
-        tp = (
-            cand.join(fp, cand["a"] == F.col("_fid"))
-            .select("a", "b", F.col("_fp").alias("_fpa"))
-            .join(
-                fp.select(
-                    F.col("_fid").alias("_fid2"),
-                    F.col("_fp").alias("_fpb"),
-                ),
-                F.col("b") == F.col("_fid2"),
-            )
-            .agg(
-                F.count("*").cast("bigint").alias("n_cand"),
-                F.sum(
-                    F.when(F.col("_fpa") == F.col("_fpb"), 1).otherwise(0)
-                )
-                .cast("bigint")
-                .alias("tp_exact"),
-            )
-        )
-        truth = (
-            fp.groupBy("_fp")
-            .agg(F.count("*").cast("bigint").alias("_m"))
-            .agg(
-                F.sum(F.expr("(_m * (_m - 1)) div 2"))
-                .cast("bigint")
-                .alias("n_true_pairs")
-            )
-        )
-        return (
-            tp.crossJoin(F.broadcast(nver))
-            .crossJoin(F.broadcast(truth))
-            .select(
-                "n_cand",
-                "n_verified",
-                "n_true_pairs",
-                "tp_exact",
-                F.round(
-                    F.lit(1e9)
-                    * (
-                        F.col("n_verified").cast("double")
-                        / F.col("n_cand").cast("double")
-                    )
-                ).cast("bigint").alias("band_precision_units"),
-                F.when(
-                    F.col("n_true_pairs") > 0,
-                    F.round(
-                        F.lit(1e9)
-                        * (
-                            F.col("tp_exact").cast("double")
-                            / F.col("n_true_pairs").cast("double")
-                        )
-                    ).cast("bigint"),
-                ).alias("exact_recall_units"),
-            )
-        )
-
-    q["dedup_eval"] = q_dedup_eval
-
-    def q_ranking_inversions(spark, sf_dir):
-        """Pairwise ranking agreement between the BM25 and TF-IDF
-        retrievers (the two rankers rrf_fusion merges): over each
-        query's docs ranked by BOTH, count discordant pairs — the
-        Kendall-style inter-ranker agreement that tells a hybrid-
-        search operator whether fusion is even needed (full agreement
-        makes RRF a no-op).  Ranks are exact integers from the fused
-        table; the pair scan is bounded at top-k² per query;
-        agreement = 1 − 2·inv/pairs is one float chain on exact
-        counts.  Returns (query_id, n_common, n_pairs, n_inversions,
-        agreement).  Registered after the round-13/14 windows;
-        round-15 window material."""
-        docs = _t(spark, sf_dir, "documents")
-        r = llm_text.rrf_fusion(docs, queries=_BM25_QUERIES, k=10)
-        both = r.filter(
-            F.col("rank_bm25").isNotNull()
-            & F.col("rank_tfidf").isNotNull()
-        ).select(
-            "query_id",
-            F.col("doc_id").alias("_d"),
-            F.col("rank_bm25").alias("_r1"),
-            F.col("rank_tfidf").alias("_r2"),
-        ).localCheckpoint(eager=False)  # both pair-join sides + count
-        b2 = both.select(
-            F.col("query_id").alias("_q2"),
-            F.col("_d").alias("_d2"),
-            F.col("_r1").alias("_r1b"),
-            F.col("_r2").alias("_r2b"),
-        )
-        pairs = both.join(
-            F.broadcast(b2),
-            (F.col("_q2") == F.col("query_id"))
-            & (F.col("_d2") > F.col("_d")),
-        )
-        inv = pairs.groupBy("query_id").agg(
-            F.count("*").cast("bigint").alias("n_pairs"),
-            F.sum(
-                F.when(
-                    (F.col("_r1") < F.col("_r1b"))
-                    != (F.col("_r2") < F.col("_r2b")),
-                    1,
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_inversions"),
-        )
-        cnt = both.groupBy("query_id").agg(
-            F.count("*").cast("bigint").alias("n_common")
-        )
-        return cnt.join(inv, on="query_id").select(
-            "query_id",
-            "n_common",
-            "n_pairs",
-            "n_inversions",
-            (
-                F.lit(1.0)
-                - F.lit(2.0)
-                * (
-                    F.col("n_inversions").cast("double")
-                    / F.col("n_pairs").cast("double")
-                )
-            ).alias("agreement"),
-        )
-
-    q["ranking_inversions"] = q_ranking_inversions
-
-    def q_snippet_extract(spark, sf_dir):
-        """Best-passage extraction for the BM25 top-3 documents per
-        query — the snippet generator of a search stack: over each
-        (query, doc), the 10-token window starting at a query-term
-        position that contains the MOST query-term occurrences
-        (ties: earliest start).  Window counting is a bounded band
-        self-join over the query-term POSITIONS only (never all
-        tokens): positions come from one posexplode over just the
-        ≤ 3·|queries| ranked documents (broadcast semi-join before
-        the explode — the full corpus is never tokenized here), and
-        the per-window count is exact int64 with a struct-min argmax.
-        Returns (query_id, doc_id, rank, best_start, n_in_window)."""
-        docs = _t(spark, sf_dir, "documents")
-        ranked = llm_text.bm25_topk(
-            docs, queries=_BM25_QUERIES, k=3
-        ).select("query_id", "doc_id", "rank")
-        rdocs = ranked.select("doc_id").distinct()
-        toks = docs.join(F.broadcast(rdocs), on="doc_id").select(
-            "doc_id", F.posexplode(dedup.tokenize(F.col("text"))).alias("_pos", "word")
-        )
-        qrows = [
-            (int(qid), w)
-            for qid, text in _BM25_QUERIES.items()
-            for w in dict.fromkeys(text.lower().split())
-        ]
-        qt = spark.createDataFrame(qrows, "query_id long, word string")
-        qp = (
-            toks.join(F.broadcast(qt), on="word")
-            .join(F.broadcast(ranked), on=["query_id", "doc_id"])
-            .select(
-                "query_id",
-                "doc_id",
-                "rank",
-                F.col("_pos").cast("bigint").alias("_p"),
-            )
-            .localCheckpoint(eager=False)  # both band-join sides
-        )
-        qp2 = qp.select(
-            F.col("query_id").alias("_q2"),
-            F.col("doc_id").alias("_d2"),
-            F.col("_p").alias("_p2"),
-        )
-        win = (
-            qp.join(
-                F.broadcast(qp2),
-                (F.col("_q2") == F.col("query_id"))
-                & (F.col("_d2") == F.col("doc_id"))
-                & (F.col("_p2") >= F.col("_p"))
-                & (F.col("_p2") <= F.col("_p") + 9),
-            )
-            .groupBy("query_id", "doc_id", "rank", "_p")
-            .agg(F.count("*").cast("bigint").alias("_k"))
-        )
-        best = win.groupBy("query_id", "doc_id", "rank").agg(
-            F.min(
-                F.struct(
-                    (-F.col("_k")).alias("_nk"),
-                    F.col("_p").alias("best_start"),
-                )
-            ).alias("_b")
-        )
-        return best.select(
-            "query_id",
-            "doc_id",
-            "rank",
-            F.col("_b.best_start").alias("best_start"),
-            (-F.col("_b._nk")).cast("bigint").alias("n_in_window"),
-        )
-
-    q["snippet_extract"] = q_snippet_extract
-
-    def q_streaming_page_hinkley(spark, sf_dir):
-        """Streaming Page-Hinkley drift detection per event type
-        (streaming/stateful.streaming_page_hinkley) — the
-        running-mean drift twin of streaming_cusum, carried
-        (i, S, m, runmin) int64 state across three sequential
-        ts-range micro-batch files: per-event excursion
-        m − min(m) and the λ alarm, where each increment is the
-        identical IEEE chain the batch page_hinkley query runs
-        JVM-side (half-away rounding in the kernel), so
-        stream == batch == SQL replay bit-for-bit."""
-        from openseize_spark.streaming.stateful import (
-            streaming_page_hinkley,
-        )
-
-        e = (
-            _events(spark, sf_dir)
-            .filter(
-                F.col("value").isNotNull() & F.col("ts").isNotNull()
-            )
-            .select("event_type", "event_id", "ts", "value")
-        )
-        lo, hi = e.agg(F.min("ts"), F.max("ts")).collect()[0]
-        conds = _thirds(F.col("ts"), lo, (hi - lo) / 3)
-        stream = _stage_batches(spark, sf_dir, "ph_", e, conds)
-        out = streaming_page_hinkley(stream)
-        return drain_stream(spark, out, "gate_streaming_ph").select(
-            "event_type", "event_id", "exc_units", "alarm"
-        )
-
-    q["streaming_page_hinkley"] = q_streaming_page_hinkley
-
-    def q_mmr_diversify(spark, sf_dir):
-        """Maximal Marginal Relevance diversified top-4 (Carbonell &
-        Goldstein 1998) over the embedding corpus — the
-        redundancy-aware re-ranker between ANN retrieval and a RAG
-        context window: candidates are the brute-force top-12 by
-        9-digit-ROUNDED cosine to the vec_id=0 probe (the cut itself
-        ranks on the rounded value with vec_id tie-break, so the
-        candidate SET is cross-engine deterministic — r14 ADVICE
-        hardening), then 4 unrolled greedy rounds
-        pick argmax 0.7·rel − 0.3·max_{s∈S} sim(d, s).  Relevance and
-        pairwise similarities are rounded to 9 digits FIRST (the
-        scene_cuts discipline — Spark's fold and DuckDB's
-        list_cosine_similarity agree to ~1e-16, the 1e-9 grid makes
-        the argmax inputs identical), so every selection compares
-        identical doubles with vec_id tie-break.  All joins are over
-        the bounded 12-row candidate frame; rounds are unrolled, not
-        iterative.  Returns (sel_rank, vec_id, mmr_score).
-        Registered after the round-13/14 windows; round-15 window
-        material."""
-        emb = _t(spark, sf_dir, "embeddings")
-        probe = emb.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_vec"),
-        )
-        corpus = emb.filter(F.col("vec_id") >= 3)
-        # r14 (ADVICE): the top-12 candidate CUT itself ranks on the
-        # 9-digit-ROUNDED cosine with vec_id tie-break — the same
-        # discipline already applied to rel and the pairwise sims —
-        # so a ~1e-16 cross-engine cosine difference at the 12/13
-        # boundary cannot select different candidate sets.  (The
-        # previous cosine_topk call ranked on the unrounded value.)
-        from openseize_spark.llm.similarity import _dot, _norm
-
-        _qv = probe.select(
-            F.col("q_id"),
-            F.col("q_vec").cast("array<double>").alias("_qv"),
-        )
-        _scored = (
-            corpus.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("_cv"),
-            )
-            .crossJoin(F.broadcast(_qv))
-            .select(
-                "vec_id",
-                "q_id",
-                F.round(
-                    _dot(F.col("_cv"), F.col("_qv"))
-                    / (_norm(F.col("_cv")) * _norm(F.col("_qv"))),
-                    9,
-                ).alias("_rel"),
-            )
-        )
-        _wc = W.partitionBy("q_id").orderBy(
-            F.desc("_rel"), F.col("vec_id")
-        )
-        cand = (
-            _scored.withColumn("_rk", F.row_number().over(_wc))
-            .filter(F.col("_rk") <= 12)
-            .select("vec_id", "_rel")
-            .localCheckpoint(eager=False)  # rounds + pair sims
-        )
-        cv = emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("_v")
-        ).join(F.broadcast(cand.select("vec_id")), on="vec_id")
-        cv2 = cv.select(
-            F.col("vec_id").alias("_vid2"), F.col("_v").alias("_v2")
-        )
-        from openseize_spark.llm.similarity import _dot, _norm
-
-        psim = (
-            cv.join(
-                F.broadcast(cv2), F.col("_vid2") != F.col("vec_id")
-            )
-            .select(
-                F.col("vec_id").alias("_da"),
-                F.col("_vid2").alias("_db"),
-                F.round(
-                    _dot(F.col("_v"), F.col("_v2"))
-                    / (_norm(F.col("_v")) * _norm(F.col("_v2"))),
-                    9,
-                ).alias("_s"),
-            )
-            .localCheckpoint(eager=False)  # consumed by rounds 2..4
-        )
-        lam, oml = F.lit(0.7), F.lit(0.3)
-
-        def pick(selected, rnd):
-            """One MMR round: argmax 0.7·rel − 0.3·maxsim over the
-            unselected candidates (selected is a bounded id frame)."""
-            if selected is None:
-                scored = cand.select(
-                    "vec_id",
-                    (lam * F.col("_rel") - oml * F.lit(0.0)).alias("_sc"),
-                )
-            else:
-                sel_ids = selected.select(
-                    F.col("vec_id").alias("_sid")
-                )
-                ms = (
-                    psim.join(
-                        F.broadcast(sel_ids),
-                        psim["_db"] == F.col("_sid"),
-                    )
-                    .groupBy("_da")
-                    .agg(F.max("_s").alias("_ms"))
-                )
-                scored = (
-                    cand.join(
-                        F.broadcast(selected.select("vec_id")),
-                        on="vec_id",
-                        how="left_anti",
-                    )
-                    .join(
-                        F.broadcast(ms),
-                        cand["vec_id"] == ms["_da"],
-                    )
-                    .select(
-                        "vec_id",
-                        (lam * F.col("_rel") - oml * F.col("_ms")).alias(
-                            "_sc"
-                        ),
-                    )
-                )
-            best = scored.agg(
-                F.min(
-                    F.struct(
-                        (-F.col("_sc")).alias("_nsc"),
-                        F.col("vec_id").alias("vec_id"),
-                    )
-                ).alias("_b")
-            ).select(
-                F.lit(rnd).cast("int").alias("sel_rank"),
-                F.col("_b.vec_id").alias("vec_id"),
-                (-F.col("_b._nsc")).alias("mmr_score"),
-            )
-            return best.localCheckpoint(eager=False)
-
-        s1 = pick(None, 1)
-        s2 = pick(s1, 2)
-        s3 = pick(s1.unionByName(s2), 3)
-        s4 = pick(s1.unionByName(s2).unionByName(s3), 4)
-        return (
-            s1.unionByName(s2).unionByName(s3).unionByName(s4)
-        )
-
-    q["mmr_diversify"] = q_mmr_diversify
-
-    def q_graph_assortativity(spark, sf_dir):
-        """Degree assortativity coefficient (Newman 2002) of the
-        undirected customer-part purchase graph — does high degree
-        attach to high degree?  The Pearson correlation of endpoint
-        degrees over the DIRECTED edge list (each undirected edge
-        counted both ways, the standard convention): all five moments
-        (Σdx, Σdy, Σdx·dy, Σdx², Σdy²) accumulate as exact
-        DECIMAL(38,0)/HUGEINT; numerator M·Σxy − Σx·Σy stays exact
-        DECIMAL; the two variance factors cast to double BEFORE their
-        product (their exact product would need ~52 digits) in the
-        identical order both engines.  Bipartite graphs skew negative
-        — the sign itself is the structure check.  Returns one row
-        (m_edges, assortativity).  Registered after the round-13/14
-        windows; round-15 window material."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        dec = "decimal(38,0)"
-        und = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).cast("bigint").alias("a"),
-                (F.col("l_partkey") * 2 + 1).cast("bigint").alias("b"),
-            )
-            .distinct()
-        )
-        edges = und.select("a", "b").unionByName(
-            und.select(
-                F.col("b").alias("a"), F.col("a").alias("b")
-            )
-        ).localCheckpoint(eager=False)  # degree agg + moment join
-        deg = edges.groupBy("a").agg(
-            F.count("*").cast("bigint").alias("_d")
-        )
-        j = (
-            edges.join(deg, on="a")
-            .withColumnRenamed("_d", "_dx")
-            .join(
-                deg.select(
-                    F.col("a").alias("b"), F.col("_d").alias("_dy")
-                ),
-                on="b",
-            )
-        )
-        mom = j.agg(
-            F.count("*").cast("bigint").alias("m_edges"),
-            F.sum(F.col("_dx").cast(dec)).alias("_sx"),
-            F.sum(F.col("_dy").cast(dec)).alias("_sy"),
-            F.sum((F.col("_dx").cast(dec) * F.col("_dy")).cast(dec)).alias(
-                "_sxy"
-            ),
-            F.sum((F.col("_dx").cast(dec) * F.col("_dx")).cast(dec)).alias(
-                "_sxx"
-            ),
-            F.sum((F.col("_dy").cast(dec) * F.col("_dy")).cast(dec)).alias(
-                "_syy"
-            ),
-        )
-        m = F.col("m_edges").cast(dec)
-        num = (m * F.col("_sxy") - F.col("_sx") * F.col("_sy")).cast(
-            "double"
-        )
-        vx = (m * F.col("_sxx") - F.col("_sx") * F.col("_sx")).cast(
-            "double"
-        )
-        vy = (m * F.col("_syy") - F.col("_sy") * F.col("_sy")).cast(
-            "double"
-        )
-        return mom.select(
-            "m_edges",
-            (num / F.sqrt(vx * vy)).alias("assortativity"),
-        )
-
-    q["graph_assortativity"] = q_graph_assortativity
-
-    def q_sppmi_embed(spark, sf_dir):
-        """Dominant-eigenvector SPPMI embedding (llm/dedup
-        .sppmi_embed; Levy & Goldberg 2014) over the same DeepWalk
-        corpus as skipgram_cooc — the final step of the
-        walk→embedding closure the r13 verdict ordered: word2vec SGNS
-        implicitly factorizes the shifted positive PMI of the
-        skip-gram counts, so the leading eigenvector of that matrix
-        (6 exact-integer power-iteration rounds, the
-        pca_power_iteration discipline kept DISTRIBUTED — the matrix
-        is node×node and never collected) is the 1-d SGNS-equivalent
-        embedding.  One quantized-transcendental site (SPPMI units,
-        guard-band audited at both gate scales); everything after it
-        is int64/DECIMAL(38,0) — bit-equal under any partitioning at
-        any round count.  Registered after the round-14/15 windows;
-        round-16 window material."""
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        edges = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .select(
-                (F.col("o_custkey") * 2).cast("bigint").alias("a"),
-                (F.col("l_partkey") * 2 + 1).cast("bigint").alias("b"),
-            )
-            .distinct()
-        )
-        return dedup.sppmi_embed(edges, length=4, window=2, rounds=6)
-
-    q["sppmi_embed"] = q_sppmi_embed
-
-    def q_conformal_threshold(spark, sf_dir):
-        """Split-conformal calibration threshold per event type
-        (Vovk et al. 2005; Lei et al. 2018) — the
-        distribution-free prediction-interval primitive an eval
-        pipeline hangs on model scores: the even-event_id half trains
-        a mean predictor, the odd half calibrates, and the threshold
-        is the ceil((n_cal+1)(1−α))-th smallest nonconformity with
-        α=0.1.  Exactness: the nonconformity |c·n_tr − s_tr| clears
-        the mean's division entirely (exact int64 — the predicted
-        mean is s_tr/n_tr, so |c − mean|·n_tr needs no float); the
-        quantile index is exact integer ceil via (9·(n_cal+1)+9) div
-        10 on non-negative operands; the pick is a deterministic
-        (a, event_id) rank.  Scale: one grouped agg + one broadcast
-        join + one per-type rank window.  Returns (event_type,
-        n_train, n_cal, k_idx, q_units) where q_units is in
-        cents·n_train units.  Registered after the round-14/15
-        windows; round-16 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        d = e.select(
-            "event_type",
-            "event_id",
-            cents.alias("_c"),
-            (F.col("event_id") % 2 == 0).alias("_tr"),
-        )
-        tr = d.filter("_tr").groupBy("event_type").agg(
-            F.count("*").cast("bigint").alias("n_train"),
-            F.sum(F.col("_c").cast("decimal(38,0)"))
-            .cast("bigint")
-            .alias("_s_tr"),
-        )
-        cal = (
-            d.filter(~F.col("_tr"))
-            .join(F.broadcast(tr), on="event_type")
-            .select(
-                "event_type",
-                "n_train",
-                "event_id",
-                F.abs(
-                    F.col("_c") * F.col("n_train") - F.col("_s_tr")
-                ).alias("_a"),
-            )
-        )
-        wr = W.partitionBy("event_type").orderBy("_a", "event_id")
-        ranked = cal.withColumn(
-            "_i", F.row_number().over(wr).cast("bigint")
-        )
-        nc = ranked.groupBy("event_type", "n_train").agg(
-            F.count("*").cast("bigint").alias("n_cal")
-        )
-        return (
-            ranked.join(F.broadcast(nc), on=["event_type", "n_train"])
-            .filter(
-                F.col("_i")
-                == F.expr("(9 * (n_cal + 1) + 9) div 10")
-            )
-            .select(
-                "event_type",
-                "n_train",
-                "n_cal",
-                F.col("_i").alias("k_idx"),
-                F.col("_a").alias("q_units"),
-            )
-        )
-
-    q["conformal_threshold"] = q_conformal_threshold
-
-    def q_psi_drift(spark, sf_dir):
-        """Population stability index terms per event type — the
-        standard production drift metric on a numeric feature
-        (banking scorecard lineage; the numeric-feature complement to
-        term_drift's vocabulary JS): the time range splits at its
-        midpoint, values bin into 10 equal-width cents bins over the
-        per-type full range, and each present bin emits its add-one-
-        smoothed PSI term (p̂−q̂)·ln(p̂/q̂).  Exactness: bin = ((c −
-        cmin)·10) div (cmax − cmin + 1) on non-negative operands
-        (Spark div == DuckDB // there); counts exact int64; p̂, q̂,
-        and the ratio argument ((p+1)·(nq+10))/((q+1)·(np+10)) are
-        division-derived doubles (IEEE-identical) and ln stays
-        UNROUNDED output (woe_encode precedent).  Terms are emitted
-        PER BIN — never float-summed across bins — so no
-        order-sensitive float aggregation exists.  Scale: two grouped
-        aggs + broadcast joins; bins bounded at 10.  Returns
-        (event_type, bin, p_cnt, q_cnt, psi_term).  Registered after
-        the round-14/15 windows; round-16 window material."""
-        e = _events(spark, sf_dir).filter(
-            F.col("value").isNotNull() & F.col("ts").isNotNull()
-        )
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        us = F.expr("unix_micros(ts)")
-        d = e.select(
-            "event_type", us.alias("_us"), cents.alias("_c")
-        )
-        rng = d.groupBy("event_type").agg(
-            F.min("_us").alias("_lo"),
-            F.max("_us").alias("_hi"),
-            F.min("_c").alias("_cmin"),
-            F.max("_c").alias("_cmax"),
-        )
-        binned = d.join(F.broadcast(rng), on="event_type").select(
-            "event_type",
-            F.expr(
-                "((_c - _cmin) * 10) div (_cmax - _cmin + 1)"
-            ).alias("bin"),
-            # 2·offset < span+1 keeps the half-split comparison in
-            # exact integers (a `/ 2` would go through double)
-            (
-                (F.col("_us") - F.col("_lo")) * 2
-                < F.col("_hi") - F.col("_lo") + 1
-            ).alias("_first_half"),
-        )
-        counts = binned.groupBy("event_type", "bin").agg(
-            F.sum(F.when(F.col("_first_half"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("p_cnt"),
-            F.sum(F.when(~F.col("_first_half"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("q_cnt"),
-        )
-        tots = counts.groupBy("event_type").agg(
-            F.sum("p_cnt").cast("bigint").alias("_np"),
-            F.sum("q_cnt").cast("bigint").alias("_nq"),
-        )
-        ph = (F.col("p_cnt") + 1).cast("double") / (
-            F.col("_np") + 10
-        ).cast("double")
-        qh = (F.col("q_cnt") + 1).cast("double") / (
-            F.col("_nq") + 10
-        ).cast("double")
-        ratio = (
-            (F.col("p_cnt") + 1) * (F.col("_nq") + 10)
-        ).cast("double") / (
-            (F.col("q_cnt") + 1) * (F.col("_np") + 10)
-        ).cast("double")
-        return (
-            counts.join(F.broadcast(tots), on="event_type")
-            .select(
-                "event_type",
-                "bin",
-                "p_cnt",
-                "q_cnt",
-                ((ph - qh) * F.log(ratio)).alias("psi_term"),
-            )
-        )
-
-    q["psi_drift"] = q_psi_drift
-
-    def q_ess_weights(spark, sf_dir):
-        """Effective sample size of per-document importance weights by
-        source (Kish 1965; the weight-degeneracy diagnostic every
-        importance-weighted corpus mix needs next to dsir_sample):
-        with w = n_chars, ESS = (Σw)²/Σw² and the ratio ESS/n says
-        how much of the nominal sample the weighting keeps.  Sums are
-        exact int64 via DECIMAL(38,0) accumulation (w² ~ 1e8 · 1e6
-        docs at sf1 stays far under the 38-digit bound, and the gate
-        casts to BIGINT with >=100x headroom); the two ESS divisions
-        are division-derived doubles.  One grouped agg, no joins.
-        Returns (source, n_docs, sum_w, sum_w2, ess, ess_ratio).
-        Registered after the round-14/15 windows; round-16 window
-        material."""
-        docs = _t(spark, sf_dir, "documents").filter(
-            F.col("n_chars").isNotNull() & F.col("source").isNotNull()
-        )
-        dec = "decimal(38,0)"
-        agg = docs.groupBy("source").agg(
-            F.count("*").cast("bigint").alias("n_docs"),
-            F.sum(F.col("n_chars").cast(dec)).cast("bigint").alias("sum_w"),
-            F.sum(
-                (F.col("n_chars") * F.col("n_chars")).cast(dec)
-            )
-            .cast("bigint")
-            .alias("sum_w2"),
-        )
-        ess = (
-            F.col("sum_w").cast("double") * F.col("sum_w").cast("double")
-        ) / F.col("sum_w2").cast("double")
-        return agg.select(
-            "source",
-            "n_docs",
-            "sum_w",
-            "sum_w2",
-            ess.alias("ess"),
-            (ess / F.col("n_docs").cast("double")).alias("ess_ratio"),
-        )
-
-    q["ess_weights"] = q_ess_weights
-
-    def q_hodges_lehmann_binned(spark, sf_dir):
-        """Binned Hodges-Lehmann location estimate per event type (the
-        pseudo-median — median of Walsh pair averages, Hodges &
-        Lehmann 1963; the binned-statistic discipline of
-        kendall_tau_binned/kruskal_binned): cents bin to a fixed
-        512-cell grid per type, Walsh pairs (i ≤ j) enumerate over
-        the BOUNDED 512×512 bin-combo frame with exact integer
-        weights n_i·n_j (i<j) and n_i·(n_i+1)/2 (i=j), and the
-        estimate is the weighted lower-median pair BIN-SUM via a
-        cumulative window — never an O(n²) row explosion.  All
-        integers end to end.  Returns (event_type, n, p_pairs,
-        hl_binsum).  Registered after the round-14/15 windows;
-        round-16 window material."""
-        e = _events(spark, sf_dir).filter(F.col("value").isNotNull())
-        cents = F.round(F.col("value") * 100).cast("bigint")
-        d = e.select("event_type", cents.alias("_c"))
-        rng = d.groupBy("event_type").agg(
-            F.min("_c").alias("_cmin"),
-            F.max("_c").alias("_cmax"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-        hist = (
-            d.join(F.broadcast(rng), on="event_type")
-            .select(
-                "event_type",
-                "n",
-                F.expr(
-                    "((_c - _cmin) * 512) div (_cmax - _cmin + 1)"
-                ).alias("_b"),
-            )
-            .groupBy("event_type", "n", "_b")
-            .agg(F.count("*").cast("bigint").alias("_nb"))
-            .localCheckpoint(eager=False)  # self-joined pair combos
-        )
-        h2 = hist.select(
-            "event_type",
-            F.col("_b").alias("_b2"),
-            F.col("_nb").alias("_nb2"),
-        )
-        combos = (
-            hist.join(h2, on="event_type")
-            .filter(F.col("_b") <= F.col("_b2"))
-            .select(
-                "event_type",
-                "n",
-                (F.col("_b") + F.col("_b2")).alias("binsum"),
-                F.when(
-                    F.col("_b") == F.col("_b2"),
-                    F.expr("(_nb * (_nb + 1)) div 2"),
-                )
-                .otherwise(F.col("_nb") * F.col("_nb2"))
-                .cast("bigint")
-                .alias("_w"),
-            )
-            .groupBy("event_type", "n", "binsum")
-            .agg(F.sum("_w").cast("bigint").alias("_wb"))
-        )
-        wcum = W.partitionBy("event_type").orderBy("binsum").rowsBetween(
-            W.unboundedPreceding, W.currentRow
-        )
-        tot = combos.groupBy("event_type").agg(
-            F.sum("_wb").cast("bigint").alias("_P")
-        )
-        ranked = (
-            combos.join(F.broadcast(tot), on="event_type")
-            .withColumn("_cum", F.sum("_wb").over(wcum).cast("bigint"))
-            .filter(
-                F.col("_cum") >= F.expr("(_P + 1) div 2")
-            )
-        )
-        wpick = W.partitionBy("event_type").orderBy("binsum")
-        return (
-            ranked.withColumn("_r", F.row_number().over(wpick))
-            .filter(F.col("_r") == 1)
-            .select(
-                "event_type",
-                "n",
-                F.col("_P").alias("p_pairs"),
-                F.col("binsum").alias("hl_binsum"),
-            )
-        )
-
-    q["hodges_lehmann_binned"] = q_hodges_lehmann_binned
-
-    def q_streaming_topk(spark, sf_dir):
-        """Streaming bottom-k/KMV sampler per event type
-        (streaming/stateful.streaming_topk): keep the k=8 smallest
-        portable salted-md5 priorities per key across micro-batches
-        (keeping the k smallest hash priorities IS a deterministic
-        uniform-without-replacement sample of the distinct stream —
-        the KMV construction on the streaming surface), emitting the
-        running snapshot after each of three sequential ts-range
-        batch files.  The same ts-cut and present-prefix discipline
-        as streaming_hll; the oracle ranks each present prefix with
-        the identical (priority, event_id) order.  All integers; the
-        python, Spark, and DuckDB md5 paths produce the same 32-bit
-        priority by construction."""
-        from openseize_spark.streaming.stateful import streaming_topk
-
-        e = (
-            _events(spark, sf_dir)
-            .filter(
-                F.col("event_id").isNotNull()
-                & F.col("ts").isNotNull()
-                & F.col("event_type").isNotNull()
-            )
-            .select(
-                "event_type", "event_id", F.unix_micros("ts").alias("_us")
-            )
-        )
-        lo, hi = e.agg(F.min("_us"), F.max("_us")).collect()[0]
-        conds = _thirds(F.col("_us"), lo, (hi - lo) // 3)
-        stream = _stage_batches(spark, sf_dir, "stopk_", e, conds)
-        out = streaming_topk(stream, k=8, seed="tk")
-        return drain_stream(spark, out, "gate_streaming_topk").select(
-            "event_type", "batch_idx", "rank", "event_id", "priority"
-        )
-
-    q["streaming_topk"] = q_streaming_topk
-
-    # ---- round-14 gate hardening shim (see _GATE_DECIMAL_CASTS) ----
-    # Every decimal-typed output column gets an explicit final cast;
-    # the oracle_sql() shim applies the byte-identical cast on the
-    # DuckDB side.  Wrappers preserve the registered docstring.
-    for _name, (_cols, _casts) in _GATE_DECIMAL_CASTS.items():
-        _base = q[_name]
-
-        def _gate_cast(spark, sf_dir, _b=_base, _c=_casts):
-            df = _b(spark, sf_dir)
-            return df.select(
-                *[
-                    F.col(c).cast(_c[c]).alias(c) if c in _c else F.col(c)
-                    for c in df.columns
-                ]
-            )
-
-        _gate_cast.__doc__ = _base.__doc__
-        q[_name] = _gate_cast
-
-    # Canonical-order hardening (r13 verdict fix (i)): the red
-    # sp_counting row is one of the few registry queries returning an
-    # unordered frame — return it canonically ordered.  The driver's
-    # hash is order-insensitive, so this is insurance, not a
-    # semantics change.  Declarative like the cast table above; the
-    # oracle_sql() shim appends the matching ORDER BY.
-    for _name, _ocols in _GATE_CANONICAL_ORDER.items():
-        _base = q[_name]
-
-        def _ordered(spark, sf_dir, _b=_base, _oc=tuple(_ocols)):
-            return _b(spark, sf_dir).orderBy(*_oc)
-
-        _ordered.__doc__ = _base.__doc__
-        q[_name] = _ordered
-
-    return _gate_order(q)
-
-
-# ---- edf_decode gate fixture constants (shared by query + oracle) ----
-_EDF_GATE_SPR = (64, 64, 32, 16)
-_EDF_GATE_NREC = 50
-_EDF_GATE_PMIN = (-500.0, -200.0, 0.0, -1.0)
-_EDF_GATE_PMAX = (500.0, 300.0, 100.0, 1.0)
-
-# edf_roundtrip shares one write range across channels (the writer uses a
-# single physical range); both bounds survive the 8-char header field
-# exactly, so the reader re-derives this exact slope/offset pair
-_EDF_RT_PMIN, _EDF_RT_PMAX = -500.0, 500.0
-_EDF_RT_SLOPE = (_EDF_RT_PMAX - _EDF_RT_PMIN) / (32767.0 - (-32768.0))
-_EDF_RT_OFFSET = _EDF_RT_PMIN - _EDF_RT_SLOPE * (-32768.0)
-
-# annotations_mask fixture: (label, time_s, duration_s, channel) with
-# integer times so interval bounds round(time*fs) are exact; "rest" is
-# excluded by the reader's label filter
-_ANN_GATE_FIXTURE = [
-    ("seizure", 3, 2, "ALL"),
-    ("artifact", 10, 1, "ALL"),
-    ("seizure", 20, 4, "ALL"),
-    ("rest", 30, 5, "ALL"),
-    ("seizure", 47, 3, "ALL"),
-]
-
-
-def _edf_gate_digital(ch: int, t):
-    """Deterministic int16 digital samples; non-negative intermediate so
-    numpy % and SQL % agree."""
-    return ((1009 * t + 7919 * ch) % 65536) - 32768
-
-
-# The driver's correctness gate checks the FIRST 50 registered queries
-# (each CORRECTNESS_rNN.json = exactly the first 50 in registration
-# order), so registration order is evidence allocation.  r01 ∪ r03 ∪ r04
-# covered 109/114; the window below was budgeted for round 5 — the 7
-# queries never driver-checked as of that freeze, the 2 r4 red rows
-# (HUGEINT oracle-type artifact, both oracles now cast to BIGINT), then
-# every round-5-changed query.  ROUND 5 PRODUCED NO DRIVER ARTIFACTS
-# (no CORRECTNESS_r05.json exists), so this entire window is still
-# unchecked and remains the correct round-6 budget unchanged — every
-# slot is a query with zero driver evidence, all locally BITEXACT.
-# Round-6 registrations (TPC-H Q3/Q7-Q22 shapes, hll_distinct,
-# bloom_decontaminate, group_reservoir, epoch_repeat, hard_negatives,
-# quantize_int8, mixture_pipeline, ohlc_bars, streaming_upsert,
-# sorted_neighborhood, ann_recall, cluster_cohesion, ewma_user_value,
-# the batch-4 analytics set, and the batch 5-18 surface — A/B+CUPED,
-# link prediction, Markov/trigram paths, Zipf/entropy/readability,
-# survival/ACF/decompose/changepoint/forecast-eval, privacy audits +
-# erasure, LSH/dim-recall/NB-confusion harnesses, k-center coreset,
-# negative sampling, KN smoothing, span corruption, KMV/theta +
-# bitmap set ops, CUBE/RANGE/unpivot, ORC/CSV round-trips + PERMISSIVE
-# quarantine, rendezvous/pareto/fanout/weighted-median/KS, streaming
-# rate limiter) land after the boundary: round-7+ window material,
-# all locally BITEXACT-verified.
-# fixed ordered BPE merge table for the bpe_encode gate: includes a
-# cascade (t+h -> th, th+e -> the; a+n -> an, an+d -> and) so merge
-# order and merged-symbol reuse are both exercised
-_BPE_MERGES = [
-    ("t", "h"), ("th", "e"), ("i", "n"), ("e", "r"), ("a", "n"),
-    ("an", "d"), ("o", "n"), ("r", "e"), ("s", "t"), ("e", "n"),
-]
-
-# fixed probe words for the Count-Min gate (mix of frequent, mid, and
-# absent tokens so est==exact and est>exact cells both appear)
-_CM_PROBES = [
-    "table", "scan", "join", "window", "fast", "value", "the", "a",
-    "data", "zzz_absent_token",
-]
-
-# fixed keyword queries for the BM25 gate (terms drawn from the synthetic
-# documents vocabulary)
-_BM25_QUERIES = {
-    1: "fast hash join",
-    2: "window agg stream",
-    3: "customer query scan",
-}
-
-# The driver checks the FIRST 50 registered queries per round.  Round-9
-# budget (registration STILL FROZEN at 309 — zero new queries; zero
-# re-gates needed: the round-8 window converted its 50 head slots green
-# (CORRECTNESS_r08: 50/50) and round 9 makes no value- or plan-affecting
-# edit to any ever-checked query, so ALL 50 round-9 slots are again pure
-# conversions from the 59-query never-driver-checked backlog, in the
-# order committed in round 8: the storage-layer tail, graph/retrieval
-# shapes, join-strategy + layout gates, event analytics,
-# privacy/compliance head.  (The only round-9 code edit inside any
-# window query is triangle_count's localCheckpoint eager=False ->
-# eager=True — a never-driver-checked query, so it consumes a normal
-# conversion slot, not a re-gate.)  The 9 entries below the boundary
-# spill to round 10, where they join the committed re-gate batch —
-# see the ROUND-10 RE-GATE HEAD comment at the boundary.
-
-# ROUND-14 GATE HARDENING: no raw DECIMAL(38,0) column leaves the
-# registry surface.  Rationale (r13 verdict, What's-wrong #1):
-# `sp_counting` — the FIRST query emitting a raw DECIMAL(38,0)
-# column ever driver-checked — came back hash-FAIL with rows and
-# schema green, unreproducible in five local runs on the same head
-# and parquet, with every sigma verified a small exact integer
-# (max 2671).  The one mechanism consistent with all of that is the
-# driver's DECIMAL cell rendering differing between the Spark and
-# DuckDB fetch paths (e.g. Decimal('123') vs 123.0 — invisible to
-# tools/check_oracle.py, whose own norm_cell sees Decimal on both
-# sides).  A registry sweep found 18 decimal-typed output columns
-# across exactly 13 queries: sp_counting (r13-checked, red) and 12
-# never-driver-checked r12/r13 registrations — 10 of them in the
-# committed R14 window, which would have bled red wholesale if the
-# hypothesis holds.  Fix: every such column gets an EXPLICIT final
-# cast in BOTH engines — BIGINT where sf0.01 magnitudes leave >=100x
-# int64 headroom (all verified; max is bartlett's 1.7e14), DOUBLE for
-# durbin_watson's two ~1e19 sums (BIGINT would ANSI-overflow at the
-# sf1 scale probe; the decimal->double cast is gate-safe under the
-# 12-sig-digit float normalization, see the als_item_step precedent).
-# Engine internals keep DECIMAL(38,0)/HUGEINT end to end — the
-# overflow discipline is unchanged; only the registry's final
-# projection casts.  Applied uniformly by the shims at the bottoms of
-# queries() and oracle_sql() so the policy is one auditable block.
-_GATE_DECIMAL_CASTS = {
-    # name: (oracle column order, {decimal column: gate type})
-    "sp_counting": (["id", "dist", "sigma"], {"sigma": "bigint"}),
-    "betweenness_contrib": (
-        ["id", "dist", "delta_units"],
-        {"delta_units": "bigint"},
-    ),
-    "cusum_by_type": (
-        ["event_type", "peak_s", "peak_event_id", "n_above"],
-        {"peak_s": "bigint"},
-    ),
-    "ipw_ate": (
-        ["n_total", "ate_num_units", "ate_cents"],
-        {"ate_num_units": "bigint"},
-    ),
-    "anova_f": (
-        ["k", "n_total", "ssb_units", "ssw_units", "f_stat"],
-        {"ssb_units": "bigint", "ssw_units": "bigint"},
-    ),
-    "kruskal_binned": (
-        ["k", "n_total", "u_units", "sum_t3t", "h", "h_corrected"],
-        {"u_units": "bigint", "sum_t3t": "bigint"},
-    ),
-    "xcorr_lags": (
-        ["lag", "n_overlap", "sxy_units"],
-        {"sxy_units": "bigint"},
-    ),
-    "bartlett_test": (
-        ["k", "n_total", "wln_units", "m_stat", "chi2"],
-        {"wln_units": "bigint"},
-    ),
-    "durbin_watson": (
-        ["event_type", "n", "num_units", "den_units", "dw"],
-        {"num_units": "double", "den_units": "double"},
-    ),
-    "decision_stump": (
-        [
-            "split_bin", "n_left", "pos_left", "n_right", "pos_right",
-            "cost_units",
-        ],
-        {"cost_units": "bigint"},
-    ),
-    "cochran_armitage": (
-        ["n_total", "p_total", "sp_units", "sn_units", "z"],
-        {"sp_units": "bigint", "sn_units": "bigint"},
-    ),
-    "page_hinkley": (
-        [
-            "event_type", "n_obs", "peak_exc_units", "n_alarms",
-            "first_alarm_id",
-        ],
-        {"peak_exc_units": "bigint"},
-    ),
-    "friedman_test": (
-        ["k_treat", "b_blocks", "sum_r2_sq", "chi2_f"],
-        {"sum_r2_sq": "bigint"},
-    ),
-    "pinball_quantile": (
-        ["event_type", "q_bin", "n_below", "loss_units"],
-        {"loss_units": "bigint"},
-    ),
-}
-
-# Queries returning an otherwise-unordered frame that the round-14
-# hardening returns canonically ordered in both engines (r13 verdict
-# fix (i) for the red sp_counting row).
-_GATE_CANONICAL_ORDER = {
-    "sp_counting": ["dist", "id"],
-}
-
-# The gate window: these queries head queries() in this order (the
-# external correctness gate checked the first fifty keys;
-# tests/test_registry.py pins the order).  Earlier windows (rounds 1-13)
-# are in git history.
+# The external correctness gate checks the first fifty keys of
+# queries(), so these head it in this order (tests/test_registry.py pins
+# it); the rest follow in domain-module order.
 _GATE_PRIORITY = [
-    # ROUND-14 AMENDMENT (one named slot, per the r13 verdict's
-    # explicit What's-wrong-#1 order): "sp_counting" — the round's
-    # only red driver row (hash-only mismatch, rows/schema green,
-    # unreproducible in five local runs) — takes the head slot for
-    # its re-gate, now hardened with an explicit BIGINT final cast +
-    # canonical ORDER BY in both engines (see _GATE_DECIMAL_CASTS:
-    # it was the first raw-DECIMAL(38,0) emitter ever driver-checked,
-    # and the decimal-rendering hypothesis also covers the 10 decimal
-    # emitters in this very window, all now cast).  To keep the
-    # window at 50, the last freshness re-gate ("source_divergence")
-    # spills to the round-15 head.
-    "sp_counting",
-    # 21 round-12-session conversions (registered round 12, never
-    # checked; judge-verified independently in the r12 session)
-    "betweenness_contrib", "bpe_apply", "kn_perplexity",
+    "sp_counting", "betweenness_contrib", "bpe_apply", "kn_perplexity",
     "random_walks", "als_user_step", "cusum_by_type", "did_by_type",
-    "ipw_ate", "logrank_test", "assoc_rules", "anova_f",
-    "nelson_aalen", "kruskal_binned", "mcnemar_pairs", "xcorr_lags",
-    "bartlett_test", "durbin_watson", "scene_cuts", "decision_stump",
-    "cochran_armitage", "dup_substring_spans",
-    # 29 r06 freshness re-gates (freshness_queue order)
-    "pack_sequences", "streaming_sessionize", "streaming_enrich",
-    "tfidf_topk", "bm25_topk", "dsir_sample", "countmin_words",
-    "decontaminate", "length_quantiles", "edf_roundtrip",
+    "ipw_ate", "logrank_test", "assoc_rules", "anova_f", "nelson_aalen",
+    "kruskal_binned", "mcnemar_pairs", "xcorr_lags", "bartlett_test",
+    "durbin_watson", "scene_cuts", "decision_stump", "cochran_armitage",
+    "dup_substring_spans", "pack_sequences", "streaming_sessionize",
+    "streaming_enrich", "tfidf_topk", "bm25_topk", "dsir_sample",
+    "countmin_words", "decontaminate", "length_quantiles", "edf_roundtrip",
     "streaming_sosfilt", "pipeline_chain", "annotations_mask",
     "streaming_policies", "streaming_dedup", "decontaminate_ngram",
     "shard_assign", "quality_prune", "token_budget_subset",
-    "random_projection", "unigram_logprob", "semantic_dedup",
-    "pq_encode", "pq_adc_topk", "mixture_sample", "vocab_stats",
-    "dup_span_detect", "bpe_pair_counts",
+    "random_projection", "unigram_logprob", "semantic_dedup", "pq_encode",
+    "pq_adc_topk", "mixture_sample", "vocab_stats", "dup_span_detect",
+    "bpe_pair_counts",
 ]
 
 
@@ -14897,7390 +84,6 @@ def _gate_order(q: dict) -> dict:
     return {**head, **{k: v for k, v in q.items() if k not in head}}
 
 
-# -------------------------------------------------------------- oracles
 def oracle_sql() -> dict[str, str]:
-    from openseize_spark.plans.oracles import dlit
-
-    sig = "WITH " + signal_cte(NCH)
-    _lang_best = f"greatest({llm_text._LANG_SCORES_SQL})"
-
-    # FIR oracles: identical float64 tap literals, same zero-padded 'same'
-    # convolution alignment as operators/fir.apply_fir_sql.
-    def fir_sum_sql(taps) -> str:
-        L = len(taps)
-        c = (L - 1) // 2
-        terms = []
-        for k in range(L):
-            shift = k - c
-            if shift == 0:
-                col = "v"
-            elif shift > 0:
-                col = f"coalesce(lag(v, {shift}) OVER w, 0.0)"
-            else:
-                col = f"coalesce(lead(v, {-shift}) OVER w, 0.0)"
-            terms.append(f"{col} * {dlit(taps[k])}")
-        return " + ".join(terms)
-
-    fir_sum = fir_sum_sql(_FIR_SPEC.taps)
-    remez_sum = fir_sum_sql(_REMEZ_SPEC.taps)
-    hamming_sum = fir_sum_sql(_HAMMING_SPEC.taps)
-
-    # Wilson-Hilferty chi2 quantile (same closed form as
-    # operators/spectral.confidence_interval, z literals embedded)
-    from openseize_spark.operators.spectral import _norm_ppf
-
-    z_lo = _norm_ppf(0.025)
-    z_hi = _norm_ppf(0.975)
-
-    def chi2_sql(z: float) -> str:
-        return f"(40 * pow(1 - 2/(9*40.0) + ({dlit(z)}) * sqrt(2/(9*40.0)), 3))"
-
-    o = {
-        "pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
-                   CAST(sum(l_extendedprice) AS DOUBLE) AS sum_base_price,
-                   CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE) AS sum_disc_price,
-                   avg(l_quantity) AS avg_qty,
-                   avg(l_extendedprice) AS avg_price,
-                   avg(l_discount) AS avg_disc,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "revenue_by_nation": """
-            SELECT n_name,
-                   CAST(sum(l_extendedprice * (1 - l_discount)) AS DOUBLE) AS revenue,
-                   count(*) AS n_items
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation   ON c_nationkey = n_nationkey
-            JOIN region   ON n_regionkey = r_regionkey
-            GROUP BY n_name
-        """,
-        "top_customers_by_orders": """
-            WITH agg AS (
-              SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY o_custkey
-            )
-            SELECT o_custkey, n_orders,
-                   CAST(row_number() OVER (ORDER BY n_orders DESC, o_custkey) AS BIGINT) AS rnk
-            FROM agg
-            QUALIFY rnk <= 10
-        """,
-        "priority_exists": """
-            SELECT o_orderpriority, count(*) AS n_orders
-            FROM orders
-            WHERE EXISTS (
-              SELECT 1 FROM lineitem
-              WHERE l_orderkey = o_orderkey AND l_quantity > 45
-            )
-            GROUP BY o_orderpriority
-        """,
-        "filtered_revenue": """
-            SELECT CAST(sum(l_extendedprice * l_discount) AS DOUBLE) AS revenue
-            FROM lineitem
-            WHERE l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-        """,
-        "running_total": """
-            SELECT o_custkey, o_orderkey,
-                   round(CAST(sum(o_totalprice) OVER (
-                     PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                   ) AS DOUBLE), 4) AS running_total
-            FROM orders
-        """,
-        "rank_parts": """
-            SELECT p_brand, p_partkey, p_retailprice,
-                   CAST(row_number() OVER (
-                     PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey
-                   ) AS BIGINT) AS rnk
-            FROM part
-            QUALIFY rnk <= 3
-        """,
-        "event_deltas": """
-            SELECT event_id, user_id,
-                   value - lag(value) OVER (
-                     PARTITION BY user_id ORDER BY ts, event_id
-                   ) AS delta
-            FROM events
-        """,
-        "sessionize": """
-            WITH flagged AS (
-              SELECT user_id,
-                     CASE WHEN epoch(ts) - lag(epoch(ts)) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                     ) > 1800.0 THEN 1 ELSE 0 END AS new_sess
-              FROM events
-            )
-            SELECT user_id, CAST(sum(new_sess) + 1 AS BIGINT) AS n_sessions
-            FROM flagged GROUP BY user_id
-        """,
-        "tumbling_hour": """
-            SELECT date_trunc('hour', ts) AS hour, event_type,
-                   count(*) AS n,
-                   CAST(sum(value) AS DOUBLE) AS sum_value
-            FROM events
-            GROUP BY 1, 2
-        """,
-        "rollup_revenue": """
-            SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-                   coalesce(l_linestatus, 'ALL') AS l_linestatus,
-                   CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
-                   count(*) AS n
-            FROM lineitem
-            GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        """,
-        "pivot_status": """
-            SELECT l_returnflag,
-                   CAST(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END) AS DOUBLE) AS qty_o,
-                   CAST(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END) AS DOUBLE) AS qty_f
-            FROM lineitem GROUP BY l_returnflag
-        """,
-        "set_ops": """
-            WITH hi AS (SELECT o_custkey FROM orders WHERE o_totalprice > 200000),
-                 urgent AS (SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'),
-                 both_k AS (SELECT DISTINCT o_custkey FROM hi INTERSECT SELECT o_custkey FROM urgent)
-            SELECT o_custkey, 'both' AS kind FROM both_k
-            UNION ALL
-            SELECT o_custkey, 'only_hi' AS kind
-            FROM (SELECT DISTINCT o_custkey FROM hi EXCEPT SELECT o_custkey FROM both_k)
-        """,
-        "distinct_pairs": """
-            SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        """,
-        "detrend_linear": sig
-        + """
-            , m AS (
-              SELECT channel,
-                     avg(CAST(t AS DOUBLE)) AS mt, avg(v) AS mv,
-                     avg(CAST(t AS DOUBLE) * v) AS mtv,
-                     avg(CAST(t AS DOUBLE) * CAST(t AS DOUBLE)) AS mtt
-              FROM signal GROUP BY channel
-            )
-            SELECT s.channel, t,
-                   v - (mv + ((mtv - mt * mv) / (mtt - mt * mt))
-                        * (CAST(t AS DOUBLE) - mt)) AS resid
-            FROM signal s JOIN m ON s.channel = m.channel
-        """,
-        "channel_select": sig
-        + "SELECT channel, t, v FROM signal WHERE channel IN (1, 3)",
-        "time_slice": sig
-        + """
-            SELECT channel, CAST((t - 100) // 7 AS BIGINT) AS t, v
-            FROM signal
-            WHERE t >= 100 AND t < 5000 AND (t - 100) % 7 = 0
-        """,
-        "mask_compact": sig
-        + """
-            SELECT channel,
-                   CAST(row_number() OVER (PARTITION BY recording_id, channel ORDER BY t) - 1
-                        AS BIGINT) AS t,
-                   v
-            FROM signal WHERE v >= 0.25
-        """,
-        "interval_mask": sig
-        + """
-            , ival AS (
-              SELECT DISTINCT CAST((o_orderkey % 512) * 16 AS BIGINT) AS lo,
-                              CAST((o_orderkey % 512) * 16 + 64 AS BIGINT) AS hi
-              FROM orders WHERE o_orderkey % 101 = 0
-            )
-            SELECT channel, t, v FROM signal s
-            WHERE EXISTS (SELECT 1 FROM ival WHERE s.t >= lo AND s.t < hi)
-        """,
-        "signal_stats": sig
-        + """
-            SELECT channel, avg(v) AS mean,
-                   sqrt(avg(v*v) - avg(v)*avg(v)) AS std,
-                   count(v) AS n
-            FROM signal GROUP BY channel
-        """,
-        "standardize": sig
-        + """
-            , st AS (
-              SELECT channel, avg(v) AS m, sqrt(avg(v*v) - avg(v)*avg(v)) AS s
-              FROM signal GROUP BY channel
-            )
-            SELECT signal.channel, t, (v - m) / s AS vstd
-            FROM signal JOIN st ON signal.channel = st.channel
-        """,
-        "signal_add": sig
-        + """
-            , s2 AS (
-              SELECT recording_id, channel, CAST(t - 10 AS BIGINT) AS t, v
-              FROM signal WHERE t >= 10
-            )
-            SELECT s.channel, s.t, s.v + s2.v AS v
-            FROM signal s
-            JOIN s2 ON s.recording_id = s2.recording_id
-                   AND s.channel = s2.channel AND s.t = s2.t
-        """,
-        "scalar_mult": sig + "SELECT channel, t, v * CAST(2.5 AS DOUBLE) AS v FROM signal",
-        "mult_along_channel": sig
-        + """
-            , coeffs AS (
-              SELECT CAST(i AS INT) AS channel, CAST((i + 1) * 0.5 AS DOUBLE) AS c
-              FROM generate_series(0, 3) AS g(i)
-            )
-            SELECT signal.channel, t, v * c AS v
-            FROM signal JOIN coeffs ON signal.channel = coeffs.channel
-        """,
-        "pad": sig
-        + """
-            , mx AS (
-              SELECT recording_id, channel, max(t) AS m FROM signal GROUP BY 1, 2
-            )
-            SELECT channel, CAST(t + 5 AS BIGINT) AS t, v FROM signal
-            UNION ALL
-            SELECT channel, CAST(g.i AS BIGINT) AS t, CAST(0.0 AS DOUBLE) AS v
-            FROM mx CROSS JOIN generate_series(0, 4) AS g(i)
-            UNION ALL
-            SELECT channel, CAST(unnest(generate_series(m + 6, m + 10)) AS BIGINT) AS t,
-                   CAST(0.0 AS DOUBLE) AS v
-            FROM mx
-        """,
-        "segment_mean": sig
-        + """
-            SELECT channel, CAST(t // 128 AS BIGINT) AS seg, avg(v) AS seg_mean
-            FROM signal
-            GROUP BY channel, t // 128
-            HAVING count(*) = 128
-        """,
-        "sliding_energy": sig
-        + """
-            , exploded AS (
-              SELECT channel,
-                     unnest(generate_series(
-                       greatest(CAST(0 AS BIGINT), (greatest(t - 63, 0) + 31) // 32),
-                       t // 32
-                     )) AS seg,
-                     v
-              FROM signal
-            )
-            SELECT channel, CAST(seg AS BIGINT) AS seg, sum(v*v) AS energy
-            FROM exploded
-            GROUP BY channel, seg
-            HAVING count(*) = 64
-        """,
-        "moving_average": sig
-        + """
-            SELECT channel, t,
-                   (coalesce(lag(v, 2) OVER w, 0.0)
-                    + 2 * coalesce(lag(v, 1) OVER w, 0.0)
-                    + 3 * v
-                    + 2 * coalesce(lead(v, 1) OVER w, 0.0)
-                    + coalesce(lead(v, 2) OVER w, 0.0)) / 9.0 AS ma
-            FROM signal
-            WINDOW w AS (PARTITION BY recording_id, channel ORDER BY t)
-        """,
-        "fir_kaiser": sig
-        + f"""
-            SELECT channel, t, round({fir_sum}, 9) AS v
-            FROM signal
-            WINDOW w AS (PARTITION BY recording_id, channel ORDER BY t)
-        """,
-        "fir_remez": sig
-        + f"""
-            SELECT channel, t, round({remez_sum}, 9) AS v
-            FROM signal
-            WINDOW w AS (PARTITION BY recording_id, channel ORDER BY t)
-        """,
-        "fir_hamming": sig
-        + f"""
-            SELECT channel, t, round({hamming_sum}, 9) AS v
-            FROM signal
-            WINDOW w AS (PARTITION BY recording_id, channel ORDER BY t)
-        """,
-        "extend_even": sig
-        + """
-            , mx AS (SELECT recording_id, channel, max(t) AS m FROM signal GROUP BY 1, 2)
-            SELECT channel, CAST(t + 4 AS BIGINT) AS t, v FROM signal
-            UNION ALL
-            SELECT channel, CAST(4 - t AS BIGINT) AS t, v
-            FROM signal WHERE t >= 1 AND t <= 4
-            UNION ALL
-            SELECT s.channel, CAST(2 * m - t + 4 AS BIGINT) AS t, v
-            FROM signal s JOIN mx ON s.recording_id = mx.recording_id AND s.channel = mx.channel
-            WHERE t >= m - 4 AND t <= m - 1
-        """,
-        "mult_along_time": sig
-        + """
-            , coeffs AS (
-              SELECT CAST(i AS BIGINT) AS ct, CAST(i % 8 AS DOUBLE) / 8.0 AS c
-              FROM unnest(generate_series(0, 1999)) AS u(i)
-            )
-            SELECT channel, t, v * c AS v
-            FROM signal JOIN coeffs ON signal.t = coeffs.ct
-        """,
-        "extend_odd": sig
-        + """
-            , mx AS (SELECT recording_id, channel, max(t) AS m FROM signal GROUP BY 1, 2),
-            v0 AS (SELECT recording_id, channel, v AS v_first FROM signal WHERE t = 0),
-            vn AS (
-              SELECT s.recording_id, s.channel, s.v AS v_last
-              FROM signal s JOIN mx ON s.recording_id = mx.recording_id AND s.channel = mx.channel
-              WHERE t = m
-            )
-            SELECT channel, CAST(t + 4 AS BIGINT) AS t, v FROM signal
-            UNION ALL
-            SELECT s.channel, CAST(4 - t AS BIGINT) AS t, 2 * v_first - s.v AS v
-            FROM signal s JOIN v0 ON s.recording_id = v0.recording_id AND s.channel = v0.channel
-            WHERE t >= 1 AND t <= 4
-            UNION ALL
-            SELECT s.channel, CAST(2 * m - t + 4 AS BIGINT) AS t, 2 * v_last - s.v AS v
-            FROM signal s
-            JOIN mx ON s.recording_id = mx.recording_id AND s.channel = mx.channel
-            JOIN vn ON s.recording_id = vn.recording_id AND s.channel = vn.channel
-            WHERE t >= m - 4 AND t <= m - 1
-        """,
-        "extend_edge": sig
-        + """
-            , mx AS (SELECT recording_id, channel, max(t) AS m FROM signal GROUP BY 1, 2)
-            SELECT channel, CAST(t + 4 AS BIGINT) AS t, v FROM signal
-            UNION ALL
-            SELECT channel, CAST(g.i AS BIGINT) AS t, v
-            FROM signal CROSS JOIN generate_series(0, 3) AS g(i) WHERE t = 0
-            UNION ALL
-            SELECT s.channel, CAST(unnest(generate_series(m + 5, m + 8)) AS BIGINT) AS t, v
-            FROM signal s JOIN mx ON s.recording_id = mx.recording_id AND s.channel = mx.channel
-            WHERE t = m
-        """,
-        "squeeze_expand": sig
-        + """
-            SELECT 0 AS epoch, channel, t, v FROM signal
-        """,
-        "expand_upsample": sig
-        + """
-            SELECT channel, CAST(t * 3 AS BIGINT) AS t, v FROM signal
-            UNION ALL
-            SELECT channel, CAST(t * 3 + g.i AS BIGINT) AS t, CAST(0.0 AS DOUBLE) AS v
-            FROM signal CROSS JOIN generate_series(1, 2) AS g(i)
-        """,
-        "event_window_avg": sig
-        + """
-            , events AS (
-              SELECT ch AS channel, CAST(1000 + 1111 * j AS BIGINT) AS event_t
-              FROM generate_series(0, 3) AS c(ch)
-              CROSS JOIN generate_series(0, 7) AS g(j)
-            ), gathered AS (
-              SELECT s.channel, e.event_t,
-                     CAST(s.t - (e.event_t - 32) AS BIGINT) AS offset, s.v
-              FROM signal s
-              JOIN events e ON s.channel = e.channel
-                AND s.t >= e.event_t - 32 AND s.t < e.event_t + 32
-            ), complete AS (
-              SELECT channel, event_t FROM gathered
-              GROUP BY channel, event_t HAVING count(*) = 64
-            )
-            SELECT g.channel, g.offset,
-                   avg(g.v * g.v) AS mean_sq_amp,
-                   count(*) AS n_events
-            FROM gathered g
-            JOIN complete c ON g.channel = c.channel AND g.event_t = c.event_t
-            GROUP BY g.channel, g.offset
-        """,
-        "decimate": sig
-        + """
-            SELECT channel, CAST(t // 4 AS BIGINT) AS t, v
-            FROM signal WHERE t % 4 = 0
-        """,
-        "nearest_bin": sig
-        + """
-            , bins AS (
-              SELECT CAST(t * 0.5 AS DOUBLE) AS freq FROM signal WHERE channel = 0 AND t <= 100
-            ), targets AS (
-              SELECT CAST(unnest([10.3, 25.7, 40.2]) AS DOUBLE) AS target
-            )
-            SELECT target, arg_min(freq, abs(freq - target)) AS nearest
-            FROM bins CROSS JOIN targets
-            GROUP BY target
-        """,
-        "band_power": sig
-        + """
-            , psd AS (
-              SELECT channel, CAST(t * 0.5 AS DOUBLE) AS freq, v AS psd
-              FROM signal WHERE t <= 200
-            ), band AS (
-              SELECT channel, freq, psd,
-                     CAST(round((freq - 5.0) / 0.5) AS BIGINT) AS k
-              FROM psd WHERE freq >= 5.0 AND freq <= 20.0
-            )
-            SELECT channel,
-                   sum(psd * (CASE
-                     WHEN k = 0 OR k = 30 THEN CAST(0.5 AS DOUBLE) / 3.0
-                     WHEN k % 2 = 1 THEN 4 * CAST(0.5 AS DOUBLE) / 3.0
-                     ELSE 2 * CAST(0.5 AS DOUBLE) / 3.0 END)) AS power
-            FROM band GROUP BY channel
-        """,
-        "power_norm": sig
-        + """
-            , psd AS (
-              SELECT channel, CAST(t * 0.5 AS DOUBLE) AS freq, v AS psd
-              FROM signal WHERE t <= 200
-            ), tot AS (
-              SELECT channel, sum(psd) AS s FROM psd GROUP BY channel
-            )
-            SELECT psd.channel, freq, psd / s AS psd_norm
-            FROM psd JOIN tot ON psd.channel = tot.channel
-        """,
-        "envelope": sig
-        + """
-            SELECT channel, t,
-                   sqrt(v * v +
-                        (CAST((t * 37 + channel * 11) % 1024 AS DOUBLE) / 1024.0)
-                        * (CAST((t * 37 + channel * 11) % 1024 AS DOUBLE) / 1024.0)
-                   ) AS amplitude
-            FROM signal
-        """,
-        "synth_signal": """
-            SELECT CAST(c.i AS INT) AS channel,
-                   CAST(t.i AS BIGINT) AS t,
-                   CAST((t.i * 2654435761 + c.i * 40503) % 1024 AS DOUBLE) / 1024.0 AS v
-            FROM generate_series(0, 4999) AS t(i)
-            CROSS JOIN generate_series(0, 2) AS c(i)
-        """,
-        "psd_ci": sig
-        + f"""
-            SELECT channel, CAST(t * 0.5 AS DOUBLE) AS freq, v AS psd,
-                   round(40 * v / {chi2_sql(z_hi)}, 9) AS ci_lower,
-                   round(40 * v / {chi2_sql(z_lo)}, 9) AS ci_upper
-            FROM signal WHERE t <= 200
-        """,
-        "dedup_exact": f"""
-            WITH fp AS (
-              SELECT doc_id,
-                     md5({dedup.normalize_text_sql()}) AS f
-              FROM documents
-            )
-            SELECT min(doc_id) AS doc_id, count(*) AS dup_count
-            FROM fp GROUP BY f
-        """,
-        "text_stats": f"""
-            WITH norm AS (
-              SELECT doc_id, text,
-                     {dedup.normalize_text_sql()} AS nt
-              FROM documents
-            )
-            SELECT doc_id,
-                   CAST(length(text) AS BIGINT) AS n_chars,
-                   CAST({llm_text._count_tokens_sql("nt")} AS BIGINT) AS n_tokens,
-                   CAST(length(replace(nt, ' ', '')) AS DOUBLE) /
-                     greatest({llm_text._count_tokens_sql("nt")}, 1)
-                     AS avg_token_len
-            FROM norm
-        """,
-        "stopword_score_by_lang": f"""
-            WITH norm AS (
-              SELECT lang,
-                     ' ' || {dedup.normalize_text_sql()} || ' ' AS nt
-              FROM documents
-            )
-            SELECT lang,
-                   avg({llm_text._marker_hits_sql("nt", _EN_MARKERS)}) AS avg_en_hits,
-                   count(*) AS n_docs
-            FROM norm GROUP BY lang
-        """,
-        "fingerprint": f"""
-            SELECT doc_id,
-                   md5({dedup.normalize_text_sql()}) AS fingerprint
-            FROM documents
-        """,
-        "token_count_by_source": f"""
-            SELECT source,
-                   CAST(sum({llm_text.token_count_sql()}) AS BIGINT) AS total_tokens,
-                   count(*) AS n_docs
-            FROM documents GROUP BY source
-        """,
-        "repetition_stats": fr"""
-            WITH norm AS (
-              SELECT doc_id, {dedup.normalize_text_sql()} AS nt
-              FROM documents
-            ), words AS (
-              SELECT doc_id,
-                     CASE WHEN length(nt) = 0 THEN CAST([] AS VARCHAR[])
-                          ELSE string_split(nt, ' ') END AS ws
-              FROM norm
-            ), rep AS (
-              SELECT doc_id, ws,
-                     CASE WHEN len(ws) >= 3 THEN
-                       list_transform(generate_series(1, len(ws) - 2),
-                                      i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-                     ELSE CAST([] AS VARCHAR[]) END AS ngs
-              FROM words
-            )
-            SELECT doc_id,
-                   CAST(len(ws) AS BIGINT) AS n_words,
-                   CAST(greatest(len(ws) - 2, 0) AS BIGINT) AS n_ngrams,
-                   CASE WHEN len(ws) > 0
-                        THEN 1.0 - CAST(len(list_distinct(ws)) AS DOUBLE) / len(ws)
-                        ELSE 0.0 END AS dup_word_frac,
-                   CASE WHEN len(ngs) > 0
-                        THEN 1.0 - CAST(len(list_distinct(ngs)) AS DOUBLE) / len(ngs)
-                        ELSE 0.0 END AS dup_ngram_frac
-            FROM rep
-        """,
-        "pii_scan": r"""
-            WITH aug AS (
-              SELECT doc_id,
-                     text
-                     || CASE WHEN doc_id % 5 = 0
-                          THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-                          ELSE '' END
-                     || CASE WHEN doc_id % 7 = 0
-                          THEN ' see https://data.example.org/doc/' || CAST(doc_id AS VARCHAR)
-                          ELSE '' END
-                     || CASE WHEN doc_id % 11 = 0
-                          THEN ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.17'
-                          ELSE '' END
-                     || CASE WHEN doc_id % 13 = 0 THEN ' call +1-555-0142' ELSE '' END
-                       AS t
-              FROM documents
-            )
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-                   CAST(len(regexp_extract_all(t, 'https?://[A-Za-z0-9./_%-]+')) AS BIGINT) AS n_urls,
-                   CAST(len(regexp_extract_all(t, '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}')) AS BIGINT) AS n_ips,
-                   CAST(len(regexp_extract_all(t, '\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phones,
-                   CAST(length(
-                     regexp_replace(
-                       regexp_replace(
-                         regexp_replace(
-                           regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-                           'https?://[A-Za-z0-9./_%-]+', '<URL>', 'g'),
-                         '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g'),
-                       '\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g')
-                   ) AS BIGINT) AS redacted_len
-            FROM aug
-        """,
-        "ivf_topk": """
-            WITH cent AS (
-              SELECT CAST(vec_id - 3 AS INT) AS cell_id,
-                     CAST(embedding AS DOUBLE[]) AS cv
-              FROM embeddings WHERE vec_id >= 3 AND vec_id < 11
-            ), corpus AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-              FROM embeddings WHERE vec_id >= 3
-            ), assigned AS (
-              SELECT vec_id, cell_id, v FROM (
-                SELECT c.vec_id, ct.cell_id, c.v,
-                       row_number() OVER (
-                         PARTITION BY c.vec_id
-                         ORDER BY list_dot_product(c.v, c.v)
-                                  - 2 * list_dot_product(c.v, ct.cv)
-                                  + list_dot_product(ct.cv, ct.cv),
-                                  ct.cell_id
-                       ) AS rk
-                FROM corpus c CROSS JOIN cent ct
-              ) WHERE rk = 1
-            ), q AS (
-              SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-              FROM embeddings WHERE vec_id < 3
-            ), probes AS (
-              SELECT q_id, cell_id, qv FROM (
-                SELECT q.q_id, ct.cell_id, q.qv,
-                       row_number() OVER (
-                         PARTITION BY q.q_id
-                         ORDER BY list_dot_product(q.qv, q.qv)
-                                  - 2 * list_dot_product(q.qv, ct.cv)
-                                  + list_dot_product(ct.cv, ct.cv),
-                                  ct.cell_id
-                       ) AS rk
-                FROM q CROSS JOIN cent ct
-              ) WHERE rk <= 2
-            ), s AS (
-              SELECT p.q_id, a.vec_id,
-                     list_cosine_similarity(a.v, p.qv) AS cosine
-              FROM assigned a JOIN probes p ON a.cell_id = p.cell_id
-            )
-            SELECT q_id, vec_id, cosine,
-                   CAST(row_number() OVER (
-                     PARTITION BY q_id ORDER BY cosine DESC, vec_id
-                   ) AS BIGINT) AS rank
-            FROM s
-            QUALIFY rank <= 5
-        """,
-        "lev_verify": f"""
-            WITH d AS (
-              SELECT doc_id, lang, source,
-                     substr(
-                       regexp_replace(
-                         {dedup.normalize_text_sql()},
-                         '[^\\x20-\\x7e]', '', 'g'),
-                       1, 500) AS t
-              FROM documents WHERE doc_id < 120 AND text IS NOT NULL
-            )
-            SELECT a.doc_id AS a, b.doc_id AS b,
-                   CAST(levenshtein(a.t, b.t) AS BIGINT) AS lev,
-                   round(1 - CAST(levenshtein(a.t, b.t) AS DOUBLE)
-                           / greatest(len(a.t), len(b.t), 1), 9) AS sim
-            FROM d a JOIN d b
-              ON a.lang = b.lang AND a.source = b.source
-             AND a.doc_id < b.doc_id
-            WHERE round(1 - CAST(levenshtein(a.t, b.t) AS DOUBLE)
-                    / greatest(len(a.t), len(b.t), 1), 9)
-                  >= CAST(0.3 AS DOUBLE)
-        """,
-        "ngram_jaccard": f"""
-            WITH norm AS (
-              SELECT doc_id, lang,
-                     {dedup.normalize_text_sql()} AS nt
-              FROM documents WHERE doc_id < 80
-            ), sh AS (
-              SELECT DISTINCT doc_id, substring(nt, i, 5) AS s
-              FROM norm, unnest(generate_series(1, greatest(length(nt) - 4, 1))) AS u(i)
-            ), sz AS (
-              SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id
-            ), pairs AS (
-              SELECT x.doc_id AS a, y.doc_id AS b
-              FROM norm x JOIN norm y ON x.lang = y.lang AND x.doc_id < y.doc_id
-            ), inter AS (
-              SELECT p.a, p.b, count(*) AS i
-              FROM pairs p
-              JOIN sh sa ON sa.doc_id = p.a
-              JOIN sh sb ON sb.doc_id = p.b AND sa.s = sb.s
-              GROUP BY p.a, p.b
-            )
-            SELECT i.a, i.b, CAST(i AS DOUBLE) / (za.n + zb.n - i) AS jaccard
-            FROM inter i
-            JOIN sz za ON za.doc_id = i.a
-            JOIN sz zb ON zb.doc_id = i.b
-            WHERE CAST(i AS DOUBLE) / (za.n + zb.n - i) >= 0.25
-        """,
-        "embedding_dedup": """
-            WITH base AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, label FROM embeddings
-            ), dup AS (
-              SELECT vec_id + 10000 AS vec_id,
-                     list_concat([v[1] + CAST(0.05 AS DOUBLE)], v[2:64]) AS v, label
-              FROM base WHERE vec_id < 50
-            ), allv AS (
-              SELECT * FROM base UNION ALL SELECT * FROM dup
-            )
-            SELECT x.vec_id AS a, y.vec_id AS b,
-                   list_dot_product(x.v, y.v)
-                   / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v)))
-                   AS cosine
-            FROM allv x JOIN allv y ON x.label = y.label AND x.vec_id < y.vec_id
-            WHERE list_dot_product(x.v, y.v)
-                  / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v)))
-                  >= 0.99
-        """,
-        "path_pairing": """
-            WITH a AS (
-              SELECT 'data/' || source || '/rec_' || doc_id || '.edf' AS path_a,
-                     regexp_extract('rec_' || doc_id || '.', 'rec_([0-9]+)[_.]', 1) AS key
-              FROM documents
-            ), b AS (
-              SELECT 'ann/rec_' || doc_id || '_annotations.txt' AS path_b,
-                     regexp_extract('rec_' || doc_id || '_', 'rec_([0-9]+)[_.]', 1) AS key
-              FROM documents WHERE doc_id % 3 <> 0
-            )
-            SELECT a.key AS key, path_a, path_b FROM a JOIN b ON a.key = b.key
-        """,
-        "path_mismatched": """
-            WITH a AS (
-              SELECT 'data/' || source || '/rec_' || doc_id || '.edf' AS path_a,
-                     regexp_extract('rec_' || doc_id || '.', 'rec_([0-9]+)[_.]', 1) AS key
-              FROM documents
-            ), b AS (
-              SELECT 'ann/rec_' || doc_id || '_annotations.txt' AS path_b,
-                     regexp_extract('rec_' || doc_id || '_', 'rec_([0-9]+)[_.]', 1) AS key
-              FROM documents WHERE doc_id % 3 <> 0
-            )
-            SELECT coalesce(a.key, b.key) AS key, path_a, path_b
-            FROM a FULL OUTER JOIN b ON a.key = b.key
-            WHERE path_a IS NULL OR path_b IS NULL
-        """,
-        "quality_score": f"""
-            WITH norm AS (
-              SELECT doc_id, text,
-                     {dedup.normalize_text_sql()} AS nt
-              FROM documents
-            ), feats AS (
-              SELECT doc_id,
-                     CAST(length(text) AS DOUBLE) AS n_chars,
-                     CAST({llm_text._count_tokens_sql("nt")} AS DOUBLE) AS n_tokens,
-                     ( (length(text) - length(replace(text, '.', ''))) * 1.0
-                     + (length(text) - length(replace(text, ',', '')))
-                     + (length(text) - length(replace(text, '!', '')))
-                     + (length(text) - length(replace(text, '?', '')))
-                     + (length(text) - length(replace(text, ';', '')))
-                     + (length(text) - length(replace(text, ':', ''))) ) AS punct,
-                     {llm_text._marker_hits_sql("nt", llm_text._STOP_MARKERS)}
-                       AS stop_hits
-              FROM norm
-            )
-            SELECT doc_id,
-                   ( least(n_chars / 500.0, 1.0) * 0.5
-                   + least(stop_hits / greatest(n_tokens, 1) * 4.0, 1.0) * 0.5 )
-                   * (CASE WHEN punct / greatest(n_chars, 1) > 0.1
-                      THEN 0.5 ELSE 1.0 END) AS quality
-            FROM feats
-        """,
-        "language_id": f"""
-            WITH {llm_text._lang_scored_sql()}
-            SELECT doc_id, {llm_text._lang_pred_sql(_lang_best)} AS lang_pred,
-                   {_lang_best} AS score
-            FROM scored
-        """,
-        "knn_cosine": """
-            WITH q AS (
-              SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-              FROM embeddings WHERE vec_id < 3
-            ), c AS (
-              SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv
-              FROM embeddings WHERE vec_id >= 3
-            ), s AS (
-              SELECT q_id, vec_id,
-                     list_cosine_similarity(cv, qv) AS cosine
-              FROM c CROSS JOIN q
-            )
-            SELECT q_id, vec_id, cosine,
-                   CAST(row_number() OVER (
-                     PARTITION BY q_id ORDER BY cosine DESC, vec_id
-                   ) AS BIGINT) AS rank
-            FROM s
-            QUALIFY rank <= 5
-        """,
-        "embedding_norms": """
-            SELECT label,
-                   avg(sqrt(list_sum(list_transform(
-                     CAST(embedding AS DOUBLE[]), x -> x * x)))) AS avg_norm,
-                   count(*) AS n_vecs
-            FROM embeddings GROUP BY label
-        """,
-    }
-    o["supplier_topbal"] = """
-        SELECT n_name,
-               s_name AS top_supplier,
-               s_acctbal AS top_bal,
-               avg(s_acctbal) OVER (PARTITION BY n_name) AS avg_bal,
-               count(*) OVER (PARTITION BY n_name) AS n_suppliers
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        QUALIFY row_number() OVER (
-          PARTITION BY n_name ORDER BY s_acctbal DESC, s_suppkey) = 1
-    """
-
-    o["big_orders"] = """
-        SELECT c_name, o_orderkey, o_orderdate, o_totalprice, sum_qty
-        FROM orders
-        JOIN (
-          SELECT l_orderkey, sum(l_quantity) AS sum_qty
-          FROM lineitem GROUP BY l_orderkey
-          HAVING sum(l_quantity) > 150
-        ) big ON o_orderkey = big.l_orderkey
-        JOIN customer ON o_custkey = c_custkey
-    """
-
-    o["promo_revenue"] = """
-        WITH j AS (
-          SELECT p_type,
-                 CAST(round(l_extendedprice * (1 - l_discount) * 10000)
-                      AS BIGINT) AS ru
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-          WHERE l_shipdate >= TIMESTAMP '1995-09-01 00:00:00'
-            AND l_shipdate <  TIMESTAMP '1996-03-01 00:00:00'
-        )
-        SELECT round(
-                 100.0 * CAST(sum(CASE WHEN p_type = 'STANDARD'
-                                  THEN ru ELSE 0 END) AS DOUBLE)
-                       / CAST(sum(ru) AS DOUBLE),
-                 9) AS promo_share,
-               count(*) AS n_items
-        FROM j
-    """
-
-    o["brand_suppliers"] = """
-        SELECT p_brand,
-               CAST(count(DISTINCT l_suppkey) AS BIGINT) AS supplier_cnt,
-               CAST(count(*) AS BIGINT) AS n_items
-        FROM lineitem
-        JOIN part ON l_partkey = p_partkey
-        WHERE l_suppkey NOT IN (
-          SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
-        )
-        GROUP BY p_brand
-    """
-
-    o["priority_late_orders"] = """
-        SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        FROM orders
-        WHERE EXISTS (
-          SELECT 1 FROM lineitem
-          WHERE l_orderkey = o_orderkey
-            AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        )
-        GROUP BY o_orderpriority
-    """
-
-    o["sole_late_supplier"] = """
-        WITH per_order AS (
-          SELECT l_orderkey,
-                 count(DISTINCT l_suppkey) AS n_supp,
-                 count(DISTINCT CASE
-                   WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
-                   THEN l_suppkey END) AS n_late_supp,
-                 max(CASE
-                   WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
-                   THEN l_suppkey END) AS sole_supp
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          GROUP BY l_orderkey
-        )
-        SELECT s_name, CAST(count(*) AS BIGINT) AS numwait
-        FROM per_order JOIN supplier ON sole_supp = s_suppkey
-        WHERE n_supp > 1 AND n_late_supp = 1
-        GROUP BY s_name
-    """
-
-    o["important_parts"] = """
-        WITH per_part AS (
-          SELECT l_partkey,
-                 CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                      AS BIGINT) AS value_cents
-          FROM lineitem GROUP BY l_partkey
-        ), total AS (
-          SELECT CAST(sum(value_cents) AS BIGINT) AS total_cents
-          FROM per_part
-        )
-        SELECT l_partkey, value_cents
-        FROM per_part CROSS JOIN total
-        WHERE value_cents * 2000 > total_cents
-    """
-
-    o["top_revenue_supplier"] = """
-        WITH rev AS (
-          SELECT l_suppkey,
-                 CAST(sum(CAST(round(
-                   l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
-                   AS BIGINT) AS rev_units
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-            AND l_shipdate <  TIMESTAMP '1996-04-01 00:00:00'
-          GROUP BY l_suppkey
-        )
-        SELECT s_suppkey, s_name, rev_units / 10000.0 AS total_revenue
-        FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        WHERE rev_units = (SELECT max(rev_units) FROM rev)
-    """
-
-    o["cohort_retention"] = """
-        WITH first AS (
-          SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-          FROM events GROUP BY user_id
-        ), act AS (
-          SELECT DISTINCT user_id, CAST(ts AS DATE) AS day FROM events
-        )
-        SELECT cohort_day,
-               CAST(day - cohort_day AS BIGINT) AS day_offset,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        FROM act JOIN first USING (user_id)
-        GROUP BY cohort_day, day_offset
-    """
-
-    o["funnel_steps"] = """
-        WITH v AS (
-          SELECT user_id, min(ts) AS v_ts FROM events
-          WHERE event_type = 'view' GROUP BY user_id
-        ), c AS (
-          SELECT e.user_id, min(e.ts) AS c_ts
-          FROM events e JOIN v ON e.user_id = v.user_id
-          WHERE e.event_type = 'click' AND e.ts > v.v_ts
-          GROUP BY e.user_id
-        ), p AS (
-          SELECT e.user_id, min(e.ts) AS p_ts
-          FROM events e JOIN c ON e.user_id = c.user_id
-          WHERE e.event_type = 'purchase' AND e.ts > c.c_ts
-          GROUP BY e.user_id
-        )
-        SELECT (SELECT CAST(count(*) AS BIGINT) FROM v) AS n_viewed,
-               (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_clicked,
-               (SELECT CAST(count(*) AS BIGINT) FROM p) AS n_purchased
-    """
-
-    o["bm25_topk"] = llm_text.bm25_topk_oracle_sql(queries=_BM25_QUERIES, k=10)
-    o["rrf_fusion"] = llm_text.rrf_fusion_oracle_sql(queries=_BM25_QUERIES, k=10)
-
-    o["storage_audit"] = """
-        SELECT source, lang,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(strlen(text)) AS BIGINT) AS total_bytes,
-               CAST(max(strlen(text)) AS BIGINT) AS max_bytes,
-               round(CAST(sum(strlen(text)) AS DOUBLE)
-                     / CAST(count(*) AS DOUBLE), 6) AS avg_bytes
-        FROM documents WHERE text IS NOT NULL
-        GROUP BY source, lang
-    """
-
-    o["value_trend"] = """
-        WITH t0 AS (
-          SELECT min(CAST(epoch(ts) AS DOUBLE)) AS t0 FROM events
-        ), m AS (
-          SELECT event_type, count(*) AS n,
-                 sum(CAST(epoch(ts) AS DOUBLE) - t0.t0) AS sx,
-                 sum(value) AS sy,
-                 sum((CAST(epoch(ts) AS DOUBLE) - t0.t0) * value) AS sxy,
-                 sum((CAST(epoch(ts) AS DOUBLE) - t0.t0)
-                     * (CAST(epoch(ts) AS DOUBLE) - t0.t0)) AS sxx
-          FROM events CROSS JOIN t0
-          GROUP BY event_type
-        )
-        SELECT event_type, n,
-               round((n * sxy - sx * sy) / (n * sxx - sx * sx), 9) AS slope,
-               round((sy - (n * sxy - sx * sy) / (n * sxx - sx * sx) * sx) / n,
-                     6) AS intercept
-        FROM m
-    """
-
-    o["skew_distinct_users"] = """
-        SELECT event_type,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS distinct_users,
-               CAST(count(*) AS BIGINT) AS n_events,
-               round(sum(value), 6) AS sum_value
-        FROM events
-        WHERE user_id IS NOT NULL
-        GROUP BY event_type
-    """
-
-    o["daily_gapfill"] = """
-        WITH daily AS (
-          SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS n
-          FROM events GROUP BY 1, 2
-        ), span AS (
-          SELECT min(CAST(ts AS DATE)) AS lo, max(CAST(ts AS DATE)) AS hi
-          FROM events
-        ), spine AS (
-          SELECT CAST(u.d AS DATE) AS day
-          FROM span, unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS u(d)
-        ), types AS (SELECT DISTINCT event_type FROM events)
-        SELECT t.event_type, s.day,
-               CAST(coalesce(daily.n, 0) AS BIGINT) AS n
-        FROM spine s CROSS JOIN types t
-        LEFT JOIN daily
-          ON daily.event_type = t.event_type AND daily.day = s.day
-    """
-
-    o["bucketed_revenue"] = """
-        SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
-               o_orderpriority,
-               CAST(sum(CAST(round(
-                 l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
-                 AS BIGINT) / 10000.0 AS revenue,
-               CAST(count(*) AS BIGINT) AS n_items
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        GROUP BY month, o_orderpriority
-    """
-
-    o["streaming_cusum"] = """
-        WITH RECURSIVE ev AS (
-          SELECT user_id, event_id,
-                 CAST(round(value * 100) AS BIGINT) AS v,
-                 row_number() OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS rn
-          FROM events
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-            AND ts IS NOT NULL
-        ), r AS (
-          SELECT user_id, event_id, rn,
-                 greatest(CAST(0 AS BIGINT), v - 12000) AS s,
-                 greatest(CAST(0 AS BIGINT), v - 12000) > 100000 AS alarm
-          FROM ev WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn,
-                 greatest(CAST(0 AS BIGINT),
-                          (CASE WHEN r.alarm THEN 0 ELSE r.s END)
-                          + e.v - 12000) AS s,
-                 greatest(CAST(0 AS BIGINT),
-                          (CASE WHEN r.alarm THEN 0 ELSE r.s END)
-                          + e.v - 12000) > 100000 AS alarm
-          FROM r JOIN ev e ON e.user_id = r.user_id AND e.rn = r.rn + 1
-        )
-        SELECT user_id, event_id, CAST(s AS BIGINT) AS s, alarm FROM r
-    """
-
-    from openseize_spark.llm.sketch import _hll_alpha as _ha
-
-    _shll_h = sampling.salted_hash_sql("user_id", "hll")
-    _shll_alpha_lit = repr(_ha(32) * 32 * 32 * float(1 << 32))
-    o["streaming_hll"] = f"""
-        WITH e AS (
-          SELECT event_type, user_id, epoch_us(ts) AS us
-          FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL
-            AND event_type IS NOT NULL
-        ), bounds AS (
-          SELECT min(us) AS lo, (max(us) - min(us)) // 3 AS span FROM e
-        ), tagged AS (
-          SELECT e.event_type, e.user_id,
-                 CASE WHEN us < lo + span THEN 0
-                      WHEN us < lo + 2 * span THEN 1
-                      ELSE 2 END AS gb
-          FROM e CROSS JOIN bounds
-        ), present AS (
-          SELECT event_type, gb,
-                 CAST(row_number() OVER (
-                   PARTITION BY event_type ORDER BY gb
-                 ) - 1 AS BIGINT) AS batch_idx
-          FROM (SELECT DISTINCT event_type, gb FROM tagged)
-        ), hx AS (
-          SELECT event_type, gb,
-                 {_shll_h} // {1 << 27} AS bucket,
-                 {_shll_h} % {1 << 27} AS rest
-          FROM tagged
-        ), regs AS (
-          SELECT p.event_type, p.batch_idx, hx.bucket,
-                 CAST(max(CASE WHEN rest = 0 THEN 28
-                               ELSE 28 - length(bin(rest)) END)
-                      AS BIGINT) AS m_j
-          FROM present p
-          JOIN hx ON hx.event_type = p.event_type AND hx.gb <= p.gb
-          GROUP BY p.event_type, p.batch_idx, hx.bucket
-        ), agg AS (
-          SELECT event_type, batch_idx,
-                 CAST(count(*) AS BIGINT) AS npresent,
-                 CAST(sum(CAST(pow(2.0, 32 - m_j) AS BIGINT)) AS BIGINT)
-                   AS sp
-          FROM regs GROUP BY event_type, batch_idx
-        ), one AS (
-          SELECT event_type, batch_idx, npresent,
-                 CAST(32 - npresent AS BIGINT) AS n_empty,
-                 CAST(sp + (32 - npresent) * (1::BIGINT << 32) AS BIGINT)
-                   AS sum_units
-          FROM agg
-        )
-        SELECT event_type, batch_idx, npresent, n_empty, sum_units,
-               round(CASE WHEN n_empty > 0
-                          AND {_shll_alpha_lit} / sum_units <= 80.0
-                     THEN 32.0 * ln(32.0 / n_empty)
-                     ELSE {_shll_alpha_lit} / sum_units
-                     END, 6) AS est_distinct
-        FROM one"""
-
-    o["partition_pruning"] = """
-        SELECT CAST(ts AS DATE) AS day, event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               round(sum(value), 6) AS sum_value
-        FROM events
-        WHERE CAST(ts AS DATE) >= DATE '2024-01-08'
-          AND CAST(ts AS DATE) <= DATE '2024-01-14'
-        GROUP BY day, event_type
-    """
-
-    o["nested_roundtrip"] = """
-        SELECT l_orderkey,
-               CAST(count(*) AS BIGINT) AS n_items,
-               CAST(sum(l_quantity) AS DOUBLE) AS sum_qty,
-               min(l_returnflag) AS min_flag,
-               CAST(max(l_linenumber) AS BIGINT) AS max_line
-        FROM lineitem
-        GROUP BY l_orderkey
-    """
-
-    o["schema_evolution"] = """
-        SELECT doc_id, lang, source,
-               CASE WHEN doc_id % 2 = 1 THEN n_chars END AS n_chars
-        FROM documents
-    """
-
-    o["dq_audit"] = """
-        SELECT 'orders.custkey_not_null' AS check,
-               CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS violations
-        FROM orders
-        UNION ALL
-        SELECT 'orders.orderkey_unique',
-               CAST(coalesce(sum(CASE WHEN n > 1 THEN n - 1 ELSE 0 END), 0)
-                    AS BIGINT)
-        FROM (SELECT o_orderkey, count(*) AS n FROM orders GROUP BY 1)
-        UNION ALL
-        SELECT 'orders.custkey_fk_customer',
-               CAST(count(*) AS BIGINT)
-        FROM orders WHERE o_custkey IS NOT NULL AND o_custkey NOT IN
-          (SELECT c_custkey FROM customer WHERE c_custkey IS NOT NULL)
-        UNION ALL
-        SELECT 'lineitem.discount_in_range',
-               CAST(sum(CASE WHEN l_discount < CAST(0.0 AS DOUBLE)
-                               OR l_discount > CAST(0.1 AS DOUBLE)
-                             THEN 1 ELSE 0 END) AS BIGINT)
-        FROM lineitem
-        UNION ALL
-        SELECT 'lineitem.quantity_positive',
-               CAST(sum(CASE WHEN l_quantity <= 0 THEN 1 ELSE 0 END)
-                    AS BIGINT)
-        FROM lineitem
-        UNION ALL
-        SELECT 'events.type_accepted_values',
-               CAST(sum(CASE WHEN event_type NOT IN
-                   ('view', 'click', 'purchase', 'signup', 'error')
-                 THEN 1 ELSE 0 END) AS BIGINT)
-        FROM events
-    """
-
-    from openseize_spark.functions.scalar import zorder_key_sql
-
-    _zexpr = zorder_key_sql("user_id", "CAST(day(ts) AS BIGINT)", bits=10)
-    o["zorder_layout"] = f"""
-        SELECT ({_zexpr}) >> 8 AS z_bucket,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(min(user_id) AS BIGINT) AS min_user,
-               CAST(max(user_id) AS BIGINT) AS max_user,
-               CAST(min(day(ts)) AS BIGINT) AS min_day,
-               CAST(max(day(ts)) AS BIGINT) AS max_day
-        FROM events
-        WHERE user_id IS NOT NULL
-        GROUP BY z_bucket
-    """
-
-    o["top_values_csv"] = """
-        SELECT user_id,
-               array_to_string(
-                 list_slice(
-                   list_sort(list(CAST(round(value * 100) AS BIGINT)),
-                             'DESC'), 1, 3), ',') AS top3_cents,
-               CAST(count(*) AS BIGINT) AS n_events
-        FROM events
-        WHERE user_id IS NOT NULL AND value IS NOT NULL
-        GROUP BY user_id
-    """
-
-    o["sql_entry"] = """
-        SELECT n_name,
-               CAST(sum(CAST(round(
-                 l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
-                 AS BIGINT) / 10000.0 AS revenue,
-               count(*) AS n_items
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name
-    """
-
-    o["dataset_card"] = f"""
-        WITH d AS (
-          SELECT text,
-                 {dedup.normalize_text_sql()} AS nt,
-                 lang, source
-          FROM documents WHERE text IS NOT NULL
-        ), fp AS (
-          SELECT md5(nt) AS f, count(*) AS n FROM d GROUP BY md5(nt)
-        ), dups AS (
-          SELECT sum(n) AS docs, count(*) AS dist FROM fp
-        ), base AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(strlen(text)) AS BIGINT) AS n_bytes,
-                 CAST(sum(len({dedup.tokenize_sql()})) AS BIGINT) AS n_tokens,
-                 CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-                 CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-          FROM d
-        )
-        SELECT base.*,
-               CAST(dups.dist AS BIGINT) AS n_distinct_texts,
-               round(CAST(1.0 AS DOUBLE)
-                     - CAST(dups.dist AS DOUBLE) / CAST(dups.docs AS DOUBLE),
-                     9) AS dup_rate
-        FROM base CROSS JOIN dups
-    """
-
-    o["embedding_quality"] = """
-        WITH e AS (
-          SELECT label, embedding,
-                 list_sum(list_transform(CAST(embedding AS DOUBLE[]),
-                                         x -> x * x)) AS n2
-          FROM embeddings
-        )
-        SELECT label,
-               CAST(count(*) AS BIGINT) AS n_vectors,
-               CAST(count(DISTINCT len(embedding)) AS BIGINT) AS n_dims_seen,
-               CAST(sum(CASE WHEN n2 = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_zero_vectors,
-               round(sqrt(min(n2)), 9) AS min_norm,
-               round(sqrt(max(n2)), 9) AS max_norm
-        FROM e GROUP BY label
-    """
-
-    o["perplexity_tiers"] = f"""
-        WITH scored AS (
-          SELECT s.doc_id, s.n_tokens, s.score, d.lang
-          FROM ({llm_text.unigram_logprob_oracle_sql(round_digits=9)}) s
-          JOIN documents d ON s.doc_id = d.doc_id
-        ), cuts AS (
-          SELECT quantile_cont(score, CAST(1.0/3.0 AS DOUBLE)) AS c1,
-                 quantile_cont(score, CAST(2.0/3.0 AS DOUBLE)) AS c2
-          FROM scored
-        )
-        SELECT CASE WHEN score <= c1 THEN 'head'
-                    WHEN score <= c2 THEN 'middle'
-                    ELSE 'tail' END AS tier,
-               lang,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_tokens) AS BIGINT) AS n_tokens
-        FROM scored CROSS JOIN cuts
-        GROUP BY tier, lang
-    """
-
-    o["engaged_users"] = """
-        WITH days AS (
-          SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-          FROM events WHERE user_id IS NOT NULL
-        ), per_user AS (
-          SELECT user_id, count(*) AS active_days FROM days GROUP BY user_id
-        )
-        SELECT CASE WHEN active_days >= 25 THEN 'daily'
-                    WHEN active_days >= 10 THEN 'regular'
-                    WHEN active_days >= 3 THEN 'occasional'
-                    ELSE 'rare' END AS engagement,
-               CAST(count(*) AS BIGINT) AS n_users,
-               CAST(sum(active_days) AS BIGINT) AS total_active_days
-        FROM per_user GROUP BY engagement
-    """
-
-    o["wow_retention"] = """
-        WITH uw AS (
-          SELECT DISTINCT user_id, weekofyear(ts) AS week
-          FROM events WHERE user_id IS NOT NULL
-        ), cur AS (
-          SELECT week, count(*) AS n_active FROM uw GROUP BY week
-        ), ret AS (
-          SELECT a.week, count(*) AS n_retained
-          FROM uw a
-          WHERE EXISTS (
-            SELECT 1 FROM uw b
-            WHERE b.user_id = a.user_id AND b.week = a.week + 1
-          )
-          GROUP BY a.week
-        )
-        SELECT CAST(cur.week AS BIGINT) AS week,
-               CAST(cur.n_active AS BIGINT) AS n_active,
-               CAST(coalesce(ret.n_retained, 0) AS BIGINT) AS n_retained,
-               round(CAST(coalesce(ret.n_retained, 0) AS DOUBLE)
-                     / CAST(cur.n_active AS DOUBLE), 9) AS retention
-        FROM cur LEFT JOIN ret ON cur.week = ret.week
-    """
-
-    o["event_debounce"] = """
-        WITH g AS (
-          SELECT user_id, event_type,
-                 epoch_us(ts) - epoch_us(lag(ts) OVER (
-                   PARTITION BY user_id, event_type
-                   ORDER BY ts, event_id)) AS gap
-          FROM events WHERE user_id IS NOT NULL
-        )
-        SELECT user_id, event_type,
-               CAST(count(*) AS BIGINT) AS n_kept
-        FROM g
-        WHERE gap IS NULL OR gap >= 60000000
-        GROUP BY user_id, event_type
-    """
-
-    o["event_transitions"] = """
-        WITH p AS (
-          SELECT lag(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS from_type,
-                 event_type AS to_type
-          FROM events WHERE user_id IS NOT NULL
-        ), pairs AS (
-          SELECT from_type, to_type, count(*) AS n
-          FROM p WHERE from_type IS NOT NULL
-          GROUP BY from_type, to_type
-        ), tot AS (
-          SELECT from_type, sum(n) AS row_n FROM pairs GROUP BY from_type
-        )
-        SELECT pairs.from_type, pairs.to_type,
-               CAST(pairs.n AS BIGINT) AS n,
-               round(CAST(pairs.n AS DOUBLE) / CAST(tot.row_n AS DOUBLE), 9)
-                 AS p
-        FROM pairs JOIN tot ON pairs.from_type = tot.from_type
-    """
-
-    o["churned_users"] = """
-        WITH last AS (
-          SELECT user_id, max(epoch_us(ts)) AS last_us,
-                 count(*) AS n_events
-          FROM events WHERE user_id IS NOT NULL GROUP BY user_id
-        ), h AS (SELECT max(epoch_us(ts)) AS max_us FROM events
-                 WHERE user_id IS NOT NULL)
-        SELECT user_id,
-               CAST(n_events AS BIGINT) AS n_events,
-               last_us
-        FROM last CROSS JOIN h
-        WHERE last_us < max_us - 43200000000
-    """
-
-    o["dedup_rate_by_source"] = f"""
-        WITH pairs AS (
-          SELECT source,
-                 md5({dedup.normalize_text_sql()})
-                   AS fp,
-                 count(*) AS n
-          FROM documents WHERE text IS NOT NULL
-          GROUP BY source, fp
-        )
-        SELECT source,
-               CAST(sum(n) AS BIGINT) AS n_docs,
-               CAST(count(*) AS BIGINT) AS n_distinct,
-               round(CAST(1.0 AS DOUBLE)
-                     - CAST(count(*) AS DOUBLE) / CAST(sum(n) AS DOUBLE),
-                     9) AS dup_rate
-        FROM pairs GROUP BY source
-    """
-
-    o["null_profile"] = """
-        WITH agg AS (
-          SELECT count(*) AS total,
-                 sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS n_event_id,
-                 sum(CASE WHEN ts IS NULL THEN 1 ELSE 0 END) AS n_ts,
-                 sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS n_user_id,
-                 sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS n_event_type,
-                 sum(CASE WHEN value IS NULL THEN 1 ELSE 0 END) AS n_value,
-                 sum(CASE WHEN props IS NULL THEN 1 ELSE 0 END) AS n_props
-          FROM events
-        )
-        SELECT u.column_name,
-               CAST(u.n_null AS BIGINT) AS n_null,
-               CAST(total AS BIGINT) AS n_total,
-               round(CAST(u.n_null AS DOUBLE) / CAST(total AS DOUBLE), 9)
-                 AS null_frac
-        FROM agg, (
-          SELECT 'event_id' AS column_name, n_event_id AS n_null FROM agg
-          UNION ALL SELECT 'ts', n_ts FROM agg
-          UNION ALL SELECT 'user_id', n_user_id FROM agg
-          UNION ALL SELECT 'event_type', n_event_type FROM agg
-          UNION ALL SELECT 'value', n_value FROM agg
-          UNION ALL SELECT 'props', n_props FROM agg
-        ) u
-    """
-
-    o["winsorized_stats"] = """
-        WITH cuts AS (
-          SELECT lang,
-                 quantile_cont(n_chars, CAST(0.1 AS DOUBLE)) AS p10,
-                 quantile_cont(n_chars, CAST(0.9 AS DOUBLE)) AS p90
-          FROM documents WHERE n_chars IS NOT NULL GROUP BY lang
-        )
-        SELECT d.lang,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               round(avg(least(greatest(CAST(d.n_chars AS DOUBLE), c.p10),
-                               c.p90)), 9) AS winsorized_mean,
-               round(any_value(c.p10), 9) AS p10,
-               round(any_value(c.p90), 9) AS p90
-        FROM documents d JOIN cuts c ON d.lang = c.lang
-        WHERE d.n_chars IS NOT NULL
-        GROUP BY d.lang
-    """
-
-    o["sentence_stats"] = """
-        WITH s AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(text, '[.!?]+\\s*'),
-                             x -> len(trim(x)) > 0) AS sents
-          FROM documents WHERE text IS NOT NULL
-        ), agg AS (
-          SELECT doc_id,
-                 CAST(len(sents) AS BIGINT) AS n_sentences,
-                 CAST(list_sum(list_transform(sents,
-                   x -> len(list_filter(string_split_regex(trim(x), '\\s+'),
-                                        w -> len(w) > 0)))) AS BIGINT)
-                   AS n_words
-          FROM s
-        )
-        SELECT doc_id, n_sentences,
-               coalesce(n_words, 0) AS n_words,
-               round(CAST(coalesce(n_words, 0) AS DOUBLE)
-                     / CAST(greatest(n_sentences, 1) AS DOUBLE), 9)
-                 AS words_per_sentence
-        FROM agg
-    """
-
-    o["c4_clean"] = """
-        WITH aug AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 13 = 0
-                      THEN text || ' Lorem ipsum {dolor}.'
-                      ELSE text END AS text
-          FROM documents WHERE text IS NOT NULL
-        ), s AS (
-          SELECT doc_id,
-                 (contains(text, '{') OR contains(text, '}')
-                  OR contains(lower(text), 'lorem ipsum')
-                  OR contains(lower(text), 'javascript')) AS dropped_doc,
-                 regexp_extract_all(text, '[^.!?]+[.!?]+') AS sents
-          FROM aug
-        ), kk AS (
-          SELECT doc_id, dropped_doc, sents,
-                 list_filter(sents,
-                   x -> len(list_filter(string_split_regex(trim(x), '\\s+'),
-                                        w -> len(w) > 0)) >= 3) AS kept
-          FROM s
-        )
-        SELECT doc_id, dropped_doc,
-               CAST(len(sents) AS BIGINT) AS n_sentences,
-               CAST(CASE WHEN dropped_doc THEN 0 ELSE len(kept) END
-                    AS BIGINT) AS n_kept,
-               CASE WHEN dropped_doc OR len(kept) = 0 THEN NULL
-                    ELSE array_to_string(list_transform(kept, x -> trim(x)),
-                                         ' ')
-               END AS clean_text
-        FROM kk
-    """
-
-    o["cdc_apply"] = """
-        WITH changes AS (
-          SELECT doc_id AS c_id, 'updated ' || text AS c_text,
-                 lang AS c_lang, source AS c_source,
-                 n_chars + 8 AS c_nchars, 'U' AS op
-          FROM documents WHERE doc_id % 7 = 0
-          UNION ALL
-          SELECT doc_id, NULL, NULL, NULL, NULL, 'D'
-          FROM documents WHERE doc_id % 13 = 0 AND doc_id % 7 <> 0
-          UNION ALL
-          SELECT doc_id + 1000000, 'new ' || text, lang, source,
-                 n_chars + 4, 'I'
-          FROM documents WHERE doc_id % 11 = 0
-        )
-        SELECT coalesce(c.c_id, b.doc_id) AS doc_id,
-               coalesce(c.c_text, b.text) AS text,
-               coalesce(c.c_lang, b.lang) AS lang,
-               coalesce(c.c_source, b.source) AS source,
-               CAST(coalesce(c.c_nchars, b.n_chars) AS BIGINT) AS n_chars
-        FROM documents b FULL OUTER JOIN changes c ON b.doc_id = c.c_id
-        WHERE coalesce(c.op <> 'D', TRUE)
-    """
-
-    o["scd2_ranges"] = """
-        SELECT user_id, event_id,
-               value AS version_value,
-               epoch_us(ts) AS valid_from_us,
-               epoch_us(lead(ts) OVER (
-                 PARTITION BY user_id ORDER BY ts, event_id
-               )) AS valid_to_us
-        FROM events
-        WHERE event_type = 'purchase' AND user_id IS NOT NULL
-    """
-
-    o["cube_revenue"] = """
-        SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-               coalesce(l_linestatus, 'ALL') AS l_linestatus,
-               CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
-                    AS BIGINT) AS gid,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CAST(round(
-                 l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
-                 AS BIGINT) / 10000.0 AS revenue
-        FROM lineitem
-        GROUP BY CUBE (l_returnflag, l_linestatus)
-    """
-
-    o["locf_fill"] = """
-        SELECT event_id, user_id, event_type,
-               last_value(CASE WHEN event_type = 'purchase' THEN value END
-                          IGNORE NULLS) OVER (
-                 PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS last_purchase_value
-        FROM events
-        WHERE user_id IS NOT NULL
-    """
-
-    o["rolling_zscore"] = """
-        WITH f AS (
-          SELECT event_id, user_id,
-                 CAST(round(value * 100) AS BIGINT) AS v,
-                 count(*) OVER w AS n,
-                 CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER w
-                      AS BIGINT) AS s1,
-                 CAST(sum(CAST(round(value * 100) AS BIGINT)
-                          * CAST(round(value * 100) AS BIGINT)) OVER w
-                      AS BIGINT) AS s2
-          FROM events
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-          WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN 9 PRECEDING AND CURRENT ROW)
-        )
-        SELECT event_id, user_id,
-               round((CAST(v AS DOUBLE) - CAST(s1 AS DOUBLE) / 10.0)
-                     / sqrt(CAST(s2 AS DOUBLE) / 10.0
-                            - (CAST(s1 AS DOUBLE) / 10.0)
-                              * (CAST(s1 AS DOUBLE) / 10.0)), 9) AS z,
-               round((CAST(v AS DOUBLE) - CAST(s1 AS DOUBLE) / 10.0)
-                     / sqrt(CAST(s2 AS DOUBLE) / 10.0
-                            - (CAST(s1 AS DOUBLE) / 10.0)
-                              * (CAST(s1 AS DOUBLE) / 10.0)), 9)
-                 > CAST(2.0 AS DOUBLE) AS is_spike
-        FROM f
-        WHERE n = 10 AND s2 * 10 > s1 * s1
-    """
-
-    o["salted_enrich"] = """
-        WITH dim(event_type, weight) AS (
-          VALUES ('view', 1), ('click', 3), ('purchase', 10),
-                 ('signup', 5), ('error', 0)
-        )
-        SELECT e.event_type, CAST(e.ts AS DATE) AS day,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(count(*) * any_value(d.weight) AS BIGINT) AS weighted
-        FROM events e JOIN dim d ON e.event_type = d.event_type
-        GROUP BY e.event_type, day
-    """
-
-    o["cumulative_users"] = """
-        WITH first AS (
-          SELECT user_id, min(CAST(ts AS DATE)) AS day
-          FROM events WHERE user_id IS NOT NULL GROUP BY user_id
-        ), per_day AS (
-          SELECT day, count(*) AS new_users FROM first GROUP BY day
-        )
-        SELECT a.day,
-               CAST(a.new_users AS BIGINT) AS new_users,
-               CAST(sum(b.new_users) AS BIGINT) AS total_users
-        FROM per_day a JOIN per_day b ON b.day <= a.day
-        GROUP BY a.day, a.new_users
-    """
-
-    o["value_histogram"] = """
-        SELECT event_type,
-               least(CAST(floor(value / 25.0) AS BIGINT), 19) AS bin,
-               CAST(count(*) AS BIGINT) AS n,
-               round(sum(value), 6) AS sum_value,
-               least(CAST(floor(value / 25.0) AS BIGINT), 19)
-                 * CAST(25.0 AS DOUBLE) AS bin_lo
-        FROM events
-        WHERE value IS NOT NULL
-        GROUP BY event_type, bin
-    """
-
-    o["rolling_median"] = """
-        SELECT event_id, user_id,
-               round(CAST(quantile_cont(value, 0.5) OVER (
-                 PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN 4 PRECEDING AND CURRENT ROW
-               ) AS DOUBLE), 9) AS med5
-        FROM events
-    """
-
-    o["json_props"] = """
-        SELECT event_type, count(*) AS n,
-               min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
-               max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
-               CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT))
-                    AS BIGINT) AS sum_k
-        FROM events
-        GROUP BY event_type
-    """
-
-    o["label_centroids"] = """
-        WITH xs AS (
-          SELECT label, CAST(u.i - 1 AS BIGINT) AS dim,
-                 CAST(embedding[u.i] AS DOUBLE) AS x
-          FROM embeddings,
-               unnest(generate_series(1, len(embedding))) AS u(i)
-        ), q AS (
-          SELECT label, dim,
-                 CAST(floor(x * 1e9 + 0.5) AS BIGINT) AS xq,
-                 CAST(floor(x * x * 1e12 + 0.5) AS BIGINT) AS x2q
-          FROM xs
-        ), g AS (
-          SELECT label, dim,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(xq) AS BIGINT) AS s1,
-                 CAST(sum(x2q) AS BIGINT) AS s2
-          FROM q GROUP BY label, dim
-        )
-        SELECT label, dim, n,
-               CAST(s1 AS DOUBLE) / 1e9 / n AS mean_x,
-               CAST(s2 AS DOUBLE) / 1e12 / n
-                 - (CAST(s1 AS DOUBLE) / 1e9 / n)
-                   * (CAST(s1 AS DOUBLE) / 1e9 / n) AS var_x
-        FROM g
-    """
-
-    from openseize_spark.llm import sketch as _sketch
-
-    o["countmin_words"] = _sketch.countmin_estimate_oracle_sql(
-        probe_words=_CM_PROBES, depth=4, width=256
-    )
-
-    o["tfidf_topk"] = llm_text.tfidf_topk_oracle_sql(k=5)
-    o["dsir_sample"] = sampling.dsir_sample_oracle_sql(
-        n_keep=100, target_col="lang", target_val="zh"
-    )
-
-    # generated portable-hash oracles for the MinHash/SimHash dedup family
-    from openseize_spark.llm import dedup as _dedup
-
-    o["minhash_sigs"] = _dedup.minhash_signatures_oracle_sql(k=5, num_hashes=64)
-    o["minhash_dedup"] = _dedup.minhash_dedup_oracle_sql(
-        k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    o["minhash_estimate"] = _dedup.minhash_estimate_oracle_sql(
-        k=5, num_hashes=64, bands=8
-    )
-    o["triangle_count"] = _dedup.triangle_count_oracle_sql(
-        k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    o["k_core"] = _dedup.k_core_oracle_sql(
-        core_k=2, rounds=12, k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    o["label_propagation"] = _dedup.label_propagation_oracle_sql(
-        rounds=4, k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    o["dedup_clusters"] = _dedup.dedup_clusters_oracle_sql(
-        k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    o["pagerank_sim"] = _dedup.pagerank_oracle_sql(
-        iters=5, k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    # canonical-doc selection: the cluster replay (WITH RECURSIVE inside a
-    # derived table) joined to the quality replay, argmax via rank window
-    o["canonical_docs"] = f"""
-        WITH cc AS (SELECT * FROM ({o["dedup_clusters"]})),
-        q AS ({o["quality_score"]}),
-        sel AS (
-          SELECT cc.component, cc.doc_id, q.quality,
-                 row_number() OVER (
-                   PARTITION BY cc.component
-                   ORDER BY q.quality DESC, cc.doc_id ASC
-                 ) AS rn,
-                 count(*) OVER (PARTITION BY cc.component) AS nm
-          FROM cc JOIN q USING (doc_id)
-        )
-        SELECT component, doc_id AS canonical_id,
-               quality AS best_quality, CAST(nm AS BIGINT) AS n_members
-        FROM sel WHERE rn = 1"""
-
-    o["snapshot_diff"] = f"""
-        WITH b AS (
-          SELECT doc_id,
-                 CASE WHEN doc_id % 7 = 0 THEN text || ' revised'
-                      ELSE text END AS text
-          FROM documents WHERE doc_id % 10 != 0
-          UNION ALL
-          SELECT doc_id + 100000 AS doc_id, text
-          FROM documents WHERE doc_id % 13 = 0
-        ), fa AS (
-          SELECT doc_id,
-                 md5({dedup.normalize_text_sql()}) AS f
-          FROM documents
-        ), fb AS (
-          SELECT doc_id,
-                 md5({dedup.normalize_text_sql()}) AS f
-          FROM b
-        )
-        SELECT COALESCE(fa.doc_id, fb.doc_id) AS doc_id,
-               CASE WHEN fa.f IS NULL THEN 'added'
-                    WHEN fb.f IS NULL THEN 'deleted'
-                    WHEN fa.f != fb.f THEN 'modified' END AS status
-        FROM fa FULL JOIN fb ON fa.doc_id = fb.doc_id
-        WHERE (CASE WHEN fa.f IS NULL THEN 'added'
-                    WHEN fb.f IS NULL THEN 'deleted'
-                    WHEN fa.f != fb.f THEN 'modified' END) IS NOT NULL"""
-    # composed C4-style filter: reuse the three scorer replays verbatim
-    # as subqueries (DuckDB allows WITH inside a derived table).  The
-    # Spark query runs on the PII-augmented corpus, so the quality and
-    # repetition legs substitute the same augmented derived table the
-    # pii_scan replay builds internally.
-    _aug_tbl = """(
-          SELECT doc_id,
-                 text
-                 || CASE WHEN doc_id % 5 = 0
-                      THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-                      ELSE '' END
-                 || CASE WHEN doc_id % 7 = 0
-                      THEN ' see https://data.example.org/doc/' || CAST(doc_id AS VARCHAR)
-                      ELSE '' END
-                 || CASE WHEN doc_id % 11 = 0
-                      THEN ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.17'
-                      ELSE '' END
-                 || CASE WHEN doc_id % 13 = 0 THEN ' call +1-555-0142' ELSE '' END
-                   AS text
-          FROM documents) AS documents"""
-    o["quality_filter"] = f"""
-        SELECT q.doc_id, q.quality, r.dup_ngram_frac,
-               CAST(p.n_emails + p.n_urls + p.n_ips + p.n_phones AS BIGINT)
-                 AS n_pii
-        FROM ({o['quality_score'].replace('FROM documents', 'FROM ' + _aug_tbl)}) q
-        JOIN ({o['repetition_stats'].replace('FROM documents', 'FROM ' + _aug_tbl)}) r
-          ON r.doc_id = q.doc_id
-        JOIN ({o['pii_scan']}) p ON p.doc_id = q.doc_id
-        WHERE q.quality >= 0.5 AND r.dup_ngram_frac <= 0.3
-          AND p.n_emails + p.n_urls + p.n_ips + p.n_phones <= 2"""
-
-    o["hash_sample"] = sampling.bernoulli_sample_oracle_sql(rate=0.25, seed="s0")
-    o["split_assign"] = sampling.split_assign_oracle_sql(
-        {"train": 0.8, "val": 0.1, "test": 0.1}, seed="split"
-    )
-    o["stratified_sample"] = sampling.stratified_sample_oracle_sql(
-        group_col="source", k=10, seed="strat"
-    )
-    o["corpus_shuffle"] = sampling.corpus_shuffle_oracle_sql(seed="shuf")
-    o["shard_assign"] = sampling.shard_assign_oracle_sql(rows_per_shard=100)
-    o["random_projection"] = similarity.random_projection_oracle_sql(
-        out_dim=16, dim=64
-    )
-
-    o["chunk_dedup"] = dedup.chunk_dedup_oracle_sql(chunk_words=10, max_docs=1)
-
-    o["pq_encode"] = similarity.pq_encode_oracle_sql(n_sub=4, sub_dim=16)
-
-    o["pq_adc_topk"] = similarity.pq_adc_topk_oracle_sql(n_sub=4, sub_dim=16, k=5)
-
-    o["pq_refine_topk"] = similarity.pq_refine_topk_oracle_sql(
-        n_sub=4, sub_dim=16, k=5, shortlist=20
-    )
-
-    o["mixture_sample"] = sampling.mixture_sample_oracle_sql(
-        weights={f"src{i}": 1 + i % 4 for i in range(20)}
-    )
-
-    o["vocab_stats"] = llm_text.vocab_stats_oracle_sql(top_k=100)
-
-    o["dup_span_detect"] = dedup.dup_span_detect_oracle_sql(n=8)
-    o["source_overlap"] = dedup.source_overlap_oracle_sql(n=8)
-
-    o["bpe_pair_counts"] = llm_text.bpe_pair_counts_oracle_sql(top_k=50)
-
-    o["source_divergence"] = llm_text.source_divergence_oracle_sql()
-    o["rake_keywords"] = llm_text.rake_keywords_oracle_sql(k=3)
-
-    # corpus_pipeline: the composed stages replayed as a CTE chain —
-    # the quality CTE is the standalone quality_score oracle verbatim,
-    # the split edges are the same int(acc * 2^32) literals Python
-    # computes inside split_assign
-    _cp_acc = 0.8
-    _cp_e1 = int(_cp_acc * (1 << 32))
-    _cp_e2 = int((_cp_acc + 0.1) * (1 << 32))
-    _cp_h = sampling.salted_hash_sql("k.doc_id", "split")
-    o["corpus_pipeline"] = f"""
-        WITH q AS ({o["quality_score"]}),
-        fp AS (
-          SELECT doc_id,
-                 md5({dedup.normalize_text_sql()}) AS f
-          FROM documents
-        ), surv AS (
-          SELECT min(doc_id) AS doc_id FROM fp GROUP BY f
-        ), kept AS (
-          SELECT d.doc_id, d.n_chars
-          FROM documents d JOIN surv USING (doc_id) JOIN q USING (doc_id)
-          WHERE q.quality >= 0.5
-        ), lab AS (
-          SELECT k.doc_id, k.n_chars,
-                 CASE WHEN {_cp_h} < {_cp_e1} THEN 'train'
-                      WHEN {_cp_h} < {_cp_e2} THEN 'val'
-                      ELSE 'test' END AS split
-          FROM kept k
-        )
-        SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_chars) AS BIGINT) AS total_chars
-        FROM lab GROUP BY split"""
-
-    o["unigram_logprob"] = llm_text.unigram_logprob_oracle_sql(round_digits=9)
-    o["bigram_logprob"] = llm_text.bigram_logprob_oracle_sql(round_digits=9)
-    o["tfidf_cosine_pairs"] = llm_text.tfidf_cosine_pairs_oracle_sql(
-        threshold=0.3, max_df_pct=5, round_digits=4, max_df_abs=512
-    )
-    o["doc_chunks"] = llm_text.doc_chunks_oracle_sql(chunk_words=64, stride=48)
-    o["jsonl_roundtrip"] = (
-        "SELECT doc_id, text, lang, source, n_chars FROM documents"
-    )
-    o["bpe_encode"] = llm_text.bpe_apply_oracle_sql(merges=_BPE_MERGES)
-
-    # semantic_dedup: same centroid fixture as ivf_topk (corpus vec_ids
-    # 3..10), identical expanded-L2 argmin assignment, then NOT EXISTS
-    # over the within-cell dominating-pair predicate.
-    o["semantic_dedup"] = """
-        WITH cent AS (
-          SELECT CAST(vec_id - 3 AS INT) AS cell_id,
-                 CAST(embedding AS DOUBLE[]) AS cv
-          FROM embeddings WHERE vec_id >= 3 AND vec_id < 11
-        ), corpus AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ), assigned AS (
-          SELECT vec_id, cell_id, v FROM (
-            SELECT c.vec_id, ct.cell_id, c.v,
-                   row_number() OVER (
-                     PARTITION BY c.vec_id
-                     ORDER BY list_dot_product(c.v, c.v)
-                              - 2 * list_dot_product(c.v, ct.cv)
-                              + list_dot_product(ct.cv, ct.cv),
-                              ct.cell_id
-                   ) AS rk
-            FROM corpus c CROSS JOIN cent ct
-          ) WHERE rk = 1
-        )
-        SELECT b.vec_id, b.cell_id
-        FROM assigned b
-        WHERE NOT EXISTS (
-          SELECT 1 FROM assigned a
-          WHERE a.cell_id = b.cell_id AND a.vec_id < b.vec_id
-            AND list_cosine_similarity(a.v, b.v) >= 0.2
-        )"""
-
-    # quality_prune: rank per lang over the (bit-exact) quality CTE; the
-    # rational keep cut (rn*den <= cnt*num) is pure integer arithmetic
-    o["quality_prune"] = f"""
-        WITH q AS ({o["quality_score"]}),
-        j AS (
-          SELECT q.doc_id, d.lang, q.quality
-          FROM q JOIN documents d USING (doc_id)
-        ), r AS (
-          SELECT doc_id, lang, quality,
-                 row_number() OVER (PARTITION BY lang
-                                    ORDER BY quality DESC, doc_id) AS rn,
-                 count(*) OVER (PARTITION BY lang) AS cnt
-          FROM j
-        )
-        SELECT doc_id, lang, quality FROM r WHERE rn * 5 <= cnt * 1"""
-
-    o["multires_rollup"] = """
-        WITH minute AS (
-          SELECT date_trunc('minute', ts) AS bucket, event_type,
-                 count(*) AS n, sum(value) AS sum_value
-          FROM events GROUP BY 1, 2
-        ), hour AS (
-          SELECT date_trunc('hour', bucket) AS bucket, event_type,
-                 CAST(sum(n) AS BIGINT) AS n, sum(sum_value) AS sum_value
-          FROM minute GROUP BY 1, 2
-        ), day AS (
-          SELECT date_trunc('day', bucket) AS bucket, event_type,
-                 CAST(sum(n) AS BIGINT) AS n, sum(sum_value) AS sum_value
-          FROM hour GROUP BY 1, 2
-        )
-        SELECT 'minute' AS resolution, bucket, event_type, n,
-               round(sum_value, 9) AS sum_value FROM minute
-        UNION ALL
-        SELECT 'hour', bucket, event_type, n, round(sum_value, 9) FROM hour
-        UNION ALL
-        SELECT 'day', bucket, event_type, n, round(sum_value, 9) FROM day"""
-
-    # DuckDB has a native ASOF JOIN — the perfect independent oracle for
-    # the tagged-union/window formulation
-    o["click_attribution"] = """
-        SELECT p.user_id, p.event_id, p.ts, p.value,
-               c.event_id AS event_id_click, c.value AS value_click,
-               c.ts AS ts_click
-        FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-        ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-          ON p.user_id = c.user_id AND p.ts >= c.ts"""
-
-    o["top_ngrams"] = f"""
-        WITH words AS (
-          SELECT lang, {dedup.tokenize_sql()} AS w
-          FROM documents WHERE text IS NOT NULL
-        ), grams AS (
-          SELECT lang, concat_ws(' ', w[u.i], w[u.i + 1], w[u.i + 2]) AS ngram
-          FROM words, unnest(generate_series(1, len(w) - 2)) AS u(i)
-          WHERE len(w) >= 3
-        ), counts AS (
-          SELECT lang, ngram, count(*) AS cnt FROM grams GROUP BY lang, ngram
-        )
-        SELECT lang, ngram, cnt,
-               CAST(row_number() OVER (
-                 PARTITION BY lang ORDER BY cnt DESC, ngram
-               ) AS BIGINT) AS rank
-        FROM counts
-        QUALIFY rank <= 10"""
-    o["simhash"] = _dedup.simhash_oracle_sql(bits=32)
-    o["simhash_pairs"] = _dedup.simhash_pairs_oracle_sql(max_hamming=6, bits=32)
-
-    # multimodal: fake-decode byte math replayed over the md5-chain
-    # payloads of synthetic_media_sqlgen (llm/multimodal.py)
-    from openseize_spark.llm import multimodal as _mm
-
-    o["image_features"] = _mm.image_features_oracle_sql(n=24)
-    o["frame_sample"] = _mm.frame_sample_oracle_sql(n=24)
-
-    o["scene_cuts"] = _mm.scene_cuts_oracle_sql(n=24, threshold=0.0002)
-    o["audio_vad"] = _mm.audio_vad_oracle_sql(n=24, frame_len=200)
-    o["resize_images"] = _mm.resize_features_oracle_sql(n=24)
-    o["audio_features"] = _mm.audio_features_oracle_sql(n=24)
-
-    # generated DSP oracles: naive-DFT replay of welch/stft, polyphase
-    # definition replay of the resampling family, bit-exact lag/lead
-    # replay of the Hilbert analytic signal (plans/oracles.py)
-    from openseize_spark.plans import oracles as _orc
-
-    o["fir_blocks"] = o["fir_kaiser"]  # same result, block-kernel path
-    o["welch_psd"] = _orc.welch_oracle_sql(sig, nfft=128, fs=FS, overlap=0.5)
-    o["welch_psd_blocks"] = o["welch_psd"]  # same result, block-kernel path
-    o["coherence"] = _orc.coherence_oracle_sql(
-        sig, ch_a=0, ch_b=1, nfft=128, fs=FS, overlap=0.5
-    )
-    o["stft"] = _orc.stft_oracle_sql(sig, nfft=128, fs=FS, overlap=0.5)
-    o["stft_blocks"] = o["stft"]  # same result, block-kernel path
-    o["downsample"] = _orc.resample_oracle_sql(sig, L=1, M=4)
-    o["upsample"] = _orc.resample_oracle_sql(sig, L=3, M=1)
-    o["resample_poly"] = _orc.resample_oracle_sql(sig, L=2, M=5)
-    # lsh_topk: same seeded hyperplanes inlined as DuckDB list literals;
-    # bucket = sum of sign bits * 2^b, exact re-rank within the bucket
-    import numpy as _np
-
-    _planes = _np.random.default_rng(7).standard_normal((4, 64))
-    _plane_sql = [
-        "[" + ", ".join(repr(float(x)) for x in _planes[b]) + "]" for b in range(4)
-    ]
-    _bucket_sql = " + ".join(
-        f"(CASE WHEN list_dot_product(v, {_plane_sql[b]}) >= 0 "
-        f"THEN {2 ** b} ELSE 0 END)"
-        for b in range(4)
-    )
-    from openseize_spark.llm import similarity as _sim
-
-    o["kmeans_assign"] = _sim.kmeans_assign_oracle_sql(k=8, n_iter=4)
-
-    o["cluster_purity"] = f"""
-        WITH hist AS (
-          SELECT a.cell_id, e.label, count(*) AS hn
-          FROM ({_sim.kmeans_assign_oracle_sql(k=8, n_iter=4)}) a
-          JOIN embeddings e ON a.vec_id = e.vec_id
-          GROUP BY a.cell_id, e.label
-        ), top AS (
-          SELECT cell_id, label AS top_label, hn AS top_cnt
-          FROM hist
-          QUALIFY row_number() OVER (
-            PARTITION BY cell_id ORDER BY hn DESC, label ASC) = 1
-        ), tot AS (
-          SELECT cell_id, CAST(sum(hn) AS BIGINT) AS n
-          FROM hist GROUP BY cell_id
-        )
-        SELECT top.cell_id, tot.n, top.top_label,
-               CAST(top.top_cnt AS BIGINT) AS top_cnt,
-               round(CAST(top.top_cnt AS DOUBLE) / CAST(tot.n AS DOUBLE), 9)
-                 AS purity
-        FROM top JOIN tot ON top.cell_id = tot.cell_id"""
-
-    o["lsh_topk"] = f"""
-        WITH base AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        ), bucketed AS (
-          SELECT vec_id, v, {_bucket_sql} AS bucket FROM base
-        ), q AS (
-          SELECT vec_id AS q_id, v AS qv, bucket FROM bucketed WHERE vec_id < 3
-        ), c AS (
-          SELECT vec_id, v AS cv, bucket FROM bucketed WHERE vec_id >= 3
-        ), s AS (
-          SELECT q.q_id, c.vec_id,
-                 list_dot_product(c.cv, q.qv)
-                 / (sqrt(list_dot_product(c.cv, c.cv))
-                    * sqrt(list_dot_product(q.qv, q.qv))) AS cosine
-          FROM c JOIN q ON c.bucket = q.bucket
-        )
-        SELECT q_id, vec_id, cosine,
-               CAST(row_number() OVER (
-                 PARTITION BY q_id ORDER BY cosine DESC, vec_id
-               ) AS BIGINT) AS rank
-        FROM s
-        QUALIFY rank <= 5
-    """
-
-    _hilb_taps = design.hilbert_fir(width=5.0, fs=FS).taps
-    o["hilbert_envelope"] = _orc.hilbert_oracle_sql(sig, _hilb_taps)
-    o["pac"] = _orc.pac_oracle_sql(sig, _hilb_taps, target=0.5, tol=0.05, window=32)
-    o["pac_surrogates"] = _orc.pac_surrogates_oracle_sql(
-        sig, _hilb_taps, target=0.5, tol=0.05, window=32,
-        shift_fracs=_SURROGATE_FRACS,
-    )
-
-    # ---- IIR family: recursive-CTE replays of the exact DF2T recursion
-    # (plans/oracles.iir_oracle_sql).  Plain kernels are bit-exact; the
-    # parallel-in-time *_blocks variants round(7) on both sides (their
-    # blocks-vs-plain float noise is <=6e-14 on this signal).
-    scte = signal_cte(NCH)
-    _butter = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0).sos
-    _ch1 = design2.cheby1(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0).sos
-    _ch2 = design2.cheby2(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0).sos
-    _ell = design2.ellip(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0).sos
-    _ntc = design.notch(fstop=15.0, width=4.0, fs=FS).sos
-
-    def _iir(sos=None, ba=None, zero_phase=False, round_digits=None):
-        return _orc.iir_oracle_sql(
-            scte, sos=sos, ba=ba, zero_phase=zero_phase,
-            slice_n=IIR_SLICE, round_digits=round_digits,
-        )
-
-    o["sosfilt"] = _iir(sos=_butter)
-    o["sosfilt_cheby1"] = _iir(sos=_ch1)
-    o["sosfilt_cheby2"] = _iir(sos=_ch2)
-    o["notch"] = _iir(sos=_ntc)
-    o["sosfiltfilt"] = _iir(sos=_butter, zero_phase=True)
-    o["sosfiltfilt_ellip"] = _iir(sos=_ell, zero_phase=True)
-    o["lfilter"] = _iir(ba=_BA_SPEC)
-    o["filtfilt"] = _iir(ba=_BA_SPEC, zero_phase=True)
-    o["sosfilt_blocks"] = _iir(sos=_butter, round_digits=7)
-    # full-length bench twins: same recursion replay, no slice — ~33 s
-    # each in DuckDB at sf0.01, run by local verification (check_oracle /
-    # diff_audit), deliberately not budgeted into the driver window
-    o["sosfilt_full"] = _orc.iir_oracle_sql(scte, sos=_butter, slice_n=10**9)
-    o["sosfilt_blocks_full"] = _orc.iir_oracle_sql(
-        scte, sos=_butter, slice_n=10**9, round_digits=7
-    )
-    o["sosfiltfilt_blocks"] = _iir(sos=_butter, zero_phase=True, round_digits=7)
-    o["lfilter_blocks"] = _iir(ba=_BA_SPEC, round_digits=7)
-    o["filtfilt_blocks"] = _iir(ba=_BA_SPEC, zero_phase=True, round_digits=7)
-
-    o["pack_sequences"] = sampling.pack_sequences_oracle_sql(
-        capacity=2048, token_expr=llm_text.token_count_sql()
-    )
-    o["token_budget_subset"] = sampling.token_budget_subset_oracle_sql(
-        budget=8000, token_expr=llm_text.token_count_sql()
-    )
-    o["temperature_sample"] = sampling.temperature_sample_oracle_sql(
-        temperature=2.0, group_col="lang"
-    )
-
-    # decontaminate: NOT EXISTS over the same md5 fingerprint carve-out
-    o["decontaminate"] = f"""
-        WITH bench AS (
-          SELECT DISTINCT md5({dedup.normalize_text_sql()})
-            AS bfp
-          FROM documents WHERE doc_id % 7 = 0
-        )
-        SELECT d.doc_id, d.lang, d.source
-        FROM documents d
-        WHERE d.doc_id % 7 <> 0
-          AND NOT EXISTS (
-            SELECT 1 FROM bench b
-            WHERE b.bfp = md5({dedup.normalize_text_sql("d.text")})
-          )"""
-
-    # length_quantiles: Spark's exact percentile and DuckDB's
-    # quantile_cont both linearly interpolate on the sorted values
-    o["length_quantiles"] = """
-        SELECT lang, count(*) AS n_docs,
-               round(quantile_cont(n_chars, 0.25), 6) AS p25,
-               round(quantile_cont(n_chars, 0.5), 6) AS p50,
-               round(quantile_cont(n_chars, 0.75), 6) AS p75,
-               round(quantile_cont(n_chars, 0.9), 6) AS p90
-        FROM documents GROUP BY lang"""
-
-    # streaming_sessionize: native session_window == batch lag-gap count
-    # (strict-vs-closed boundary at exactly gap never occurs on
-    # microsecond-random timestamps)
-    o["streaming_sessionize"] = """
-        WITH flagged AS (
-          SELECT user_id,
-                 CASE WHEN epoch(ts) - lag(epoch(ts)) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) >= 1800.0 THEN 1 ELSE 0 END AS new_sess
-          FROM events
-        )
-        SELECT user_id, CAST(sum(new_sess) + 1 AS BIGINT) AS n_sessions
-        FROM flagged GROUP BY user_id"""
-
-    # edf_decode: replay p = slope*d + offset with the exact float64
-    # slope/offset a reader derives from the synthesized header (one
-    # multiply + one add per sample on both engines — bit-exact)
-    import numpy as _np2
-
-    _rows = []
-    for _ch, _s in enumerate(_EDF_GATE_SPR):
-        _pmn = _np2.float64(_EDF_GATE_PMIN[_ch])
-        _pmx = _np2.float64(_EDF_GATE_PMAX[_ch])
-        _sl = (_pmx - _pmn) / (_np2.float64(32767.0) - _np2.float64(-32768.0))
-        _off = _pmn - _sl * _np2.float64(-32768.0)
-        _n = _s * _EDF_GATE_NREC
-        _rows.append(
-            f"({_ch}, {_orc.dlit(_sl)}, {_orc.dlit(_off)}, {_n})"
-        )
-    o["edf_decode"] = f"""
-        WITH ch(channel, slope, off, n) AS (VALUES {", ".join(_rows)})
-        SELECT CAST(ch.channel AS INTEGER) AS channel,
-               CAST(u.t AS BIGINT) AS t,
-               ch.slope * (((1009 * u.t + 7919 * ch.channel) % 65536) - 32768)
-                 + ch.off AS v
-        FROM ch, unnest(generate_series(0, ch.n - 1)) AS u(t)"""
-
-    # edf_roundtrip: write -> split -> read is the identity on the gate
-    # signal (encode rint() recovers the closed-form digital samples
-    # exactly; see q_edf_roundtrip), so the oracle is the decode replay at
-    # the single shared write range
-    _n_by_ch = ", ".join(
-        f"({_ch}, {_s * _EDF_GATE_NREC})" for _ch, _s in enumerate(_EDF_GATE_SPR)
-    )
-    o["edf_roundtrip"] = f"""
-        WITH ch(channel, n) AS (VALUES {_n_by_ch})
-        SELECT CAST(ch.channel AS INTEGER) AS channel,
-               CAST(u.t AS BIGINT) AS t,
-               {_orc.dlit(_EDF_RT_SLOPE)}
-                 * (((1009 * u.t + 7919 * ch.channel) % 65536) - 32768)
-                 + {_orc.dlit(_EDF_RT_OFFSET)} AS v
-        FROM ch, unnest(generate_series(0, ch.n - 1)) AS u(t)"""
-
-    # streaming_sosfilt: exact zi carry across micro-batches means the
-    # stream equals the batch filter, whose recursive-CTE replay is
-    # already the sosfilt oracle
-    o["streaming_sosfilt"] = o["sosfilt"]
-
-    # pipeline_chain: the three appended stages composed as nested CTEs —
-    # decimate (pure slice re-index), per-channel standardize (dyadic
-    # aggregates, so m/s are engine-exact), then the identical FIR
-    # expression chain; both sides round the filtered output to 9
-    o["pipeline_chain"] = sig + f"""
-        , dec AS (
-          SELECT recording_id, channel, CAST(t // 4 AS BIGINT) AS t, v
-          FROM signal WHERE t % 4 = 0
-        ), st AS (
-          SELECT channel, avg(v) AS m,
-                 sqrt(avg(v*v) - avg(v)*avg(v)) AS s
-          FROM dec GROUP BY channel
-        ), std AS (
-          SELECT dec.recording_id, dec.channel, dec.t, (v - m) / s AS v
-          FROM dec JOIN st ON dec.channel = st.channel
-        )
-        SELECT channel, t, round({fir_sum}, 9) AS v
-        FROM std
-        WINDOW w AS (PARTITION BY recording_id, channel ORDER BY t)"""
-
-    # annotations_mask: the fixture's integer-second intervals at fs=100,
-    # "rest" excluded by the reader's label filter; kept samples re-index
-    # t densely per channel (the compaction contract)
-    _ival = ", ".join(
-        f"({int(t * FS)}, {int((t + dur) * FS)})"
-        for lbl, t, dur, _ch in _ANN_GATE_FIXTURE
-        if lbl in ("seizure", "artifact")
-    )
-    o["annotations_mask"] = sig + f"""
-        , ival(lo, hi) AS (VALUES {_ival}),
-        kept AS (
-          SELECT channel, t, v FROM signal s
-          WHERE EXISTS (SELECT 1 FROM ival
-                        WHERE s.t >= ival.lo AND s.t < ival.hi)
-        )
-        SELECT channel,
-               CAST(row_number() OVER (PARTITION BY channel ORDER BY t) - 1
-                    AS BIGINT) AS t,
-               v
-        FROM kept"""
-
-    # streaming_policies: replay the 64/32 sliding segmentation by
-    # exploding each sample into its two covering windows; v is dyadic so
-    # seg_sum is engine-exact; cnt > 32 is the padded policy, cnt = 64
-    # flags the drop policy
-    # streaming_dedup: the surviving-row choice is nondeterministic but
-    # the distinct fingerprint set is not
-    o["streaming_dedup"] = fr"""
-        SELECT DISTINCT
-               md5({dedup.normalize_text_sql()}) AS fp
-        FROM documents WHERE text IS NOT NULL"""
-
-    # decontaminate_ngram: same normalization/split as the engine; DuckDB
-    # list slices are 1-based inclusive so w[i : i+n-1] is the n-gram
-    o["decontaminate_ngram"] = fr"""
-        WITH norm AS (
-          SELECT doc_id,
-                 string_split({dedup.normalize_text_sql()}, ' ') AS w
-          FROM documents WHERE text IS NOT NULL
-        ), bgrams AS (
-          SELECT DISTINCT md5(array_to_string(w[u.i : u.i + 7], ' ')) AS g
-          FROM norm, unnest(generate_series(1, len(w) - 7)) AS u(i)
-          WHERE doc_id % 7 = 0
-        ), cont AS (
-          SELECT DISTINCT n2.doc_id
-          FROM norm n2, unnest(generate_series(1, len(n2.w) - 7)) AS u(i)
-          WHERE n2.doc_id % 7 != 0
-            AND md5(array_to_string(n2.w[u.i : u.i + 7], ' '))
-                  IN (SELECT g FROM bgrams)
-        )
-        SELECT d.doc_id, d.lang, d.source
-        FROM documents d
-        WHERE d.doc_id % 7 != 0
-          AND d.doc_id NOT IN (SELECT doc_id FROM cont)"""
-
-    o["streaming_policies"] = sig + """
-        , sl AS (
-          SELECT channel, t, v FROM signal WHERE t < 2000
-        ), exploded AS (
-          SELECT channel, v, u.k
-          FROM sl, unnest([t // 32, t // 32 - 1]) AS u(k)
-          WHERE u.k >= 0
-        )
-        SELECT channel, CAST(k AS BIGINT) AS seg,
-               count(*) AS cnt, sum(v) AS seg_sum,
-               count(*) = 64 AS is_complete
-        FROM exploded
-        GROUP BY channel, k
-        HAVING count(*) > 32"""
-
-    # streaming_hour: the batch GROUP BY the streaming pipeline must equal
-    o["streaming_hour"] = """
-        SELECT date_trunc('hour', ts) AS win_start, event_type,
-               count(*) AS n,
-               round(avg(value), 9) AS mean_v,
-               round(sum(value * value), 9) AS sum_v2
-        FROM events
-        GROUP BY 1, 2"""
-
-    o["streaming_join"] = """
-        SELECT v.user_id AS user_id,
-               v.event_id AS view_id,
-               c.event_id AS click_id,
-               epoch_us(c.ts) - epoch_us(v.ts) AS gap_us
-        FROM events v JOIN events c
-          ON v.user_id = c.user_id
-         AND v.event_type = 'view' AND c.event_type = 'click'
-         AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 1 HOUR
-    """
-
-    o["streaming_enrich"] = """
-        SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS win_start, n_name,
-               count(*) AS n,
-               round(sum(value), 9) AS sum_value
-        FROM events JOIN nation ON (user_id % 25) = n_nationkey
-        GROUP BY 1, 2"""
-
-    # ---- round 6: TPC-H Q7/Q8/Q9/Q10/Q13/Q17/Q19/Q22 shapes + the two
-    # new samplers.  Every integer sum is CAST AS BIGINT (HUGEINT rule).
-    _U = "CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT)"
-
-    o["nation_volume"] = f"""
-        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-               CAST(year(l_shipdate) AS BIGINT) AS l_year,
-               CAST(sum({_U}) AS BIGINT) AS rev_units,
-               count(*) AS n_items
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        WHERE n1.n_name <> n2.n_name
-        GROUP BY 1, 2, 3"""
-
-    o["market_share"] = f"""
-        WITH j AS (
-          SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                 s_nationkey, {_U} AS units
-          FROM lineitem
-          JOIN orders   ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation   ON c_nationkey = n_nationkey AND n_regionkey = 0
-          JOIN supplier ON l_suppkey = s_suppkey
-        )
-        SELECT o_year,
-               CAST(sum(CASE WHEN s_nationkey = 0 THEN units ELSE 0 END)
-                    AS BIGINT) AS nation_units,
-               CAST(sum(units) AS BIGINT) AS total_units,
-               round(CAST(sum(CASE WHEN s_nationkey = 0 THEN units ELSE 0 END)
-                          AS DOUBLE)
-                     / CAST(sum(units) AS DOUBLE), 9) AS mkt_share
-        FROM j GROUP BY o_year"""
-
-    o["profit_by_nation"] = f"""
-        SELECT n_name AS nation,
-               CAST(year(o_orderdate) AS BIGINT) AS o_year,
-               CAST(sum({_U}
-                        - CAST(round(l_quantity * p_retailprice * 1000)
-                               AS BIGINT)) AS BIGINT) AS profit_units
-        FROM lineitem
-        JOIN part     ON l_partkey = p_partkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation   ON s_nationkey = n_nationkey
-        JOIN orders   ON l_orderkey = o_orderkey
-        GROUP BY 1, 2"""
-
-    o["returned_customers"] = f"""
-        SELECT c_custkey, c_name, n_name,
-               CAST(sum({_U}) AS BIGINT) AS rev_units
-        FROM lineitem
-        JOIN orders   ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation   ON c_nationkey = n_nationkey
-        WHERE l_returnflag = 'R'
-          AND o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-          AND o_orderdate <  TIMESTAMP '1995-04-01 00:00:00'
-        GROUP BY 1, 2, 3
-        ORDER BY rev_units DESC, c_custkey ASC
-        LIMIT 20"""
-
-    o["order_count_dist"] = """
-        WITH per_cust AS (
-          SELECT c_custkey, count(o_orderkey) AS c_count
-          FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-          GROUP BY c_custkey
-        )
-        SELECT c_count, count(*) AS custdist
-        FROM per_cust GROUP BY c_count"""
-
-    o["small_qty_revenue"] = f"""
-        WITH pa AS (
-          SELECT l_partkey AS pk,
-                 CAST(sum(l_quantity) AS BIGINT) AS sumq,
-                 count(*) AS cnt
-          FROM lineitem GROUP BY l_partkey
-        )
-        SELECT CAST(sum({_U}) AS BIGINT) AS rev_units,
-               count(*) AS n_items,
-               round(CAST(sum({_U}) AS BIGINT) / 70000.0, 9) AS avg_yearly
-        FROM lineitem JOIN pa ON l_partkey = pk
-        WHERE l_quantity * 2 * cnt < sumq"""
-
-    o["disjunctive_revenue"] = f"""
-        SELECT CAST(sum({_U}) AS BIGINT) AS rev_units,
-               count(*) AS n_items
-        FROM lineitem JOIN part ON l_partkey = p_partkey
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-               AND l_quantity BETWEEN 1 AND 11)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-               AND l_quantity BETWEEN 10 AND 20)
-           OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-               AND l_quantity BETWEEN 20 AND 30)"""
-
-    o["idle_customers"] = """
-        WITH cu AS (
-          SELECT c_custkey, c_nationkey,
-                 CAST(round(c_acctbal * 100) AS BIGINT) AS bal_cents
-          FROM customer
-        ), stats AS (
-          SELECT CAST(sum(bal_cents) AS BIGINT) AS sum_cents,
-                 count(*) AS n_pos
-          FROM cu WHERE bal_cents > 0
-        )
-        SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-               count(*) AS numcust,
-               CAST(sum(bal_cents) AS BIGINT) AS totbal_cents
-        FROM cu, stats
-        WHERE bal_cents * n_pos > sum_cents
-          AND NOT EXISTS (
-            SELECT 1 FROM orders
-            WHERE o_custkey = c_custkey AND o_orderpriority = '1-URGENT'
-          )
-        GROUP BY 1"""
-
-    o["bloom_decontaminate"] = dedup.bloom_decontaminate_oracle_sql(
-        bench_pred="doc_id % 7 = 0", corpus_pred="doc_id % 7 <> 0"
-    )
-
-    o["group_reservoir"] = sampling.group_reservoir_oracle_sql(
-        ["lang", "source"], k=3, key_col="doc_id", seed="res6"
-    )
-
-    o["hard_negatives"] = """
-        WITH q AS (
-          SELECT vec_id AS q_id, label AS q_label,
-                 CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 3
-        ), c AS (
-          SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS cv
-          FROM embeddings WHERE vec_id >= 3
-        ), s AS (
-          SELECT q_id, q_label, vec_id, label,
-                 list_cosine_similarity(cv, qv) AS cosine
-          FROM c CROSS JOIN q
-          WHERE label <> q_label
-        )
-        SELECT q_id, q_label, vec_id, label, cosine,
-               CAST(row_number() OVER (
-                 PARTITION BY q_id ORDER BY cosine DESC, vec_id
-               ) AS BIGINT) AS rank
-        FROM s
-        QUALIFY rank <= 5"""
-
-    o["quantize_int8"] = similarity.quantize_int8_oracle_sql()
-
-    from openseize_spark.llm import sketch as _sketch
-
-    o["hll_distinct"] = _sketch.hll_estimate_oracle_sql(
-        col="user_id",
-        table="(SELECT * FROM events WHERE user_id IS NOT NULL)",
-        b=5,
-        seed="hll6",
-    )
-
-    o["hll_by_type"] = _sketch.hll_estimate_by_oracle_sql(
-        col="user_id",
-        group_expr="event_type",
-        table="(SELECT * FROM events WHERE user_id IS NOT NULL)",
-        b=5,
-        seed="hb6",
-        alias="event_type",
-    )
-
-    o["er_pipeline"] = dedup.er_pipeline_oracle_sql()
-
-    o["blocking_yield"] = dedup.blocking_yield_oracle_sql()
-
-    o["hashed_features"] = llm_text.hashed_doc_features_oracle_sql(
-        dim=64, seed="fh6"
-    )
-
-    o["type_streaks"] = """
-        WITH isl AS (
-          SELECT user_id, event_type, event_id,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id)
-                 - row_number() OVER (PARTITION BY user_id, event_type
-                                      ORDER BY ts, event_id) AS g
-          FROM events WHERE user_id IS NOT NULL
-        )
-        SELECT user_id, event_type,
-               count(*) AS streak_len,
-               CAST(min(event_id) AS BIGINT) AS first_event,
-               CAST(max(event_id) AS BIGINT) AS last_event
-        FROM isl
-        GROUP BY user_id, event_type, g
-        HAVING count(*) >= 3"""
-
-    o["benford_digits"] = """
-        WITH counts AS (
-          SELECT CAST(substr(CAST(o_totalprice AS VARCHAR), 1, 1) AS BIGINT)
-                   AS digit,
-                 count(*) AS observed
-          FROM orders WHERE o_totalprice > 0
-          GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(observed) AS BIGINT) AS n FROM counts
-        )
-        SELECT digit, observed,
-               round(CAST(n AS DOUBLE)
-                     * log10(1 + 1 / CAST(digit AS DOUBLE)), 9) AS expected
-        FROM counts, tot"""
-
-    o["source_gini"] = """
-        WITH per_src AS (
-          SELECT source, count(*) AS d, CAST(sum(n_chars) AS BIGINT) AS c
-          FROM documents GROUP BY source
-        ), melted AS (
-          SELECT source, 'docs' AS metric, d AS x FROM per_src
-          UNION ALL
-          SELECT source, 'chars' AS metric, c AS x FROM per_src
-        ), ranked AS (
-          SELECT m.metric, m.source, m.x,
-                 CAST((SELECT count(*) FROM melted o
-                       WHERE o.metric = m.metric
-                         AND (o.x < m.x
-                              OR (o.x = m.x AND o.source < m.source))) + 1
-                      AS BIGINT) AS rank
-          FROM melted m
-        )
-        SELECT metric,
-               CAST(count(*) AS BIGINT) AS n_sources,
-               CAST(sum(x) AS BIGINT) AS total_mass,
-               round(CAST(2 * sum(rank * x)
-                          - (count(*) + 1) * sum(x) AS DOUBLE)
-                     / CAST(count(*) * sum(x) AS DOUBLE), 9) AS gini
-        FROM ranked GROUP BY metric"""
-
-    o["language_margin"] = f"""
-        WITH {llm_text._lang_scored_sql()}, arr AS (
-          SELECT doc_id, {llm_text._LANG_SCORES_SQL},
-                 list_sort([{llm_text._LANG_SCORES_SQL}]) AS a
-          FROM scored
-        )
-        SELECT doc_id, {llm_text._lang_pred_sql(_lang_best)} AS lang_pred,
-               round(a[-1], 9) AS score,
-               round(a[-2], 9) AS second_score,
-               round(a[-1] - a[-2], 9) AS margin
-        FROM arr"""
-
-    o["yoy_revenue"] = f"""
-        WITH monthly AS (
-          SELECT CAST(year(l_shipdate) AS BIGINT) AS yr,
-                 CAST(month(l_shipdate) AS BIGINT) AS mo,
-                 CAST(sum({_U}) AS BIGINT) AS rev_units
-          FROM lineitem GROUP BY 1, 2
-        )
-        SELECT c.yr, c.mo, c.rev_units,
-               p.rev_units AS prev_units,
-               round(CAST(c.rev_units - p.rev_units AS DOUBLE)
-                     / CAST(p.rev_units AS DOUBLE), 9) AS yoy_growth
-        FROM monthly c JOIN monthly p
-          ON c.yr = p.yr + 1 AND c.mo = p.mo"""
-
-    o["theilsen_slope"] = """
-        WITH r AS (
-          SELECT user_id,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS rn,
-                 CAST(round(value * 100) AS BIGINT) AS vc,
-                 epoch_us(ts) AS us
-          FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL
-        ), pairs AS (
-          SELECT a.user_id,
-                 CAST((b.vc - a.vc) * 1000000 AS DOUBLE)
-                 / CAST(b.us - a.us AS DOUBLE) AS slope
-          FROM r a JOIN r b
-            ON a.user_id = b.user_id AND b.rn > a.rn AND b.us <> a.us
-        )
-        SELECT user_id,
-               count(*) AS n_pairs,
-               round(quantile_cont(slope, 0.5), 9) AS median_slope_cps
-        FROM pairs GROUP BY user_id"""
-
-    o["holt_forecast"] = """
-        WITH RECURSIVE vpos AS (
-          SELECT user_id,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS i,
-                 value AS v
-          FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL
-        ), nn AS (
-          SELECT user_id, max(i) AS n FROM vpos GROUP BY 1
-        ), r AS (
-          SELECT a.user_id, 2 AS i, b.v AS level, b.v - a.v AS trend
-          FROM vpos a JOIN vpos b
-            ON a.user_id = b.user_id AND a.i = 1 AND b.i = 2
-          UNION ALL
-          SELECT r.user_id, r.i + 1,
-                 0.25 * p.v + 0.75 * (r.level + r.trend),
-                 0.125 * ((0.25 * p.v + 0.75 * (r.level + r.trend))
-                          - r.level)
-                 + 0.875 * r.trend
-          FROM r JOIN vpos p
-            ON p.user_id = r.user_id AND p.i = r.i + 1
-        )
-        SELECT r.user_id,
-               CAST(nn.n AS BIGINT) AS n_events,
-               round(r.level, 9) AS level,
-               round(r.trend, 9) AS trend,
-               round(r.level + r.trend, 9) AS forecast1
-        FROM r JOIN nn USING (user_id)
-        WHERE r.i = nn.n AND nn.n >= 2"""
-
-    o["brand_top_parts"] = """
-        SELECT p_brand, p_partkey, p_retailprice,
-               CAST(dense_rank() OVER (
-                 PARTITION BY p_brand ORDER BY p_retailprice DESC
-               ) AS BIGINT) AS price_tier
-        FROM part
-        QUALIFY price_tier <= 3"""
-
-    o["time_weighted_avg"] = """
-        WITH g AS (
-          SELECT user_id,
-                 CAST(round(value * 100) AS BIGINT) AS vc,
-                 epoch_us(lead(ts) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 )) - epoch_us(ts) AS gap
-          FROM events
-          WHERE value IS NOT NULL AND user_id IS NOT NULL
-        )
-        SELECT user_id,
-               count(*) AS n_intervals,
-               CAST(sum(gap) AS BIGINT) AS span_us,
-               round(CAST(sum(vc * gap) AS DOUBLE)
-                     / CAST(sum(gap) AS DOUBLE) / 100.0, 9) AS twa_value
-        FROM g WHERE gap IS NOT NULL
-        GROUP BY user_id"""
-
-    o["value_hour_corr"] = """
-        WITH m AS (
-          SELECT event_type,
-                 count(*) AS n,
-                 CAST(sum(x) AS BIGINT) AS sx,
-                 CAST(sum(y) AS BIGINT) AS sy,
-                 CAST(sum(x * y) AS BIGINT) AS sxy,
-                 CAST(sum(x * x) AS BIGINT) AS sxx,
-                 CAST(sum(y * y) AS BIGINT) AS syy
-          FROM (
-            SELECT event_type,
-                   CAST(round(value * 100) AS BIGINT) AS x,
-                   CAST(hour(ts) AS BIGINT) AS y
-            FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL
-          ) GROUP BY event_type
-        )
-        SELECT event_type, n,
-               round(CAST(n * sxy - sx * sy AS DOUBLE)
-                     / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                        * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 9)
-                 AS corr_vh
-        FROM m"""
-
-    o["dow_type_chi2"] = """
-        WITH cells AS (
-          SELECT event_type, CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-                 count(*) AS observed
-          FROM events WHERE user_id IS NOT NULL
-          GROUP BY 1, 2
-        ), rt AS (
-          SELECT event_type, CAST(sum(observed) AS BIGINT) AS r
-          FROM cells GROUP BY 1
-        ), ct AS (
-          SELECT dow, CAST(sum(observed) AS BIGINT) AS c
-          FROM cells GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(observed) AS BIGINT) AS N FROM cells
-        )
-        SELECT cells.event_type, cells.dow, observed,
-               round(CAST(r AS DOUBLE) * CAST(c AS DOUBLE)
-                     / CAST(N AS DOUBLE), 9) AS expected,
-               round((CAST(observed AS DOUBLE)
-                      - CAST(r AS DOUBLE) * CAST(c AS DOUBLE)
-                        / CAST(N AS DOUBLE))
-                     * (CAST(observed AS DOUBLE)
-                        - CAST(r AS DOUBLE) * CAST(c AS DOUBLE)
-                          / CAST(N AS DOUBLE))
-                     / (CAST(r AS DOUBLE) * CAST(c AS DOUBLE)
-                        / CAST(N AS DOUBLE)), 9) AS chi2_contrib
-        FROM cells
-        JOIN rt USING (event_type)
-        JOIN ct USING (dow)
-        CROSS JOIN tot"""
-
-    o["user_value_ranks"] = """
-        SELECT user_id, event_id,
-               CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-               round(percent_rank() OVER w, 9) AS pct_rank,
-               round(cume_dist() OVER w, 9) AS cume,
-               round(nth_value(value, 2) OVER (
-                 PARTITION BY user_id ORDER BY value, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING
-               ), 9) AS second_lowest
-        FROM events
-        WHERE user_id IS NOT NULL AND value IS NOT NULL
-        WINDOW w AS (PARTITION BY user_id ORDER BY value, event_id)"""
-
-    o["rfm_features"] = """
-        WITH hz AS (
-          SELECT max(ts) AS h FROM events WHERE user_id IS NOT NULL
-        )
-        SELECT user_id,
-               CAST(epoch_us(hz.h) - epoch_us(max(ts)) AS BIGINT) AS recency_us,
-               count(*) AS frequency,
-               round(sum(value), 9) AS monetary,
-               CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-               CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS active_days
-        FROM events, hz
-        WHERE user_id IS NOT NULL
-        GROUP BY user_id, hz.h"""
-
-    o["quota_apportion"] = """
-        WITH counts AS (
-          SELECT source, count(*) AS n_docs FROM documents GROUP BY source
-        ), tot AS (
-          SELECT CAST(sum(n_docs) AS BIGINT) AS N FROM counts
-        ), base AS (
-          SELECT source, n_docs,
-                 CAST((n_docs * 1000) // N AS BIGINT) AS base,
-                 CAST((n_docs * 1000) % N AS BIGINT) AS rem
-          FROM counts, tot
-        ), ranked AS (
-          SELECT b.source, b.n_docs, b.base, b.rem,
-                 (SELECT count(*) FROM base o
-                  WHERE o.rem > b.rem
-                     OR (o.rem = b.rem AND o.source < b.source)) AS ahead
-          FROM base b
-        ), extra AS (
-          SELECT CAST(1000 - sum(base) AS BIGINT) AS e FROM base
-        )
-        SELECT source,
-               CAST(n_docs AS BIGINT) AS n_docs,
-               base, rem,
-               CAST(base + CASE WHEN ahead < e THEN 1 ELSE 0 END AS BIGINT)
-                 AS seats
-        FROM ranked, extra"""
-
-    o["position_attribution"] = """
-        WITH fp AS (
-          SELECT user_id, min(ts) AS pts
-          FROM events WHERE event_type = 'purchase' GROUP BY 1
-        ), v AS (
-          SELECT e.user_id, e.event_id AS view_id, e.ts
-          FROM events e JOIN fp USING (user_id)
-          WHERE e.event_type = 'view' AND e.user_id IS NOT NULL
-            AND e.ts < fp.pts
-        ), r AS (
-          SELECT user_id, view_id,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts, view_id) AS pos,
-                 count(*) OVER (PARTITION BY user_id) AS n_views
-          FROM v
-        )
-        SELECT user_id, view_id,
-               CAST(pos AS BIGINT) AS pos,
-               CAST(n_views AS BIGINT) AS n_views,
-               round(CASE
-                 WHEN n_views = 1 THEN CAST(1.0 AS DOUBLE)
-                 WHEN pos = 1 THEN CASE WHEN n_views = 2
-                                        THEN CAST(0.5 AS DOUBLE)
-                                        ELSE CAST(0.4 AS DOUBLE) END
-                 WHEN pos = n_views THEN CASE WHEN n_views = 2
-                                              THEN CAST(0.5 AS DOUBLE)
-                                              ELSE CAST(0.4 AS DOUBLE) END
-                 ELSE CAST(0.2 AS DOUBLE) / (n_views - 2)
-               END, 9) AS credit
-        FROM r"""
-
-    o["late_line_priority"] = """
-        SELECT l_linestatus,
-               CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                             THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-               CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-                             THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        WHERE l_shipdate > o_orderdate + INTERVAL 30 DAY
-        GROUP BY l_linestatus"""
-
-    o["excess_suppliers"] = """
-        WITH shipped AS (
-          SELECT l_suppkey, l_partkey,
-                 CAST(sum(l_quantity) AS BIGINT) AS qty
-          FROM lineitem
-          WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
-            AND l_shipdate <  TIMESTAMP '1996-01-01 00:00:00'
-            AND l_partkey IN (
-              SELECT p_partkey FROM part WHERE p_name LIKE '%red%'
-            )
-          GROUP BY 1, 2
-        )
-        SELECT s_suppkey, s_name, n_name
-        FROM supplier JOIN nation ON s_nationkey = n_nationkey
-        WHERE s_suppkey IN (
-          SELECT l_suppkey FROM shipped WHERE qty > 50
-        )"""
-
-    o["brand_cooccurrence"] = """
-        WITH ob AS (
-          SELECT DISTINCT l_orderkey, p_brand
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-        ), no AS (
-          SELECT count(DISTINCT l_orderkey) AS n FROM ob
-        ), pb AS (
-          SELECT p_brand, count(*) AS nb FROM ob GROUP BY 1
-        ), pairs AS (
-          SELECT a.p_brand AS brand_a, b.p_brand AS brand_b,
-                 count(*) AS n_ab
-          FROM ob a JOIN ob b
-            ON a.l_orderkey = b.l_orderkey AND a.p_brand < b.p_brand
-          GROUP BY 1, 2
-        )
-        SELECT brand_a, brand_b, CAST(n_ab AS BIGINT) AS n_ab,
-               round((CAST(n_ab AS DOUBLE) * no.n)
-                     / (CAST(na.nb AS DOUBLE) * nb.nb), 9) AS lift
-        FROM pairs, no
-        JOIN pb na ON na.p_brand = brand_a
-        JOIN pb nb ON nb.p_brand = brand_b
-        ORDER BY n_ab DESC, brand_a, brand_b
-        LIMIT 20"""
-
-    o["epoch_repeat"] = sampling.epoch_repeat_oracle_sql(
-        {"src0": 2.5, "src1": 1.25, "src2": 0.5}, seed="ep6"
-    )
-
-    o["sorted_neighborhood"] = dedup.sorted_neighborhood_oracle_sql(
-        window=4, key_len=12
-    )
-
-    o["cluster_cohesion"] = dedup.cluster_cohesion_oracle_sql()
-
-    # list_reduce is the same sequential left fold (seed = first
-    # element) as the Spark aggregate over the (ts, event_id)-ordered
-    # value list; alpha = 1/4 is dyadic, so both recursions are
-    # bit-identical
-    o["ewma_user_value"] = """
-        SELECT user_id,
-               count(*) AS n_events,
-               round(list_reduce(
-                 CAST(list(value ORDER BY ts, event_id) AS DOUBLE[]),
-                 (acc, x) -> 0.25 * x + 0.75 * acc), 9) AS ewma
-        FROM events
-        WHERE value IS NOT NULL AND user_id IS NOT NULL
-        GROUP BY user_id"""
-
-    # ann_recall composes the two already-oracled retrieval replays as
-    # derived tables, so truth and candidates come from the exact SQL
-    # the standalone gates check
-    o["ann_recall"] = f"""
-        SELECT t.q_id,
-               CAST(count(c.vec_id) AS BIGINT) AS hits,
-               round(count(c.vec_id) / 5.0, 9) AS recall
-        FROM ({o["knn_cosine"]}) t
-        LEFT JOIN ({o["ivf_topk"]}) c
-          ON t.q_id = c.q_id AND t.vec_id = c.vec_id
-        GROUP BY t.q_id"""
-
-    o["unshipped_orders"] = f"""
-        SELECT l_orderkey, o_orderdate, o_orderpriority,
-               CAST(sum({_U}) AS BIGINT) AS rev_units
-        FROM customer
-        JOIN orders   ON c_custkey = o_custkey
-        JOIN lineitem ON o_orderkey = l_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1995-06-01 00:00:00'
-          AND l_shipdate  > TIMESTAMP '1995-06-01 00:00:00'
-        GROUP BY 1, 2, 3
-        ORDER BY rev_units DESC, l_orderkey ASC
-        LIMIT 10"""
-
-    o["streaming_upsert"] = """
-        SELECT user_id, max(ts) AS last_seen,
-               count(*) AS n_events,
-               round(sum(value), 9) AS sum_value
-        FROM events WHERE user_id IS NOT NULL GROUP BY user_id"""
-
-    o["ohlc_bars"] = """
-        WITH e AS (
-          SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP)
-                   AS bar_start,
-                 value, ts, event_id
-          FROM events WHERE value IS NOT NULL
-        ), r AS (
-          SELECT *,
-                 row_number() OVER (PARTITION BY event_type, bar_start
-                                    ORDER BY ts, event_id) AS rn_a,
-                 row_number() OVER (PARTITION BY event_type, bar_start
-                                    ORDER BY ts DESC, event_id DESC) AS rn_d
-          FROM e
-        )
-        SELECT event_type, bar_start,
-               max(CASE WHEN rn_a = 1 THEN value END) AS open,
-               max(value) AS high,
-               min(value) AS low,
-               max(CASE WHEN rn_d = 1 THEN value END) AS close,
-               count(*) AS n_events,
-               round(sum(value), 9) AS volume
-        FROM r GROUP BY 1, 2"""
-
-    _mix_h = sampling.salted_hash_sql("d.doc_id", "mix6")
-    _HS = sampling.HASH_SPACE
-    o["mixture_pipeline"] = f"""
-        WITH {dedup.bloom_flags_ctes("doc_id % 7 = 0", "doc_id % 7 <> 0")},
-        screened AS (
-          SELECT doc_id, source FROM flags WHERE NOT bloom_hit
-        ), withcopies AS (
-          SELECT doc_id, source,
-                 (CASE WHEN source = 'src0' THEN 2
-                       WHEN source = 'src1' THEN 1
-                       WHEN source = 'src2' THEN 0
-                       ELSE 1 END
-                  + CASE WHEN {_mix_h} <
-                           (CASE WHEN source = 'src1' THEN {_HS // 2}
-                                 WHEN source = 'src2' THEN {_HS // 4}
-                                 ELSE 0 END)
-                         THEN 1 ELSE 0 END) AS copies
-          FROM screened d
-        ), rep AS (
-          SELECT doc_id, source, g.epoch FROM withcopies,
-            LATERAL (SELECT CAST(unnest(generate_series(1, copies)) AS BIGINT)
-                     AS epoch) g
-          WHERE copies > 0
-        )
-        SELECT source,
-               count(*) AS n_rows,
-               CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-               CAST(max(epoch) AS BIGINT) AS max_epoch
-        FROM rep GROUP BY source"""
-
-    _ab_h = sampling.salted_hash_sql("user_id", "ab6")
-    _ab_half = sampling.HASH_SPACE // 2
-    o["ab_test_zscore"] = f"""
-        WITH pu AS (
-          SELECT user_id,
-                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                      >= 14 AS BIGINT) AS conv,
-                 CASE WHEN {_ab_h} < {_ab_half} THEN 'A' ELSE 'B' END AS arm
-          FROM events WHERE user_id IS NOT NULL
-          GROUP BY user_id
-        ), s AS (
-          SELECT
-            CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-            CAST(sum(CASE WHEN arm = 'A' THEN conv ELSE 0 END) AS BIGINT)
-              AS conv_a,
-            CAST(sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-            CAST(sum(CASE WHEN arm = 'B' THEN conv ELSE 0 END) AS BIGINT)
-              AS conv_b
-          FROM pu
-        )
-        SELECT n_a, conv_a, n_b, conv_b,
-               round(CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE), 9)
-                 AS rate_a,
-               round(CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE), 9)
-                 AS rate_b,
-               round(
-                 (CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-                  - CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-                 / sqrt(
-                     (CAST(conv_a + conv_b AS DOUBLE)
-                      / CAST(n_a + n_b AS DOUBLE))
-                     * (1 - CAST(conv_a + conv_b AS DOUBLE)
-                            / CAST(n_a + n_b AS DOUBLE))
-                     * (1 / CAST(n_a AS DOUBLE) + 1 / CAST(n_b AS DOUBLE))
-                   ), 9) AS z_score
-        FROM s"""
-
-    _theta_sql = (
-        "(CAST(n * sxy - sx * sy AS DOUBLE)"
-        " / CAST(n * sxx - sx * sx AS DOUBLE))"
-    )
-    _xbar_sql = "(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
-    o["cuped_adjust"] = f"""
-        WITH pu AS (
-          SELECT user_id,
-                 CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                               THEN CAST(round(value * 100) AS BIGINT)
-                               ELSE 0 END) AS BIGINT) AS x,
-                 CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                               THEN 0
-                               ELSE CAST(round(value * 100) AS BIGINT)
-                          END) AS BIGINT) AS y,
-                 CASE WHEN {_ab_h} < {_ab_half} THEN 'A' ELSE 'B' END AS arm
-          FROM events
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-          GROUP BY user_id
-        ), g AS (
-          SELECT CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(x) AS BIGINT) AS sx,
-                 CAST(sum(y) AS BIGINT) AS sy,
-                 CAST(sum(x * y) AS BIGINT) AS sxy,
-                 CAST(sum(x * x) AS BIGINT) AS sxx
-          FROM pu
-        ), arms AS (
-          SELECT arm, CAST(count(*) AS BIGINT) AS n_users,
-                 CAST(sum(x) AS BIGINT) AS ax,
-                 CAST(sum(y) AS BIGINT) AS ay
-          FROM pu GROUP BY arm
-        )
-        SELECT arm, n_users,
-               round(CAST(ay AS DOUBLE) / CAST(n_users AS DOUBLE), 9)
-                 AS mean_post_cents,
-               round(
-                 (CAST(ay AS DOUBLE)
-                  - {_theta_sql}
-                    * (CAST(ax AS DOUBLE)
-                       - CAST(n_users AS DOUBLE) * {_xbar_sql}))
-                 / CAST(n_users AS DOUBLE), 9) AS mean_adj_cents,
-               round({_theta_sql}, 9) AS theta
-        FROM arms CROSS JOIN g"""
-
-    _theta_strat_sql = (
-        "(CAST(n * sxy - sx * sy AS DOUBLE)"
-        " / CAST(nullif(n * sxx - sx * sx, 0) AS DOUBLE))"
-    )
-    o["cuped_stratified"] = f"""
-        WITH pu AS (
-          SELECT user_id,
-                 CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                               THEN CAST(round(value * 100) AS BIGINT)
-                               ELSE 0 END) AS BIGINT) AS x,
-                 CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                               THEN 0
-                               ELSE CAST(round(value * 100) AS BIGINT)
-                          END) AS BIGINT) AS y,
-                 CAST(sum(CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00'
-                               THEN 1 ELSE 0 END) AS BIGINT) AS npre,
-                 CASE WHEN {_ab_h} < {_ab_half} THEN 'A' ELSE 'B' END AS arm
-          FROM events
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-          GROUP BY user_id
-        ), pt AS (
-          SELECT *,
-                 CASE WHEN npre <= 30 THEN 'low'
-                      WHEN npre <= 36 THEN 'mid'
-                      ELSE 'high' END AS tier
-          FROM pu
-        ), g AS (
-          SELECT tier,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(x) AS BIGINT) AS sx,
-                 CAST(sum(y) AS BIGINT) AS sy,
-                 CAST(sum(x * y) AS BIGINT) AS sxy,
-                 CAST(sum(x * x) AS BIGINT) AS sxx
-          FROM pt GROUP BY tier
-        ), arms AS (
-          SELECT tier, arm, CAST(count(*) AS BIGINT) AS n_users,
-                 CAST(sum(x) AS BIGINT) AS ax,
-                 CAST(sum(y) AS BIGINT) AS ay
-          FROM pt GROUP BY tier, arm
-        )
-        SELECT a.tier AS tier, a.arm AS arm, a.n_users AS n_users,
-               round(CAST(ay AS DOUBLE) / CAST(n_users AS DOUBLE), 9)
-                 AS mean_post_cents,
-               round(
-                 (CAST(ay AS DOUBLE)
-                  - coalesce({_theta_strat_sql}, 0)
-                    * (CAST(ax AS DOUBLE)
-                       - CAST(n_users AS DOUBLE)
-                         * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))))
-                 / CAST(n_users AS DOUBLE), 9) AS mean_adj_cents,
-               round({_theta_strat_sql}, 9) AS theta
-        FROM arms a JOIN g ON a.tier = g.tier"""
-
-    o["link_prediction"] = """
-        WITH ob AS (
-          SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        ), deg AS (
-          SELECT o, CAST(count(*) AS BIGINT) AS deg FROM ob GROUP BY o
-        ), pr AS (
-          SELECT a.p AS part_a, b.p AS part_b, d.deg
-          FROM ob a
-          JOIN ob b ON a.o = b.o AND a.p < b.p
-          JOIN deg d ON d.o = a.o
-        )
-        SELECT part_a, part_b,
-               CAST(count(*) AS BIGINT) AS cn_orders,
-               round(sum(1 / CAST(deg AS DOUBLE)), 9) AS ra_score,
-               round(sum(1 / ln(CAST(deg AS DOUBLE))), 9) AS aa_score
-        FROM pr GROUP BY part_a, part_b
-        HAVING count(*) >= 2"""
-
-    o["markov_transitions"] = """
-        WITH s AS (
-          SELECT event_type AS from_type,
-                 lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS to_type
-          FROM events WHERE user_id IS NOT NULL
-        ), t AS (
-          SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-          FROM s WHERE to_type IS NOT NULL
-          GROUP BY from_type, to_type
-        ), rt AS (
-          SELECT from_type, CAST(sum(n) AS BIGINT) AS rt FROM t
-          GROUP BY from_type
-        )
-        SELECT t.from_type, t.to_type, t.n,
-               round(CAST(t.n AS DOUBLE) / CAST(rt.rt AS DOUBLE), 9) AS prob
-        FROM t JOIN rt ON rt.from_type = t.from_type"""
-
-    _zslope_sql = (
-        "((CAST(n AS DOUBLE) * sxy - sx * sy)"
-        " / (CAST(n AS DOUBLE) * sxx - sx * sx))"
-    )
-    o["zipf_fit"] = f"""
-        WITH toks AS ({llm_text._token_rows_sql("", "word")}), vocab AS (
-          SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY word
-        ), ranked AS (
-          SELECT cnt,
-                 CAST(row_number() OVER (ORDER BY cnt DESC, word) AS BIGINT)
-                   AS rank
-          FROM vocab
-        ), m AS (
-          SELECT CAST(count(*) AS BIGINT) AS n,
-                 sum(ln(CAST(rank AS DOUBLE))) AS sx,
-                 sum(ln(CAST(cnt AS DOUBLE))) AS sy,
-                 sum(ln(CAST(rank AS DOUBLE)) * ln(CAST(cnt AS DOUBLE)))
-                   AS sxy,
-                 sum(ln(CAST(rank AS DOUBLE)) * ln(CAST(rank AS DOUBLE)))
-                   AS sxx
-          FROM ranked WHERE rank <= 200
-        )
-        SELECT n,
-               round({_zslope_sql}, 9) AS zipf_slope,
-               round((sy - {_zslope_sql} * sx) / CAST(n AS DOUBLE), 9)
-                 AS ln_intercept
-        FROM m"""
-
-    o["char_entropy"] = """
-        WITH ch AS (
-          SELECT source, u.ch AS ch
-          FROM (
-            SELECT source, string_split(text, '') AS cl
-            FROM documents WHERE text IS NOT NULL
-          ), unnest(cl) AS u(ch)
-        ), c AS (
-          SELECT source, ch, CAST(count(*) AS BIGINT) AS cnt
-          FROM ch GROUP BY source, ch
-        ), tot AS (
-          SELECT source, CAST(sum(cnt) AS BIGINT) AS n FROM c GROUP BY source
-        )
-        SELECT c.source,
-               max(tot.n) AS n_chars,
-               CAST(count(*) AS BIGINT) AS alphabet,
-               round(-sum((CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE))
-                          * log2(CAST(cnt AS DOUBLE) / CAST(n AS DOUBLE))),
-                     9) AS entropy_bits
-        FROM c JOIN tot ON tot.source = c.source
-        GROUP BY c.source"""
-
-    o["minhash_containment"] = dedup.containment_verify_oracle_sql(k=5)
-
-    o["kaplan_meier"] = """
-        WITH fe AS (
-          SELECT user_id,
-                 min(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                     + 1) AS day
-          FROM events
-          WHERE user_id IS NOT NULL AND event_type = 'purchase'
-            AND value > 200
-          GROUP BY user_id
-        ), d AS (
-          SELECT day, CAST(count(*) AS BIGINT) AS deaths FROM fe
-          GROUP BY day
-        ), ntot AS (
-          SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n FROM events
-          WHERE user_id IS NOT NULL
-        ), w AS (
-          SELECT day, deaths,
-                 CAST(ntot.n - coalesce(
-                   sum(deaths) OVER (
-                     ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) AS at_risk
-          FROM d CROSS JOIN ntot
-        ), s AS (
-          SELECT day, at_risk, deaths,
-                 sum(ln(1 - CAST(deaths AS DOUBLE)
-                            / CAST(at_risk AS DOUBLE))) OVER (
-                   ORDER BY day
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                 ) AS lnsum
-          FROM w
-        )
-        SELECT CAST(day AS BIGINT) AS day, at_risk, deaths,
-               round(exp(lnsum), 9) AS survival
-        FROM s"""
-
-    o["readability"] = f"""
-        WITH c AS (
-          SELECT doc_id,
-                 CAST({llm_text.token_count_sql()} AS BIGINT) AS n_words,
-                 CAST(greatest(len(regexp_extract_all(text, '[.!?]+')), 1)
-                      AS BIGINT) AS n_sentences,
-                 CAST(len(regexp_extract_all(text, '[aeiouy]+')) AS BIGINT)
-                   AS n_syllables
-          FROM documents WHERE text IS NOT NULL
-        )
-        SELECT doc_id, n_words, n_sentences, n_syllables,
-               round(206.835
-                     - 1.015 * (CAST(n_words AS DOUBLE)
-                                / CAST(n_sentences AS DOUBLE))
-                     - 84.6 * (CAST(n_syllables AS DOUBLE)
-                               / CAST(n_words AS DOUBLE)), 9) AS flesch
-        FROM c WHERE n_words > 0"""
-
-    o["moments_by_type"] = """
-        WITH m AS (
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(x) AS BIGINT) AS s1,
-                 CAST(sum(x * x) AS BIGINT) AS s2,
-                 CAST(sum(x * x * x) AS BIGINT) AS s3,
-                 CAST(sum(x * x * x * x) AS BIGINT) AS s4
-          FROM (
-            SELECT event_type, CAST(round(value) AS BIGINT) AS x
-            FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-          )
-          GROUP BY event_type
-        )
-        SELECT event_type, n,
-               round(CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE), 9) AS mean_usd,
-               round(
-                 (CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE)
-                  - 3 * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE))
-                  + 2 * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))
-                 / ((CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-                     - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))
-                    * sqrt(CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-                           - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                             * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))),
-                 9) AS skewness,
-               round(
-                 (CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE)
-                  - 4 * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE))
-                  + 6 * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE))
-                  - 3 * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                      * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))
-                 / ((CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-                     - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)))
-                    * (CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-                       - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))))
-                 - 3, 9) AS excess_kurtosis
-        FROM m"""
-
-    o["mutual_information"] = """
-        WITH cells AS (
-          SELECT event_type, CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-                 CAST(count(*) AS BIGINT) AS n_ij
-          FROM events WHERE user_id IS NOT NULL
-          GROUP BY event_type, dayofweek(ts)
-        ), r AS (
-          SELECT event_type, CAST(sum(n_ij) AS BIGINT) AS ri FROM cells
-          GROUP BY event_type
-        ), c AS (
-          SELECT dow, CAST(sum(n_ij) AS BIGINT) AS cj FROM cells
-          GROUP BY dow
-        ), t AS (SELECT CAST(sum(n_ij) AS BIGINT) AS N FROM cells)
-        SELECT cells.event_type, cells.dow, cells.n_ij,
-               round((CAST(n_ij AS DOUBLE) / CAST(N AS DOUBLE))
-                     * log2(CAST(n_ij * N AS DOUBLE)
-                            / CAST(ri * cj AS DOUBLE)), 9) AS mi_bits
-        FROM cells
-        JOIN r ON r.event_type = cells.event_type
-        JOIN c ON c.dow = cells.dow
-        CROSS JOIN t"""
-
-    o["lognormal_fit"] = """
-        WITH m AS (
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(ln(CAST(CAST(round(value * 100) AS BIGINT) AS DOUBLE)))
-                   AS sl,
-                 sum(ln(CAST(CAST(round(value * 100) AS BIGINT) AS DOUBLE))
-                     * ln(CAST(CAST(round(value * 100) AS BIGINT)
-                               AS DOUBLE))) AS sll
-          FROM events WHERE user_id IS NOT NULL AND value > 0
-          GROUP BY event_type
-        )
-        SELECT event_type, n,
-               round(sl / CAST(n AS DOUBLE), 9) AS mu_ln_cents,
-               round(sqrt(sll / CAST(n AS DOUBLE)
-                          - (sl / CAST(n AS DOUBLE))
-                            * (sl / CAST(n AS DOUBLE))), 9)
-                 AS sigma_ln_cents
-        FROM m"""
-
-    o["histogram_quantiles"] = """
-        WITH e AS (
-          SELECT event_type, CAST(round(value * 100) AS BIGINT) AS cents
-          FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-        ), bins AS (
-          SELECT event_type,
-                 CAST(floor(CAST(cents * 64 AS DOUBLE)
-                            / CAST(49003 AS DOUBLE)) AS BIGINT) AS bin,
-                 CAST(count(*) AS BIGINT) AS cnt
-          FROM e GROUP BY 1, 2
-        ), tot AS (
-          SELECT event_type, CAST(sum(cnt) AS BIGINT) AS n FROM bins
-          GROUP BY event_type
-        ), cum AS (
-          SELECT a.event_type, a.bin, CAST(sum(b.cnt) AS BIGINT) AS cum
-          FROM bins a
-          JOIN bins b ON b.event_type = a.event_type AND b.bin <= a.bin
-          GROUP BY a.event_type, a.bin
-        ), est AS (
-          SELECT c.event_type,
-                 min(CASE WHEN c.cum * 100 >= 50 * t.n THEN c.bin END)
-                   AS bin_p50,
-                 min(CASE WHEN c.cum * 100 >= 90 * t.n THEN c.bin END)
-                   AS bin_p90,
-                 min(CASE WHEN c.cum * 100 >= 99 * t.n THEN c.bin END)
-                   AS bin_p99
-          FROM cum c JOIN tot t ON t.event_type = c.event_type
-          GROUP BY c.event_type
-        ), ex AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                 round(quantile_cont(cents, 0.5), 6) AS exact_p50,
-                 round(quantile_cont(cents, 0.9), 6) AS exact_p90,
-                 round(quantile_cont(cents, 0.99), 6) AS exact_p99
-          FROM e GROUP BY event_type
-        )
-        SELECT ex.event_type, ex.n,
-               est.bin_p50,
-               round(CAST(est.bin_p50 AS DOUBLE)
-                     * CAST(765.671875 AS DOUBLE), 6) AS est_p50,
-               ex.exact_p50,
-               est.bin_p90,
-               round(CAST(est.bin_p90 AS DOUBLE)
-                     * CAST(765.671875 AS DOUBLE), 6) AS est_p90,
-               ex.exact_p90,
-               est.bin_p99,
-               round(CAST(est.bin_p99 AS DOUBLE)
-                     * CAST(765.671875 AS DOUBLE), 6) AS est_p99,
-               ex.exact_p99
-        FROM ex JOIN est ON est.event_type = ex.event_type"""
-
-    _daily_cte = """
-          SELECT CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                      + 1 AS BIGINT) AS day,
-                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-          FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-          GROUP BY 1"""
-    o["daily_acf"] = f"""
-        WITH daily AS ({_daily_cte}
-        ), p AS (
-          SELECT l.lag, a.x AS x, b.x AS y
-          FROM daily a
-          CROSS JOIN (
-            SELECT CAST(unnest(generate_series(1, 7)) AS BIGINT) AS lag
-          ) l
-          JOIN daily b ON b.day = a.day + l.lag
-        ), m AS (
-          SELECT lag, CAST(count(*) AS BIGINT) AS n_pairs,
-                 CAST(sum(x) AS BIGINT) AS sx,
-                 CAST(sum(y) AS BIGINT) AS sy,
-                 CAST(sum(x * y) AS BIGINT) AS sxy,
-                 CAST(sum(x * x) AS BIGINT) AS sxx,
-                 CAST(sum(y * y) AS BIGINT) AS syy
-          FROM p GROUP BY lag
-        )
-        SELECT lag, n_pairs,
-               round(CAST(n_pairs * sxy - sx * sy AS DOUBLE)
-                     / (sqrt(CAST(n_pairs * sxx - sx * sx AS DOUBLE))
-                        * sqrt(CAST(n_pairs * syy - sy * sy AS DOUBLE))),
-                     9) AS acf
-        FROM m"""
-
-    o["seasonal_decompose"] = """
-        WITH daily AS (
-          SELECT CAST(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                      + 1 AS BIGINT) AS day,
-                 CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x
-          FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-          GROUP BY 1, 2
-        ), tr AS (
-          SELECT a.day, a.dow, a.x,
-                 CAST(count(*) AS BIGINT) AS w,
-                 CAST(sum(b.x) AS BIGINT) AS ws
-          FROM daily a
-          JOIN daily b ON b.day BETWEEN a.day - 3 AND a.day + 3
-          GROUP BY a.day, a.dow, a.x
-        ), t2 AS (
-          SELECT day, dow, x,
-                 CAST(ws AS DOUBLE) / 7 AS trend,
-                 CAST(x AS DOUBLE) - CAST(ws AS DOUBLE) / 7 AS dev
-          FROM tr WHERE w = 7
-        ), seas AS (
-          SELECT dow, sum(dev) / CAST(count(*) AS DOUBLE) AS seasonal
-          FROM t2 GROUP BY dow
-        )
-        SELECT t2.day, t2.dow, t2.x AS revenue_cents,
-               round(trend, 9) AS trend,
-               round(seasonal, 9) AS seasonal,
-               round(dev - seasonal, 9) AS residual
-        FROM t2 JOIN seas ON seas.dow = t2.dow"""
-
-    o["changepoint"] = f"""
-        WITH daily AS ({_daily_cte}
-        ), cum AS (
-          SELECT a.day, CAST(count(*) AS BIGINT) AS k,
-                 CAST(sum(b.x) AS BIGINT) AS s_k
-          FROM daily a JOIN daily b ON b.day <= a.day
-          GROUP BY a.day
-        ), tot AS (
-          SELECT CAST(max(k) AS BIGINT) AS n,
-                 CAST(max(s_k) AS BIGINT) AS s_n
-          FROM cum
-        )
-        SELECT day, k,
-               CAST(abs(n * s_k - k * s_n) AS BIGINT) AS stat,
-               round(CAST(abs(n * s_k - k * s_n) AS DOUBLE)
-                     / (CAST(n AS DOUBLE) * CAST(s_n AS DOUBLE)), 9)
-                 AS norm_stat
-        FROM cum CROSS JOIN tot
-        ORDER BY stat DESC, day LIMIT 1"""
-
-    o["conversion_lag"] = """
-        WITH fu AS (
-          SELECT user_id,
-                 min(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END)
-                   AS s,
-                 min(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-                   AS p
-          FROM events WHERE user_id IS NOT NULL
-          GROUP BY user_id
-        ), conv AS (
-          SELECT CAST(p - s AS BIGINT) AS lag_us FROM fu
-          WHERE s IS NOT NULL AND p IS NOT NULL AND p > s
-        )
-        SELECT CAST(count(*) AS BIGINT) AS n_converted,
-               round(quantile_cont(lag_us, 0.5)
-                     / CAST(1000000 AS DOUBLE), 6) AS p50_seconds,
-               round(quantile_cont(lag_us, 0.9)
-                     / CAST(1000000 AS DOUBLE), 6) AS p90_seconds
-        FROM conv"""
-
-    o["nb_lang_scores"] = f"""
-        WITH toks AS ({llm_text._token_rows_sql("doc_id, lang")}), cnt AS (
-          SELECT lang, w, CAST(count(*) AS BIGINT) AS cnt FROM toks
-          GROUP BY lang, w
-        ), tot AS (
-          SELECT lang, CAST(sum(cnt) AS BIGINT) AS tot FROM cnt
-          GROUP BY lang
-        ), vocab AS (SELECT DISTINCT w FROM cnt),
-        vs AS (SELECT CAST(count(*) AS BIGINT) AS v FROM vocab),
-        model AS (
-          SELECT t.lang, vb.w,
-                 ln(CAST(coalesce(c.cnt, 0) + 1 AS DOUBLE)
-                    / CAST(t.tot + vs.v AS DOUBLE)) AS lp
-          FROM vocab vb
-          CROSS JOIN tot t
-          LEFT JOIN cnt c ON c.lang = t.lang AND c.w = vb.w
-          CROSS JOIN vs
-        )
-        SELECT tk.doc_id, m.lang AS score_lang,
-               CAST(count(*) AS BIGINT) AS n_tokens,
-               round(sum(m.lp), 9) AS log_score
-        FROM (SELECT doc_id, w FROM toks) tk
-        JOIN model m ON m.w = tk.w
-        GROUP BY tk.doc_id, m.lang"""
-
-    o["k_anonymity"] = """
-        WITH g AS (
-          SELECT c_nationkey, c_mktsegment, CAST(count(*) AS BIGINT) AS sz
-          FROM customer GROUP BY c_nationkey, c_mktsegment
-        )
-        SELECT CAST(count(*) AS BIGINT) AS n_groups,
-               CAST(min(sz) AS BIGINT) AS k_anonymity,
-               CAST(sum(CASE WHEN sz < 10 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS groups_below_10,
-               CAST(sum(CASE WHEN sz < 10 THEN sz ELSE 0 END) AS BIGINT)
-                 AS records_at_risk
-        FROM g"""
-
-    o["l_diversity"] = """
-        SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-               c_mktsegment AS mktsegment,
-               CAST(count(*) AS BIGINT) AS group_size,
-               CAST(count(DISTINCT CAST(floor(
-                 (c_acctbal + CAST(10000 AS DOUBLE))
-                 / CAST(1000 AS DOUBLE)) AS BIGINT)) AS BIGINT)
-                 AS l_diversity
-        FROM customer GROUP BY c_nationkey, c_mktsegment"""
-
-    _dp_h = sampling.salted_hash_sql("event_type", "dp6")
-    _dp_noise = (
-        f"((-2.0 * CASE WHEN (CAST({_dp_h} AS DOUBLE) + 0.5)"
-        f" / CAST({sampling.HASH_SPACE} AS DOUBLE) - 0.5 < 0"
-        f" THEN -1.0 ELSE 1.0 END)"
-        f" * ln(1 - 2 * abs((CAST({_dp_h} AS DOUBLE) + 0.5)"
-        f" / CAST({sampling.HASH_SPACE} AS DOUBLE) - 0.5)))"
-    )
-    o["dp_noised_counts"] = f"""
-        WITH cnt AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n
-          FROM events WHERE user_id IS NOT NULL
-          GROUP BY event_type
-        )
-        SELECT event_type, n,
-               round({_dp_noise}, 9) AS noise,
-               round(CAST(n AS DOUBLE) + {_dp_noise}, 9) AS noised_n
-        FROM cnt"""
-
-    o["outlier_mad"] = """
-        WITH r AS (
-          SELECT event_type, CAST(round(value * 100) AS BIGINT) AS c
-          FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-        ), med AS (
-          SELECT event_type, quantile_cont(c, 0.5) AS med FROM r
-          GROUP BY event_type
-        ), mad AS (
-          SELECT r.event_type,
-                 quantile_cont(abs(CAST(c AS DOUBLE) - m.med), 0.5) AS mad
-          FROM r JOIN med m ON m.event_type = r.event_type
-          GROUP BY r.event_type
-        )
-        SELECT r.event_type,
-               CAST(count(*) AS BIGINT) AS n,
-               round(max(m.med), 6) AS med_cents,
-               round(max(d.mad), 6) AS mad_cents,
-               CAST(sum(CASE WHEN abs(CAST(c AS DOUBLE) - m.med)
-                                  > 3 * CAST(1.4826 AS DOUBLE) * d.mad
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        FROM r
-        JOIN med m ON m.event_type = r.event_type
-        JOIN mad d ON d.event_type = r.event_type
-        GROUP BY r.event_type"""
-
-    o["lsh_recall"] = (
-        dedup._cand_ctes(5, 64, 8)
-        + """, shd2 AS (
-          SELECT DISTINCT doc_id, substring(txt, u.i, 5) AS s
-          FROM norm,
-               unnest(generate_series(1, greatest(length(txt) - 4, 1)))
-                 AS u(i)
-        ), sz2 AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM shd2
-          GROUP BY doc_id
-        ), inter2 AS (
-          SELECT sa.doc_id AS a, sb.doc_id AS b,
-                 CAST(count(*) AS BIGINT) AS i
-          FROM shd2 sa
-          JOIN shd2 sb ON sb.s = sa.s AND sa.doc_id < sb.doc_id
-          GROUP BY sa.doc_id, sb.doc_id
-        ), truth AS (
-          SELECT i2.a, i2.b
-          FROM inter2 i2
-          JOIN sz2 za ON za.doc_id = i2.a
-          JOIN sz2 zb ON zb.doc_id = i2.b
-          WHERE CAST(i2.i AS DOUBLE)
-                / CAST(za.n + zb.n - i2.i AS DOUBLE) >= 0.8
-        ), tagged AS (
-          -- mirror of the engine's single-pass tagged union (round 15,
-          -- per ADVICE): identical to the former truth-LEFT-JOIN-cand +
-          -- separate n_cand count on every non-degenerate input, and
-          -- identical on the degenerate zero-truth corpus too (the old
-          -- left-join form read n_found = NULL there while the engine
-          -- reads 0)
-          SELECT a, b, max(_t) AS _t, max(_c) AS _c FROM (
-            SELECT a, b, 1 AS _t, 0 AS _c FROM truth
-            UNION ALL
-            SELECT a, b, 0 AS _t, 1 AS _c FROM cand
-          ) GROUP BY a, b
-        ), hits AS (
-          SELECT CAST(sum(_t) AS BIGINT) AS n_true,
-                 CAST(sum(_t * _c) AS BIGINT) AS n_found,
-                 CAST(sum(_c) AS BIGINT) AS n_cand
-          FROM tagged
-        )
-        SELECT n_true, n_found, n_cand,
-               round(CAST(n_found AS DOUBLE) / CAST(n_true AS DOUBLE), 9)
-                 AS recall,
-               round(CAST(n_found AS DOUBLE) / CAST(n_cand AS DOUBLE), 9)
-                 AS candidate_precision
-        FROM hits"""
-    )
-
-    o["dim_truncation_recall"] = """
-        WITH q AS (
-          SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id < 3
-        ), c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv
-          FROM embeddings WHERE vec_id >= 3
-        ), full5 AS (
-          SELECT q_id, vec_id FROM (
-            SELECT q_id, vec_id,
-                   CAST(row_number() OVER (
-                     PARTITION BY q_id
-                     ORDER BY list_cosine_similarity(cv, qv) DESC, vec_id
-                   ) AS BIGINT) AS rank
-            FROM c CROSS JOIN q
-          ) WHERE rank <= 5
-        ), t5 AS (
-          SELECT q_id, vec_id FROM (
-            SELECT q.q_id, c.vec_id,
-                   CAST(row_number() OVER (
-                     PARTITION BY q.q_id
-                     ORDER BY list_cosine_similarity(c.cv[1:32], q.qv[1:32])
-                       DESC, c.vec_id
-                   ) AS BIGINT) AS rank
-            FROM c CROSS JOIN q
-          ) WHERE rank <= 5
-        )
-        SELECT f.q_id,
-               CAST(sum(CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-                    AS BIGINT) AS hits,
-               round(CAST(sum(CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0
-                              END) AS BIGINT) / CAST(5 AS DOUBLE), 9)
-                 AS recall_at_5
-        FROM full5 f
-        LEFT JOIN t5 t ON t.q_id = f.q_id AND t.vec_id = f.vec_id
-        GROUP BY f.q_id"""
-
-    def _kc_d2(a: str, b: str) -> str:
-        return (
-            f"CAST(list_sum(list_transform(list_zip({a}, {b}), "
-            f"p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT)"
-        )
-
-    _kc_ctes = [
-        """WITH v AS (
-          SELECT vec_id,
-                 list_transform(CAST(embedding AS DOUBLE[]),
-                                x -> CAST(round(x * 1000000) AS BIGINT)) AS q
-          FROM embeddings
-        ), c1 AS (SELECT vec_id, q FROM v ORDER BY vec_id LIMIT 1)""",
-        f""", d1 AS (
-          SELECT v.vec_id, v.q, {_kc_d2("v.q", "c1.q")} AS d
-          FROM v CROSS JOIN c1
-        ), c2 AS (SELECT vec_id, q, d FROM d1 ORDER BY d DESC, vec_id
-                  LIMIT 1)""",
-    ]
-    for _r in (3, 4, 5):
-        _prev_d, _dn, _cn = f"d{_r - 2}", f"d{_r - 1}", f"c{_r}"
-        _kc_ctes.append(
-            f""", {_dn} AS (
-          SELECT {_prev_d}.vec_id, {_prev_d}.q,
-                 least({_prev_d}.d,
-                       {_kc_d2(_prev_d + ".q", "c" + str(_r - 1) + ".q")})
-                   AS d
-          FROM {_prev_d} CROSS JOIN c{_r - 1}
-        ), {_cn} AS (SELECT vec_id, q, d FROM {_dn}
-                     ORDER BY d DESC, vec_id LIMIT 1)"""
-        )
-    o["kcenter_coreset"] = (
-        "".join(_kc_ctes)
-        + """
-        SELECT CAST(1 AS BIGINT) AS round, vec_id,
-               CAST(0 AS BIGINT) AS d2_to_set
-        FROM c1
-        UNION ALL SELECT CAST(2 AS BIGINT), vec_id, d FROM c2
-        UNION ALL SELECT CAST(3 AS BIGINT), vec_id, d FROM c3
-        UNION ALL SELECT CAST(4 AS BIGINT), vec_id, d FROM c4
-        UNION ALL SELECT CAST(5 AS BIGINT), vec_id, d FROM c5"""
-    )
-
-    o["path_trigrams"] = """
-        WITH s AS (
-          SELECT event_type AS t1,
-                 lead(event_type, 1) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS t2,
-                 lead(event_type, 2) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS t3
-          FROM events WHERE user_id IS NOT NULL
-        )
-        SELECT concat_ws('>', t1, t2, t3) AS path,
-               CAST(count(*) AS BIGINT) AS n
-        FROM s WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-        GROUP BY 1
-        ORDER BY n DESC, path LIMIT 10"""
-
-    o["degree_distribution"] = """
-        WITH deg AS (
-          SELECT l_partkey, CAST(count(*) AS BIGINT) AS degree
-          FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)
-          GROUP BY l_partkey
-        ), hist AS (
-          SELECT degree, CAST(count(*) AS BIGINT) AS n_parts FROM deg
-          GROUP BY degree
-        ), st AS (
-          SELECT CAST(count(*) AS BIGINT) AS n,
-                 sum(ln(CAST(degree AS DOUBLE))) AS sl
-          FROM deg
-        )
-        SELECT degree, n_parts,
-               round(1 + CAST(n AS DOUBLE) / sl, 9) AS powerlaw_alpha
-        FROM hist CROSS JOIN st"""
-
-    o["negsample_table"] = f"""
-        WITH toks AS ({llm_text._token_rows_sql("", "word")}), vocab AS (
-          SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM toks GROUP BY word
-        ), ranked AS (
-          SELECT word, cnt,
-                 CAST(row_number() OVER (ORDER BY cnt DESC, word) AS BIGINT)
-                   AS rank
-          FROM vocab
-        ), top AS (
-          SELECT word, cnt, rank,
-                 pow(CAST(cnt AS DOUBLE), CAST(0.75 AS DOUBLE)) AS w
-          FROM ranked WHERE rank <= 100
-        ), tw AS (SELECT sum(w) AS tw FROM top)
-        SELECT word, cnt, rank,
-               round(w, 9) AS weight,
-               round(w / tw, 9) AS share
-        FROM top CROSS JOIN tw"""
-
-    o["cube_nation_year"] = """
-        WITH j AS (
-          SELECT n_name,
-                 CAST(year(o_orderdate) AS BIGINT) AS o_year,
-                 CAST(round(l_extendedprice * (1 - l_discount) * 100)
-                      AS BIGINT) AS rc
-          FROM lineitem
-          JOIN orders ON l_orderkey = o_orderkey
-          JOIN customer ON o_custkey = c_custkey
-          JOIN nation ON c_nationkey = n_nationkey
-        )
-        SELECT n_name, o_year,
-               CAST(grouping(n_name, o_year) AS BIGINT) AS gid,
-               CAST(sum(rc) AS BIGINT) AS revenue_cents,
-               CAST(count(*) AS BIGINT) AS n_lines
-        FROM j GROUP BY CUBE (n_name, o_year)"""
-
-    o["range_frame_sum"] = """
-        SELECT event_id, user_id,
-               CAST(sum(CAST(round(value * 100) AS BIGINT)) OVER (
-                 PARTITION BY user_id ORDER BY epoch_us(ts)
-                 RANGE BETWEEN 1800000000 PRECEDING AND CURRENT ROW
-               ) AS BIGINT) AS trailing_30m_cents
-        FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL"""
-
-    o["unpivot_metrics"] = """
-        WITH wide AS (
-          SELECT user_id,
-                 CAST(count(*) AS BIGINT) AS n_events,
-                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                          END) AS BIGINT) AS n_purchases,
-                 CAST(sum(CASE WHEN value IS NOT NULL
-                               THEN CAST(round(value * 100) AS BIGINT)
-                               ELSE 0 END) AS BIGINT) AS total_cents
-          FROM events WHERE user_id IS NOT NULL
-          GROUP BY user_id
-        )
-        SELECT user_id, 'n_events' AS metric, n_events AS value FROM wide
-        UNION ALL
-        SELECT user_id, 'n_purchases', n_purchases FROM wide
-        UNION ALL
-        SELECT user_id, 'total_cents', total_cents FROM wide"""
-
-    o["orc_roundtrip"] = (
-        "SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,"
-        " o_orderdate, o_orderpriority FROM orders"
-    )
-
-    o["csv_roundtrip"] = (
-        "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier"
-    )
-
-    o["rendezvous_shards"] = """
-        WITH x AS (
-          SELECT doc_id, s.s AS s,
-                 (('0x' || substr(md5('rv6:' || (CAST(doc_id AS VARCHAR)
-                                                 || ('#s' || s.s))), 1, 8))
-                  ::BIGINT) AS h
-          FROM documents,
-               (SELECT unnest(generate_series(0, 7)) AS s) s
-        ), pick AS (
-          SELECT doc_id, s FROM (
-            SELECT doc_id, s,
-                   row_number() OVER (
-                     PARTITION BY doc_id ORDER BY h DESC, s
-                   ) AS rn
-            FROM x
-          ) WHERE rn = 1
-        )
-        SELECT CAST(s AS BIGINT) AS shard,
-               CAST(count(*) AS BIGINT) AS n_docs
-        FROM pick GROUP BY s"""
-
-    o["pareto_parts"] = """
-        WITH b AS (
-          SELECT p_partkey,
-                 CAST(round(p_retailprice * 100) AS BIGINT) AS price_c,
-                 CAST(p_size AS BIGINT) AS size
-          FROM part
-        ), m AS (
-          SELECT p_partkey, price_c, size,
-                 max(size) OVER (
-                   ORDER BY price_c
-                   RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                 ) AS m1,
-                 max(size) OVER (PARTITION BY price_c) AS m2
-          FROM b
-        )
-        SELECT p_partkey, price_c, size FROM m
-        WHERE NOT (coalesce(m1, -1) >= size OR m2 > size)"""
-
-    _rl_avail = (
-        "least(CAST(5000000 AS BIGINT), r.tokens + (e.us - r.us) // 60)"
-    )
-    o["streaming_rate_limit"] = f"""
-        WITH RECURSIVE ev AS (
-          SELECT user_id, event_id, epoch_us(ts) AS us,
-                 row_number() OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id) AS rn
-          FROM events
-          WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        ), r AS (
-          SELECT user_id, event_id, rn, us,
-                 CAST(4000000 AS BIGINT) AS tokens,
-                 TRUE AS accepted
-          FROM ev WHERE rn = 1
-          UNION ALL
-          SELECT e.user_id, e.event_id, e.rn, e.us,
-                 CASE WHEN {_rl_avail} >= 1000000
-                      THEN {_rl_avail} - 1000000
-                      ELSE {_rl_avail} END AS tokens,
-                 {_rl_avail} >= 1000000 AS accepted
-          FROM r JOIN ev e ON e.user_id = r.user_id AND e.rn = r.rn + 1
-        )
-        SELECT user_id, event_id, CAST(tokens AS BIGINT) AS tokens_after,
-               accepted
-        FROM r"""
-
-    o["nb_confusion"] = f"""
-        WITH nb AS ({o["nb_lang_scores"]}),
-        pred AS (
-          SELECT doc_id, score_lang AS pred_lang FROM (
-            SELECT doc_id, score_lang,
-                   row_number() OVER (
-                     PARTITION BY doc_id
-                     ORDER BY log_score DESC, score_lang
-                   ) AS rn
-            FROM nb
-          ) WHERE rn = 1
-        )
-        SELECT d.lang AS true_lang, p.pred_lang,
-               CAST(count(*) AS BIGINT) AS n
-        FROM documents d JOIN pred p ON p.doc_id = d.doc_id
-        GROUP BY d.lang, p.pred_lang"""
-
-    o["forecast_eval"] = f"""
-        WITH RECURSIVE daily AS ({_daily_cte}
-        ), vpos AS (
-          SELECT row_number() OVER (ORDER BY day) AS i,
-                 CAST(x AS DOUBLE) AS v
-          FROM daily WHERE day <= 23
-        ), r AS (
-          SELECT 2 AS i, b.v AS level, b.v - a.v AS trend
-          FROM vpos a, vpos b WHERE a.i = 1 AND b.i = 2
-          UNION ALL
-          SELECT r.i + 1,
-                 0.25 * p.v + 0.75 * (r.level + r.trend),
-                 0.125 * ((0.25 * p.v + 0.75 * (r.level + r.trend))
-                          - r.level)
-                 + 0.875 * r.trend
-          FROM r JOIN vpos p ON p.i = r.i + 1
-        ), fit AS (
-          SELECT level, trend FROM r
-          WHERE i = (SELECT max(i) FROM vpos)
-        )
-        SELECT day, x AS actual_cents,
-               round(level + CAST(day - 23 AS DOUBLE) * trend, 3)
-                 AS forecast_cents,
-               round(abs(CAST(x AS DOUBLE)
-                         - (level + CAST(day - 23 AS DOUBLE) * trend)), 3)
-                 AS abs_err,
-               round(abs(CAST(x AS DOUBLE)
-                         - (level + CAST(day - 23 AS DOUBLE) * trend))
-                     / CAST(x AS DOUBLE), 9) AS ape
-        FROM daily CROSS JOIN fit WHERE day >= 24"""
-
-    o["word_pmi"] = f"""
-        WITH toks AS ({llm_text._token_rows_sql(word="word")}), vocab AS (
-          SELECT word, CAST(count(*) AS BIGINT) AS cnt FROM toks
-          GROUP BY word
-        ), top AS (
-          SELECT word FROM (
-            SELECT word,
-                   row_number() OVER (ORDER BY cnt DESC, word) AS rank
-            FROM vocab
-          ) WHERE rank <= 30
-        ), dw AS (
-          SELECT DISTINCT t.doc_id, t.word FROM toks t
-          JOIN top ON top.word = t.word
-        ), nd AS (
-          SELECT CAST(count(*) AS BIGINT) AS N FROM documents
-          WHERE text IS NOT NULL
-        ), dfw AS (
-          SELECT word, CAST(count(*) AS BIGINT) AS df FROM dw GROUP BY word
-        ), pairs AS (
-          SELECT a.word AS word_a, b.word AS word_b,
-                 CAST(count(*) AS BIGINT) AS n_ab
-          FROM dw a JOIN dw b ON a.doc_id = b.doc_id AND a.word < b.word
-          GROUP BY a.word, b.word
-          HAVING count(*) >= 5
-        )
-        SELECT p.word_a, p.word_b, p.n_ab,
-               round(log2(CAST(p.n_ab * nd.N AS DOUBLE)
-                          / CAST(fa.df * fb.df AS DOUBLE)), 9) AS pmi
-        FROM pairs p
-        JOIN dfw fa ON fa.word = p.word_a
-        JOIN dfw fb ON fb.word = p.word_b
-        CROSS JOIN nd"""
-
-    o["ts_features"] = """
-        WITH r AS (
-          SELECT user_id,
-                 CAST(round(value * 100) AS BIGINT) AS c,
-                 CAST(row_number() OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS BIGINT) AS i,
-                 lead(CAST(round(value * 100) AS BIGINT)) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS c_next
-          FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-        ), m AS (
-          SELECT user_id,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(c) AS BIGINT) AS s1,
-                 CAST(sum(c * c) AS BIGINT) AS s2,
-                 CAST(max(c) AS BIGINT) AS mx,
-                 CAST(min(c) AS BIGINT) AS mn,
-                 CAST(sum(i) AS BIGINT) AS si,
-                 CAST(sum(i * i) AS BIGINT) AS sii,
-                 CAST(sum(i * c) AS BIGINT) AS sic,
-                 CAST(sum(CASE WHEN c_next IS NOT NULL THEN 1 ELSE 0 END)
-                      AS BIGINT) AS np,
-                 CAST(sum(CASE WHEN c_next IS NOT NULL THEN c ELSE 0 END)
-                      AS BIGINT) AS px,
-                 CAST(sum(CASE WHEN c_next IS NOT NULL THEN c_next ELSE 0
-                          END) AS BIGINT) AS py,
-                 CAST(sum(CASE WHEN c_next IS NOT NULL THEN c * c_next
-                          ELSE 0 END) AS BIGINT) AS pxy,
-                 CAST(sum(CASE WHEN c_next IS NOT NULL THEN c * c ELSE 0
-                          END) AS BIGINT) AS pxx,
-                 CAST(sum(CASE WHEN c_next IS NOT NULL THEN c_next * c_next
-                          ELSE 0 END) AS BIGINT) AS pyy
-          FROM r GROUP BY user_id
-        )
-        SELECT user_id, n,
-               round(CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE), 9)
-                 AS mean_cents,
-               round(sqrt(CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE)
-                          - (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))
-                            * (CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE))), 9)
-                 AS std_cents,
-               mx - mn AS range_cents,
-               round(CAST(n * sic - si * s1 AS DOUBLE)
-                     / CAST(n * sii - si * si AS DOUBLE), 9)
-                 AS index_slope,
-               round(CAST(np * pxy - px * py AS DOUBLE)
-                     / (sqrt(CAST(np * pxx - px * px AS DOUBLE))
-                        * sqrt(CAST(np * pyy - py * py AS DOUBLE))), 9)
-                 AS autocorr1
-        FROM m"""
-
-    o["above_brand_avg"] = """
-        WITH b AS (
-          SELECT p_partkey, p_brand,
-                 CAST(round(p_retailprice * 100) AS BIGINT) AS price_c
-          FROM part
-        )
-        SELECT p_partkey, p_brand, price_c
-        FROM b o
-        WHERE o.price_c * (SELECT CAST(count(*) AS BIGINT) FROM b i
-                           WHERE i.p_brand = o.p_brand)
-              > (SELECT CAST(sum(price_c) AS BIGINT) FROM b i
-                 WHERE i.p_brand = o.p_brand)"""
-
-    _kmv_h = sampling.salted_hash_sql("user_id", "kmv6")
-    _HSD = f"CAST({sampling.HASH_SPACE} AS DOUBLE)"
-    o["kmv_distinct"] = f"""
-        WITH du AS (
-          SELECT DISTINCT event_type, user_id FROM events
-          WHERE user_id IS NOT NULL
-        ), hx AS (
-          SELECT DISTINCT event_type, {_kmv_h} AS h FROM du
-        ), rn AS (
-          SELECT event_type, h,
-                 row_number() OVER (PARTITION BY event_type ORDER BY h)
-                   AS rn
-          FROM hx
-        ), kth AS (
-          SELECT event_type,
-                 CAST(max(CASE WHEN rn = 32 THEN h END) AS BIGINT)
-                   AS kth_hash
-          FROM rn GROUP BY event_type
-        ), ex AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS exact_distinct
-          FROM du GROUP BY event_type
-        )
-        SELECT ex.event_type, ex.exact_distinct, kth.kth_hash,
-               round(31.0 * {_HSD} / CAST(kth.kth_hash AS DOUBLE), 6)
-                 AS kmv_estimate
-        FROM ex JOIN kth ON kth.event_type = ex.event_type"""
-
-    o["kmv_set_ops"] = f"""
-        WITH sa AS (
-          SELECT h FROM (
-            SELECT DISTINCT {_kmv_h} AS h FROM (
-              SELECT DISTINCT user_id FROM events
-              WHERE user_id IS NOT NULL AND event_type = 'purchase'
-            )
-          ) ORDER BY h LIMIT 32
-        ), sb AS (
-          SELECT h FROM (
-            SELECT DISTINCT {_kmv_h} AS h FROM (
-              SELECT DISTINCT user_id FROM events
-              WHERE user_id IS NOT NULL AND event_type = 'view'
-            )
-          ) ORDER BY h LIMIT 32
-        ), merged AS (
-          SELECT h FROM (
-            SELECT h FROM sa UNION SELECT h FROM sb
-          ) ORDER BY h LIMIT 32
-        ), theta AS (SELECT CAST(max(h) AS BIGINT) AS theta FROM merged),
-        mm AS (
-          SELECT CAST(count(*) AS BIGINT) AS m
-          FROM merged
-          JOIN sa ON sa.h = merged.h
-          JOIN sb ON sb.h = merged.h
-        ), eu AS (
-          SELECT CAST(count(*) AS BIGINT) AS u_exact FROM (
-            SELECT DISTINCT user_id FROM events
-            WHERE user_id IS NOT NULL
-              AND event_type IN ('purchase', 'view')
-          )
-        ), ei AS (
-          SELECT CAST(count(*) AS BIGINT) AS i_exact FROM (
-            SELECT user_id FROM events
-            WHERE user_id IS NOT NULL AND event_type = 'purchase'
-            GROUP BY user_id
-          ) a JOIN (
-            SELECT user_id FROM events
-            WHERE user_id IS NOT NULL AND event_type = 'view'
-            GROUP BY user_id
-          ) b ON b.user_id = a.user_id
-        )
-        SELECT u_exact,
-               round(31.0 * {_HSD} / CAST(theta AS DOUBLE), 6) AS u_est,
-               i_exact,
-               round((CAST(m AS DOUBLE) / 32.0)
-                     * (31.0 * {_HSD} / CAST(theta AS DOUBLE)), 6) AS i_est
-        FROM eu CROSS JOIN ei CROSS JOIN theta CROSS JOIN mm"""
-
-    o["csv_corrupt_records"] = """
-        SELECT CAST(7 AS BIGINT) AS n_rows,
-               CAST(1 AS BIGINT) AS n_corrupt,
-               CAST(6 AS BIGINT) AS n_good,
-               CAST(30 AS BIGINT) AS good_qty_sum"""
-
-    _dl_cte = f"""
-          SELECT doc_id,
-                 {dedup.tokenize_sql()} AS wl
-          FROM documents WHERE text IS NOT NULL"""
-    o["kneser_ney_bigram"] = f"""
-        WITH dl AS ({_dl_cte}
-        ), bi AS (
-          SELECT wl[i.i] AS w1, wl[i.i + 1] AS w2,
-                 CAST(count(*) AS BIGINT) AS c12
-          FROM dl, unnest(generate_series(1, len(wl) - 1)) AS i(i)
-          GROUP BY 1, 2
-        ), c1 AS (
-          SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
-                 CAST(count(*) AS BIGINT) AS nl
-          FROM bi GROUP BY w1
-        ), nr AS (
-          SELECT w2, CAST(count(*) AS BIGINT) AS nr FROM bi GROUP BY w2
-        ), tt AS (SELECT CAST(count(*) AS BIGINT) AS T FROM bi)
-        SELECT b.w1, b.w2, b.c12,
-               round((CAST(b.c12 AS DOUBLE) - 0.75)
-                     / CAST(c1.c1 AS DOUBLE)
-                     + (0.75 * CAST(c1.nl AS DOUBLE)
-                        / CAST(c1.c1 AS DOUBLE))
-                       * (CAST(nr.nr AS DOUBLE) / CAST(tt.T AS DOUBLE)),
-                     9) AS p_kn
-        FROM bi b
-        JOIN c1 ON c1.w1 = b.w1
-        JOIN nr ON nr.w2 = b.w2
-        CROSS JOIN tt
-        WHERE b.c12 >= 3"""
-
-    _sc_h = sampling.salted_hash_sql(
-        "CAST(doc_id AS VARCHAR) || ':' || CAST(pos AS VARCHAR)", "sc6"
-    )
-    o["span_corruption"] = f"""
-        WITH dl AS ({_dl_cte}
-        ), toks AS (
-          SELECT doc_id, i.i - 1 AS pos
-          FROM dl, unnest(generate_series(1, len(wl))) AS i(i)
-        ), nt AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens FROM toks
-          GROUP BY doc_id
-        ), st AS (
-          SELECT doc_id AS d, pos AS s FROM toks
-          WHERE {_sc_h} < {sampling.HASH_SPACE // 15}
-        ), ns AS (
-          SELECT d AS doc_id, CAST(count(*) AS BIGINT) AS n_spans FROM st
-          GROUP BY d
-        ), cov AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_masked FROM (
-            SELECT DISTINCT t.doc_id, t.pos
-            FROM toks t
-            JOIN st ON st.d = t.doc_id
-                   AND t.pos BETWEEN st.s AND st.s + 2
-          ) GROUP BY doc_id
-        )
-        SELECT nt.doc_id, nt.n_tokens,
-               CAST(coalesce(ns.n_spans, 0) AS BIGINT) AS n_spans,
-               CAST(coalesce(cov.n_masked, 0) AS BIGINT) AS n_masked,
-               round(CAST(coalesce(cov.n_masked, 0) AS DOUBLE)
-                     / CAST(nt.n_tokens AS DOUBLE), 9) AS mask_ratio
-        FROM nt
-        LEFT JOIN ns ON ns.doc_id = nt.doc_id
-        LEFT JOIN cov ON cov.doc_id = nt.doc_id"""
-
-    o["padding_waste"] = f"""
-        WITH d AS (
-          SELECT CAST({llm_text.token_count_sql()} AS BIGINT) AS len
-          FROM documents WHERE text IS NOT NULL
-        ), b AS (
-          SELECT len, CAST(len // 64 AS BIGINT) AS bucket FROM d
-          WHERE len > 0
-        ), per AS (
-          SELECT bucket,
-                 CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(max(len) AS BIGINT) AS bucket_max,
-                 CAST(sum(len) AS BIGINT) AS sum_len
-          FROM b GROUP BY bucket
-        ), g AS (
-          SELECT CAST(max(len) AS BIGINT) AS gmax FROM b
-        )
-        SELECT bucket, n_docs, bucket_max,
-               CAST(n_docs * bucket_max - sum_len AS BIGINT)
-                 AS bucket_waste,
-               CAST(n_docs * gmax - sum_len AS BIGINT)
-                 AS global_pad_waste,
-               CASE WHEN n_docs * gmax - sum_len = 0 THEN 0.0
-                    ELSE round(1.0
-                               - CAST(n_docs * bucket_max - sum_len
-                                      AS DOUBLE)
-                                 / CAST(n_docs * gmax - sum_len AS DOUBLE),
-                               9)
-               END AS saving_ratio
-        FROM per CROSS JOIN g"""
-
-    o["packing_efficiency"] = f"""
-        WITH d0 AS (
-          SELECT CAST({llm_text.token_count_sql()} AS BIGINT) AS len
-          FROM documents WHERE text IS NOT NULL
-        ), d AS (
-          SELECT len,
-                 CAST(len // 128 AS BIGINT) AS full_bins,
-                 CAST(len % 128 AS BIGINT) AS rem
-          FROM d0 WHERE len > 0
-        ), per AS (
-          SELECT CAST((rem - 1) // 16 AS BIGINT) AS bucket,
-                 CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(rem) AS BIGINT) AS sum_len
-          FROM d WHERE rem > 0 GROUP BY 1
-        ), per2 AS (
-          SELECT bucket, n_docs, sum_len,
-                 CAST((bucket + 1) * 16 AS BIGINT) AS upper_len,
-                 CAST(128 // ((bucket + 1) * 16) AS BIGINT)
-                   AS slots_per_bin
-          FROM per
-        ), per3 AS (
-          SELECT bucket, n_docs, sum_len, upper_len, slots_per_bin,
-                 CAST((n_docs + slots_per_bin - 1) // slots_per_bin
-                      AS BIGINT) AS bins
-          FROM per2
-        ), g AS (
-          SELECT CAST((SELECT sum(bins) FROM per3) + sum(full_bins)
-                      AS BIGINT) AS total_bins,
-                 CAST((sum(len) + 127) // 128 AS BIGINT) AS lb_bins,
-                 CAST(sum(len) AS BIGINT) AS total_len
-          FROM d
-        )
-        SELECT bucket, upper_len, slots_per_bin, n_docs, sum_len, bins,
-               CAST(bins * 128 - sum_len AS BIGINT) AS waste_tokens,
-               total_bins, lb_bins,
-               round(CAST(total_len AS DOUBLE)
-                     / CAST(total_bins * 128 AS DOUBLE), 9) AS efficiency,
-               round(CAST(total_len AS DOUBLE)
-                     / CAST(lb_bins * 128 AS DOUBLE), 9) AS lb_efficiency
-        FROM per3 CROSS JOIN g"""
-
-    o["priority_sample"] = sampling.priority_sample_oracle_sql(
-        k=50, weight_expr="n_chars", key_col="doc_id", seed="pri"
-    )
-
-    o["hits_scores"] = dedup.hits_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT o.o_custkey AS src, l.l_partkey AS dst
-          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey""",
-        iters=3,
-        scale=10**6,
-    )
-
-    o["rouge_pairs"] = llm_text.rouge_n_oracle_sql(
-        pairs_sql="""
-          SELECT a.doc_id AS ref_id, b.doc_id AS cand_id
-          FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1"""
-    )
-
-    o["rouge_verify"] = llm_text.rouge_n_oracle_sql(
-        pairs_sql=dedup.lsh_candidates_sql(k=5, num_hashes=64, bands=8)
-    )
-
-    o["nb_calibration"] = f"""
-        WITH nb AS ({o["nb_lang_scores"]}),
-        ranked AS (
-          SELECT doc_id, score_lang, log_score,
-                 row_number() OVER (
-                   PARTITION BY doc_id
-                   ORDER BY log_score DESC, score_lang
-                 ) AS rn
-          FROM nb
-        ), per_doc AS (
-          SELECT doc_id,
-                 max(CASE WHEN rn = 1 THEN score_lang END) AS pred_lang,
-                 max(CASE WHEN rn = 1 THEN log_score END) AS s1,
-                 max(CASE WHEN rn = 2 THEN log_score END) AS s2
-          FROM ranked WHERE rn <= 2 GROUP BY doc_id
-        ), j AS (
-          SELECT CAST(least(floor((p.s1 - p.s2) / 0.25), 9) AS BIGINT)
-                   AS margin_band,
-                 CASE WHEN p.pred_lang = d.lang THEN 1 ELSE 0 END AS ok
-          FROM per_doc p JOIN documents d ON d.doc_id = p.doc_id
-        )
-        SELECT margin_band,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(ok) AS BIGINT) AS n_correct,
-               round(CAST(sum(ok) AS DOUBLE) / CAST(count(*) AS DOUBLE), 9)
-                 AS accuracy
-        FROM j GROUP BY margin_band"""
-
-    o["gram_novelty"] = dedup.gram_novelty_oracle_sql(n=8)
-
-    o["kappa_classifiers"] = f"""
-        WITH nb AS ({o["nb_lang_scores"]}),
-        p1 AS (
-          SELECT doc_id, score_lang AS p1 FROM (
-            SELECT doc_id, score_lang,
-                   row_number() OVER (
-                     PARTITION BY doc_id
-                     ORDER BY log_score DESC, score_lang
-                   ) AS rn
-            FROM nb
-          ) WHERE rn = 1
-        ), p2 AS (
-          SELECT doc_id, lang_pred AS p2 FROM ({o["language_id"]})
-        ), cells AS (
-          SELECT p1.p1, p2.p2, CAST(count(*) AS BIGINT) AS n
-          FROM p1 JOIN p2 USING (doc_id)
-          GROUP BY p1.p1, p2.p2
-        ), tot AS (
-          SELECT CAST(sum(n) AS BIGINT) AS N,
-                 CAST(sum(CASE WHEN p1 = p2 THEN n ELSE 0 END) AS BIGINT)
-                   AS A
-          FROM cells
-        ), rm AS (
-          SELECT p1 AS l, CAST(sum(n) AS BIGINT) AS r FROM cells GROUP BY p1
-        ), cm AS (
-          SELECT p2 AS l, CAST(sum(n) AS BIGINT) AS c FROM cells GROUP BY p2
-        ), sm AS (
-          SELECT CAST(coalesce(sum(rm.r * cm.c), 0) AS BIGINT) AS S
-          FROM rm JOIN cm ON rm.l = cm.l
-        )
-        SELECT N AS n_docs, A AS n_agree,
-               round(CAST(A AS DOUBLE) / CAST(N AS DOUBLE), 9) AS po,
-               round(CAST(S AS DOUBLE) / CAST(N * N AS DOUBLE), 9) AS pe,
-               round(CAST(N * A - S AS DOUBLE)
-                     / nullif(CAST(N * N - S AS DOUBLE), 0.0), 9) AS kappa
-        FROM tot CROSS JOIN sm"""
-
-    _ndcg_qt_vals = ", ".join(
-        f"({qid}, '{w}')"
-        for qid, s in _BM25_QUERIES.items()
-        for w in sorted(set(s.split()))
-    )
-    o["ndcg_eval"] = f"""
-        WITH bm AS (
-          SELECT query_id, doc_id, rank FROM ({o["bm25_topk"]})
-        ), toks AS ({llm_text._token_rows_sql("DISTINCT doc_id", "word")}),
-        qt (query_id, word) AS (VALUES {_ndcg_qt_vals}),
-        rel_tbl AS (
-          SELECT qt.query_id, toks.doc_id,
-                 CAST(count(*) AS BIGINT) AS rel
-          FROM qt JOIN toks USING (word)
-          GROUP BY qt.query_id, toks.doc_id
-        ), scored AS (
-          SELECT bm.query_id, bm.doc_id, bm.rank,
-                 CAST(coalesce(r.rel, 0) AS BIGINT) AS rel
-          FROM bm LEFT JOIN rel_tbl r
-            ON r.query_id = bm.query_id AND r.doc_id = bm.doc_id
-        ), gains AS (
-          SELECT query_id,
-                 CAST(round(CAST((1 << rel) - 1 AS DOUBLE)
-                            / log2(CAST(rank AS DOUBLE) + 1.0) * 1e9)
-                      AS BIGINT) AS du,
-                 CAST(round(CAST((1 << rel) - 1 AS DOUBLE)
-                            / log2(CAST(irank AS DOUBLE) + 1.0) * 1e9)
-                      AS BIGINT) AS iu
-          FROM (
-            SELECT query_id, doc_id, rank, rel,
-                   CAST(row_number() OVER (
-                     PARTITION BY query_id ORDER BY rel DESC, doc_id
-                   ) AS BIGINT) AS irank
-            FROM scored
-          )
-        )
-        SELECT query_id,
-               CAST(sum(du) AS BIGINT) AS dcg_units,
-               CAST(sum(iu) AS BIGINT) AS idcg_units,
-               round(CAST(sum(du) AS DOUBLE)
-                     / nullif(CAST(sum(iu) AS DOUBLE), 0.0), 9) AS ndcg
-        FROM gains GROUP BY query_id"""
-
-    o["roc_auc_binned"] = f"""
-        WITH nb AS ({o["nb_lang_scores"]}),
-        per_doc AS (
-          SELECT doc_id,
-                 max(CASE WHEN score_lang = 'en' THEN log_score END)
-                   AS sen,
-                 max(CASE WHEN score_lang <> 'en' THEN log_score END)
-                   AS sot,
-                 max(CASE WHEN score_lang = 'en' THEN n_tokens END) AS nt
-          FROM nb GROUP BY doc_id
-        ), en AS (
-          SELECT p.sen, p.sot, p.nt, d.lang
-          FROM per_doc p JOIN documents d USING (doc_id)
-        ), h AS (
-          SELECT CAST(least(greatest(floor(
-                   ((sen - sot) / CAST(nt AS DOUBLE) + 0.5) * 1024.0
-                 ), 0), 1023) AS BIGINT) AS b,
-                 CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS pos,
-                 CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END)
-                      AS BIGINT) AS neg
-          FROM en GROUP BY 1
-        ), cum AS (
-          SELECT a.b, a.pos, a.neg,
-                 CAST(coalesce(sum(c.n2), 0) AS BIGINT) AS nbelow
-          FROM h a LEFT JOIN (SELECT b AS b2, neg AS n2 FROM h) c
-            ON c.b2 < a.b
-          GROUP BY a.b, a.pos, a.neg
-        )
-        SELECT CAST(sum(pos) AS BIGINT) AS n_pos,
-               CAST(sum(neg) AS BIGINT) AS n_neg,
-               CAST(sum(pos * (2 * nbelow + neg)) AS BIGINT) AS u2,
-               round(CAST(sum(pos * (2 * nbelow + neg)) AS DOUBLE)
-                     / nullif(CAST(2 * sum(pos) * sum(neg) AS DOUBLE),
-                              0.0), 9) AS auc
-        FROM cum"""
-
-    o["bfs_distances"] = dedup.bfs_distances_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT CAST(o.o_custkey * 2 AS BIGINT) AS a,
-                          CAST(l.l_partkey * 2 + 1 AS BIGINT) AS b
-          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey""",
-        seeds_cte="""
-          SELECT CAST(c_custkey * 2 AS BIGINT) AS id
-          FROM customer WHERE c_custkey % 97 = 0""",
-        max_hops=4,
-    )
-
-    o["target_encode"] = """
-        WITH base AS (
-          SELECT c_custkey, c_nationkey,
-                 CAST(round(c_acctbal * 100) AS BIGINT) AS c
-          FROM customer
-        ), g AS (
-          SELECT c_nationkey,
-                 CAST(sum(c) AS BIGINT) AS s,
-                 CAST(count(*) AS BIGINT) AS n
-          FROM base GROUP BY c_nationkey
-        )
-        SELECT CAST(b.c_custkey AS BIGINT) AS custkey,
-               CAST(b.c_nationkey AS BIGINT) AS nationkey,
-               b.c AS acctbal_cents,
-               CAST(g.s - b.c AS DOUBLE)
-                 / nullif(CAST(g.n - 1 AS DOUBLE), 0.0) AS loo_cents
-        FROM base b JOIN g USING (c_nationkey)"""
-
-    o["tokenizer_fertility"] = f"""
-        WITH toks AS ({llm_text._token_rows_sql("lang")}), m AS (
-          SELECT lang,
-                 CAST(count(*) AS BIGINT) AS n_words,
-                 CAST(sum((len(w) + 3) // 4) AS BIGINT) AS n_subwords
-          FROM toks GROUP BY lang
-        )
-        SELECT lang, n_words, n_subwords,
-               round(CAST(n_subwords AS DOUBLE) / CAST(n_words AS DOUBLE),
-                     9) AS fertility
-        FROM m"""
-
-    o["user_erasure"] = """
-        WITH e AS (
-          SELECT user_id FROM events WHERE user_id IS NOT NULL
-        ), dele AS (
-          SELECT DISTINCT user_id FROM e WHERE user_id % 17 = 0
-        )
-        SELECT (SELECT CAST(count(*) AS BIGINT) FROM e) AS n_before,
-               (SELECT CAST(count(*) AS BIGINT) FROM dele)
-                 AS n_deleted_users,
-               (SELECT CAST(count(*) AS BIGINT) FROM e
-                WHERE user_id IN (SELECT user_id FROM dele))
-                 AS n_events_removed,
-               (SELECT CAST(count(*) AS BIGINT) FROM e
-                WHERE user_id NOT IN (SELECT user_id FROM dele))
-                 AS n_after,
-               CAST(0 AS BIGINT) AS deleted_rows_remaining"""
-
-    o["bitmap_setops"] = """
-        WITH du AS (
-          SELECT DISTINCT event_type, user_id FROM events
-          WHERE user_id IS NOT NULL
-            AND event_type IN ('purchase', 'view')
-        ), ba AS (
-          SELECT user_id // 32 AS w,
-                 CAST(bit_or(CAST(1 AS BIGINT) << CAST(user_id % 32 AS INT))
-                      AS BIGINT) AS wa
-          FROM du WHERE event_type = 'purchase' GROUP BY 1
-        ), bb AS (
-          SELECT user_id // 32 AS w,
-                 CAST(bit_or(CAST(1 AS BIGINT) << CAST(user_id % 32 AS INT))
-                      AS BIGINT) AS wb
-          FROM du WHERE event_type = 'view' GROUP BY 1
-        ), j AS (
-          SELECT coalesce(wa, 0) AS wa, coalesce(wb, 0) AS wb
-          FROM ba FULL JOIN bb ON bb.w = ba.w
-        ), bm AS (
-          SELECT CAST(sum(bit_count(wa & wb)) AS BIGINT) AS i_bitmap,
-                 CAST(sum(bit_count(wa | wb)) AS BIGINT) AS u_bitmap
-          FROM j
-        ), ex AS (
-          SELECT
-            (SELECT CAST(count(*) AS BIGINT) FROM (
-               SELECT user_id FROM du WHERE event_type = 'purchase'
-               INTERSECT
-               SELECT user_id FROM du WHERE event_type = 'view')) AS i_exact,
-            (SELECT CAST(count(DISTINCT user_id) AS BIGINT) FROM du)
-              AS u_exact
-        )
-        SELECT i_bitmap, i_exact, u_bitmap, u_exact
-        FROM bm CROSS JOIN ex"""
-
-    o["join_fanout_audit"] = """
-        WITH arms AS (
-          SELECT 'lineitem_per_order' AS join_edge, l_orderkey AS k
-          FROM lineitem
-          UNION ALL
-          SELECT 'lineitem_per_part', l_partkey FROM lineitem
-          UNION ALL
-          SELECT 'lineitem_per_supplier', l_suppkey FROM lineitem
-          UNION ALL
-          SELECT 'orders_per_customer', o_custkey FROM orders
-          UNION ALL
-          SELECT 'events_per_user', user_id FROM events
-          WHERE user_id IS NOT NULL
-        ), g AS (
-          SELECT join_edge, k, CAST(count(*) AS BIGINT) AS f
-          FROM arms GROUP BY join_edge, k
-        )
-        SELECT join_edge,
-               CAST(count(*) AS BIGINT) AS n_keys,
-               CAST(max(f) AS BIGINT) AS max_fanout,
-               round(CAST(sum(f) AS DOUBLE) / CAST(count(*) AS DOUBLE), 9)
-                 AS avg_fanout
-        FROM g GROUP BY join_edge"""
-
-    o["weighted_median"] = """
-        WITH j AS (
-          SELECT p_brand, CAST(p_size AS BIGINT) AS size,
-                 CAST(round(l_quantity) AS BIGINT) AS q
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-        ), w AS (
-          SELECT p_brand, size, CAST(sum(q) AS BIGINT) AS wt
-          FROM j GROUP BY p_brand, size
-        ), tot AS (
-          SELECT p_brand, CAST(sum(wt) AS BIGINT) AS tot FROM w
-          GROUP BY p_brand
-        ), cum AS (
-          SELECT a.p_brand, a.size, CAST(sum(b.wt) AS BIGINT) AS cum
-          FROM w a JOIN w b
-            ON b.p_brand = a.p_brand AND b.size <= a.size
-          GROUP BY a.p_brand, a.size
-        )
-        SELECT c.p_brand,
-               CAST(min(c.size) AS BIGINT) AS wmedian_size,
-               CAST(max(t.tot) AS BIGINT) AS total_qty
-        FROM cum c JOIN tot t ON t.p_brand = c.p_brand
-        WHERE 2 * c.cum >= t.tot
-        GROUP BY c.p_brand"""
-
-    o["ks_binned"] = """
-        WITH c AS (
-          SELECT CAST(floor(CAST(CAST(round(value * 100) AS BIGINT) * 1024
-                                 AS DOUBLE) / 49003.0) AS BIGINT) AS bin,
-                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                          END) AS BIGINT) AS ca,
-                 CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS cb
-          FROM events
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-            AND event_type IN ('purchase', 'view')
-          GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(ca) AS BIGINT) AS na,
-                 CAST(sum(cb) AS BIGINT) AS nb
-          FROM c
-        ), cum AS (
-          SELECT a.bin, CAST(sum(b.ca) AS BIGINT) AS cuma,
-                 CAST(sum(b.cb) AS BIGINT) AS cumb
-          FROM c a JOIN c b ON b.bin <= a.bin
-          GROUP BY a.bin
-        )
-        SELECT bin AS at_bin, na AS n_purchase, nb AS n_view,
-               round(CAST(abs(cuma * nb - cumb * na) AS DOUBLE)
-                     / CAST(na * nb AS DOUBLE), 9) AS d_stat
-        FROM cum CROSS JOIN tot
-        ORDER BY abs(cuma * nb - cumb * na) DESC, bin LIMIT 1"""
-
-    o["session_gap_sweep"] = """
-        WITH d AS (
-          SELECT user_id,
-                 epoch_us(ts) - epoch_us(lag(ts) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 )) AS delta_us
-          FROM events WHERE user_id IS NOT NULL
-        ), m AS (
-          SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-                 CAST(count(*) AS BIGINT) AS n_events,
-                 CAST(sum(CASE WHEN delta_us > 300000000 THEN 1 ELSE 0
-                          END) AS BIGINT) AS b300,
-                 CAST(sum(CASE WHEN delta_us > 900000000 THEN 1 ELSE 0
-                          END) AS BIGINT) AS b900,
-                 CAST(sum(CASE WHEN delta_us > 1800000000 THEN 1 ELSE 0
-                          END) AS BIGINT) AS b1800
-          FROM d
-        )
-        SELECT n_users, n_events,
-               CAST(n_users + b300 AS BIGINT) AS sessions_5m,
-               CAST(n_users + b900 AS BIGINT) AS sessions_15m,
-               CAST(n_users + b1800 AS BIGINT) AS sessions_30m,
-               round(CAST(n_events AS DOUBLE)
-                     / CAST(n_users + b300 AS DOUBLE), 9) AS eps_5m,
-               round(CAST(n_events AS DOUBLE)
-                     / CAST(n_users + b1800 AS DOUBLE), 9) AS eps_30m
-        FROM m"""
-
-    o["bloom_fpr"] = f"""
-        WITH {dedup.bloom_flags_ctes("doc_id % 7 = 0", "doc_id % 7 <> 0")},
-        bset AS (
-          SELECT DISTINCT md5({dedup.normalize_text_sql()}) AS fp FROM documents
-          WHERE doc_id % 7 = 0
-        ), fl AS (
-          SELECT f.doc_id, f.bloom_hit,
-                 (md5({dedup.normalize_text_sql()}) IN (SELECT fp FROM bset))
-                   AS is_true
-          FROM flags f JOIN documents USING (doc_id)
-        ), nb AS (
-          SELECT CAST(count(*) AS BIGINT) AS nb FROM documents
-          WHERE doc_id % 7 = 0
-        ), m AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_probes,
-                 CAST(sum(CASE WHEN bloom_hit THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_hits,
-                 CAST(sum(CASE WHEN bloom_hit AND is_true THEN 1 ELSE 0
-                          END) AS BIGINT) AS n_true_hits,
-                 CAST(sum(CASE WHEN bloom_hit AND NOT is_true THEN 1
-                          ELSE 0 END) AS BIGINT) AS n_false_hits
-          FROM fl
-        )
-        SELECT n_probes, n_hits, n_true_hits, n_false_hits,
-               round(CAST(n_false_hits AS DOUBLE)
-                     / CAST(n_probes AS DOUBLE), 9) AS measured_fpr,
-               round(pow(1 - exp(-(3.0 * CAST(nb AS DOUBLE)) / 65536.0),
-                         3.0), 9) AS theoretical_fpr
-        FROM m CROSS JOIN nb"""
-
-    o["robust_ab_test"] = f"""
-        WITH pu AS (
-          SELECT user_id,
-                 CAST(sum(CASE WHEN value IS NOT NULL
-                               THEN CAST(round(value * 100) AS BIGINT)
-                               ELSE 0 END) AS BIGINT) AS x,
-                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                          END) >= 14 AS BIGINT) AS conv
-          FROM events WHERE user_id IS NOT NULL
-          GROUP BY user_id
-        ), med AS (SELECT quantile_cont(x, 0.5) AS med FROM pu),
-        mad AS (
-          SELECT quantile_cont(abs(CAST(x AS DOUBLE) - med), 0.5) AS mad
-          FROM pu CROSS JOIN med
-        ), tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM pu),
-        kept AS (
-          SELECT pu.user_id, pu.conv,
-                 CASE WHEN {_ab_h} < {_ab_half} THEN 'A' ELSE 'B' END AS arm
-          FROM pu CROSS JOIN med CROSS JOIN mad
-          WHERE abs(CAST(x AS DOUBLE) - med)
-                <= 3 * CAST(1.4826 AS DOUBLE) * mad
-        ), s AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_kept,
-                 CAST(sum(CASE WHEN arm = 'A' THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_a,
-                 CAST(sum(CASE WHEN arm = 'A' THEN conv ELSE 0 END)
-                      AS BIGINT) AS conv_a,
-                 CAST(sum(CASE WHEN arm = 'B' THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_b,
-                 CAST(sum(CASE WHEN arm = 'B' THEN conv ELSE 0 END)
-                      AS BIGINT) AS conv_b
-          FROM kept
-        )
-        SELECT n_total, n_kept,
-               CAST(n_total - n_kept AS BIGINT) AS n_excluded,
-               n_a, conv_a, n_b, conv_b,
-               round(
-                 (CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-                  - CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE))
-                 / sqrt(
-                     (CAST(conv_a + conv_b AS DOUBLE)
-                      / CAST(n_a + n_b AS DOUBLE))
-                     * (1 - CAST(conv_a + conv_b AS DOUBLE)
-                            / CAST(n_a + n_b AS DOUBLE))
-                     * (1 / CAST(n_a AS DOUBLE) + 1 / CAST(n_b AS DOUBLE))
-                   ), 9) AS z_score
-        FROM s CROSS JOIN tot"""
-
-    o["lorenz_deciles"] = """
-        WITH pu AS (
-          SELECT user_id,
-                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                   AS x
-          FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-          GROUP BY user_id
-        ), cuts AS (
-          SELECT quantile_cont(x, 0.1) AS c1, quantile_cont(x, 0.2) AS c2,
-                 quantile_cont(x, 0.3) AS c3, quantile_cont(x, 0.4) AS c4,
-                 quantile_cont(x, 0.5) AS c5, quantile_cont(x, 0.6) AS c6,
-                 quantile_cont(x, 0.7) AS c7, quantile_cont(x, 0.8) AS c8,
-                 quantile_cont(x, 0.9) AS c9
-          FROM pu
-        ), per AS (
-          SELECT CAST(1
-                 + CAST(CAST(x AS DOUBLE) > c1 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c2 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c3 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c4 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c5 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c6 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c7 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c8 AS INT)
-                 + CAST(CAST(x AS DOUBLE) > c9 AS INT) AS BIGINT)
-                   AS decile,
-                 CAST(count(*) AS BIGINT) AS n_users,
-                 CAST(sum(x) AS BIGINT) AS spend_cents
-          FROM pu CROSS JOIN cuts
-          GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(spend_cents) AS BIGINT) AS tot FROM per
-        )
-        SELECT a.decile, a.n_users, a.spend_cents,
-               round(CAST(sum(b.spend_cents) AS DOUBLE)
-                     / CAST(max(tot.tot) AS DOUBLE), 9) AS cum_share
-        FROM per a
-        JOIN per b ON b.decile <= a.decile
-        CROSS JOIN tot
-        GROUP BY a.decile, a.n_users, a.spend_cents"""
-
-    o["theil_index"] = """
-        WITH pu AS (
-          SELECT user_id,
-                 CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-                   AS x
-          FROM events WHERE user_id IS NOT NULL AND value IS NOT NULL
-          GROUP BY user_id
-        ), m AS (
-          SELECT CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(x) AS BIGINT) AS s
-          FROM pu
-        )
-        SELECT CAST(max(n) AS BIGINT) AS n_users,
-               round(max(CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 9)
-                 AS mean_cents,
-               round(sum((CAST(x AS DOUBLE)
-                          / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)))
-                         * ln(CAST(x AS DOUBLE)
-                              / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))))
-                     / CAST(max(n) AS DOUBLE), 9) AS theil_t
-        FROM pu CROSS JOIN m"""
-
-    o["ranker_agreement"] = f"""
-        SELECT b.query_id,
-               CAST(count(*) AS BIGINT) AS n_shared,
-               round(count(*) / CAST(10 AS DOUBLE), 9) AS overlap_at_10,
-               CAST(sum(abs(b.rank - r.rank)) AS BIGINT) AS footrule
-        FROM ({o["bm25_topk"]}) b
-        JOIN ({o["rrf_fusion"]}) r
-          ON r.query_id = b.query_id AND r.doc_id = b.doc_id
-        GROUP BY b.query_id"""
-
-    o["churn_labels"] = """
-        SELECT user_id,
-               CAST(count(*) AS BIGINT) AS n_events,
-               CAST(max(date_diff('day', DATE '2024-01-01',
-                                  CAST(ts AS DATE)) + 1) AS BIGINT)
-                 AS last_day,
-               max(date_diff('day', DATE '2024-01-01',
-                             CAST(ts AS DATE)) + 1) < 24 AS churned
-        FROM events WHERE user_id IS NOT NULL
-        GROUP BY user_id"""
-
-    o["ecdf_probes"] = """
-        WITH probes AS (
-          SELECT CAST(1000 * pow(2.0, CAST(i.i AS DOUBLE)) AS BIGINT)
-                   AS probe
-          FROM unnest(generate_series(0, 4)) AS i(i)
-        ), r AS (
-          SELECT event_type, CAST(round(value * 100) AS BIGINT) AS c,
-                 probe
-          FROM events CROSS JOIN probes
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-        )
-        SELECT event_type, probe,
-               CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CASE WHEN c <= probe THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_leq,
-               round(CAST(sum(CASE WHEN c <= probe THEN 1 ELSE 0 END)
-                          AS DOUBLE) / CAST(count(*) AS DOUBLE), 9)
-                 AS ecdf
-        FROM r GROUP BY event_type, probe"""
-
-    o["ship_delay_quantiles"] = """
-        WITH j AS (
-          SELECT o_orderpriority,
-                 CAST(date_diff('day', CAST(o_orderdate AS DATE),
-                                CAST(l_shipdate AS DATE)) AS BIGINT)
-                   AS lag_days
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        )
-        SELECT o_orderpriority,
-               CAST(count(*) AS BIGINT) AS n_lines,
-               CAST(sum(CASE WHEN lag_days < 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_negative,
-               round(quantile_cont(lag_days, 0.5), 6) AS p50_days,
-               round(quantile_cont(lag_days, 0.9), 6) AS p90_days,
-               round(quantile_cont(lag_days, 0.99), 6) AS p99_days
-        FROM j GROUP BY o_orderpriority"""
-
-    # ---- round-11 surface: graph quality + retrieval eval ----------
-
-    o["modularity"] = _dedup.modularity_oracle_sql(
-        rounds=4, k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    o["assortativity"] = _dedup.assortativity_oracle_sql(
-        k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    o["clustering_buckets"] = _dedup.clustering_buckets_oracle_sql(
-        k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-    # mrr_eval composes the two already-oracled retrieval replays, the
-    # ann_recall pattern; reciprocal rank in exact 1/2520 units
-    o["mrr_eval"] = f"""
-        SELECT t.q_id,
-               CAST(c.rank AS BIGINT) AS found_rank,
-               CAST(coalesce(2520 // c.rank, 0) AS BIGINT) AS rr_units,
-               round(CAST(coalesce(2520 // c.rank, 0) AS DOUBLE)
-                     / 2520.0, 9) AS rr
-        FROM ({o["knn_cosine"]}) t
-        LEFT JOIN ({o["ivf_topk"]}) c
-          ON t.q_id = c.q_id AND t.vec_id = c.vec_id
-        WHERE t.rank = 1"""
-
-    o["tfidf_cosine_capped"] = llm_text.tfidf_cosine_pairs_oracle_sql(
-        threshold=0.3, max_df_pct=5, max_df_abs=256
-    )
-
-    # ---- round-11 surface: rank statistics + exact-moment matrix ---
-
-    o["mannwhitney_binned"] = """
-        WITH c AS (
-          SELECT CAST(floor(CAST(CAST(round(value * 100) AS BIGINT) * 1024
-                                 AS DOUBLE) / 49003.0) AS BIGINT) AS bin,
-                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                          END) AS BIGINT) AS ca,
-                 CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS cb
-          FROM events
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-            AND event_type IN ('purchase', 'view')
-          GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(ca) AS BIGINT) AS na,
-                 CAST(sum(cb) AS BIGINT) AS nb
-          FROM c
-        ), cum AS (
-          SELECT a.bin, a.ca, a.cb,
-                 CAST(sum(b.ca + b.cb) AS BIGINT) AS cum_incl
-          FROM c a JOIN c b ON b.bin <= a.bin
-          GROUP BY a.bin, a.ca, a.cb
-        ), s AS (
-          SELECT CAST(sum(ca * ((cum_incl - (ca + cb)) * 2
-                               + (ca + cb) + 1)) AS BIGINT) AS two_ra,
-                 CAST(sum((ca + cb) * (ca + cb) * (ca + cb)
-                          - (ca + cb)) AS BIGINT) AS sum_t3t
-          FROM cum
-        )
-        SELECT na, nb,
-               CAST(two_ra - na * (na + 1) AS BIGINT) AS two_u,
-               sum_t3t AS sum_t3_t,
-               round(CAST(two_ra - na * (na + 1) AS DOUBLE)
-                     / (2.0 * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)),
-                     9) AS auc,
-               round(CAST(two_ra - na * (na + 1) - na * nb AS DOUBLE)
-                     / sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)
-                            * CAST((na + nb + 1) * (na + nb)
-                                   * (na + nb - 1) - sum_t3t AS DOUBLE)
-                            / (3.0 * CAST(na + nb AS DOUBLE)
-                               * CAST(na + nb - 1 AS DOUBLE))), 9) AS z
-        FROM s CROSS JOIN tot"""
-
-    o["spearman_binned"] = """
-        WITH r AS (
-          SELECT CAST(floor(CAST(CAST(round(value * 100) AS BIGINT) * 1024
-                                 AS DOUBLE) / 49003.0) AS BIGINT) AS bx,
-                 CAST(hour(ts) AS BIGINT) AS bh
-          FROM events
-          WHERE user_id IS NOT NULL AND value IS NOT NULL
-            AND event_type = 'purchase'
-        ), cx AS (
-          SELECT bx, CAST(count(*) AS BIGINT) AS t FROM r GROUP BY bx
-        ), rx AS (
-          SELECT a.bx,
-                 CAST((sum(b.t) - a.t) * 2 + a.t + 1 AS BIGINT) AS r2
-          FROM cx a JOIN cx b ON b.bx <= a.bx
-          GROUP BY a.bx, a.t
-        ), cy AS (
-          SELECT bh, CAST(count(*) AS BIGINT) AS t FROM r GROUP BY bh
-        ), ry AS (
-          SELECT a.bh,
-                 CAST((sum(b.t) - a.t) * 2 + a.t + 1 AS BIGINT) AS r2
-          FROM cy a JOIN cy b ON b.bh <= a.bh
-          GROUP BY a.bh, a.t
-        ), s AS (
-          SELECT CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(rx.r2) AS BIGINT) AS sum_rx,
-                 CAST(sum(ry.r2) AS BIGINT) AS sum_ry,
-                 CAST(sum(rx.r2 * rx.r2) AS BIGINT) AS sum_rx2,
-                 CAST(sum(ry.r2 * ry.r2) AS BIGINT) AS sum_ry2,
-                 CAST(sum(rx.r2 * ry.r2) AS BIGINT) AS sum_rxy
-          FROM r JOIN rx ON r.bx = rx.bx JOIN ry ON r.bh = ry.bh
-        )
-        SELECT n, sum_rx, sum_ry, sum_rx2, sum_ry2, sum_rxy,
-               round((CAST(n AS DOUBLE) * CAST(sum_rxy AS DOUBLE)
-                      - CAST(sum_rx AS DOUBLE) * CAST(sum_ry AS DOUBLE))
-                     / (sqrt(CAST(n AS DOUBLE) * CAST(sum_rx2 AS DOUBLE)
-                             - CAST(sum_rx AS DOUBLE)
-                               * CAST(sum_rx AS DOUBLE))
-                        * sqrt(CAST(n AS DOUBLE) * CAST(sum_ry2 AS DOUBLE)
-                               - CAST(sum_ry AS DOUBLE)
-                                 * CAST(sum_ry AS DOUBLE))), 9) AS rho
-        FROM s"""
-
-    _cm_cols = {
-        "quantity": "CAST(round(l_quantity) AS BIGINT)",
-        "price": "CAST(round(l_extendedprice * 100) AS BIGINT)",
-        "discount": "CAST(round(l_discount * 100) AS BIGINT)",
-        "tax": "CAST(round(l_tax * 100) AS BIGINT)",
-    }
-    _cm_names = list(_cm_cols)
-    _cm_sums = ["CAST(count(*) AS BIGINT) AS n"]
-    for _a in _cm_names:
-        _cm_sums.append(f"sum({_cm_cols[_a]}) AS s_{_a}")
-        _cm_sums.append(
-            f"sum({_cm_cols[_a]} * {_cm_cols[_a]}) AS s_{_a}_{_a}"
-        )
-    for _i, _a in enumerate(_cm_names):
-        for _b in _cm_names[_i + 1:]:
-            _cm_sums.append(
-                f"sum({_cm_cols[_a]} * {_cm_cols[_b]}) AS s_{_a}_{_b}"
-            )
-
-    def _cm_corr(a, b):
-        return (
-            f"round((CAST(n AS DOUBLE) * CAST(s_{a}_{b} AS DOUBLE)"
-            f" - CAST(s_{a} AS DOUBLE) * CAST(s_{b} AS DOUBLE))"
-            f" / (sqrt(CAST(n AS DOUBLE) * CAST(s_{a}_{a} AS DOUBLE)"
-            f" - CAST(s_{a} AS DOUBLE) * CAST(s_{a} AS DOUBLE))"
-            f" * sqrt(CAST(n AS DOUBLE) * CAST(s_{b}_{b} AS DOUBLE)"
-            f" - CAST(s_{b} AS DOUBLE) * CAST(s_{b} AS DOUBLE))), 9)"
-        )
-
-    _cm_arms = " UNION ALL ".join(
-        f"SELECT '{a}' AS col_a, '{b}' AS col_b, n, {_cm_corr(a, b)} AS corr"
-        f" FROM s"
-        for i, a in enumerate(_cm_names)
-        for b in _cm_names[i + 1:]
-    )
-    o["corr_matrix"] = (
-        "WITH s AS (SELECT "
-        + ", ".join(_cm_sums)
-        + " FROM lineitem) "
-        + _cm_arms
-    )
-
-    # ---- round-11 surface: dedup diagnostics + privacy distance ----
-
-    # bleu_verify pivots the independently-gated rouge_n replay over the
-    # LSH candidates and applies the BLEU-2 closed form per row
-    o["bleu_verify"] = f"""
-        WITH r AS ({llm_text.rouge_n_oracle_sql(
-            pairs_sql=_dedup.lsh_candidates_sql(k=5, num_hashes=64, bands=8)
-        )}),
-        piv AS (
-          SELECT ref_id, cand_id,
-                 max(CASE WHEN n = 1 THEN "overlap" END) AS o1,
-                 max(CASE WHEN n = 1 THEN ref_total END) AS r1,
-                 max(CASE WHEN n = 1 THEN cand_total END) AS c1,
-                 max(CASE WHEN n = 2 THEN "overlap" END) AS o2,
-                 max(CASE WHEN n = 2 THEN cand_total END) AS c2
-          FROM r GROUP BY ref_id, cand_id
-        )
-        SELECT ref_id, cand_id,
-               CAST(r1 AS BIGINT) AS ref_len,
-               CAST(c1 AS BIGINT) AS cand_len,
-               round(CAST(o1 AS DOUBLE) / nullif(CAST(c1 AS DOUBLE), 0.0),
-                     9) AS p1,
-               round(CAST(o2 AS DOUBLE) / nullif(CAST(c2 AS DOUBLE), 0.0),
-                     9) AS p2,
-               round(CASE WHEN r1 <= c1 THEN 1.0
-                     ELSE exp(1.0 - CAST(r1 AS DOUBLE) / CAST(c1 AS DOUBLE))
-                     END, 9) AS bp,
-               round((CASE WHEN r1 <= c1 THEN 1.0
-                      ELSE exp(1.0 - CAST(r1 AS DOUBLE) / CAST(c1 AS DOUBLE))
-                      END)
-                     * sqrt((CAST(o1 AS DOUBLE)
-                             / nullif(CAST(c1 AS DOUBLE), 0.0))
-                            * (CAST(o2 AS DOUBLE)
-                               / nullif(CAST(c2 AS DOUBLE), 0.0))), 9)
-                 AS bleu2
-        FROM piv"""
-
-    # the sweep verifies once at 0.5 (same float-division filter as the
-    # vp CTE) and counts the grid by integer cross-multiplication
-    o["dedup_threshold_sweep"] = (
-        _dedup._cand_ctes(5, 64, 8)
-        + _dedup._verify_ctes(5, 0.5)
-        + """, pc AS (
-          SELECT i.a, i.b, CAST(i.i AS BIGINT) AS it,
-                 CAST(za.n + zb.n - i.i AS BIGINT) AS un
-          FROM inter i
-          JOIN sz za ON za.doc_id = i.a
-          JOIN sz zb ON zb.doc_id = i.b
-          WHERE CAST(i.i AS DOUBLE) / (za.n + zb.n - i.i) >= 0.5
-        ), grid AS (
-          SELECT CAST(50 + 5 * g.g AS BIGINT) AS pct
-          FROM unnest(generate_series(0, 9)) AS g(g)
-        )
-        SELECT pct,
-               CAST(sum(CASE WHEN it * 100 >= pct * un THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_pairs,
-               CAST(count(DISTINCT CASE WHEN it * 100 >= pct * un THEN b
-                          END) AS BIGINT) AS n_docs_flagged
-        FROM pc CROSS JOIN grid
-        GROUP BY pct"""
-    )
-
-    o["cluster_size_dist"] = f"""
-        SELECT sz AS cluster_size,
-               CAST(count(*) AS BIGINT) AS n_clusters,
-               CAST(count(*) * sz AS BIGINT) AS n_docs
-        FROM (
-          SELECT component, CAST(count(*) AS BIGINT) AS sz
-          FROM ({o["dedup_clusters"]})
-          GROUP BY component
-        )
-        GROUP BY sz"""
-
-    o["t_closeness"] = """
-        WITH cell AS (
-          SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-                 c_mktsegment AS mktsegment,
-                 CAST(floor((c_acctbal + CAST(10000 AS DOUBLE))
-                            / CAST(1000 AS DOUBLE)) AS BIGINT) AS band,
-                 CAST(count(*) AS BIGINT) AS cnt
-          FROM customer
-          GROUP BY 1, 2, 3
-        ), gtot AS (
-          SELECT band, CAST(sum(cnt) AS BIGINT) AS nb
-          FROM cell GROUP BY band
-        ), nn AS (
-          SELECT CAST(sum(nb) AS BIGINT) AS N,
-                 CAST(count(*) AS BIGINT) AS m
-          FROM gtot
-        ), grp AS (
-          SELECT nationkey, mktsegment, CAST(sum(cnt) AS BIGINT) AS ng
-          FROM cell GROUP BY nationkey, mktsegment
-        ), dense AS (
-          SELECT g.nationkey, g.mktsegment, t.band, g.ng,
-                 CAST(coalesce(c.cnt, 0) AS BIGINT) AS c
-          FROM grp g
-          CROSS JOIN (SELECT band FROM gtot) t
-          LEFT JOIN cell c ON c.nationkey = g.nationkey
-                          AND c.mktsegment = g.mktsegment
-                          AND c.band = t.band
-        ), cum AS (
-          SELECT d.nationkey, d.mktsegment, d.band, d.ng,
-                 CAST(sum(b2.nb) AS BIGINT) AS cum_all
-          FROM dense d JOIN gtot b2 ON b2.band <= d.band
-          GROUP BY d.nationkey, d.mktsegment, d.band, d.ng
-        ), cumg AS (
-          SELECT cum.nationkey, cum.mktsegment, cum.band, cum.ng,
-                 cum.cum_all,
-                 CAST(sum(d3.c) AS BIGINT) AS cum_g
-          FROM cum JOIN dense d3
-            ON d3.nationkey = cum.nationkey
-           AND d3.mktsegment = cum.mktsegment
-           AND d3.band <= cum.band
-          GROUP BY cum.nationkey, cum.mktsegment, cum.band, cum.ng,
-                   cum.cum_all
-        )
-        SELECT cumg.nationkey, cumg.mktsegment,
-               cumg.ng AS n_rows,
-               CAST(sum(abs(cum_g * nn.N - cum_all * cumg.ng)) AS BIGINT)
-                 AS emd_num,
-               round(CAST(sum(abs(cum_g * nn.N - cum_all * cumg.ng))
-                          AS DOUBLE)
-                     / (CAST(cumg.ng AS DOUBLE) * CAST(nn.N AS DOUBLE)
-                        * CAST(nn.m - 1 AS DOUBLE)), 9) AS t
-        FROM cumg CROSS JOIN nn
-        GROUP BY cumg.nationkey, cumg.mktsegment, cumg.ng, nn.N, nn.m"""
-
-    # ---- round-11 surface: window/rollup/DSP-feature shapes ---------
-
-    o["reset_running_sum"] = """
-        WITH d AS (
-          SELECT event_id, user_id, ts,
-                 CAST(coalesce(CAST(round(value * 100) AS BIGINT), 0)
-                      AS BIGINT) AS c,
-                 CAST(sum(CASE WHEN event_type = 'purchase' THEN 1
-                          ELSE 0 END) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS BIGINT) AS segment
-          FROM events WHERE user_id IS NOT NULL
-        )
-        SELECT event_id, user_id, segment,
-               CAST(sum(c) OVER (
-                 PARTITION BY user_id, segment ORDER BY ts, event_id
-               ) AS BIGINT) AS run_cents
-        FROM d"""
-
-    o["grouping_sets_revenue"] = """
-        SELECT l_returnflag, l_linestatus,
-               CAST(grouping(l_returnflag) AS BIGINT) AS g_rf,
-               CAST(grouping(l_linestatus) AS BIGINT) AS g_ls,
-               CAST(sum(CAST(round(l_extendedprice * (1 - l_discount)
-                                   * 10000) AS BIGINT)) AS BIGINT)
-                 AS rev_units,
-               count(*) AS n_lines
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                (l_returnflag), ())"""
-
-    # the oracle aggregates raw rows straight to months — equality with
-    # the Spark two-level partial merge proves the merge is lossless
-    o["merge_partials"] = """
-        SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP)
-                 AS month,
-               CAST(count(*) AS BIGINT) AS n_lines,
-               CAST(sum(CAST(round(l_extendedprice * (1 - l_discount)
-                                   * 10000) AS BIGINT)) AS BIGINT)
-                 AS rev_units,
-               CAST(min(CAST(round(l_extendedprice * (1 - l_discount)
-                                   * 10000) AS BIGINT)) AS BIGINT)
-                 AS min_units,
-               CAST(max(CAST(round(l_extendedprice * (1 - l_discount)
-                                   * 10000) AS BIGINT)) AS BIGINT)
-                 AS max_units
-        FROM lineitem
-        GROUP BY 1"""
-
-    o["zero_crossing_rate"] = (
-        "WITH "
-        + signal_cte(NCH)
-        + """, d AS (
-          SELECT recording_id, channel,
-                 t // 256 AS frame,
-                 (t - 1) // 256 AS pframe,
-                 CASE WHEN (lag(v) OVER (
-                        PARTITION BY recording_id, channel ORDER BY t
-                      ) - 0.5) * (v - 0.5) < 0 THEN 1 ELSE 0 END AS x
-          FROM signal
-        )
-        SELECT recording_id, channel, CAST(frame AS BIGINT) AS frame,
-               CAST(sum(CASE WHEN pframe = frame AND x = 1 THEN 1
-                        ELSE 0 END) AS BIGINT) AS n_cross,
-               CAST(count(*) AS BIGINT) AS n_samples
-        FROM d GROUP BY recording_id, channel, frame"""
-    )
-
-    # ---- round-11 surface: PR curve, MAP, stationary distribution --
-
-    o["pr_auc_binned"] = f"""
-        WITH nb AS ({o["nb_lang_scores"]}),
-        per_doc AS (
-          SELECT doc_id,
-                 max(CASE WHEN score_lang = 'en' THEN log_score END) AS sen,
-                 max(CASE WHEN score_lang <> 'en' THEN log_score END) AS sot,
-                 max(CASE WHEN score_lang = 'en' THEN n_tokens END) AS nt
-          FROM nb GROUP BY doc_id
-        ), hist AS (
-          SELECT least(greatest(floor(((per_doc.sen - per_doc.sot)
-                                       / CAST(nt AS DOUBLE) + 0.5)
-                                      * 1024.0), 0), 1023) AS b,
-                 CAST(sum(CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END)
-                      AS BIGINT) AS pos,
-                 CAST(sum(CASE WHEN d.lang = 'en' THEN 0 ELSE 1 END)
-                      AS BIGINT) AS neg
-          FROM per_doc JOIN documents d USING (doc_id)
-          GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(pos) AS BIGINT) AS P,
-                 CAST(sum(neg) AS BIGINT) AS N
-          FROM hist
-        ), above AS (
-          SELECT a.b, a.pos,
-                 CAST(sum(h2.pos) AS BIGINT) AS tp,
-                 CAST(sum(h2.neg) AS BIGINT) AS fp
-          FROM hist a JOIN hist h2 ON h2.b >= a.b
-          GROUP BY a.b, a.pos
-        )
-        SELECT tot.P AS n_pos, tot.N AS n_neg,
-               CAST(sum(CAST(round(1e9 * CAST(pos * tp AS DOUBLE)
-                                   / CAST(tot.P * (tp + fp) AS DOUBLE))
-                             AS BIGINT)) AS BIGINT) AS ap_units,
-               round(CAST(sum(CAST(round(1e9 * CAST(pos * tp AS DOUBLE)
-                                         / CAST(tot.P * (tp + fp)
-                                                AS DOUBLE)) AS BIGINT))
-                          AS DOUBLE) / 1e9, 9) AS pr_auc
-        FROM above CROSS JOIN tot
-        GROUP BY tot.P, tot.N"""
-
-    o["map_eval"] = f"""
-        WITH t AS ({o["knn_cosine"]}),
-        c AS ({o["ivf_topk"]}),
-        j AS (
-          SELECT c.q_id, c.rank,
-                 CASE WHEN t.vec_id IS NOT NULL THEN 1 ELSE 0 END AS rel
-          FROM c LEFT JOIN t
-            ON t.q_id = c.q_id AND t.vec_id = c.vec_id
-        ), d AS (
-          SELECT q_id, rank, rel,
-                 CAST(sum(rel) OVER (
-                   PARTITION BY q_id ORDER BY rank
-                 ) AS BIGINT) AS hits
-          FROM j
-        )
-        SELECT q_id,
-               CAST(max(hits) AS BIGINT) AS n_rel,
-               CAST(sum(rel * ((60 * hits) // rank)) AS BIGINT)
-                 AS ap_units,
-               round(CAST(sum(rel * ((60 * hits) // rank)) AS DOUBLE)
-                     / nullif(CAST(60 * max(hits) AS DOUBLE), 0.0), 9)
-                 AS ap
-        FROM d GROUP BY q_id"""
-
-    _sm_ctes = ["""
-        WITH s AS (
-          SELECT event_type AS from_type,
-                 lead(event_type) OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS to_type
-          FROM events WHERE user_id IS NOT NULL
-        ), t AS (
-          SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-          FROM s WHERE to_type IS NOT NULL
-          GROUP BY from_type, to_type
-        ), rt AS (
-          SELECT from_type, CAST(sum(n) AS BIGINT) AS rt FROM t
-          GROUP BY from_type
-        ), trans AS (
-          SELECT t.from_type, t.to_type, t.n, rt.rt
-          FROM t JOIN rt ON rt.from_type = t.from_type
-        ), p0 AS (
-          SELECT DISTINCT from_type AS state,
-                 CAST(200000000000 AS BIGINT) AS u
-          FROM trans
-        )"""]
-    for _i in range(1, 9):
-        _sm_ctes.append(f""", p{_i} AS (
-          SELECT trans.to_type AS state,
-                 CAST(sum((p{_i-1}.u * trans.n) // trans.rt) AS BIGINT)
-                   AS u
-          FROM trans JOIN p{_i-1} ON trans.from_type = p{_i-1}.state
-          GROUP BY trans.to_type
-        )""")
-    o["stationary_markov"] = (
-        "".join(_sm_ctes)
-        + """
-        SELECT state AS event_type, u AS pi_units,
-               round(CAST(u AS DOUBLE) / 1e12, 9) AS pi
-        FROM p8"""
-    )
-
-    o["ppr_seeded"] = _dedup.personalized_pagerank_oracle_sql(
-        seed_pred="x % 5 = 0",
-        iters=5,
-        k=5,
-        num_hashes=64,
-        bands=8,
-        threshold=0.8,
-    )
-    o["conductance"] = _dedup.conductance_oracle_sql(
-        rounds=4, k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-
-    o["setsim_pairs"] = _dedup.set_similarity_join_oracle_sql(
-        k=8, t_num=4, t_den=5
-    )
-    o["winnow_pairs"] = _dedup.winnow_pairs_oracle_sql(
-        k=5, w=4, max_df=20, min_shared=3
-    )
-    o["heavy_ngrams"] = _sketch.misra_gries_heavy_oracle_sql(
-        inner=fr"""SELECT substring(nt, i, 8) AS item
-          FROM (SELECT {dedup.normalize_text_sql()}
-                  AS nt FROM documents WHERE text IS NOT NULL) n,
-          unnest(generate_series(1, greatest(length(nt) - 7, 0))) AS u(i)""",
-        k=200,
-    )
-    o["incident_windows"] = """
-        WITH inc AS (
-          SELECT event_id AS incident_id,
-                 epoch_us(ts) - 1800000000 AS lo,
-                 epoch_us(ts) + 1800000000 AS hi
-          FROM events WHERE event_type = 'error' AND value >= 150.0
-        ), pt AS (
-          SELECT epoch_us(ts) AS t,
-                 CAST(round(value * 100) AS BIGINT) AS v
-          FROM events
-        )
-        SELECT incident_id, CAST(count(*) AS BIGINT) AS n_events,
-               CAST(sum(v) AS BIGINT) AS sum_cents
-        FROM inc JOIN pt ON pt.t >= inc.lo AND pt.t < inc.hi
-        GROUP BY incident_id
-    """
-    o["woe_encode"] = """
-        WITH g AS (
-          SELECT event_type, CAST(hour(ts) AS BIGINT) AS hr,
-                 CAST(sum(CASE WHEN value > 50.0 THEN 1 ELSE 0 END)
-                   AS BIGINT) AS pos,
-                 CAST(sum(CASE WHEN value > 50.0 THEN 0 ELSE 1 END)
-                   AS BIGINT) AS neg
-          FROM events GROUP BY 1, 2
-        ), tot AS (
-          SELECT CAST(sum(pos) AS BIGINT) AS pt,
-                 CAST(sum(neg) AS BIGINT) AS nt,
-                 CAST(count(*) AS BIGINT) AS c
-          FROM g
-        )
-        SELECT event_type, hr, pos, neg,
-               ln(((CAST(pos AS DOUBLE) + 0.5)
-                   / (CAST(pt AS DOUBLE) + 0.5 * CAST(c AS DOUBLE)))
-                  / ((CAST(neg AS DOUBLE) + 0.5)
-                     / (CAST(nt AS DOUBLE) + 0.5 * CAST(c AS DOUBLE))))
-                 AS woe
-        FROM g, tot
-    """
-    o["isotonic_calibration"] = """
-        WITH bins AS (
-          SELECT CAST(hour(ts) AS BIGINT) AS hr,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(CASE WHEN value > 50.0 THEN 1 ELSE 0 END)
-                   AS BIGINT) AS s
-          FROM events GROUP BY 1
-        ), segs AS (
-          SELECT l.hr AS l, j.hr AS j,
-                 (sum(m.s) * 1000000000) // sum(m.n) AS mu
-          FROM bins l
-          JOIN bins j ON l.hr <= j.hr
-          JOIN bins m ON m.hr BETWEEN l.hr AND j.hr
-          GROUP BY 1, 2
-        ), inner_min AS (
-          SELECT i.hr AS i, sg.l, min(sg.mu) AS mn
-          FROM bins i
-          JOIN segs sg ON sg.l <= i.hr AND sg.j >= i.hr
-          GROUP BY 1, 2
-        ), iso AS (
-          SELECT i, CAST(max(mn) AS BIGINT) AS iso_units
-          FROM inner_min GROUP BY i
-        )
-        SELECT b.hr, b.n, b.s,
-               CAST((b.s * 1000000000) // b.n AS BIGINT) AS rate_units,
-               iso.iso_units
-        FROM bins b JOIN iso ON iso.i = b.hr
-    """
-    o["sprt_ab"] = """
-        WITH base AS (
-          SELECT CAST(ts AS DATE) AS day, ts, event_id,
-                 CASE WHEN value > 50.0 THEN 182321557
-                      ELSE -223143551 END AS inc
-          FROM events WHERE event_type = 'purchase'
-        ), r AS (
-          SELECT day,
-                 row_number() OVER (PARTITION BY day
-                   ORDER BY ts, event_id) AS rn,
-                 sum(inc) OVER (PARTITION BY day ORDER BY ts, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS llr
-          FROM base
-        ), crossed AS (
-          SELECT day, CAST(min(rn) AS BIGINT) AS n_decide,
-                 min_by(llr, rn) AS llr_at
-          FROM r WHERE llr >= 2944438979 OR llr <= -2944438979
-          GROUP BY day
-        ), totals AS (
-          SELECT day, CAST(count(*) AS BIGINT) AS n_trials
-          FROM base GROUP BY day
-        )
-        SELECT t.day, t.n_trials,
-               CASE WHEN c.llr_at >= 2944438979 THEN 'accept_h1'
-                    WHEN c.llr_at <= -2944438979 THEN 'accept_h0'
-                    ELSE 'inconclusive' END AS decision,
-               c.n_decide
-        FROM totals t LEFT JOIN crossed c ON c.day = t.day
-    """
-
-    _pca_ctes = ["""
-        WITH x AS (
-          SELECT vec_id, CAST(d AS BIGINT) AS d,
-                 CAST(round(emb[d] * 1000000) AS BIGINT) AS xu
-          FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-                FROM embeddings),
-               unnest(generate_series(1, 8)) AS u(d)
-        ), s AS (
-          SELECT d, sum(CAST(xu AS HUGEINT)) AS S,
-                 CAST(count(*) AS BIGINT) AS n
-          FROM x GROUP BY d
-        ), mm AS (
-          SELECT a.d AS d1, b.d AS d2,
-                 sum(CAST(a.xu AS HUGEINT) * CAST(b.xu AS HUGEINT)) AS M
-          FROM x a JOIN x b ON a.vec_id = b.vec_id
-          GROUP BY 1, 2
-        ), cmat AS MATERIALIZED (
-          SELECT mm.d1, mm.d2,
-                 CASE WHEN (s1.n * mm.M - s1.S * s2.S) < 0
-                      THEN -CAST(abs(s1.n * mm.M - s1.S * s2.S) // s1.n
-                                 AS BIGINT)
-                      ELSE CAST(abs(s1.n * mm.M - s1.S * s2.S) // s1.n
-                                AS BIGINT) END AS c
-          FROM mm JOIN s s1 ON s1.d = mm.d1 JOIN s s2 ON s2.d = mm.d2
-        ), v0 AS (
-          SELECT d AS j, CAST(1000000 AS BIGINT) AS v FROM s
-        )"""]
-    for _r in range(1, 9):
-        _pca_ctes.append(f""", raw{_r} AS MATERIALIZED (
-          SELECT d1, sum(CAST(c AS HUGEINT) * v{_r - 1}.v) AS raw
-          FROM cmat JOIN v{_r - 1} ON v{_r - 1}.j = cmat.d2
-          GROUP BY d1
-        ), m{_r} AS (
-          SELECT max(abs(raw)) AS m FROM raw{_r}
-        ), v{_r} AS (
-          SELECT d1 AS j,
-                 CASE WHEN raw < 0
-                      THEN -CAST((abs(raw) * 1000000) // m AS BIGINT)
-                      ELSE CAST((abs(raw) * 1000000) // m AS BIGINT)
-                 END AS v
-          FROM raw{_r}, m{_r}
-        )""")
-    o["pca_power_iteration"] = (
-        "".join(_pca_ctes)
-        + """
-        SELECT j AS d, v AS v_units FROM v8"""
-    )
-
-    o["peak_concurrency"] = """
-        WITH base AS (
-          SELECT event_type, epoch_us(ts) AS t0 FROM events
-        ), sweep AS (
-          SELECT event_type, t0 AS t, 1 AS delta FROM base
-          UNION ALL
-          SELECT event_type, t0 + 1800000000 AS t, -1 AS delta FROM base
-        ), cum AS (
-          SELECT event_type, t,
-                 sum(delta) OVER (PARTITION BY event_type
-                   ORDER BY t, delta
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS cum
-          FROM sweep
-        ), pk AS (
-          SELECT event_type, t, cum,
-                 max(cum) OVER (PARTITION BY event_type) AS pk
-          FROM cum
-        )
-        SELECT event_type, CAST(max(cum) AS BIGINT) AS peak,
-               CAST(min(t) AS BIGINT) AS first_peak_t
-        FROM pk WHERE cum = pk GROUP BY event_type
-    """
-
-    from openseize_spark.llm.sampling import salted_hash_sql as _shs
-
-    def _ring_assign_cte(tag, n_shards):
-        vn = _ring_vnodes(n_shards, 16)
-        vals = ", ".join(f"({vh}, {s})" for vh, s in vn)
-        fb = vn[0][1]
-        return f"""{tag} AS (
-          SELECT k.doc_id,
-                 coalesce(min_by(v.shard, v.vh)
-                            FILTER (WHERE v.vh >= k.kh),
-                          {fb}) AS shard
-          FROM keys k
-          LEFT JOIN (SELECT * FROM (VALUES {vals}) AS t(vh, shard)) v
-            ON v.vh >= k.kh
-          GROUP BY k.doc_id
-        )"""
-
-    o["consistent_hash_ring"] = f"""
-        WITH keys AS (
-          SELECT doc_id, {_shs("doc_id", "ring")} AS kh FROM documents
-        ), {_ring_assign_cte("a8", 8)}, {_ring_assign_cte("a9", 9)}
-        SELECT CAST(a8.shard AS BIGINT) AS shard_before,
-               CAST(a9.shard AS BIGINT) AS shard_after,
-               CAST(count(*) AS BIGINT) AS n
-        FROM a8 JOIN a9 ON a8.doc_id = a9.doc_id
-        GROUP BY 1, 2
-    """
-
-    from openseize_spark.llm import similarity as _similarity
-
-    o["spatial_eps_pairs"] = _similarity.grid_eps_pairs_oracle_sql(
-        eps_units=50_000
-    )
-    o["dag_layers"] = _dedup.dag_layers_oracle_sql(
-        rounds=8, k=5, num_hashes=64, bands=8, threshold=0.8
-    )
-
-    from openseize_spark.functions.scalar import (
-        hilbert_ctes_sql as _hctes,
-        zorder_key_sql as _zsql,
-    )
-
-    o["hilbert_layout"] = f"""
-        WITH {_hctes(
-            "SELECT DISTINCT CAST(p_partkey % 64 AS BIGINT) AS x, "
-            "CAST(p_size % 64 AS BIGINT) AS y FROM part"
-        )}
-        SELECT x, y, hd, CAST({_zsql("x", "y", 6)} AS BIGINT) AS zd
-        FROM hsteps
-    """
-
-    o["streaming_asof"] = """
-        WITH j AS (
-          SELECT p.ts AS pts, c.ts AS cts
-          FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-          ASOF LEFT JOIN
-               (SELECT * FROM events WHERE event_type = 'click') c
-            ON p.user_id = c.user_id AND p.ts >= c.ts
-        )
-        SELECT CAST(pts AS DATE) AS day,
-               CAST(count(*) AS BIGINT) AS n_purchases,
-               CAST(count(cts) AS BIGINT) AS n_attributed,
-               CAST(sum(epoch_us(pts) - epoch_us(cts)) AS BIGINT)
-                 AS sum_lag_us
-        FROM j GROUP BY 1
-    """
-
-    from openseize_spark.llm import sampling as _sampling
-
-    o["greedy_set_cover"] = _sampling.greedy_set_cover_oracle_sql(
-        k=8, steps=8
-    )
-    o["fs_linkage"] = _dedup.fellegi_sunter_oracle_sql(
-        k=5, num_hashes=64, bands=8
-    )
-
-    o["bom_rollup"] = """
-        WITH RECURSIVE anc AS (
-          SELECT p_partkey AS node, p_partkey AS a FROM part
-          UNION ALL
-          SELECT node, (a - 1) // 4 FROM anc WHERE a > 0
-        ), own AS (
-          SELECT p_partkey AS k,
-                 CAST(round(p_retailprice * 100) AS BIGINT) AS own_cents
-          FROM part
-        )
-        SELECT anc.a AS k,
-               CAST(sum(own.own_cents) AS BIGINT) AS sub_cents,
-               CAST(count(*) AS BIGINT) AS n_nodes
-        FROM anc JOIN own ON own.k = anc.node
-        WHERE anc.a < 64
-        GROUP BY anc.a
-    """
-
-    # ---- round-11 session oracles (round-13 window material) ----
-
-    o["ancestor_chain"] = """
-        WITH RECURSIVE seeds AS (
-          SELECT p_partkey AS seed FROM part
-          ORDER BY p_retailprice DESC, p_partkey LIMIT 5
-        ), chain AS (
-          SELECT seed, CAST(seed AS BIGINT) AS k,
-                 CAST(0 AS BIGINT) AS depth
-          FROM seeds
-          UNION ALL
-          SELECT seed, (k - 1) // 4, depth + 1
-          FROM chain WHERE (k - 1) // 4 > 0
-        ), agg AS (
-          SELECT k, CAST(count(DISTINCT seed) AS BIGINT) AS n_seeds,
-                 CAST(min(depth) AS BIGINT) AS min_depth
-          FROM chain GROUP BY k
-        )
-        SELECT agg.k, agg.n_seeds, agg.min_depth,
-               CAST(round(p_retailprice * 100) AS BIGINT) AS own_cents
-        FROM agg JOIN part ON part.p_partkey = agg.k
-    """
-
-    o["fastss_pairs"] = llm_text.fastss_ed1_pairs_oracle_sql(
-        table="customer", col="c_name"
-    )
-
-    o["apriori_triples"] = """
-        WITH ob AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey AS o, p_brand AS b
-          FROM lineitem JOIN part ON p_partkey = l_partkey
-        ), n AS (
-          SELECT count(DISTINCT o) AS n FROM ob
-        ), s1 AS (
-          SELECT b, count(*) AS c FROM ob GROUP BY b
-        ), l1 AS (
-          SELECT b FROM s1, n WHERE c * 10000 >= 1000 * n.n
-        ), ob1 AS MATERIALIZED (
-          SELECT o, b FROM ob WHERE b IN (SELECT b FROM l1)
-        ), p2 AS (
-          SELECT a.o, a.b AS b1, bb.b AS b2
-          FROM ob1 a JOIN ob1 bb ON a.o = bb.o AND a.b < bb.b
-        ), s2 AS (
-          SELECT b1, b2, count(*) AS c FROM p2 GROUP BY b1, b2
-        ), l2 AS MATERIALIZED (
-          SELECT b1, b2 FROM s2, n WHERE c * 10000 >= 180 * n.n
-        ), t3 AS (
-          SELECT a.o, a.b AS b1, bb.b AS b2, cc.b AS b3
-          FROM ob1 a
-          JOIN ob1 bb ON a.o = bb.o AND a.b < bb.b
-          JOIN ob1 cc ON a.o = cc.o AND bb.b < cc.b
-        ), t3p AS (
-          SELECT t3.b1, t3.b2, t3.b3
-          FROM t3
-          JOIN l2 x ON x.b1 = t3.b1 AND x.b2 = t3.b2
-          JOIN l2 y ON y.b1 = t3.b1 AND y.b2 = t3.b3
-          JOIN l2 z ON z.b1 = t3.b2 AND z.b2 = t3.b3
-        ), s3 AS (
-          SELECT b1, b2, b3, CAST(count(*) AS BIGINT) AS support
-          FROM t3p GROUP BY b1, b2, b3
-        )
-        SELECT b1, b2, b3, support
-        FROM s3, n WHERE support * 10000 >= 20 * n.n
-    """
-
-    o["sssp_delta"] = _dedup.sssp_bounded_oracle_sql(
-        edges_cte="""
-          SELECT u, v, CAST(min(w) AS BIGINT) AS w FROM (
-            SELECT l_partkey % 1024 AS u,
-                   (l_partkey * 7 + l_orderkey) % 1024 AS v,
-                   (l_partkey + l_suppkey) % 9 + 1 AS w
-            FROM lineitem
-          ) GROUP BY u, v
-        """,
-        source=0,
-        budget=64,
-    )
-
-    o["heaps_law_fit"] = llm_text.heaps_law_fit_oracle_sql()
-
-    o["stratified_ate"] = """
-        WITH spend AS (
-          SELECT o_custkey,
-                 CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-                      AS BIGINT) AS y
-          FROM orders GROUP BY o_custkey
-        ), units AS (
-          SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-                 c_mktsegment AS mktsegment,
-                 CASE WHEN c_custkey % 2 = 0 THEN 1 ELSE 0 END AS t,
-                 CAST(coalesce(y, 0) AS BIGINT) AS y
-          FROM customer LEFT JOIN spend ON c_custkey = o_custkey
-        ), cells AS MATERIALIZED (
-          SELECT nationkey, mktsegment,
-                 CAST(sum(CASE WHEN t = 1 THEN y END) AS BIGINT) AS st,
-                 CAST(count(CASE WHEN t = 1 THEN 1 END) AS BIGINT)
-                   AS n_treated,
-                 CAST(sum(CASE WHEN t = 0 THEN y END) AS BIGINT) AS sc,
-                 CAST(count(CASE WHEN t = 0 THEN 1 END) AS BIGINT)
-                   AS n_control
-          FROM units GROUP BY nationkey, mktsegment
-          HAVING n_treated > 0 AND n_control > 0
-        ), terms AS (
-          SELECT n_treated + n_control AS n,
-                 CAST(1000000 AS HUGEINT) * (n_treated + n_control)
-                   * (CAST(st AS HUGEINT) * n_control
-                      - CAST(sc AS HUGEINT) * n_treated) AS x,
-                 CAST(n_treated AS HUGEINT) * n_control AS d
-          FROM cells
-        ), ate AS (
-          SELECT CAST(sum(CASE WHEN x < 0
-                          THEN -CAST((-x) // d AS BIGINT)
-                          ELSE CAST(x // d AS BIGINT) END) AS DOUBLE)
-                 / (CAST(sum(n) AS DOUBLE) * 1e6) AS ate_cents
-          FROM terms
-        )
-        SELECT nationkey, mktsegment, n_treated, n_control,
-               CAST(st AS DOUBLE) / CAST(n_treated AS DOUBLE)
-                 AS mean_treated_cents,
-               CAST(sc AS DOUBLE) / CAST(n_control AS DOUBLE)
-                 AS mean_control_cents,
-               ate_cents
-        FROM cells, ate
-    """
-
-    o["pivot_scc"] = """
-        WITH RECURSIVE e AS MATERIALIZED (
-          SELECT DISTINCT l_partkey % 1024 AS u,
-                 (l_partkey * 7 + l_orderkey) % 1024 AS v
-          FROM lineitem
-        ), fwd AS (
-          SELECT CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
-          UNION
-          SELECT e.v, fwd.dist + 1 FROM fwd JOIN e ON e.u = fwd.node
-          WHERE fwd.dist + 1 <= 64
-        ), bwd AS (
-          SELECT CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
-          UNION
-          SELECT e.u, bwd.dist + 1 FROM bwd JOIN e ON e.v = bwd.node
-          WHERE bwd.dist + 1 <= 64
-        ), f AS (
-          SELECT node, CAST(min(dist) AS BIGINT) AS dist_fwd
-          FROM fwd GROUP BY node
-        ), b AS (
-          SELECT node, CAST(min(dist) AS BIGINT) AS dist_bwd
-          FROM bwd GROUP BY node
-        )
-        SELECT f.node, f.dist_fwd, b.dist_bwd
-        FROM f JOIN b ON f.node = b.node
-    """
-
-    o["term_burstiness"] = f"""
-        WITH n AS (
-          SELECT CAST(count(*) AS BIGINT) AS N
-          FROM documents WHERE text IS NOT NULL
-        ), tc AS ({llm_text._doc_terms_sql(cnt="c")}), mom AS (
-          SELECT w AS term,
-                 CAST(sum(c) AS BIGINT) AS total,
-                 CAST(sum(c * c) AS BIGINT) AS s2,
-                 CAST(count(*) AS BIGINT) AS df
-          FROM tc GROUP BY w
-        )
-        SELECT term, total, df,
-               CAST(CAST(N AS HUGEINT) * s2
-                    - CAST(total AS HUGEINT) * total AS DOUBLE)
-                 / CAST(CAST(N AS HUGEINT) * total AS DOUBLE) AS vmr
-        FROM mom, n
-        ORDER BY total DESC, term ASC
-        LIMIT 20
-    """
-
-    o["bpe_learn"] = llm_text.bpe_learn_oracle_sql(rounds=3)
-
-    o["bpe_apply"] = llm_text.bpe_train_encode_oracle_sql(rounds=3)
-
-    o["kn_perplexity"] = llm_text.kn_perplexity_oracle_sql(discount=0.75)
-
-    o["cusum_by_type"] = """
-        WITH base AS MATERIALIZED (
-          SELECT event_id, ts, event_type,
-                 CAST(round(value * 100) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL
-        ), tot AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(c AS HUGEINT)) AS sv
-          FROM base GROUP BY 1
-        ), d AS (
-          SELECT b.event_type, b.event_id, b.ts,
-                 CAST(b.c AS HUGEINT) * t.n - t.sv AS dev
-          FROM base b JOIN tot t USING (event_type)
-        ), p AS (
-          SELECT *, sum(dev) OVER (PARTITION BY event_type
-                                   ORDER BY ts, event_id) AS pp
-          FROM d
-        ), s AS MATERIALIZED (
-          SELECT *,
-                 pp - least(CAST(0 AS HUGEINT),
-                            min(pp) OVER (PARTITION BY event_type
-                                          ORDER BY ts, event_id)) AS ss
-          FROM p
-        ), peak AS (
-          SELECT event_type,
-                 CAST(max(ss) AS DECIMAL(38,0)) AS peak_s,
-                 CAST(sum(CASE WHEN ss > 0 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_above
-          FROM s GROUP BY 1
-        ), first AS (
-          SELECT event_type, event_id AS peak_event_id FROM (
-            SELECT s.event_type, s.event_id,
-                   row_number() OVER (PARTITION BY s.event_type
-                                      ORDER BY s.ts, s.event_id) AS rn
-            FROM s JOIN peak USING (event_type)
-            WHERE CAST(s.ss AS DECIMAL(38,0)) = peak.peak_s
-          ) WHERE rn = 1
-        )
-        SELECT peak.event_type, peak.peak_s, first.peak_event_id,
-               peak.n_above
-        FROM peak JOIN first USING (event_type)
-    """
-
-    o["did_by_type"] = """
-        WITH rng AS (
-          SELECT min(ts) AS t0, max(ts) AS t1
-          FROM events WHERE value IS NOT NULL AND user_id IS NOT NULL
-        ), base AS (
-          SELECT event_type,
-                 (user_id % 2 = 0) AS treat,
-                 ((ts - t0) < (t1 - ts)) AS pre,
-                 CAST(round(value * 100) AS BIGINT) AS c
-          FROM events, rng
-          WHERE value IS NOT NULL AND user_id IS NOT NULL
-        ), agg AS (
-          SELECT event_type,
-                 sum(CASE WHEN treat AND NOT pre
-                          THEN CAST(c AS HUGEINT) ELSE 0 END) AS stp,
-                 CAST(sum(CASE WHEN treat AND NOT pre THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_t_post,
-                 sum(CASE WHEN treat AND pre
-                          THEN CAST(c AS HUGEINT) ELSE 0 END) AS stq,
-                 CAST(sum(CASE WHEN treat AND pre THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_t_pre,
-                 sum(CASE WHEN NOT treat AND NOT pre
-                          THEN CAST(c AS HUGEINT) ELSE 0 END) AS scp,
-                 CAST(sum(CASE WHEN NOT treat AND NOT pre THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_c_post,
-                 sum(CASE WHEN NOT treat AND pre
-                          THEN CAST(c AS HUGEINT) ELSE 0 END) AS scq,
-                 CAST(sum(CASE WHEN NOT treat AND pre THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_c_pre
-          FROM base GROUP BY 1
-        )
-        SELECT event_type, n_t_pre, n_t_post, n_c_pre, n_c_post,
-               (CAST(stp AS DOUBLE) / CAST(nullif(n_t_post, 0) AS DOUBLE)
-                - CAST(stq AS DOUBLE) / CAST(nullif(n_t_pre, 0) AS DOUBLE))
-               - (CAST(scp AS DOUBLE) / CAST(nullif(n_c_post, 0) AS DOUBLE)
-                  - CAST(scq AS DOUBLE) / CAST(nullif(n_c_pre, 0) AS DOUBLE))
-                 AS did_cents
-        FROM agg
-    """
-
-    o["dup_substring_spans"] = _dedup.dup_substring_spans_oracle_sql(n=8)
-
-    o["decision_stump"] = """
-        WITH c AS MATERIALIZED (
-          SELECT CAST(floor(CAST(CAST(round(value * 100) AS BIGINT)
-                                 * 1024 AS DOUBLE) / 49003.0)
-                      AS BIGINT) AS bin,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(CASE WHEN event_type = 'purchase'
-                               THEN 1 ELSE 0 END) AS BIGINT) AS p
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(n) AS BIGINT) AS N,
-                 CAST(sum(p) AS BIGINT) AS P FROM c
-        ), cum AS (
-          SELECT bin,
-                 CAST(sum(n) OVER (ORDER BY bin
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS n_left,
-                 CAST(sum(p) OVER (ORDER BY bin
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS pos_left
-          FROM c
-        ), cand AS (
-          SELECT bin AS split_bin, n_left, pos_left,
-                 tot.N - n_left AS n_right,
-                 tot.P - pos_left AS pos_right
-          FROM cum CROSS JOIN tot
-          WHERE n_left > 0 AND tot.N - n_left > 0
-        ), costed AS (
-          SELECT *,
-                 2 * (CAST(pos_left AS HUGEINT)
-                        * (n_left - pos_left) * n_right
-                      + CAST(pos_right AS HUGEINT)
-                        * (n_right - pos_right) * n_left) AS cost
-          FROM cand
-        )
-        SELECT split_bin, n_left, pos_left, n_right, pos_right,
-               CAST(cost AS DECIMAL(38,0)) AS cost_units
-        FROM costed ORDER BY cost ASC, split_bin ASC LIMIT 1
-    """
-
-    o["cochran_armitage"] = """
-        WITH g AS (
-          SELECT least(CAST(floor(CAST(CAST(round(value * 100) AS BIGINT)
-                                       * 4 AS DOUBLE) / 49003.0)
-                            AS BIGINT), 3) AS s,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(CASE WHEN event_type = 'purchase'
-                               THEN 1 ELSE 0 END) AS BIGINT) AS p
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(n) AS BIGINT) AS n_total,
-                 CAST(sum(p) AS BIGINT) AS p_total,
-                 sum(CAST(s AS HUGEINT) * n) AS sn,
-                 sum(CAST(s AS HUGEINT) * s * n) AS ssn,
-                 sum(CAST(s AS HUGEINT) * p) AS sp
-          FROM g
-        )
-        SELECT n_total, p_total,
-               CAST(sp AS DECIMAL(38,0)) AS sp_units,
-               CAST(sn AS DECIMAL(38,0)) AS sn_units,
-               (CAST(sp AS DOUBLE) * CAST(n_total AS DOUBLE)
-                - CAST(sn AS DOUBLE) * CAST(p_total AS DOUBLE))
-               / (CAST(n_total AS DOUBLE) * sqrt(
-                   (CAST(p_total AS DOUBLE) / CAST(n_total AS DOUBLE))
-                   * (1.0 - CAST(p_total AS DOUBLE)
-                            / CAST(n_total AS DOUBLE))
-                   * (CAST(ssn AS DOUBLE)
-                      - CAST(sn AS DOUBLE) * CAST(sn AS DOUBLE)
-                        / CAST(n_total AS DOUBLE)))) AS z
-        FROM tot
-    """
-
-    o["bartlett_test"] = """
-        WITH g AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT))
-                   AS s,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT)
-                     * CAST(round(value * 100) AS BIGINT)) AS q
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1
-          HAVING count(*) >= 2
-        ), per AS (
-          SELECT n, q,
-                 CAST(round(ln(
-                   (CAST(n AS DOUBLE) * CAST(q AS DOUBLE)
-                    - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                   / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE))
-                 ) * 1e9) AS BIGINT) AS lnu,
-                 CAST(round(1e9 / CAST(n - 1 AS DOUBLE)) AS BIGINT)
-                   AS rcu,
-                 CAST(round(CAST(s * s AS DOUBLE) / CAST(n AS DOUBLE))
-                      AS HUGEINT) AS u
-          FROM g
-        ), tot AS (
-          SELECT CAST(count(*) AS BIGINT) AS k,
-                 CAST(sum(n) AS BIGINT) AS n_total,
-                 sum(CAST(n - 1 AS HUGEINT) * lnu) AS wln,
-                 CAST(sum(rcu) AS BIGINT) AS rc,
-                 sum(q) AS qt, sum(u) AS ut
-          FROM per
-        )
-        SELECT k, n_total,
-               CAST(wln AS DECIMAL(38,0)) AS wln_units,
-               (CAST(n_total - k AS DOUBLE)
-                  * ln(CAST(qt - ut AS DOUBLE)
-                       / CAST(n_total - k AS DOUBLE))
-                - CAST(wln AS DOUBLE) / 1e9) AS m_stat,
-               (CAST(n_total - k AS DOUBLE)
-                  * ln(CAST(qt - ut AS DOUBLE)
-                       / CAST(n_total - k AS DOUBLE))
-                - CAST(wln AS DOUBLE) / 1e9)
-               / (1.0 + (CAST(rc AS DOUBLE) / 1e9
-                         - 1.0 / CAST(n_total - k AS DOUBLE))
-                        / (3.0 * CAST(k - 1 AS DOUBLE))) AS chi2
-        FROM tot
-    """
-
-    o["durbin_watson"] = """
-        WITH t0 AS (
-          SELECT min(epoch_us(ts)) AS t0 FROM events
-          WHERE value IS NOT NULL
-        ), base AS (
-          SELECT event_type, event_id, ts,
-                 CAST(epoch_us(ts) - t0 AS BIGINT) AS t,
-                 CAST(round(value * 1000000) AS BIGINT) AS v
-          FROM events, t0 WHERE value IS NOT NULL
-        ), mom AS (
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(t AS HUGEINT)) AS st,
-                 sum(CAST(v AS HUGEINT)) AS sv,
-                 sum(CAST(t AS HUGEINT) * v) AS stv,
-                 sum(CAST(t AS HUGEINT) * t) AS stt
-          FROM base GROUP BY event_type
-        ), fit AS (
-          SELECT event_type,
-                 CAST(CAST(n AS HUGEINT) * stv - st * sv AS DOUBLE)
-                   / CAST(CAST(n AS HUGEINT) * stt - st * st AS DOUBLE)
-                   AS b,
-                 (CAST(sv AS DOUBLE)
-                  - (CAST(CAST(n AS HUGEINT) * stv - st * sv AS DOUBLE)
-                     / CAST(CAST(n AS HUGEINT) * stt - st * st
-                            AS DOUBLE))
-                    * CAST(st AS DOUBLE))
-                   / CAST(n AS DOUBLE) AS a
-          FROM mom
-        ), resid AS (
-          SELECT base.event_type, base.ts, base.event_id,
-                 CAST(round(CAST(v AS DOUBLE)
-                            - (a + b * CAST(t AS DOUBLE)))
-                      AS BIGINT) AS eu
-          FROM base JOIN fit USING (event_type)
-        ), lagd AS (
-          SELECT event_type, eu,
-                 lag(eu) OVER (PARTITION BY event_type
-                               ORDER BY ts, event_id) AS prev
-          FROM resid
-        )
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(CASE WHEN prev IS NOT NULL
-                             THEN CAST(eu - prev AS HUGEINT)
-                                  * (eu - prev)
-                             ELSE 0 END) AS DECIMAL(38,0)) AS num_units,
-               CAST(sum(CAST(eu AS HUGEINT) * eu) AS DECIMAL(38,0))
-                 AS den_units,
-               CAST(sum(CASE WHEN prev IS NOT NULL
-                             THEN CAST(eu - prev AS HUGEINT)
-                                  * (eu - prev)
-                             ELSE 0 END) AS DOUBLE)
-               / CAST(sum(CAST(eu AS HUGEINT) * eu) AS DOUBLE) AS dw
-        FROM lagd GROUP BY event_type
-    """
-
-    o["kruskal_binned"] = """
-        WITH c AS MATERIALIZED (
-          SELECT CAST(floor(CAST(CAST(round(value * 100) AS BIGINT)
-                                 * 1024 AS DOUBLE) / 49003.0)
-                      AS BIGINT) AS bin,
-                 event_type, CAST(count(*) AS BIGINT) AS cg
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1, 2
-        ), bt AS MATERIALIZED (
-          SELECT bin, CAST(sum(cg) AS BIGINT) AS t FROM c GROUP BY 1
-        ), cum AS (
-          SELECT bin, t,
-                 CAST(sum(t) OVER (ORDER BY bin
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 AS BIGINT) AS cum_incl
-          FROM bt
-        ), ranked AS (
-          SELECT c.event_type, c.cg,
-                 (cum.cum_incl - cum.t) * 2 + cum.t + 1 AS two_r
-          FROM c JOIN cum USING (bin)
-        ), grp AS (
-          SELECT event_type, CAST(sum(cg) AS BIGINT) AS ng,
-                 sum(CAST(cg AS HUGEINT) * two_r) AS two_rg
-          FROM ranked GROUP BY 1
-        ), gu AS (
-          SELECT ng,
-                 CAST(round(CAST(two_rg * two_rg AS DOUBLE)
-                            / CAST(ng AS DOUBLE)) AS HUGEINT) AS u
-          FROM grp
-        ), ties AS (
-          SELECT sum(CAST(t AS HUGEINT) * t * t - t) AS t3t FROM bt
-        ), tot AS (
-          SELECT CAST(count(*) AS BIGINT) AS k,
-                 CAST(sum(ng) AS BIGINT) AS n_total,
-                 sum(u) AS u FROM gu
-        )
-        SELECT k, n_total,
-               CAST(u AS DECIMAL(38,0)) AS u_units,
-               CAST(t3t AS DECIMAL(38,0)) AS sum_t3t,
-               12.0 * (CAST(u AS DOUBLE) / 4.0)
-                 / (CAST(n_total AS DOUBLE)
-                    * (CAST(n_total AS DOUBLE) + 1.0))
-                 - 3.0 * (CAST(n_total AS DOUBLE) + 1.0) AS h,
-               (12.0 * (CAST(u AS DOUBLE) / 4.0)
-                 / (CAST(n_total AS DOUBLE)
-                    * (CAST(n_total AS DOUBLE) + 1.0))
-                 - 3.0 * (CAST(n_total AS DOUBLE) + 1.0))
-               / (1.0 - CAST(t3t AS DOUBLE)
-                  / (CAST(n_total AS DOUBLE) * CAST(n_total AS DOUBLE)
-                     * CAST(n_total AS DOUBLE)
-                     - CAST(n_total AS DOUBLE))) AS h_corrected
-        FROM tot CROSS JOIN ties
-    """
-
-    o["mcnemar_pairs"] = """
-        WITH rng AS (
-          SELECT min(ts) AS t0, max(ts) AS t1 FROM events
-          WHERE user_id IS NOT NULL
-        ), per_user AS (
-          SELECT user_id,
-                 max(CASE WHEN (ts - t0) < (t1 - ts)
-                          AND event_type = 'purchase' AND value > 200
-                          THEN 1 ELSE 0 END) AS p,
-                 max(CASE WHEN NOT ((ts - t0) < (t1 - ts))
-                          AND event_type = 'purchase' AND value > 200
-                          THEN 1 ELSE 0 END) AS q
-          FROM events, rng WHERE user_id IS NOT NULL
-          GROUP BY user_id
-        ), agg AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_users,
-                 CAST(sum(CASE WHEN p = 1 AND q = 0 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS b,
-                 CAST(sum(CASE WHEN p = 0 AND q = 1 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS c
-          FROM per_user
-        )
-        SELECT n_users, b, c,
-               CAST(b - c AS DOUBLE) * CAST(b - c AS DOUBLE)
-                 / CAST(nullif(b + c, 0) AS DOUBLE) AS chi2
-        FROM agg
-    """
-
-    o["xcorr_lags"] = sig + """
-        , a AS MATERIALIZED (
-          SELECT t, v AS v0 FROM signal WHERE channel = 0
-        ), b AS MATERIALIZED (
-          SELECT t AS t2, v AS v1 FROM signal WHERE channel = 1
-        ), lags AS (
-          SELECT CAST(u.l AS BIGINT) AS lag
-          FROM range(-32, 33) AS u(l)
-        )
-        SELECT lags.lag,
-               CAST(count(*) AS BIGINT) AS n_overlap,
-               CAST(sum(CAST(round(a.v0 * b.v1 * 1e9) AS HUGEINT))
-                    AS DECIMAL(38,0)) AS sxy_units
-        FROM a CROSS JOIN lags
-        JOIN b ON b.t2 = a.t + lags.lag
-        GROUP BY lags.lag
-    """
-
-    o["anova_f"] = """
-        WITH g AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT))
-                   AS s,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT) AS HUGEINT)
-                     * CAST(round(value * 100) AS BIGINT)) AS q
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1
-        ), gu AS (
-          SELECT n, s, q,
-                 CAST(round(CAST(s * s AS DOUBLE) / CAST(n AS DOUBLE))
-                      AS HUGEINT) AS u
-          FROM g
-        ), tot AS (
-          SELECT CAST(count(*) AS BIGINT) AS k,
-                 CAST(sum(n) AS BIGINT) AS n_total,
-                 sum(s) AS st, sum(q) AS qt, sum(u) AS ut
-          FROM gu
-        )
-        SELECT k, n_total,
-               CAST(ut - CAST(round(CAST(st * st AS DOUBLE)
-                                    / CAST(n_total AS DOUBLE))
-                              AS HUGEINT) AS DECIMAL(38,0)) AS ssb_units,
-               CAST(qt - ut AS DECIMAL(38,0)) AS ssw_units,
-               (CAST(ut - CAST(round(CAST(st * st AS DOUBLE)
-                                     / CAST(n_total AS DOUBLE))
-                               AS HUGEINT) AS DOUBLE)
-                / CAST(k - 1 AS DOUBLE))
-               / (CAST(qt - ut AS DOUBLE)
-                  / CAST(n_total - k AS DOUBLE)) AS f_stat
-        FROM tot
-    """
-
-    o["nelson_aalen"] = """
-        WITH fe AS (
-          SELECT user_id,
-                 min(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                     + 1) AS day
-          FROM events
-          WHERE user_id IS NOT NULL AND event_type = 'purchase'
-            AND value > 200
-          GROUP BY user_id
-        ), d AS (
-          SELECT day, CAST(count(*) AS BIGINT) AS deaths FROM fe
-          GROUP BY day
-        ), ntot AS (
-          SELECT CAST(count(DISTINCT user_id) AS BIGINT) AS n FROM events
-          WHERE user_id IS NOT NULL
-        ), w AS (
-          SELECT day, deaths,
-                 CAST(ntot.n - coalesce(
-                   sum(deaths) OVER (
-                     ORDER BY day
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS BIGINT) AS at_risk
-          FROM d CROSS JOIN ntot
-        ), u AS (
-          SELECT day, at_risk, deaths,
-                 CAST(round(CAST(deaths AS DOUBLE)
-                            / CAST(at_risk AS DOUBLE) * 1e9)
-                      AS BIGINT) AS hu
-          FROM w
-        )
-        SELECT CAST(day AS BIGINT) AS day, at_risk, deaths,
-               CAST(sum(hu) OVER (
-                 ORDER BY day
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS BIGINT) AS h_units,
-               CAST(sum(hu) OVER (
-                 ORDER BY day
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS DOUBLE) / 1e9 AS cum_hazard
-        FROM u
-    """
-
-    o["assoc_rules"] = """
-        WITH ob AS MATERIALIZED (
-          SELECT DISTINCT l_orderkey AS o, p_brand AS b
-          FROM lineitem JOIN part ON l_partkey = p_partkey
-        ), nn AS (
-          SELECT CAST(count(DISTINCT o) AS BIGINT) AS n FROM ob
-        ), s1 AS MATERIALIZED (
-          SELECT b, CAST(count(*) AS BIGINT) AS c FROM ob GROUP BY b
-        ), l1 AS (
-          SELECT b FROM s1, nn WHERE c * 10000 >= 1000 * nn.n
-        ), ob1 AS MATERIALIZED (
-          SELECT o, b FROM ob WHERE b IN (SELECT b FROM l1)
-        ), p2 AS (
-          SELECT a.b AS b1, x.b AS b2, CAST(count(*) AS BIGINT) AS cp
-          FROM ob1 a JOIN ob1 x ON a.o = x.o AND a.b < x.b
-          GROUP BY 1, 2
-        ), f2 AS (
-          SELECT b1, b2, cp FROM p2, nn WHERE cp * 10000 >= 180 * nn.n
-        ), rules AS (
-          SELECT b1 AS ante, b2 AS cons, cp FROM f2
-          UNION ALL
-          SELECT b2 AS ante, b1 AS cons, cp FROM f2
-        )
-        SELECT r.ante, r.cons, r.cp AS support,
-               CAST(round((CAST(r.cp AS DOUBLE) / CAST(sa.c AS DOUBLE))
-                          * 1e9) AS BIGINT) AS conf_units,
-               CAST(round((CAST(r.cp AS DOUBLE) / CAST(sa.c AS DOUBLE))
-                          * CAST(nn.n AS DOUBLE) / CAST(sc.c AS DOUBLE)
-                          * 1e9) AS BIGINT) AS lift_units
-        FROM rules r
-        JOIN s1 sa ON sa.b = r.ante
-        JOIN s1 sc ON sc.b = r.cons
-        CROSS JOIN nn
-    """
-
-    o["logrank_test"] = """
-        WITH fe AS (
-          SELECT user_id,
-                 min(date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                     + 1) AS day
-          FROM events
-          WHERE user_id IS NOT NULL AND event_type = 'purchase'
-            AND value > 200
-          GROUP BY user_id
-        ), fe2 AS (
-          SELECT day, (user_id % 2 = 0) AS g FROM fe
-        ), dg AS MATERIALIZED (
-          SELECT day, g, CAST(count(*) AS BIGINT) AS dd
-          FROM fe2 GROUP BY 1, 2
-        ), dd AS MATERIALIZED (
-          SELECT day, CAST(sum(dd) AS BIGINT) AS d,
-                 CAST(sum(CASE WHEN g THEN dd ELSE 0 END) AS BIGINT) AS d1
-          FROM dg GROUP BY 1
-        ), ns AS (
-          SELECT CAST(count(*) AS BIGINT) AS N,
-                 CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-                      AS BIGINT) AS N1
-          FROM (SELECT DISTINCT user_id FROM events
-                WHERE user_id IS NOT NULL)
-        ), pri AS (
-          SELECT dd.day,
-                 CAST(coalesce(sum(b.dd), 0) AS BIGINT) AS prior,
-                 CAST(coalesce(sum(CASE WHEN b.g THEN b.dd ELSE 0 END), 0)
-                      AS BIGINT) AS prior1
-          FROM dd LEFT JOIN dg b ON b.day < dd.day
-          GROUP BY dd.day
-        ), w AS (
-          SELECT dd.day, dd.d, dd.d1,
-                 ns.N - pri.prior AS n,
-                 ns.N1 - pri.prior1 AS n1
-          FROM dd JOIN pri USING (day) CROSS JOIN ns
-        ), u AS (
-          SELECT d1,
-                 CAST(round(CAST(d AS DOUBLE)
-                        * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-                        * 1e9) AS BIGINT) AS e1u,
-                 CAST(round(CAST(d AS DOUBLE)
-                        * (CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (1.0 - CAST(n1 AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (CAST(n - d AS DOUBLE)
-                           / CAST(nullif(n - 1, 0) AS DOUBLE))
-                        * 1e9) AS BIGINT) AS vu
-          FROM w
-        )
-        SELECT CAST(sum(d1) AS BIGINT) AS o1,
-               CAST(sum(e1u) AS BIGINT) AS e1_units,
-               CAST(sum(vu) AS BIGINT) AS v_units,
-               (CAST(sum(d1) AS DOUBLE)
-                - CAST(sum(e1u) AS DOUBLE) / 1e9)
-               / sqrt(CAST(sum(vu) AS DOUBLE) / 1e9) AS z
-        FROM u
-    """
-
-    o["ipw_ate"] = """
-        WITH base AS (
-          SELECT event_type,
-                 (user_id % 2 = 0) AS treat,
-                 CAST(round(value * 100) AS BIGINT) AS c
-          FROM events
-          WHERE value IS NOT NULL AND user_id IS NOT NULL
-        ), agg AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(CASE WHEN treat THEN 1 ELSE 0 END)
-                      AS BIGINT) AS n_t,
-                 sum(CASE WHEN treat THEN CAST(c AS HUGEINT)
-                          ELSE 0 END) AS st,
-                 sum(CASE WHEN NOT treat THEN CAST(c AS HUGEINT)
-                          ELSE 0 END) AS sc
-          FROM base GROUP BY 1
-        ), per AS (
-          SELECT n,
-                 CAST(round(
-                   CAST(st AS DOUBLE) * CAST(n AS DOUBLE)
-                     / CAST(nullif(n_t, 0) AS DOUBLE)
-                   - CAST(sc AS DOUBLE) * CAST(n AS DOUBLE)
-                     / CAST(nullif(n - n_t, 0) AS DOUBLE)
-                 ) AS HUGEINT) AS u
-          FROM agg
-        )
-        SELECT CAST(sum(n) AS BIGINT) AS n_total,
-               CAST(sum(u) AS DECIMAL(38,0)) AS ate_num_units,
-               CAST(sum(u) AS DOUBLE) / CAST(sum(n) AS DOUBLE)
-                 AS ate_cents
-        FROM per
-    """
-
-    o["random_walks"] = _dedup.random_walks_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT o_custkey * 2 AS a, l_partkey * 2 + 1 AS b
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """,
-        length=4,
-    )
-
-    def _binseg_level_sql(lvl: int) -> str:
-        """One binseg level over the b bin CTE: cumulative sums,
-        segment totals, the mirrored double gain chain, and the
-        ORDER BY gain DESC, bin argmax (= the engine's struct-min)."""
-        return f"""cum{lvl} AS (
-          SELECT s.event_type, s.lo, s.hi, b1.bin,
-                 CAST(sum(b2.n) AS BIGINT) AS n_left,
-                 CAST(sum(b2.s) AS HUGEINT) AS sl
-          FROM seg{lvl} s
-          JOIN b b1 ON b1.event_type = s.event_type
-                   AND b1.bin BETWEEN s.lo AND s.hi
-          JOIN b b2 ON b2.event_type = s.event_type
-                   AND b2.bin BETWEEN s.lo AND b1.bin
-          GROUP BY 1, 2, 3, 4
-        ), tot{lvl} AS (
-          SELECT s.event_type, s.lo, s.hi,
-                 CAST(sum(b.n) AS BIGINT) AS np,
-                 CAST(sum(b.s) AS HUGEINT) AS sp
-          FROM seg{lvl} s
-          JOIN b ON b.event_type = s.event_type
-                AND b.bin BETWEEN s.lo AND s.hi
-          GROUP BY 1, 2, 3
-        ), gain{lvl} AS (
-          SELECT c.event_type, c.lo, c.hi, c.bin, c.n_left,
-                 CAST(t.np - c.n_left AS BIGINT) AS n_right,
-                 (CAST(c.sl * (t.np - c.n_left)
-                       - (t.sp - c.sl) * c.n_left AS DOUBLE)
-                  * CAST(c.sl * (t.np - c.n_left)
-                         - (t.sp - c.sl) * c.n_left AS DOUBLE))
-                 / ((CAST(c.n_left AS DOUBLE)
-                     * CAST(t.np - c.n_left AS DOUBLE))
-                    * CAST(t.np AS DOUBLE)) AS gain
-          FROM cum{lvl} c
-          JOIN tot{lvl} t USING (event_type, lo, hi)
-          WHERE t.np - c.n_left > 0
-        ), best{lvl} AS (
-          SELECT event_type, lo, hi, bin AS split_bin,
-                 n_left, n_right, gain
-          FROM (
-            SELECT *, row_number() OVER (
-                     PARTITION BY event_type, lo, hi
-                     ORDER BY gain DESC, bin ASC
-                   ) AS rn
-            FROM gain{lvl}
-          ) WHERE rn = 1
-        )"""
-
-    o["binseg_changepoints"] = f"""
-        WITH rng AS (
-          SELECT min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
-          FROM events WHERE value IS NOT NULL
-        ), b AS MATERIALIZED (
-          SELECT event_type,
-                 CAST(((epoch_us(ts) - t0) * 1024)
-                      // (t1 - t0 + 1) AS BIGINT) AS bin,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT)
-                          AS HUGEINT)) AS s
-          FROM events, rng WHERE value IS NOT NULL
-          GROUP BY 1, 2
-        ), seg1 AS (
-          SELECT event_type, CAST(0 AS BIGINT) AS lo,
-                 CAST(1023 AS BIGINT) AS hi
-          FROM (SELECT DISTINCT event_type FROM b)
-        ), {_binseg_level_sql(1)}, seg2 AS (
-          SELECT event_type, lo AS lo, split_bin AS hi FROM best1
-          UNION ALL
-          SELECT event_type, split_bin + 1 AS lo, hi FROM best1
-        ), {_binseg_level_sql(2)}
-        SELECT event_type, CAST(1 AS INT) AS level,
-               lo AS lo_bin, hi AS hi_bin, split_bin,
-               n_left, n_right, gain
-        FROM best1
-        UNION ALL
-        SELECT event_type, CAST(2 AS INT) AS level,
-               lo AS lo_bin, hi AS hi_bin, split_bin,
-               n_left, n_right, gain
-        FROM best2"""
-
-    o["skipgram_cooc"] = _dedup.skipgram_cooc_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT o_custkey * 2 AS a, l_partkey * 2 + 1 AS b
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """,
-        length=4,
-        window=2,
-    )
-
-    o["streaming_topk"] = f"""
-        WITH e AS (
-          SELECT event_type, event_id, epoch_us(ts) AS us
-          FROM events
-          WHERE event_id IS NOT NULL AND ts IS NOT NULL
-            AND event_type IS NOT NULL
-        ), bounds AS (
-          SELECT min(us) AS lo, (max(us) - min(us)) // 3 AS span FROM e
-        ), tagged AS (
-          SELECT e.event_type, e.event_id,
-                 {_sampling.salted_hash_sql("e.event_id", "tk")}
-                   AS priority,
-                 CASE WHEN us < lo + span THEN 0
-                      WHEN us < lo + 2 * span THEN 1
-                      ELSE 2 END AS gb
-          FROM e CROSS JOIN bounds
-        ), present AS (
-          SELECT event_type, gb,
-                 CAST(row_number() OVER (
-                   PARTITION BY event_type ORDER BY gb
-                 ) - 1 AS BIGINT) AS batch_idx
-          FROM (SELECT DISTINCT event_type, gb FROM tagged)
-        ), ranked AS (
-          SELECT p.event_type, p.batch_idx, t.event_id, t.priority,
-                 CAST(row_number() OVER (
-                   PARTITION BY p.event_type, p.batch_idx
-                   ORDER BY t.priority, t.event_id
-                 ) AS BIGINT) AS rank
-          FROM present p
-          JOIN tagged t ON t.event_type = p.event_type
-                       AND t.gb <= p.gb
-        )
-        SELECT event_type, batch_idx, rank, event_id, priority
-        FROM ranked WHERE rank <= 8
-    """
-
-    o["conformal_threshold"] = """
-        WITH d AS MATERIALIZED (
-          SELECT event_type, event_id,
-                 CAST(round(value * 100) AS BIGINT) AS c,
-                 event_id % 2 = 0 AS tr
-          FROM events WHERE value IS NOT NULL
-        ), trn AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n_train,
-                 CAST(sum(CAST(c AS HUGEINT)) AS BIGINT) AS s_tr
-          FROM d WHERE tr GROUP BY 1
-        ), cal AS (
-          SELECT d.event_type, trn.n_train, d.event_id,
-                 abs(d.c * trn.n_train - trn.s_tr) AS a
-          FROM d JOIN trn USING (event_type) WHERE NOT d.tr
-        ), ranked AS (
-          SELECT event_type, n_train, a,
-                 row_number() OVER (
-                   PARTITION BY event_type ORDER BY a, event_id
-                 ) AS i,
-                 CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
-                   AS n_cal
-          FROM cal
-        )
-        SELECT event_type, n_train, n_cal,
-               CAST(i AS BIGINT) AS k_idx,
-               CAST(a AS BIGINT) AS q_units
-        FROM ranked
-        WHERE i = (9 * (n_cal + 1) + 9) // 10
-    """
-
-    o["psi_drift"] = """
-        WITH d AS MATERIALIZED (
-          SELECT event_type, epoch_us(ts) AS us,
-                 CAST(round(value * 100) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-        ), rng AS (
-          SELECT event_type, min(us) AS lo, max(us) AS hi,
-                 min(c) AS cmin, max(c) AS cmax
-          FROM d GROUP BY 1
-        ), counts AS (
-          SELECT d.event_type,
-                 ((d.c - rng.cmin) * 10) // (rng.cmax - rng.cmin + 1)
-                   AS bin,
-                 CAST(sum(CASE WHEN (d.us - rng.lo) * 2
-                                    < rng.hi - rng.lo + 1
-                               THEN 1 ELSE 0 END) AS BIGINT) AS p_cnt,
-                 CAST(sum(CASE WHEN (d.us - rng.lo) * 2
-                                    < rng.hi - rng.lo + 1
-                               THEN 0 ELSE 1 END) AS BIGINT) AS q_cnt
-          FROM d JOIN rng USING (event_type)
-          GROUP BY 1, 2
-        ), tots AS (
-          SELECT event_type,
-                 CAST(sum(p_cnt) AS BIGINT) AS np,
-                 CAST(sum(q_cnt) AS BIGINT) AS nq
-          FROM counts GROUP BY 1
-        )
-        SELECT counts.event_type, CAST(counts.bin AS BIGINT) AS bin,
-               counts.p_cnt, counts.q_cnt,
-               (CAST(counts.p_cnt + 1 AS DOUBLE)
-                  / CAST(tots.np + 10 AS DOUBLE)
-                - CAST(counts.q_cnt + 1 AS DOUBLE)
-                  / CAST(tots.nq + 10 AS DOUBLE))
-               * ln(CAST((counts.p_cnt + 1) * (tots.nq + 10) AS DOUBLE)
-                    / CAST((counts.q_cnt + 1) * (tots.np + 10) AS DOUBLE))
-                 AS psi_term
-        FROM counts JOIN tots USING (event_type)
-    """
-
-    o["ess_weights"] = """
-        SELECT source,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(CAST(n_chars AS HUGEINT)) AS BIGINT) AS sum_w,
-               CAST(sum(CAST(n_chars * n_chars AS HUGEINT)) AS BIGINT)
-                 AS sum_w2,
-               (CAST(sum(CAST(n_chars AS HUGEINT)) AS DOUBLE)
-                * CAST(sum(CAST(n_chars AS HUGEINT)) AS DOUBLE))
-                 / CAST(sum(CAST(n_chars * n_chars AS HUGEINT)) AS DOUBLE)
-                 AS ess,
-               ((CAST(sum(CAST(n_chars AS HUGEINT)) AS DOUBLE)
-                 * CAST(sum(CAST(n_chars AS HUGEINT)) AS DOUBLE))
-                  / CAST(sum(CAST(n_chars * n_chars AS HUGEINT)) AS DOUBLE))
-                 / CAST(count(*) AS DOUBLE) AS ess_ratio
-        FROM documents
-        WHERE n_chars IS NOT NULL AND source IS NOT NULL
-        GROUP BY source
-    """
-
-    o["hodges_lehmann_binned"] = """
-        WITH d AS MATERIALIZED (
-          SELECT event_type, CAST(round(value * 100) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL
-        ), rng AS (
-          SELECT event_type, min(c) AS cmin, max(c) AS cmax,
-                 CAST(count(*) AS BIGINT) AS n
-          FROM d GROUP BY 1
-        ), hist AS MATERIALIZED (
-          SELECT d.event_type, rng.n,
-                 ((d.c - rng.cmin) * 512) // (rng.cmax - rng.cmin + 1)
-                   AS b,
-                 CAST(count(*) AS BIGINT) AS nb
-          FROM d JOIN rng USING (event_type)
-          GROUP BY 1, 2, 3
-        ), combos AS (
-          SELECT h1.event_type, h1.n, h1.b + h2.b AS binsum,
-                 CAST(sum(CASE WHEN h1.b = h2.b
-                               THEN (h1.nb * (h1.nb + 1)) // 2
-                               ELSE h1.nb * h2.nb END) AS BIGINT) AS wb
-          FROM hist h1
-          JOIN hist h2 ON h1.event_type = h2.event_type
-                      AND h1.b <= h2.b
-          GROUP BY 1, 2, 3
-        ), ranked AS (
-          SELECT event_type, n, binsum, wb,
-                 CAST(sum(wb) OVER (
-                   PARTITION BY event_type ORDER BY binsum
-                   ROWS UNBOUNDED PRECEDING
-                 ) AS BIGINT) AS cum,
-                 CAST(sum(wb) OVER (PARTITION BY event_type) AS BIGINT)
-                   AS P
-          FROM combos
-        )
-        SELECT event_type, n, P AS p_pairs,
-               CAST(min(binsum) AS BIGINT) AS hl_binsum
-        FROM ranked
-        WHERE cum >= (P + 1) // 2
-        GROUP BY event_type, n, P
-    """
-
-    o["sppmi_embed"] = _dedup.sppmi_embed_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT o_custkey * 2 AS a, l_partkey * 2 + 1 AS b
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """,
-        length=4,
-        window=2,
-        rounds=6,
-    )
-
-    o["als_user_step"] = """
-        WITH r AS MATERIALIZED (
-          SELECT o_custkey AS u, l_partkey AS i,
-                 CAST(round(sum(l_quantity)) AS BIGINT) AS r
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          GROUP BY 1, 2
-        ), f AS (
-          SELECT u, r,
-                 CAST((i * 73) % 97 - 48 AS BIGINT) AS q1,
-                 CAST((i * 151) % 101 - 50 AS BIGINT) AS q2
-          FROM r
-        ), mom AS (
-          SELECT u, CAST(count(*) AS BIGINT) AS n_items,
-                 sum(CAST(q1 AS HUGEINT) * q1) AS a11,
-                 sum(CAST(q1 AS HUGEINT) * q2) AS a12,
-                 sum(CAST(q2 AS HUGEINT) * q2) AS a22,
-                 sum(CAST(q1 AS HUGEINT) * r) AS b1,
-                 sum(CAST(q2 AS HUGEINT) * r) AS b2
-          FROM f GROUP BY u
-        )
-        SELECT u, n_items,
-               CAST((a22 + 1000) * b1 - a12 * b2 AS DOUBLE)
-                 / CAST((a11 + 1000) * (a22 + 1000) - a12 * a12
-                        AS DOUBLE) AS x1,
-               CAST((a11 + 1000) * b2 - a12 * b1 AS DOUBLE)
-                 / CAST((a11 + 1000) * (a22 + 1000) - a12 * a12
-                        AS DOUBLE) AS x2
-        FROM mom
-    """
-
-    o["graph_assortativity"] = """
-        WITH und AS (
-          SELECT DISTINCT o_custkey * 2 AS a, l_partkey * 2 + 1 AS b
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ), edges AS MATERIALIZED (
-          SELECT a, b FROM und
-          UNION ALL SELECT b AS a, a AS b FROM und
-        ), deg AS MATERIALIZED (
-          SELECT a, CAST(count(*) AS BIGINT) AS d
-          FROM edges GROUP BY 1
-        ), j AS (
-          SELECT dx.d AS dxv, dy.d AS dyv
-          FROM edges
-          JOIN deg dx ON dx.a = edges.a
-          JOIN deg dy ON dy.a = edges.b
-        ), mom AS (
-          SELECT CAST(count(*) AS BIGINT) AS m_edges,
-                 sum(CAST(dxv AS HUGEINT)) AS sx,
-                 sum(CAST(dyv AS HUGEINT)) AS sy,
-                 sum(CAST(dxv AS HUGEINT) * dyv) AS sxy,
-                 sum(CAST(dxv AS HUGEINT) * dxv) AS sxx,
-                 sum(CAST(dyv AS HUGEINT) * dyv) AS syy
-          FROM j
-        )
-        SELECT m_edges,
-               CAST(CAST(m_edges AS HUGEINT) * sxy - sx * sy AS DOUBLE)
-               / sqrt(CAST(CAST(m_edges AS HUGEINT) * sxx - sx * sx
-                           AS DOUBLE)
-                      * CAST(CAST(m_edges AS HUGEINT) * syy - sy * sy
-                             AS DOUBLE)) AS assortativity
-        FROM mom
-    """
-
-    _mmr_rounds = []
-    for _r in range(2, 5):
-        _prev = " UNION ALL ".join(
-            f"SELECT vec_id FROM s{_j}" for _j in range(1, _r)
-        )
-        _mmr_rounds.append(f""", p{_r} AS ({_prev}
-        ), m{_r} AS (
-          SELECT p.da AS vec_id, max(p.s) AS ms
-          FROM psim p WHERE p.db IN (SELECT vec_id FROM p{_r})
-          GROUP BY 1
-        ), s{_r} AS (
-          SELECT {_r} AS sel_rank, c2.vec_id,
-                 CAST(0.7 AS DOUBLE) * c2.rel
-                 - CAST(0.3 AS DOUBLE) * m.ms AS mmr_score
-          FROM cand c2 JOIN m{_r} m ON m.vec_id = c2.vec_id
-          WHERE c2.vec_id NOT IN (SELECT vec_id FROM p{_r})
-          ORDER BY CAST(0.7 AS DOUBLE) * c2.rel
-                   - CAST(0.3 AS DOUBLE) * m.ms DESC, c2.vec_id
-          LIMIT 1
-        )""")
-    o["mmr_diversify"] = (
-        """
-        WITH q AS (
-          SELECT CAST(embedding AS DOUBLE[]) AS qv
-          FROM embeddings WHERE vec_id = 0
-        ), c AS (
-          SELECT vec_id, CAST(embedding AS DOUBLE[]) AS cv
-          FROM embeddings WHERE vec_id >= 3
-        ), cand AS MATERIALIZED (
-          -- r14 (ADVICE): the cut ranks on the ROUNDED cosine with
-          -- vec_id tie-break, mirroring the engine exactly
-          SELECT vec_id, rel FROM (
-            SELECT vec_id,
-                   round(list_cosine_similarity(cv, qv), 9) AS rel,
-                   row_number() OVER (
-                     ORDER BY round(list_cosine_similarity(cv, qv), 9)
-                              DESC, vec_id
-                   ) AS rk
-            FROM c CROSS JOIN q
-          ) WHERE rk <= 12
-        ), psim AS MATERIALIZED (
-          SELECT a.vec_id AS da, b.vec_id AS db,
-                 round(list_cosine_similarity(ca.cv, cb.cv), 9) AS s
-          FROM cand a
-          JOIN c ca ON ca.vec_id = a.vec_id
-          JOIN cand b ON b.vec_id != a.vec_id
-          JOIN c cb ON cb.vec_id = b.vec_id
-        ), s1 AS (
-          SELECT 1 AS sel_rank, vec_id,
-                 CAST(0.7 AS DOUBLE) * rel
-                 - CAST(0.3 AS DOUBLE) * CAST(0.0 AS DOUBLE)
-                   AS mmr_score
-          FROM cand
-          ORDER BY CAST(0.7 AS DOUBLE) * rel
-                   - CAST(0.3 AS DOUBLE) * CAST(0.0 AS DOUBLE) DESC,
-                   vec_id
-          LIMIT 1
-        )"""
-        + "".join(_mmr_rounds)
-        + """
-        SELECT CAST(sel_rank AS INT) AS sel_rank, vec_id, mmr_score
-        FROM (
-          SELECT * FROM s1
-          UNION ALL SELECT * FROM s2
-          UNION ALL SELECT * FROM s3
-          UNION ALL SELECT * FROM s4
-        )
-    """
-    )
-
-    o["streaming_page_hinkley"] = """
-        WITH base AS (
-          SELECT event_type, event_id, ts,
-                 CAST(round(value * 100) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL AND ts IS NOT NULL
-        ), d AS (
-          SELECT event_type, event_id, ts, c,
-                 row_number() OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id
-                 ) AS i,
-                 sum(CAST(c AS HUGEINT)) OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id
-                   ROWS UNBOUNDED PRECEDING
-                 ) AS s
-          FROM base
-        ), u AS (
-          SELECT event_type, event_id, ts,
-                 CAST(round(1e9 * (CAST(CAST(i AS HUGEINT) * c - s
-                                        AS DOUBLE)
-                                   / CAST(i AS DOUBLE)))
-                      AS BIGINT) - 5000000000 AS u
-          FROM d
-        ), m AS (
-          SELECT event_type, event_id,
-                 mm - min(mm) OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id
-                   ROWS UNBOUNDED PRECEDING
-                 ) AS exc
-          FROM (
-            SELECT event_type, event_id, ts,
-                   sum(CAST(u AS HUGEINT)) OVER (
-                     PARTITION BY event_type ORDER BY ts, event_id
-                     ROWS UNBOUNDED PRECEDING
-                   ) AS mm
-            FROM u
-          )
-        )
-        SELECT event_type, event_id,
-               CAST(exc AS BIGINT) AS exc_units,
-               exc > 1000000000000000 AS alarm
-        FROM m
-    """
-
-    o["snippet_extract"] = (
-        """
-        WITH bm AS MATERIALIZED (
-        """
-        + llm_text.bm25_topk_oracle_sql(queries=_BM25_QUERIES, k=3)
-        + f"""
-        ), toks AS (
-          SELECT doc_id, CAST(u.i AS BIGINT) - 1 AS p,
-                 list_extract(wl, u.i) AS word
-          FROM (
-            SELECT doc_id,
-                   {dedup.tokenize_sql()} AS wl
-            FROM documents
-            WHERE text IS NOT NULL
-              AND doc_id IN (SELECT doc_id FROM bm)
-          ), unnest(range(1, len(wl) + 1)) AS u(i)
-        ), qt (query_id, word) AS (VALUES """
-        + ", ".join(
-            f"({int(qid)}, '{w}')"
-            for qid, text in _BM25_QUERIES.items()
-            for w in dict.fromkeys(text.lower().split())
-        )
-        + """
-        ), qp AS MATERIALIZED (
-          SELECT bm.query_id, toks.doc_id, bm.rank, toks.p
-          FROM toks
-          JOIN qt USING (word)
-          JOIN bm ON bm.query_id = qt.query_id
-                 AND bm.doc_id = toks.doc_id
-        ), win AS (
-          SELECT a.query_id, a.doc_id, a.rank, a.p,
-                 CAST(count(*) AS BIGINT) AS k
-          FROM qp a JOIN qp b ON b.query_id = a.query_id
-                             AND b.doc_id = a.doc_id
-                             AND b.p BETWEEN a.p AND a.p + 9
-          GROUP BY 1, 2, 3, 4
-        )
-        SELECT query_id, doc_id, rank, p AS best_start,
-               k AS n_in_window
-        FROM (
-          SELECT *, row_number() OVER (
-                   PARTITION BY query_id, doc_id
-                   ORDER BY k DESC, p ASC
-                 ) AS rn
-          FROM win
-        ) WHERE rn = 1
-    """
-    )
-
-    o["dedup_eval"] = (
-        _dedup._vpairs_ctes(k=5, num_hashes=64, bands=8, threshold=0.8)
-        + f""", fpt AS MATERIALIZED (
-          SELECT doc_id,
-                 md5({dedup.normalize_text_sql()})
-                   AS fp
-          FROM documents WHERE text IS NOT NULL
-        ), tp AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_cand,
-                 CAST(sum(CASE WHEN fa.fp = fb.fp THEN 1 ELSE 0 END)
-                      AS BIGINT) AS tp_exact
-          FROM cand
-          JOIN fpt fa ON fa.doc_id = cand.a
-          JOIN fpt fb ON fb.doc_id = cand.b
-        ), nver AS (
-          SELECT CAST(count(*) AS BIGINT) AS n_verified FROM vp
-        ), truth AS (
-          SELECT CAST(COALESCE(sum((m * (m - 1)) // 2), 0) AS BIGINT)
-                   AS n_true_pairs
-          FROM (SELECT count(*) AS m FROM fpt GROUP BY fp)
-        )
-        SELECT n_cand, n_verified, n_true_pairs, tp_exact,
-               CAST(round(1e9 * (CAST(n_verified AS DOUBLE)
-                                 / CAST(n_cand AS DOUBLE)))
-                    AS BIGINT) AS band_precision_units,
-               CASE WHEN n_true_pairs > 0 THEN
-                 CAST(round(1e9 * (CAST(tp_exact AS DOUBLE)
-                                   / CAST(n_true_pairs AS DOUBLE)))
-                      AS BIGINT)
-               END AS exact_recall_units
-        FROM tp, nver, truth
-    """
-    )
-
-    o["ranking_inversions"] = (
-        """
-        WITH r AS MATERIALIZED (
-        """
-        + llm_text.rrf_fusion_oracle_sql(queries=_BM25_QUERIES, k=10)
-        + """
-        ), bb AS MATERIALIZED (
-          SELECT query_id, doc_id AS d, rank_bm25 AS r1,
-                 rank_tfidf AS r2
-          FROM r
-          WHERE rank_bm25 IS NOT NULL AND rank_tfidf IS NOT NULL
-        ), inv AS (
-          SELECT a.query_id,
-                 CAST(count(*) AS BIGINT) AS n_pairs,
-                 CAST(sum(CASE WHEN (a.r1 < b.r1) != (a.r2 < b.r2)
-                          THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_inversions
-          FROM bb a JOIN bb b ON b.query_id = a.query_id
-                                 AND b.d > a.d
-          GROUP BY 1
-        ), cnt AS (
-          SELECT query_id, CAST(count(*) AS BIGINT) AS n_common
-          FROM bb GROUP BY 1
-        )
-        SELECT cnt.query_id, cnt.n_common, inv.n_pairs,
-               inv.n_inversions,
-               1.0 - 2.0 * (CAST(inv.n_inversions AS DOUBLE)
-                            / CAST(inv.n_pairs AS DOUBLE)) AS agreement
-        FROM cnt JOIN inv USING (query_id)
-    """
-    )
-
-    o["term_drift"] = f"""
-        WITH mid AS (
-          SELECT min(doc_id) AS lo, max(doc_id) AS hi
-          FROM documents WHERE text IS NOT NULL
-        ), toks AS (
-          SELECT (doc_id - lo) < (hi - doc_id) AS first_half, word
-          FROM ({llm_text._token_rows_sql(word="word")}), mid
-        ), t AS MATERIALIZED (
-          SELECT word,
-                 CAST(sum(CASE WHEN first_half THEN 1 ELSE 0 END)
-                      AS BIGINT) AS k_first,
-                 CAST(sum(CASE WHEN first_half THEN 0 ELSE 1 END)
-                      AS BIGINT) AS k_second
-          FROM toks GROUP BY 1
-        ), tot AS (
-          SELECT CAST(sum(k_first) AS BIGINT) AS n1,
-                 CAST(sum(k_second) AS BIGINT) AS n2
-          FROM t
-        ), scored AS (
-          SELECT word, k_first, k_second,
-                 abs(CAST(round(1e9 * (CAST(k_first AS DOUBLE)
-                                       / CAST(n1 AS DOUBLE)))
-                          AS BIGINT)
-                     - CAST(round(1e9 * (CAST(k_second AS DOUBLE)
-                                         / CAST(n2 AS DOUBLE)))
-                            AS BIGINT)) AS drift_units
-          FROM t, tot
-        )
-        SELECT word, k_first, k_second,
-               CAST(drift_units AS BIGINT) AS drift_units,
-               CAST(row_number() OVER (
-                 ORDER BY drift_units DESC, word ASC
-               ) AS INT) AS rank
-        FROM scored
-        ORDER BY drift_units DESC, word ASC
-        LIMIT 20
-    """
-
-    o["forecast_mae"] = """
-        WITH daily AS (
-          SELECT event_type,
-                 CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS d,
-                 CAST(round(1e9 * (
-                   CAST(sum(CAST(CAST(round(value * 100) AS BIGINT)
-                                 AS HUGEINT)) AS DOUBLE)
-                   / CAST(count(*) AS DOUBLE))) AS BIGINT) AS mu
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1, 2
-        ), lagged AS (
-          SELECT event_type, d, mu,
-                 lag(mu, 1) OVER (
-                   PARTITION BY event_type ORDER BY d) AS p1,
-                 lag(mu, 7) OVER (
-                   PARTITION BY event_type ORDER BY d) AS p7,
-                 lag(d, 1) OVER (
-                   PARTITION BY event_type ORDER BY d) AS d1,
-                 lag(d, 7) OVER (
-                   PARTITION BY event_type ORDER BY d) AS d7
-          FROM daily
-        )
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_days,
-               CAST(sum(abs(mu - p1)) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) AS mae_naive_units,
-               CAST(sum(abs(mu - p7)) AS DOUBLE)
-                 / CAST(count(*) AS DOUBLE) AS mae_seasonal_units
-        FROM lagged
-        WHERE p1 IS NOT NULL AND p7 IS NOT NULL
-          AND d - d1 = 1 AND d - d7 = 7
-        GROUP BY 1
-    """
-
-    import math as _math
-
-    _boot_cuts = []
-    _acc = 0.0
-    for _k in range(9):
-        _acc += _math.exp(-1.0) / _math.factorial(_k)
-        _boot_cuts.append(int(_math.floor(_acc * 4294967296.0)))
-    _boot_h = _sampling.salted_hash_sql(
-        "CAST(event_id AS VARCHAR) || ':' || CAST(r AS VARCHAR)", "boot"
-    )
-    _boot_case = " ".join(
-        f"WHEN ({_boot_h}) < {c} THEN {k}"
-        for k, c in enumerate(_boot_cuts)
-    )
-    o["bootstrap_ci"] = f"""
-        WITH d AS (
-          SELECT event_type, event_id,
-                 CAST(round(value * 100) AS BIGINT) AS c,
-                 CAST(u.r AS BIGINT) AS r
-          FROM events, unnest(range(0, 32)) AS u(r)
-          WHERE value IS NOT NULL
-        ), wt AS (
-          SELECT event_type, r,
-                 CAST(CASE {_boot_case} ELSE 9 END AS BIGINT) AS w,
-                 c
-          FROM d
-        ), m AS (
-          SELECT event_type, r,
-                 CAST(round(1e9 * (CAST(sum(w * c) AS DOUBLE)
-                                   / CAST(sum(w) AS DOUBLE)))
-                      AS BIGINT) AS mu
-          FROM wt GROUP BY 1, 2
-          HAVING sum(w) > 0
-        ), ranked AS (
-          SELECT event_type, mu,
-                 row_number() OVER (
-                   PARTITION BY event_type ORDER BY mu, r
-                 ) AS rk
-          FROM m
-        )
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_reps,
-               max(CASE WHEN rk = 2 THEN mu END) AS mean_lo_units,
-               max(CASE WHEN rk = 31 THEN mu END) AS mean_hi_units
-        FROM ranked GROUP BY 1
-    """
-
-    o["pinball_quantile"] = """
-        WITH b AS MATERIALIZED (
-          SELECT event_type,
-                 CAST(floor(CAST(CAST(round(value * 100) AS BIGINT)
-                                 * 1024 AS DOUBLE) / 49003.0)
-                      AS BIGINT) AS bin,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT)
-                          AS HUGEINT)) AS s
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1, 2
-        ), tot AS (
-          SELECT event_type, CAST(sum(n) AS BIGINT) AS nt,
-                 CAST(sum(s) AS HUGEINT) AS st
-          FROM b GROUP BY 1
-        ), cum AS (
-          SELECT b1.event_type, b1.bin,
-                 CAST(COALESCE(sum(b2.n), 0) AS BIGINT) AS n_below,
-                 CAST(COALESCE(sum(b2.s), 0) AS HUGEINT) AS sb
-          FROM b b1
-          LEFT JOIN b b2 ON b2.event_type = b1.event_type
-                        AND b2.bin < b1.bin
-          GROUP BY 1, 2
-        ), loss AS (
-          SELECT cum.event_type, cum.bin, cum.n_below,
-                 CAST(((cum.bin * 49003 + 1023) // 1024)
-                      AS HUGEINT) * cum.n_below - cum.sb
-                 + 9 * ((tot.st - cum.sb)
-                        - CAST(((cum.bin * 49003 + 1023) // 1024)
-                               AS HUGEINT)
-                          * (tot.nt - cum.n_below)) AS lu
-          FROM cum JOIN tot USING (event_type)
-        )
-        SELECT event_type, bin AS q_bin, n_below,
-               CAST(lu AS DECIMAL(38,0)) AS loss_units
-        FROM (
-          SELECT *, row_number() OVER (
-                   PARTITION BY event_type ORDER BY lu ASC, bin ASC
-                 ) AS rn
-          FROM loss
-        ) WHERE rn = 1
-    """
-
-    o["mad_by_type"] = """
-        WITH d AS MATERIALIZED (
-          SELECT event_type, event_id,
-                 CAST(round(value * 100) AS BIGINT) AS c,
-                 row_number() OVER (
-                   PARTITION BY event_type
-                   ORDER BY CAST(round(value * 100) AS BIGINT),
-                            event_id
-                 ) AS i
-          FROM events WHERE value IS NOT NULL
-        ), tot AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n
-          FROM d GROUP BY 1
-        ), med AS (
-          SELECT d.event_type, tot.n, d.c AS median_cents
-          FROM d JOIN tot USING (event_type)
-          WHERE d.i = (tot.n + 1) // 2
-        ), dev AS (
-          SELECT d.event_type, med.n, med.median_cents,
-                 abs(d.c - med.median_cents) AS a,
-                 row_number() OVER (
-                   PARTITION BY d.event_type
-                   ORDER BY abs(d.c - med.median_cents), d.event_id
-                 ) AS j
-          FROM d JOIN med USING (event_type)
-        )
-        SELECT event_type, n, median_cents,
-               CAST(a AS BIGINT) AS mad_cents
-        FROM dev WHERE j = (n + 1) // 2
-    """
-
-    o["kendall_tau_binned"] = """
-        WITH rng AS (
-          SELECT min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
-          FROM events WHERE value IS NOT NULL
-        ), b AS MATERIALIZED (
-          SELECT event_type,
-                 CAST(((epoch_us(ts) - t0) * 1024)
-                      // (t1 - t0 + 1) AS BIGINT) AS bin,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT)
-                          AS HUGEINT)) AS s
-          FROM events, rng WHERE value IS NOT NULL
-          GROUP BY 1, 2
-        ), g AS (
-          SELECT b1.event_type,
-                 CAST(sum(CASE WHEN b2.s * b1.n > b1.s * b2.n
-                          THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-                 CAST(sum(CASE WHEN b2.s * b1.n < b1.s * b2.n
-                          THEN 1 ELSE 0 END) AS BIGINT) AS nd,
-                 CAST(sum(CASE WHEN b2.s * b1.n = b1.s * b2.n
-                          THEN 1 ELSE 0 END) AS BIGINT) AS n_tied
-          FROM b b1 JOIN b b2 ON b2.event_type = b1.event_type
-                             AND b2.bin > b1.bin
-          GROUP BY 1
-        ), nb AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n_bins
-          FROM b GROUP BY 1
-        )
-        SELECT nb.event_type, nb.n_bins, g.nc, g.nd, g.n_tied,
-               CAST(g.nc - g.nd AS DOUBLE)
-               / sqrt(CAST(CAST(g.nc + g.nd + g.n_tied - g.n_tied
-                                AS HUGEINT)
-                           * (g.nc + g.nd + g.n_tied) AS DOUBLE))
-                 AS tau_b
-        FROM nb JOIN g USING (event_type)
-    """
-
-    o["brier_score"] = """
-        WITH g AS (
-          SELECT CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(CASE WHEN event_type = 'purchase'
-                          THEN 1 ELSE 0 END) AS BIGINT) AS p
-          FROM events GROUP BY 1
-        ), u AS (
-          SELECT n,
-                 p * 1000000000
-                 - CAST(round(1e9 * (CAST(p * p AS DOUBLE)
-                                     / CAST(n AS DOUBLE)))
-                        AS BIGINT) AS bu
-          FROM g
-        )
-        SELECT CAST(sum(n) AS BIGINT) AS n_total,
-               CAST(sum(bu) AS BIGINT) AS brier_units,
-               CAST(sum(bu) AS DOUBLE)
-                 / (CAST(sum(n) AS DOUBLE) * 1e9) AS brier
-        FROM u
-    """
-
-    o["gini_by_type"] = """
-        WITH d AS (
-          SELECT event_type,
-                 CAST(round(value * 100) AS BIGINT) AS c,
-                 row_number() OVER (
-                   PARTITION BY event_type
-                   ORDER BY CAST(round(value * 100) AS BIGINT),
-                            event_id
-                 ) AS i
-          FROM events WHERE value IS NOT NULL
-        ), g AS (
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(c AS HUGEINT)) AS sx,
-                 sum(CAST(i AS HUGEINT) * c) AS six
-          FROM d GROUP BY 1
-        )
-        SELECT event_type, n,
-               CAST(2 * six - (n + 1) * sx AS DOUBLE)
-               / CAST(CAST(n AS HUGEINT) * sx AS DOUBLE) AS gini
-        FROM g
-    """
-
-    o["trimmed_mean"] = """
-        WITH d AS (
-          SELECT event_type, event_id,
-                 CAST(round(value * 100) AS BIGINT) AS c,
-                 row_number() OVER (
-                   PARTITION BY event_type
-                   ORDER BY CAST(round(value * 100) AS BIGINT),
-                            event_id
-                 ) AS i
-          FROM events WHERE value IS NOT NULL
-        ), tot AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n
-          FROM d GROUP BY 1
-        ), kept AS (
-          SELECT d.event_type, tot.n,
-                 CAST(count(*) AS BIGINT) AS n_kept,
-                 sum(CAST(d.c AS HUGEINT)) AS sk
-          FROM d JOIN tot USING (event_type)
-          WHERE d.i > tot.n // 20 AND d.i <= tot.n - tot.n // 20
-          GROUP BY 1, 2
-        )
-        SELECT event_type, n, n_kept,
-               CAST(sk AS DOUBLE) / CAST(n_kept AS DOUBLE)
-                 AS trimmed_mean_cents
-        FROM kept
-    """
-
-    o["theil_sen"] = """
-        WITH rng AS (
-          SELECT min(epoch_us(ts)) AS t0, max(epoch_us(ts)) AS t1
-          FROM events WHERE value IS NOT NULL
-        ), b AS MATERIALIZED (
-          SELECT event_type,
-                 CAST(((epoch_us(ts) - t0) * 1024)
-                      // (t1 - t0 + 1) AS BIGINT) AS bin,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT)
-                          AS HUGEINT)) AS s
-          FROM events, rng WHERE value IS NOT NULL
-          GROUP BY 1, 2
-        ), pairs AS (
-          SELECT b1.event_type, b1.bin AS i, b2.bin AS j,
-                 CAST(b2.s * b1.n - b1.s * b2.n AS DOUBLE)
-                 / CAST(CAST(b2.bin - b1.bin AS HUGEINT)
-                        * b1.n * b2.n AS DOUBLE) AS slope
-          FROM b b1 JOIN b b2 ON b2.event_type = b1.event_type
-                             AND b2.bin > b1.bin
-        ), ranked AS MATERIALIZED (
-          SELECT event_type, slope,
-                 row_number() OVER (
-                   PARTITION BY event_type
-                   ORDER BY slope ASC, i ASC, j ASC
-                 ) AS rk
-          FROM pairs
-        ), cnt AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs
-          FROM ranked GROUP BY 1
-        ), nb AS (
-          SELECT event_type, CAST(count(*) AS BIGINT) AS n_bins
-          FROM b GROUP BY 1
-        )
-        SELECT nb.event_type, nb.n_bins, cnt.n_pairs, r.slope
-        FROM nb
-        JOIN cnt USING (event_type)
-        JOIN ranked r ON r.event_type = nb.event_type
-                     AND r.rk = (cnt.n_pairs + 1) // 2
-    """
-
-    o["friedman_test"] = """
-        WITH cells AS MATERIALIZED (
-          SELECT CAST(dayofweek(ts) + 1 AS BIGINT) AS dow, event_type,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(CAST(round(value * 100) AS BIGINT)
-                          AS HUGEINT)) AS s
-          FROM events WHERE value IS NOT NULL
-          GROUP BY 1, 2
-        ), k AS (
-          SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k
-          FROM cells
-        ), blocks AS MATERIALIZED (
-          SELECT dow FROM cells, k GROUP BY dow, k.k
-          HAVING count(*) = any_value(k.k)
-        ), ranked AS (
-          SELECT c1.dow, c1.event_type,
-                 CAST(2 * sum(CASE WHEN c2.s * c1.n < c1.s * c2.n
-                              THEN 1 ELSE 0 END)
-                      + sum(CASE WHEN c2.s * c1.n = c1.s * c2.n
-                            THEN 1 ELSE 0 END) + 1 AS BIGINT) AS r2
-          FROM cells c1
-          JOIN blocks USING (dow)
-          JOIN cells c2 ON c2.dow = c1.dow
-          GROUP BY 1, 2
-        ), rj AS (
-          SELECT event_type, CAST(sum(r2) AS BIGINT) AS rj
-          FROM ranked GROUP BY 1
-        ), tot AS (
-          SELECT CAST(count(*) AS BIGINT) AS k_treat,
-                 sum(CAST(rj AS HUGEINT) * rj) AS sum_r2_sq
-          FROM rj
-        ), b AS (
-          SELECT CAST(count(*) AS BIGINT) AS b_blocks FROM blocks
-        )
-        SELECT k_treat, b_blocks,
-               CAST(sum_r2_sq AS DECIMAL(38,0)) AS sum_r2_sq,
-               CAST(3 * sum_r2_sq AS DOUBLE)
-                 / CAST(b_blocks * k_treat * (k_treat + 1) AS DOUBLE)
-               - CAST(3 * b_blocks * (k_treat + 1) AS DOUBLE)
-                 AS chi2_f
-        FROM tot, b
-    """
-
-    o["page_hinkley"] = """
-        WITH base AS (
-          SELECT event_type, event_id, ts,
-                 CAST(round(value * 100) AS BIGINT) AS c
-          FROM events WHERE value IS NOT NULL
-        ), d AS (
-          SELECT event_type, event_id, ts, c,
-                 row_number() OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id
-                 ) AS i,
-                 sum(CAST(c AS HUGEINT)) OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id
-                   ROWS UNBOUNDED PRECEDING
-                 ) AS s
-          FROM base
-        ), u AS (
-          SELECT event_type, event_id, ts,
-                 CAST(round(1e9 * (CAST(CAST(i AS HUGEINT) * c - s
-                                        AS DOUBLE)
-                                   / CAST(i AS DOUBLE)))
-                      AS BIGINT) - 5000000000 AS u
-          FROM d
-        ), m AS MATERIALIZED (
-          SELECT event_type, event_id, ts,
-                 mm - min(mm) OVER (
-                   PARTITION BY event_type ORDER BY ts, event_id
-                   ROWS UNBOUNDED PRECEDING
-                 ) AS exc
-          FROM (
-            SELECT event_type, event_id, ts,
-                   sum(CAST(u AS HUGEINT)) OVER (
-                     PARTITION BY event_type ORDER BY ts, event_id
-                     ROWS UNBOUNDED PRECEDING
-                   ) AS mm
-            FROM u
-          )
-        ), agg AS (
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n_obs,
-                 CAST(max(exc) AS DECIMAL(38,0)) AS peak_exc_units,
-                 CAST(sum(CASE WHEN exc > 1000000000000000
-                               THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_alarms
-          FROM m GROUP BY 1
-        ), fst AS (
-          SELECT event_type, event_id AS first_alarm_id
-          FROM (
-            SELECT event_type, event_id,
-                   row_number() OVER (
-                     PARTITION BY event_type ORDER BY ts, event_id
-                   ) AS rn
-            FROM m WHERE exc > 1000000000000000
-          ) WHERE rn = 1
-        )
-        SELECT agg.event_type, agg.n_obs, agg.peak_exc_units,
-               agg.n_alarms, fst.first_alarm_id
-        FROM agg LEFT JOIN fst USING (event_type)
-    """
-
-    o["mantel_haenszel"] = """
-        WITH cells AS (
-          SELECT CAST(dayofweek(ts) + 1 AS BIGINT) AS dow,
-                 CASE WHEN CAST(round(value * 100) AS BIGINT) >= 24502
-                      THEN 1 ELSE 0 END AS e,
-                 CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-                   AS o
-          FROM events WHERE value IS NOT NULL
-        ), g AS (
-          SELECT dow,
-                 CAST(sum(e * o) AS BIGINT) AS a,
-                 CAST(sum(e * (1 - o)) AS BIGINT) AS b,
-                 CAST(sum((1 - e) * o) AS BIGINT) AS c,
-                 CAST(sum((1 - e) * (1 - o)) AS BIGINT) AS d
-          FROM cells GROUP BY 1
-        ), per AS (
-          SELECT CAST(a + b + c + d AS BIGINT) AS n,
-                 CAST(round(1e9 * (CAST(a * d AS DOUBLE)
-                                   / CAST(a + b + c + d AS DOUBLE)))
-                      AS BIGINT) AS adu,
-                 CAST(round(1e9 * (CAST(b * c AS DOUBLE)
-                                   / CAST(a + b + c + d AS DOUBLE)))
-                      AS BIGINT) AS bcu
-          FROM g
-        )
-        SELECT CAST(count(*) AS BIGINT) AS k_strata,
-               CAST(sum(n) AS BIGINT) AS n_total,
-               CAST(sum(adu) AS BIGINT) AS ad_units,
-               CAST(sum(bcu) AS BIGINT) AS bc_units,
-               CAST(sum(adu) AS DOUBLE) / CAST(sum(bcu) AS DOUBLE)
-                 AS or_mh
-        FROM per
-    """
-
-    o["seq_rules"] = """
-        WITH pos AS (
-          SELECT user_id, event_type,
-                 row_number() OVER (
-                   PARTITION BY user_id ORDER BY ts, event_id
-                 ) AS p
-          FROM events
-        ), ut AS MATERIALIZED (
-          SELECT user_id, event_type,
-                 min(p) AS first_p, max(p) AS last_p
-          FROM pos GROUP BY 1, 2
-        ), seq AS (
-          SELECT a.event_type AS ante, b.event_type AS cons,
-                 CAST(count(*) AS BIGINT) AS n_seq
-          FROM ut a JOIN ut b ON a.user_id = b.user_id
-          WHERE a.event_type != b.event_type
-            AND a.first_p < b.last_p
-          GROUP BY 1, 2
-        ), supp AS (
-          SELECT event_type AS ante, CAST(count(*) AS BIGINT) AS n_ante
-          FROM ut GROUP BY 1
-        )
-        SELECT ante, cons, n_seq, n_ante,
-               CAST(round(1e9 * (CAST(n_seq AS DOUBLE)
-                                 / CAST(n_ante AS DOUBLE)))
-                    AS BIGINT) AS conf_units
-        FROM seq JOIN supp USING (ante)
-    """
-
-    o["als_item_step"] = """
-        WITH r AS MATERIALIZED (
-          SELECT o_custkey AS u, l_partkey AS i,
-                 CAST(round(sum(l_quantity)) AS BIGINT) AS r
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          GROUP BY 1, 2
-        ), fu AS (
-          SELECT u, r,
-                 CAST((i * 73) % 97 - 48 AS BIGINT) AS q1,
-                 CAST((i * 151) % 101 - 50 AS BIGINT) AS q2
-          FROM r
-        ), umom AS (
-          SELECT u,
-                 sum(CAST(q1 AS HUGEINT) * q1) AS a11,
-                 sum(CAST(q1 AS HUGEINT) * q2) AS a12,
-                 sum(CAST(q2 AS HUGEINT) * q2) AS a22,
-                 sum(CAST(q1 AS HUGEINT) * r) AS b1,
-                 sum(CAST(q2 AS HUGEINT) * r) AS b2
-          FROM fu GROUP BY u
-        ), uf AS MATERIALIZED (
-          SELECT u,
-                 CAST(round(
-                   CAST((a22 + 1000) * b1 - a12 * b2 AS DOUBLE)
-                   / CAST((a11 + 1000) * (a22 + 1000) - a12 * a12
-                          AS DOUBLE) * 1e6) AS BIGINT) AS p1,
-                 CAST(round(
-                   CAST((a11 + 1000) * b2 - a12 * b1 AS DOUBLE)
-                   / CAST((a11 + 1000) * (a22 + 1000) - a12 * a12
-                          AS DOUBLE) * 1e6) AS BIGINT) AS p2
-          FROM umom
-        ), f AS (
-          SELECT r.i, r.r, uf.p1, uf.p2 FROM r JOIN uf USING (u)
-        ), mom AS (
-          SELECT i, CAST(count(*) AS BIGINT) AS n_users,
-                 sum(CAST(p1 AS HUGEINT) * p1) AS a11,
-                 sum(CAST(p1 AS HUGEINT) * p2) AS a12,
-                 sum(CAST(p2 AS HUGEINT) * p2) AS a22,
-                 sum(CAST(p1 AS HUGEINT) * r) AS b1,
-                 sum(CAST(p2 AS HUGEINT) * r) AS b2
-          FROM f GROUP BY i
-        )
-        SELECT i, n_users,
-               1e6 * (CAST((a22 + 1000000000000000) * b1 - a12 * b2
-                           AS DOUBLE)
-                      / CAST((a11 + 1000000000000000)
-                             * (a22 + 1000000000000000) - a12 * a12
-                             AS DOUBLE)) AS y1,
-               1e6 * (CAST((a11 + 1000000000000000) * b2 - a12 * b1
-                           AS DOUBLE)
-                      / CAST((a11 + 1000000000000000)
-                             * (a22 + 1000000000000000) - a12 * a12
-                             AS DOUBLE)) AS y2
-        FROM mom
-    """
-
-    o["sp_counting"] = _dedup.sp_counting_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT o_custkey * 2 AS a, l_partkey * 2 + 1 AS b
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """,
-        source=0,
-        max_hops=4,
-    )
-
-    o["betweenness_contrib"] = _dedup.betweenness_contrib_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT o_custkey * 2 AS a, l_partkey * 2 + 1 AS b
-          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        """,
-        source=0,
-        max_hops=4,
-    )
-
-    o["temporal_reach"] = _dedup.temporal_reach_oracle_sql(
-        edges_cte="""
-          SELECT DISTINCT u, v, t FROM (
-            SELECT o_custkey * 2 AS c, l_suppkey * 2 + 1 AS s,
-                   CAST(CAST(o_orderdate AS DATE)
-                        - DATE '1970-01-01' AS BIGINT) AS t
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          ), (VALUES (0), (1)) AS dir(d),
-          LATERAL (SELECT CASE WHEN d = 0 THEN s ELSE c END AS u,
-                          CASE WHEN d = 0 THEN c ELSE s END AS v) x
-        """,
-        source=3,
-    )
-
-    o["ols_by_type"] = """
-        WITH t0 AS (
-          SELECT min(epoch_us(ts)) AS t0 FROM events
-        ), base AS (
-          SELECT event_type,
-                 CAST(epoch_us(ts) - t0 AS BIGINT) AS t,
-                 CAST(round(value * 1000000) AS BIGINT) AS v
-          FROM events, t0
-        ), mom AS (
-          SELECT event_type,
-                 CAST(count(*) AS BIGINT) AS n,
-                 sum(CAST(t AS HUGEINT)) AS st,
-                 sum(CAST(v AS HUGEINT)) AS sv,
-                 sum(CAST(t AS HUGEINT) * v) AS stv,
-                 sum(CAST(t AS HUGEINT) * t) AS stt
-          FROM base GROUP BY event_type
-        )
-        SELECT event_type, n,
-               CAST(CAST(n AS HUGEINT) * stv - st * sv AS DOUBLE)
-                 / CAST(CAST(n AS HUGEINT) * stt - st * st AS DOUBLE)
-                 AS slope_units_per_us,
-               (CAST(sv AS DOUBLE)
-                - (CAST(CAST(n AS HUGEINT) * stv - st * sv AS DOUBLE)
-                   / CAST(CAST(n AS HUGEINT) * stt - st * st AS DOUBLE))
-                  * CAST(st AS DOUBLE))
-                 / CAST(n AS DOUBLE) AS intercept_units
-        FROM mom
-    """
-
-    # ---- round-14 gate hardening shim (see _GATE_DECIMAL_CASTS) ----
-    # Mirror of the queries() shim: wrap each decimal-emitting oracle
-    # in a final projection with the same explicit casts, preserving
-    # column order.  DuckDB accepts WITH-bearing subqueries, so the
-    # wrap is mechanical.
-    for _name, (_cols, _casts) in _GATE_DECIMAL_CASTS.items():
-        _sel = ", ".join(
-            f"CAST({c} AS {_casts[c].upper()}) AS {c}" if c in _casts else c
-            for c in _cols
-        )
-        o[_name] = (
-            f"SELECT {_sel} FROM (\n{o[_name]}\n) AS __gate_cast"
-        )
-    # canonical ordering (matches the queries() wrapper)
-    for _name, _ocols in _GATE_CANONICAL_ORDER.items():
-        o[_name] += " ORDER BY " + ", ".join(_ocols)
-
-    return {k: v.strip() for k, v in o.items()}
+    o = registry.oracle_texts()
+    return {k: o[k] for k in queries() if k in o}

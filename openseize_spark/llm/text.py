@@ -5,7 +5,7 @@ All pure built-in string functions (JVM codegen) — the hot path over a
 100 TB documents table never enters Python.  DuckDB-oracle-checkable
 versions use only arithmetic on length/replace so both engines agree
 bit-for-bit; each portable column helper has its DuckDB twin (``*_sql``)
-beside it, and the oracles call the twin (ARCHITECTURE.md §15).
+beside it, and the oracles call the twin (ARCHITECTURE.md §13).
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ def occurrence_count_sql(expr: str, needle: str) -> str:
 
 
 def _marker_hits(col, markers):
-    """Summed occurrence counts of the space-padded ``markers``."""
+    """Summed occurrence counts of ``markers``."""
     return sum(occurrence_count(col, m) for m in markers)
 
 
@@ -46,6 +46,9 @@ def _marker_hits_sql(expr: str, markers) -> str:
 
 
 _STOP_MARKERS = tuple(f" {w} " for w in STOPWORDS)
+
+# the punctuation the quality heuristics count
+_PUNCT = (".", ",", "!", "?", ";", ":")
 
 
 def _count_tokens(norm):
@@ -88,7 +91,7 @@ def text_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     norm = normalize_text(t)
     n_chars = F.length(t).cast("long")
     n_tokens = token_count(t)
-    punct = sum(occurrence_count(t, p) for p in (".", ",", "!", "?", ";", ":"))
+    punct = _marker_hits(t, _PUNCT)
     stop_hits = _marker_hits(norm, _STOP_MARKERS)
     return docs.select(
         F.col(id_col),
@@ -126,7 +129,7 @@ def quality_expr(text_col: str = "text", bind_once: bool = False):
       at 0.5."""
     t = F.col(text_col)
     n_chars = F.length(t).cast("long")
-    punct = sum(occurrence_count(t, p) for p in (".", ",", "!", "?", ";", ":"))
+    punct = _marker_hits(t, _PUNCT)
     punct_ratio = punct / F.greatest(n_chars, F.lit(1))
     len_score = F.least(n_chars / 500.0, F.lit(1.0))
     punct_pen = F.when(punct_ratio > 0.1, 0.5).otherwise(1.0)

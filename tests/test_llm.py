@@ -2293,6 +2293,7 @@ class TestNdcgEval:
         import math
 
         import __spark_entry__ as entry
+        from openseize_spark.registry import common
 
         sf = "/root/testdata/sf0.001"
         got = {
@@ -2310,7 +2311,7 @@ class TestNdcgEval:
             .collect()
         }
         qterms = {
-            qid: set(s.split()) for qid, s in entry._BM25_QUERIES.items()
+            qid: set(s.split()) for qid, s in common._BM25_QUERIES.items()
         }
         exp = {}
         for qid in qterms:
@@ -2734,6 +2735,7 @@ class TestDedupDiagnosticsConsistency:
 
     def test_sweep_monotone_and_anchored_at_80(self, spark):
         import __spark_entry__ as entry
+        from openseize_spark.registry import common
 
         qs = entry.queries()
         sweep = {
@@ -2751,7 +2753,7 @@ class TestDedupDiagnosticsConsistency:
         # with jaccard >= 0.8 == the verified vp edge set
         from openseize_spark.llm import dedup as d
 
-        docs = entry._t(spark, "/root/testdata/sf0.001", "documents")
+        docs = common._t(spark, "/root/testdata/sf0.001", "documents")
         sigs = d.minhash_signatures(docs, k=5, num_hashes=64, portable=True)
         cand = d.minhash_lsh_pairs(sigs, bands=8, portable=True)
         vp = d.jaccard_verify(docs, cand, k=5, threshold=0.8)

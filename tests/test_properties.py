@@ -1010,7 +1010,7 @@ class TestTheilSenProperty:
         identical regardless."""
         import statistics
 
-        import __spark_entry__ as entry
+        from openseize_spark.registry import stats
 
         rows = []
         eid = 0
@@ -1041,7 +1041,7 @@ class TestTheilSenProperty:
         max_inrow = data.draw(st.sampled_from([1, 3, 1000]))
         got = {
             r.user_id: (r.n_pairs, r.median_slope_cps)
-            for r in entry._theilsen_slope(df, max_inrow=max_inrow).collect()
+            for r in stats._theilsen_slope(df, max_inrow=max_inrow).collect()
         }
 
         exp = {}
@@ -1126,11 +1126,12 @@ class TestCupedStratifiedProperty:
         the WITHIN-tier covariate mean).  Tier/arm cells must also
         partition the experiment's user population exactly."""
         import __spark_entry__ as entry
+        from openseize_spark.registry import common
 
         sf = "/root/testdata/sf0.001"
         rows = entry.queries()["cuped_stratified"](spark, sf).collect()
         assert rows
-        e = entry._events(spark, sf).filter(
+        e = common._events(spark, sf).filter(
             F.col("user_id").isNotNull() & F.col("value").isNotNull()
         )
         n_users = e.select("user_id").distinct().count()

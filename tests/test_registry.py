@@ -1,7 +1,9 @@
 """Driver-contract registry invariants: every oracle belongs to a
-registered query, the rows-only set is exactly the documented three,
-and the registration order puts the never-driver-checked backlog
-inside the 50-slot gate window."""
+registered query, the rows-only set is exactly the documented one, each
+name registers once, and the gate priority heads the registration
+order."""
+
+import pytest
 
 import __spark_entry__ as entry
 
@@ -37,17 +39,29 @@ def test_registered_callables_are_distinct():
     assert len(fns) == len(set(id(f) for f in fns))
 
 
-def test_no_duplicate_registrations_in_source():
-    """A second q[...] assignment silently overwrites the first (a
-    rename collision did exactly this once): fail loudly instead."""
-    import re
-    from collections import Counter
+def test_second_registration_raises():
+    """A second registration of a name would silently shadow the first
+    (a rename collision did exactly this once): register refuses it."""
+    from openseize_spark import registry
 
-    src = open("__spark_entry__.py").read()
-    for pat in (r'q\["([a-z0-9_]+)"\] = ', r'o\["([a-z0-9_]+)"\] = '):
-        keys = re.findall(pat, src)
-        dups = [k for k, c in Counter(keys).items() if c > 1]
-        assert not dups, f"duplicate registrations: {dups}"
+    before = registry.builders()
+    with pytest.raises(ValueError, match="pricing_summary"):
+        registry.register("pricing_summary", lambda spark, sf_dir: None, None)
+    assert registry.builders() == before
+    assert "pricing_summary" in entry.oracle_sql()
+
+
+def test_one_register_call_per_query():
+    """Every query is one ``register`` call in a registry module."""
+    import re
+    from pathlib import Path
+
+    mods = Path(entry.__file__).parent / "openseize_spark" / "registry"
+    calls = sum(
+        len(re.findall(r"^register\(", p.read_text(), re.M))
+        for p in mods.glob("*.py")
+    )
+    assert calls == len(entry.queries())
 
 
 def test_market_basket_queries_have_no_pair_self_join(spark):

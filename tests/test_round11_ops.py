@@ -1408,7 +1408,7 @@ def test_xcorr_lags_brute_force(spark, tmp_path):
     import numpy as np
 
     import __spark_entry__ as entry
-    from __spark_entry__ import _signal
+    from openseize_spark.registry.common import _signal
 
     sf_dir = "/root/testdata/sf0.001"
     df = entry.queries()["xcorr_lags"](spark, sf_dir)

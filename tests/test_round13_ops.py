@@ -1081,11 +1081,11 @@ def test_ranking_inversions_brute_force(spark, tmp_path):
         " n_chars bigint",
     ).write.parquet(os.path.join(d, "documents.parquet"))
 
-    import __spark_entry__ as e2
     from openseize_spark.llm import text as llm_text
+    from openseize_spark.registry import common
 
     fused = llm_text.rrf_fusion(
-        e2._t(spark, d, "documents"), queries=e2._BM25_QUERIES, k=10
+        common._t(spark, d, "documents"), queries=common._BM25_QUERIES, k=10
     ).collect()
     want = {}
     for qid in {r.query_id for r in fused}:
@@ -1130,6 +1130,7 @@ def test_snippet_extract_brute_force(spark, tmp_path):
     BM25 top-3; a doc with a dense term cluster snips there."""
     import __spark_entry__ as entry
     from openseize_spark.llm import text as llm_text
+    from openseize_spark.registry import common
 
     texts = {
         0: "filler one two three fast hash join fast hash join "
@@ -1149,11 +1150,11 @@ def test_snippet_extract_brute_force(spark, tmp_path):
     ).write.parquet(os.path.join(d, "documents.parquet"))
 
     ranked = llm_text.bm25_topk(
-        entry._t(spark, d, "documents"), queries=entry._BM25_QUERIES,
+        common._t(spark, d, "documents"), queries=common._BM25_QUERIES,
         k=3,
     ).collect()
     qterms = {
-        qid: set(t.split()) for qid, t in entry._BM25_QUERIES.items()
+        qid: set(t.split()) for qid, t in common._BM25_QUERIES.items()
     }
     want = {}
     for r in ranked:

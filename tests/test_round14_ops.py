@@ -180,7 +180,7 @@ def test_stateful_page_hinkley_chunk_order(tmp_path):
 def test_stamp_batch_mtimes_orders_files(tmp_path):
     """The streaming-fixture mtime stamper yields strictly increasing
     per-batch mtimes regardless of write timing/granularity."""
-    import __spark_entry__ as entry
+    from openseize_spark.registry import common
 
     d = str(tmp_path)
     for i in range(3):
@@ -191,7 +191,7 @@ def test_stamp_batch_mtimes_orders_files(tmp_path):
     t0 = os.stat(os.path.join(d, "batch_0", "part-0.parquet")).st_mtime
     for i in range(3):
         os.utime(os.path.join(d, f"batch_{i}", "part-0.parquet"), (t0, t0))
-    entry._stamp_batch_mtimes(d, 3)
+    common._stamp_batch_mtimes(d, 3)
     mt = [
         os.stat(os.path.join(d, f"batch_{i}", "part-0.parquet")).st_mtime
         for i in range(3)
@@ -200,10 +200,10 @@ def test_stamp_batch_mtimes_orders_files(tmp_path):
 
 
 def test_gate_decimal_casts_cover_registry_surface(spark, tmp_path):
-    """Policy test for the r14 hardening: every query named in
-    _GATE_DECIMAL_CASTS emits NO decimal-typed column after the shim
-    (checked on the synthetic fixture for the graph queries — schema
-    only, no execution)."""
+    """Policy test for the gate casts: every query registered with
+    ``casts=`` emits NO decimal-typed column after the cast (checked on
+    the synthetic fixture for the graph queries — schema only, no
+    execution)."""
     import __spark_entry__ as entry
 
     edges = [(1, 1), (1, 2), (2, 1)]

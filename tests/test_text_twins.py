@@ -8,8 +8,9 @@ must give the same values: whitespace Java's ``\\s`` and RE2's ``\\s``
 disagree on (the vertical tab), whitespace neither treats as a
 separator (NBSP, U+2003), empty and blank strings and NULL.
 
-Also here: the gate staging directories of ``__spark_entry__._gate_tmp``
-are removed when the process that made them exits.
+Also here: the gate staging directories of
+``openseize_spark.registry.common._gate_tmp`` are removed when the
+process that made them exits.
 """
 
 from __future__ import annotations
@@ -148,10 +149,10 @@ def test_gate_dirs_removed_at_exit(tmp_path):
     child = f"""
 import os, sys, types
 sys.path.insert(0, {REPO!r})
-import __spark_entry__ as e
+from openseize_spark.registry.common import _gate_tmp
 s = types.SimpleNamespace(
     sparkContext=types.SimpleNamespace(applicationId="local-1234"))
-a, b = e._gate_tmp(s, "schema_ev_x"), e._gate_tmp(s, "decode") + ".edf"
+a, b = _gate_tmp(s, "schema_ev_x"), _gate_tmp(s, "decode") + ".edf"
 os.makedirs(os.path.join(a, "batch_0"))
 open(b, "w").write("x")
 print(os.path.dirname(a), os.path.dirname(b))

@@ -40,23 +40,20 @@ def sites() -> dict[str, str]:
 
     repo = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
     sys.path.insert(0, repo)
+    from openseize_spark.llm.dedup import normalize_text_sql, tokenize_sql
     from openseize_spark.llm.sampling import HASH_SPACE, salted_hash_sql
 
     s: dict[str, str] = {}
 
     # llm/text.py kn_perplexity_oracle_sql (model CTE), discount=0.75
     # as registered; engine twin llm/text.py:kn_perplexity (_nllu).
-    s["kn_perplexity.nllu"] = """
+    s["kn_perplexity.nllu"] = f"""
         WITH toks AS MATERIALIZED (
           SELECT doc_id, CAST(u.i AS BIGINT) AS pos,
                  list_extract(wl, u.i) AS w
           FROM (
             SELECT doc_id,
-                   list_filter(
-                     string_split(
-                       regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                       ' '),
-                     x -> len(x) > 0) AS wl
+                   {tokenize_sql()} AS wl
             FROM documents WHERE text IS NOT NULL
           ), unnest(range(1, len(wl) + 1)) AS u(i)
         ), occ AS MATERIALIZED (
@@ -86,8 +83,9 @@ def sites() -> dict[str, str]:
                )) * 1e9 AS x
         FROM bi JOIN c1 USING (w1) JOIN nr USING (w2) CROSS JOIN tt"""
 
-    # __spark_entry__.py o["bartlett_test"] (per CTE, lnu); engine twin
-    # q_bartlett_test (lnu).  n>=2 guard matches production.
+    # openseize_spark/registry/stats.py bartlett_test oracle (per CTE,
+    # lnu); engine twin q_bartlett_test (lnu).  n>=2 guard matches
+    # production.
     s["bartlett_test.lnu"] = """
         WITH g AS (
           SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -108,14 +106,12 @@ def sites() -> dict[str, str]:
 
     # llm/text.py source_divergence_oracle_sql (per-word log-ratio
     # term); engine twin source_divergence (term), scale=1e9.
-    s["source_divergence.term"] = """
+    s["source_divergence.term"] = f"""
         WITH toks AS (
           SELECT source AS grp, u.w AS w
           FROM (
             SELECT source,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
+                   string_split({normalize_text_sql()}, ' ') AS wl
             FROM documents WHERE text IS NOT NULL
           ), unnest(wl) AS u(w)
           WHERE len(u.w) > 0
@@ -141,9 +137,7 @@ def sites() -> dict[str, str]:
           SELECT doc_id AS _id, lang AS _tgt, ({hw}) % 64 AS _b
           FROM (
             SELECT doc_id, lang,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '
-                   ) AS wl
+                   string_split({normalize_text_sql()}, ' ') AS wl
             FROM documents WHERE text IS NOT NULL
           ), unnest(wl) AS u(w)
           WHERE len(u.w) > 0
@@ -179,9 +173,7 @@ def sites() -> dict[str, str]:
     s["heaps_law_fit.xy"] = f"""
         WITH d AS MATERIALIZED (
           SELECT doc_id AS _id,
-                 string_split(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                   ' ') AS wl
+                 string_split({normalize_text_sql()}, ' ') AS wl
           FROM documents WHERE text IS NOT NULL
         ), m AS (
           SELECT max(_id) + 1 AS M FROM d
@@ -213,14 +205,12 @@ def sites() -> dict[str, str]:
 
     # llm/text.py tfidf-family idf quantization (round(ln(N/df)·1e9)
     # per word; sites text.py:1093/:1435/:1693 share the chain).
-    s["tfidf.idf"] = """
+    s["tfidf.idf"] = f"""
         WITH toks AS (
           SELECT doc_id, u.w AS w
           FROM (
             SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     ' ') AS wl
+                   string_split({normalize_text_sql()}, ' ') AS wl
             FROM documents WHERE text IS NOT NULL
           ), unnest(wl) AS u(w)
           WHERE len(u.w) > 0
@@ -247,9 +237,7 @@ def sites() -> dict[str, str]:
           SELECT doc_id, u.w AS word
           FROM (
             SELECT doc_id,
-                   string_split(
-                     regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'),
-                     ' ') AS wl
+                   string_split({normalize_text_sql()}, ' ') AS wl
             FROM documents WHERE text IS NOT NULL
           ), unnest(wl) AS u(w)
           WHERE len(u.w) > 0
