@@ -37,7 +37,7 @@ HEADLINE = [
     "welch_psd_blocks",     # block+halo Arrow kernel + partial agg
     "resample_poly",        # polyphase block kernel
     "sosfilt_full",         # stateful per-channel IIR kernel (full length)
-    "sosfilt_blocks_full",  # parallel-in-time state-scan IIR (full length)
+    "sosfilt_blocks_full",  # blocked IIR, state carried block to block (full length)
     "stft_blocks",          # bounded-memory STFT (block+halo, no agg)
     "dedup_exact",          # md5 fingerprint hash-groupBy
     "minhash_dedup_prod",   # shingle explode + min-agg + LSH band join (murmur3)

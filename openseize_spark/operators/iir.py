@@ -13,10 +13,11 @@ shuffle-parallel DataFrame op without changing semantics.  Strategy
   whole channel (zero-phase filtfilt *requires* whole-series access for
   the reverse pass, which is why the reference needs its one-chunk-
   lookahead machinery, core/numerical.py:384-411);
-- for channels longer than executor memory, ``sosfilt_blocks`` runs the
-  reference's carried-zi recurrence as a parallel-in-time state scan over
-  blocks; state carry is exact, so block boundaries do not change the
-  result (tested in tests/test_partition_invariance.py).
+- for channels longer than executor memory, ``sosfilt_blocks`` cuts each
+  channel into blocks and hands the filter state from each block to the
+  next in t order, as the reference hands ``zi`` from chunk to chunk; the
+  carry is exact, so the result is bit-identical to the whole-array
+  kernel for every block size (tests/test_partition_invariance.py).
 """
 
 from __future__ import annotations
@@ -81,29 +82,13 @@ def sosfilt_blocks(
     block_size: int = 65536,
     zi_unit: np.ndarray | None = None,
 ) -> SignalFrame:
-    """Parallel-in-time causal IIR — the 100-TB path for channels too long
-    to filter as one pandas group.
+    """Causal IIR over blocks — the path for channels too long to filter
+    as one pandas group.
 
-    The DF2T recurrence is linear in (state, input), so over an n-sample
-    block z_out = T^n @ z_in + c, where c is the block's zero-state final
-    state and T the one-sample zero-input transition (``_state_transition``).
-    Three stages:
-
-    1. map (parallel over blocks): zero-state filter, keep only the final
-       state c per block — tiny (nsec*2 doubles) rows;
-    2. per-channel scan over the c rows (applyInPandas on ~n/block_size
-       rows, microseconds each): z_in(b) via the affine recurrence —
-       the only sequential step, O(#blocks), data volume ~bytes/block;
-    3. map (parallel over blocks): re-filter each block seeded with its
-       exact incoming state z_in(b).
-
-    Wall-clock becomes O(n / #executors) instead of O(n) per channel; the
-    price is 2x kernel compute.  Superposition in float introduces
-    ~1e-15-relative state error that decays with the filter's impulse
-    response (tested vs the whole-array kernel across block sizes).
-
-    reference: core/numerical.py:301-335 carries zi sequentially chunk to
-    chunk; this distributes that same state carry as an associative scan.
+    Each block starts from the exact final state of its channel's
+    previous block (``_carried``), so the output equals the whole-array
+    kernel bit for bit.  reference: core/numerical.py:301-335 carries zi
+    sequentially chunk to chunk; this is the same recursion.
 
     ``zi_unit`` (shape (nsec, 2)): optional per-unit initial conditions —
     the channel's starting state is zi_unit * first_sample (the
@@ -111,115 +96,51 @@ def sosfilt_blocks(
     zero-phase two-pass variant ``sosfiltfilt_blocks``.
     """
     sos = _sos(spec)
-    ns = sos.shape[0]
-
-    def filt(x, zflat):
-        z = None if zflat is None else np.asarray(zflat, dtype=np.float64).reshape(ns, 2)
-        y, zf = kernels.sosfilt(sos, x, z)
-        return y, zf.ravel()
-
-    return _blocks_state_scan(sf, block_size, filt, 2 * ns, zi_unit)
+    return _carried(sf, block_size, lambda x, z: kernels.sosfilt(sos, x, z), zi_unit)
 
 
-def _state_transition(filt, d: int) -> np.ndarray:
-    """One-sample zero-input transition matrix for any linear filter given
-    as filt(x, z_flat) -> (y, z_flat'), probed from unit basis states."""
-    T = np.empty((d, d))
-    zero = np.zeros(1)
-    for j in range(d):
-        e = np.zeros(d)
-        e[j] = 1.0
-        _, zf = filt(zero, e)
-        T[:, j] = np.asarray(zf, dtype=np.float64).ravel()
-    return T
+def _carried(sf: SignalFrame, block_size: int, filt, zi_unit) -> SignalFrame:
+    """The block engine of every ``*_blocks`` filter: ``filt(x, z|None)
+    -> (y, z')`` runs on each block, starting from the state the
+    channel's previous block ended in (``zi_unit * x[0]`` on a channel's
+    first block when ``zi_unit`` is given, zero state otherwise).
 
+    The long signal is hashed by (recording_id, channel) once, as in
+    ``blocks.halo_blocks``, so a channel's blocks share one partition, and
+    ``sortWithinPartitions`` puts them in block order ahead of a single
+    ``mapInPandas`` pass.  The input is read once and filtered once.  The
+    carry lives inside the generator, so every task has its own.
 
-def _blocks_state_scan(
-    sf: SignalFrame,
-    block_size: int,
-    filt,
-    d: int,
-    zi_unit: np.ndarray | None,
-) -> SignalFrame:
-    """Shared 3-stage parallel-in-time engine (see sosfilt_blocks):
-    zero-state filter per block -> per-channel affine state scan ->
-    seeded re-filter.  ``filt(x, z_flat|None) -> (y, z_flat')`` must be
-    linear in (state, input); ``d`` is the flat state dimension.
-
-    The block table feeds TWO consumers — the state pass and the seeded
-    re-filter join — and each evaluates it: the executed plan holds no
-    ReusedExchange for the to_blocks shuffle.  A Python DataSource scan
-    (the edf source) is never exchange-reused, and over a parquet scan
-    the join's inferred isnotnull filter makes the two subtrees differ,
-    so the input is read twice.  (A localCheckpoint of the block table
-    measures worse on the registry: the join then re-shuffles the
-    ExistingRDD side — 6.3 s vs 3.1 s on sosfilt_blocks_full at sf0.1.)"""
-    T = _state_transition(filt, d)
-    zi_flat = None if zi_unit is None else np.asarray(zi_unit, dtype=np.float64).ravel()
-    bdf = B.to_blocks(sf.df, block_size)
-
-    def _zero_state(row):
-        x = row.vs
-        _, zf = filt(x, None)
-        return {
-            "block_id": [row.block_id],
-            "t0": [row.t0],
-            "n": [len(x)],
-            "c": [np.asarray(zf, dtype=np.float64).ravel()],
-            "x0": [float(x[0]) if len(x) else 0.0],
-        }
-
-    states = B.map_blocks(
-        bdf,
-        _zero_state,
-        "recording_id string, channel int, block_id long, t0 long, n int, "
-        "c array<double>, x0 double",
+    Trade-off: a channel is filtered by one task, so its wall time is
+    O(n), and parallelism is across channels only.  A parallel-in-time
+    affine state scan would spread one channel over the executors, but it
+    runs the kernel twice per sample and reads its input twice.  Measured
+    on 4 cores against such a scan: the registry's full-length
+    ``sosfilt_blocks_full`` at sf0.1 (4 channels) 2.1 s vs 2.8 s median,
+    zero-phase ``sosfiltfilt_blocks`` on the same signal 3.7 s vs 5.8 s,
+    and a single 400k-sample channel, the scan's best case, 2.8 s vs
+    2.3 s.
+    """
+    if zi_unit is not None:
+        zi_unit = np.asarray(zi_unit, dtype=np.float64)
+    bdf = B.to_blocks(sf.df.repartition(*B.KEYS), block_size).sortWithinPartitions(
+        *B.KEYS, "block_id"
     )
 
-    scan_schema = "recording_id string, channel int, block_id long, zin array<double>"
+    def _carry(batches):
+        key = z = None
+        for pdf in batches:
+            ys = []
+            for r in pdf.itertuples(index=False):
+                if (r.recording_id, r.channel) != key:
+                    key = (r.recording_id, r.channel)
+                    z = None if zi_unit is None else zi_unit * r.vs[0]
+                y, z = filt(r.vs, z)
+                ys.append(y)
+            vs = pd.Series(ys, index=pdf.index, dtype=object)
+            yield pdf[["recording_id", "channel", "t0"]].assign(vs=vs)
 
-    def _scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t0")
-        z = np.zeros(d)
-        if zi_flat is not None and len(pdf):
-            z = zi_flat * float(pdf["x0"].iloc[0])
-        zins, apow = [], {}
-        for r in pdf.itertuples(index=False):
-            zins.append(z.copy())
-            n = int(r.n)
-            A = apow.get(n)
-            if A is None:
-                A = np.linalg.matrix_power(T, n)
-                apow[n] = A
-            z = A @ z + np.asarray(r.c, dtype=np.float64)
-        return pd.DataFrame(
-            {
-                "recording_id": pdf["recording_id"].to_numpy(),
-                "channel": pdf["channel"].to_numpy(),
-                "block_id": pdf["block_id"].to_numpy(),
-                "zin": zins,
-            }
-        )
-
-    zin = states.groupBy("recording_id", "channel").applyInPandas(_scan, scan_schema)
-
-    # zin is one tiny row per block (d+3 values vs block_size samples),
-    # so it is ALWAYS the side to build from: the shuffle_hash hint pins
-    # the hash build on zin — never a broadcast or sort of the block
-    # arrays — and AQE may still upgrade the tiny zin side to a runtime
-    # broadcast.  At block counts where zin itself is large (the 100-TB
-    # path) the shuffled-hash join moves only the zin rows plus one
-    # pass of the block table.
-    j = bdf.join(
-        zin.hint("shuffle_hash"), on=["recording_id", "channel", "block_id"]
-    )
-
-    def _seeded(row):
-        y, _ = filt(row.vs, np.asarray(row.zin, dtype=np.float64))
-        return {"t0": [row.t0], "vs": [y]}
-
-    out = B.map_blocks(j, _seeded, B.SAMPLE_BLOCKS)
-    return sf.with_df(B.from_blocks(out))
+    return sf.with_df(B.from_blocks(bdf.mapInPandas(_carry, B.SAMPLE_BLOCKS)))
 
 
 def lfilter_blocks(
@@ -229,21 +150,18 @@ def lfilter_blocks(
     block_size: int = 65536,
     zi_unit: np.ndarray | None = None,
 ) -> SignalFrame:
-    """Parallel-in-time causal ba-form filter (lfilter analog of
-    sosfilt_blocks; reference: core/numerical.py:414-446)."""
+    """Causal ba-form filter over blocks with the state carried exactly
+    (lfilter analog of sosfilt_blocks; reference:
+    core/numerical.py:414-446)."""
     b = np.asarray(b, dtype=np.float64)
     a = np.asarray(a, dtype=np.float64)
-
-    def filt(x, zflat):
-        return kernels.lfilter(b, a, x, zflat)
-
-    return _blocks_state_scan(sf, block_size, filt, max(len(a), len(b)) - 1, zi_unit)
+    return _carried(sf, block_size, lambda x, z: kernels.lfilter(b, a, x, z), zi_unit)
 
 
 def filtfilt_blocks(
     sf: SignalFrame, b: np.ndarray, a: np.ndarray, block_size: int = 65536
 ) -> SignalFrame:
-    """Zero-phase ba-form filter, parallel in time (forward + reversed
+    """Zero-phase ba-form filter over blocks (forward + reversed
     lfilter_blocks passes, lfilter_zi * first-sample seeding — the ba
     analog of sosfiltfilt_blocks)."""
     zi = kernels.lfilter_zi(b, a)
@@ -253,16 +171,15 @@ def filtfilt_blocks(
 def sosfiltfilt_blocks(
     sf: SignalFrame, spec: SosSpec | np.ndarray, block_size: int = 65536
 ) -> SignalFrame:
-    """Zero-phase forward-backward IIR, parallel in time.
+    """Zero-phase forward-backward IIR over blocks.
 
     The reference needs one-chunk-lookahead machinery to derive reverse
     initial conditions when chunked (core/numerical.py:384-411); here the
     backward pass is simply ``sosfilt_blocks`` on the time-reversed
     forward output (t -> n-1-t via a broadcast join of channel lengths),
-    with the same Gustafsson-style zi*first_sample seeding the scan —
-    the reversed stream's first sample is the forward output's last, so
-    the state scan picks it up with no lookahead.  Four parallel passes
-    total; per-channel wall-clock O(n/#executors).
+    with the same Gustafsson-style zi*first_sample seeding — the reversed
+    stream's first sample is the forward output's last, so the carry
+    picks it up with no lookahead.
     """
     sos = _sos(spec)
     zi = kernels.sosfilt_zi(sos)
@@ -273,15 +190,11 @@ def _zero_phase(sf: SignalFrame, one_pass) -> SignalFrame:
     """``one_pass`` forward, then over the time-reversed forward output,
     reversed back: the zero-phase body of both ``*filtfilt_blocks``."""
     span = _channel_span(sf.df)
-    # materialize the forward output once: the backward state-scan
-    # consumes its input twice (zero-state pass + seeded-refilter join),
-    # and without a boundary each consumer re-inlines the ENTIRE forward
-    # pipeline — the round-14 plan sweep counted 14 source scans / 29
-    # exchanges for this query vs 4/8 for one pass (multiplicative
-    # re-inlining through composition).  Spark's ContextCleaner drops
-    # the checkpoint's blocks once the RDD is unreferenced.
-    fwd_df = one_pass(sf).df.localCheckpoint(eager=False)
-    bwd = one_pass(sf.with_df(_reverse_time(fwd_df, span)))
+    # the backward pass consumes the forward output once, so the forward
+    # plan is inlined once; a localCheckpoint between the passes measured
+    # slower (4.3 s vs 4.0 s median, full-length sf0.1, 4 cores)
+    fwd = one_pass(sf)
+    bwd = one_pass(fwd.with_df(_reverse_time(fwd.df, span)))
     return sf.with_df(_reverse_time(bwd.df, span))
 
 

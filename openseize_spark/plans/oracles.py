@@ -557,12 +557,10 @@ def iir_oracle_sql(
     recursion (and the reverse pass for zero-phase) as recursive CTEs over
     the first ``slice_n`` samples per channel.
 
-    Plain per-channel kernels match BIT-EXACTLY (no tolerance).  The
-    parallel-in-time ``*_blocks`` operators differ from the plain
-    recursion only by state-superposition float noise (measured <=6e-14
-    on the gate signal; the SOS variants underflow to bit-exact), so
-    callers pass ``round_digits=7`` for those and round the Spark side
-    identically.
+    Plain per-channel kernels match BIT-EXACTLY (no tolerance), and so
+    do the ``*_blocks`` operators, which carry the exact state from block
+    to block; their registry queries pass ``round_digits=7`` and round
+    the Spark side identically, a margin they no longer need.
 
     ``signal_cte_body``: the output of signal.signal_cte(nch).
     """

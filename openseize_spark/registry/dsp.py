@@ -4,6 +4,8 @@ resampling, Welch/STFT, coupling), plus the EDF and annotation readers.
 
 from __future__ import annotations
 
+from functools import cache
+
 import numpy as np
 from pyspark.sql import DataFrame, functions as F, Window as W
 
@@ -347,17 +349,21 @@ register("fir_kaiser", q_fir_kaiser, lambda: sig + f"""
             WINDOW w AS (PARTITION BY recording_id, channel ORDER BY t)
         """)
 
-_REMEZ_SPEC = design2.remez_fir(fpass=10, fstop=20, fs=FS, gpass=0.5, gstop=40.0)
-remez_sum = fir_sum_sql(_REMEZ_SPEC.taps)
+
+@cache
+def _remez_spec():
+    # the Parks-McClellan design takes ~0.2 s: run it on first use, not
+    # on every import of the registry
+    return design2.remez_fir(fpass=10, fstop=20, fs=FS, gpass=0.5, gstop=40.0)
 
 
 def q_fir_remez(spark, sf_dir):
-    sf = op_fir.apply_fir_sql(_signal(spark, sf_dir), _REMEZ_SPEC, mode="same")
+    sf = op_fir.apply_fir_sql(_signal(spark, sf_dir), _remez_spec(), mode="same")
     return sf.df.select("channel", "t", F.round("v", 9).alias("v"))
 
 
 register("fir_remez", q_fir_remez, lambda: sig + f"""
-            SELECT channel, t, round({remez_sum}, 9) AS v
+            SELECT channel, t, round({fir_sum_sql(_remez_spec().taps)}, 9) AS v
             FROM signal
             WINDOW w AS (PARTITION BY recording_id, channel ORDER BY t)
         """)
@@ -667,9 +673,10 @@ register("psd_ci", q_psd_ci, lambda: sig + f"""
         """)
 
 # IIR family: recursive-CTE replays of the exact DF2T recursion
-# (plans/oracles.iir_oracle_sql).  Plain kernels are bit-exact; the
-# parallel-in-time *_blocks variants round(7) on both sides (their
-# blocks-vs-plain float noise is <=6e-14 on this signal).
+# (plans/oracles.iir_oracle_sql).  Plain kernels are bit-exact, and so
+# are the *_blocks variants since they carry the exact state from block
+# to block; those still round(7) on both sides, which keeps their plans
+# and oracle texts as they were.
 scte = signal_cte(NCH)
 _ell = design2.ellip(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0).sos
 
@@ -835,10 +842,9 @@ register("sosfilt", q_sosfilt, lambda: _iir(sos=_butter))
 
 
 def q_sosfilt_blocks(spark, sf_dir):
-    # parallel-in-time state-scan IIR (operators/iir.sosfilt_blocks).
-    # Oracled against the plain-recursion replay: superposition state
-    # error underflows below 1 ulp for SOS cascades (measured 0.0 on
-    # this signal), but round(7) on both sides keeps the compare robust.
+    # blocked IIR with the state carried block to block
+    # (operators/iir.sosfilt_blocks), oracled against the plain-recursion
+    # replay; round(7) on both sides, see the IIR family note above.
     sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
     sf = op_iir.sosfilt_blocks(_signal_sliced(spark, sf_dir), sos, block_size=512)
     return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
@@ -848,8 +854,8 @@ register("sosfilt_blocks", q_sosfilt_blocks, lambda: _iir(sos=_butter, round_dig
 
 
 def q_sosfiltfilt_blocks(spark, sf_dir):
-    # zero-phase parallel-in-time: forward + time-reversed backward
-    # state-scan passes
+    # zero-phase blocked IIR: forward + time-reversed backward carry
+    # passes
     sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
     sf = op_iir.sosfiltfilt_blocks(_signal_sliced(spark, sf_dir), sos, block_size=512)
     return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
@@ -876,8 +882,7 @@ _BA_SPEC = _compose_ba()
 
 
 def q_lfilter_blocks(spark, sf_dir):
-    # ba-form parallel-in-time state scan (blocks-vs-plain float noise
-    # <=6e-14 on this signal; round(7) both sides)
+    # ba-form blocked IIR with the state carried (round(7) both sides)
     b, a = _BA_SPEC
     sf = op_iir.lfilter_blocks(_signal_sliced(spark, sf_dir), b, a, block_size=512)
     return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
@@ -887,7 +892,7 @@ register("lfilter_blocks", q_lfilter_blocks, lambda: _iir(ba=_BA_SPEC, round_dig
 
 
 def q_filtfilt_blocks(spark, sf_dir):
-    # zero-phase ba-form parallel-in-time
+    # zero-phase ba-form blocked IIR
     b, a = _BA_SPEC
     sf = op_iir.filtfilt_blocks(_signal_sliced(spark, sf_dir), b, a, block_size=512)
     return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
@@ -1095,8 +1100,7 @@ register("sosfilt_full", q_sosfilt_full, lambda: oracles.iir_oracle_sql(scte, so
 def q_sosfilt_blocks_full(spark, sf_dir):
     sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
     sf = op_iir.sosfilt_blocks(_signal(spark, sf_dir), sos, block_size=8192)
-    # round(7) both sides: parallel-in-time superposition noise vs
-    # the plain recursion replay (same discipline as sosfilt_blocks)
+    # round(7) both sides (same discipline as sosfilt_blocks)
     return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
 
 

@@ -49,3 +49,18 @@ def test_shape_differences_survive():
     assert normalize("hashpartitioning(a#1, 4)") != normalize(
         "hashpartitioning(a#1, 8)"
     )
+
+
+def test_staging_paths_are_masked():
+    a = "Location: InMemoryFileIndex [file:/tmp/os_gate_local-1792447885690/pinnacle.csv]"
+    b = "Location: InMemoryFileIndex [file:/tmp/os_gate_local-1792447906572/pinnacle.csv]"
+    assert normalize(a) == normalize(b)
+    assert "file:/tmp/os_gate_N/pinnacle.csv" in normalize(a)
+    # the rest of the path is plan shape: a different staged table differs
+    assert normalize(a) != normalize(b.replace("pinnacle.csv", "rows.csv"))
+
+
+def test_application_ids_are_masked():
+    a = "PartitionFilters: [], Location: file:/data/local-1792447885690/state"
+    b = "PartitionFilters: [], Location: file:/data/local-1792447906572/state"
+    assert normalize(a) == normalize(b)

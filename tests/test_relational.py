@@ -133,26 +133,26 @@ class TestPlans:
         )
         assert "BroadcastHashJoin" in plan
 
-    def test_sosfilt_blocks_state_join_builds_from_zin(self, signal):
-        """The seed join must hash-build from the tiny per-block state
-        side (zin, BuildRight) so the block arrays are never broadcast
-        or sorted (operators/iir _blocks_state_scan).  The two
-        block-table consumers each evaluate the input; their exchanges
-        are not reused."""
+    def test_sosfilt_blocks_reads_edf_once(self, spark, tmp_path):
+        """The block filter hands each channel's state from block to block
+        inside one ``mapInPandas`` pass (operators/iir ``_carried``): the
+        EDF file is scanned once and nothing is joined back onto the
+        blocks."""
         from openseize_spark.dsp import design
         from openseize_spark.operators import iir as op_iir
+        from openseize_spark.signal import SignalFrame
+        from openseize_spark.sources import edf
 
+        rng = np.random.default_rng(4)
+        path = str(tmp_path / "rec.edf")
+        edf.write_edf(path, {ch: rng.normal(size=2000) for ch in range(2)}, fs=100.0)
+        edf.register_edf_source(spark)
+        sf = SignalFrame(spark.read.format("edf").option("path", path).load(), 100.0)
         spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        plan = (
-            op_iir.sosfilt_blocks(signal, spec, block_size=512)
-            .df._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "ShuffledHashJoin" in plan
-        assert "BuildRight" in plan
-        # the block payload must not ride a broadcast
-        assert "BroadcastHashJoin" not in plan
+        plan = _executed_plan(op_iir.sosfilt_blocks(sf, spec, block_size=512).df)
+        assert plan.count("BatchScan edf") == 1
+        assert "Join" not in plan
+        assert plan.count("MapInPandas _carry") == 1
 
     def test_resample_after_sosfilt_blocks_runs_input_once(self, signal):
         """resample reads the channel length off its own block window:
@@ -165,7 +165,7 @@ class TestPlans:
         spec = design.butter(fpass=10, fstop=20, fs=100.0)
         sf = op_iir.sosfilt_blocks(signal, spec, block_size=512)
         plan = _executed_plan(op_rs.resample(sf, 1, 2, block_size=512).df)
-        assert plan.count("MapInPandas _seeded") == 1
+        assert plan.count("MapInPandas _carry") == 1
         assert "BroadcastExchange" not in plan
 
     def test_halo_operators_shuffle_input_once(self, signal):

@@ -642,10 +642,17 @@ def test_betweenness_contrib_vs_python_brandes(spark, edges):
     arithmetic, and ~= textbook float Brandes (BFS sigma + backward
     dependency accumulation) on arbitrary small undirected graphs."""
     from collections import deque
+    from decimal import ROUND_HALF_UP, Decimal
 
     from openseize_spark.llm import dedup
 
     UNIT = 1_000_000
+
+    def sql_round(x: float) -> int:
+        # SQL round() (Spark and DuckDB): the exact double, ties away
+        # from zero — python's round() sends ties to even instead
+        return int(Decimal(x).quantize(Decimal(1), rounding=ROUND_HALF_UP))
+
     adj: dict = {}
     for a, b in edges:
         if a == b:
@@ -678,7 +685,7 @@ def test_betweenness_contrib_vs_python_brandes(spark, edges):
         s = 0
         for w in adj.get(v, ()):
             if w in dist and dist[w] == dist[v] + 1:
-                s += round(
+                s += sql_round(
                     (float(sigma[v]) / float(sigma[w]))
                     * (float(UNIT) + float(du[w]))
                 )

@@ -4,11 +4,11 @@ Purpose: prove a change is PLAN-NEUTRAL — run this tool in two
 checkouts (e.g. pre- and post-merge) and diff the output lines.
 
 Normalization: expression ids (`#123`), `plan_id=N`, `id=#N`,
-RDD numbers and call sites, `_common_expr_N` names and whole-stage
-codegen ids (`[codegen id : N]`) differ run-to-run without changing the
-plan shape, so they are masked before hashing.  Everything else — node
-order, partitioning arguments, pushed filters, ReadSchema — stays
-verbatim.
+RDD numbers and call sites, `_common_expr_N` names, whole-stage
+codegen ids (`[codegen id : N]`) and the application id in staging
+paths (`os_gate_local-<n>`) differ run-to-run without changing the plan
+shape, so they are masked before hashing.  Everything else — node order,
+partitioning arguments, pushed filters, ReadSchema — stays verbatim.
 
 Usage: python tools/plan_neutrality.py [sf_dir] query [query ...]
 """
@@ -39,6 +39,11 @@ def normalize(plan: str) -> str:
     # or checkpointed intermediate) numbers its codegen stages in stage
     # completion order, which varies between runs of one commit
     plan = re.sub(r"\[codegen id : \d+\]", "[codegen id : N]", plan)
+    # the registry stages written tables under one directory per Spark
+    # application (``os_gate_<applicationId>``, registry/common.py
+    # ``_gate_tmp``): mask the application id, keep the rest of the path
+    plan = re.sub(r"os_gate_[\w.-]+", "os_gate_N", plan)
+    plan = re.sub(r"\blocal-\d+", "local-N", plan)
     return plan
 
 
