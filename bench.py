@@ -36,8 +36,8 @@ HEADLINE = [
     "fir_kaiser",           # 25-tap codegen window FIR
     "welch_psd_blocks",     # block+halo Arrow kernel + partial agg
     "resample_poly",        # polyphase block kernel
-    "sosfilt_full",         # stateful per-channel IIR kernel (full length)
-    "sosfilt_blocks_full",  # blocked IIR, state carried block to block (full length)
+    "sosfilt_full",         # carried-state IIR over t-sorted rows (full length)
+    "sosfilt_blocks_full",  # builds sosfilt_full under its older name
     "stft_blocks",          # bounded-memory STFT (block+halo, no agg)
     "dedup_exact",          # md5 fingerprint hash-groupBy
     "minhash_dedup_prod",   # shingle explode + min-agg + LSH band join (murmur3)

@@ -4,229 +4,133 @@ reference: core/numerical.py:301-411 (sosfilt / sosfiltfilt with carried
 state), filtering/bases.py:153-213 (IIR.__call__, dephase flag).
 
 Causal IIR is a stateful scan along t: it cannot be expressed as a
-shuffle-parallel DataFrame op without changing semantics.  Strategy
-(SURVEY §7 "genuinely hard" #1):
+shuffle-parallel DataFrame op without changing semantics.  Every filter
+here runs one engine, ``_carried``, the Spark form of the reference's
+chunk-to-chunk ``zi`` hand-over (paper/paper.md:59-84):
 
-- parallelism across (recording_id, channel) groups — the same axis the
-  reference parallelizes over;
-- within a group, ``applyInPandas`` runs the numpy DF2T kernel over the
-  whole channel (zero-phase filtfilt *requires* whole-series access for
-  the reverse pass, which is why the reference needs its one-chunk-
-  lookahead machinery, core/numerical.py:384-411);
-- for channels longer than executor memory, ``sosfilt_blocks`` cuts each
-  channel into blocks and hands the filter state from each block to the
-  next in t order, as the reference hands ``zi`` from chunk to chunk; the
-  carry is exact, so the result is bit-identical to the whole-array
-  kernel for every block size (tests/test_partition_invariance.py).
+- the long rows are hashed by (recording_id, channel) once and sorted by
+  (recording_id, channel, t) within each partition — parallelism is
+  across channels, the axis the reference parallelizes over;
+- one ``mapInPandas`` generator carries the DF2T state across rows and
+  Arrow batches, resets it where the channel changes, and calls the
+  kernel once per channel run within a batch.  The Arrow batch plays the
+  reference's ``chunksize``: memory per call is bounded by
+  ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows whatever the
+  channel length;
+- zero-phase filtering runs the same generator a second time over the
+  forward output, sorted by t descending inside the same partitions: no
+  second shuffle, no time-reversal join, and no chunk lookahead
+  (core/numerical.py:384-411) — the reversed stream's first sample is the
+  forward output's last, which seeds the backward state directly.
+
+The carry is exact, so every output equals the whole-array kernel bit for
+bit for every batch layout (tests/test_partition_invariance.py),
+and each output row keeps its own ``t``.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from openseize_spark.dsp import kernels
 from openseize_spark.dsp.design import SosSpec
-from openseize_spark.operators import blocks as B
+from openseize_spark.operators.blocks import KEYS
 from openseize_spark.signal import SignalFrame
 
-_SCHEMA = "recording_id string, channel int, t long, v double"
+# built in Python: mapInPandas parses a DDL string through the JVM on every call
+_SCHEMA = (
+    StructType()
+    .add("recording_id", "string")
+    .add("channel", "integer")
+    .add("t", "long")
+    .add("v", "double")
+)
 
 
 def _sos(spec: SosSpec | np.ndarray) -> np.ndarray:
     return spec.sos if isinstance(spec, SosSpec) else np.asarray(spec, dtype=float)
 
 
-def _per_channel(sf: SignalFrame, run) -> SignalFrame:
-    """``run(x) -> y`` over each whole channel, sorted by t, as one
-    ``applyInPandas`` group per (recording_id, channel)."""
-
-    def _f(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("t")
-        return pdf.assign(v=run(pdf["v"].to_numpy()))
-
-    return sf.with_df(sf.df.groupBy("recording_id", "channel").applyInPandas(_f, _SCHEMA))
-
-
 def sosfilt(sf: SignalFrame, spec: SosSpec | np.ndarray) -> SignalFrame:
     """Causal second-order-section filter per channel
     (reference: core/numerical.py:301-335)."""
     sos = _sos(spec)
-    return _per_channel(sf, lambda x: kernels.sosfilt(sos, x)[0])
+    return _filter(sf, lambda x, z: kernels.sosfilt(sos, x, z), None)
+
+
+def sosfilt_blocks(sf: SignalFrame, spec: SosSpec | np.ndarray, block_size=None) -> SignalFrame:
+    # perfbench's edf_psd pipeline calls, and names its layer after, this
+    # name with a block_size it no longer needs; it goes when the benchmark
+    # is next changed
+    return sosfilt(sf, spec)
 
 
 def sosfiltfilt(sf: SignalFrame, spec: SosSpec | np.ndarray) -> SignalFrame:
     """Zero-phase forward-backward filter, padtype=None semantics — the
     only mode the reference reproduces exactly when chunked
-    (reference: core/numerical.py:338-411)."""
+    (reference: core/numerical.py:338-411).  Each pass starts from
+    ``sosfilt_zi`` times its first sample, as ``kernels.sosfiltfilt``."""
     sos = _sos(spec)
-    return _per_channel(sf, lambda x: kernels.sosfiltfilt(sos, x))
+    return _filter(sf, lambda x, z: kernels.sosfilt(sos, x, z), kernels.sosfilt_zi(sos))
 
 
 def lfilter(sf: SignalFrame, b: np.ndarray, a: np.ndarray) -> SignalFrame:
     """Causal transfer-function filter per channel
     (reference: core/numerical.py:414-446)."""
-    return _per_channel(sf, lambda x: kernels.lfilter(b, a, x)[0])
+    return _filter(sf, lambda x, z: kernels.lfilter(b, a, x, z), None)
 
 
 def filtfilt(sf: SignalFrame, b: np.ndarray, a: np.ndarray) -> SignalFrame:
     """Zero-phase ba-form filter, padtype=None semantics
     (reference: core/numerical.py:449-520)."""
-    return _per_channel(sf, lambda x: kernels.filtfilt(b, a, x))
+    return _filter(sf, lambda x, z: kernels.lfilter(b, a, x, z), kernels.lfilter_zi(b, a))
 
 
-def sosfilt_blocks(
-    sf: SignalFrame,
-    spec: SosSpec | np.ndarray,
-    block_size: int = 65536,
-    zi_unit: np.ndarray | None = None,
-) -> SignalFrame:
-    """Causal IIR over blocks — the path for channels too long to filter
-    as one pandas group.
-
-    Each block starts from the exact final state of its channel's
-    previous block (``_carried``), so the output equals the whole-array
-    kernel bit for bit.  reference: core/numerical.py:301-335 carries zi
-    sequentially chunk to chunk; this is the same recursion.
-
-    ``zi_unit`` (shape (nsec, 2)): optional per-unit initial conditions —
-    the channel's starting state is zi_unit * first_sample (the
-    Gustafsson-style convention kernels.sosfiltfilt uses), enabling the
-    zero-phase two-pass variant ``sosfiltfilt_blocks``.
-    """
-    sos = _sos(spec)
-    return _carried(sf, block_size, lambda x, z: kernels.sosfilt(sos, x, z), zi_unit)
+def _filter(sf: SignalFrame, filt, zi_unit) -> SignalFrame:
+    """One causal pass, or a zero-phase pair when ``zi_unit`` is given
+    (only the zero-phase filters seed their state from the signal)."""
+    df = _carried(sf.df.repartition(*KEYS), filt, zi_unit, descending=False)
+    if zi_unit is not None:
+        df = _carried(df, filt, zi_unit, descending=True)
+    return sf.with_df(df)
 
 
-def _carried(sf: SignalFrame, block_size: int, filt, zi_unit) -> SignalFrame:
-    """The block engine of every ``*_blocks`` filter: ``filt(x, z|None)
-    -> (y, z')`` runs on each block, starting from the state the
-    channel's previous block ended in (``zi_unit * x[0]`` on a channel's
-    first block when ``zi_unit`` is given, zero state otherwise).
+def _carried(df, filt, zi_unit, descending: bool):
+    """``filt(x, z|None) -> (y, z')`` over each channel of ``df`` in t
+    order (descending: reversed), with the state carried from each Arrow
+    batch to the next.  A channel starts from zero state, or from
+    ``zi_unit * x[0]`` when ``zi_unit`` is given.
 
-    The long signal is hashed by (recording_id, channel) once, as in
-    ``blocks.halo_blocks``, so a channel's blocks share one partition, and
-    ``sortWithinPartitions`` puts them in block order ahead of a single
-    ``mapInPandas`` pass.  The input is read once and filtered once.  The
-    carry lives inside the generator, so every task has its own.
+    ``df`` must already hold each channel in one partition; the sort is
+    within partitions, so a second pass over a first pass's output adds
+    no exchange.  The carry lives inside the generator, so every task has
+    its own.
 
     Trade-off: a channel is filtered by one task, so its wall time is
     O(n), and parallelism is across channels only.  A parallel-in-time
     affine state scan would spread one channel over the executors, but it
-    runs the kernel twice per sample and reads its input twice.  Measured
-    on 4 cores against such a scan: the registry's full-length
-    ``sosfilt_blocks_full`` at sf0.1 (4 channels) 2.1 s vs 2.8 s median,
-    zero-phase ``sosfiltfilt_blocks`` on the same signal 3.7 s vs 5.8 s,
-    and a single 400k-sample channel, the scan's best case, 2.8 s vs
-    2.3 s.
+    runs the kernel twice per sample and reads its input twice.
     """
-    if zi_unit is not None:
-        zi_unit = np.asarray(zi_unit, dtype=np.float64)
-    bdf = B.to_blocks(sf.df.repartition(*B.KEYS), block_size).sortWithinPartitions(
-        *B.KEYS, "block_id"
-    )
+    t = F.col("t").desc() if descending else F.col("t")
+    ordered = df.sortWithinPartitions(*KEYS, t)
 
     def _carry(batches):
         key = z = None
         for pdf in batches:
-            ys = []
-            for r in pdf.itertuples(index=False):
-                if (r.recording_id, r.channel) != key:
-                    key = (r.recording_id, r.channel)
-                    z = None if zi_unit is None else zi_unit * r.vs[0]
-                y, z = filt(r.vs, z)
-                ys.append(y)
-            vs = pd.Series(ys, index=pdf.index, dtype=object)
-            yield pdf[["recording_id", "channel", "t0"]].assign(vs=vs)
+            rid = pdf["recording_id"].to_numpy()
+            ch = pdf["channel"].to_numpy()
+            x = pdf["v"].to_numpy()
+            y = np.empty_like(x)
+            # a run ends where the channel changes
+            cuts = np.flatnonzero((rid[1:] != rid[:-1]) | (ch[1:] != ch[:-1])) + 1
+            for s, e in zip(np.r_[0, cuts], np.r_[cuts, len(x)]):
+                if (rid[s], ch[s]) != key:
+                    key = (rid[s], ch[s])
+                    z = None if zi_unit is None else zi_unit * x[s]
+                y[s:e], z = filt(x[s:e], z)
+            pdf["v"] = y
+            yield pdf
 
-    return sf.with_df(B.from_blocks(bdf.mapInPandas(_carry, B.SAMPLE_BLOCKS)))
-
-
-def lfilter_blocks(
-    sf: SignalFrame,
-    b: np.ndarray,
-    a: np.ndarray,
-    block_size: int = 65536,
-    zi_unit: np.ndarray | None = None,
-) -> SignalFrame:
-    """Causal ba-form filter over blocks with the state carried exactly
-    (lfilter analog of sosfilt_blocks; reference:
-    core/numerical.py:414-446)."""
-    b = np.asarray(b, dtype=np.float64)
-    a = np.asarray(a, dtype=np.float64)
-    return _carried(sf, block_size, lambda x, z: kernels.lfilter(b, a, x, z), zi_unit)
-
-
-def filtfilt_blocks(
-    sf: SignalFrame, b: np.ndarray, a: np.ndarray, block_size: int = 65536
-) -> SignalFrame:
-    """Zero-phase ba-form filter over blocks (forward + reversed
-    lfilter_blocks passes, lfilter_zi * first-sample seeding — the ba
-    analog of sosfiltfilt_blocks)."""
-    zi = kernels.lfilter_zi(b, a)
-    return _zero_phase(sf, lambda s: lfilter_blocks(s, b, a, block_size, zi_unit=zi))
-
-
-def sosfiltfilt_blocks(
-    sf: SignalFrame, spec: SosSpec | np.ndarray, block_size: int = 65536
-) -> SignalFrame:
-    """Zero-phase forward-backward IIR over blocks.
-
-    The reference needs one-chunk-lookahead machinery to derive reverse
-    initial conditions when chunked (core/numerical.py:384-411); here the
-    backward pass is simply ``sosfilt_blocks`` on the time-reversed
-    forward output (t -> n-1-t via a broadcast join of channel lengths),
-    with the same Gustafsson-style zi*first_sample seeding — the reversed
-    stream's first sample is the forward output's last, so the carry
-    picks it up with no lookahead.
-    """
-    sos = _sos(spec)
-    zi = kernels.sosfilt_zi(sos)
-    return _zero_phase(sf, lambda s: sosfilt_blocks(s, sos, block_size, zi_unit=zi))
-
-
-def _zero_phase(sf: SignalFrame, one_pass) -> SignalFrame:
-    """``one_pass`` forward, then over the time-reversed forward output,
-    reversed back: the zero-phase body of both ``*filtfilt_blocks``."""
-    span = _channel_span(sf.df)
-    # the backward pass consumes the forward output once, so the forward
-    # plan is inlined once; a localCheckpoint between the passes measured
-    # slower (4.3 s vs 4.0 s median, full-length sf0.1, 4 cores)
-    fwd = one_pass(sf)
-    bwd = one_pass(fwd.with_df(_reverse_time(fwd.df, span)))
-    return sf.with_df(_reverse_time(bwd.df, span))
-
-
-def _channel_span(df):
-    """Per-channel (min_t + max_t) aggregated from ``df`` — pass this to
-    ``_reverse_time`` when reversing a *derived* signal whose t-domain is
-    unchanged from ``df`` (filtering preserves timestamps).  Computing the
-    span from the cheap upstream relation instead of the filter output
-    matters: a filter pass ends in mapInPandas with no exchange at its
-    output, so an aggregation over it re-executes the entire seeded
-    re-filter a second time just to read min/max t."""
-    return df.groupBy("recording_id", "channel").agg(
-        (F.min("t") + F.max("t")).cast("bigint").alias("_tsum")
-    )
-
-
-def _reverse_time(df, span=None):
-    """t -> (min_t + max_t) - t per channel via a broadcast join of the
-    per-channel span.  Span-based (not n-1-t) so a signal whose t does not
-    start at 0 reverses in place instead of silently shifting to 0 —
-    sources are expected to keep t dense-from-0, but this degrades safely
-    if one does not.  ``span``: optional precomputed ``_channel_span`` of
-    a t-domain-equal relation (see there for why callers should pass it)."""
-    if span is None:
-        span = _channel_span(df)
-    return (
-        df.join(F.broadcast(span), on=["recording_id", "channel"])
-        .select(
-            "recording_id",
-            "channel",
-            (F.col("_tsum") - F.col("t")).cast("bigint").alias("t"),
-            "v",
-        )
-    )
-
+    return ordered.mapInPandas(_carry, _SCHEMA)

@@ -55,15 +55,16 @@ def welch_psd(
         pdf = pdf.sort_values("t")
         x = pdf["v"].to_numpy()
         stride = int(nfft - overlap * nfft)
+        if len(x) < nfft:  # no full segment: no rows, as welch_psd_blocks
+            return pd.DataFrame(columns=["recording_id", "channel", "freq", "psd", "nsegs"])
         segs = kernels.sliding_segments(x, nfft, stride)
         freqs, p = kernels.periodogram_segments(segs, fs, window, detrend, scaling)
-        est = p.mean(axis=0) if len(p) else np.zeros(len(freqs))
         return pd.DataFrame(
             {
                 "recording_id": pdf["recording_id"].iloc[0],
                 "channel": pdf["channel"].iloc[0],
                 "freq": freqs,
-                "psd": est,
+                "psd": p.mean(axis=0),
                 "nsegs": len(segs),
             }
         )

@@ -551,16 +551,13 @@ def iir_oracle_sql(
     ba: tuple[np.ndarray, np.ndarray] | None = None,
     zero_phase: bool = False,
     slice_n: int = 2048,
-    round_digits: int | None = None,
 ) -> str:
     """Full-query DuckDB oracle for the IIR family: replays the causal
     recursion (and the reverse pass for zero-phase) as recursive CTEs over
     the first ``slice_n`` samples per channel.
 
-    Plain per-channel kernels match BIT-EXACTLY (no tolerance), and so
-    do the ``*_blocks`` operators, which carry the exact state from block
-    to block; their registry queries pass ``round_digits=7`` and round
-    the Spark side identically, a margin they no longer need.
+    The Spark filters (operators/iir) carry the exact state, so they
+    match it BIT-EXACTLY (no tolerance) for every block size.
 
     ``signal_cte_body``: the output of signal.signal_cte(nch).
     """
@@ -577,14 +574,13 @@ def iir_oracle_sql(
         zi = _k.lfilter_zi(b, a) if zero_phase else None
         mk = lambda rec, sig, z: _ba_rec_cte(rec, sig, b, a, z)  # noqa: E731
 
-    vexpr = "v" if round_digits is None else f"round(v, {round_digits}) AS v"
     parts = [
         "WITH RECURSIVE " + signal_cte_body.strip().removeprefix("WITH").strip(),
         f"sig AS MATERIALIZED (SELECT channel, t, v FROM signal WHERE t < {slice_n})",
         mk("fwd", "sig", zi),
     ]
     if not zero_phase:
-        final = f"SELECT channel, t, {vexpr} FROM fwd WHERE t >= 0"
+        final = "SELECT channel, t, v FROM fwd WHERE t >= 0"
     else:
         parts += [
             "nlen AS MATERIALIZED (SELECT channel, count(*) AS n FROM sig GROUP BY channel)",
@@ -593,8 +589,7 @@ def iir_oracle_sql(
             mk("bwd", "frev", zi),
         ]
         final = (
-            "SELECT b.channel, CAST(l.n - 1 - b.t AS BIGINT) AS t, "
-            + ("b.v" if round_digits is None else f"round(b.v, {round_digits}) AS v")
-            + " FROM bwd b JOIN nlen l ON b.channel = l.channel WHERE b.t >= 0"
+            "SELECT b.channel, CAST(l.n - 1 - b.t AS BIGINT) AS t, b.v"
+            " FROM bwd b JOIN nlen l ON b.channel = l.channel WHERE b.t >= 0"
         )
     return ",\n".join(parts) + "\n" + final

@@ -23,7 +23,7 @@ def _signal(spark: SparkSession, sf_dir: str) -> SignalFrame:
 # their DuckDB oracles (recursive-CTE replays of the exact DF2T recursion,
 # plans/oracles.iir_oracle_sql) stay cheap: the recursive term re-executes
 # per sample, so oracle cost is O(slice * nch), not O(full signal).
-# Full-length variants (*_full, rows-only) exist for bench throughput.
+# The full-length variants (*_full) carry the same replay un-sliced.
 IIR_SLICE = 2048
 
 

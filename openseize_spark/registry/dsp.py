@@ -673,18 +673,16 @@ register("psd_ci", q_psd_ci, lambda: sig + f"""
         """)
 
 # IIR family: recursive-CTE replays of the exact DF2T recursion
-# (plans/oracles.iir_oracle_sql).  Plain kernels are bit-exact, and so
-# are the *_blocks variants since they carry the exact state from block
-# to block; those still round(7) on both sides, which keeps their plans
-# and oracle texts as they were.
+# (plans/oracles.iir_oracle_sql), matched bit for bit.  Every filter runs
+# one carried engine (operators/iir._carried), so each *_blocks query
+# builds its plain twin: the names stay in the query set.
 scte = signal_cte(NCH)
 _ell = design2.ellip(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0).sos
 
 
-def _iir(sos=None, ba=None, zero_phase=False, round_digits=None):
+def _iir(sos=None, ba=None, zero_phase=False):
     return oracles.iir_oracle_sql(
-        scte, sos=sos, ba=ba, zero_phase=zero_phase,
-        slice_n=IIR_SLICE, round_digits=round_digits,
+        scte, sos=sos, ba=ba, zero_phase=zero_phase, slice_n=IIR_SLICE
     )
 
 
@@ -842,26 +840,17 @@ register("sosfilt", q_sosfilt, lambda: _iir(sos=_butter))
 
 
 def q_sosfilt_blocks(spark, sf_dir):
-    # blocked IIR with the state carried block to block
-    # (operators/iir.sosfilt_blocks), oracled against the plain-recursion
-    # replay; round(7) on both sides, see the IIR family note above.
-    sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-    sf = op_iir.sosfilt_blocks(_signal_sliced(spark, sf_dir), sos, block_size=512)
-    return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
+    return q_sosfilt(spark, sf_dir)
 
 
-register("sosfilt_blocks", q_sosfilt_blocks, lambda: _iir(sos=_butter, round_digits=7))
+register("sosfilt_blocks", q_sosfilt_blocks, lambda: oracle_of("sosfilt"))
 
 
 def q_sosfiltfilt_blocks(spark, sf_dir):
-    # zero-phase blocked IIR: forward + time-reversed backward carry
-    # passes
-    sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-    sf = op_iir.sosfiltfilt_blocks(_signal_sliced(spark, sf_dir), sos, block_size=512)
-    return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
+    return q_sosfiltfilt(spark, sf_dir)
 
 
-register("sosfiltfilt_blocks", q_sosfiltfilt_blocks, lambda: _iir(sos=_butter, zero_phase=True, round_digits=7))
+register("sosfiltfilt_blocks", q_sosfiltfilt_blocks, lambda: oracle_of("sosfiltfilt"))
 
 
 def _compose_ba():
@@ -882,23 +871,17 @@ _BA_SPEC = _compose_ba()
 
 
 def q_lfilter_blocks(spark, sf_dir):
-    # ba-form blocked IIR with the state carried (round(7) both sides)
-    b, a = _BA_SPEC
-    sf = op_iir.lfilter_blocks(_signal_sliced(spark, sf_dir), b, a, block_size=512)
-    return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
+    return q_lfilter(spark, sf_dir)
 
 
-register("lfilter_blocks", q_lfilter_blocks, lambda: _iir(ba=_BA_SPEC, round_digits=7))
+register("lfilter_blocks", q_lfilter_blocks, lambda: oracle_of("lfilter"))
 
 
 def q_filtfilt_blocks(spark, sf_dir):
-    # zero-phase ba-form blocked IIR
-    b, a = _BA_SPEC
-    sf = op_iir.filtfilt_blocks(_signal_sliced(spark, sf_dir), b, a, block_size=512)
-    return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
+    return q_filtfilt(spark, sf_dir)
 
 
-register("filtfilt_blocks", q_filtfilt_blocks, lambda: _iir(ba=_BA_SPEC, zero_phase=True, round_digits=7))
+register("filtfilt_blocks", q_filtfilt_blocks, lambda: oracle_of("filtfilt"))
 
 
 def q_sosfiltfilt(spark, sf_dir):
@@ -1098,15 +1081,10 @@ register("sosfilt_full", q_sosfilt_full, lambda: oracles.iir_oracle_sql(scte, so
 
 
 def q_sosfilt_blocks_full(spark, sf_dir):
-    sos = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
-    sf = op_iir.sosfilt_blocks(_signal(spark, sf_dir), sos, block_size=8192)
-    # round(7) both sides (same discipline as sosfilt_blocks)
-    return sf.df.select("channel", "t", F.round("v", 7).alias("v"))
+    return q_sosfilt_full(spark, sf_dir)
 
 
-register("sosfilt_blocks_full", q_sosfilt_blocks_full, lambda: oracles.iir_oracle_sql(
-    scte, sos=_butter, slice_n=10**9, round_digits=7
-))
+register("sosfilt_blocks_full", q_sosfilt_blocks_full, lambda: oracle_of("sosfilt_full"))
 
 _rows = []
 for _ch, _s in enumerate(_EDF_GATE_SPR):

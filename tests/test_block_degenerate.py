@@ -6,6 +6,8 @@ numpy kernel on every channel."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -24,6 +26,7 @@ NFFT = 64
 BLOCK = 64  # several blocks for the long channel, one for the short ones
 FIR = design.kaiser(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0)
 SOS = design.butter(fpass=10, fstop=20, fs=FS, gpass=1.0, gstop=40.0).sos
+BA = (reduce(np.convolve, SOS[:, :3]), reduce(np.convolve, SOS[:, 3:]))  # one-stage form
 
 MIXED = {0: 1, 1: NFFT // 2 + 8, 2: 300}  # channel -> length
 SHORT = {0: 1, 1: NFFT // 2 + 8}  # every channel shorter than NFFT
@@ -53,12 +56,20 @@ SAMPLE_OPS = {
         lambda x: kernels.convolve(x, FIR.taps, "same"),
     ),
     "sosfilt_blocks": (
-        lambda sf: op_iir.sosfilt_blocks(sf, SOS, block_size=BLOCK),
+        lambda sf: op_iir.sosfilt(sf, SOS),
         lambda x: kernels.sosfilt(SOS, x)[0],
     ),
     "sosfiltfilt_blocks": (
-        lambda sf: op_iir.sosfiltfilt_blocks(sf, SOS, block_size=BLOCK),
+        lambda sf: op_iir.sosfiltfilt(sf, SOS),
         lambda x: kernels.sosfiltfilt(SOS, x),
+    ),
+    "lfilter_blocks": (
+        lambda sf: op_iir.lfilter(sf, *BA),
+        lambda x: kernels.lfilter(*BA, x)[0],
+    ),
+    "filtfilt_blocks": (
+        lambda sf: op_iir.filtfilt(sf, *BA),
+        lambda x: kernels.filtfilt(*BA, x),
     ),
     "resample": (
         lambda sf: op_rs.resample(sf, 1, 2, block_size=BLOCK),
@@ -113,11 +124,6 @@ def test_welch_psd_blocks_long_channel_matches_twin(spark):
         assert psd == pytest.approx(want[k][0], rel=1e-12, abs=1e-15)
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="known gap: welch_psd_blocks emits no rows for a channel shorter "
-    "than nfft, where welch_psd gives psd 0 with nsegs 0",
-)
 @pytest.mark.parametrize("lengths", [MIXED, SHORT], ids=["mixed", "short"])
 def test_welch_psd_blocks_short_channels_match_twin(spark, lengths):
     sf, _ = _frame(spark, lengths)
@@ -138,6 +144,5 @@ def test_all_blocks_skipped_yields_declared_schema(spark):
     out = B.map_blocks(bdf, _skip, B.SAMPLE_BLOCKS)
     assert out.collect() == []
     assert out.schema == StructType.fromDDL(B.SAMPLE_BLOCKS)
-    # welch_psd_blocks skips every block of a frame with no full segment;
-    # what it should return then is the known gap above
-    op_sp.welch_psd_blocks(sf, nfft=NFFT, segs_per_block=2).collect()
+    # welch_psd_blocks skips every block of a frame with no full segment
+    assert op_sp.welch_psd_blocks(sf, nfft=NFFT, segs_per_block=2).collect() == []

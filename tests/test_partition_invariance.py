@@ -3,6 +3,8 @@ the reference (chunksize-invariance, tests/test_resampling.py:64-89) —
 distributed block kernels must equal whole-array numpy kernels for every
 partition/block layout."""
 
+from functools import reduce
+
 import numpy as np
 import pytest
 
@@ -68,95 +70,100 @@ class TestFir:
                 assert all(abs(got[k] - ref[k]) < 1e-12 for k in ref)
 
 
+BUTTER = design.butter(fpass=10, fstop=20, fs=100.0)
+NOTCH = design.notch(fstop=15.0, width=4.0, fs=100.0)
+BA = (reduce(np.convolve, BUTTER.sos[:, :3]), reduce(np.convolve, BUTTER.sos[:, 3:]))
+# filter -> (operator(sf), whole-array kernel)
+IIR = {
+    "sosfilt": (
+        lambda sf: op_iir.sosfilt(sf, BUTTER),
+        lambda x: kernels.sosfilt(BUTTER.sos, x)[0],
+    ),
+    "sosfiltfilt": (
+        lambda sf: op_iir.sosfiltfilt(sf, BUTTER),
+        lambda x: kernels.sosfiltfilt(BUTTER.sos, x),
+    ),
+    "lfilter": (
+        lambda sf: op_iir.lfilter(sf, *BA),
+        lambda x: kernels.lfilter(*BA, x)[0],
+    ),
+    "filtfilt": (
+        lambda sf: op_iir.filtfilt(sf, *BA),
+        lambda x: kernels.filtfilt(*BA, x),
+    ),
+    "notch": (
+        lambda sf: op_iir.sosfilt(sf, NOTCH),
+        lambda x: kernels.sosfilt(NOTCH.sos, x)[0],
+    ),
+}
+
+
+def _assert_exact(sf, arrays, name, batch_rows=None):
+    """The carried engine equals the whole-array kernel bit for bit, and
+    every output row keeps its input ``t``.  ``batch_rows`` sets the
+    Arrow batch size for this one collect: batches shorter than a
+    channel make the state pass from one batch to the next inside the
+    generator."""
+    run, kernel = IIR[name]
+    conf = sf.df.sparkSession.conf
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = conf.get(key)
+    if batch_rows is not None:
+        conf.set(key, str(batch_rows))
+    try:
+        got = {(r.channel, r.t): r.v for r in run(sf).df.collect()}
+    finally:
+        conf.set(key, old)
+    assert len(got) == sum(len(x) for x in arrays.values())
+    for ch, x in arrays.items():
+        have = np.array([got[(ch, t)] for t in range(len(x))])
+        np.testing.assert_array_equal(have, kernel(x), err_msg=f"{name} ch {ch}")
+
+
 class TestIir:
+    """Every IIR filter runs one engine (``iir._carried``); the state is
+    carried across Arrow batches, the engine's blocks, so no batch size
+    may change a single bit."""
+
+    @pytest.mark.parametrize("batch_rows", [97, 512, 4096])
+    def test_sosfilt_blocks_any_blocksize(self, signal, arrays, batch_rows):
+        _assert_exact(signal, arrays, "sosfilt", batch_rows)
+
+    @pytest.mark.parametrize("batch_rows", [97, 512, 4096])
+    def test_sosfiltfilt_blocks_any_blocksize(self, signal, arrays, batch_rows):
+        _assert_exact(signal, arrays, "sosfiltfilt", batch_rows)
+
+    @pytest.mark.parametrize("batch_rows", [97, 512, 4096])
+    def test_lfilter_filtfilt_blocks_any_blocksize(self, signal, arrays, batch_rows):
+        _assert_exact(signal, arrays, "lfilter", batch_rows)
+        _assert_exact(signal, arrays, "filtfilt", batch_rows)
+
     def test_sosfilt_vs_numpy(self, signal, arrays):
-        spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        got = {(r.channel, r.t): r.v for r in op_iir.sosfilt(signal, spec).df.collect()}
-        for ch, x in arrays.items():
-            want, _ = kernels.sosfilt(spec.sos, x)
-            have = np.array([got[(ch, t)] for t in range(len(x))])
-            np.testing.assert_allclose(have, want, atol=1e-12)
-
-    @pytest.mark.parametrize("block_size", [97, 512, 4096])
-    def test_sosfilt_blocks_any_blocksize(self, signal, arrays, block_size):
-        # the block path carries the exact state from block to block, so
-        # it equals the sequential whole-array kernel for every layout
-        spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        got = {
-            (r.channel, r.t): r.v
-            for r in op_iir.sosfilt_blocks(signal, spec, block_size=block_size).df.collect()
-        }
-        for ch, x in arrays.items():
-            want, _ = kernels.sosfilt(spec.sos, x)
-            have = np.array([got[(ch, t)] for t in range(len(x))])
-            np.testing.assert_array_equal(have, want)
-
-    @pytest.mark.parametrize("block_size", [97, 512, 4096])
-    def test_sosfiltfilt_blocks_any_blocksize(self, signal, arrays, block_size):
-        # zero-phase two-pass block path vs whole-array kernel
-        spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        got = {
-            (r.channel, r.t): r.v
-            for r in op_iir.sosfiltfilt_blocks(
-                signal, spec, block_size=block_size
-            ).df.collect()
-        }
-        for ch, x in arrays.items():
-            want = kernels.sosfiltfilt(spec.sos, x)
-            have = np.array([got[(ch, t)] for t in range(len(x))])
-            np.testing.assert_array_equal(have, want)
-
-    @pytest.mark.parametrize("block_size", [512, 4096])
-    def test_lfilter_filtfilt_blocks_any_blocksize(self, signal, arrays, block_size):
-        # ba-form block paths vs whole-array kernels
-        spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        b, a = np.array([1.0]), np.array([1.0])
-        for s in spec.sos:
-            b = np.convolve(b, s[:3])
-            a = np.convolve(a, s[3:])
-        got = {
-            (r.channel, r.t): r.v
-            for r in op_iir.lfilter_blocks(signal, b, a, block_size=block_size).df.collect()
-        }
-        gotz = {
-            (r.channel, r.t): r.v
-            for r in op_iir.filtfilt_blocks(signal, b, a, block_size=block_size).df.collect()
-        }
-        for ch, x in arrays.items():
-            want, _ = kernels.lfilter(b, a, x)
-            have = np.array([got[(ch, t)] for t in range(len(x))])
-            np.testing.assert_array_equal(have, want)
-            wantz = kernels.filtfilt(b, a, x)
-            havez = np.array([gotz[(ch, t)] for t in range(len(x))])
-            np.testing.assert_array_equal(havez, wantz)
+        _assert_exact(signal, arrays, "sosfilt")
 
     def test_sosfiltfilt_vs_numpy(self, signal, arrays):
-        spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        got = {(r.channel, r.t): r.v for r in op_iir.sosfiltfilt(signal, spec).df.collect()}
-        for ch, x in arrays.items():
-            want = kernels.sosfiltfilt(spec.sos, x)
-            have = np.array([got[(ch, t)] for t in range(len(x))])
-            np.testing.assert_allclose(have, want, atol=1e-12)
+        _assert_exact(signal, arrays, "sosfiltfilt")
 
     def test_filtfilt_ba_vs_numpy(self, signal, arrays):
-        spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        b, a = np.array([1.0]), np.array([1.0])
-        for s in spec.sos:
-            b = np.convolve(b, s[:3])
-            a = np.convolve(a, s[3:])
-        got = {(r.channel, r.t): r.v for r in op_iir.filtfilt(signal, b, a).df.collect()}
-        for ch, x in arrays.items():
-            want = kernels.filtfilt(b, a, x)
-            have = np.array([got[(ch, t)] for t in range(len(x))])
-            np.testing.assert_allclose(have, want, atol=1e-12)
+        _assert_exact(signal, arrays, "filtfilt")
 
     def test_notch_sosfilt_vs_numpy(self, signal, arrays):
-        spec = design.notch(fstop=15.0, width=4.0, fs=100.0)
-        got = {(r.channel, r.t): r.v for r in op_iir.sosfilt(signal, spec).df.collect()}
-        for ch, x in arrays.items():
-            want, _ = kernels.sosfilt(spec.sos, x)
-            have = np.array([got[(ch, t)] for t in range(len(x))])
-            np.testing.assert_allclose(have, want, atol=1e-12)
+        _assert_exact(signal, arrays, "notch")
+
+    @pytest.mark.parametrize("name", ["sosfilt", "sosfiltfilt", "lfilter", "filtfilt"])
+    def test_gapped_t(self, spark, name):
+        # every third sample dropped: t is kept as given, and v is the
+        # kernel over the surviving samples in t order
+        sf = make_signal(spark, nchannels=2, n=1500, seed=9)
+        sf = sf.with_df(sf.df.filter("t % 3 != 2"))
+        run, kernel = IIR[name]
+        got = run(sf).df.toPandas().sort_values(["channel", "t"])
+        want = sf.df.toPandas().sort_values(["channel", "t"])
+        assert list(zip(got["channel"], got["t"])) == list(zip(want["channel"], want["t"]))
+        for ch, g in want.groupby("channel"):
+            np.testing.assert_array_equal(
+                got[got["channel"] == ch]["v"].to_numpy(), kernel(g["v"].to_numpy())
+            )
 
 
 class TestResample:

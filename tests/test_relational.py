@@ -134,10 +134,10 @@ class TestPlans:
         assert "BroadcastHashJoin" in plan
 
     def test_sosfilt_blocks_reads_edf_once(self, spark, tmp_path):
-        """The block filter hands each channel's state from block to block
-        inside one ``mapInPandas`` pass (operators/iir ``_carried``): the
-        EDF file is scanned once and nothing is joined back onto the
-        blocks."""
+        """The filter hands each channel's state from run to run inside
+        one ``mapInPandas`` pass over t-sorted rows (operators/iir
+        ``_carried``): the EDF file is scanned once and nothing is joined
+        back onto the rows."""
         from openseize_spark.dsp import design
         from openseize_spark.operators import iir as op_iir
         from openseize_spark.signal import SignalFrame
@@ -149,7 +149,7 @@ class TestPlans:
         edf.register_edf_source(spark)
         sf = SignalFrame(spark.read.format("edf").option("path", path).load(), 100.0)
         spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        plan = _executed_plan(op_iir.sosfilt_blocks(sf, spec, block_size=512).df)
+        plan = _executed_plan(op_iir.sosfilt(sf, spec).df)
         assert plan.count("BatchScan edf") == 1
         assert "Join" not in plan
         assert plan.count("MapInPandas _carry") == 1
@@ -157,16 +157,32 @@ class TestPlans:
     def test_resample_after_sosfilt_blocks_runs_input_once(self, signal):
         """resample reads the channel length off its own block window:
         no broadcast join against an aggregate that would replay the
-        whole upstream sosfilt_blocks plan a second time."""
+        whole upstream sosfilt plan a second time."""
         from openseize_spark.dsp import design
         from openseize_spark.operators import iir as op_iir
         from openseize_spark.operators import resample as op_rs
 
         spec = design.butter(fpass=10, fstop=20, fs=100.0)
-        sf = op_iir.sosfilt_blocks(signal, spec, block_size=512)
+        sf = op_iir.sosfilt(signal, spec)
         plan = _executed_plan(op_rs.resample(sf, 1, 2, block_size=512).df)
         assert plan.count("MapInPandas _carry") == 1
         assert "BroadcastExchange" not in plan
+
+    def test_zero_phase_filter_shuffles_once_and_joins_nothing(self, signal):
+        """The backward pass re-sorts the forward output by t descending
+        inside the partitions the forward pass hashed (operators/iir
+        ``_carried``): one exchange, two carry passes, and no
+        time-reversal join or channel-span aggregate."""
+        from openseize_spark.dsp import design
+        from openseize_spark.operators import iir as op_iir
+
+        sf = op_iir.sosfiltfilt(signal, design.butter(fpass=10, fstop=20, fs=100.0))
+        plan = "\n".join(_subtree(_executed_plan(sf.df), "MapInPandas _carry"))
+        assert plan.count("MapInPandas _carry") == 2
+        assert plan.count("Exchange hashpartitioning") == 1
+        assert plan.count("Sort [") == 2
+        for node in ("Join", "BroadcastExchange", "Aggregate"):
+            assert node not in plan, node
 
     def test_halo_operators_shuffle_input_once(self, signal):
         """Each halo operator hashes its input by (recording_id, channel)
