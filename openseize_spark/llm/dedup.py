@@ -1299,7 +1299,6 @@ def _fanout_by_id(
 
 
 def _shingle_expr(text_norm, k: int):
-    n = F.length(text_norm)
     return F.array_distinct(
         F.expr(
             f"transform(sequence(1, greatest(length(_txt) - {k} + 1, 0)), "
@@ -1459,19 +1458,11 @@ def minhash_lsh_pairs(
     )
 
 
-def jaccard_verify(
-    docs: DataFrame,
-    pairs: DataFrame,
-    k: int = 5,
-    threshold: float = 0.8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    with_counts: bool = False,
-) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs only: (a, b, jaccard);
-    ``with_counts=True`` adds the exact integer ``inter``/``union_sz``
-    shingle-set sizes (for pooled-cohesion metrics that must aggregate
-    order-independently)."""
+def _shingle_pairs(docs, pairs, k, text_col, id_col):
+    """The candidate pairs (a, b) joined to both docs' k-shingle sets
+    ``sh_a`` / ``sh_b`` and their exact intersection size ``inter``: the
+    shared front of :func:`jaccard_verify` and :func:`containment_verify`.
+    Only docs named in a pair build a shingle set."""
     norm = normalize_text(F.col(text_col))
     # `pairs` feeds THREE consumers below (the semi-join id list twice —
     # once under sh_a, once under sh_b — plus the verify join itself).
@@ -1510,10 +1501,28 @@ def jaccard_verify(
     sh = docs.select(F.col(id_col), norm.alias("_txt")).withColumn(
         "sh", _shingle_expr(F.col("_txt"), k)
     ).select(id_col, "sh")
-    j = (
+    return (
         pairs.join(sh.withColumnRenamed(id_col, "a").withColumnRenamed("sh", "sh_a"), on="a")
         .join(sh.withColumnRenamed(id_col, "b").withColumnRenamed("sh", "sh_b"), on="b")
         .withColumn("inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint"))
+    )
+
+
+def jaccard_verify(
+    docs: DataFrame,
+    pairs: DataFrame,
+    k: int = 5,
+    threshold: float = 0.8,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    with_counts: bool = False,
+) -> DataFrame:
+    """Exact n-gram Jaccard on candidate pairs only: (a, b, jaccard);
+    ``with_counts=True`` adds the exact integer ``inter``/``union_sz``
+    shingle-set sizes (for pooled-cohesion metrics that must aggregate
+    order-independently)."""
+    j = (
+        _shingle_pairs(docs, pairs, k, text_col, id_col)
         .withColumn("union_sz", F.size(F.array_union("sh_a", "sh_b")).cast("bigint"))
         .withColumn("jaccard", F.col("inter") / F.col("union_sz"))
         .select(
@@ -1545,33 +1554,8 @@ def containment_verify(
     named in a pair, per-pair set ops over bounded arrays.  Each ratio is
     one exact-int64 division — order-invariant.
     """
-    norm = normalize_text(F.col(text_col))
-    # multi-consumer candidate table materialized once, composition-safe
-    # (same round-14 rationale as jaccard_verify)
-    pairs = pairs.localCheckpoint(eager=True)
-    cand_ids = (
-        pairs.select(F.col("a").alias(id_col))
-        .union(pairs.select(F.col("b").alias(id_col)))
-        .distinct()
-    )
-    docs = _fanout_by_id(
-        docs.join(cand_ids, on=id_col, how="left_semi"), id_col, scan=docs
-    )
-    sh = docs.select(F.col(id_col), norm.alias("_txt")).withColumn(
-        "sh", _shingle_expr(F.col("_txt"), k)
-    ).select(id_col, "sh")
-    out = (
-        pairs.join(
-            sh.withColumnRenamed(id_col, "a").withColumnRenamed("sh", "sh_a"),
-            on="a",
-        )
-        .join(
-            sh.withColumnRenamed(id_col, "b").withColumnRenamed("sh", "sh_b"),
-            on="b",
-        )
-        .withColumn(
-            "inter", F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
-        )
+    return (
+        _shingle_pairs(docs, pairs, k, text_col, id_col)
         .filter(F.col("inter") > 0)
         .withColumn("n_a", F.size("sh_a").cast("bigint"))
         .withColumn("n_b", F.size("sh_b").cast("bigint"))
@@ -1589,7 +1573,6 @@ def containment_verify(
             ).alias("cont_b"),
         )
     )
-    return out
 
 
 def containment_verify_oracle_sql(k: int = 5) -> str:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from openseize_spark.dsp import kernels
 from openseize_spark.dsp.design import FirSpec
+from openseize_spark.functions.scalar import envelope, phase_wrapped
 from openseize_spark.operators import blocks as B
 from openseize_spark.signal import SignalFrame
 
@@ -137,7 +138,7 @@ def hilbert_analytic(sf: SignalFrame, spec: FirSpec) -> DataFrame:
 def envelope_phase(analytic: DataFrame) -> DataFrame:
     """Amplitude + phase (wrapped to [0, 2π)) from (re, im) — pure builtin
     math (reference: experimental/coupling/transforms.py:56-106)."""
-    amp = F.sqrt(F.col("re") * F.col("re") + F.col("im") * F.col("im"))
-    ph = F.atan2(F.col("im"), F.col("re"))
-    ph = F.when(ph < 0, ph + 2 * float(np.pi)).otherwise(ph)
-    return analytic.withColumn("amplitude", amp).withColumn("phase", ph)
+    re, im = F.col("re"), F.col("im")
+    return analytic.withColumn("amplitude", envelope(re, im)).withColumn(
+        "phase", phase_wrapped(re, im)
+    )

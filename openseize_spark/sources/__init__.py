@@ -1,1 +1,1 @@
-from openseize_spark.sources.tables import TABLES, load_table, load_tables, register_views
+from openseize_spark.sources.tables import TABLES

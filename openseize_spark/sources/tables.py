@@ -1,15 +1,10 @@
-"""Loaders for the driver-generated parquet tables (TESTDATA.md).
+"""The driver-generated parquet tables (TESTDATA.md): ``<sf_dir>/<name>.parquet``
+for every name in ``TABLES``.
 
 Parquet scans get predicate pushdown + column pruning from Catalyst for
 free — the Spark-native replacement for the reference reader's record-range
 and channel pushdown (reference: file_io/edf.py:421-450, 353-373).
 """
-
-from __future__ import annotations
-
-import os
-
-from pyspark.sql import DataFrame, SparkSession
 
 TABLES = (
     "region",
@@ -23,20 +18,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    sf_dir = sf_dir or DEFAULT_SF_DIR
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str | None = None) -> dict[str, DataFrame]:
-    return {t: load_table(spark, t, sf_dir) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view (mirrors the DuckDB oracle setup)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1346,13 +1346,15 @@ def test_guard_band_audit_tool(tmp_path):
     """The guard-band audit runs clean at the small gate scale and
     computes margins correctly on a synthetic boundary case."""
     import math
+    import pathlib
     import subprocess
     import sys
 
+    repo = pathlib.Path(__file__).resolve().parent.parent
     r = subprocess.run(
         [sys.executable, "tools/guard_band_audit.py",
          "/root/testdata/sf0.001"],
-        capture_output=True, text=True, cwd="/root/repo",
+        capture_output=True, text=True, cwd=repo,
     )
     assert r.returncode == 0, r.stdout + r.stderr
     assert "all sites clear" in r.stdout
@@ -1364,7 +1366,7 @@ def test_guard_band_audit_tool(tmp_path):
     assert any("sppmi_embed.units" in ln for ln in ok_lines)
 
     # margin math sanity: a value exactly at x.5 has distance 0
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(repo / "tools"))
     import guard_band_audit as gba
 
     class FakeCon:

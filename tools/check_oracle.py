@@ -22,8 +22,6 @@ import math
 import sys
 import time
 
-import duckdb
-
 
 def norm_cell(x):
     if x is None:
@@ -69,46 +67,23 @@ def main():
         json_out = args[i + 1]
         args = args[:i] + args[i + 2 :]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
 
-    # resolve the repo from THIS script's location, not a hardcoded
-    # path — running the tool inside a scratch clone must check the
-    # clone's registry, not /root/repo's (a hardcoded path silently
-    # re-verified the wrong tree when proving the round-10 merge)
-    import os
+    import _registry
 
-    repo = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    sys.path.insert(0, repo)
-    import __spark_entry__ as entrymod
+    entrymod = _registry.entry()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    names = _registry.select(args[1:], qs)
     from openseize_spark.session import get_spark
 
     spark = get_spark("oracle-check")
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    con = _registry.duckdb_views(sf_dir)
     failures = []
     results = {}
-    unknown = only - set(qs)
-    if unknown:
-        sys.exit(
-            f"unknown query names (not in this tree's registry): "
-            f"{sorted(unknown)} — a silent skip here once masked an "
-            f"un-run window"
-        )
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = qs[name](spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
@@ -207,7 +182,7 @@ def main():
         import subprocess
 
         head = subprocess.run(
-            ["git", "-C", repo, "rev-parse", "HEAD"],
+            ["git", "-C", _registry.REPO, "rev-parse", "HEAD"],
             capture_output=True,
             text=True,
         ).stdout.strip()

@@ -12,8 +12,6 @@ import math
 import sys
 import time
 
-import duckdb
-
 
 def norm_key(x):
     if x is None:
@@ -27,36 +25,24 @@ def norm_key(x):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
-    import os
+    import _registry
 
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
-    import __spark_entry__ as entrymod
+    entrymod = _registry.entry()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    names = _registry.select(sys.argv[2:], qs)
     from openseize_spark.session import get_spark
 
     spark = get_spark("diff-audit")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    con = _registry.duckdb_views(sf_dir)
     flagged = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
         if name not in oracles:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = qs[name](spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
             res = con.execute(oracles[name])

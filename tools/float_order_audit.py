@@ -259,23 +259,14 @@ def _probe(names, oracles, sf_dir="/root/testdata/sf0.01") -> int:
     is stable at this scale factor."""
     import hashlib
 
-    import duckdb
+    import _registry
 
     unstable = 0
-    tables = (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split()
     for name in sorted(names):
         hashes = set()
         for i in range(10):
-            con = duckdb.connect()
+            con = _registry.duckdb_views(sf_dir)
             con.execute(f"SET threads TO {1 + (i * 3) % 32}")
-            for t in tables:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * FROM "
-                    f"read_parquet('{sf_dir}/{t}.parquet')"
-                )
             try:
                 rows = con.execute(oracles[name]).fetchall()
             except Exception as ex:
@@ -296,22 +287,16 @@ def _probe(names, oracles, sf_dir="/root/testdata/sf0.01") -> int:
 
 
 def main() -> int:
-    import os
+    import _registry
 
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
-    import __spark_entry__ as entrymod
-
+    entrymod = _registry.entry()
     args = sys.argv[1:]
     do_probe = "--probe" in args
-    only = set(a for a in args if a != "--probe")
     oracles = entrymod.oracle_sql()
+    names = _registry.select([a for a in args if a != "--probe"], entrymod.queries())
     high, info = [], []
-    for name, sql in sorted(oracles.items()):
-        if only and name not in only:
-            continue
-        for sev, n, snip in audit_one(name, sql):
+    for name in sorted(set(names) & set(oracles)):
+        for sev, n, snip in audit_one(name, oracles[name]):
             (high if sev == "HIGH" else info).append((n, snip))
 
     for n, snip in info:

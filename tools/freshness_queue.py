@@ -22,32 +22,23 @@ Usage: python tools/freshness_queue.py [N]   # default 60 rows
 from __future__ import annotations
 
 import glob
-import importlib.util
 import json
 import os
 import sys
-
-# resolve the repo from this script's location (realpath so a
-# symlinked tools/ cannot point at the wrong tree) — same fix as the
-# nine runtime tools
-REPO = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-sys.path.insert(0, REPO)
 
 
 def main():
     n_show = int(sys.argv[1]) if len(sys.argv) > 1 else 60
 
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(REPO, "__spark_entry__.py")
-    )
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
+    import _registry
+
+    m = _registry.entry()
     names = list(m.queries())
     reg_pos = {n: i for i, n in enumerate(names)}
     rows_only = set(names) - set(m.oracle_sql())
 
     latest: dict[str, tuple[int, bool]] = {}
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+    for f in sorted(glob.glob(os.path.join(_registry.REPO, "CORRECTNESS_r*.json"))):
         rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
         for q, rec in json.load(open(f)).items():
             # a documented rows-only query (no oracle_sql entry) gets

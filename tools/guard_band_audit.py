@@ -36,10 +36,6 @@ import sys
 def sites() -> dict[str, str]:
     """site name -> SQL yielding one DOUBLE column ``x`` of pre-round
     scaled values (the exact argument of the production ``round()``)."""
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    sys.path.insert(0, repo)
     from openseize_spark.llm.dedup import normalize_text_sql, tokenize_sql
     from openseize_spark.llm.sampling import HASH_SPACE, salted_hash_sql
 
@@ -324,7 +320,7 @@ def audit_one(con, name: str, sql: str) -> dict:
 
 
 def main() -> None:
-    import duckdb
+    import _registry
 
     args = sys.argv[1:]
     json_out = None
@@ -338,21 +334,16 @@ def main() -> None:
         threshold = float(args[i + 1])
         args = args[:i] + args[i + 2 :]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
-
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events"
-        " documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    only = args[1:]
+    audited = sites()
+    unknown = sorted(o for o in only if not any(n.startswith(o) for n in audited))
+    if unknown:
+        sys.exit(f"no audited site starts with: {unknown}")
+    con = _registry.duckdb_views(sf_dir)
 
     results = []
     failed = []
-    for name, sql in sites().items():
+    for name, sql in audited.items():
         if only and not any(name.startswith(o) for o in only):
             continue
         r = audit_one(con, name, sql)

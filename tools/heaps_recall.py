@@ -86,29 +86,24 @@ def make_corpus(n: int, rng: np.random.Generator):
 
 
 def run(n: int, workdir: str, caps: list[int]) -> dict:
-    import duckdb
+    import _registry
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
     from openseize_spark.llm import text as llm_text
 
     rng = np.random.default_rng(42 + n)
     v, texts, dup_pairs = make_corpus(n, rng)
-    path = os.path.join(workdir, f"documents_heaps_{n}.parquet")
+    corpus_dir = os.path.join(workdir, f"heaps_{n}")
+    os.makedirs(corpus_dir, exist_ok=True)
     pq.write_table(
         pa.table(
             {"doc_id": np.arange(len(texts), dtype=np.int64),
              "text": texts}
         ),
-        path,
+        os.path.join(corpus_dir, "documents.parquet"),
     )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')"
-    )
+    con = _registry.duckdb_views(corpus_dir, tables=("documents",))
     out = {"N": n, "V": v, "n_dup_pairs": len(dup_pairs)}
     pairs = {}
     arms = [("uncapped", None)] + [

@@ -56,24 +56,18 @@ def _single_partition_data_consumers(plan: str) -> list[str]:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
-    import os
+    import _registry
 
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
-    import __spark_entry__ as entrymod
+    qs = _registry.entry().queries()
+    names = _registry.select(sys.argv[2:], qs)
     from openseize_spark.session import get_spark
 
     spark = get_spark("plan-audit")
-    qs = entrymod.queries()
     flagged = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
         try:
-            df = fn(spark, sf_dir)
+            df = qs[name](spark, sf_dir)
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:
             print(f"FLAG  {name}: plan build failed: {e}")

@@ -56,19 +56,13 @@ def main():
     if not names:
         sys.exit("usage: plan_neutrality.py [sf_dir] query [query ...]")
 
-    import os
+    import _registry
 
-    repo = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    sys.path.insert(0, repo)
-    import __spark_entry__ as entrymod
+    qs = _registry.entry().queries()
+    names = _registry.select(names, qs, ordered=True)
     from openseize_spark.session import get_spark
 
     spark = get_spark("plan-neutrality")
-    qs = entrymod.queries()
-    unknown = [n for n in names if n not in qs]
-    if unknown:
-        sys.exit(f"unknown query names: {unknown}")
-
     for name in names:
         df = qs[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(

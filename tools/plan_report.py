@@ -21,17 +21,12 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "PLANS.md"
 
-    import os
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
+    import _registry
     import bench
-    import __spark_entry__ as entrymod
     from openseize_spark.session import get_spark
 
+    qs = _registry.entry().queries()
     spark = get_spark("plan-report")
-    qs = entrymod.queries()
 
     sections = []
     summary = []

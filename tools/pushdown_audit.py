@@ -94,23 +94,19 @@ def audit_one(name: str, df) -> list[str]:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    import os
 
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
-    import __spark_entry__ as entrymod
+    import _registry
+
+    qs = _registry.entry().queries()
+    names = _registry.select(sys.argv[2:], qs)
     from openseize_spark.session import get_spark
 
     spark = get_spark("pushdown-audit")
     flags = []
     n = 0
-    for name, fn in entrymod.queries().items():
-        if only and name not in only:
-            continue
+    for name in names:
         try:
-            df = fn(spark, sf_dir)
+            df = qs[name](spark, sf_dir)
         except Exception as exc:  # build errors surface in check_oracle
             print(f"skip  {name}: {type(exc).__name__}")
             continue

@@ -15,7 +15,6 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
-import os
 import statistics
 import sys
 import time
@@ -38,7 +37,7 @@ def _identity(batches):
 
 def main():
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 8
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.realpath(__file__))))
+    import _registry  # noqa: F401  (puts the repository on sys.path)
     from openseize_spark.session import get_spark
 
     spark = get_spark("python-task-cost", extra_conf={"spark.ui.showConsoleProgress": "false"})

@@ -20,20 +20,17 @@ records:
   (the plan-doubling failure mode).
 - ``sec`` / ``rows``: warmed one-shot wall time and result size.
 
+Runs in a ``get_spark`` session, so its cores (and the job and stage
+counts) follow ``SPARK_GRAFT_CPUS``.
+
 Usage: python tools/scale_iter.py [--json OUT] [query ...]
 """
 
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
-
-# resolve the repo from this script's location (realpath so a symlinked
-# tools/ cannot point at the wrong tree) — same fix as the other tools
-REPO = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-sys.path.insert(0, REPO)
 
 QUERIES = [
     "sssp_delta",
@@ -46,15 +43,13 @@ QUERIES = [
 SCALES = ["/root/testdata/sf0.1", "/tmp/sf1"]
 
 
-def run_one(spark, name: str, sf: str) -> dict:
-    import __spark_entry__ as e
+def run_one(spark, fn, name: str, sf: str) -> dict:
+    import _registry
 
     # patch the LIVE DataFrame class (pyspark 4's classic instance
     # class, not the unified-API parent — patching the parent is a
     # silent no-op because the child overrides count)
     DataFrame = type(spark.range(1))
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     orig_count = DataFrame.count
     probes = {"n": 0}
 
@@ -62,32 +57,23 @@ def run_one(spark, name: str, sf: str) -> dict:
         probes["n"] += 1
         return orig_count(self)
 
-    group = f"scale_iter_{name}_{sf.replace('/', '_')}"
     # warm the parquet/file-listing caches so sec is steady-state
-    orig_count(e.queries()[name](spark, sf))
+    orig_count(fn(spark, sf))
     DataFrame.count = counting
-    sc.setJobGroup(group, name)
     t0 = time.time()
     try:
-        df = e.queries()[name](spark, sf)
-        rows = orig_count(df)
+        with _registry.job_group(spark, f"scale_iter_{name}_{sf.replace('/', '_')}") as cost:
+            rows = orig_count(fn(spark, sf))
     finally:
         DataFrame.count = orig_count
-        sc.setLocalProperty("spark.jobGroup.id", None)
     sec = time.time() - t0
-    jids = tracker.getJobIdsForGroup(group)
-    stages = 0
-    for j in jids:
-        ji = tracker.getJobInfo(j)
-        if ji is not None:
-            stages += len(ji.stageIds)
     return {
         "query": name,
         "sf": sf,
         "rows": rows,
         "rounds": probes["n"],
-        "jobs": len(jids),
-        "stages": stages,
+        "jobs": cost["jobs"],
+        "stages": cost["stages"],
         "sec": round(sec, 2),
     }
 
@@ -99,21 +85,18 @@ def main():
         i = args.index("--json")
         json_out = args[i + 1]
         args = args[:i] + args[i + 2:]
-    names = args or QUERIES
 
-    from pyspark.sql import SparkSession
+    import _registry
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "96g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    qs = _registry.entry().queries()
+    names = _registry.select(args, qs, default=QUERIES, ordered=True)
+    from openseize_spark.session import get_spark
+
+    spark = get_spark("scale-iter")
     out = []
     for name in names:
         for sf in SCALES:
-            r = run_one(spark, name, sf)
+            r = run_one(spark, qs[name], name, sf)
             print(json.dumps(r), flush=True)
             out.append(r)
     if json_out:

@@ -10,7 +10,7 @@ before it flips in the driver, while the integer-quantized discipline
 queries are immune by construction.
 
 Usage: python tools/shuffle_invariance_probe.py [sf_dir] [query ...]
-Exit 1 on any divergence.
+Exit 1 on any divergence, or on an error in either session.
 """
 
 from __future__ import annotations
@@ -29,45 +29,32 @@ def norm(x):
     return str(x)
 
 
-def run_once(query_fn, sf_dir: str, shuffle_parts: int):
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_parts))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .appName(f"shuffle-probe-{shuffle_parts}")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    df = query_fn(spark, sf_dir)
-    cols = sorted(df.columns)
-    rows = [tuple(norm(r[c]) for c in cols) for r in df.collect()]
-    rows.sort()
-    spark.stop()
-    return rows
+def compare(name: str, a, b) -> tuple[str, bool]:
+    """The report line for one query and whether it passed.  ``a`` and
+    ``b`` are the sorted normalized rows of the 32- and 7-partition runs,
+    or the error message (a str) a run raised: an error in either run is
+    a failure, even when both runs raised the same one."""
+    errors = [f"{parts} parts: {r}" for parts, r in ((32, a), (7, b)) if isinstance(r, str)]
+    if errors:
+        return f"ERROR {name}: {'; '.join(errors)}", False
+    if a == b:
+        return f"ok    {name} ({len(a)} rows bit-equal across 32/7 parts)", True
+    diff = sum(1 for x, y in zip(a, b) if x != y) + abs(len(a) - len(b))
+    return f"DIVERGES {name}: {diff} differing rows across 32/7 parts", False
 
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = sys.argv[2:]
 
-    import os
+    import _registry
+    from pyspark.sql import SparkSession
 
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
-    import __spark_entry__ as entrymod
-
-    q = entrymod.queries()
-    names = only if only else list(q)[:50]
-    bad = []
+    q = _registry.entry().queries()
+    names = _registry.select(sys.argv[2:], q, default=list(q)[:50], ordered=True)
+    results: dict[int, dict] = {}
     for parts in (32, 7):
         # one session per partition setting, all queries inside it —
         # session startup dominates otherwise
-        from pyspark.sql import SparkSession
-
         spark = (
             SparkSession.builder.master("local[8]")
             .config("spark.sql.shuffle.partitions", str(parts))
@@ -77,26 +64,21 @@ def main() -> int:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")
+        runs = results[parts] = {}
         for name in names:
             try:
                 df = q[name](spark, sf_dir)
                 cols = sorted(df.columns)
-                rows = [tuple(norm(r[c]) for c in cols) for r in df.collect()]
-                rows.sort()
+                runs[name] = sorted(tuple(norm(r[c]) for c in cols) for r in df.collect())
             except Exception as ex:
-                rows = [("ERR", str(ex)[:120])]
-            key = f"{name}@{parts}"
-            globals().setdefault("_results", {})[key] = rows
+                runs[name] = str(ex)[:120]
         spark.stop()
 
-    res = globals()["_results"]
+    bad = []
     for name in names:
-        a, b = res[f"{name}@32"], res[f"{name}@7"]
-        if a == b:
-            print(f"ok    {name} ({len(a)} rows bit-equal across 32/7 parts)")
-        else:
-            diff = sum(1 for x, y in zip(a, b) if x != y) + abs(len(a) - len(b))
-            print(f"DIVERGES {name}: {diff} differing rows across 32/7 parts")
+        line, passed = compare(name, results[32][name], results[7][name])
+        print(line)
+        if not passed:
             bad.append(name)
     print(f"\n{len(bad)} diverging / {len(names)} probed")
     return 1 if bad else 0

@@ -1,10 +1,18 @@
-"""Time every registered query end-to-end with the noop sink.
+"""Time registered queries end-to-end with the noop sink.
 
-Optimization-round measurement harness (guide §1.4): runs each
-``queries()`` entry once (optionally with a warmup pass) and reports
-per-query wall seconds sorted descending, so the slowest registry
-paths — which the driver's correctness gate pays for even when they
-are not in the bench headline set — are visible.
+Runs each selected ``queries()`` entry in a ``get_spark`` session and
+reports per query ``build_s`` (the builder call: plan building plus its
+eager checkpoints and loop probes), ``action_s`` (the noop write), the
+Spark ``jobs`` both launched and the classes Janino ``compiles``
+meanwhile, then the slowest queries by ``build_s + action_s``.  With
+``--warmup`` every selected query first runs once untimed, and the timed
+pass follows in the same order: its ``compiles`` show whether the
+generated-class cache holds the working set.  So
+
+    python tools/time_registry.py /root/testdata/sf0.001 --warmup \
+        dedup_clusters minhash_dedup_prod
+
+is the steady driver-side build cost of the two dedup benchmark queries.
 
 Usage: python tools/time_registry.py [sf_dir] [--warmup] [--top N]
                                      [query ...]
@@ -30,43 +38,46 @@ def main() -> None:
         top = int(args[i + 1])
         args = args[:i] + args[i + 2 :]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
 
-    repo = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    sys.path.insert(0, repo)
-    import __spark_entry__ as entrymod
+    import _registry
+
+    qs = _registry.entry().queries()
+    names = _registry.select(args[1:], qs)
     from openseize_spark.session import get_spark
 
     spark = get_spark("time-registry")
     spark.range(10_000).selectExpr("sum(id)").collect()
 
-    qs = entrymod.queries()
-    names = [n for n in qs if not only or n in only]
-    times: dict[str, float] = {}
-    for name in names:
-        fn = qs[name]
-        spark.sparkContext.setJobDescription(f"time: {name}")
-        try:
-            if warmup:
-                fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times[name] = round(time.time() - t0, 3)
-        except Exception as e:  # noqa: BLE001 - report and continue
-            print(f"FAIL {name}: {e}", flush=True)
-            times[name] = -1.0
-        spark.sparkContext.setJobDescription(None)
-        print(f"{times[name]:8.3f}  {name}", flush=True)
+    records: dict[str, dict] = {}
+    for timed in ((False, True) if warmup else (True,)):
+        for name in names:
+            try:
+                with _registry.job_group(spark, f"time: {name}") as rec:
+                    t0 = time.perf_counter()
+                    df = qs[name](spark, sf_dir)
+                    t1 = time.perf_counter()
+                    df.write.mode("overwrite").format("noop").save()
+                    t2 = time.perf_counter()
+            except Exception as e:  # noqa: BLE001 - report and continue
+                if timed:
+                    print(f"FAIL {name}: {e}", flush=True)
+                rec = {"s": -1.0}
+            else:
+                rec.update(s=round(t2 - t0, 3), build_s=round(t1 - t0, 3), action_s=round(t2 - t1, 3))
+            if timed:
+                records[name] = rec
+                cost = "".join(f"  {k}={rec[k]}" for k in ("build_s", "action_s", "jobs", "compiles") if k in rec)
+                print(f"{rec['s']:8.3f}  {name}{cost}", flush=True)
 
-    ranked = sorted(times.items(), key=lambda kv: -kv[1])
+    ranked = sorted(records.items(), key=lambda kv: -kv[1]["s"])
     print("\n=== slowest ===")
-    for name, sec in ranked[: top or 30]:
-        print(f"{sec:8.3f}  {name}")
-    print(f"total {sum(v for v in times.values() if v > 0):.1f}s "
-          f"over {len(times)} queries")
+    for name, rec in ranked[: top or 30]:
+        print(f"{rec['s']:8.3f}  {name}")
+    print(f"total {sum(r['s'] for r in records.values() if r['s'] > 0):.1f}s "
+          f"over {len(records)} queries")
     out = f"/tmp/registry_times_{os.path.basename(sf_dir.rstrip('/'))}.json"
     with open(out, "w") as f:
-        json.dump(times, f, indent=1, sort_keys=True)
+        json.dump(records, f, indent=1, sort_keys=True)
     print(f"wrote {out}")
 
 

@@ -20,8 +20,6 @@ from __future__ import annotations
 import re
 import sys
 
-import duckdb
-
 # DuckDB type name -> acceptable Spark simpleString()s.  Anything not in
 # this map (or mapped but mismatched) is flagged.  HUGEINT is deliberately
 # absent: an int128 column must never appear in an oracle.
@@ -61,32 +59,19 @@ def _match(duck: str, spark: str) -> bool:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
 
-    import os
+    import _registry
 
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    )
-    import __spark_entry__ as entrymod
+    entrymod = _registry.entry()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    names = _registry.select(sys.argv[2:], qs)
     from openseize_spark.session import get_spark
 
     spark = get_spark("type-audit")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+    con = _registry.duckdb_views(sf_dir)
     flagged = []
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name in names:
         if name not in oracles:
             print(f"ok*   {name}: rows-only, no oracle types to audit")
             continue
@@ -98,7 +83,7 @@ def main():
             flagged.append(name)
             continue
         try:
-            sdf = fn(spark, sf_dir)
+            sdf = qs[name](spark, sf_dir)
             spark_types = {f.name: _spark_type(f.dataType) for f in sdf.schema.fields}
         except Exception as e:
             print(f"FLAG  {name}: spark plan failed: {e}")

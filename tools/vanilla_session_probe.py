@@ -31,20 +31,16 @@ def main():
         sys.exit(__doc__)
     ref_path = args[0]
     sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.01"
-    only = list(args[2:])
 
     ref = json.load(open(ref_path))["queries"]
 
-    # resolve the repo from this script's location (see check_oracle.py:
-    # a hardcoded /root/repo silently probes the wrong tree in a clone)
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.realpath(__file__)))
-    sys.path.insert(0, repo)
+    import _registry
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as entrymod
     from check_oracle import table_hash  # same normalization as the ref
+
+    qs = _registry.entry().queries()
+    names = _registry.select(args[2:], qs, default=list(qs)[:50], ordered=True)
 
     spark = (
         SparkSession.builder.appName("vanilla-probe")
@@ -55,13 +51,8 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    qs = entrymod.queries()
-    names = only or list(qs)[:50]
     diverged = []
     for name in names:
-        if name not in qs:
-            print(f"SKIP  {name}: not registered")
-            continue
         if name not in ref:
             print(f"SKIP  {name}: no reference row in {ref_path}")
             continue
